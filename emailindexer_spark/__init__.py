@@ -21,6 +21,6 @@ Pipeline (SURVEY.md §2.10 / §3):
   collapse (reference: root-id dedup, EmailIndexSearcher.java:58-71).
 """
 
-__version__ = "0.3.0"
+__version__ = "0.3.1"
 
 from emailindexer_spark.config import get_spark  # noqa: F401

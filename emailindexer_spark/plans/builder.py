@@ -111,6 +111,29 @@ def _tr(label: str, t0: float) -> None:
         print(f"TRACE {label} {time.time() - t0:.2f}", flush=True)
 
 
+def write_conv_offsets(
+    dest: str, conv_ids: np.ndarray, offsets: np.ndarray, n_turns: np.ndarray
+) -> None:
+    """Write one conv_offsets piece (conv_id, conv_offset, n_turns) with
+    pyarrow.  tmp + atomic rename: a crash mid-write must never leave a
+    truncated parquet at the published name."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    tmp = dest + ".tmp"
+    papq.write_table(
+        pa.table(
+            {
+                "conv_id": pa.array(list(conv_ids), type=pa.string()),
+                "conv_offset": np.asarray(offsets, dtype=np.int64),
+                "n_turns": np.asarray(n_turns, dtype=np.int64),
+            }
+        ),
+        tmp,
+    )
+    os.replace(tmp, dest)
+
+
 def exact_input_rows(df: DataFrame) -> int | None:
     """Exact row count of a BARE parquet-relation DataFrame, read from
     the file footers — no Spark job, ~ms.  Returns None unless the
@@ -865,36 +888,24 @@ class IndexBuilder:
                 )
                 man.commit_stage("doc_index", seconds=round(time.time() - t0, 2))
                 # conv_offsets artifact (docid fast path only, dense
-                # input): the sorted (conv_id, conv_offset, n_turns)
-                # table the query engine broadcast-searchsorteds to map
-                # doc_id → (conv_id, turn_idx) WITHOUT a doc_stats join.
-                # The arrays are already on the driver — written via
+                # input): the (conv_id, conv_offset, n_turns) table the
+                # query engine broadcast-searchsorteds to map doc_id →
+                # (conv_id, turn_idx) WITHOUT a doc_stats join.  The
+                # arrays are already on the driver — written via
                 # pyarrow, zero Spark jobs, no build-time barrier.
-                # Distributed-path / non-dense builds skip it; the
+                # Appends of new conversations extend it with one piece
+                # per batch (streaming/ingest.py); other appends drop
+                # it.  Distributed-path / non-dense builds skip it; the
                 # engine falls back to the doc_stats join.
                 if offsets_out.get("dense"):
-                    import pyarrow as pa
-                    import pyarrow.parquet as papq
-
                     cdir = man.stage_path("conv_offsets")
                     os.makedirs(cdir, exist_ok=True)
-                    dest = os.path.join(cdir, "part-00000.parquet")
-                    # tmp + atomic rename: a crash mid-write must never
-                    # leave a truncated parquet at the published name
-                    tmp = dest + ".tmp"
-                    papq.write_table(
-                        pa.table(
-                            {
-                                "conv_id": pa.array(
-                                    list(offsets_out["conv_ids"]), type=pa.string()
-                                ),
-                                "conv_offset": offsets_out["offsets"],
-                                "n_turns": offsets_out["n_turns"],
-                            }
-                        ),
-                        tmp,
+                    write_conv_offsets(
+                        os.path.join(cdir, "part-00000.parquet"),
+                        offsets_out["conv_ids"],
+                        offsets_out["offsets"],
+                        offsets_out["n_turns"],
                     )
-                    os.replace(tmp, dest)
                     man.commit_stage(
                         "conv_offsets", n_convs=len(offsets_out["conv_ids"])
                     )

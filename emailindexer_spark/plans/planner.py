@@ -77,7 +77,11 @@ def _segmented_delta_docs(buf: bytes, firsts: np.ndarray, nb: np.ndarray) -> np.
     """Absolute doc ids from one concatenated varbyte delta stream:
     global cumsum, then the per-block leak is subtracted back out via
     the segment trick (each block's offset is the cumsum value at the
-    previous block's last element) and ``b_first`` re-based per block."""
+    previous block's last element) and ``b_first`` re-based per block.
+    An empty block would make its segment offset read the wrong block's
+    cumsum and silently shift every later doc id, so it raises."""
+    if not bool((nb > 0).all()):
+        raise ValueError("posting block with no postings: every block must be non-empty")
     deltas = varbyte_decode(buf).view(np.int64)
     cs = np.cumsum(deltas)
     starts = np.cumsum(nb) - nb
@@ -117,6 +121,8 @@ def _decode_frame_docs(sub: pd.DataFrame) -> np.ndarray:
         return np.empty(0, np.int64)
     firsts = np.concatenate([np.asarray(x, dtype=np.int64) for x in sub["b_first"]])
     blens = np.fromiter((len(x) for x in doc_bufs), np.int64, count=len(doc_bufs))
+    if not bool((blens > 0).all()):
+        raise ValueError("empty b_docs block: every block must be non-empty")
     buf = b"".join(doc_bufs)
     raw = np.frombuffer(buf, dtype=np.uint8)
     n_at = np.cumsum((raw & 0x80) == 0)
@@ -920,44 +926,54 @@ class SearchEngine:
         self._lead_bc_cache: dict[str, object] = {}
         self._vocab_lens: np.ndarray | None = None
         self._vocab_colon: np.ndarray | None = None
-        # conv_offsets artifact (dense-docid builds): broadcast (sorted
-        # conv_id array, conv_offset array) maps doc_id → (conv_id,
-        # turn_idx) with a searchsorted — no doc_stats join per query
+        # conv_offsets artifact (dense-docid builds and their appends of
+        # new conversations): broadcast (conv_id array, sorted
+        # conv_offset array) maps doc_id → (conv_id, turn_idx) with a
+        # searchsorted — no doc_stats join per query
         self._off_bc = None
         self._load_conv_offsets()
 
     def _load_conv_offsets(self) -> None:
-        """Load the optional conv_offsets fast-path artifact.
+        """Load the optional conv_offsets fast-path artifact: the build's
+        piece plus one piece per append of new conversations
+        (streaming/ingest.py), concatenated and ordered by conv_offset.
 
         STRICTLY best-effort: the artifact only ever replaces the
         doc_stats join, so any doubt — stage not committed in the
         manifest, unreadable file (e.g. a crash left a truncated
-        parquet), offsets that don't tile [0, n_rows) contiguously —
-        falls back to the join path instead of failing the engine
-        open."""
+        parquet), a conv_id in two pieces, offsets that don't tile
+        [0, n_rows) contiguously — falls back to the join path instead
+        of failing the engine open."""
         import glob
 
         if not self.man.is_complete("conv_offsets"):
             return
         co_dir = os.path.join(self.index_dir, "conv_offsets")
-        files = sorted(glob.glob(os.path.join(co_dir, "*.parquet")))
+        files = glob.glob(os.path.join(co_dir, "*.parquet"))
         if not files:
             return
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as papq
 
         try:
             t = pa.concat_tables([papq.read_table(f) for f in files])
+            # piece order on disk is not doc order (``ing…`` names sort
+            # before the build's ``part-…``): order rows by offset
+            t = t.take(pc.sort_indices(t.column("conv_offset")))
             offs = t.column("conv_offset").to_numpy().astype(np.int64)
             n_turns = t.column("n_turns").to_numpy().astype(np.int64)
+            unique = pc.count_distinct(t.column("conv_id")).as_py() == t.num_rows
         except Exception:
             return  # unreadable/corrupt artifact → doc_stats join path
         # stale-artifact guard: the offsets must tile [0, n_rows) with
-        # FULL contiguity (an append extends the doc space and deletes
-        # the artifact, but reject any mismatch regardless — a wrong
-        # offset table would silently mislabel every hit)
+        # FULL contiguity and give each conversation ONE range (appends
+        # that break either drop the artifact, but reject any mismatch
+        # regardless — a wrong offset table would silently mislabel
+        # every hit)
         if (
             offs.size == 0
+            or not unique
             or int(offs[0]) != 0
             or int(offs[-1] + n_turns[-1]) != self.n_rows
             or not bool((offs[1:] == offs[:-1] + n_turns[:-1]).all())
@@ -1847,7 +1863,8 @@ class SearchEngine:
     #: merge (O(sum tf), single-threaded here), measured net-slower than
     #: the distributed plan above a few hundred thousand postings
     LOCAL_MAX_PHRASE_POSTINGS = 200_000
-    #: k cap — "give me everything" queries stay distributed
+    #: result-row cap: k above it stays distributed, and so does a
+    #: "give me everything" query (k=None) with more candidates
     LOCAL_MAX_K = 10_000
 
     def _local_posting_rows(
@@ -2225,8 +2242,7 @@ class SearchEngine:
         semantics): flat boolean-of-terms, and single Phrase / Prefix /
         Wildcard / TermRange / Fuzzy leaves."""
         if (
-            k is None
-            or k > self.LOCAL_MAX_K
+            (k is not None and k > self.LOCAL_MAX_K)
             or self._off_bc is None
             or self._driver_vocab() is None
         ):
@@ -2253,10 +2269,12 @@ class SearchEngine:
         if got is None:
             return None
         docs, scores = got
+        if k is None and docs.size > self.LOCAL_MAX_K:
+            return None
         return self._local_finish(docs, scores, k, mode)
 
     def _local_finish(
-        self, docs: np.ndarray, scores: np.ndarray, k: int, mode: str
+        self, docs: np.ndarray, scores: np.ndarray, k: int | None, mode: str
     ) -> pd.DataFrame:
         """Driver-local mirror of :meth:`_finish`: (score desc, doc_id
         asc) ordering, optional best-per-conv collapse (max-struct
@@ -2279,7 +2297,16 @@ class SearchEngine:
         old path's sort-then-first-per-conv picks exactly the max-score
         / smallest-doc row per conv)."""
         conv_ids, offs = self._off_bc.value
-        if mode != "conversations" and 0 < k < docs.size and docs.size > max(4 * k, 4096):
+        if offs.size == 0 or int(offs[0]) != 0:
+            # the conv grouping below labels group i with conv_ids[i];
+            # a first range not starting at doc 0 would misalign them
+            raise ValueError("conv_offsets must start at doc 0")
+        if (
+            mode != "conversations"
+            and k is not None
+            and 0 < k < docs.size
+            and docs.size > max(4 * k, 4096)
+        ):
             kth = np.partition(scores, docs.size - k)[docs.size - k]
             if (scores == kth).all():
                 # constant-score: winners are just the k smallest docs
@@ -2293,6 +2320,8 @@ class SearchEngine:
                 o0 = np.argsort(docs, kind="stable")
                 docs, scores = docs[o0], scores[o0]
             b = np.searchsorted(docs, offs)
+            if b[0] != 0:
+                raise ValueError("candidate doc id below the first conversation")
             counts = np.diff(np.append(b, docs.size))
             gids = np.repeat(np.arange(offs.size, dtype=np.int64), counts)
             starts = b[counts > 0]
@@ -2325,6 +2354,12 @@ class SearchEngine:
     RESULT_SCHEMA = (
         "rank int, doc_id long, conv_id string, turn_idx int, score double"
     )
+
+    def _empty_frame(self, schema: str) -> DataFrame:
+        """Empty result relation whose collect runs no Spark job: the
+        optimizer folds ``limit(0)`` to an empty local relation (a bare
+        ``createDataFrame([], schema)`` scans an empty RDD — one job)."""
+        return self.spark.createDataFrame([], schema).limit(0)
 
     # ------------------------------------------------------------ public API
 
@@ -2375,9 +2410,7 @@ class SearchEngine:
                     # result caching — the DataFrame is an immutable
                     # empty relation)
                     if getattr(self, "_empty_result", None) is None:
-                        self._empty_result = self.spark.createDataFrame(
-                            [], self.RESULT_SCHEMA
-                        )
+                        self._empty_result = self._empty_frame(self.RESULT_SCHEMA)
                     return self._empty_result
                 return self.spark.createDataFrame(lr, self.RESULT_SCHEMA)
         if use_wand:
@@ -2541,7 +2574,7 @@ class SearchEngine:
             if ex is not None:
                 ex.shutdown(wait=False)
         if not parts:
-            return self.spark.createDataFrame([], self.BATCH_SCHEMA)
+            return self._empty_frame(self.BATCH_SCHEMA)
         out = reduce(lambda a, b: a.unionByName(b), parts)
         return out.select("query_id", *RESULT_COLS)
 
@@ -2587,7 +2620,7 @@ class SearchEngine:
         score_terms = {t for t in scoring_any if t in idf_map}
         not_only = {t for t in referenced - scoring_any if t in idf_map}
         if not score_terms:
-            return self.spark.createDataFrame([], self.BATCH_SCHEMA)
+            return self._empty_frame(self.BATCH_SCHEMA)
         scored = self._scored_terms_df(score_terms, idf_map, avgdl_map)
         if not_only:
             scored = scored.unionByName(

@@ -14,6 +14,17 @@ Corpus statistics (N, total_tokens → avgdl) are updated in the manifest
 on every commit, so scores reflect the full corpus after each batch —
 the same behavior as a Lucene commit making new segments visible.
 
+The ``conv_offsets`` table (doc_id → conversation map that keeps the
+query engine's driver-local tier engaged) is extended the same way: a
+dense batch of NEW conversations lands as contiguous doc ranges at ids
+≥ the current corpus size, so the batch adds one piece
+``(conv_id, conv_offset, n_turns)`` that rides the same staged, hidden,
+manifest-committed publish as every other table.  A batch that
+continues an already-indexed conversation, is not dense, or has too
+many conversations for the driver-side offsets path breaks the
+one-range-per-conversation layout instead: its commit drops the
+artifact and the engine falls back to the doc_stats join.
+
 Exactly-once semantics (Structured Streaming is at-least-once into
 ``foreachBatch``): every batch's files are (1) written into a private
 ``_staging/`` directory, (2) moved into the live tables under a HIDDEN
@@ -38,6 +49,7 @@ the batch core, usable directly for micro-batch ETL.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
@@ -52,10 +64,28 @@ from emailindexer_spark.plans.builder import (
     TF_SCHEMA_POS,
     _encode_group,
     _tokenize_to_tf_rows,
+    write_conv_offsets,
 )
 from emailindexer_spark.sources.checkpoint import Manifest
 
-_TABLES = ("doc_index", "doc_stats", "postings", "term_dict")
+_TABLES = ("doc_index", "doc_stats", "postings", "term_dict", "conv_offsets")
+
+
+def _offsets_overlap(co_dir: str, conv_ids) -> bool:
+    """True when any of ``conv_ids`` already has a range in the published
+    conv_offsets pieces (hidden uncommitted pieces are not globbed)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
+
+    files = glob.glob(os.path.join(co_dir, "*.parquet"))
+    if not files or not len(conv_ids):
+        return False
+    have = pa.concat_tables(
+        papq.read_table(f, columns=["conv_id"]) for f in files
+    ).column(0)
+    batch_ids = pa.array(list(conv_ids), pa.string())
+    return bool(pc.any(pc.is_in(have, value_set=batch_ids)).as_py())
 
 
 def _tag_for(batch_seq: int, batch_id: int | None) -> str:
@@ -169,14 +199,6 @@ def incremental_append(
     batch_seq = int(man.stats.get("ingest_batches", 0)) + 1
     tag = _tag_for(batch_seq, batch_id)
 
-    # appended turns land at the END of the doc_id space, so a
-    # conversation touched by an append no longer occupies one
-    # contiguous doc range — drop the conv_offsets fast-path artifact
-    # (the query engine falls back to the doc_stats join; compaction
-    # never moves doc_ids, so it keeps the artifact)
-    shutil.rmtree(man.stage_path("conv_offsets"), ignore_errors=True)
-    man.stages.pop("conv_offsets", None)
-
     # clean any partial files left by a crashed attempt of this batch
     for t in _TABLES:
         _remove_tagged(man.stage_path(t), tag)
@@ -185,12 +207,34 @@ def incremental_append(
 
     # docIDs: insertion order within the batch (stable (conv_id, turn_idx)
     # inside the batch), offset by the current corpus size
-    from emailindexer_spark.operators.docid import assign_doc_ids
+    from emailindexer_spark.operators.docid import assign_doc_ids_with_total
 
     fields = tuple(man.params.get("fields", ["text"]))
-    with_ids = assign_doc_ids(batch, method="two_phase").withColumn(
-        "doc_id", F.col("doc_id") + F.lit(base)
+    oo: dict = {}
+    with_ids, _total = assign_doc_ids_with_total(
+        batch, method="two_phase", offsets_out=oo
     )
+    with_ids = with_ids.withColumn("doc_id", F.col("doc_id") + F.lit(base))
+    # conv_offsets: appended turns land at the END of the doc_id space,
+    # so a dense batch of NEW conversations keeps every conversation one
+    # contiguous doc range — extend the artifact with the batch's piece
+    # (offsets come from the driver-side prefix sum above, no extra
+    # job).  Anything else drops it in this append's commit; compaction
+    # never moves doc_ids, so it keeps whichever state it finds.
+    co_dir = man.stage_path("conv_offsets")
+    extend = (
+        man.is_complete("conv_offsets")
+        and bool(oo.get("dense"))
+        and not _offsets_overlap(co_dir, oo["conv_ids"])
+    )
+    if extend and len(oo["conv_ids"]):
+        os.makedirs(os.path.join(staging, "conv_offsets"))
+        write_conv_offsets(
+            os.path.join(staging, "conv_offsets", "part-00000.parquet"),
+            oo["conv_ids"],
+            oo["offsets"] + base,
+            oo["n_turns"],
+        )
     extra_cols: list[str] = []
     for fi, fld in enumerate(fields):
         dcol = "dl" if fi == 0 else f"dl_{fld}"
@@ -259,6 +303,11 @@ def incremental_append(
     if batch_id is not None:
         committed = (committed + [int(batch_id)])[-64:]  # bounded tail
         watermark = max(watermark, int(batch_id))
+    if extend:
+        co = man.stages["conv_offsets"]
+        co["n_convs"] = int(co.get("n_convs", 0)) + len(oo["conv_ids"])
+    else:
+        man.stages.pop("conv_offsets", None)
     f0 = fields[0]
     fstats = dict(man.stats.get("field_stats", {}))
     for fld in fields:
@@ -292,6 +341,10 @@ def incremental_append(
     )
     for t in _TABLES:
         _unhide_tagged(man.stage_path(t), tag)
+    if not extend:
+        # after the commit: a crash before it leaves the pre-append
+        # artifact valid for the pre-append corpus
+        shutil.rmtree(co_dir, ignore_errors=True)
     return man
 
 

@@ -15,6 +15,22 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``spark_jobs(fn)``: the Spark job ids started while ``fn`` runs."""
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        sc.setJobGroup("job_probe", "job_probe")
+        try:
+            fn()
+            return list(sc.statusTracker().getJobIdsForGroup("job_probe"))
+        finally:
+            sc.setJobGroup(None, None)
+
+    return jobs
+
+
+@pytest.fixture(scope="session")
 def corpus_pdf():
     return make_transcripts(3000, seed=42)
 

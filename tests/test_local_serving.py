@@ -58,8 +58,7 @@ SHAPES = [
 ]
 
 
-def test_local_matches_distributed_everywhere(engines):
-    local, dist = engines
+def _assert_tiers_agree(local, dist):
     rare, mid, heavy = _terms(local)
     subs = {
         "rare": rare,
@@ -76,17 +75,90 @@ def test_local_matches_distributed_everywhere(engines):
         assert a == b, (q, mode, wand, a[:3], b[:3])
 
 
-def test_local_path_engages_and_runs_zero_jobs(spark, engines):
+def test_local_matches_distributed_everywhere(engines):
+    _assert_tiers_agree(*engines)
+
+
+def test_local_path_engages_and_runs_zero_jobs(spark_jobs, engines):
     local, _ = engines
     rare, _mid, _heavy = _terms(local)
-    sc = spark.sparkContext
-    sc.setJobGroup("local_probe", "local_probe")
+    assert spark_jobs(lambda: local.search(rare, k=5).collect()) == []
+
+
+def test_zero_hit_search_runs_zero_jobs(spark_jobs, engines):
+    """An empty result is an empty local relation: collecting it runs
+    no Spark job (a missing term and a phrase with no hits)."""
+    local, _ = engines
+    rare, _mid, _heavy = _terms(local)
+    for q in ("zzznope", f'"{rare} {rare} {rare}"'):
+        df = local.search(q, k=5)
+        assert spark_jobs(df.collect) == [], q
+        assert df.collect() == [] and df.columns == ["rank", "doc_id", "conv_id", "turn_idx", "score"]
+
+
+@pytest.mark.slow
+def test_local_tier_survives_append_and_compaction(spark, corpus_pdf):
+    """Appends of new conversations extend conv_offsets, so the local
+    tier stays engaged and equals the distributed tier — whose
+    (conv_id, turn_idx) come from the doc_stats join here, not from the
+    artifact — on the appended index and again after compaction."""
+    import shutil
+    import tempfile
+
+    from emailindexer_spark.plans.builder import IndexBuilder
+    from emailindexer_spark.streaming.compact import compact_index
+    from emailindexer_spark.streaming.ingest import incremental_append
+
+    convs = corpus_pdf["conv_id"].unique()
+    cut = set(convs[: 2 * len(convs) // 3])
+    base = corpus_pdf[corpus_pdf.conv_id.isin(cut)]
+    batch = corpus_pdf[~corpus_pdf.conv_id.isin(cut)]
+
+    def pair():
+        local = SearchEngine(spark, d)
+        dist = SearchEngine(spark, d)
+        dist._local_search = lambda *a, **k: None
+        dist._off_bc = None  # conv/turn from doc_stats, not the artifact
+        return local, dist
+
+    d = tempfile.mkdtemp(prefix="ix_tier_append_")
     try:
-        local.search(rare, k=5).collect()
-        jobs = sc.statusTracker().getJobIdsForGroup("local_probe")
+        IndexBuilder(spark, d, num_parts=8, heavy_df_threshold=500, split_target=400).build(
+            spark.createDataFrame(base)
+        )
+        incremental_append(spark, d, spark.createDataFrame(batch))
+        local, dist = pair()
+        assert local.n_rows == len(corpus_pdf)
+        assert local._off_bc is not None
+        _assert_tiers_agree(local, dist)
+        compact_index(spark, d)
+        local, dist = pair()
+        assert local._off_bc is not None
+        _assert_tiers_agree(local, dist)
     finally:
-        sc.setJobGroup(None, None)
-    assert jobs == [] or len(jobs) == 0
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_unbounded_k_is_local_up_to_the_row_cap(spark_jobs, engines):
+    """k=None is served locally while the candidates fit LOCAL_MAX_K
+    rows, and equals the distributed plan either side of the cap."""
+    from emailindexer_spark.plans.parser import parse
+
+    local, dist = engines
+    rare, mid, heavy = _terms(local)
+    for q, mode in ((rare, "turns"), (f"{rare} {mid}", "turns"), (f'"{heavy} {mid}"', "conversations")):
+        got = []
+        assert spark_jobs(lambda: got.extend(_rows(local.search(q, k=None, mode=mode)))) == [], q
+        assert got == _rows(dist.search(q, k=None, mode=mode)), (q, mode)
+    local.LOCAL_MAX_K = 5
+    try:
+        q = f"{mid} {heavy}"
+        ast = local._resolve_node(parse(q, simple=local.simple))
+        assert local._local_search(ast, ast, 5, "turns") is not None
+        assert local._local_search(ast, ast, None, "turns") is None
+        assert _rows(local.search(q, k=None)) == _rows(dist.search(q, k=None))
+    finally:
+        del local.LOCAL_MAX_K  # restore the class attribute
 
 
 def test_budget_fallback_is_distributed_and_equal(engines):

@@ -5,6 +5,7 @@ import os
 import shutil
 import tempfile
 
+import pandas as pd
 import pytest
 
 from emailindexer_spark.oracle import build_oracle_index, search as osearch
@@ -58,13 +59,14 @@ def test_incremental_append_matches_oracle(spark, corpus3):
 
 
 @pytest.mark.slow
-def test_manifest_first_append_visibility(spark, corpus3):
+def test_manifest_first_append_visibility(spark, spark_jobs, corpus3):
     # MANIFEST-FIRST publish: (1) a reader opening the index after the
     # batch's files were moved into the live tables but BEFORE the
     # manifest commit sees exactly the pre-append corpus (the files are
     # hidden); (2) a crash AFTER the commit but before the rename-
     # visible step is healed at the next engine open, which sees the
-    # fully-appended corpus.
+    # fully-appended corpus.  The batch's conv_offsets piece rides the
+    # same windows, so the driver-local tier stays engaged in both.
     import glob
 
     import emailindexer_spark.streaming.ingest as ING
@@ -104,13 +106,19 @@ def test_manifest_first_append_visibility(spark, corpus3):
             f for f in os.listdir(os.path.join(d, "doc_index")) if f.startswith(".ing")
         ]
         assert hidden, "the crashed append must have staged hidden files"
+        assert any(
+            f.startswith(".ing") for f in os.listdir(os.path.join(d, "conv_offsets"))
+        ), "the crashed append must have staged a hidden conv_offsets piece"
         mid = SearchEngine(spark, d)
         assert mid.n_rows == len(base)
+        assert mid._off_bc is not None, "pre-append offsets must stay loaded"
+        assert spark_jobs(lambda: snap(mid)) == [], "local tier must serve"
         assert snap(mid) == pre, "mid-append reader must see the pre-append corpus"
         # the writer's retry completes the append
         incremental_append(spark, d, spark.createDataFrame(b1), batch_id=3)
         eng_full = SearchEngine(spark, d)
         assert eng_full.n_rows == len(base) + len(b1)
+        assert eng_full._off_bc is not None
         full = snap(eng_full)
 
         # ---- window 2: committed-but-hidden (crash before publish) ----
@@ -120,14 +128,16 @@ def test_manifest_first_append_visibility(spark, corpus3):
             incremental_append(spark, d, spark.createDataFrame(b2), batch_id=4)
         finally:
             ING._unhide_tagged = orig_unhide
-        assert any(
-            f.startswith(".ing") for f in os.listdir(os.path.join(d, "doc_index"))
-        ), "batch 4's files must still be hidden"
+        for t in ("doc_index", "conv_offsets"):
+            assert any(
+                f.startswith(".ing") for f in os.listdir(os.path.join(d, t))
+            ), f"batch 4's {t} files must still be hidden"
         healed = SearchEngine(spark, d)  # open-time repair publishes them
         assert healed.n_rows == len(base) + len(b1) + len(b2)
+        assert healed._off_bc is not None
         assert not any(
             f.startswith(".ing")
-            for t in ("doc_index", "doc_stats", "term_dict")
+            for t in ("doc_index", "doc_stats", "term_dict", "conv_offsets")
             for f in os.listdir(os.path.join(d, t))
         )
         assert len(snap(healed)) >= len(full)
@@ -139,6 +149,60 @@ def test_manifest_first_append_visibility(spark, corpus3):
         assert n > 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.slow
+def test_appends_that_split_conversations_drop_offsets(spark, corpus3):
+    """conv_offsets needs one contiguous doc range per conversation.  A
+    batch of new conversations extends it; a batch that continues an
+    indexed conversation, reuses an indexed conv_id, or is not dense
+    drops it in its commit — and the doc_stats-join fallback still
+    matches the oracle."""
+    from emailindexer_spark.sources.checkpoint import Manifest
+
+    base, b1, b2 = corpus3
+    c0 = b1.conv_id.iloc[0]
+    first = b1[b1.conv_id == c0]
+    b2_first = b2[b2.conv_id == b2.conv_id.iloc[0]]
+    cases = {
+        # turns n.. of an indexed conversation (and new conversations)
+        "continues": pd.concat([b2, first.head(3).assign(turn_idx=first.turn_idx.head(3) + len(first))]),
+        # a new conversation with gaps in turn_idx
+        "sparse": b2_first.iloc[::2].assign(conv_id="zz_sparse"),
+        # dense turns under a conv_id the index already holds
+        "reused": first.head(3),
+    }
+    root = tempfile.mkdtemp(prefix="ix_drop_")
+    try:
+        d0 = os.path.join(root, "grown")
+        IndexBuilder(spark, d0, num_parts=8, heavy_df_threshold=500, split_target=400).build(
+            spark.createDataFrame(base)
+        )
+        incremental_append(spark, d0, spark.createDataFrame(b1))
+        assert Manifest.load_or_create(d0).is_complete("conv_offsets")
+        assert SearchEngine(spark, d0)._off_bc is not None
+        for name, batch in cases.items():
+            d = os.path.join(root, name)
+            shutil.copytree(d0, d)
+            incremental_append(spark, d, spark.createDataFrame(batch))
+            assert not Manifest.load_or_create(d).is_complete("conv_offsets"), name
+            assert not os.path.exists(os.path.join(d, "conv_offsets")), name
+            eng = SearchEngine(spark, d)
+            assert eng._off_bc is None and eng.n_rows == len(base) + len(b1) + len(batch)
+            rows = []
+            for chunk in (base, b1, batch):
+                rows += sorted(
+                    chunk[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None)
+                )
+            ix = build_oracle_index(rows, sort=False)
+            for q, mode in [("qojema fuhepi", "turns"), ("fuhepi", "conversations"), ("qojema", "conversations")]:
+                exp = osearch(ix, q, k=10, mode=mode)
+                got = [(r["doc_id"], r["score"]) for r in eng.search(q, k=10, mode=mode).collect()]
+                assert [x[0] for x in got] == [x[0] for x in exp], (name, q, mode)
+                for (_, a), (_, b) in zip(got, exp):
+                    assert abs(a - b) <= 1e-6 * max(1.0, abs(b))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 @pytest.mark.slow

@@ -66,6 +66,7 @@ from emailindexer_spark.plans.parser import (
     parse,
     query_terms,
 )
+from emailindexer_spark.plans.results import LocalResult
 from emailindexer_spark.sources.checkpoint import Manifest
 
 SCORE_SCHEMA = "doc_id long, score double"
@@ -2355,12 +2356,6 @@ class SearchEngine:
         "rank int, doc_id long, conv_id string, turn_idx int, score double"
     )
 
-    def _empty_frame(self, schema: str) -> DataFrame:
-        """Empty result relation whose collect runs no Spark job: the
-        optimizer folds ``limit(0)`` to an empty local relation (a bare
-        ``createDataFrame([], schema)`` scans an empty RDD — one job)."""
-        return self.spark.createDataFrame([], schema).limit(0)
-
     # ------------------------------------------------------------ public API
 
     def _score_resolved(self, ast: Node) -> DataFrame:
@@ -2380,7 +2375,15 @@ class SearchEngine:
         use_wand: bool | None = None,
         with_text: bool = False,
     ) -> DataFrame:
-        """Top-k search. Returns (rank, doc_id, conv_id, turn_idx, score)."""
+        """Top-k search. Returns (rank, doc_id, conv_id, turn_idx, score).
+
+        When the driver-local tier serves the query (no ``with_text``,
+        ``k`` up to ``LOCAL_MAX_K``, a supported shape within the local
+        budgets), the result is a :class:`LocalResult`: its ``collect``,
+        ``toPandas``, ``count``, ``columns`` and ``schema`` answer on the
+        driver with no JVM call, and any other DataFrame use builds the
+        JVM relation first.  Every other query returns a plain
+        distributed DataFrame."""
         ast = self._resolve_node(parse(query, simple=self.simple))
         # a bare leaf on a multi-field index resolves to a nested
         # SHOULD-of-per-field-Terms Bool; flatten pure-SHOULD unit-boost
@@ -2405,14 +2408,7 @@ class SearchEngine:
             # result equals either)
             lr = self._local_search(ast, flat, k, mode)
             if lr is not None:
-                if not len(lr):
-                    # one empty-result plan per engine (plan reuse, not
-                    # result caching — the DataFrame is an immutable
-                    # empty relation)
-                    if getattr(self, "_empty_result", None) is None:
-                        self._empty_result = self._empty_frame(self.RESULT_SCHEMA)
-                    return self._empty_result
-                return self.spark.createDataFrame(lr, self.RESULT_SCHEMA)
+                return LocalResult(lr, self.RESULT_SCHEMA, self.spark)
         if use_wand:
             keys = query_terms(flat)
             idf_map, avgdl_map = self._maps_for(keys)
@@ -2461,6 +2457,12 @@ class SearchEngine:
         prefix, fuzzy, nested booleans) fall back to per-query plans
         unioned into the same result.  ``use_wand=True`` forces the
         per-query WAND path instead (identical results — both exact).
+
+        A batch whose members the driver-local tier serves in full (and
+        an empty batch) returns one :class:`LocalResult`, which answers
+        ``collect``/``toPandas``/``count``/``columns``/``schema`` with no
+        JVM call; a mixed batch unions the local rows (materialized as a
+        JVM relation) with the distributed plans.
         """
         # ONE df-stat lookup for the whole batch: pre-warm the term cache
         # with the union of every query's terms, so every plan below
@@ -2474,7 +2476,7 @@ class SearchEngine:
         self.term_dfs(all_terms)
         # driver-local members first (same eligibility and results as
         # the per-query fast path): their rows fold into ONE local
-        # relation — zero Spark work for a batch of bounded queries
+        # result — no Spark work for a batch of bounded queries
         local_pdfs: list[pd.DataFrame] = []
         batch_tcache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         cand: list[tuple[str, Node, Node, int | None, str]] = []
@@ -2531,16 +2533,14 @@ class SearchEngine:
                 shared[qid] = (flat, k, mode)
             else:
                 nonflat.append((qid, k, mode))
-        parts = []
-        if local_pdfs:
-            parts.append(
-                self.spark.createDataFrame(
-                    pd.concat(local_pdfs, ignore_index=True)
-                    if len(local_pdfs) > 1
-                    else local_pdfs[0],
-                    "query_id string, " + self.RESULT_SCHEMA,
-                )
-            )
+        local = (
+            LocalResult(pd.concat(local_pdfs, ignore_index=True), self.BATCH_SCHEMA, self.spark)
+            if local_pdfs
+            else LocalResult.empty(self.BATCH_SCHEMA, self.spark)
+        )
+        if not resolved:
+            return local  # every member served locally, or an empty batch
+        parts = [local] if local_pdfs else []
         futures = []
         ex = None
         if nonflat:
@@ -2573,8 +2573,6 @@ class SearchEngine:
         finally:
             if ex is not None:
                 ex.shutdown(wait=False)
-        if not parts:
-            return self._empty_frame(self.BATCH_SCHEMA)
         out = reduce(lambda a, b: a.unionByName(b), parts)
         return out.select("query_id", *RESULT_COLS)
 
@@ -2620,7 +2618,7 @@ class SearchEngine:
         score_terms = {t for t in scoring_any if t in idf_map}
         not_only = {t for t in referenced - scoring_any if t in idf_map}
         if not score_terms:
-            return self._empty_frame(self.BATCH_SCHEMA)
+            return LocalResult.empty(self.BATCH_SCHEMA, self.spark)
         scored = self._scored_terms_df(score_terms, idf_map, avgdl_map)
         if not_only:
             scored = scored.unionByName(

@@ -58,16 +58,13 @@ SHAPES = [
 ]
 
 
+def _subs(eng):
+    rare, mid, heavy = _terms(eng)
+    return {"rare": rare, "mid": mid, "heavy": heavy, "pre": mid[:2], "lo": mid[:2], "hi": mid[:2] + "zz"}
+
+
 def _assert_tiers_agree(local, dist):
-    rare, mid, heavy = _terms(local)
-    subs = {
-        "rare": rare,
-        "mid": mid,
-        "heavy": heavy,
-        "pre": mid[:2],
-        "lo": mid[:2],
-        "hi": mid[:2] + "zz",
-    }
+    subs = _subs(local)
     for tmpl, mode, wand in SHAPES:
         q = tmpl.format(**subs)
         a = _rows(local.search(q, k=12, mode=mode, use_wand=wand))
@@ -143,6 +140,7 @@ def test_unbounded_k_is_local_up_to_the_row_cap(spark_jobs, engines):
     """k=None is served locally while the candidates fit LOCAL_MAX_K
     rows, and equals the distributed plan either side of the cap."""
     from emailindexer_spark.plans.parser import parse
+    from emailindexer_spark.plans.results import LocalResult
 
     local, dist = engines
     rare, mid, heavy = _terms(local)
@@ -150,13 +148,17 @@ def test_unbounded_k_is_local_up_to_the_row_cap(spark_jobs, engines):
         got = []
         assert spark_jobs(lambda: got.extend(_rows(local.search(q, k=None, mode=mode)))) == [], q
         assert got == _rows(dist.search(q, k=None, mode=mode)), (q, mode)
+    q = f"{mid} {heavy}"
+    res = local.search(q, k=None)
+    assert isinstance(res, LocalResult) and 5 < res.count() <= local.LOCAL_MAX_K
     local.LOCAL_MAX_K = 5
     try:
-        q = f"{mid} {heavy}"
         ast = local._resolve_node(parse(q, simple=local.simple))
         assert local._local_search(ast, ast, 5, "turns") is not None
         assert local._local_search(ast, ast, None, "turns") is None
-        assert _rows(local.search(q, k=None)) == _rows(dist.search(q, k=None))
+        over = local.search(q, k=None)
+        assert not isinstance(over, LocalResult)
+        assert _rows(over) == _rows(dist.search(q, k=None)) == _rows(res)
     finally:
         del local.LOCAL_MAX_K  # restore the class attribute
 
@@ -260,3 +262,128 @@ def test_local_finish_conversations_collapse_fuzz():
         assert list(got["score"]) == list(ss), trial
         assert list(got["conv_id"]) == list(conv_ids[oi]), trial
         assert list(got["turn_idx"]) == list((ds - offs[oi]).astype(np.int32)), trial
+
+
+# ------------------------------------------------------------------ LocalResult
+
+
+def _both_modes(eng):
+    """Every SHAPES template in turns and in conversations mode (explicit
+    WAND only in turns mode, the one it supports)."""
+    subs = _subs(eng)
+    for tmpl, _mode, wand in SHAPES:
+        for mode in ("turns", "conversations"):
+            yield tmpl.format(**subs), mode, wand if mode == "turns" else None
+
+
+def _typed(rows):
+    return [(tuple(r), [type(v) for v in r], list(r.__fields__)) for r in rows]
+
+
+def test_local_result_matches_its_jvm_relation(spark, spark_jobs, engines):
+    """collect / toPandas / count / columns / schema served on the
+    driver equal the JVM relation the same result builds, in values and
+    Python types; an empty result's relation collects with no job."""
+    import pandas as pd
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from emailindexer_spark.plans.results import LocalResult
+
+    local, _ = engines
+    for q, mode, wand in _both_modes(local):
+        res = local.search(q, k=12, mode=mode, use_wand=wand)
+        assert isinstance(res, LocalResult), (q, mode)
+        got = (res.collect(), res.toPandas(), res.count(), res.columns, res.schema)
+        jvm = DataFrame(res._jdf, spark)
+        assert type(jvm) is DataFrame
+        if not got[2]:
+            assert spark_jobs(jvm.collect) == [], (q, mode)
+        assert _typed(got[0]) == _typed(jvm.collect()), (q, mode)
+        pd.testing.assert_frame_equal(got[1], jvm.toPandas())
+        assert got[2:] == (jvm.count(), jvm.columns, jvm.schema), (q, mode)
+
+
+def test_local_result_driver_calls_build_no_relation(spark_jobs, engines):
+    from pyspark.sql import DataFrame as PublicDataFrame
+
+    local, _ = engines
+    for q, mode, wand in _both_modes(local):
+        res = local.search(q, k=12, mode=mode, use_wand=wand)
+        assert isinstance(res, PublicDataFrame)
+        out = []
+        calls = (res.collect, res.toPandas, res.count, lambda: res.columns, lambda: res.schema)
+        assert spark_jobs(lambda: out.extend(f() for f in calls)) == [], (q, mode)
+        assert "_jdf" not in res.__dict__, (q, mode)
+        # toPandas hands out a copy: mutating it leaves the result intact
+        out[1]["score"] = -1.0
+        assert all(r.score != -1.0 for r in res.collect())
+
+
+def test_local_result_chains_like_a_plain_dataframe(spark, engines):
+    from pyspark.sql import functions as F
+
+    local, dist = engines
+    rare, mid, heavy = _terms(local)
+    q, q2 = f"{rare} {mid} {heavy}", f"{mid} AND {heavy}"
+
+    def same(f):
+        a = sorted(f(local.search(q, k=12)), key=str)
+        b = sorted(f(dist.search(q, k=12)), key=str)
+        assert a == b and a
+
+    other = dist.search(q2, k=7)
+    same(lambda r: r.withColumn("score", F.round("score", 4)).collect())
+    same(lambda r: r.unionByName(other).collect())
+    same(lambda r: other.unionByName(r).collect())
+    same(lambda r: r.join(local.doc_index.select("doc_id", "role"), "doc_id").collect())
+    same(lambda r: r.orderBy(F.col("doc_id").desc()).collect())
+    # chaining materializes the relation once, and the driver-side
+    # answers stay the same afterwards
+    res = local.search(q, k=12)
+    before = res.collect()
+    res.withColumn("x", F.lit(1)).count()
+    assert "_jdf" in res.__dict__ and res.collect() == before
+
+
+def test_all_local_search_many_is_one_local_result(spark_jobs, engines):
+    from emailindexer_spark.plans.planner import RESULT_COLS
+    from emailindexer_spark.plans.results import LocalResult
+
+    local, _ = engines
+    rare, mid, heavy = _terms(local)
+    batch = {
+        "a": (rare, 5, "turns"),
+        "b": (f"{mid} AND {heavy}", 5, "turns"),
+        "c": (f'"{heavy} {mid}"', 5, "turns"),
+        "d": (f"{rare} {heavy}", 5, "conversations"),
+        "e": (mid[:2] + "*", 8, "turns"),
+        "z": ("zzznope", 5, "turns"),
+    }
+    got = []
+    assert spark_jobs(lambda: got.append(local.search_many(batch, use_wand=False))) == []
+    res = got[0]
+    assert isinstance(res, LocalResult) and res.columns == ["query_id", *RESULT_COLS]
+    rows = res.collect()
+    assert "_jdf" not in res.__dict__
+    for qid, (q, k, mode) in batch.items():
+        single = [tuple(r) for r in local.search(q, k=k, mode=mode, use_wand=False).collect()]
+        assert [tuple(r)[1:] for r in rows if r.query_id == qid] == single, qid
+    # a member past LOCAL_MAX_K takes the distributed plan: the batch
+    # unions the local rows (through their JVM relation) with it
+    def key(r):
+        return (r.rank, r.doc_id, r.conv_id, r.turn_idx, round(r.score, 9))
+
+    mixed = dict(batch, big=(heavy, local.LOCAL_MAX_K + 1, "turns"))
+    mixed_res = local.search_many(mixed, use_wand=False)
+    assert not isinstance(mixed_res, LocalResult)
+    by_q = {}
+    for r in mixed_res.collect():
+        by_q.setdefault(r.query_id, []).append(key(r))
+    for qid, (q, k, mode) in mixed.items():
+        single = [key(r) for r in local.search(q, k=k, mode=mode, use_wand=False).collect()]
+        assert sorted(by_q.get(qid, [])) == sorted(single), qid
+    empty = local.search_many({})
+    assert isinstance(empty, LocalResult) and empty.collect() == []
+    assert empty.columns == ["query_id", *RESULT_COLS]
+    assert empty.unionByName(res).collect() == rows
+

@@ -205,29 +205,6 @@ def varbyte_encode_offsets(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     return buf, offsets
 
 
-def varbyte_encode_segments(values: np.ndarray, seg_starts: np.ndarray) -> list[bytes]:
-    """Varbyte-encode ``values`` once, returning one bytes object per
-    segment (``seg_starts`` = start index of each segment).
-
-    Concatenating the returned segments is bit-identical to
-    ``varbyte_encode(values)`` — used to pre-encode per-(doc, term)
-    position payloads in the tokenizer so the posting encoder can
-    assemble block payloads by slicing, never re-encoding."""
-    v = np.asarray(values, dtype=np.uint64)
-    seg_starts = np.asarray(seg_starts, dtype=np.int64)
-    if v.size == 0:
-        return [b""] * len(seg_starts)
-    buf = varbyte_encode(v)
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    for k in range(1, 10):
-        nbytes += (v >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-    ends = np.cumsum(nbytes)
-    byte_starts = np.concatenate(([0], ends))[seg_starts]
-    byte_ends = np.concatenate((byte_starts[1:], [ends[-1]]))
-    mv = memoryview(buf)
-    return [bytes(mv[a:b]) for a, b in zip(byte_starts, byte_ends)]
-
-
 # ---------------------------------------------------------------- positions
 
 def encode_positions(pos_concat: np.ndarray, tfs: np.ndarray) -> bytes:

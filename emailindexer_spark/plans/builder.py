@@ -70,17 +70,14 @@ from pyspark.sql import functions as F
 
 from emailindexer_spark.functions.codec import (
     BLOCK_SIZE,
-    encode_blocks,
     encode_blocks_vec,
     varbyte_decode,
     varbyte_encode_offsets,
-    varbyte_encode_segments,
 )
 from emailindexer_spark.functions.sanitize import remove_quoted_replies
 from emailindexer_spark.functions.smallfloat import encode_lengths, norm_byte_expr
 from emailindexer_spark.functions.tokenizer import (
     token_counts,
-    tokenize_series,
     tokenize_series_codes,
 )
 from emailindexer_spark.operators.docid import (
@@ -95,10 +92,6 @@ POSTINGS_SCHEMA = (
     "b_minnorm array<int>, b_docs array<binary>, b_tfs array<binary>, b_norms array<binary>, "
     "b_pos array<binary>"
 )
-
-TF_SCHEMA = "doc_id long, term string, tf int, dl int, norm int"
-#: positions ride as pre-encoded segmented delta+varbyte bytes per row
-TF_SCHEMA_POS = TF_SCHEMA + ", pos binary"
 
 #: SPARK_GRAFT_BUILD_TRACE=1 prints per-phase wall times — the
 #: scaling-diagnosis knob: run the same build at two parallelism levels
@@ -198,88 +191,6 @@ def term_part_py(term: str, num_parts: int) -> int:
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:8], 16) % num_parts
 
 
-def _tokenize_to_tf_rows(simple: bool, positions: bool = False, fields: tuple[str, ...] = ("text",)):
-    """mapInPandas: (doc_id, <fields...>) batches → (doc_id, term, tf,
-    dl, norm[, pos]).  With ``positions``, each row additionally carries
-    the doc's ascending token positions for that term, PRE-ENCODED as
-    segmented delta+varbyte bytes (the posting encoder assembles block
-    payloads by concatenation).  Non-default fields emit FIELD-PREFIXED
-    term keys (``field:term``) with that field's own dl/norm — one
-    shared term space carrying per-field statistics (Lucene's per-field
-    terms dicts flattened)."""
-
-    def one_field(pdf: pd.DataFrame, col: str, prefix: str) -> pd.DataFrame | None:
-        toks = tokenize_series(pdf[col], simple=simple)
-        nlens = toks.str.len().to_numpy(dtype=np.int64)
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        if nlens.sum() == 0:
-            return None
-        flat_docs = np.repeat(doc_ids, nlens)
-        flat_terms = np.concatenate([t for t in toks.to_numpy() if len(t)])
-        if prefix:
-            flat_terms = (prefix + pd.Series(flat_terms)).to_numpy()
-        dl_map = pd.Series(nlens, index=doc_ids)
-        if not positions:
-            grouped = (
-                pd.DataFrame({"doc_id": flat_docs, "term": flat_terms})
-                .groupby(["doc_id", "term"], sort=False)
-                .size()
-                .reset_index(name="tf")
-            )
-            dl = dl_map.reindex(grouped["doc_id"]).to_numpy(dtype=np.int64)
-            return pd.DataFrame(
-                {
-                    "doc_id": grouped["doc_id"],
-                    "term": grouped["term"],
-                    "tf": grouped["tf"].astype("int32"),
-                    "dl": dl.astype("int32"),
-                    "norm": encode_lengths(dl).astype("int32"),
-                }
-            )
-        starts = np.concatenate(([0], np.cumsum(nlens[:-1])))
-        flat_pos = np.arange(int(nlens.sum()), dtype=np.int64) - np.repeat(starts, nlens)
-        # numeric lexsort over factorized terms (string sort is the
-        # slow path); positions stay ascending within each group
-        codes, uniques = pd.factorize(flat_terms)
-        order = np.lexsort((flat_pos, codes, flat_docs))
-        dv, cv, pv = flat_docs[order], codes[order], flat_pos[order]
-        change = np.nonzero((dv[1:] != dv[:-1]) | (cv[1:] != cv[:-1]))[0] + 1
-        gstarts = np.concatenate(([0], change))
-        tf = np.diff(np.concatenate((gstarts, [dv.size])))
-        # pre-encode each group's positions as segmented delta+varbyte —
-        # the posting encoder assembles blocks by CONCATENATION, and the
-        # Arrow/shuffle payload is one compact binary per row
-        d = np.diff(pv, prepend=0)
-        d[gstarts] = pv[gstarts]
-        pos_bufs = varbyte_encode_segments(d.astype(np.uint64), gstarts)
-        gdocs = dv[gstarts]
-        dl = dl_map.reindex(gdocs).to_numpy(dtype=np.int64)
-        return pd.DataFrame(
-            {
-                "doc_id": gdocs,
-                "term": uniques[cv[gstarts]],
-                "tf": tf.astype("int32"),
-                "dl": dl.astype("int32"),
-                "norm": encode_lengths(dl).astype("int32"),
-                "pos": pos_bufs,
-            }
-        )
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            frames = []
-            for fi, f in enumerate(fields):
-                got = one_field(pdf, f, "" if fi == 0 else f + ":")
-                if got is not None:
-                    frames.append(got)
-            if len(frames) == 1:
-                yield frames[0]
-            elif frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return gen
-
-
 #: map-side pre-aggregated posting chunks: ONE row per (term, split,
 #: map-batch) instead of one row per (doc, term).  docs ride as
 #: delta+varbyte (first absolute), tfs as varbyte, norms raw, positions
@@ -326,6 +237,75 @@ def _tokenize_term_df_counts(simple: bool, fields: tuple[str, ...] = ("text",)):
     return gen
 
 
+def _pos_doc_bounds(pos_buf: bytes, tfs: np.ndarray) -> np.ndarray:
+    """Byte offsets (length n + 1) of each posting's positions in a
+    concatenation of segmented-varbyte position payloads: a posting
+    ends with its tf-th value, whose continuation bit is clear."""
+    vends = np.flatnonzero(np.frombuffer(pos_buf, dtype=np.uint8) < 0x80) + 1
+    return np.concatenate(([0], vends[np.cumsum(tfs) - 1]))
+
+
+def _pack_chunk_rows(
+    terms: np.ndarray,
+    tstarts: np.ndarray,
+    docs: np.ndarray,
+    tfs: np.ndarray,
+    norms: np.ndarray,
+    pos_buf: bytes,
+    pos_bounds: np.ndarray | None,
+    heavy: dict,
+    n_rows: int,
+) -> pd.DataFrame:
+    """Term-major postings → CHUNK_SCHEMA rows, one per (term, split).
+
+    ``terms[i]`` owns postings ``tstarts[i]:tstarts[i + 1]``, docs
+    strictly ascending within each term.  A term in ``heavy`` ({term:
+    n_splits}) is cut at doc-range edges, split_id = doc_id //
+    ceil(n_rows / n_splits); any other term is one split-0 row.
+    ``pos_bounds[j]`` is the first byte of posting j's positions in
+    ``pos_buf`` (length n + 1), or None without positions.
+
+    ONE varbyte pass each for docs (delta-coded, absolute at every row
+    start) and tfs, then per-row memoryview slices: no Python loop over
+    postings."""
+    n = docs.size
+    tlens = np.diff(tstarts)
+    ns = np.fromiter((heavy.get(t, 0) for t in terms), np.int64, count=len(terms))
+    is_heavy = np.repeat(ns > 0, tlens)
+    sids = np.zeros(n, dtype=np.int64)
+    if is_heavy.any():
+        span = np.repeat(-(-n_rows // np.maximum(ns, 1)), tlens)
+        sids[is_heavy] = docs[is_heavy] // span[is_heavy]
+    row_start = np.zeros(n, dtype=bool)
+    row_start[tstarts[:-1]] = True
+    row_start[1:] |= sids[1:] != sids[:-1]
+    bs = np.flatnonzero(row_start)
+    be = np.append(bs[1:], n)
+    # negative cross-term deltas are always overwritten: rows never
+    # span terms
+    dd = np.diff(docs, prepend=0)
+    dd[bs] = docs[bs]
+    docs_buf, docs_offs = varbyte_encode_offsets(dd.astype(np.uint64))
+    tfs_buf, tfs_offs = varbyte_encode_offsets(tfs.astype(np.uint64))
+    norms_buf = norms.astype(np.uint8).tobytes()
+    mv_d, mv_t = memoryview(docs_buf), memoryview(tfs_buf)
+    if pos_bounds is None:
+        pos_col = [b""] * bs.size
+    else:
+        mv_p = memoryview(pos_buf)
+        pos_col = [bytes(mv_p[a:b]) for a, b in zip(pos_bounds[bs], pos_bounds[be])]
+    return pd.DataFrame(
+        {
+            "term": terms[np.searchsorted(tstarts, bs, side="right") - 1],
+            "split_id": sids[bs].astype(np.int32),
+            "docs": [bytes(mv_d[docs_offs[a]:docs_offs[b]]) for a, b in zip(bs, be)],
+            "tfs": [bytes(mv_t[tfs_offs[a]:tfs_offs[b]]) for a, b in zip(bs, be)],
+            "norms": [norms_buf[a:b] for a, b in zip(bs, be)],
+            "pos": pos_col,
+        }
+    )
+
+
 def _tokenize_to_chunk_rows(
     simple: bool,
     positions: bool,
@@ -336,16 +316,16 @@ def _tokenize_to_chunk_rows(
     """mapInPandas: (doc_id, <fields...>) batches → packed CHUNK_SCHEMA
     rows, one per (term, split) per batch.
 
-    All heavy work is vectorized: one lexsort into term-major order, ONE
-    varbyte pass each for docs/tfs/positions with per-value byte offsets
-    (functions/codec.varbyte_encode_offsets), then per-row memoryview
-    slices — the only Python-level loop is over the batch's UNIQUE terms
-    (to apply the heavy-split boundaries), never over tokens or docs.
-    ``heavy_bc`` is a broadcast {term_key: n_splits} from the sample
-    pass; split_id = doc_id // ceil(n_rows / n_splits) exactly as the
-    old broadcast-join computed it."""
+    One lexsort puts the batch's tokens in term-major (then doc, then
+    position) order; per-(doc, term) tf, norm and segmented-delta
+    positions come off it vectorized, and _pack_chunk_rows cuts the
+    rows.  ``heavy_bc`` is a broadcast {term_key: n_splits} from the
+    sample pass, or None (every term one split-0 row per batch).
+    Non-default fields emit FIELD-PREFIXED term keys (``field:term``)
+    with that field's own norm — one shared term space carrying
+    per-field statistics (Lucene's per-field terms dicts flattened)."""
 
-    def one_field(pdf: pd.DataFrame, col: str, prefix: str) -> pd.DataFrame | None:
+    def one_field(pdf: pd.DataFrame, col: str, prefix: str, heavy: dict) -> pd.DataFrame | None:
         nlens, codes, uniques = tokenize_series_codes(pdf[col], simple=simple)
         if nlens.sum() == 0:
             return None
@@ -356,88 +336,39 @@ def _tokenize_to_chunk_rows(
         dl_map = pd.Series(nlens, index=doc_ids)
         starts = np.concatenate(([0], np.cumsum(nlens[:-1])))
         flat_pos = np.arange(int(nlens.sum()), dtype=np.int64) - np.repeat(starts, nlens)
-        # term-major (then doc, then position) — each term's postings
-        # become one contiguous run, sliceable into chunk rows
         order = np.lexsort((flat_pos, flat_docs, codes))
         cv, dv, pv = codes[order], flat_docs[order], flat_pos[order]
         gb = np.nonzero((cv[1:] != cv[:-1]) | (dv[1:] != dv[:-1]))[0] + 1
         gstarts = np.concatenate(([0], gb))
         gstarts_ext = np.concatenate((gstarts, [dv.size]))
-        tf = np.diff(gstarts_ext).astype(np.int64)
         gdocs = dv[gstarts]
         gcodes = cv[gstarts]
-        dl = dl_map.reindex(gdocs).to_numpy(dtype=np.int64)
-        norms_buf = encode_lengths(dl).astype(np.uint8).tobytes()
+        pos_buf, pos_bounds = b"", None
         if positions:
             d = np.diff(pv, prepend=0)
             d[gstarts] = pv[gstarts]  # per-(doc,term) segment-first absolute
             pos_buf, pos_offs = varbyte_encode_offsets(d.astype(np.uint64))
-            mv_p = memoryview(pos_buf)
-        # per-term group ranges
+            pos_bounds = pos_offs[gstarts_ext]
         tb = np.nonzero(gcodes[1:] != gcodes[:-1])[0] + 1
-        tstarts = np.concatenate(([0], tb))
-        tends = np.concatenate((tb, [gstarts.size]))
-        heavy = heavy_bc.value if heavy_bc is not None else {}
-        # final row boundaries in group-index space (heavy terms split
-        # at doc-range edges; docs ascend within a term's run)
-        row_terms: list[str] = []
-        row_sids: list[int] = []
-        bs: list[int] = []
-        be: list[int] = []
-        for ts, te in zip(tstarts, tends):
-            term = uniques[gcodes[ts]]
-            ns = heavy.get(term)
-            if not ns:
-                row_terms.append(term)
-                row_sids.append(0)
-                bs.append(ts)
-                be.append(te)
-                continue
-            span = -(-n_rows // ns)
-            sids = gdocs[ts:te] // span
-            ch = np.nonzero(sids[1:] != sids[:-1])[0] + 1
-            ss = np.concatenate(([0], ch))
-            se = np.concatenate((ch, [sids.size]))
-            for a, b in zip(ss, se):
-                row_terms.append(term)
-                row_sids.append(int(sids[a]))
-                bs.append(ts + int(a))
-                be.append(ts + int(b))
-        bs_a = np.asarray(bs, dtype=np.int64)
-        be_a = np.asarray(be, dtype=np.int64)
-        # docs: delta-encoded with an absolute reset at every ROW start
-        # (negative cross-term diffs are always overwritten — rows never
-        # span terms), ONE varbyte pass + per-row slices
-        dd = np.diff(gdocs, prepend=0)
-        dd[bs_a] = gdocs[bs_a]
-        docs_buf, docs_offs = varbyte_encode_offsets(dd.astype(np.uint64))
-        tfs_buf, tfs_offs = varbyte_encode_offsets(tf.astype(np.uint64))
-        mv_d, mv_t = memoryview(docs_buf), memoryview(tfs_buf)
-        docs_col = [bytes(mv_d[docs_offs[a]:docs_offs[b]]) for a, b in zip(bs_a, be_a)]
-        tfs_col = [bytes(mv_t[tfs_offs[a]:tfs_offs[b]]) for a, b in zip(bs_a, be_a)]
-        norms_col = [norms_buf[a:b] for a, b in zip(bs_a, be_a)]
-        if positions:
-            p0 = pos_offs[gstarts_ext[bs_a]]
-            p1 = pos_offs[gstarts_ext[be_a]]
-            pos_col = [bytes(mv_p[a:b]) for a, b in zip(p0, p1)]
-        else:
-            pos_col = [b""] * len(bs)
-        return pd.DataFrame(
-            {
-                "term": row_terms,
-                "split_id": np.asarray(row_sids, dtype=np.int32),
-                "docs": docs_col,
-                "tfs": tfs_col,
-                "norms": norms_col,
-                "pos": pos_col,
-            }
+        tstarts = np.concatenate(([0], tb, [gstarts.size]))
+        return _pack_chunk_rows(
+            uniques[gcodes[tstarts[:-1]]],
+            tstarts,
+            gdocs,
+            np.diff(gstarts_ext),
+            encode_lengths(dl_map.reindex(gdocs).to_numpy(dtype=np.int64)),
+            pos_buf,
+            pos_bounds,
+            heavy,
+            n_rows,
         )
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        heavy = heavy_bc.value if heavy_bc is not None else {}
         for pdf in it:
             frames = []
             for fi, f in enumerate(fields):
-                got = one_field(pdf, f, "" if fi == 0 else f + ":")
+                got = one_field(pdf, f, "" if fi == 0 else f + ":", heavy)
                 if got is not None:
                     frames.append(got)
             if len(frames) == 1:
@@ -450,14 +381,16 @@ def _tokenize_to_chunk_rows(
 
 def _encode_chunk_runs(block_size: int, num_parts: int):
     """mapInPandas over CHUNK_SCHEMA rows clustered by (term, split_id)
-    → POSTINGS_SCHEMA rows, byte-identical to the per-token path's
-    output (same encode_blocks over the same doc-sorted content).
+    → POSTINGS_SCHEMA rows, one per (term, split_id) run.  Blocks come
+    from functions/codec.encode_blocks_vec over the run's doc-sorted
+    postings, which tests/test_functions.py gates bit-identical to the
+    reference per-block encode_blocks.
 
     The whole reduce partition is decoded in a handful of vectorized
     passes (concatenated varbyte streams are self-delimiting, so one
     decode covers every row); the per-run loop touches numpy slices
-    only.  Partition volume is bounded by the shuffle width exactly as
-    the per-token layout was — rows are smaller, not fewer per key."""
+    only.  Partition volume is bounded by the (term, split_id) shuffle
+    width."""
 
     def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         batches = [b for b in it if len(b)]
@@ -482,9 +415,8 @@ def _encode_chunk_runs(block_size: int, num_parts: int):
         has_pos = len(pos_cat) > 0
         if has_pos:
             pb = np.frombuffer(pos_cat, dtype=np.uint8)
-            vends = np.nonzero((pb & 0x80) == 0)[0] + 1  # byte end per varbyte value
-            doc_vend = vends[np.cumsum(tfs_all) - 1]  # end byte of each doc's last value
-            doc_vstart = np.concatenate(([0], doc_vend[:-1]))
+            bounds = _pos_doc_bounds(pos_cat, tfs_all)
+            doc_vstart, doc_vend = bounds[:-1], bounds[1:]
         ch = np.nonzero((terms[1:] != terms[:-1]) | (splits[1:] != splits[:-1]))[0] + 1
         rstarts = np.concatenate(([0], ch))
         rends = np.concatenate((ch, [len(pdf)]))
@@ -542,110 +474,28 @@ def _encode_chunk_runs(block_size: int, num_parts: int):
     return enc
 
 
-def _encode_one(term: str, split_id: int, pdf: pd.DataFrame, block_size: int, num_parts: int) -> dict:
-    docs = pdf["doc_id"].to_numpy(dtype=np.int64)
-    order = np.argsort(docs, kind="stable")
-    docs = docs[order]
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)[order]
-    eb = encode_blocks(
-        docs,
-        tfs,
-        pdf["norm"].to_numpy(dtype=np.int64)[order],
-        block_size=block_size,
+def write_postings(chunks: DataFrame, dest: str, block_size: int, num_parts: int) -> None:
+    """The one posting writer — build, append and compaction all end
+    here: CHUNK_SCHEMA rows → (term, split_id) shuffle → encoded runs
+    (_encode_chunk_runs) → one cheap exchange of the ENCODED rows lays
+    files out by part = md5(term) % P, each file (term, split_id)-
+    sorted."""
+    width = max(num_parts, 2 * chunks.sparkSession.sparkContext.defaultParallelism)
+    (
+        chunks.repartition(width, "term", "split_id")
+        .sortWithinPartitions("term", "split_id")
+        .mapInPandas(_encode_chunk_runs(block_size, num_parts), POSTINGS_SCHEMA)
+        .repartition(num_parts, "part")
+        # LEAD with the partition column: the dynamic-partition writer
+        # requires rows ordered by "part" and otherwise inserts its own
+        # (unstable) sort, which silently destroys the term order inside
+        # each file — with it satisfied, rows really are (term, split)-
+        # sorted on disk and row-group min/max pruning on `term` works
+        .sortWithinPartitions("part", "term", "split_id")
+        .write.mode("overwrite")
+        .partitionBy("part")
+        .parquet(dest)
     )
-    if "pos" in pdf.columns:
-        # rows carry pre-encoded per-doc position payloads (tokenizer) —
-        # a block's payload is just their concatenation in doc order
-        bufs = pdf["pos"].to_numpy()[order]
-        b_pos = [
-            b"".join(bufs[i * block_size : min((i + 1) * block_size, docs.size)])
-            for i in range(len(eb.n))
-        ]
-    else:
-        b_pos = [b""] * len(eb.n)
-    return {
-        "term": term,
-        "split_id": split_id,
-        "part": term_part_py(term, num_parts),
-        "df_row": int(docs.size),
-        "first_doc": int(docs[0]),
-        "last_doc": int(docs[-1]),
-        "b_first": eb.first_doc.tolist(),
-        "b_last": eb.last_doc.tolist(),
-        "b_n": eb.n.tolist(),
-        "b_maxtf": eb.max_tf.tolist(),
-        "b_minnorm": eb.min_norm.tolist(),
-        "b_docs": eb.doc_bytes,
-        "b_tfs": eb.tf_bytes,
-        "b_norms": eb.norm_bytes,
-        "b_pos": b_pos,
-    }
-
-
-def _encode_group(block_size: int, num_parts: int):
-    """applyInPandas over one (term, split_id) group → one posting row.
-    Kept for the incremental/streaming path, where batches are small."""
-
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf["term"].iat[0]
-        split_id = int(pdf["split_id"].iat[0])
-        return pd.DataFrame([_encode_one(term, split_id, pdf, block_size, num_parts)])
-
-    return enc
-
-
-def _encode_runs(block_size: int, num_parts: int):
-    """mapInPandas over partitions hash-clustered by (term, split_id) and
-    sorted so each group is a contiguous run.
-
-    One Arrow stream per PARTITION instead of one pandas call per GROUP:
-    a vocabulary-scale build has 10^4..10^8 mostly-tiny groups, and the
-    per-group Arrow round-trip dominates applyInPandas; run detection via
-    a vectorized group-boundary scan removes that overhead.  Runs spanning
-    Arrow batch boundaries are carried over."""
-
-    def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        out: list[dict] = []
-
-        def flush_complete(pdf: pd.DataFrame, last_incomplete: bool):
-            nonlocal carry
-            keys = pdf["term"].to_numpy()
-            splits = pdf["split_id"].to_numpy()
-            # boundaries where (term, split) changes
-            change = np.nonzero((keys[1:] != keys[:-1]) | (splits[1:] != splits[:-1]))[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(pdf)]))
-            last = len(starts) - 1
-            for gi, (s, e) in enumerate(zip(starts, ends)):
-                if last_incomplete and gi == last:
-                    carry = pdf.iloc[s:e]
-                    return
-                out.append(
-                    _encode_one(keys[s], int(splits[s]), pdf.iloc[s:e], block_size, num_parts)
-                )
-            carry = None
-
-        for pdf in it:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            flush_complete(pdf, last_incomplete=True)
-            if out:
-                yield pd.DataFrame(out)
-                out = []
-        if carry is not None and len(carry):
-            out.append(
-                _encode_one(
-                    carry["term"].iat[0], int(carry["split_id"].iat[0]), carry, block_size, num_parts
-                )
-            )
-        if out:
-            yield pd.DataFrame(out)
-
-    return enc
 
 
 class IndexBuilder:
@@ -709,15 +559,12 @@ class IndexBuilder:
                 man.stages.pop(st)
             man._flush()
 
-        # two distinct width knobs: the WIDE per-token shuffle spreads
-        # over at least num_parts reducers (skew headroom), but SCAN
-        # parallelism floors scale with the session's cores only — a
-        # num_parts floor there would force a full-corpus exchange even
-        # when the input's natural splits already feed every core
-        # (pure overhead, and its map side is as serial as the input)
-        par_target = max(
-            self.num_parts, 2 * self.spark.sparkContext.defaultParallelism
-        )
+        # SCAN parallelism floors scale with the session's cores only
+        # (the wide (term, split) shuffle in write_postings also floors
+        # at num_parts for skew headroom): a num_parts floor here would
+        # force a full-corpus exchange even when the input's natural
+        # splits already feed every core (pure overhead, and its map
+        # side is as serial as the input)
         scan_target = 2 * self.spark.sparkContext.defaultParallelism
 
         import threading
@@ -1077,28 +924,9 @@ class IndexBuilder:
                     ),
                     CHUNK_SCHEMA,
                 )
-                postings = (
-                    chunks.repartition(par_target, "term", "split_id")
-                    .sortWithinPartitions("term", "split_id")
-                    .mapInPandas(
-                        _encode_chunk_runs(self.block_size, self.num_parts),
-                        POSTINGS_SCHEMA,
-                    )
-                )
                 t1 = time.time()
-                (
-                    postings.repartition(self.num_parts, "part")
-                    # LEAD with the partition column: the dynamic-
-                    # partition writer requires rows ordered by "part"
-                    # and otherwise inserts its own (unstable) sort,
-                    # which silently destroyed the term order inside
-                    # each file — with it satisfied, rows really are
-                    # (term, split)-sorted on disk and row-group min/max
-                    # pruning on `term` works as designed
-                    .sortWithinPartitions("part", "term", "split_id")
-                    .write.mode("overwrite")
-                    .partitionBy("part")
-                    .parquet(man.stage_path("postings"))
+                write_postings(
+                    chunks, man.stage_path("postings"), self.block_size, self.num_parts
                 )
                 _tr("postings_write", t1)
                 man.commit_stage("postings", seconds=round(time.time() - t0, 2))

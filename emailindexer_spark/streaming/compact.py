@@ -7,17 +7,21 @@ overhead.  ``compact_index`` merges every term's rows back into
 minimal, freshly skew-split runs — exactly what Lucene's background
 TieredMergePolicy does for segments (reference: Lucene merges implied
 by S6, SURVEY.md §4 "Segment merge policy") — WITHOUT re-tokenizing or
-touching the text:
+touching the text.  Compaction is a rewrite into the format the build
+writes, through the build's own code:
 
-* posting rows are decoded to (term, doc_id, tf, norm[, pos]) entries —
-  the per-doc POSITION payloads are never decoded, only byte-split at
-  doc boundaries (the codec's segmented delta+varbyte encodes each
-  doc's positions independently, so merged runs re-assemble by
-  concatenation, plans/builder._encode_one),
+* posting rows are decoded (the query engine's vectorized
+  ``_decode_frame_postings``) straight back into the build's map-side
+  chunk rows (plans/builder.CHUNK_SCHEMA) by the build's packer
+  (``_pack_chunk_rows``); the per-doc POSITION payloads are never
+  decoded, only byte-split at doc boundaries (the codec's segmented
+  delta+varbyte encodes each doc's positions independently),
 * heavy terms are re-split from EXACT per-term df (summed over rows —
-  no sampling needed here), then the builder's own run encoder
-  (_encode_runs) re-encodes, so compacted output is byte-compatible
-  with a fresh build's,
+  no sampling needed here),
+* the chunk rows go through the build's one posting writer
+  (``write_postings``: (term, split) shuffle → ``_encode_chunk_runs`` →
+  part layout), so compacted output is byte-compatible with a fresh
+  build's,
 * the new postings directory is swapped in with a rename pair +
   leftover repair (``_repair_partial``): a crash mid-swap is healed by
   every entry point that touches the postings dir — the next
@@ -43,48 +47,47 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from emailindexer_spark.functions.codec import decode_block
-from emailindexer_spark.plans.builder import POSTINGS_SCHEMA, _encode_runs
+from emailindexer_spark.plans.builder import (
+    CHUNK_SCHEMA,
+    _pack_chunk_rows,
+    _pos_doc_bounds,
+    write_postings,
+)
+from emailindexer_spark.plans.planner import _decode_frame_postings
 from emailindexer_spark.sources.checkpoint import Manifest
 
-_ENTRY_SCHEMA = "term string, doc_id long, tf int, norm int"
-_ENTRY_SCHEMA_POS = _ENTRY_SCHEMA + ", pos binary"
 
-
-def _decode_entries(positions: bool):
-    """Posting rows → per-doc entries; position payloads byte-split at
-    doc boundaries (varbyte continuation-bit scan), never decoded."""
+def _decode_to_chunk_rows(heavy_bc, n_rows: int):
+    """mapInPandas: posting rows → CHUNK_SCHEMA rows cut at the heavy
+    split edges of ``heavy_bc`` ({term: n_splits}, or None).  A term's
+    rows cover disjoint doc ranges, so ordering a batch's rows by
+    (term, first_doc) makes one vectorized decode come out term-major
+    with docs ascending — the packer's input."""
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        heavy = heavy_bc.value if heavy_bc is not None else {}
         for pdf in it:
-            terms, docs, tfs, norms, poss = [], [], [], [], []
-            for r in pdf.itertuples(index=False):
-                for i in range(len(r.b_docs)):
-                    d, t, n = decode_block(
-                        int(r.b_first[i]), r.b_docs[i], r.b_tfs[i], r.b_norms[i]
-                    )
-                    terms.append(np.full(d.size, r.term, dtype=object))
-                    docs.append(d)
-                    tfs.append(t)
-                    norms.append(n)
-                    if positions:
-                        raw = r.b_pos[i]
-                        b = np.frombuffer(raw, dtype=np.uint8)
-                        ends = np.nonzero((b & 0x80) == 0)[0] + 1
-                        byte_ends = ends[np.cumsum(t) - 1]
-                        byte_starts = np.concatenate(([0], byte_ends[:-1]))
-                        poss.extend(raw[a:z] for a, z in zip(byte_starts, byte_ends))
-            if not docs:
+            if not len(pdf):
                 continue
-            out = {
-                "term": np.concatenate(terms),
-                "doc_id": np.concatenate(docs),
-                "tf": np.concatenate(tfs).astype("int32"),
-                "norm": np.concatenate(norms).astype("int32"),
-            }
-            if positions:
-                out["pos"] = poss
-            yield pd.DataFrame(out)
+            pdf = pdf.sort_values(["term", "first_doc"], ignore_index=True)
+            docs, tfs, norms = _decode_frame_postings(pdf)
+            terms = pdf["term"].to_numpy()
+            row_starts = np.concatenate(([0], np.cumsum(pdf["df_row"].to_numpy(np.int64))))
+            tb = np.flatnonzero(terms[1:] != terms[:-1]) + 1
+            term_rows = np.concatenate(([0], tb, [len(pdf)]))
+            pos_buf = b"".join(b for row in pdf["b_pos"] for b in row)
+            pos_bounds = _pos_doc_bounds(pos_buf, tfs) if pos_buf else None
+            yield _pack_chunk_rows(
+                terms[term_rows[:-1]],
+                row_starts[term_rows],
+                docs,
+                tfs,
+                norms,
+                pos_buf,
+                pos_bounds,
+                heavy,
+                n_rows,
+            )
 
     return gen
 
@@ -117,7 +120,6 @@ def compact_index(
     t0 = time.time()
     num_parts = int(man.params.get("num_parts", 32))
     block_size = int(man.params.get("block_size", 128))
-    positions = bool(man.params.get("positions", False))
     heavy_df_threshold = heavy_df_threshold or int(
         man.params.get("heavy_df_threshold", 100_000)
     )
@@ -126,48 +128,21 @@ def compact_index(
 
     live = man.stage_path("postings")
     p = spark.read.parquet(live)
-    cols = ["term", "b_first", "b_docs", "b_tfs", "b_norms"] + (
-        ["b_pos"] if positions else []
-    )
-    entries = p.select(*cols).mapInPandas(
-        _decode_entries(positions), _ENTRY_SCHEMA_POS if positions else _ENTRY_SCHEMA
-    )
     # EXACT per-term df from the rows being merged — no sampling
-    heavy = (
-        p.groupBy("term")
+    heavy = {
+        r["term"]: -(-int(r["df"]) // split_target)
+        for r in p.groupBy("term")
         .agg(F.sum("df_row").alias("df"))
         .where(F.col("df") > heavy_df_threshold)
-        .withColumn("n_splits", F.ceil(F.col("df") / F.lit(split_target)).cast("int"))
-        .select("term", "n_splits")
-    )
-    rows = entries.join(F.broadcast(heavy), "term", "left").withColumn(
-        "split_id",
-        F.when(F.col("n_splits").isNull(), F.lit(0)).otherwise(
-            F.floor(
-                F.col("doc_id")
-                / F.ceil(F.lit(max(1, n_rows)) / F.col("n_splits")).cast("long")
-            ).cast("int")
-        ),
-    )
-    width = max(num_parts, spark.sparkContext.defaultParallelism * 2)
-    shuffle_cols = ["term", "split_id", "doc_id", "tf", "norm"] + (
-        ["pos"] if positions else []
-    )
-    compacted = (
-        rows.select(*shuffle_cols)
-        .repartition(width, "term", "split_id")
-        .sortWithinPartitions("term", "split_id", "doc_id")
-        .mapInPandas(_encode_runs(block_size, num_parts), POSTINGS_SCHEMA)
-    )
+        .collect()
+    }
+    heavy_bc = spark.sparkContext.broadcast(heavy) if heavy else None
+    chunks = p.select(
+        "term", "first_doc", "df_row", "b_first", "b_docs", "b_tfs", "b_norms", "b_pos"
+    ).mapInPandas(_decode_to_chunk_rows(heavy_bc, n_rows), CHUNK_SCHEMA)
     tmp = live + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    (
-        compacted.repartition(num_parts, "part")
-        .sortWithinPartitions("term", "split_id")
-        .write.mode("overwrite")
-        .partitionBy("part")
-        .parquet(tmp)
-    )
+    write_postings(chunks, tmp, block_size, num_parts)
     # atomic-ish swap with crash repair; term_dict content is invariant
     # (df per (term, part) is preserved by merging), so only postings move
     bak = live + ".bak"

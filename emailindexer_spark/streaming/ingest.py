@@ -3,8 +3,12 @@
 The reference is batch-only — its index rebuild is a full delete+rewrite
 (EmailIndexGenerator.java:45-50).  Our engine adds an append path: new
 transcript turns get docIDs continuing from the current max (exactly
-Lucene's insertion-order docID semantics), are tokenized and encoded
-into NEW posting rows with a fresh ``split_id`` per ingest batch.
+Lucene's insertion-order docID semantics), and their postings are
+written by the build's own pipeline — the map-side chunk tokenizer
+(plans/builder._tokenize_to_chunk_rows, no heavy-term splits) and the
+one posting writer (plans/builder.write_postings) — as NEW posting rows
+with a fresh ``split_id`` per ingest batch, in the same format and
+(term, split_id)-sorted file layout a build writes.
 Because the query engine already handles multi-row posting lists whose
 rows cover disjoint doc ranges (that is what skew splits are), appended
 rows integrate with zero changes to the read path: per-term df sums over
@@ -59,12 +63,10 @@ from pyspark.sql import functions as F
 from emailindexer_spark.functions.smallfloat import norm_byte_expr
 from emailindexer_spark.functions.tokenizer import dl_expr
 from emailindexer_spark.plans.builder import (
-    POSTINGS_SCHEMA,
-    TF_SCHEMA,
-    TF_SCHEMA_POS,
-    _encode_group,
-    _tokenize_to_tf_rows,
+    CHUNK_SCHEMA,
+    _tokenize_to_chunk_rows,
     write_conv_offsets,
+    write_postings,
 )
 from emailindexer_spark.sources.checkpoint import Manifest
 
@@ -254,23 +256,19 @@ def incremental_append(
         ).write.parquet(os.path.join(staging, "doc_stats"))
 
         positions = bool(man.params.get("positions", False))
-        tf_rows = with_ids.select("doc_id", *fields).mapInPandas(
-            _tokenize_to_tf_rows(simple, positions=positions, fields=fields),
-            TF_SCHEMA_POS if positions else TF_SCHEMA,
-        )
+        # the build's tokenizer and posting writer; no heavy map, and
         # every batch becomes one fresh split per term: doc ranges are
         # disjoint from all prior rows by construction (ids ≥ base)
-        postings = (
-            tf_rows.withColumn("split_id", F.lit(batch_seq * 1_000_000))
-            .groupBy("term", "split_id")
-            .applyInPandas(
-                _encode_group(int(man.params.get("block_size", 128)), num_parts),
-                POSTINGS_SCHEMA,
-            )
+        chunks = with_ids.select("doc_id", *fields).mapInPandas(
+            _tokenize_to_chunk_rows(simple, positions, fields, None, 0),
+            CHUNK_SCHEMA,
+        ).withColumn("split_id", F.lit(batch_seq * 1_000_000))
+        write_postings(
+            chunks,
+            os.path.join(staging, "postings"),
+            int(man.params.get("block_size", 128)),
+            num_parts,
         )
-        postings.repartition(max(1, num_parts // 4), "part").write.partitionBy(
-            "part"
-        ).parquet(os.path.join(staging, "postings"))
         # term_dict delta: df per (term, part) sums over rows at read time
         (
             spark.read.parquet(os.path.join(staging, "postings"))

@@ -1,13 +1,17 @@
 """Incremental / Structured Streaming ingest: appended batches integrate
 with the read path and match an oracle built in insertion order."""
 
+import glob
 import os
 import shutil
 import tempfile
 
+import numpy as np
 import pandas as pd
+import pyarrow.parquet as papq
 import pytest
 
+from emailindexer_spark.functions.codec import decode_block, decode_positions
 from emailindexer_spark.oracle import build_oracle_index, search as osearch
 from emailindexer_spark.plans.builder import IndexBuilder
 from emailindexer_spark.plans.planner import SearchEngine
@@ -24,6 +28,41 @@ def corpus3(corpus_pdf):
     b1 = corpus_pdf[corpus_pdf.conv_id.isin(set(c2))]
     b2 = corpus_pdf[~corpus_pdf.conv_id.isin(set(c1) | set(c2))]
     return base, b1, b2
+
+
+def _postings_files(d):
+    return sorted(glob.glob(os.path.join(d, "postings", "part=*", "*.parquet")))
+
+
+def _assert_postings_term_sorted(d, when):
+    """Every postings file is (term, split_id)-sorted — what row-group
+    min/max pruning on ``term`` relies on."""
+    unsorted = []
+    for f in _postings_files(d):
+        t = papq.read_table(f, columns=["term", "split_id"])
+        keys = list(zip(t.column("term").to_pylist(), t.column("split_id").to_pylist()))
+        if keys != sorted(keys):
+            unsorted.append(os.path.relpath(f, d))
+    assert _postings_files(d) and not unsorted, (when, unsorted)
+
+
+def _decoded_postings(d):
+    """One (term, split_id, doc_id, tf, norm, positions) per posting,
+    decoded block by block with the reference codec functions."""
+    out = []
+    cols = ["term", "split_id", "b_first", "b_docs", "b_tfs", "b_norms", "b_pos"]
+    for f in _postings_files(d):
+        for r in papq.read_table(f, columns=cols).to_pylist():
+            for i in range(len(r["b_docs"])):
+                docs, tfs, norms = decode_block(
+                    r["b_first"][i], r["b_docs"][i], r["b_tfs"][i], r["b_norms"][i]
+                )
+                pos = np.split(decode_positions(r["b_pos"][i], tfs), np.cumsum(tfs)[:-1])
+                out += [
+                    (r["term"], r["split_id"], int(doc), int(tf), int(nm), tuple(p.tolist()))
+                    for doc, tf, nm, p in zip(docs, tfs, norms, pos)
+                ]
+    return out
 
 
 @pytest.mark.slow
@@ -45,8 +84,16 @@ def test_incremental_append_matches_oracle(spark, corpus3):
                 chunk[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None)
             )
         ix = build_oracle_index(rows, sort=False)
-        for q, mode in [("qojema", "turns"), ("qojema fuhepi", "turns"), ("fuhepi", "conversations")]:
+        for q, mode in [
+            ("qojema", "turns"),
+            ("qojema fuhepi", "turns"),
+            ("fuhepi", "conversations"),
+            # appended positions: exact and sloppy (reordered) phrases
+            ('"noza guka"', "turns"),
+            ('"guka noza"~2', "turns"),
+        ]:
             exp = osearch(ix, q, k=10, mode=mode)
+            assert exp, (q, mode)
             got = [
                 (r["doc_id"], r["score"])
                 for r in eng.search(q, k=10, mode=mode, use_wand=False).collect()
@@ -280,7 +327,9 @@ def test_compact_merges_ingested_splits(spark, corpus3):
         IndexBuilder(spark, d, num_parts=8, heavy_df_threshold=500, split_target=400).build(
             spark.createDataFrame(base)
         )
+        _assert_postings_term_sorted(d, "build")
         incremental_append(spark, d, spark.createDataFrame(b1))
+        _assert_postings_term_sorted(d, "append")
         incremental_append(spark, d, spark.createDataFrame(b2))
         eng = SearchEngine(spark, d)
         queries = [("qojema", "turns"), ("qojema fuhepi", "turns"), ('"noza guka"', "turns"), ("fuhepi", "conversations")]
@@ -297,9 +346,27 @@ def test_compact_merges_ingested_splits(spark, corpus3):
         multi = p.groupBy("term").count().where("count > 1").count()
         assert multi > 0, "fixture must produce multi-row terms pre-compaction"
         dfs_before = {r["term"]: r["df"] for r in p.groupBy("term").agg(F.sum("df_row").alias("df")).collect()}
+        postings_before = _decoded_postings(d)
 
         man = compact_index(spark, d)
         assert man.stats["compactions"] == 1
+        _assert_postings_term_sorted(d, "compact")
+        # round trip: the same postings and positions, re-cut into splits
+        postings_after = _decoded_postings(d)
+        assert any(x[5] for x in postings_after), "index must carry positions"
+        assert sorted(x[:1] + x[2:] for x in postings_after) == sorted(
+            x[:1] + x[2:] for x in postings_before
+        )
+        # heavy terms are re-split by doc range from their exact df
+        n_rows = int(man.stats["n_rows"])
+        heavy = {t: -(-df // 400) for t, df in dfs_before.items() if df > 500}
+        assert heavy, "fixture must produce heavy terms"
+        bad = [
+            x
+            for x in postings_after
+            if x[0] in heavy and x[1] != x[2] // -(-n_rows // heavy[x[0]])
+        ]
+        assert not bad, bad[:5]
 
         eng2 = SearchEngine(spark, d)
         p2 = spark.read.parquet(os.path.join(d, "postings"))
@@ -322,6 +389,7 @@ def test_compact_merges_ingested_splits(spark, corpus3):
         # ingest AFTER compaction still integrates
         extra = base.head(0)
         incremental_append(spark, d, spark.createDataFrame(b1.assign(conv_id="zz_" + b1["conv_id"])))
+        _assert_postings_term_sorted(d, "append after compact")
         eng3 = SearchEngine(spark, d)
         assert eng3.n_rows == eng2.n_rows + len(b1)
         # crash-repair: a leftover .bak with live missing is restored

@@ -139,40 +139,107 @@ def encode_blocks(
     return EncodedBlocks(first, last, n, mtf, mnorm, dbs, tbs, nbs)
 
 
-def encode_blocks_vec(
-    doc_ids: np.ndarray, tfs: np.ndarray, norms: np.ndarray, block_size: int = BLOCK_SIZE
-) -> EncodedBlocks:
-    """Bit-identical to :func:`encode_blocks`, vectorized across blocks:
-    ONE varbyte pass over the whole run (deltas reset to 0 at block
-    starts, exactly the per-block layout) sliced at block boundaries,
-    and reduceat for the per-block metadata — no per-block Python loop.
-    Equality with encode_blocks is pytest-gated."""
+@dataclass
+class EncodedRuns:
+    """Blocks of many consecutive posting runs, encoded together.
+
+    Per-block metadata arrays as in :class:`EncodedBlocks`; the payloads
+    are three contiguous buffers cut by byte offsets instead of lists of
+    per-block ``bytes`` (block i's doc deltas are
+    ``doc_buf[doc_offs[i]:doc_offs[i + 1]]``, likewise tfs and norms).
+    Run r owns blocks ``run_blocks[r]:run_blocks[r + 1]``; block i owns
+    postings ``block_starts[i]:block_starts[i + 1]``."""
+
+    first_doc: np.ndarray  # int64 per block
+    last_doc: np.ndarray  # int64 per block
+    n: np.ndarray  # int32 per block
+    max_tf: np.ndarray  # int32 per block
+    min_norm: np.ndarray  # int32 per block
+    doc_buf: bytes
+    doc_offs: np.ndarray  # int64, nb + 1
+    tf_buf: bytes
+    tf_offs: np.ndarray  # int64, nb + 1
+    norm_buf: bytes  # one byte per posting: offsets are block_starts
+    run_blocks: np.ndarray  # int64, R + 1
+    block_starts: np.ndarray  # int64, nb + 1
+
+
+def encode_runs_vec(
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    norms: np.ndarray,
+    run_starts: np.ndarray,
+    block_size: int = BLOCK_SIZE,
+) -> EncodedRuns:
+    """Encode consecutive posting runs (run r = postings
+    ``run_starts[r]:run_starts[r + 1]``, the last run ending at the end;
+    doc_ids strictly increasing within each run) into blocks, each run
+    cut exactly as :func:`encode_blocks` cuts it alone: ONE varbyte pass
+    over every run's deltas (reset to 0 at each block start) and one
+    ``reduceat`` per metadata column — no per-run or per-block Python
+    loop.  Equality with per-run encode_blocks is pytest-gated."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
     norms = np.asarray(norms, dtype=np.int64)
+    rs = np.asarray(run_starts, dtype=np.int64)
     n = doc_ids.size
-    if n == 0:
-        return encode_blocks(doc_ids, tfs, norms, block_size)
-    if (np.diff(doc_ids) <= 0).any():
-        raise ValueError("doc_ids must be strictly increasing within a posting run")
-    nb = -(-n // block_size)
-    bstarts = np.arange(nb, dtype=np.int64) * block_size
-    bends = np.minimum(bstarts + block_size, n)
-    first = doc_ids[bstarts]
-    last = doc_ids[bends - 1]
-    cnt = (bends - bstarts).astype(np.int32)
-    mtf = np.maximum.reduceat(tfs, bstarts).astype(np.int32)
-    mnorm = np.minimum.reduceat(norms, bstarts).astype(np.int32)
+    rlen = np.diff(np.append(rs, n))
+    if rs.size and (rs[0] != 0 or (rlen <= 0).any()):
+        raise ValueError("posting runs must start at 0 and be non-empty")
+    if (rs.size == 0) != (n == 0):
+        raise ValueError("postings must be covered by runs")
     deltas = np.diff(doc_ids, prepend=0)
+    inner = np.ones(n, dtype=bool)
+    inner[rs] = False
+    if (deltas[inner] <= 0).any():
+        raise ValueError("doc_ids must be strictly increasing within a posting run")
+    nbr = -(-rlen // block_size)  # blocks per run
+    run_blocks = np.concatenate(([0], np.cumsum(nbr)))
+    nb = int(run_blocks[-1])
+    run_of_block = np.repeat(np.arange(rs.size), nbr)
+    k = np.arange(nb, dtype=np.int64) - run_blocks[run_of_block]
+    bstarts = rs[run_of_block] + k * block_size
+    bends = np.minimum(bstarts + block_size, (rs + rlen)[run_of_block])
+    block_starts = np.append(bstarts, n)
     deltas[bstarts] = 0  # per-block first delta is 0 (first_doc is stored)
     dbuf, doffs = varbyte_encode_offsets(deltas.astype(np.uint64))
     tbuf, toffs = varbyte_encode_offsets(tfs.astype(np.uint64))
-    mv_d, mv_t = memoryview(dbuf), memoryview(tbuf)
-    nbytes = norms.astype(np.uint8).tobytes()
-    dbs = [bytes(mv_d[doffs[a]:doffs[b]]) for a, b in zip(bstarts, bends)]
-    tbs = [bytes(mv_t[toffs[a]:toffs[b]]) for a, b in zip(bstarts, bends)]
-    nbs = [nbytes[a:b] for a, b in zip(bstarts, bends)]
-    return EncodedBlocks(first, last, cnt, mtf, mnorm, dbs, tbs, nbs)
+    return EncodedRuns(
+        doc_ids[bstarts],
+        doc_ids[bends - 1],
+        (bends - bstarts).astype(np.int32),
+        np.maximum.reduceat(tfs, bstarts).astype(np.int32) if nb else np.empty(0, np.int32),
+        np.minimum.reduceat(norms, bstarts).astype(np.int32) if nb else np.empty(0, np.int32),
+        dbuf,
+        doffs[block_starts],
+        tbuf,
+        toffs[block_starts],
+        norms.astype(np.uint8).tobytes(),
+        run_blocks,
+        block_starts,
+    )
+
+
+def encode_blocks_vec(
+    doc_ids: np.ndarray, tfs: np.ndarray, norms: np.ndarray, block_size: int = BLOCK_SIZE
+) -> EncodedBlocks:
+    """Bit-identical to :func:`encode_blocks`: :func:`encode_runs_vec`
+    over a single run, its buffers sliced into per-block ``bytes``."""
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    er = encode_runs_vec(
+        doc_ids, tfs, norms, np.zeros(min(doc_ids.size, 1), np.int64), block_size
+    )
+    cut = lambda buf, offs: [buf[a:b] for a, b in zip(offs[:-1], offs[1:])]
+    return EncodedBlocks(
+        er.first_doc,
+        er.last_doc,
+        er.n,
+        er.max_tf,
+        er.min_norm,
+        cut(er.doc_buf, er.doc_offs),
+        cut(er.tf_buf, er.tf_offs),
+        cut(er.norm_buf, er.block_starts),
+    )
 
 
 def decode_block(

@@ -61,6 +61,30 @@ def assign_doc_ids(
     return out
 
 
+def conv_offsets(conv_counts: pd.DataFrame) -> dict:
+    """Driver-side prefix sum over per-conversation ``(conv_id, n_turns,
+    _sparse)`` rows (``_sparse`` = 1 when the conversation's turn_idx
+    is not dense from 0) → ``conv_ids`` (sorted object array),
+    ``offsets`` / ``n_turns`` (int64: a conversation's doc ids start at
+    its offset), ``dense`` and ``total``."""
+    if conv_counts["conv_id"].isna().any():
+        # a null conv_id would silently vanish in the offsets join
+        # (inner join on null never matches) — fail loudly instead
+        raise ValueError("null conv_id in transcripts: every row needs a conv_id")
+    # Python str sort == Spark UTF8 binary order (UTF-8 byte order
+    # preserves code-point order), so these offsets match the
+    # distributed range-partitioned cumsum exactly
+    head = conv_counts.sort_values("conv_id", kind="stable", ignore_index=True)
+    n = head["n_turns"].to_numpy(dtype=np.int64)
+    return {
+        "conv_ids": head["conv_id"].to_numpy(),
+        "offsets": np.concatenate(([0], np.cumsum(n[:-1]))) if n.size else n,
+        "n_turns": n,
+        "dense": not head["_sparse"].fillna(0).astype(np.int64).any(),
+        "total": int(n.sum()),
+    }
+
+
 def assign_doc_ids_with_total(
     df: DataFrame,
     method: str = "two_phase",
@@ -133,35 +157,15 @@ def assign_doc_ids_with_total(
     # corpora, where the build is hours anyway).
     head = conv_counts.limit(max_broadcast_convs + 1).toPandas()  # Arrow
     if len(head) <= max_broadcast_convs:
-        if head["conv_id"].isna().any():
-            # a null conv_id would silently vanish in the offsets join
-            # (inner join on null never matches) — fail loudly instead
-            raise ValueError("null conv_id in transcripts: every row needs a conv_id")
-        # Python str sort == Spark UTF8 binary order (UTF-8 byte order
-        # preserves code-point order), so these offsets match the
-        # distributed range-partitioned cumsum exactly
-        head = head.sort_values("conv_id", kind="stable", ignore_index=True)
-        dense = not head["_sparse"].fillna(0).astype(np.int64).any()
-        n = head["n_turns"].to_numpy(dtype=np.int64)
-        offs_np = (
-            np.concatenate(([0], np.cumsum(n[:-1])))
-            if n.size
-            else np.array([], dtype=np.int64)
-        )
-        acc = int(n.sum())
+        oo = conv_offsets(head)
+        acc = oo["total"]
         if offsets_out is not None:
-            offsets_out.update(
-                conv_ids=head["conv_id"].to_numpy(),
-                offsets=offs_np,
-                n_turns=n,
-                dense=bool(dense),
-                total=acc,
-            )
+            offsets_out.update(oo)
         offsets = spark.createDataFrame(
-            pd.DataFrame({"conv_id": head["conv_id"], "conv_offset": offs_np}),
+            pd.DataFrame({"conv_id": oo["conv_ids"], "conv_offset": oo["offsets"]}),
             "conv_id string, conv_offset long",
         )
-        if dense:
+        if oo["dense"]:
             out = df.join(F.broadcast(offsets), "conv_id").withColumn(
                 "doc_id", (F.col("conv_offset") + F.col("turn_idx")).cast("long")
             )

@@ -65,12 +65,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emailindexer_spark.functions.codec import (
     BLOCK_SIZE,
-    encode_blocks_vec,
+    encode_runs_vec,
     varbyte_decode,
     varbyte_encode_offsets,
 )
@@ -91,6 +92,21 @@ POSTINGS_SCHEMA = (
     "b_first array<long>, b_last array<long>, b_n array<int>, b_maxtf array<int>, "
     "b_minnorm array<int>, b_docs array<binary>, b_tfs array<binary>, b_norms array<binary>, "
     "b_pos array<binary>"
+)
+#: POSTINGS_SCHEMA as Arrow types: the encoder's output, and the file
+#: schema of a postings part (without ``part``)
+POSTINGS_ARROW_SCHEMA = pa.schema(
+    [
+        ("term", pa.string()),
+        ("split_id", pa.int32()),
+        ("part", pa.int32()),
+        ("df_row", pa.int64()),
+        ("first_doc", pa.int64()),
+        ("last_doc", pa.int64()),
+        *((c, pa.list_(pa.int64())) for c in ("b_first", "b_last")),
+        *((c, pa.list_(pa.int32())) for c in ("b_n", "b_maxtf", "b_minnorm")),
+        *((c, pa.list_(pa.binary())) for c in ("b_docs", "b_tfs", "b_norms", "b_pos")),
+    ]
 )
 
 #: SPARK_GRAFT_BUILD_TRACE=1 prints per-phase wall times — the
@@ -379,97 +395,132 @@ def _tokenize_to_chunk_rows(
     return gen
 
 
-def _encode_chunk_runs(block_size: int, num_parts: int):
-    """mapInPandas over CHUNK_SCHEMA rows clustered by (term, split_id)
-    → POSTINGS_SCHEMA rows, one per (term, split_id) run.  Blocks come
-    from functions/codec.encode_blocks_vec over the run's doc-sorted
-    postings, which tests/test_functions.py gates bit-identical to the
-    reference per-block encode_blocks.
+def _binary_cuts(buf, offs: np.ndarray) -> pa.Array:
+    """``binary`` array whose value i is ``buf[offs[i]:offs[i + 1]]``,
+    built on the buffer itself (no per-value ``bytes`` objects)."""
+    rel = (offs - offs[0]).astype(np.int32)
+    data = pa.py_buffer(buf).slice(int(offs[0]), int(rel[-1]))
+    return pa.Array.from_buffers(pa.binary(), rel.size - 1, [None, pa.py_buffer(rel), data])
 
-    The whole reduce partition is decoded in a handful of vectorized
-    passes (concatenated varbyte streams are self-delimiting, so one
-    decode covers every row); the per-run loop touches numpy slices
-    only.  Partition volume is bounded by the (term, split_id) shuffle
-    width."""
 
-    def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        batches = [b for b in it if len(b)]
-        if not batches:
-            return
-        pdf = pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]
-        terms = pdf["term"].to_numpy()
-        splits = pdf["split_id"].to_numpy()
-        norms_blobs = pdf["norms"].to_numpy()
-        ndocs = np.fromiter((len(x) for x in norms_blobs), np.int64, count=len(pdf))
-        row_ends = np.cumsum(ndocs)
-        row_starts = row_ends - ndocs
-        docs_all = varbyte_decode(b"".join(pdf["docs"].to_numpy())).view(np.int64)
-        # undo the per-row delta coding: cumsum, then subtract the prefix
-        # that leaked across row boundaries (segment-cumsum trick)
-        cs = np.cumsum(docs_all)
-        offs = np.concatenate(([0], cs[row_starts[1:] - 1])) if len(pdf) > 1 else np.zeros(1, np.int64)
-        docs_abs = cs - np.repeat(offs, ndocs)
-        tfs_all = varbyte_decode(b"".join(pdf["tfs"].to_numpy())).view(np.int64)
-        norms_all = np.frombuffer(b"".join(norms_blobs), dtype=np.uint8).astype(np.int64)
-        pos_cat = b"".join(pdf["pos"].to_numpy())
-        has_pos = len(pos_cat) > 0
+def _binary_values(col) -> tuple[np.ndarray, np.ndarray]:
+    """(concatenated bytes as uint8, per-value lengths) of a binary
+    column: Arrow keeps the values back to back, so this is a view."""
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    otype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _validity, obuf, dbuf = arr.buffers()
+    offs = np.frombuffer(obuf, dtype=otype)[arr.offset : arr.offset + len(arr) + 1]
+    data = np.frombuffer(dbuf, dtype=np.uint8) if dbuf is not None else np.empty(0, np.uint8)
+    return data[offs[0] : offs[-1]], np.diff(offs).astype(np.int64)
+
+
+def _encode_chunk_table(
+    chunks: pa.Table, block_size: int, num_parts: int, max_rows: int = 2048
+) -> Iterator[pa.RecordBatch]:
+    """CHUNK_SCHEMA rows clustered by (term, split_id) → POSTINGS_SCHEMA
+    record batches of up to ``max_rows`` runs, one row per (term,
+    split_id) run, in input order.
+
+    Every pass covers the whole input: one varbyte decode per payload
+    column (concatenated varbyte streams are self-delimiting), one
+    lexsort putting each run's postings in doc order (skipped when the
+    chunks already arrive that way), one functions/codec.encode_runs_vec
+    call for all blocks of all runs (tests/test_functions.py gates it
+    against the per-block reference encode_blocks), one position-byte
+    gather; output columns are Arrow arrays cut from those buffers by
+    offsets — no Python loop over runs, blocks or postings."""
+    if not chunks.num_rows:
+        return
+    terms = chunks.column("term").to_numpy(zero_copy_only=False)
+    splits = chunks.column("split_id").to_numpy(zero_copy_only=False).astype(np.int64)
+    norms_all, ndocs = _binary_values(chunks.column("norms"))
+    norms_all = norms_all.astype(np.int64)
+    row_starts = np.concatenate(([0], np.cumsum(ndocs)))
+    docs_raw, _ = _binary_values(chunks.column("docs"))
+    docs_all = varbyte_decode(docs_raw).view(np.int64)
+    # undo the per-row delta coding: cumsum, then subtract the prefix
+    # that leaked across row boundaries (segment-cumsum trick)
+    cs = np.cumsum(docs_all)
+    docs_abs = cs - np.repeat(np.concatenate(([0], cs[row_starts[1:-1] - 1])), ndocs)
+    tfs_raw, _ = _binary_values(chunks.column("tfs"))
+    tfs_all = varbyte_decode(tfs_raw).view(np.int64)
+    pb, _ = _binary_values(chunks.column("pos"))
+    has_pos = pb.size > 0
+    ch = np.flatnonzero((terms[1:] != terms[:-1]) | (splits[1:] != splits[:-1])) + 1
+    rstarts = np.concatenate(([0], ch))  # chunk row of each run start
+    post_rs = row_starts[rstarts]  # posting index of each run start
+    n_post = int(row_starts[-1])
+    rlen = np.diff(np.append(post_rs, n_post))
+    bounds = _pos_doc_bounds(pb, tfs_all) if has_pos else None
+    # a run's chunk rows carry disjoint doc sets in any order: sort
+    # each run's postings by doc (one lexsort, only when needed)
+    run_start = np.zeros(n_post, dtype=bool)
+    run_start[post_rs] = True
+    if not ((np.diff(docs_abs) > 0) | run_start[1:]).all():
+        order = np.lexsort((docs_abs, np.cumsum(run_start)))
+        docs_abs, tfs_all, norms_all = docs_abs[order], tfs_all[order], norms_all[order]
         if has_pos:
-            pb = np.frombuffer(pos_cat, dtype=np.uint8)
-            bounds = _pos_doc_bounds(pos_cat, tfs_all)
-            doc_vstart, doc_vend = bounds[:-1], bounds[1:]
-        ch = np.nonzero((terms[1:] != terms[:-1]) | (splits[1:] != splits[:-1]))[0] + 1
-        rstarts = np.concatenate(([0], ch))
-        rends = np.concatenate((ch, [len(pdf)]))
-        out: list[dict] = []
-        for rs, re_ in zip(rstarts, rends):
-            a, b = int(row_starts[rs]), int(row_ends[re_ - 1])
-            d = docs_abs[a:b]
-            o = np.argsort(d, kind="stable")
-            d = d[o]
-            t = tfs_all[a:b][o]
-            n = norms_all[a:b][o]
-            eb = encode_blocks_vec(d, t, n, block_size=block_size)
-            if has_pos:
-                s_ = doc_vstart[a:b][o]
-                lens = doc_vend[a:b][o] - s_
-                tot = int(lens.sum())
-                if tot:
-                    cl = np.concatenate(([0], np.cumsum(lens)))
-                    gather = np.repeat(s_ - cl[:-1], lens) + np.arange(tot, dtype=np.int64)
-                    ordered = pb[gather]
-                    b_pos = [
-                        ordered[cl[i * block_size]:cl[min((i + 1) * block_size, d.size)]].tobytes()
-                        for i in range(len(eb.n))
-                    ]
-                else:
-                    b_pos = [b""] * len(eb.n)
-            else:
-                b_pos = [b""] * len(eb.n)
-            term = terms[rs]
-            out.append(
-                {
-                    "term": term,
-                    "split_id": int(splits[rs]),
-                    "part": term_part_py(term, num_parts),
-                    "df_row": int(d.size),
-                    "first_doc": int(d[0]),
-                    "last_doc": int(d[-1]),
-                    "b_first": eb.first_doc.tolist(),
-                    "b_last": eb.last_doc.tolist(),
-                    "b_n": eb.n.tolist(),
-                    "b_maxtf": eb.max_tf.tolist(),
-                    "b_minnorm": eb.min_norm.tolist(),
-                    "b_docs": eb.doc_bytes,
-                    "b_tfs": eb.tf_bytes,
-                    "b_norms": eb.norm_bytes,
-                    "b_pos": b_pos,
-                }
+            s_ = bounds[:-1][order]
+            lens = bounds[1:][order] - s_
+            bounds = np.concatenate(([0], np.cumsum(lens)))
+            pb = pb[np.repeat(s_ - bounds[:-1], lens) + np.arange(int(bounds[-1]), dtype=np.int64)]
+    er = encode_runs_vec(docs_abs, tfs_all, norms_all, post_rs, block_size)
+    if has_pos:
+        pos_buf, pos_offs = pb, bounds[er.block_starts]
+    else:
+        pos_buf, pos_offs = b"", np.zeros(er.n.size + 1, np.int64)
+    rb = er.run_blocks
+    first_doc = docs_abs[post_rs]
+    last_doc = docs_abs[post_rs + rlen - 1]
+    run_terms = terms[rstarts]
+    parts = np.fromiter(
+        (term_part_py(t, num_parts) for t in run_terms), np.int32, count=run_terms.size
+    )
+    for r0 in range(0, rstarts.size, max_rows):
+        r1 = min(r0 + max_rows, rstarts.size)
+        b0, b1 = int(rb[r0]), int(rb[r1])
+        loffs = pa.py_buffer((rb[r0 : r1 + 1] - b0).astype(np.int32))
+
+        def blocks(values: pa.Array) -> pa.Array:
+            return pa.Array.from_buffers(
+                pa.list_(values.type), r1 - r0, [None, loffs], children=[values]
             )
-            if len(out) >= 2048:
-                yield pd.DataFrame(out)
-                out = []
-        if out:
-            yield pd.DataFrame(out)
+
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(run_terms[r0:r1], pa.string()),
+                pa.array(splits[rstarts[r0:r1]], pa.int32()),
+                pa.array(parts[r0:r1], pa.int32()),
+                pa.array(rlen[r0:r1], pa.int64()),
+                pa.array(first_doc[r0:r1], pa.int64()),
+                pa.array(last_doc[r0:r1], pa.int64()),
+                blocks(pa.array(er.first_doc[b0:b1], pa.int64())),
+                blocks(pa.array(er.last_doc[b0:b1], pa.int64())),
+                blocks(pa.array(er.n[b0:b1], pa.int32())),
+                blocks(pa.array(er.max_tf[b0:b1], pa.int32())),
+                blocks(pa.array(er.min_norm[b0:b1], pa.int32())),
+                blocks(_binary_cuts(er.doc_buf, er.doc_offs[b0 : b1 + 1])),
+                blocks(_binary_cuts(er.tf_buf, er.tf_offs[b0 : b1 + 1])),
+                blocks(_binary_cuts(er.norm_buf, er.block_starts[b0 : b1 + 1])),
+                blocks(_binary_cuts(pos_buf, pos_offs[b0 : b1 + 1])),
+            ],
+            schema=POSTINGS_ARROW_SCHEMA,
+        )
+
+
+def _encode_chunk_runs(block_size: int, num_parts: int):
+    """mapInArrow over CHUNK_SCHEMA rows clustered by (term, split_id)
+    → POSTINGS_SCHEMA rows, one per (term, split_id) run: the whole
+    reduce partition goes through _encode_chunk_table at once (a run's
+    chunk rows may span input batches).  Partition volume is bounded by
+    the (term, split_id) shuffle width."""
+
+    def enc(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = [b for b in it if b.num_rows]
+        if batches:
+            yield from _encode_chunk_table(
+                pa.Table.from_batches(batches), block_size, num_parts
+            )
 
     return enc
 
@@ -484,7 +535,7 @@ def write_postings(chunks: DataFrame, dest: str, block_size: int, num_parts: int
     (
         chunks.repartition(width, "term", "split_id")
         .sortWithinPartitions("term", "split_id")
-        .mapInPandas(_encode_chunk_runs(block_size, num_parts), POSTINGS_SCHEMA)
+        .mapInArrow(_encode_chunk_runs(block_size, num_parts), POSTINGS_SCHEMA)
         .repartition(num_parts, "part")
         # LEAD with the partition column: the dynamic-partition writer
         # requires rows ordered by "part" and otherwise inserts its own

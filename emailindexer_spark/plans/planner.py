@@ -840,6 +840,39 @@ def _flatten_shoulds(ast: Node) -> Node:
     return Bool(boost=ast.boost, clauses=out)
 
 
+def footer_schema(table_dir: str):
+    """The data schema ``spark.read.parquet(table_dir)`` infers, derived
+    the way Spark derives it but from ONE footer read on the driver,
+    with no schema-inference job: the first data file in path order
+    (``.``/``_`` names skipped), and the Spark schema its writer stored
+    in the footer, else its Parquet schema converted (naive timestamps
+    as NTZ).  Given this as the read schema, Spark makes every field
+    nullable and appends the ``key=value`` directory partition columns
+    from its file listing, as inference does.  None when there is no
+    file or a type does not convert: callers let Spark infer instead."""
+    import json
+
+    import pyarrow.parquet as papq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    files = []
+    for root, dirs, names in os.walk(table_dir):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+        files += [os.path.join(root, f) for f in names if not f.startswith((".", "_"))]
+    if not files:
+        return None
+    first = min(files)
+    try:
+        meta = papq.read_metadata(first).metadata or {}
+        spark_json = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+        if spark_json is not None:
+            return StructType.fromJson(json.loads(spark_json))
+        return from_arrow_schema(papq.read_schema(first), prefer_timestamp_ntz=True)
+    except (ValueError, TypeError, OSError):
+        return None
+
+
 class SearchEngine:
     """Query engine over an index directory built by plans/builder.py."""
 
@@ -903,14 +936,15 @@ class SearchEngine:
             )
             for f, v in fs.items()
         }
-        self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-        self.doc_stats = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
+        # explicit footer schemas: opening the engine runs no Spark job
+        self.postings = self._read_table("postings")
+        self.doc_stats = self._read_table("doc_stats")
         self._doc_index: DataFrame | None = None
         # sorted term dictionary (term, part, df): prefix expansion +
         # df lookups scan the vocabulary, never the postings payloads
         td_path = os.path.join(index_dir, "term_dict")
         self.term_dict: DataFrame | None = (
-            spark.read.parquet(td_path) if os.path.isdir(td_path) else None
+            self._read_table("term_dict") if os.path.isdir(td_path) else None
         )
         # driver-side df cache (Lucene keeps its term dictionary in
         # memory too): terms resolve once per engine instance; None
@@ -933,6 +967,12 @@ class SearchEngine:
         # searchsorted — no doc_stats join per query
         self._off_bc = None
         self._load_conv_offsets()
+
+    def _read_table(self, name: str) -> DataFrame:
+        path = os.path.join(self.index_dir, name)
+        schema = footer_schema(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
 
     def _load_conv_offsets(self) -> None:
         """Load the optional conv_offsets fast-path artifact: the build's
@@ -1097,7 +1137,7 @@ class SearchEngine:
     @property
     def doc_index(self) -> DataFrame:
         if self._doc_index is None:
-            self._doc_index = self.spark.read.parquet(os.path.join(self.index_dir, "doc_index"))
+            self._doc_index = self._read_table("doc_index")
         return self._doc_index
 
     # ------------------------------------------------------------ postings access

@@ -17,13 +17,19 @@ def spark():
 @pytest.fixture(scope="session")
 def spark_jobs(spark):
     """``spark_jobs(fn)``: the Spark job ids started while ``fn`` runs."""
+    import itertools
+
     sc = spark.sparkContext
+    calls = itertools.count()
 
     def jobs(fn):
-        sc.setJobGroup("job_probe", "job_probe")
+        # a group per call: the status tracker keeps a group's jobs
+        # after the call that started them
+        group = f"job_probe_{next(calls)}"
+        sc.setJobGroup(group, group)
         try:
             fn()
-            return list(sc.statusTracker().getJobIdsForGroup("job_probe"))
+            return list(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setJobGroup(None, None)
 

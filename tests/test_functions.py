@@ -478,6 +478,149 @@ class TestFastTokenizerCodes:
             assert a.norm_bytes == b.norm_bytes
 
 
+class TestRunEncoder:
+    """functions/codec.encode_runs_vec (every run of a reduce partition
+    in one pass) and the posting encoder built on it
+    (plans/builder._encode_chunk_table) must equal the per-run,
+    per-block reference encode_blocks / encode_positions."""
+
+    @staticmethod
+    def _ref_blocks(d, tfs, norms, bs):
+        eb = encode_blocks(d, tfs, norms, block_size=bs)
+        return (
+            eb.first_doc.tolist(),
+            eb.last_doc.tolist(),
+            eb.n.tolist(),
+            eb.max_tf.tolist(),
+            eb.min_norm.tolist(),
+            eb.doc_bytes,
+            eb.tf_bytes,
+            eb.norm_bytes,
+        )
+
+    @settings(max_examples=40, deadline=None)
+    @given(
+        st.lists(
+            st.one_of(
+                # lengths on the block edges: 1, block_size, block_size + 1
+                st.sampled_from([1, 4, 5, 8, 9]).map(lambda n: list(range(7, 7 + 3 * n, 3))),
+                st.lists(st.integers(0, 1 << 40), min_size=1, max_size=60, unique=True),
+            ),
+            min_size=1,
+            max_size=8,
+        ),
+        st.integers(1, 9),
+    )
+    def test_encode_runs_vec_equals_per_run(self, runs, tf_mod):
+        from emailindexer_spark.functions.codec import encode_runs_vec
+
+        runs = [np.sort(np.asarray(r, dtype=np.int64)) for r in runs]
+        d = np.concatenate(runs)
+        tfs = (d % tf_mod + 1).astype(np.int64)
+        norms = (d % 256).astype(np.int64)
+        starts = np.cumsum([0] + [r.size for r in runs[:-1]])
+        for bs in (4, 128):
+            er = encode_runs_vec(d, tfs, norms, starts, block_size=bs)
+            for r, (a, b) in enumerate(zip(starts, np.append(starts[1:], d.size))):
+                blk = slice(er.run_blocks[r], er.run_blocks[r + 1])
+                bo = er.block_starts[blk.start : blk.stop + 1]
+                assert bo[0] == a and bo[-1] == b
+                got = (
+                    er.first_doc[blk].tolist(),
+                    er.last_doc[blk].tolist(),
+                    er.n[blk].tolist(),
+                    er.max_tf[blk].tolist(),
+                    er.min_norm[blk].tolist(),
+                    [er.doc_buf[x:y] for x, y in zip(er.doc_offs[blk.start:blk.stop], er.doc_offs[blk.start + 1:blk.stop + 1])],
+                    [er.tf_buf[x:y] for x, y in zip(er.tf_offs[blk.start:blk.stop], er.tf_offs[blk.start + 1:blk.stop + 1])],
+                    [er.norm_buf[x:y] for x, y in zip(bo[:-1], bo[1:])],
+                )
+                assert got == self._ref_blocks(d[a:b], tfs[a:b], norms[a:b], bs)
+
+    def test_encode_runs_vec_rejects_bad_runs(self):
+        from emailindexer_spark.functions.codec import encode_runs_vec
+
+        one = np.ones(3, np.int64)
+        with pytest.raises(ValueError, match="strictly increasing"):
+            encode_runs_vec(np.array([1, 5, 5]), one, one, np.array([0]))
+        with pytest.raises(ValueError, match="non-empty"):
+            encode_runs_vec(np.array([1, 5, 6]), one, one, np.array([0, 3]))
+        # a run boundary may step back in doc order
+        er = encode_runs_vec(np.array([4, 9, 2]), one, one, np.array([0, 2]), block_size=1)
+        assert er.first_doc.tolist() == [4, 9, 2] and er.run_blocks.tolist() == [0, 2, 3]
+
+    @pytest.mark.parametrize("positions", [True, False])
+    def test_chunk_encoder_equals_per_run_reference(self, positions):
+        """Chunk rows of one (term, split) run arrive in interleaved doc
+        order (several map batches); runs have 1, block_size and
+        block_size + 1 postings."""
+        import pyarrow as pa
+
+        from emailindexer_spark.functions.codec import (
+            encode_positions,
+            varbyte_encode,
+        )
+        from emailindexer_spark.plans.builder import (
+            _encode_chunk_table,
+            term_part_py,
+        )
+
+        bs, rng = 4, np.random.default_rng(5)
+        runs = {}  # (term, split) -> {doc: (tf, norm, positions)}
+        for j, n in enumerate([1, bs, bs + 1, 3 * bs + 2, 1, 9]):
+            docs = np.sort(rng.choice(10_000, size=n, replace=False))
+            post = {}
+            for doc in docs:
+                tf = int(rng.integers(1, 4))
+                pos = np.sort(rng.choice(300, size=tf, replace=False))
+                post[int(doc)] = (tf, int(rng.integers(0, 256)), pos)
+            runs[(f"t{j // 2}", j % 2)] = post
+
+        def chunk(term, split, docs, post):
+            tf = np.array([post[x][0] for x in docs])
+            return {
+                "term": term,
+                "split_id": split,
+                "docs": varbyte_encode(np.diff(docs, prepend=0).astype(np.uint64)),
+                "tfs": varbyte_encode(tf.astype(np.uint64)),
+                "norms": bytes(post[x][1] for x in docs),
+                "pos": b"".join(encode_positions(post[x][2], [post[x][0]]) for x in docs)
+                if positions
+                else b"",
+            }
+
+        rows = []
+        for (term, split), post in runs.items():
+            docs = np.array(sorted(post))
+            # every other doc in one chunk row, the rest in another,
+            # the later docs first: the run's rows interleave in doc order
+            for sub in (docs[1::2], docs[0::2]):
+                if sub.size:
+                    rows.append(chunk(term, split, sub, post))
+        got = pa.Table.from_batches(
+            list(_encode_chunk_table(pa.Table.from_pylist(rows), bs, 8, max_rows=4))
+        ).to_pylist()
+        assert [(r["term"], r["split_id"]) for r in got] == list(runs)
+        for r, ((term, split), post) in zip(got, runs.items()):
+            docs = np.array(sorted(post))
+            tfs = np.array([post[x][0] for x in docs])
+            norms = np.array([post[x][1] for x in docs])
+            ref = self._ref_blocks(docs, tfs, norms, bs)
+            assert (r["b_first"], r["b_last"], r["b_n"], r["b_maxtf"], r["b_minnorm"]) == ref[:5]
+            assert (r["b_docs"], r["b_tfs"], r["b_norms"]) == ref[5:]
+            assert r["part"] == term_part_py(term, 8)
+            assert (r["df_row"], r["first_doc"], r["last_doc"]) == (docs.size, docs[0], docs[-1])
+            want_pos = [
+                encode_positions(
+                    np.concatenate([post[x][2] for x in docs[i : i + bs]]), tfs[i : i + bs]
+                )
+                if positions
+                else b""
+                for i in range(0, docs.size, bs)
+            ]
+            assert r["b_pos"] == want_pos
+
+
 class TestFrameDecode:
     """The executor-lifted frame decoders (planner._decode_frame_*)
     must equal the per-block reference decode for ANY mix of terms,

@@ -30,6 +30,17 @@ def corpus3(corpus_pdf):
     return base, b1, b2
 
 
+@pytest.fixture(params=["driver", "spark"])
+def append_path(request, monkeypatch):
+    """Run the test's appends on one path: the driver path takes every
+    batch the tests use; a negative cap forces the Spark pipeline."""
+    import emailindexer_spark.streaming.ingest as ING
+
+    if request.param == "spark":
+        monkeypatch.setattr(ING, "DRIVER_APPEND_MAX_TURNS", -1)
+    return request.param
+
+
 def _postings_files(d):
     return sorted(glob.glob(os.path.join(d, "postings", "part=*", "*.parquet")))
 
@@ -106,7 +117,7 @@ def test_incremental_append_matches_oracle(spark, corpus3):
 
 
 @pytest.mark.slow
-def test_manifest_first_append_visibility(spark, spark_jobs, corpus3):
+def test_manifest_first_append_visibility(spark, spark_jobs, corpus3, append_path):
     # MANIFEST-FIRST publish: (1) a reader opening the index after the
     # batch's files were moved into the live tables but BEFORE the
     # manifest commit sees exactly the pre-append corpus (the files are
@@ -163,6 +174,7 @@ def test_manifest_first_append_visibility(spark, spark_jobs, corpus3):
         assert snap(mid) == pre, "mid-append reader must see the pre-append corpus"
         # the writer's retry completes the append
         incremental_append(spark, d, spark.createDataFrame(b1), batch_id=3)
+        assert Manifest.load_or_create(d).stages["ingest_000001"]["path"] == append_path
         eng_full = SearchEngine(spark, d)
         assert eng_full.n_rows == len(base) + len(b1)
         assert eng_full._off_bc is not None
@@ -253,7 +265,7 @@ def test_appends_that_split_conversations_drop_offsets(spark, corpus3):
 
 
 @pytest.mark.slow
-def test_replayed_batch_id_is_noop_and_crash_repair(spark, corpus3):
+def test_replayed_batch_id_is_noop_and_crash_repair(spark, corpus3, append_path):
     # Structured Streaming delivers foreachBatch at-least-once: a replay
     # of a committed batch_id must not duplicate docs or inflate stats,
     # and a crashed half-append (tagged files present, manifest not
@@ -271,6 +283,7 @@ def test_replayed_batch_id_is_noop_and_crash_repair(spark, corpus3):
         sdf1 = spark.createDataFrame(b1)
         incremental_append(spark, d, sdf1, batch_id=7)
         man = Manifest.load_or_create(d)
+        assert man.stages["ingest_000001"]["path"] == append_path
         stats_after = dict(man.stats)
         n_files = len(glob.glob(os.path.join(d, "doc_index", "*")))
         # replay the SAME batch id → complete no-op
@@ -399,3 +412,164 @@ def test_compact_merges_ingested_splits(spark, corpus3):
         assert os.path.isdir(live) and not os.path.isdir(live + ".bak")
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def _index_state(spark, d):
+    """Everything an append writes, file names and layout aside:
+    postings rows per (term, split_id) byte for byte (plus ``part``),
+    the other tables' rows, the Spark-read schema of every table, and
+    the manifest's stats and stages (timings aside)."""
+    from emailindexer_spark.sources.checkpoint import Manifest
+    from emailindexer_spark.streaming.ingest import _TABLES
+
+    post = {}
+    for f in _postings_files(d):
+        for r in papq.read_table(f).to_pylist():
+            r["part"] = f.split("part=")[1].split(os.sep)[0]
+            post[(r["term"], r["split_id"])] = repr(sorted(r.items()))
+    state = {"postings": post}
+    for t in ("doc_index", "doc_stats"):
+        state[t] = sorted(
+            (tuple(r) for r in spark.read.parquet(os.path.join(d, t)).collect()),
+            key=lambda r: r[0],
+        )
+    state["term_dict"] = sorted(
+        tuple(r) for r in spark.read.parquet(os.path.join(d, "term_dict")).collect()
+    )
+    state["conv_offsets"] = sorted(
+        tuple(r.values())
+        for f in glob.glob(os.path.join(d, "conv_offsets", "*.parquet"))
+        for r in papq.read_table(f).to_pylist()
+    )
+    state["schemas"] = {
+        t: spark.read.parquet(os.path.join(d, t)).schema
+        for t in _TABLES
+        if os.path.isdir(os.path.join(d, t))
+    }
+    man = Manifest.load_or_create(d)
+    state["stats"] = man.stats
+    state["stages"] = {
+        k: {x: y for x, y in v.items() if x not in ("committed_at", "seconds", "path")}
+        for k, v in man.stages.items()
+    }
+    return state
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize(
+    "params,steps",
+    [
+        # new conversations, then turns that continue indexed ones
+        # (drops conv_offsets), then an empty batch
+        ({}, ("new", "continues", "empty")),
+        ({"positions": False}, ("new",)),
+        ({"fields": ("text", "role")}, ("new", "continues")),
+    ],
+    ids=["positions", "no_positions", "two_fields"],
+)
+def test_driver_and_spark_appends_write_identical_tables(spark, monkeypatch, corpus3, params, steps):
+    """The driver path (a collected batch tokenized, encoded and written
+    with pyarrow) and the Spark pipeline stage the same index: identical
+    postings bytes, rows, schemas, term_dict, conv_offsets and manifest
+    stats after every append."""
+    import emailindexer_spark.streaming.ingest as ING
+    from emailindexer_spark.sources.checkpoint import Manifest
+
+    base, b1, _ = corpus3
+    first = b1[b1.conv_id == b1.conv_id.iloc[0]]
+    batches = {  # rows shuffled: doc ids come from the (conv_id, turn_idx) order
+        "new": b1.sample(frac=1, random_state=3),
+        "continues": first.head(5).assign(turn_idx=first.turn_idx.head(5) + len(first))[::-1],
+        "empty": b1.head(0),
+    }
+    root = tempfile.mkdtemp(prefix="ix_paths_")
+    try:
+        d0 = os.path.join(root, "base")
+        IndexBuilder(
+            spark, d0, num_parts=8, heavy_df_threshold=200, split_target=100, **params
+        ).build(spark.createDataFrame(base))
+        assert any(
+            papq.read_table(f, columns=["split_id"]).column(0).to_numpy().any()
+            for f in _postings_files(d0)
+        ), "the base must carry heavy-term splits"
+        dirs = {p: os.path.join(root, p) for p in ("driver", "spark")}
+        for d in dirs.values():
+            shutil.copytree(d0, d)
+        schema = spark.createDataFrame(b1).schema
+        for i, step in enumerate(steps, start=1):
+            states = {}
+            for p, d in dirs.items():
+                cap = ING.DRIVER_APPEND_MAX_TURNS if p == "driver" else -1
+                with monkeypatch.context() as m:
+                    m.setattr(ING, "DRIVER_APPEND_MAX_TURNS", cap)
+                    incremental_append(spark, d, spark.createDataFrame(batches[step], schema))
+                assert Manifest.load_or_create(d).stages[f"ingest_{i:06d}"]["path"] == p
+                states[p] = _index_state(spark, d)
+            a, b = states["driver"], states["spark"]
+            assert a.keys() == b.keys()
+            for k in a:
+                assert a[k] == b[k], (step, k)
+            assert bool(a["conv_offsets"]) == (step != "continues" and "continues" not in steps[:i])
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.slow
+def test_small_append_runs_at_most_one_job(spark, spark_jobs, index_dir, corpus_pdf):
+    """A small batch is collected once and staged on the driver; the
+    manifest records the path and the stage's seconds."""
+    from emailindexer_spark.sources.checkpoint import Manifest
+
+    root = tempfile.mkdtemp(prefix="ix_small_")
+    try:
+        d = os.path.join(root, "ix")
+        shutil.copytree(index_dir, d)
+        batch = spark.createDataFrame(corpus_pdf.head(300).assign(conv_id=lambda x: "zz_" + x.conv_id))
+        assert len(spark_jobs(lambda: incremental_append(spark, d, batch))) <= 1
+        st = Manifest.load_or_create(d).stages["ingest_000001"]
+        assert st["path"] == "driver" and st["seconds"] > 0
+        assert SearchEngine(spark, d).n_rows == len(corpus_pdf) + 300
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.slow
+def test_engine_open_runs_no_job_and_reads_inferred_schemas(spark, spark_jobs, monkeypatch, index_dir, corpus_pdf):
+    """SearchEngine reads its tables with schemas derived from a parquet
+    footer: an open runs no Spark job, and every table's schema is the
+    one spark.read.parquet infers — after the build, after each kind of
+    append on each path, and after compaction."""
+    import emailindexer_spark.streaming.ingest as ING
+    from emailindexer_spark.streaming.compact import compact_index
+
+    def check(d, when):
+        engs = []
+        assert spark_jobs(lambda: engs.append(SearchEngine(spark, d))) == [], when
+        eng = engs[0]
+        for t, df in [
+            ("postings", eng.postings),
+            ("doc_stats", eng.doc_stats),
+            ("term_dict", eng.term_dict),
+            ("doc_index", eng.doc_index),
+        ]:
+            assert df.schema == spark.read.parquet(os.path.join(d, t)).schema, (when, t)
+
+    root = tempfile.mkdtemp(prefix="ix_open_")
+    try:
+        d = os.path.join(root, "ix")
+        shutil.copytree(index_dir, d)
+        check(d, "build")
+        new = corpus_pdf.head(200).assign(conv_id=lambda x: "zz_" + x.conv_id)
+        cont = corpus_pdf.head(3).assign(turn_idx=lambda x: x.turn_idx + 10_000)
+        incremental_append(spark, d, spark.createDataFrame(new))
+        check(d, "driver append")
+        incremental_append(spark, d, spark.createDataFrame(cont))
+        check(d, "driver continuing append")
+        with monkeypatch.context() as m:
+            m.setattr(ING, "DRIVER_APPEND_MAX_TURNS", -1)
+            incremental_append(spark, d, spark.createDataFrame(new.assign(conv_id=lambda x: "zy_" + x.conv_id)))
+        check(d, "spark append")
+        compact_index(spark, d)
+        check(d, "compaction")
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

@@ -40,6 +40,14 @@ Every stage commits a snapshot in the manifest (sources/checkpoint.py);
 ``build(resume=True)`` skips committed stages, reproducing byte-identical
 postings after a mid-build kill.
 
+Small builds skip the pipeline: a fresh build of a bare local parquet
+input of at most ``DRIVER_MAX_TURNS`` rows and ``DRIVER_MAX_INPUT_BYTES``
+bytes is one Arrow collect staged on the driver by the append's kernel
+(``_stage_on_driver``),
+which writes the same tables, stages and stats (test-gated).  Spark's
+fixed per-job costs dominate an input that small; the index's first
+write is then an ordinary commit, like every small append after it.
+
 Scale notes (the 100 TB story):
 * the token stream is materialized exactly once, map-side, flowing
   straight into the ONE wide per-token shuffle (term, split); per-doc
@@ -60,12 +68,14 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 import time
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -83,6 +93,7 @@ from emailindexer_spark.functions.tokenizer import (
 )
 from emailindexer_spark.operators.docid import (
     assign_doc_ids_with_total,
+    conv_offsets,
     validate_transcripts,
 )
 from emailindexer_spark.sources.checkpoint import Manifest
@@ -143,14 +154,16 @@ def write_conv_offsets(
     os.replace(tmp, dest)
 
 
-def exact_input_rows(df: DataFrame) -> int | None:
-    """Exact row count of a BARE parquet-relation DataFrame, read from
-    the file footers — no Spark job, ~ms.  Returns None unless the
-    optimized plan is a plain ``LogicalRelation`` (any filter/union/
-    projection on top would make the footer count wrong) and every
-    input file's metadata is readable.  Used to start the heavy-term
-    sample before docid assignment finishes; callers must fall back to
-    the exact post-docid count when this returns None."""
+def exact_input_size(df: DataFrame) -> tuple[int, int] | None:
+    """Exact (rows, uncompressed column bytes) of a BARE parquet-relation
+    DataFrame, read from the file footers — no Spark job, ~ms.  Returns
+    None unless the optimized plan is a plain ``LogicalRelation`` (any
+    filter/union/projection on top would make the footer counts wrong)
+    and every input file's metadata is readable.  A build reads it at
+    entry to choose the driver path (IndexBuilder.build) and to start
+    the heavy-term sample before docid assignment finishes; callers
+    must fall back to the exact post-docid count when this returns
+    None."""
     try:
         if (
             df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
@@ -166,16 +179,18 @@ def exact_input_rows(df: DataFrame) -> int | None:
 
     import pyarrow.parquet as papq
 
-    total = 0
+    rows = nbytes = 0
     for f in files:
         pr = urlparse(f)
         if pr.scheme not in ("", "file"):
             return None
         try:
-            total += papq.ParquetFile(unquote(pr.path)).metadata.num_rows
+            md = papq.ParquetFile(unquote(pr.path)).metadata
         except Exception:
             return None
-    return total
+        rows += md.num_rows
+        nbytes += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    return rows, nbytes
 
 
 def ensure_parallelism(df: DataFrame, target: int) -> DataFrame:
@@ -271,6 +286,7 @@ def _pack_chunk_rows(
     pos_bounds: np.ndarray | None,
     heavy: dict,
     n_rows: int,
+    heavy_rule: tuple[int, int] | None = None,
 ) -> pd.DataFrame:
     """Term-major postings → CHUNK_SCHEMA rows, one per (term, split).
 
@@ -278,6 +294,10 @@ def _pack_chunk_rows(
     strictly ascending within each term.  A term in ``heavy`` ({term:
     n_splits}) is cut at doc-range edges, split_id = doc_id //
     ceil(n_rows / n_splits); any other term is one split-0 row.
+    ``heavy_rule`` = (heavy_df_threshold, split_target) replaces
+    ``heavy`` with the exact-df map when the postings hold the whole
+    corpus: a term of df > threshold gets ceil(df / split_target)
+    splits, the map the build's sample gives at sample mod 1.
     ``pos_bounds[j]`` is the first byte of posting j's positions in
     ``pos_buf`` (length n + 1), or None without positions.
 
@@ -286,7 +306,10 @@ def _pack_chunk_rows(
     postings."""
     n = docs.size
     tlens = np.diff(tstarts)
-    ns = np.fromiter((heavy.get(t, 0) for t in terms), np.int64, count=len(terms))
+    if heavy_rule is not None:
+        ns = np.where(tlens > heavy_rule[0], -(-tlens // heavy_rule[1]), 0)
+    else:
+        ns = np.fromiter((heavy.get(t, 0) for t in terms), np.int64, count=len(terms))
     is_heavy = np.repeat(ns > 0, tlens)
     sids = np.zeros(n, dtype=np.int64)
     if is_heavy.any():
@@ -328,6 +351,7 @@ def _tokenize_to_chunk_rows(
     fields: tuple[str, ...],
     heavy_bc,
     n_rows: int,
+    heavy_rule: tuple[int, int] | None = None,
 ):
     """mapInPandas: (doc_id, <fields...>) batches → packed CHUNK_SCHEMA
     rows, one per (term, split) per batch.
@@ -336,7 +360,9 @@ def _tokenize_to_chunk_rows(
     position) order; per-(doc, term) tf, norm and segmented-delta
     positions come off it vectorized, and _pack_chunk_rows cuts the
     rows.  ``heavy_bc`` is a broadcast {term_key: n_splits} from the
-    sample pass, or None (every term one split-0 row per batch).
+    sample pass, or None (every term one split-0 row per batch);
+    ``heavy_rule`` is _pack_chunk_rows' exact-df rule, for a single
+    batch holding the whole corpus.
     Non-default fields emit FIELD-PREFIXED term keys (``field:term``)
     with that field's own norm — one shared term space carrying
     per-field statistics (Lucene's per-field terms dicts flattened)."""
@@ -377,6 +403,7 @@ def _tokenize_to_chunk_rows(
             pos_bounds,
             heavy,
             n_rows,
+            heavy_rule,
         )
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -549,6 +576,289 @@ def write_postings(chunks: DataFrame, dest: str, block_size: int, num_parts: int
     )
 
 
+#: the tables of an index directory
+INDEX_TABLES = ("doc_index", "doc_stats", "postings", "term_dict", "conv_offsets", "build_metrics")
+
+#: builds and appends of at most this many turns are staged on the
+#: driver (_stage_on_driver).  Measured on local[4] against a 10k-turn
+#: index (append seconds, driver / Spark path): 500 turns 0.26-0.36 /
+#: 4.2-5.9, 5k 0.6-0.7 / 4.0-4.1, 20k 1.6-1.7 / 5.2-6.0, 50k 4.0-4.3 /
+#: 6.6-8.5, 100k 9.7 / 18.5.  The Spark path's ~4 s of jobs only pay
+#: off once executors outnumber those cores, so the cap is set by what
+#: the driver holds instead: staging 20k turns peaks at ~210 MB of
+#: driver memory (50k: ~520 MB), and the time stays under half the
+#: Spark path's.
+DRIVER_MAX_TURNS = 20_000
+
+#: ...and a build only if its input's footers count at most this many
+#: uncompressed column bytes: the driver build's memory follows the
+#: text, not the turn count.  Measured on local[2] (Python peak RSS over
+#: the build, fixture corpora): 10k turns of 4.9 MB 163 MB, 20k turns
+#: of 9.9 MB 303 MB, and 2k and 4k turns of ten-fold bodies (9.4 and
+#: 18.7 MB) 317 and 612 MB — ~32 bytes held per input byte.  The cap
+#: admits 20k turns of the fixture's bodies, and longer bodies only in
+#: fewer turns, so the driver holds at most ~400 MB.
+DRIVER_MAX_INPUT_BYTES = 12 << 20
+
+
+def _stat_cols(fields: tuple[str, ...]) -> list[tuple[str, str]]:
+    """(dl column, norm column) per field: fields[0] owns ``dl``/``norm``."""
+    return [
+        ("dl", "norm") if fi == 0 else (f"dl_{f}", f"norm_{f}")
+        for fi, f in enumerate(fields)
+    ]
+
+
+class Staged(NamedTuple):
+    """What _stage_on_driver hands its commit."""
+
+    n_rows: int
+    totals: dict  # {field: (docs with a token, tokens)}
+    offsets: dict  # operators/docid.conv_offsets of the rows
+    term_parts: pd.DataFrame  # the postings per (term, part): see _per_part_metrics
+    seconds: dict  # {table: seconds spent staging it}
+
+
+def _stage_on_driver(
+    rows,
+    staging,
+    base,
+    split_id,
+    fields,
+    simple,
+    positions,
+    block_size,
+    num_parts,
+    heavy_rule: tuple[int, int] | None = None,
+) -> Staged:
+    """Stage collected transcript rows (a pyarrow Table, Spark's own
+    Arrow types) with no Spark job: the build's tokenizer and posting
+    encoder called in-process, the doc_index, doc_stats, postings and
+    term_dict tables written with pyarrow under ``staging`` in the
+    layout the Spark pipeline writes.
+
+    An append stages a batch at ``base`` = the corpus size, every term
+    one row of ``split_id``.  A build stages the whole corpus at base 0
+    and split 0, with ``heavy_rule`` (_pack_chunk_rows) cutting its
+    heavy terms into doc-range splits."""
+    import pyarrow.parquet as papq
+
+    t0 = time.perf_counter()
+    seconds = {}
+
+    def write(table: str, t, sub: str = "") -> None:
+        d = os.path.join(staging, table, sub)
+        os.makedirs(d, exist_ok=True)
+        papq.write_table(t, os.path.join(d, "part-00000.parquet"))
+
+    def lap(table: str) -> None:
+        nonlocal t0
+        t1 = time.perf_counter()
+        seconds[table] = round(t1 - t0, 3)
+        t0 = t1
+
+    # docIDs: base + rank in the stable (conv_id, turn_idx) order —
+    # what the Spark path's offsets + turn rank give
+    rows = rows.take(
+        pc.sort_indices(
+            rows,
+            sort_keys=[("conv_id", "ascending"), ("turn_idx", "ascending")],
+            null_placement="at_start",
+        )
+    )
+    n = rows.num_rows
+    # the Spark path's per-conversation (count, density) aggregation;
+    # a null turn_idx (as -1) makes its conversation sparse there too
+    g = pd.DataFrame(
+        {
+            "conv_id": rows.column("conv_id").to_numpy(zero_copy_only=False),
+            "t": pc.fill_null(rows.column("turn_idx"), -1).to_numpy(),
+        }
+    ).groupby("conv_id", sort=False, dropna=False)["t"]
+    n_turns = g.size()
+    sparse = (g.max() != n_turns - 1) | (g.min() != 0) | (g.nunique() != n_turns)
+    oo = conv_offsets(
+        pd.DataFrame({"n_turns": n_turns, "_sparse": sparse.astype(np.int64)}).reset_index()
+    )
+    doc_id = base + np.arange(n, dtype=np.int64)
+    texts = {f: rows.column(f).to_pandas() for f in fields}
+    stats, totals = [], {}
+    for f, (dcol, ncol) in zip(fields, _stat_cols(fields)):
+        dl = token_counts(texts[f], simple=simple)
+        totals[f] = (int((dl > 0).sum()), int(dl.sum()))
+        stats += [(dcol, dl.astype(np.int32)), (ncol, encode_lengths(dl).astype(np.int32))]
+
+    def table(*cols: str):
+        return pa.table(
+            {"doc_id": doc_id, **{c: rows.column(c) for c in cols}, **dict(stats)}
+        )
+
+    write("doc_index", table("conv_id", "turn_idx", "role", "tool", "ts", "text"))
+    lap("doc_index")
+    write("doc_stats", table("conv_id", "turn_idx"))
+    lap("doc_stats")
+
+    chunk_frames = list(
+        _tokenize_to_chunk_rows(simple, positions, fields, None, base + n, heavy_rule)(
+            iter([pd.DataFrame({"doc_id": doc_id, **texts})])
+        )
+    )
+    if chunk_frames:
+        chunks = pd.concat(chunk_frames, ignore_index=True)
+        chunks["split_id"] = (chunks["split_id"] + split_id).astype(np.int32)
+        # clustered by (term, split_id): fields' chunk rows interleave
+        chunks = chunks.sort_values(["term", "split_id"], kind="stable")
+        post = pa.Table.from_batches(
+            _encode_chunk_table(
+                pa.Table.from_pandas(chunks, preserve_index=False),
+                block_size,
+                num_parts,
+            ),
+            schema=POSTINGS_ARROW_SCHEMA,
+        )
+    else:
+        post = POSTINGS_ARROW_SCHEMA.empty_table()
+    # postings: one (term, split_id)-sorted file per part=K/, the part
+    # in the directory name only — the layout Spark's partitionBy writes
+    part = post.column("part").to_numpy()
+    body = post.drop_columns(["part"])
+    for k in np.unique(part):
+        write("postings", body.take(np.flatnonzero(part == k)), f"part={k}")
+    lap("postings")
+    # the Spark build's per-(term, part) aggregation, payload bytes
+    # being the bytes of a row's b_docs, b_tfs and b_norms blocks
+    payload = np.zeros(post.num_rows, np.int64)
+    for c in ("b_docs", "b_tfs", "b_norms"):
+        col = post.column(c).combine_chunks()
+        cs = np.concatenate(([0], np.cumsum(pc.binary_length(col.values).to_numpy())))
+        offs = col.offsets.to_numpy()
+        payload += cs[offs[1:]] - cs[offs[:-1]]
+    term_parts = (
+        pd.DataFrame(
+            {
+                "term": post.column("term").to_numpy(zero_copy_only=False),
+                "part": post.column("part").to_numpy(),
+                "df_row": post.column("df_row").to_numpy(),
+                "payload": payload,
+                "split": post.column("split_id").to_numpy() > 0,
+            }
+        )
+        .groupby(["term", "part"], sort=False)
+        .agg(
+            df=("df_row", "sum"),
+            posting_rows=("df_row", "size"),
+            payload_bytes=("payload", "sum"),
+            skew_splits=("split", "sum"),
+        )
+        .reset_index()
+    )
+    # term_dict: an append's delta sums with the earlier rows at read time
+    if len(term_parts):
+        _write_term_dict(os.path.join(staging, "term_dict"), term_parts)
+    lap("term_dict")
+    return Staged(n, totals, oo, term_parts, seconds)
+
+
+def _commit_conv_offsets(man: Manifest, oo: dict, path: str) -> None:
+    """Write and commit the conv_offsets artifact of a DENSE build: the
+    (conv_id, conv_offset, n_turns) table the query engine
+    broadcast-searchsorteds to map doc_id → (conv_id, turn_idx) WITHOUT
+    a doc_stats join, from operators/docid.conv_offsets arrays already
+    on the driver — written via pyarrow, zero Spark jobs.  Appends of
+    new conversations extend it with one piece per batch
+    (streaming/ingest.py); other appends drop it.  Non-dense builds and
+    builds past the docid fast path skip it; the engine falls back to
+    the doc_stats join."""
+    t0 = time.perf_counter()
+    cdir = man.stage_path("conv_offsets")
+    os.makedirs(cdir, exist_ok=True)
+    write_conv_offsets(
+        os.path.join(cdir, "part-00000.parquet"), oo["conv_ids"], oo["offsets"], oo["n_turns"]
+    )
+    man.commit_stage(
+        "conv_offsets",
+        n_convs=len(oo["conv_ids"]),
+        seconds=round(time.perf_counter() - t0, 3),
+        path=path,
+    )
+
+
+def _write_term_dict(tdir: str, term_parts: pd.DataFrame) -> None:
+    """The sorted term dictionary (term, part, df) of per-(term, part)
+    postings aggregates as one pyarrow file, sorted by term with small
+    row groups: min/max stats prune prefix and range scans like a
+    range-partitioned layout."""
+    import pyarrow.parquet as papq
+
+    td = pa.table(
+        {
+            "term": pa.array(term_parts["term"], pa.string()),
+            "part": pa.array(term_parts["part"], pa.int32()),
+            "df": pa.array(term_parts["df"], pa.int64()),
+        }
+    )
+    os.makedirs(tdir, exist_ok=True)
+    dest = os.path.join(tdir, "part-00000.parquet")
+    papq.write_table(td.sort_by("term"), dest + ".tmp", row_group_size=32768)
+    os.replace(dest + ".tmp", dest)
+
+
+#: build_metrics columns after ``part``, each summed over a part's
+#: (term, part) rows
+BUILD_METRIC_COLS = (
+    "posting_rows",
+    "postings_written",
+    "bytes_compressed",
+    "skew_splits",
+    "n_terms",
+)
+
+
+def _commit_build_metrics(
+    man: Manifest, per_part: pd.DataFrame, t0: float, path: str
+) -> None:
+    """Write the per-part lineage table (one row per part: ``part`` and
+    BUILD_METRIC_COLS) with pyarrow, set the manifest totals the
+    benchmark and tests read, and commit the stage."""
+    import pyarrow.parquet as papq
+
+    per_part = per_part.sort_values("part")
+    mdir = man.stage_path("build_metrics")
+    shutil.rmtree(mdir, ignore_errors=True)
+    os.makedirs(mdir, exist_ok=True)
+    tbl = pa.table(
+        {
+            "part": pa.array(per_part["part"], pa.int32()),
+            **{c: pa.array(per_part[c], pa.int64()) for c in BUILD_METRIC_COLS},
+            "snapshot_id": pa.array([man.snapshot_id] * len(per_part), pa.string()),
+        }
+    )
+    dest = os.path.join(mdir, "part-00000.parquet")
+    papq.write_table(tbl, dest + ".tmp")
+    os.replace(dest + ".tmp", dest)
+    man.set_stats(
+        **{c: int(per_part[c].sum()) for c in ("postings_written", "bytes_compressed", "skew_splits")}
+    )
+    man.commit_stage("build_metrics", seconds=round(time.time() - t0, 2), path=path)
+
+
+def _per_part_metrics(term_parts: pd.DataFrame) -> pd.DataFrame:
+    """BUILD_METRIC_COLS per part of the postings' per-(term, part)
+    aggregates (columns term, part, df, posting_rows, payload_bytes,
+    skew_splits; one row per (term, part))."""
+    return (
+        term_parts.groupby("part")
+        .agg(
+            posting_rows=("posting_rows", "sum"),
+            postings_written=("df", "sum"),
+            bytes_compressed=("payload_bytes", "sum"),
+            skew_splits=("skew_splits", "sum"),
+            n_terms=("term", "size"),
+        )
+        .reset_index()
+    )
+
+
 class IndexBuilder:
     """Build (or resume) an index directory from a transcripts DataFrame."""
 
@@ -602,13 +912,45 @@ class IndexBuilder:
             "fields": list(self.fields),
         }
 
+    def _sample_mod(self, n_rows: int) -> int:
+        """The heavy-term sample keeps docs whose input-key hash is 0
+        mod this (1: every doc, the exact df)."""
+        return min(max(1, n_rows // self.heavy_sample_docs), 4096)
+
     def build(self, transcripts: DataFrame, resume: bool = False) -> Manifest:
+        """Build the index from ``transcripts``; ``resume=True`` skips
+        the stages the manifest records as committed.
+
+        A fresh build whose input is a bare local parquet relation of at
+        most DRIVER_MAX_TURNS rows and DRIVER_MAX_INPUT_BYTES uncompressed
+        bytes (counted from the footers, no Spark job), whose heavy-term
+        sample would be exact, is staged on the driver: one Arrow
+        collect, then the append's staging kernel (_stage_on_driver) at
+        base 0 and split 0 with the exact-df heavy map, every table
+        written with pyarrow.  Any other input — larger, filtered or
+        remote — and every resume take the Spark pipeline below.  Both
+        paths write the same tables, stages and stats, and every stage
+        records which ``path`` ran and its ``seconds``."""
         man = Manifest.load_or_create(self.out_dir, self._params())
         if not resume:
-            # a fresh build over an existing manifest restarts the ledger
-            for st in list(man.stages):
-                man.stages.pop(st)
+            # a fresh build over an existing index restarts the ledger
+            # and leaves none of the old tables (nor an append's or a
+            # compaction's leftovers) behind
+            man.stages.clear()
+            man.stats.clear()
             man._flush()
+            for t in (*INDEX_TABLES, "postings.tmp", "postings.bak", "_staging"):
+                shutil.rmtree(man.stage_path(t), ignore_errors=True)
+        size = exact_input_size(transcripts)
+        n_meta = size[0] if size is not None else None
+        if (
+            not resume
+            and size is not None
+            and 0 < n_meta <= DRIVER_MAX_TURNS
+            and size[1] <= DRIVER_MAX_INPUT_BYTES
+            and self._sample_mod(n_meta) == 1
+        ):
+            return self._build_on_driver(man, transcripts)
 
         # SCAN parallelism floors scale with the session's cores only
         # (the wide (term, split) shuffle in write_postings also floors
@@ -648,9 +990,8 @@ class IndexBuilder:
         heavy_res: dict = {}
         heavy_thread: threading.Thread | None = None
         if not man.is_complete("doc_index") and not man.is_complete("postings"):
-            n_meta = exact_input_rows(transcripts)
             if n_meta is not None and n_meta > 0:
-                early_mod = min(max(1, n_meta // self.heavy_sample_docs), 4096)
+                early_mod = self._sample_mod(n_meta)
                 s_src = transcripts
                 if self.sanitize:
                     s_src = s_src.withColumn(
@@ -784,29 +1125,12 @@ class IndexBuilder:
                         for fld in self.fields
                     },
                 )
-                man.commit_stage("doc_index", seconds=round(time.time() - t0, 2))
-                # conv_offsets artifact (docid fast path only, dense
-                # input): the (conv_id, conv_offset, n_turns) table the
-                # query engine broadcast-searchsorteds to map doc_id →
-                # (conv_id, turn_idx) WITHOUT a doc_stats join.  The
-                # arrays are already on the driver — written via
-                # pyarrow, zero Spark jobs, no build-time barrier.
-                # Appends of new conversations extend it with one piece
-                # per batch (streaming/ingest.py); other appends drop
-                # it.  Distributed-path / non-dense builds skip it; the
-                # engine falls back to the doc_stats join.
+                man.commit_stage(
+                    "doc_index", seconds=round(time.time() - t0, 2), path="spark"
+                )
+                # docid fast path only: the offsets are on the driver
                 if offsets_out.get("dense"):
-                    cdir = man.stage_path("conv_offsets")
-                    os.makedirs(cdir, exist_ok=True)
-                    write_conv_offsets(
-                        os.path.join(cdir, "part-00000.parquet"),
-                        offsets_out["conv_ids"],
-                        offsets_out["offsets"],
-                        offsets_out["n_turns"],
-                    )
-                    man.commit_stage(
-                        "conv_offsets", n_convs=len(offsets_out["conv_ids"])
-                    )
+                    _commit_conv_offsets(man, offsets_out, "spark")
 
         # doc_stats: skinny projection of the COMMITTED doc_index (no
         # text column touched) — keeps the A6 norms-table contract at
@@ -832,7 +1156,9 @@ class IndexBuilder:
                     .write.mode("overwrite")
                     .parquet(man.stage_path("doc_stats"))
                 )
-                man.commit_stage("doc_stats", seconds=round(time.time() - t0s, 2))
+                man.commit_stage(
+                    "doc_stats", seconds=round(time.time() - t0s, 2), path="spark"
+                )
             except BaseException as e:  # re-raised on the main thread
                 stats_err.append(e)
 
@@ -897,7 +1223,7 @@ class IndexBuilder:
                 # order cannot dodge the sample; deterministic and
                 # partition-invariant; independent of docid assignment
                 # so the build-entry thread above could overlap it.
-                sample_mod = min(max(1, n_rows // self.heavy_sample_docs), 4096)
+                sample_mod = self._sample_mod(n_rows)
                 if src_plan is not None:
                     src = src_plan  # pre-write plan: overlaps the write
                 else:
@@ -980,7 +1306,9 @@ class IndexBuilder:
                     chunks, man.stage_path("postings"), self.block_size, self.num_parts
                 )
                 _tr("postings_write", t1)
-                man.commit_stage("postings", seconds=round(time.time() - t0, 2))
+                man.commit_stage(
+                    "postings", seconds=round(time.time() - t0, 2), path="spark"
+                )
         finally:
             # barrier for the overlapped doc_index/doc_stats/sample work
             if heavy_thread is not None:
@@ -1042,87 +1370,16 @@ class IndexBuilder:
             _VOCAB_CAP = 5_000_000
             vrows = aug_plan.limit(_VOCAB_CAP + 1).collect()
             if len(vrows) <= _VOCAB_CAP:
-                import pyarrow as pa
-                import pyarrow.parquet as papq
-
+                aug = pd.DataFrame(vrows, columns=aug_plan.columns)
                 if not man.is_complete("term_dict"):
                     t0 = time.time()
-                    vrows.sort(key=lambda r: r["term"])
-                    tdir = man.stage_path("term_dict")
-                    os.makedirs(tdir, exist_ok=True)
-                    dest = os.path.join(tdir, "part-00000.parquet")
-                    papq.write_table(
-                        pa.table(
-                            {
-                                "term": pa.array(
-                                    [r["term"] for r in vrows], type=pa.string()
-                                ),
-                                "part": pa.array(
-                                    [r["part"] for r in vrows], type=pa.int32()
-                                ),
-                                "df": pa.array(
-                                    [int(r["df"]) for r in vrows], type=pa.int64()
-                                ),
-                            }
-                        ),
-                        dest + ".tmp",
-                        # sorted by term with small row groups: min/max
-                        # stats prune prefix/range scans like the range-
-                        # partitioned layout did
-                        row_group_size=32768,
+                    _write_term_dict(man.stage_path("term_dict"), aug)
+                    man.commit_stage(
+                        "term_dict", seconds=round(time.time() - t0, 2), path="spark"
                     )
-                    os.replace(dest + ".tmp", dest)
-                    man.commit_stage("term_dict", seconds=round(time.time() - t0, 2))
                 if not man.is_complete("build_metrics"):
                     t0 = time.time()
-                    per_part: dict[int, list[int]] = {}
-                    for r in vrows:
-                        a = per_part.setdefault(int(r["part"]), [0, 0, 0, 0, 0])
-                        a[0] += int(r["posting_rows"])
-                        a[1] += int(r["df"])
-                        a[2] += int(r["payload_bytes"])
-                        a[3] += int(r["skew_splits"])
-                        a[4] += 1  # n_terms: aug is unique per (term, part)
-                    mdir = man.stage_path("build_metrics")
-                    import shutil
-
-                    shutil.rmtree(mdir, ignore_errors=True)
-                    os.makedirs(mdir, exist_ok=True)
-                    parts_sorted = sorted(per_part)
-                    tbl = pa.table(
-                        {
-                            "part": pa.array(parts_sorted, type=pa.int32()),
-                            "posting_rows": pa.array(
-                                [per_part[k][0] for k in parts_sorted], type=pa.int64()
-                            ),
-                            "postings_written": pa.array(
-                                [per_part[k][1] for k in parts_sorted], type=pa.int64()
-                            ),
-                            "bytes_compressed": pa.array(
-                                [per_part[k][2] for k in parts_sorted], type=pa.int64()
-                            ),
-                            "skew_splits": pa.array(
-                                [per_part[k][3] for k in parts_sorted], type=pa.int64()
-                            ),
-                            "n_terms": pa.array(
-                                [per_part[k][4] for k in parts_sorted], type=pa.int64()
-                            ),
-                            "snapshot_id": pa.array(
-                                [man.snapshot_id] * len(parts_sorted), type=pa.string()
-                            ),
-                        }
-                    )
-                    dest = os.path.join(mdir, "part-00000.parquet")
-                    papq.write_table(tbl, dest + ".tmp")
-                    os.replace(dest + ".tmp", dest)
-                    man.set_stats(
-                        postings_written=sum(a[1] for a in per_part.values()),
-                        bytes_compressed=sum(a[2] for a in per_part.values()),
-                        skew_splits=sum(a[3] for a in per_part.values()),
-                    )
-                    man.commit_stage(
-                        "build_metrics", seconds=round(time.time() - t0, 2)
-                    )
+                    _commit_build_metrics(man, _per_part_metrics(aug), t0, "spark")
                 return man
             aug = aug_plan.persist()
             # Lucene's sorted term dictionary: (term, part, df) range-
@@ -1137,7 +1394,9 @@ class IndexBuilder:
                     .write.mode("overwrite")
                     .parquet(man.stage_path("term_dict"))
                 )
-                man.commit_stage("term_dict", seconds=round(time.time() - t0, 2))
+                man.commit_stage(
+                    "term_dict", seconds=round(time.time() - t0, 2), path="spark"
+                )
             if not man.is_complete("build_metrics"):
                 t0 = time.time()
                 # the per-part rollup is P-sized (bounded by num_parts
@@ -1156,46 +1415,64 @@ class IndexBuilder:
                     )
                     .collect()
                 )
-                import shutil
-
-                import pyarrow as pa
-                import pyarrow.parquet as papq
-
-                mdir = man.stage_path("build_metrics")
-                shutil.rmtree(mdir, ignore_errors=True)
-                os.makedirs(mdir, exist_ok=True)
-                cols = (
-                    "part",
-                    "posting_rows",
-                    "postings_written",
-                    "bytes_compressed",
-                    "skew_splits",
-                    "n_terms",
+                _commit_build_metrics(
+                    man,
+                    pd.DataFrame(rows, columns=["part", *BUILD_METRIC_COLS]),
+                    t0,
+                    "spark",
                 )
-                types = {"part": pa.int32()}
-                tbl = pa.table(
-                    {
-                        c: pa.array(
-                            [r[c] for r in rows], type=types.get(c, pa.int64())
-                        )
-                        for c in cols
-                    }
-                    | {
-                        "snapshot_id": pa.array(
-                            [man.snapshot_id] * len(rows), type=pa.string()
-                        )
-                    }
-                )
-                dest = os.path.join(mdir, "part-00000.parquet")
-                papq.write_table(tbl, dest + ".tmp")
-                os.replace(dest + ".tmp", dest)
-                man.set_stats(
-                    postings_written=sum(int(r["postings_written"]) for r in rows),
-                    bytes_compressed=sum(int(r["bytes_compressed"]) for r in rows),
-                    skew_splits=sum(int(r["skew_splits"]) for r in rows),
-                )
-                man.commit_stage("build_metrics", seconds=round(time.time() - t0, 2))
             aug.unpersist(blocking=False)
+        return man
+
+    def _build_on_driver(self, man: Manifest, transcripts: DataFrame) -> Manifest:
+        """The fresh build of a small bare-parquet input (see build): one
+        Arrow collect, _stage_on_driver straight into the index
+        directory, then the conv_offsets and build_metrics tables and
+        the manifest commits of the Spark pipeline."""
+        if self.validate:
+            validate_transcripts(transcripts)  # one Spark job
+        t0 = time.perf_counter()
+        rows = transcripts.toArrow()
+        if self.sanitize:
+            i = rows.schema.get_field_index("text")
+            clean = remove_quoted_replies(rows.column(i).to_pandas())
+            rows = rows.set_column(
+                i, rows.schema.field(i), pa.array(clean, rows.schema.field(i).type)
+            )
+        collect_s = time.perf_counter() - t0
+        st = _stage_on_driver(
+            rows,
+            self.out_dir,
+            0,
+            0,
+            self.fields,
+            self.simple_tokens,
+            self.positions,
+            self.block_size,
+            self.num_parts,
+            heavy_rule=(self.heavy_df_threshold, self.split_target),
+        )
+        del rows
+        f0 = self.fields[0]
+        man.set_stats(
+            n_docs=st.totals[f0][0],
+            total_tokens=st.totals[f0][1],
+            n_rows=st.n_rows,
+            max_doc_id=st.n_rows - 1,
+            field_stats={
+                f: {"n_docs": st.totals[f][0], "total_tokens": st.totals[f][1]}
+                for f in self.fields
+            },
+        )
+        man.commit_stage(
+            "doc_index", seconds=round(st.seconds["doc_index"] + collect_s, 3), path="driver"
+        )
+        if st.offsets["dense"]:
+            _commit_conv_offsets(man, st.offsets, "driver")
+        for t in ("doc_stats", "postings", "term_dict"):
+            man.commit_stage(t, seconds=st.seconds[t], path="driver")
+        t0 = time.time()
+        _commit_build_metrics(man, _per_part_metrics(st.term_parts), t0, "driver")
         return man
 
 

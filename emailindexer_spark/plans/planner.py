@@ -34,7 +34,7 @@ ONE shared postings scan with a vectorized per-query fan-out kernel.
 from __future__ import annotations
 
 import os
-from functools import reduce
+from functools import cached_property, reduce
 from typing import Iterator
 
 import numpy as np
@@ -936,16 +936,6 @@ class SearchEngine:
             )
             for f, v in fs.items()
         }
-        # explicit footer schemas: opening the engine runs no Spark job
-        self.postings = self._read_table("postings")
-        self.doc_stats = self._read_table("doc_stats")
-        self._doc_index: DataFrame | None = None
-        # sorted term dictionary (term, part, df): prefix expansion +
-        # df lookups scan the vocabulary, never the postings payloads
-        td_path = os.path.join(index_dir, "term_dict")
-        self.term_dict: DataFrame | None = (
-            self._read_table("term_dict") if os.path.isdir(td_path) else None
-        )
         # driver-side df cache (Lucene keeps its term dictionary in
         # memory too): terms resolve once per engine instance; None
         # marks a term known to be absent from the index
@@ -1134,11 +1124,30 @@ class SearchEngine:
             return np.nonzero(~colon[i0:i1])[0] + i0
         return np.arange(i0, i1)
 
-    @property
+    # the Spark-side tables, read on first use with explicit footer
+    # schemas (no Spark job): the driver-local tier never touches them,
+    # so opening the engine makes no JVM call for them
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        return self._read_table("postings")
+
+    @cached_property
+    def doc_stats(self) -> DataFrame:
+        return self._read_table("doc_stats")
+
+    @cached_property
+    def term_dict(self) -> DataFrame | None:
+        """The sorted term dictionary (term, part, df): prefix expansion
+        and df lookups scan the vocabulary, never the postings payloads.
+        None for an index without one."""
+        if not os.path.isdir(os.path.join(self.index_dir, "term_dict")):
+            return None
+        return self._read_table("term_dict")
+
+    @cached_property
     def doc_index(self) -> DataFrame:
-        if self._doc_index is None:
-            self._doc_index = self._read_table("doc_index")
-        return self._doc_index
+        return self._read_table("doc_index")
 
     # ------------------------------------------------------------ postings access
 

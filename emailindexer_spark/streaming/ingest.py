@@ -12,14 +12,17 @@ rows with a fresh ``split_id`` per ingest batch, in the same format and
 
 Two paths stage a batch, and write the same bytes (test-gated):
 
-* a batch of at most ``DRIVER_APPEND_MAX_TURNS`` turns — every
+* a batch of at most ``plans/builder.DRIVER_MAX_TURNS`` turns — every
   micro-batch of a live feed — is collected with ONE bounded Arrow
-  collect and staged on the driver: docIDs from a stable (conv_id,
-  turn_idx) sort, dl/norm from the build's token counter, the tokenizer
-  and encoder called in-process, every table written with pyarrow.  No
-  Spark job runs past the collect; the append costs milliseconds of
-  numpy instead of a dozen jobs' scheduling (a small append is a cheap
-  log commit, as in Delta Lake; heavy rewrites are compaction's job);
+  collect and staged on the driver by plans/builder._stage_on_driver:
+  docIDs from a stable (conv_id, turn_idx) sort, dl/norm from the
+  build's token counter, the tokenizer and encoder called in-process,
+  every table written with pyarrow.  No Spark job runs past the
+  collect; the append costs milliseconds of numpy instead of a dozen
+  jobs' scheduling (a small append is a cheap log commit, as in Delta
+  Lake; heavy rewrites are compaction's job).  The same kernel stages
+  a small build, the index's first commit, at base 0
+  (IndexBuilder.build);
 * a larger batch takes the build's Spark pipeline (docid assignment,
   mapInPandas tokenizer, plans/builder.write_postings).
 
@@ -75,152 +78,34 @@ import os
 import shutil
 import time
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from emailindexer_spark.functions.smallfloat import encode_lengths, norm_byte_expr
-from emailindexer_spark.functions.tokenizer import dl_expr, token_counts
-from emailindexer_spark.operators.docid import (
-    assign_doc_ids_with_total,
-    conv_offsets,
-)
+from emailindexer_spark.functions.smallfloat import norm_byte_expr
+from emailindexer_spark.functions.tokenizer import dl_expr
+from emailindexer_spark.operators.docid import assign_doc_ids_with_total
+from emailindexer_spark.plans import builder
 from emailindexer_spark.plans.builder import (
     CHUNK_SCHEMA,
-    POSTINGS_ARROW_SCHEMA,
-    _encode_chunk_table,
+    INDEX_TABLES,
+    _stage_on_driver,
+    _stat_cols,
     _tokenize_to_chunk_rows,
     write_conv_offsets,
     write_postings,
 )
 from emailindexer_spark.sources.checkpoint import Manifest
 
-_TABLES = ("doc_index", "doc_stats", "postings", "term_dict", "conv_offsets")
-
-#: batches of at most this many turns are appended on the driver.
-#: Measured on local[4] against a 10k-turn index (append seconds,
-#: driver / Spark path): 500 turns 0.26-0.36 / 4.2-5.9, 5k 0.6-0.7 /
-#: 4.0-4.1, 20k 1.6-1.7 / 5.2-6.0, 50k 4.0-4.3 / 6.6-8.5, 100k 9.7 /
-#: 18.5.  The Spark path's ~4 s of jobs only pay off once executors
-#: outnumber those cores, so the cap is set by what the driver holds
-#: instead: staging 20k turns peaks at ~210 MB of driver memory (50k:
-#: ~520 MB), and the time stays under half the Spark path's.
-DRIVER_APPEND_MAX_TURNS = 20_000
-
-
-def _stat_cols(fields: tuple[str, ...]) -> list[tuple[str, str]]:
-    """(dl column, norm column) per field: fields[0] owns ``dl``/``norm``."""
-    return [
-        ("dl", "norm") if fi == 0 else (f"dl_{f}", f"norm_{f}")
-        for fi, f in enumerate(fields)
-    ]
-
-
-def _stage_on_driver(
-    rows, staging, base, split_id, fields, simple, positions, block_size, num_parts
-):
-    """Stage a collected batch (a pyarrow Table, Spark's own Arrow
-    types) with no Spark job: the build's tokenizer and posting encoder
-    called in-process, every table written with pyarrow in the layout
-    the Spark path writes.  Returns (rows, {field: (n_docs, tokens)},
-    conv offsets)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as papq
-
-    # docIDs: base + rank in the stable (conv_id, turn_idx) order —
-    # what the Spark path's offsets + turn rank give
-    rows = rows.take(
-        pc.sort_indices(
-            rows,
-            sort_keys=[("conv_id", "ascending"), ("turn_idx", "ascending")],
-            null_placement="at_start",
-        )
-    )
-    n = rows.num_rows
-    # the Spark path's per-conversation (count, density) aggregation;
-    # a null turn_idx (as -1) makes its conversation sparse there too
-    g = pd.DataFrame(
-        {
-            "conv_id": rows.column("conv_id").to_numpy(zero_copy_only=False),
-            "t": pc.fill_null(rows.column("turn_idx"), -1).to_numpy(),
-        }
-    ).groupby("conv_id", sort=False, dropna=False)["t"]
-    n_turns = g.size()
-    sparse = (g.max() != n_turns - 1) | (g.min() != 0) | (g.nunique() != n_turns)
-    oo = conv_offsets(
-        pd.DataFrame({"n_turns": n_turns, "_sparse": sparse.astype(np.int64)}).reset_index()
-    )
-    doc_id = base + np.arange(n, dtype=np.int64)
-    texts = {f: rows.column(f).to_pandas() for f in fields}
-    stats, totals = [], {}
-    for f, (dcol, ncol) in zip(fields, _stat_cols(fields)):
-        dl = token_counts(texts[f], simple=simple)
-        totals[f] = (int((dl > 0).sum()), int(dl.sum()))
-        stats += [(dcol, dl.astype(np.int32)), (ncol, encode_lengths(dl).astype(np.int32))]
-
-    def write(table: str, t, sub: str = "") -> None:
-        d = os.path.join(staging, table, sub)
-        os.makedirs(d, exist_ok=True)
-        papq.write_table(t, os.path.join(d, "part-00000.parquet"))
-
-    def table(*cols: str):
-        return pa.table(
-            {"doc_id": doc_id, **{c: rows.column(c) for c in cols}, **dict(stats)}
-        )
-
-    write("doc_index", table("conv_id", "turn_idx", "role", "tool", "ts", "text"))
-    write("doc_stats", table("conv_id", "turn_idx"))
-
-    chunk_frames = list(
-        _tokenize_to_chunk_rows(simple, positions, fields, None, 0)(
-            iter([pd.DataFrame({"doc_id": doc_id, **texts})])
-        )
-    )
-    if chunk_frames:
-        chunks = pd.concat(chunk_frames, ignore_index=True).assign(
-            split_id=np.int32(split_id)
-        )
-        chunks = chunks.sort_values("term")  # one chunk row per term
-        post = pa.Table.from_batches(
-            _encode_chunk_table(
-                pa.Table.from_pandas(chunks, preserve_index=False),
-                block_size,
-                num_parts,
-            ),
-            schema=POSTINGS_ARROW_SCHEMA,
-        )
-    else:
-        post = POSTINGS_ARROW_SCHEMA.empty_table()
-    # postings: one (term, split_id)-sorted file per part=K/, the part
-    # in the directory name only — the layout Spark's partitionBy writes
-    part = post.column("part").to_numpy()
-    body = post.drop_columns(["part"])
-    for k in np.unique(part):
-        write("postings", body.take(np.flatnonzero(part == k)), f"part={k}")
-    # term_dict delta: df per (term, part) sums over rows at read time
-    if post.num_rows:
-        td = post.group_by(["term", "part"]).aggregate([("df_row", "sum")])
-        write(
-            "term_dict",
-            pa.table(
-                {
-                    "term": td.column("term"),
-                    "part": td.column("part"),
-                    "df": td.column("df_row_sum"),
-                }
-            ).sort_by("term"),
-        )
-    return n, totals, oo
-
+#: the tables an append writes
+_TABLES = tuple(t for t in INDEX_TABLES if t != "build_metrics")
 
 def _stage_with_spark(
     spark, batch, staging, base, split_id, fields, simple, positions, block_size, num_parts
 ):
     """Stage a batch with the build's Spark pipeline: docid assignment,
     dl/norm column expressions, the map-side chunk tokenizer and the one
-    posting writer.  Returns what _stage_on_driver returns."""
+    posting writer.  Returns (rows, {field: (n_docs, tokens)}, conv
+    offsets), as _stage_on_driver's Staged does."""
     oo: dict = {}
     with_ids, _total = assign_doc_ids_with_total(
         batch, method="two_phase", offsets_out=oo
@@ -358,7 +243,7 @@ def incremental_append(
 
     ``batch_id`` (Structured Streaming's ``foreachBatch`` id) makes the
     append idempotent: an id already committed in the manifest is a
-    no-op replay.  A batch of at most DRIVER_APPEND_MAX_TURNS turns is
+    no-op replay.  A batch of at most builder.DRIVER_MAX_TURNS turns is
     staged on the driver, with no Spark job past its one collect; a
     larger one by the build's Spark pipeline.
     """
@@ -414,10 +299,12 @@ def incremental_append(
         block_size=int(man.params.get("block_size", 128)),
         num_parts=int(man.params.get("num_parts", 32)),
     )
-    rows = batch.limit(DRIVER_APPEND_MAX_TURNS + 1).toArrow()
-    if rows.num_rows <= DRIVER_APPEND_MAX_TURNS:
+    cap = builder.DRIVER_MAX_TURNS
+    rows = batch.limit(cap + 1).toArrow()
+    if rows.num_rows <= cap:
         path = "driver"
-        n_batch, totals, oo = _stage_on_driver(rows, **stage)
+        st = _stage_on_driver(rows, **stage)
+        n_batch, totals, oo = st.n_rows, st.totals, st.offsets
     else:
         path = "spark"
         del rows

@@ -1,3 +1,5 @@
+import glob
+import os
 import shutil
 import tempfile
 
@@ -66,3 +68,55 @@ def oracle_ix(corpus_pdf):
     return build_oracle_index(
         list(corpus_pdf[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
     )
+
+
+@pytest.fixture(scope="session")
+def index_state(spark):
+    """``index_state(d)``: everything a build or an append writes under
+    index directory ``d``, file names and layout aside: postings rows
+    per (term, split_id) byte for byte (plus ``part``), the other
+    tables' rows (build_metrics without its snapshot_id), the Spark-read
+    schema of every table, and the manifest's stats and stages (timings
+    and paths aside)."""
+    import pyarrow.parquet as papq
+
+    from emailindexer_spark.plans.builder import INDEX_TABLES
+    from emailindexer_spark.sources.checkpoint import Manifest
+
+    def rows(d, t):
+        return sorted(tuple(r) for r in spark.read.parquet(os.path.join(d, t)).collect())
+
+    def state(d):
+        post = {}
+        for f in glob.glob(os.path.join(d, "postings", "part=*", "*.parquet")):
+            for r in papq.read_table(f).to_pylist():
+                r["part"] = f.split("part=")[1].split(os.sep)[0]
+                post[(r["term"], r["split_id"])] = repr(sorted(r.items()))
+        out = {"postings": post}
+        for t in ("doc_index", "doc_stats", "term_dict"):
+            out[t] = rows(d, t)
+        out["build_metrics"] = [
+            r for r in spark.read.parquet(os.path.join(d, "build_metrics"))
+            .drop("snapshot_id")
+            .orderBy("part")
+            .collect()
+        ]
+        out["conv_offsets"] = sorted(
+            tuple(r.values())
+            for f in glob.glob(os.path.join(d, "conv_offsets", "*.parquet"))
+            for r in papq.read_table(f).to_pylist()
+        )
+        out["schemas"] = {
+            t: spark.read.parquet(os.path.join(d, t)).schema
+            for t in INDEX_TABLES
+            if os.path.isdir(os.path.join(d, t))
+        }
+        man = Manifest.load_or_create(d)
+        out["stats"] = man.stats
+        out["stages"] = {
+            k: {x: y for x, y in v.items() if x not in ("committed_at", "seconds", "path")}
+            for k, v in man.stages.items()
+        }
+        return out
+
+    return state

@@ -211,3 +211,154 @@ def test_load_transcripts_jsonl_and_csv(spark, tmp_path):
     a = {(r["conv_id"], r["turn_idx"], r["text"]) for r in got.collect()}
     b = {(r["conv_id"], r["turn_idx"], r["text"]) for r in got_csv.collect()}
     assert a == b
+
+
+# ---------------------------------------------------------------------------
+# driver-staged small builds
+
+
+@pytest.fixture(params=["driver", "spark"])
+def build_path(request, monkeypatch):
+    """Run the test's builds on one path: the driver path takes every
+    bare-parquet input the tests use; a negative cap forces the Spark
+    pipeline."""
+    import emailindexer_spark.plans.builder as B
+
+    if request.param == "spark":
+        monkeypatch.setattr(B, "DRIVER_MAX_TURNS", -1)
+    return request.param
+
+
+def _parquet(tmp_path, pdf, name="t.parquet"):
+    p = str(tmp_path / name)
+    pdf.to_parquet(p, index=False)
+    return p
+
+
+def _build_on(spark, monkeypatch, path, d, src, **params):
+    """Build ``src`` (a parquet path or a DataFrame) into ``d`` on
+    ``path``; returns the manifest, whose every stage must say so."""
+    import emailindexer_spark.plans.builder as B
+
+    with monkeypatch.context() as m:
+        if path == "spark":
+            m.setattr(B, "DRIVER_MAX_TURNS", -1)
+        df = spark.read.parquet(src) if isinstance(src, str) else src
+        man = IndexBuilder(
+            spark, d, num_parts=8, heavy_df_threshold=500, split_target=400, **params
+        ).build(df)
+    assert {st["path"] for st in man.stages.values()} == {path}
+    assert all(st["seconds"] >= 0 for st in man.stages.values())
+    return man
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize(
+    "params,sparse",
+    [
+        ({}, False),
+        ({"positions": False}, False),
+        ({"fields": ("text", "role")}, False),
+        ({"sanitize": True}, False),
+        ({}, True),
+    ],
+    ids=["heavy_splits", "no_positions", "two_fields", "sanitize", "sparse_turns"],
+)
+def test_driver_and_spark_builds_write_identical_tables(
+    spark, monkeypatch, tmp_path, index_state, corpus_pdf, params, sparse
+):
+    """A small bare-parquet build staged on the driver (one Arrow
+    collect, the append's kernel with the exact-df heavy map, pyarrow
+    writes) and the Spark pipeline write the same index: postings bytes,
+    rows, schemas, term_dict, build_metrics, conv_offsets and manifest
+    stats — and still do after a driver append on top of each."""
+    from emailindexer_spark.streaming.ingest import incremental_append
+
+    convs = corpus_pdf.conv_id.unique()
+    keep = set(convs[: 3 * len(convs) // 4])
+    base = corpus_pdf[corpus_pdf.conv_id.isin(keep)]
+    batch = corpus_pdf[~corpus_pdf.conv_id.isin(keep)]
+    if sparse:  # every other conversation's turns numbered 0, 2, 4, ...
+        odd = base.conv_id.isin(set(convs[1::2]))
+        base = base.assign(turn_idx=base.turn_idx.where(~odd, base.turn_idx * 2))
+    src = _parquet(tmp_path, base.sample(frac=1, random_state=5))
+    states = {}
+    for path in ("driver", "spark"):
+        d = str(tmp_path / path)
+        man = _build_on(spark, monkeypatch, path, d, src, **params)
+        assert man.is_complete("conv_offsets") == (not sparse)
+        states[path] = [index_state(d)]
+        incremental_append(spark, d, spark.createDataFrame(batch))
+        states[path].append(index_state(d))
+    a, b = states["driver"], states["spark"]
+    assert a[0]["postings"] and any(sid > 0 for _t, sid in a[0]["postings"])
+    for when, sa, sb in zip(("build", "append"), a, b):
+        assert sa.keys() == sb.keys()
+        for k in sa:
+            assert sa[k] == sb[k], (when, k)
+
+
+@pytest.mark.slow
+def test_small_build_path_and_jobs(spark, spark_jobs, monkeypatch, tmp_path, corpus_pdf):
+    """A bare-parquet build within the caps runs two Spark jobs: the
+    read's schema inference and the Arrow collect.  A filtered input and
+    an input over either cap take the Spark pipeline."""
+    import emailindexer_spark.plans.builder as B
+
+    src = _parquet(tmp_path, corpus_pdf)
+    d = str(tmp_path / "ix")
+    jobs = spark_jobs(
+        lambda: IndexBuilder(spark, d, num_parts=8).build(spark.read.parquet(src))
+    )
+    assert len(jobs) <= 2, jobs
+    man = Manifest.load_or_create(d)
+    assert {st["path"] for st in man.stages.values()} == {"driver"}
+    assert man.stats["n_rows"] == len(corpus_pdf)
+
+    filtered = spark.read.parquet(src).where(F.col("turn_idx") >= 0)
+    assert IndexBuilder(spark, d, num_parts=8).build(filtered).stages["postings"]["path"] == "spark"
+    rows, nbytes = B.exact_input_size(spark.read.parquet(src))
+    assert rows == len(corpus_pdf) and 0 < nbytes <= B.DRIVER_MAX_INPUT_BYTES
+    for cap, over in (("DRIVER_MAX_TURNS", rows - 1), ("DRIVER_MAX_INPUT_BYTES", nbytes - 1)):
+        with monkeypatch.context() as m:
+            m.setattr(B, cap, over)
+            man = IndexBuilder(spark, d, num_parts=8).build(spark.read.parquet(src))
+        assert {st["path"] for st in man.stages.values()} == {"spark"}, cap
+
+
+def test_validate_raises_on_both_paths(spark, tmp_path, build_path, corpus_pdf):
+    bad = corpus_pdf.head(200).assign(turn_idx=lambda x: x.turn_idx + 1)
+    src = _parquet(tmp_path, bad)
+    with pytest.raises(ValueError, match="turn_idx is not dense from 0 within some conv_id"):
+        IndexBuilder(spark, str(tmp_path / "ix"), validate=True).build(spark.read.parquet(src))
+
+
+@pytest.mark.slow
+def test_fresh_driver_build_replaces_an_existing_index(
+    spark, monkeypatch, tmp_path, index_state, corpus_pdf
+):
+    """A fresh build over an index that has seen appends and a
+    compaction leaves none of its files, stages or stats behind: the
+    directory equals a build of the same input into an empty one."""
+    from emailindexer_spark.streaming.compact import compact_index
+    from emailindexer_spark.streaming.ingest import incremental_append
+
+    old, new = corpus_pdf.head(1500), corpus_pdf.tail(1000)
+    d, ref = str(tmp_path / "ix"), str(tmp_path / "ref")
+    _build_on(spark, monkeypatch, "driver", d, _parquet(tmp_path, old, "old.parquet"))
+    incremental_append(spark, d, spark.createDataFrame(old.assign(conv_id="zz_" + old.conv_id)))
+    compact_index(spark, d)
+    src = _parquet(tmp_path, new, "new.parquet")
+    _build_on(spark, monkeypatch, "driver", d, src)
+    _build_on(spark, monkeypatch, "driver", ref, src)
+
+    def files(root):
+        return sorted(
+            os.path.relpath(os.path.join(r, f), root)
+            for r, _dirs, names in os.walk(root)
+            for f in names
+            if os.path.basename(r) != "_snapshots"
+        )
+
+    assert files(d) == files(ref)
+    assert index_state(d) == index_state(ref)

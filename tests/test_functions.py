@@ -686,3 +686,20 @@ class TestFrameDecode:
         d, t, n = _decode_frame_postings(pdf)
         assert d.size == t.size == n.size == 0
         assert _decode_frame_docs(pdf).size == 0
+
+    def test_frame_decode_rejects_empty_blocks(self):
+        """An empty block would shift every later doc id of the frame;
+        the decoders raise instead."""
+        from emailindexer_spark.functions.codec import varbyte_encode
+        from emailindexer_spark.plans.planner import (
+            _decode_frame_docs,
+            _segmented_delta_docs,
+        )
+
+        buf = varbyte_encode(np.array([0, 2, 0, 1], dtype=np.uint64))
+        firsts = np.array([5, 9, 20])
+        with pytest.raises(ValueError, match="non-empty"):
+            _segmented_delta_docs(buf, firsts, np.array([2, 0, 2]))
+        pdf = pd.DataFrame({"term": ["t"], "b_first": [[5, 20]], "b_docs": [[buf, b""]]})
+        with pytest.raises(ValueError, match="non-empty"):
+            _decode_frame_docs(pdf)

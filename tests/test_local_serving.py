@@ -224,6 +224,18 @@ def test_local_decoders_match_block_kernels(engines):
     assert (local._local_decode_docs(drows) == np.unique(np.concatenate(exp_d))).all()
 
 
+def test_local_finish_rejects_offsets_not_starting_at_doc_0():
+    """Conversation labels are positional in the offsets table: a first
+    range not starting at doc 0 would mislabel every hit, so it raises."""
+    from types import SimpleNamespace
+
+    conv_ids = np.array(["a", "b"], dtype=object)
+    eng = SimpleNamespace(_off_bc=SimpleNamespace(value=(conv_ids, np.array([1, 4]))))
+    for mode in ("turns", "conversations"):
+        with pytest.raises(ValueError, match="start at doc 0"):
+            SearchEngine._local_finish(eng, np.array([1, 5]), np.array([1.0, 2.0]), 10, mode)
+
+
 def test_local_finish_conversations_collapse_fuzz():
     """The grouped-reduceat conversation collapse in _local_finish must
     pick exactly the winners of the reference algorithm (full

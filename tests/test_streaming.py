@@ -34,10 +34,10 @@ def corpus3(corpus_pdf):
 def append_path(request, monkeypatch):
     """Run the test's appends on one path: the driver path takes every
     batch the tests use; a negative cap forces the Spark pipeline."""
-    import emailindexer_spark.streaming.ingest as ING
+    import emailindexer_spark.plans.builder as B
 
     if request.param == "spark":
-        monkeypatch.setattr(ING, "DRIVER_APPEND_MAX_TURNS", -1)
+        monkeypatch.setattr(B, "DRIVER_MAX_TURNS", -1)
     return request.param
 
 
@@ -414,47 +414,6 @@ def test_compact_merges_ingested_splits(spark, corpus3):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def _index_state(spark, d):
-    """Everything an append writes, file names and layout aside:
-    postings rows per (term, split_id) byte for byte (plus ``part``),
-    the other tables' rows, the Spark-read schema of every table, and
-    the manifest's stats and stages (timings aside)."""
-    from emailindexer_spark.sources.checkpoint import Manifest
-    from emailindexer_spark.streaming.ingest import _TABLES
-
-    post = {}
-    for f in _postings_files(d):
-        for r in papq.read_table(f).to_pylist():
-            r["part"] = f.split("part=")[1].split(os.sep)[0]
-            post[(r["term"], r["split_id"])] = repr(sorted(r.items()))
-    state = {"postings": post}
-    for t in ("doc_index", "doc_stats"):
-        state[t] = sorted(
-            (tuple(r) for r in spark.read.parquet(os.path.join(d, t)).collect()),
-            key=lambda r: r[0],
-        )
-    state["term_dict"] = sorted(
-        tuple(r) for r in spark.read.parquet(os.path.join(d, "term_dict")).collect()
-    )
-    state["conv_offsets"] = sorted(
-        tuple(r.values())
-        for f in glob.glob(os.path.join(d, "conv_offsets", "*.parquet"))
-        for r in papq.read_table(f).to_pylist()
-    )
-    state["schemas"] = {
-        t: spark.read.parquet(os.path.join(d, t)).schema
-        for t in _TABLES
-        if os.path.isdir(os.path.join(d, t))
-    }
-    man = Manifest.load_or_create(d)
-    state["stats"] = man.stats
-    state["stages"] = {
-        k: {x: y for x, y in v.items() if x not in ("committed_at", "seconds", "path")}
-        for k, v in man.stages.items()
-    }
-    return state
-
-
 @pytest.mark.slow
 @pytest.mark.parametrize(
     "params,steps",
@@ -467,12 +426,14 @@ def _index_state(spark, d):
     ],
     ids=["positions", "no_positions", "two_fields"],
 )
-def test_driver_and_spark_appends_write_identical_tables(spark, monkeypatch, corpus3, params, steps):
+def test_driver_and_spark_appends_write_identical_tables(
+    spark, monkeypatch, index_state, corpus3, params, steps
+):
     """The driver path (a collected batch tokenized, encoded and written
     with pyarrow) and the Spark pipeline stage the same index: identical
     postings bytes, rows, schemas, term_dict, conv_offsets and manifest
     stats after every append."""
-    import emailindexer_spark.streaming.ingest as ING
+    import emailindexer_spark.plans.builder as B
     from emailindexer_spark.sources.checkpoint import Manifest
 
     base, b1, _ = corpus3
@@ -499,12 +460,12 @@ def test_driver_and_spark_appends_write_identical_tables(spark, monkeypatch, cor
         for i, step in enumerate(steps, start=1):
             states = {}
             for p, d in dirs.items():
-                cap = ING.DRIVER_APPEND_MAX_TURNS if p == "driver" else -1
+                cap = B.DRIVER_MAX_TURNS if p == "driver" else -1
                 with monkeypatch.context() as m:
-                    m.setattr(ING, "DRIVER_APPEND_MAX_TURNS", cap)
+                    m.setattr(B, "DRIVER_MAX_TURNS", cap)
                     incremental_append(spark, d, spark.createDataFrame(batches[step], schema))
                 assert Manifest.load_or_create(d).stages[f"ingest_{i:06d}"]["path"] == p
-                states[p] = _index_state(spark, d)
+                states[p] = index_state(d)
             a, b = states["driver"], states["spark"]
             assert a.keys() == b.keys()
             for k in a:
@@ -516,36 +477,46 @@ def test_driver_and_spark_appends_write_identical_tables(spark, monkeypatch, cor
 
 @pytest.mark.slow
 def test_small_append_runs_at_most_one_job(spark, spark_jobs, index_dir, corpus_pdf):
-    """A small batch is collected once and staged on the driver; the
-    manifest records the path and the stage's seconds."""
+    """A small batch is collected once and staged on the driver, through
+    the bounded collect or, for a bare parquet batch the footers show
+    is small, a whole one; the manifest records the path and the
+    stage's seconds."""
     from emailindexer_spark.sources.checkpoint import Manifest
 
     root = tempfile.mkdtemp(prefix="ix_small_")
     try:
         d = os.path.join(root, "ix")
         shutil.copytree(index_dir, d)
-        batch = spark.createDataFrame(corpus_pdf.head(300).assign(conv_id=lambda x: "zz_" + x.conv_id))
-        assert len(spark_jobs(lambda: incremental_append(spark, d, batch))) <= 1
-        st = Manifest.load_or_create(d).stages["ingest_000001"]
-        assert st["path"] == "driver" and st["seconds"] > 0
-        assert SearchEngine(spark, d).n_rows == len(corpus_pdf) + 300
+        head = corpus_pdf.head(300)
+        pq = os.path.join(root, "b.parquet")
+        head.assign(conv_id=lambda x: "zy_" + x.conv_id).to_parquet(pq, index=False)
+        for i, batch in enumerate(
+            [spark.createDataFrame(head.assign(conv_id=lambda x: "zz_" + x.conv_id)), spark.read.parquet(pq)],
+            start=1,
+        ):
+            assert len(spark_jobs(lambda: incremental_append(spark, d, batch))) <= 1
+            st = Manifest.load_or_create(d).stages[f"ingest_{i:06d}"]
+            assert st["path"] == "driver" and st["seconds"] > 0
+            assert SearchEngine(spark, d).n_rows == len(corpus_pdf) + 300 * i
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
 
 @pytest.mark.slow
 def test_engine_open_runs_no_job_and_reads_inferred_schemas(spark, spark_jobs, monkeypatch, index_dir, corpus_pdf):
-    """SearchEngine reads its tables with schemas derived from a parquet
-    footer: an open runs no Spark job, and every table's schema is the
-    one spark.read.parquet infers — after the build, after each kind of
-    append on each path, and after compaction."""
-    import emailindexer_spark.streaming.ingest as ING
+    """SearchEngine reads its tables on first use, with schemas derived
+    from a parquet footer: an open runs no Spark job, and every table's
+    schema is the one spark.read.parquet infers — after the build,
+    after each kind of append on each path, and after compaction."""
+    import emailindexer_spark.plans.builder as B
     from emailindexer_spark.streaming.compact import compact_index
 
     def check(d, when):
         engs = []
         assert spark_jobs(lambda: engs.append(SearchEngine(spark, d))) == [], when
         eng = engs[0]
+        # the Spark-side tables are read on first use, not at open
+        assert not {"postings", "doc_stats", "term_dict", "doc_index"} & eng.__dict__.keys()
         for t, df in [
             ("postings", eng.postings),
             ("doc_stats", eng.doc_stats),
@@ -566,7 +537,7 @@ def test_engine_open_runs_no_job_and_reads_inferred_schemas(spark, spark_jobs, m
         incremental_append(spark, d, spark.createDataFrame(cont))
         check(d, "driver continuing append")
         with monkeypatch.context() as m:
-            m.setattr(ING, "DRIVER_APPEND_MAX_TURNS", -1)
+            m.setattr(B, "DRIVER_MAX_TURNS", -1)
             incremental_append(spark, d, spark.createDataFrame(new.assign(conv_id=lambda x: "zy_" + x.conv_id)))
         check(d, "spark append")
         compact_index(spark, d)

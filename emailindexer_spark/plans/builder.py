@@ -597,7 +597,8 @@ DRIVER_MAX_TURNS = 20_000
 #: of 9.9 MB 303 MB, and 2k and 4k turns of ten-fold bodies (9.4 and
 #: 18.7 MB) 317 and 612 MB — ~32 bytes held per input byte.  The cap
 #: admits 20k turns of the fixture's bodies, and longer bodies only in
-#: fewer turns, so the driver holds at most ~400 MB.
+#: fewer turns, so the driver holds at most ~400 MB.  An append applies
+#: it to its collected batch's Arrow bytes (streaming/ingest.py).
 DRIVER_MAX_INPUT_BYTES = 12 << 20
 
 

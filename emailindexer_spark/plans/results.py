@@ -2,8 +2,9 @@
 
 A search the driver-local tier answers already holds its rows in a
 small pandas frame.  :class:`LocalResult` is a ``pyspark`` DataFrame over
-that frame: ``collect``, ``toPandas``, ``count``, ``columns`` and
-``schema`` answer from the frame with no Python-JVM round trip, and
+that frame: ``collect``, ``toPandas``, ``count``, ``columns``,
+``schema``, ``isEmpty`` and ``limit`` (so ``take``, ``head`` and
+``first``) answer from the frame with no Python-JVM round trip, and
 every other DataFrame use (``withColumn``, ``unionByName``, joins,
 ``show``, ``cache``, ...) builds the JVM relation on first use, with the
 same ``createDataFrame(frame, schema)`` a plain result would have run.
@@ -91,3 +92,14 @@ class LocalResult(DataFrame):
 
     def toPandas(self) -> pd.DataFrame:
         return self._pdf.copy()
+
+    def isEmpty(self) -> bool:
+        return not len(self._pdf)
+
+    def limit(self, num: int) -> DataFrame:
+        """The first ``num`` rows, as a LocalResult; ``take``,
+        ``head`` and ``first`` go through it.  A negative ``num`` is
+        left to the JVM, which rejects it."""
+        if not isinstance(num, int) or num < 0:
+            return super().limit(num)
+        return LocalResult(self._pdf.iloc[:num], self._ddl, self._session)

@@ -12,8 +12,9 @@ rows with a fresh ``split_id`` per ingest batch, in the same format and
 
 Two paths stage a batch, and write the same bytes (test-gated):
 
-* a batch of at most ``plans/builder.DRIVER_MAX_TURNS`` turns — every
-  micro-batch of a live feed — is collected with ONE bounded Arrow
+* a batch of at most ``plans/builder.DRIVER_MAX_TURNS`` turns and
+  ``DRIVER_MAX_INPUT_BYTES`` of collected Arrow — every micro-batch of a
+  live feed — is collected with ONE bounded Arrow
   collect and staged on the driver by plans/builder._stage_on_driver:
   docIDs from a stable (conv_id, turn_idx) sort, dl/norm from the
   build's token counter, the tokenizer and encoder called in-process,
@@ -243,7 +244,9 @@ def incremental_append(
 
     ``batch_id`` (Structured Streaming's ``foreachBatch`` id) makes the
     append idempotent: an id already committed in the manifest is a
-    no-op replay.  A batch of at most builder.DRIVER_MAX_TURNS turns is
+    no-op replay.  A batch of at most builder.DRIVER_MAX_TURNS turns,
+    whose collected Arrow table holds at most
+    builder.DRIVER_MAX_INPUT_BYTES (long bodies in few turns do not), is
     staged on the driver, with no Spark job past its one collect; a
     larger one by the build's Spark pipeline.
     """
@@ -301,7 +304,7 @@ def incremental_append(
     )
     cap = builder.DRIVER_MAX_TURNS
     rows = batch.limit(cap + 1).toArrow()
-    if rows.num_rows <= cap:
+    if rows.num_rows <= cap and rows.nbytes <= builder.DRIVER_MAX_INPUT_BYTES:
         path = "driver"
         st = _stage_on_driver(rows, **stage)
         n_batch, totals, oo = st.n_rows, st.totals, st.offsets

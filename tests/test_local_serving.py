@@ -98,7 +98,13 @@ def test_local_tier_survives_append_and_compaction(spark, corpus_pdf):
     """Appends of new conversations extend conv_offsets, so the local
     tier stays engaged and equals the distributed tier — whose
     (conv_id, turn_idx) come from the doc_stats join here, not from the
-    artifact — on the appended index and again after compaction."""
+    artifact — on an index with two appends (several files per part)
+    and again after compaction.  The local tier is checked twice: from
+    resident parts, and over the residency cap (LOCAL_MAX_POSTINGS just
+    below the index's postings, above every query's), where each query
+    scans the part files."""
+    import glob
+    import os
     import shutil
     import tempfile
 
@@ -107,31 +113,45 @@ def test_local_tier_survives_append_and_compaction(spark, corpus_pdf):
     from emailindexer_spark.streaming.ingest import incremental_append
 
     convs = corpus_pdf["conv_id"].unique()
-    cut = set(convs[: 2 * len(convs) // 3])
-    base = corpus_pdf[corpus_pdf.conv_id.isin(cut)]
-    batch = corpus_pdf[~corpus_pdf.conv_id.isin(cut)]
+    cut1, cut2 = set(convs[: 2 * len(convs) // 3]), set(convs[: 5 * len(convs) // 6])
+    base = corpus_pdf[corpus_pdf.conv_id.isin(cut1)]
+    batches = (
+        corpus_pdf[corpus_pdf.conv_id.isin(cut2 - cut1)],
+        corpus_pdf[~corpus_pdf.conv_id.isin(cut2)],
+    )
 
-    def pair():
+    def engines():
         local = SearchEngine(spark, d)
+        over = SearchEngine(spark, d)
+        over.LOCAL_MAX_POSTINGS = int(local._driver_vocab()[1].sum()) - 1
         dist = SearchEngine(spark, d)
         dist._local_search = lambda *a, **k: None
         dist._off_bc = None  # conv/turn from doc_stats, not the artifact
-        return local, dist
+        return local, over, dist
+
+    def check():
+        local, over, dist = engines()
+        assert local._off_bc is not None
+        _assert_tiers_agree(local, dist)
+        _assert_tiers_agree(over, dist)
+        assert local._resident and not over._resident
+        rare, mid, heavy = _terms(local)
+        assert sum(local.term_dfs({rare, mid, heavy}).values()) < over.LOCAL_MAX_POSTINGS
+        _assert_batches_agree(local, over, dist)
 
     d = tempfile.mkdtemp(prefix="ix_tier_append_")
     try:
         IndexBuilder(spark, d, num_parts=8, heavy_df_threshold=500, split_target=400).build(
             spark.createDataFrame(base)
         )
-        incremental_append(spark, d, spark.createDataFrame(batch))
-        local, dist = pair()
-        assert local.n_rows == len(corpus_pdf)
-        assert local._off_bc is not None
-        _assert_tiers_agree(local, dist)
+        for batch in batches:
+            incremental_append(spark, d, spark.createDataFrame(batch))
+        assert SearchEngine(spark, d).n_rows == len(corpus_pdf)
+        parts = glob.glob(os.path.join(d, "postings", "part=*"))
+        assert parts and all(len(glob.glob(os.path.join(p, "*.parquet"))) > 1 for p in parts)
+        check()
         compact_index(spark, d)
-        local, dist = pair()
-        assert local._off_bc is not None
-        _assert_tiers_agree(local, dist)
+        check()
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -179,9 +199,16 @@ def test_budget_fallback_is_distributed_and_equal(engines):
         del local.LOCAL_MAX_POSTINGS  # restore the class attribute
 
 
-def test_search_many_mixed_local_and_distributed(engines):
-    local, dist = engines
-    rare, mid, heavy = _terms(local)
+def _batch_rows(df):
+    return sorted(
+        (r.query_id, r.rank, r.doc_id, r.conv_id, r.turn_idx, round(r.score, 9))
+        for r in df.collect()
+    )
+
+
+def _assert_batches_agree(*engs):
+    """A mixed search_many batch gives the same rows from every engine."""
+    rare, mid, heavy = _terms(engs[0])
     batch = {
         "a": (rare, 5, "turns"),
         "b": (f"{mid} AND {heavy}", 5, "turns"),
@@ -189,15 +216,12 @@ def test_search_many_mixed_local_and_distributed(engines):
         "d": (f"{rare} {heavy}", 5, "conversations"),
         "e": (mid[:2] + "*", 8, "turns"),
     }
-    a = sorted(
-        (r.query_id, r.rank, r.doc_id, r.conv_id, r.turn_idx, round(r.score, 9))
-        for r in local.search_many(batch, use_wand=False).collect()
-    )
-    b = sorted(
-        (r.query_id, r.rank, r.doc_id, r.conv_id, r.turn_idx, round(r.score, 9))
-        for r in dist.search_many(batch, use_wand=False).collect()
-    )
-    assert a == b
+    got = [_batch_rows(eng.search_many(batch, use_wand=False)) for eng in engs]
+    assert got[0] and all(g == got[0] for g in got[1:])
+
+
+def test_search_many_mixed_local_and_distributed(engines):
+    _assert_batches_agree(*engines)
 
 
 def test_local_decoders_match_block_kernels(engines):
@@ -222,6 +246,136 @@ def test_local_decoders_match_block_kernels(engines):
     assert (norms == np.concatenate(exp_n)).all()
     drows = local._local_posting_rows({heavy}, local.LOCAL_DOCS_COLS)
     assert (local._local_decode_docs(drows) == np.unique(np.concatenate(exp_d))).all()
+
+
+def test_resident_parts_serve_without_reading_files(spark, monkeypatch, engines, index_dir):
+    """After a part's first touch, searches of any term in it read no
+    file: with pyarrow's readers patched to raise, a repeated search and
+    a second term of the same part still answer, and equal the
+    distributed tier.  An engine over the residency cap reads per query,
+    so the same patch breaks it."""
+    import pyarrow.dataset
+    import pyarrow.parquet
+
+    from emailindexer_spark.plans.builder import term_part_py
+
+    _, dist = engines
+    eng = SearchEngine(spark, index_dir)
+    over = SearchEngine(spark, index_dir)
+    over.LOCAL_MAX_POSTINGS = int(eng._driver_vocab()[1].sum()) - 1
+    vocab, _dfs, _parts = eng._driver_vocab()
+    _rare, mid, _heavy = _terms(eng)
+    part = term_part_py(mid, eng.num_parts)
+    other = next(t for t in vocab if t != mid and term_part_py(t, eng.num_parts) == part)
+    first = _rows(eng.search(mid, k=10))
+    want = [_rows(dist.search(q, k=10)) for q in (mid, other, f'"{mid} {other}"')]
+    assert first == want[0] and list(eng._resident) == [part]
+    assert _rows(over.search(mid, k=10)) == want[0] and not over._resident
+
+    def boom(*a, **k):
+        raise RuntimeError("postings read after residency")
+
+    monkeypatch.setattr(pyarrow.parquet, "read_table", boom)
+    monkeypatch.setattr(pyarrow.dataset, "dataset", boom)
+    assert [_rows(eng.search(q, k=10)) for q in (mid, other, f'"{mid} {other}"')] == want
+    with pytest.raises(RuntimeError, match="after residency"):
+        over.search(mid, k=10)
+
+
+def test_concurrent_first_touches_load_each_part_once(spark, monkeypatch, index_dir):
+    """search_many plans queries in driver threads: racing first
+    touches of the same parts load each part's files once, and every
+    thread reads the rows a single-threaded engine reads."""
+    import sys
+    import threading
+    from collections import Counter
+
+    import pandas as pd
+
+    import emailindexer_spark.plans.planner as P
+
+    ref = SearchEngine(spark, index_dir)
+    vocab, _dfs, _parts = ref._driver_vocab()
+    term_sets = [set(vocab[i::7][:40]) for i in range(7)]
+    want = [ref._local_posting_rows(ts, ref.SCORE_COLS) for ts in term_sets]
+    loads = Counter()
+    load = P._load_sorted_postings
+
+    def counted(path):
+        loads[path] += 1
+        return load(path)
+
+    monkeypatch.setattr(P, "_load_sorted_postings", counted)
+    eng = SearchEngine(spark, index_dir)
+    got, errors = {}, []
+
+    def work(i):
+        try:
+            got[i] = eng._local_posting_rows(term_sets[i % 7], eng.SCORE_COLS)
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert loads and set(loads.values()) == {1}
+    for i in range(16):
+        pd.testing.assert_frame_equal(got[i], want[i % 7])
+
+
+def test_unsorted_postings_file_raises(spark, tmp_path, index_dir):
+    """Slicing relies on every postings file being term-sorted: a part
+    file that is not fails the search loudly, naming the file."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as papq
+
+    from emailindexer_spark.plans.builder import term_part_py
+
+    d = str(tmp_path / "ix")
+    shutil.copytree(index_dir, d)
+    eng = SearchEngine(spark, d)
+    _rare, mid, _heavy = _terms(eng)
+    part = term_part_py(mid, eng.num_parts)
+    f = sorted(glob.glob(os.path.join(d, "postings", f"part={part}", "*.parquet")))[0]
+    t = papq.read_table(f)
+    papq.write_table(t.take(np.arange(t.num_rows)[::-1]), f)
+    with pytest.raises(ValueError, match=f"{os.path.basename(f)} is not sorted by term"):
+        eng.search(mid, k=5)
+
+
+def test_open_and_local_search_make_no_broadcast(spark, monkeypatch, index_dir):
+    """The conv_offsets arrays reach Spark only when a distributed plan
+    needs them: with broadcast patched to raise, an engine opens and
+    serves local searches; once lifted, the same engine's distributed
+    plans (single and batched) broadcast them and agree."""
+    sc = spark.sparkContext
+
+    def boom(*a, **k):
+        raise RuntimeError("broadcast")
+
+    with monkeypatch.context() as m:
+        m.setattr(sc, "broadcast", boom)
+        eng = SearchEngine(spark, index_dir)
+        assert eng._off_bc is not None
+        rare, mid, heavy = _terms(eng)
+        qs = {"a": (f"{rare} {mid} {heavy}", 8, "turns"), "b": (f"{mid} {heavy}", 8, "conversations")}
+        local = [_rows(eng.search(q, k=k, mode=mode)) for q, k, mode in qs.values()]
+        local_many = _batch_rows(eng.search_many(qs, use_wand=False))
+    eng._local_search = lambda *a, **k: None
+    assert [_rows(eng.search(q, k=k, mode=mode)) for q, k, mode in qs.values()] == local
+    assert _batch_rows(eng.search_many(qs, use_wand=False)) == local_many
+    assert eng._off_spark is not None
 
 
 def test_local_finish_rejects_offsets_not_starting_at_doc_0():
@@ -292,10 +446,20 @@ def _typed(rows):
     return [(tuple(r), [type(v) for v in r], list(r.__fields__)) for r in rows]
 
 
+def _row_calls(df):
+    """take / head / first / isEmpty / limit answers of a DataFrame."""
+    lim = df.limit(3)
+    return (
+        df.take(2), df.take(0), df.take(100), df.head(), df.head(3), df.first(),
+        df.isEmpty(), lim.collect(), lim.count(), df.limit(0).collect(),
+    )
+
+
 def test_local_result_matches_its_jvm_relation(spark, spark_jobs, engines):
-    """collect / toPandas / count / columns / schema served on the
-    driver equal the JVM relation the same result builds, in values and
-    Python types; an empty result's relation collects with no job."""
+    """collect / toPandas / count / columns / schema and the row calls
+    (take / head / first / isEmpty / limit) served on the driver equal
+    the JVM relation the same result builds, in values and Python
+    types; an empty result's relation collects with no job."""
     import pandas as pd
     from pyspark.sql.classic.dataframe import DataFrame
 
@@ -313,6 +477,12 @@ def test_local_result_matches_its_jvm_relation(spark, spark_jobs, engines):
         assert _typed(got[0]) == _typed(jvm.collect()), (q, mode)
         pd.testing.assert_frame_equal(got[1], jvm.toPandas())
         assert got[2:] == (jvm.count(), jvm.columns, jvm.schema), (q, mode)
+        mine, theirs = _row_calls(res), _row_calls(jvm)
+        assert [_typed(x) if isinstance(x, list) else x for x in mine] == [
+            _typed(x) if isinstance(x, list) else x for x in theirs
+        ], (q, mode)
+        assert isinstance(res.limit(3), LocalResult)
+        pd.testing.assert_frame_equal(res.limit(3).toPandas(), jvm.limit(3).toPandas())
 
 
 def test_local_result_driver_calls_build_no_relation(spark_jobs, engines):
@@ -323,7 +493,10 @@ def test_local_result_driver_calls_build_no_relation(spark_jobs, engines):
         res = local.search(q, k=12, mode=mode, use_wand=wand)
         assert isinstance(res, PublicDataFrame)
         out = []
-        calls = (res.collect, res.toPandas, res.count, lambda: res.columns, lambda: res.schema)
+        calls = (
+            res.collect, res.toPandas, res.count, lambda: res.columns, lambda: res.schema,
+            lambda: _row_calls(res),
+        )
         assert spark_jobs(lambda: out.extend(f() for f in calls)) == [], (q, mode)
         assert "_jdf" not in res.__dict__, (q, mode)
         # toPandas hands out a copy: mutating it leaves the result intact

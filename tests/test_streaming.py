@@ -503,6 +503,31 @@ def test_small_append_runs_at_most_one_job(spark, spark_jobs, index_dir, corpus_
 
 
 @pytest.mark.slow
+def test_append_of_long_bodies_takes_the_spark_path(spark, monkeypatch, index_dir, corpus_pdf):
+    """An append's driver path is bounded by the collected batch's bytes
+    as well as its turns: a few turns whose bodies exceed
+    DRIVER_MAX_INPUT_BYTES (read through plans/builder at call time)
+    take the Spark pipeline, and stay searchable."""
+    import emailindexer_spark.plans.builder as B
+    from emailindexer_spark.sources.checkpoint import Manifest
+
+    root = tempfile.mkdtemp(prefix="ix_bytes_")
+    try:
+        d = os.path.join(root, "ix")
+        shutil.copytree(index_dir, d)
+        body = " ".join(["xlongbody"] + ["lorem ipsum dolor"] * 200)
+        batch = corpus_pdf.head(3).assign(conv_id=lambda x: "zz_" + x.conv_id, text=body)
+        assert len(body) * 3 > 2000
+        monkeypatch.setattr(B, "DRIVER_MAX_INPUT_BYTES", 2000)
+        incremental_append(spark, d, spark.createDataFrame(batch))
+        assert Manifest.load_or_create(d).stages["ingest_000001"]["path"] == "spark"
+        hits = SearchEngine(spark, d).search("xlongbody", k=10).collect()
+        assert sorted(r.conv_id for r in hits) == sorted(batch.conv_id)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.slow
 def test_engine_open_runs_no_job_and_reads_inferred_schemas(spark, spark_jobs, monkeypatch, index_dir, corpus_pdf):
     """SearchEngine reads its tables on first use, with schemas derived
     from a parquet footer: an open runs no Spark job, and every table's

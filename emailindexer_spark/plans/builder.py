@@ -38,15 +38,18 @@ Replaces the reference's sequential paged scan → Lucene IndexWriter loop
 
 Every stage commits a snapshot in the manifest (sources/checkpoint.py);
 ``build(resume=True)`` skips committed stages, reproducing byte-identical
-postings after a mid-build kill.
+postings after a mid-build kill.  (A driver build, below, commits all of
+its stages in one manifest write.)
 
 Small builds skip the pipeline: a fresh build of a bare local parquet
 input of at most ``DRIVER_MAX_TURNS`` rows and ``DRIVER_MAX_INPUT_BYTES``
-bytes is one Arrow collect staged on the driver by the append's kernel
-(``_stage_on_driver``),
-which writes the same tables, stages and stats (test-gated).  Spark's
-fixed per-job costs dominate an input that small; the index's first
-write is then an ordinary commit, like every small append after it.
+bytes reads its files with pyarrow (``read_bare_parquet``, the table
+Spark's Arrow collect would return; the collect where it cannot map
+them) and stages them on the driver with the append's kernel
+(``_stage_on_driver``), which writes the same tables, stages and stats
+(test-gated).  Spark's fixed per-job costs dominate an input that
+small; the index's first write is then an ordinary commit — one
+manifest write — like every small append after it.
 
 Scale notes (the 100 TB story):
 * the token stream is materialized exactly once, map-side, flowing
@@ -154,43 +157,85 @@ def write_conv_offsets(
     os.replace(tmp, dest)
 
 
-def exact_input_size(df: DataFrame) -> tuple[int, int] | None:
-    """Exact (rows, uncompressed column bytes) of a BARE parquet-relation
-    DataFrame, read from the file footers — no Spark job, ~ms.  Returns
-    None unless the optimized plan is a plain ``LogicalRelation`` (any
-    filter/union/projection on top would make the footer counts wrong)
-    and every input file's metadata is readable.  A build reads it at
-    entry to choose the driver path (IndexBuilder.build) and to start
-    the heavy-term sample before docid assignment finishes; callers
-    must fall back to the exact post-docid count when this returns
-    None."""
-    try:
-        if (
-            df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
-            != "LogicalRelation"
-        ):
-            return None
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
+class BareParquet(NamedTuple):
+    """A bare local parquet relation's files and their footer counts."""
+
+    files: list[str]  # local paths, in the relation's listing order
+    rows: int
+    nbytes: int  # uncompressed column bytes
+
+
+def bare_parquet(df: DataFrame) -> BareParquet | None:
+    """The files of a BARE local parquet-relation DataFrame, with its
+    exact row count and uncompressed column bytes read from the footers
+    — no Spark job, ~ms.  None unless the analyzed plan is a plain
+    ``LogicalRelation`` (any filter, union or projection on top would
+    make the files and counts wrong) and every file is local with a
+    readable parquet footer.  A build reads it at entry to choose the
+    driver path (IndexBuilder.build) and to start the heavy-term sample
+    before docid assignment finishes; callers must fall back to the
+    exact post-docid count when this returns None.  read_bare_parquet
+    reads the rows."""
     from urllib.parse import unquote, urlparse
 
     import pyarrow.parquet as papq
 
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        uris = list(plan.relation().inputFiles())
+    except Exception:
+        return None
+    if not uris:
+        return None
+    files = []
     rows = nbytes = 0
-    for f in files:
+    for f in uris:
         pr = urlparse(f)
         if pr.scheme not in ("", "file"):
             return None
+        files.append(unquote(pr.path))
         try:
-            md = papq.ParquetFile(unquote(pr.path)).metadata
+            md = papq.ParquetFile(files[-1]).metadata
         except Exception:
             return None
         rows += md.num_rows
         nbytes += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
-    return rows, nbytes
+    return BareParquet(files, rows, nbytes)
+
+
+def read_bare_parquet(df: DataFrame, bp: BareParquet) -> pa.Table | None:
+    """The rows of ``df``, the relation ``bp`` describes, read with
+    pyarrow: the table ``df.toArrow()`` returns (Spark's columns, Arrow
+    types and row order), without a Spark job.  None for anything this
+    cannot map — a column the files lack (a hive partition column), a
+    type the cast refuses, files Spark would split — and the caller
+    collects."""
+    import pyarrow.parquet as papq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # the scan's row order: files by size, largest first (stable), each
+    # whole unless it exceeds the smallest split size Spark may choose
+    sizes = [os.path.getsize(f) for f in bp.files]
+    files = [f for _s, f in sorted(zip(sizes, bp.files), key=lambda x: -x[0])]
+    jconf = df.sparkSession._jconf
+    if len(files) > 1 and max(sizes) > min(
+        jconf.filesMaxPartitionBytes(), jconf.filesOpenCostInBytes()
+    ):
+        return None
+    try:
+        schema = to_arrow_schema(
+            df.schema,
+            error_on_duplicated_field_names_in_struct=True,
+            prefers_large_types=jconf.arrowUseLargeVarTypes(),
+        )
+        # a column the files lack raises, as does a lossy cast
+        return pa.concat_tables(
+            papq.read_table(f, columns=schema.names).cast(schema) for f in files
+        ).replace_schema_metadata(None)
+    except Exception:
+        return None
 
 
 def ensure_parallelism(df: DataFrame, target: int) -> DataFrame:
@@ -925,33 +970,41 @@ class IndexBuilder:
         A fresh build whose input is a bare local parquet relation of at
         most DRIVER_MAX_TURNS rows and DRIVER_MAX_INPUT_BYTES uncompressed
         bytes (counted from the footers, no Spark job), whose heavy-term
-        sample would be exact, is staged on the driver: one Arrow
-        collect, then the append's staging kernel (_stage_on_driver) at
-        base 0 and split 0 with the exact-df heavy map, every table
-        written with pyarrow.  Any other input — larger, filtered or
-        remote — and every resume take the Spark pipeline below.  Both
-        paths write the same tables, stages and stats, and every stage
-        records which ``path`` ran and its ``seconds``."""
+        sample would be exact, is staged on the driver: its files read
+        with pyarrow (read_bare_parquet; an Arrow collect where that
+        cannot map them, e.g. hive partition columns), then the append's
+        staging kernel (_stage_on_driver) at base 0 and split 0 with the
+        exact-df heavy map, every table written with pyarrow, and every
+        stage and stat committed in ONE manifest write
+        (Manifest.one_write: a crash commits nothing, and a resume
+        rebuilds on Spark).  Any other input — larger, filtered or
+        remote — and every resume take the Spark pipeline below, which
+        commits stage by stage so a resume can skip the finished ones.
+        Both paths write the same tables, stages and stats; every stage
+        records which ``path`` ran and its ``seconds``, and a driver
+        build's doc_index stage which ``read`` ("files" or "collect")."""
         man = Manifest.load_or_create(self.out_dir, self._params())
         if not resume:
             # a fresh build over an existing index restarts the ledger
             # and leaves none of the old tables (nor an append's or a
             # compaction's leftovers) behind
-            man.stages.clear()
-            man.stats.clear()
-            man._flush()
+            if man.stages or man.stats:
+                man.stages.clear()
+                man.stats.clear()
+                man._flush()
             for t in (*INDEX_TABLES, "postings.tmp", "postings.bak", "_staging"):
                 shutil.rmtree(man.stage_path(t), ignore_errors=True)
-        size = exact_input_size(transcripts)
-        n_meta = size[0] if size is not None else None
+        bp = bare_parquet(transcripts)
+        n_meta = bp.rows if bp is not None else None
         if (
             not resume
-            and size is not None
+            and bp is not None
             and 0 < n_meta <= DRIVER_MAX_TURNS
-            and size[1] <= DRIVER_MAX_INPUT_BYTES
+            and bp.nbytes <= DRIVER_MAX_INPUT_BYTES
             and self._sample_mod(n_meta) == 1
         ):
-            return self._build_on_driver(man, transcripts)
+            with man.one_write():
+                return self._build_on_driver(man, transcripts, bp)
 
         # SCAN parallelism floors scale with the session's cores only
         # (the wide (term, split) shuffle in write_postings also floors
@@ -1425,22 +1478,28 @@ class IndexBuilder:
             aug.unpersist(blocking=False)
         return man
 
-    def _build_on_driver(self, man: Manifest, transcripts: DataFrame) -> Manifest:
-        """The fresh build of a small bare-parquet input (see build): one
-        Arrow collect, _stage_on_driver straight into the index
+    def _build_on_driver(
+        self, man: Manifest, transcripts: DataFrame, bp: BareParquet
+    ) -> Manifest:
+        """The fresh build of a small bare-parquet input (see build): its
+        files read with pyarrow (an Arrow collect when read_bare_parquet
+        cannot map them), _stage_on_driver straight into the index
         directory, then the conv_offsets and build_metrics tables and
-        the manifest commits of the Spark pipeline."""
+        the manifest commits of the Spark pipeline, which build() holds
+        back into one manifest write."""
         if self.validate:
             validate_transcripts(transcripts)  # one Spark job
         t0 = time.perf_counter()
-        rows = transcripts.toArrow()
+        rows, read = read_bare_parquet(transcripts, bp), "files"
+        if rows is None:
+            rows, read = transcripts.toArrow(), "collect"
         if self.sanitize:
             i = rows.schema.get_field_index("text")
             clean = remove_quoted_replies(rows.column(i).to_pandas())
             rows = rows.set_column(
                 i, rows.schema.field(i), pa.array(clean, rows.schema.field(i).type)
             )
-        collect_s = time.perf_counter() - t0
+        read_s = time.perf_counter() - t0
         st = _stage_on_driver(
             rows,
             self.out_dir,
@@ -1466,7 +1525,10 @@ class IndexBuilder:
             },
         )
         man.commit_stage(
-            "doc_index", seconds=round(st.seconds["doc_index"] + collect_s, 3), path="driver"
+            "doc_index",
+            seconds=round(st.seconds["doc_index"] + read_s, 3),
+            path="driver",
+            read=read,
         )
         if st.offsets["dense"]:
             _commit_conv_offsets(man, st.offsets, "driver")

@@ -948,10 +948,16 @@ class SearchEngine:
         # then publish any append that committed its manifest entry but
         # crashed before renaming its hidden files visible
         from emailindexer_spark.streaming.compact import _repair_partial
-        from emailindexer_spark.streaming.ingest import repair_ingest_visibility
+        from emailindexer_spark.streaming.ingest import (
+            committed_tags,
+            repair_ingest_visibility,
+        )
 
         _repair_partial(self.man)
         repair_ingest_visibility(self.man)
+        # the engine answers as of this open: the files it reads later
+        # (vocabulary, postings parts) skip appends committed after it
+        self._tags = committed_tags(self.man)
         self.num_parts = int(self.man.params.get("num_parts", 32))
         self.simple = bool(self.man.params.get("simple_tokens", False))
         self.positions = bool(self.man.params.get("positions", False))
@@ -1001,6 +1007,16 @@ class SearchEngine:
         self._off_spark = None
         self._load_conv_offsets()
 
+    def _at_open(self, files: list[str]) -> list[str]:
+        """``files`` minus those of appends committed after the open
+        (``{tag}-…`` names; build and compaction files carry no tag)."""
+        return [
+            f
+            for f in files
+            if not (n := os.path.basename(f)).startswith("ing")
+            or n.split("-", 1)[0] in self._tags
+        ]
+
     def _read_table(self, name: str) -> DataFrame:
         path = os.path.join(self.index_dir, name)
         schema = footer_schema(path)
@@ -1023,7 +1039,7 @@ class SearchEngine:
         if not self.man.is_complete("conv_offsets"):
             return
         co_dir = os.path.join(self.index_dir, "conv_offsets")
-        files = glob.glob(os.path.join(co_dir, "*.parquet"))
+        files = self._at_open(glob.glob(os.path.join(co_dir, "*.parquet")))
         if not files:
             return
         import pyarrow as pa
@@ -1087,7 +1103,7 @@ class SearchEngine:
         import glob
 
         td_path = os.path.join(self.index_dir, "term_dict")
-        files = sorted(glob.glob(os.path.join(td_path, "*.parquet")))
+        files = self._at_open(sorted(glob.glob(os.path.join(td_path, "*.parquet"))))
         if not files:
             return None
         import pyarrow as pa
@@ -2028,9 +2044,8 @@ class SearchEngine:
         if files is None:
             import glob
 
-            files = sorted(
-                glob.glob(os.path.join(self.index_dir, "postings", f"part={part}", "*.parquet"))
-            )
+            pattern = os.path.join(self.index_dir, "postings", f"part={part}", "*.parquet")
+            files = self._at_open(sorted(glob.glob(pattern)))
             self._local_files[part] = files
         return files
 

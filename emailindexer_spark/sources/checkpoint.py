@@ -9,7 +9,8 @@ with the same API shape (snapshot id + per-stage lineage + metrics), so
 swapping in an Iceberg catalog is a config change, not a code change:
 each completed stage == a committed snapshot; resume skips committed
 stages (kill-and-resume reproduces byte-identical postings —
-FIXTURES.md §6.3).
+FIXTURES.md §6.3).  ``Manifest.one_write`` groups several commits into
+one atomic write (a driver-staged build's stages and stats).
 
 Layout under the index directory::
 
@@ -24,6 +25,7 @@ import os
 import threading
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -43,6 +45,8 @@ class Manifest:
     _lock: threading.Lock = field(
         default_factory=threading.Lock, repr=False, compare=False
     )
+    # inside one_write(): flushes are held back until the block exits
+    _held: bool = field(default=False, repr=False, compare=False)
 
     @property
     def path(self) -> str:
@@ -69,7 +73,23 @@ class Manifest:
             m._flush()
         return m
 
+    @contextmanager
+    def one_write(self):
+        """Hold back every manifest write inside the block and commit
+        what it recorded in ONE atomic write when it exits normally.  An
+        exception leaves the file on disk as it was before the block: a
+        crash commits none of the block's stages or stats."""
+        self._held = True
+        try:
+            yield self
+        finally:
+            self._held = False
+        with self._lock:
+            self._flush()
+
     def _flush(self) -> None:
+        if self._held:
+            return
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
         tmp = self.path + ".tmp"
         with open(tmp, "w") as f:

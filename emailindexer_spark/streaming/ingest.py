@@ -13,22 +13,25 @@ rows with a fresh ``split_id`` per ingest batch, in the same format and
 Two paths stage a batch, and write the same bytes (test-gated):
 
 * a batch of at most ``plans/builder.DRIVER_MAX_TURNS`` turns and
-  ``DRIVER_MAX_INPUT_BYTES`` of collected Arrow — every micro-batch of a
-  live feed — is collected with ONE bounded Arrow
-  collect and staged on the driver by plans/builder._stage_on_driver:
-  docIDs from a stable (conv_id, turn_idx) sort, dl/norm from the
-  build's token counter, the tokenizer and encoder called in-process,
-  every table written with pyarrow.  No Spark job runs past the
-  collect; the append costs milliseconds of numpy instead of a dozen
-  jobs' scheduling (a small append is a cheap log commit, as in Delta
-  Lake; heavy rewrites are compaction's job).  The same kernel stages
-  a small build, the index's first commit, at base 0
-  (IndexBuilder.build);
+  ``DRIVER_MAX_INPUT_BYTES`` of Arrow — every micro-batch of a live
+  feed — is read onto the driver and staged there by
+  plans/builder._stage_on_driver: docIDs from a stable (conv_id,
+  turn_idx) sort, dl/norm from the build's token counter, the tokenizer
+  and encoder called in-process, every table written with pyarrow.  A
+  bare local parquet batch whose footers count at most the cap is read
+  from its files with pyarrow (plans/builder.read_bare_parquet, no
+  Spark job); any other batch with ONE bounded Arrow collect.  No Spark
+  job runs past that read; the append costs milliseconds of numpy
+  instead of a dozen jobs' scheduling (a small append is a cheap log
+  commit, as in Delta Lake; heavy rewrites are compaction's job).  The
+  same kernel stages a small build, the index's first commit, at base
+  0 (IndexBuilder.build);
 * a larger batch takes the build's Spark pipeline (docid assignment,
   mapInPandas tokenizer, plans/builder.write_postings).
 
 Each ``ingest_*`` manifest stage records which ``path`` ran and its
-``seconds``.
+``seconds``; a driver-staged one also which ``read`` ("files" or
+"collect") fetched its rows.
 
 Because the query engine already handles multi-row posting lists whose
 rows cover disjoint doc ranges (that is what skew splits are), appended
@@ -213,6 +216,15 @@ def _unhide_tagged(live_dir: str, tag: str) -> None:
                 os.replace(os.path.join(root, fn), os.path.join(root, fn[1:]))
 
 
+def committed_tags(man: Manifest) -> set[str]:
+    """The batch tags of the appends ``man`` records as committed."""
+    return {
+        st["tag"]
+        for name, st in man.stages.items()
+        if name.startswith("ingest_") and st.get("complete") and st.get("tag")
+    }
+
+
 def repair_ingest_visibility(man: Manifest) -> None:
     """Heal a crash between manifest commit and publish: un-hide files
     whose batch tag the manifest records as committed.  Hidden files
@@ -220,11 +232,7 @@ def repair_ingest_visibility(man: Manifest) -> None:
     or crashed-uncommitted append and stay invisible (the writer's
     retry deletes them).  Run at engine open and append entry; a no-op
     scan of the table directories when nothing is pending."""
-    committed = {
-        st["tag"]
-        for name, st in man.stages.items()
-        if name.startswith("ingest_") and st.get("complete") and st.get("tag")
-    }
+    committed = committed_tags(man)
     for t in _TABLES:
         live = man.stage_path(t)
         if not os.path.isdir(live):
@@ -245,10 +253,13 @@ def incremental_append(
     ``batch_id`` (Structured Streaming's ``foreachBatch`` id) makes the
     append idempotent: an id already committed in the manifest is a
     no-op replay.  A batch of at most builder.DRIVER_MAX_TURNS turns,
-    whose collected Arrow table holds at most
-    builder.DRIVER_MAX_INPUT_BYTES (long bodies in few turns do not), is
-    staged on the driver, with no Spark job past its one collect; a
-    larger one by the build's Spark pipeline.
+    whose Arrow table holds at most builder.DRIVER_MAX_INPUT_BYTES (long
+    bodies in few turns do not), is staged on the driver; a larger one
+    by the build's Spark pipeline.  The driver gets the rows of a bare
+    local parquet batch whose footers count at most the cap from its
+    files (builder.read_bare_parquet, no Spark job), and those of any
+    other batch from one bounded Arrow collect; a bare batch over the
+    cap is not read at all.
     """
     t0 = time.perf_counter()
     man = Manifest.load_or_create(index_dir)
@@ -302,14 +313,21 @@ def incremental_append(
         block_size=int(man.params.get("block_size", 128)),
         num_parts=int(man.params.get("num_parts", 32)),
     )
+    # the batch's rows on the driver, bounded like the collect: a bare
+    # parquet batch's files when its footers count at most cap rows
     cap = builder.DRIVER_MAX_TURNS
-    rows = batch.limit(cap + 1).toArrow()
-    if rows.num_rows <= cap and rows.nbytes <= builder.DRIVER_MAX_INPUT_BYTES:
+    bp = builder.bare_parquet(batch)
+    rows = read = None
+    if bp is not None and bp.rows <= cap:
+        rows, read = builder.read_bare_parquet(batch, bp), "files"
+    if rows is None and (bp is None or bp.rows <= cap):
+        rows, read = batch.limit(cap + 1).toArrow(), "collect"
+    if rows is not None and rows.num_rows <= cap and rows.nbytes <= builder.DRIVER_MAX_INPUT_BYTES:
         path = "driver"
         st = _stage_on_driver(rows, **stage)
         n_batch, totals, oo = st.n_rows, st.totals, st.offsets
     else:
-        path = "spark"
+        path, read = "spark", None
         del rows
         n_batch, totals, oo = _stage_with_spark(spark, batch, **stage)
     fields = stage["fields"]
@@ -384,6 +402,7 @@ def incremental_append(
         rows=n_batch,
         tag=tag,
         path=path,
+        **({"read": read} if read else {}),
         seconds=round(time.perf_counter() - t0, 3),
     )
     for t in _TABLES:

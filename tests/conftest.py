@@ -77,7 +77,7 @@ def index_state(spark):
     per (term, split_id) byte for byte (plus ``part``), the other
     tables' rows (build_metrics without its snapshot_id), the Spark-read
     schema of every table, and the manifest's stats and stages (timings
-    and paths aside)."""
+    and routes aside: ``path``, ``read``)."""
     import pyarrow.parquet as papq
 
     from emailindexer_spark.plans.builder import INDEX_TABLES
@@ -114,7 +114,7 @@ def index_state(spark):
         man = Manifest.load_or_create(d)
         out["stats"] = man.stats
         out["stages"] = {
-            k: {x: y for x, y in v.items() if x not in ("committed_at", "seconds", "path")}
+            k: {x: y for x, y in v.items() if x not in ("committed_at", "seconds", "path", "read")}
             for k, v in man.stages.items()
         }
         return out

@@ -300,9 +300,10 @@ def test_driver_and_spark_builds_write_identical_tables(
 
 @pytest.mark.slow
 def test_small_build_path_and_jobs(spark, spark_jobs, monkeypatch, tmp_path, corpus_pdf):
-    """A bare-parquet build within the caps runs two Spark jobs: the
-    read's schema inference and the Arrow collect.  A filtered input and
-    an input over either cap take the Spark pipeline."""
+    """A bare-parquet build within the caps runs one Spark job, the
+    read's schema inference: its files are read with pyarrow.  A
+    filtered input and an input over either cap take the Spark
+    pipeline."""
     import emailindexer_spark.plans.builder as B
 
     src = _parquet(tmp_path, corpus_pdf)
@@ -310,14 +311,16 @@ def test_small_build_path_and_jobs(spark, spark_jobs, monkeypatch, tmp_path, cor
     jobs = spark_jobs(
         lambda: IndexBuilder(spark, d, num_parts=8).build(spark.read.parquet(src))
     )
-    assert len(jobs) <= 2, jobs
+    assert len(jobs) <= 1, jobs
     man = Manifest.load_or_create(d)
     assert {st["path"] for st in man.stages.values()} == {"driver"}
+    assert man.stages["doc_index"]["read"] == "files"
     assert man.stats["n_rows"] == len(corpus_pdf)
 
     filtered = spark.read.parquet(src).where(F.col("turn_idx") >= 0)
     assert IndexBuilder(spark, d, num_parts=8).build(filtered).stages["postings"]["path"] == "spark"
-    rows, nbytes = B.exact_input_size(spark.read.parquet(src))
+    bp = B.bare_parquet(spark.read.parquet(src))
+    rows, nbytes = bp.rows, bp.nbytes
     assert rows == len(corpus_pdf) and 0 < nbytes <= B.DRIVER_MAX_INPUT_BYTES
     for cap, over in (("DRIVER_MAX_TURNS", rows - 1), ("DRIVER_MAX_INPUT_BYTES", nbytes - 1)):
         with monkeypatch.context() as m:
@@ -362,3 +365,116 @@ def test_fresh_driver_build_replaces_an_existing_index(
 
     assert files(d) == files(ref)
     assert index_state(d) == index_state(ref)
+
+
+# ---------------------------------------------------------------------------
+# reading bare parquet inputs with pyarrow
+
+
+def _bare_inputs(spark, tmp_path, pdf):
+    """name -> a bare parquet relation of ``pdf``'s rows."""
+    three = tmp_path / "three"
+    three.mkdir()
+    for i, (a, b) in enumerate([(0, 300), (300, 1000), (1000, len(pdf))]):
+        pdf.iloc[a:b].to_parquet(str(three / f"f{i}.parquet"), index=False)
+    spark.createDataFrame(pdf).repartition(3).write.parquet(str(tmp_path / "by_spark"))
+    schema = "conv_id string, turn_idx long, role string, text string, tool string, ts timestamp"
+    return {
+        # the scan reads the largest file first, not in listing order
+        "three_files": spark.read.parquet(str(three)),
+        # Spark writes LTZ timestamps, pandas naive ones
+        "spark_written": spark.read.parquet(str(tmp_path / "by_spark")),
+        "pandas_written": spark.read.parquet(_parquet(tmp_path, pdf)),
+        # a read schema that widens turn_idx to long
+        "widened": spark.read.schema(schema).parquet(str(three)),
+    }
+
+
+@pytest.mark.slow
+def test_bare_parquet_read_matches_collect(spark, monkeypatch, tmp_path, index_state, corpus_pdf):
+    """read_bare_parquet returns the table toArrow() collects, for
+    several files of unequal sizes, Spark- and pandas-written files and
+    a widening read schema; a build from each input records
+    read="files" and writes the same tables as the collect route."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    import emailindexer_spark.plans.builder as B
+
+    pdf = corpus_pdf.head(1500)
+    for name, df in _bare_inputs(spark, tmp_path, pdf).items():
+        bp = B.bare_parquet(df)
+        assert bp is not None and bp.rows == len(pdf), name
+        got, exp = B.read_bare_parquet(df, bp), df.toArrow()
+        assert got is not None and got.equals(exp), name
+        if name == "three_files":
+            listing = pa.concat_tables(papq.read_table(f) for f in bp.files)
+            assert not listing.column("conv_id").equals(exp.column("conv_id"))
+        states = {}
+        for read in ("files", "collect"):
+            with monkeypatch.context() as m:
+                if read == "collect":
+                    m.setattr(B, "read_bare_parquet", lambda df, bp: None)
+                d = str(tmp_path / f"ix_{name}_{read}")
+                man = _build_on(spark, monkeypatch, "driver", d, df)
+            assert man.stages["doc_index"]["read"] == read, name
+            states[read] = index_state(d)
+        assert states["files"] == states["collect"], name
+
+
+@pytest.mark.slow
+def test_hive_partitioned_input_builds_with_collect(
+    spark, monkeypatch, tmp_path, index_state, corpus_pdf
+):
+    """A hive-partitioned directory is a bare relation whose partition
+    column the files do not hold: the driver build collects it, and
+    writes the index a flat file of the same rows gives."""
+    import emailindexer_spark.plans.builder as B
+
+    pdf = corpus_pdf.head(1500)
+    hive = str(tmp_path / "hive")
+    pdf.to_parquet(hive, partition_cols=["role"], index=False)
+    df = spark.read.parquet(hive)
+    bp = B.bare_parquet(df)
+    assert bp is not None and bp.rows == len(pdf) and B.read_bare_parquet(df, bp) is None
+    man = _build_on(spark, monkeypatch, "driver", str(tmp_path / "ix"), df)
+    assert man.stages["doc_index"]["read"] == "collect"
+    _build_on(spark, monkeypatch, "driver", str(tmp_path / "flat"), _parquet(tmp_path, pdf))
+    assert index_state(str(tmp_path / "ix")) == index_state(str(tmp_path / "flat"))
+
+
+@pytest.mark.slow
+def test_driver_build_commits_in_one_write(spark, monkeypatch, tmp_path, index_state, corpus_pdf):
+    """A driver build writes its manifest once after creating it, and a
+    crash before that write commits no stage; resume then rebuilds on
+    Spark the postings a fresh build writes."""
+    import emailindexer_spark.plans.builder as B
+
+    src = _parquet(tmp_path, corpus_pdf.head(1500))
+    writes = []
+    flush = Manifest._flush
+
+    def counted(self):
+        writes.append(self._held)
+        flush(self)
+
+    with monkeypatch.context() as m:
+        m.setattr(Manifest, "_flush", counted)
+        _build_on(spark, monkeypatch, "driver", str(tmp_path / "ref"), src)
+    # the creation, the build's commit; the rest were held back
+    assert writes.count(False) == 2, writes
+
+    def crash(*a, **k):
+        raise RuntimeError("crash after staging")
+
+    d = str(tmp_path / "ix")
+    b = IndexBuilder(spark, d, num_parts=8, heavy_df_threshold=500, split_target=400)
+    with monkeypatch.context() as m:
+        m.setattr(B, "_commit_build_metrics", crash)
+        with pytest.raises(RuntimeError, match="crash after staging"):
+            b.build(spark.read.parquet(src))
+    man = Manifest.load_or_create(d)
+    assert man.stages == {} and man.stats == {}
+    man = b.build(spark.read.parquet(src), resume=True)
+    assert {st["path"] for st in man.stages.values()} == {"spark"}
+    assert index_state(d)["postings"] == index_state(str(tmp_path / "ref"))["postings"]

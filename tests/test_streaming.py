@@ -477,10 +477,10 @@ def test_driver_and_spark_appends_write_identical_tables(
 
 @pytest.mark.slow
 def test_small_append_runs_at_most_one_job(spark, spark_jobs, index_dir, corpus_pdf):
-    """A small batch is collected once and staged on the driver, through
-    the bounded collect or, for a bare parquet batch the footers show
-    is small, a whole one; the manifest records the path and the
-    stage's seconds."""
+    """A small batch is staged on the driver: a bare parquet batch the
+    footers show is small is read from its files with no Spark job, any
+    other batch with one bounded collect; the manifest records the
+    path, the read and the stage's seconds."""
     from emailindexer_spark.sources.checkpoint import Manifest
 
     root = tempfile.mkdtemp(prefix="ix_small_")
@@ -490,13 +490,17 @@ def test_small_append_runs_at_most_one_job(spark, spark_jobs, index_dir, corpus_
         head = corpus_pdf.head(300)
         pq = os.path.join(root, "b.parquet")
         head.assign(conv_id=lambda x: "zy_" + x.conv_id).to_parquet(pq, index=False)
-        for i, batch in enumerate(
-            [spark.createDataFrame(head.assign(conv_id=lambda x: "zz_" + x.conv_id)), spark.read.parquet(pq)],
+        for i, (batch, read, max_jobs) in enumerate(
+            [
+                (spark.createDataFrame(head.assign(conv_id=lambda x: "zz_" + x.conv_id)), "collect", 1),
+                (spark.read.parquet(pq), "files", 0),
+            ],
             start=1,
         ):
-            assert len(spark_jobs(lambda: incremental_append(spark, d, batch))) <= 1
+            jobs = spark_jobs(lambda: incremental_append(spark, d, batch))
+            assert len(jobs) <= max_jobs, (read, jobs)
             st = Manifest.load_or_create(d).stages[f"ingest_{i:06d}"]
-            assert st["path"] == "driver" and st["seconds"] > 0
+            assert st["path"] == "driver" and st["read"] == read and st["seconds"] > 0
             assert SearchEngine(spark, d).n_rows == len(corpus_pdf) + 300 * i
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -567,5 +571,43 @@ def test_engine_open_runs_no_job_and_reads_inferred_schemas(spark, spark_jobs, m
         check(d, "spark append")
         compact_index(spark, d)
         check(d, "compaction")
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.slow
+def test_engine_answers_as_of_its_open(spark, index_dir, corpus_pdf):
+    """An engine opened before an append and first searched after it
+    answers for the corpus it opened: the appended vocabulary and
+    postings files stay out of it, so it finds none of the new docs and
+    gives the answers it would have given before the append.  A fresh
+    engine finds every appended doc under its own conversation."""
+    # the corpus's own terms: the batch re-indexes its first turns' text
+    queries = ["juja", "radu OR sopugowi", "qojema AND tenuboho", '"qojema ralocu"', "qal*", "gonopo -kaqi"]
+    root = tempfile.mkdtemp(prefix="ix_asof_")
+    try:
+        d = os.path.join(root, "ix")
+        shutil.copytree(index_dir, d)
+
+        def answers(eng):
+            return [
+                [tuple(r) for r in eng.search(q, k=20, mode=mode).collect()]
+                for q in queries
+                for mode in ("turns", "conversations")
+            ]
+
+        before = answers(SearchEngine(spark, d))
+        assert all(before)
+        old = SearchEngine(spark, d)  # opened, not yet searched
+        batch = corpus_pdf.head(200).assign(
+            conv_id=lambda x: "zz_" + x.conv_id, text=lambda x: x.text + " zzsentinel"
+        )
+        incremental_append(spark, d, spark.createDataFrame(batch))
+        assert old.search("zzsentinel", k=300).collect() == []
+        assert answers(old) == before
+        hits = SearchEngine(spark, d).search("zzsentinel", k=300).collect()
+        assert sorted((r.conv_id, r.turn_idx) for r in hits) == sorted(
+            zip(batch.conv_id, batch.turn_idx)
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -13,14 +13,14 @@ Pipeline (SURVEY.md §2.10 / §3):
   tokenize (vectorized Arrow/pandas UDF, StandardAnalyzer-parity for the
   validated ASCII classes) → docID assignment (dense rank over the stable
   (conv_id, turn_idx) ordering, two-phase at scale) → per-partition sorted
-  posting lists with docID delta + varbyte compression and 128-doc
-  block-max skip metadata → salted repartition-by-term merge with explicit
+  posting lists with docID delta + varbyte compression in independently
+  decodable 128-doc blocks → salted repartition-by-term merge with explicit
   skew splitting for heavy terms → broadcast doc-length statistics →
-  top-k BM25 (k1=1.2, b=0.75, Lucene-9 lossy norm semantics) via
-  block-max WAND with an exhaustive vectorized fallback → conversation
-  collapse (reference: root-id dedup, EmailIndexSearcher.java:58-71).
+  top-k BM25 (k1=1.2, b=0.75, Lucene-9 lossy norm semantics) by an
+  exhaustive vectorized pass → conversation collapse (reference: root-id
+  dedup, EmailIndexSearcher.java:58-71).
 """
 
-__version__ = "0.3.2"
+__version__ = "0.3.3"
 
 from emailindexer_spark.config import get_spark  # noqa: F401

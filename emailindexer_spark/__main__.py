@@ -67,9 +67,7 @@ def cmd_search(args) -> int:
         fuzzy_transpositions=args.fuzzy_transpositions,
         slop_order_tolerant=args.slop_order_tolerant,
     )
-    rows = eng.search(
-        args.query, k=args.k, mode=args.mode, use_wand=args.wand, with_text=args.text
-    ).collect()
+    rows = eng.search(args.query, k=args.k, mode=args.mode, with_text=args.text).collect()
     for r in rows:
         d = r.asDict()
         if "text" in d and d["text"]:
@@ -93,7 +91,7 @@ def cmd_search_batch(args) -> int:
     with open(args.queries) as f:
         raw = json.load(f)
     batch = {qid: (q[0], int(q[1]), q[2] if len(q) > 2 else "turns") for qid, q in raw.items()}
-    for r in eng.search_many(batch, use_wand=args.wand).collect():
+    for r in eng.search_many(batch).collect():
         print(json.dumps(r.asDict(), default=str))
     return 0
 
@@ -182,7 +180,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--query", required=True)
     s.add_argument("-k", type=int, default=10)
     s.add_argument("--mode", choices=["turns", "conversations"], default="turns")
-    s.add_argument("--wand", action=argparse.BooleanOptionalAction, default=None)
     s.add_argument("--text", action="store_true")
     s.add_argument(
         "--fuzzy-transpositions",
@@ -203,7 +200,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     sb.add_argument("--index", required=True)
     sb.add_argument("--queries", required=True, help='JSON: {"qid": ["query", k, "mode"], ...}')
-    sb.add_argument("--wand", action=argparse.BooleanOptionalAction, default=None)
     sb.add_argument("--fuzzy-transpositions", action="store_true")
     sb.add_argument("--slop-order-tolerant", action="store_true")
     sb.set_defaults(fn=cmd_search_batch)

@@ -34,12 +34,3 @@ def score_tf(tf: np.ndarray, norm: np.ndarray, avgdl: float, idf_val: float) -> 
     tf = np.asarray(tf, dtype=np.float64)
     return idf_val * tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
-
-def max_block_score(max_tf: np.ndarray, min_norm: np.ndarray, avgdl: float, idf_val: float) -> np.ndarray:
-    """Upper bound on any score inside a block.
-
-    score is increasing in tf and decreasing in dl, so
-    (max_tf, min_norm→min dl) bounds every (tf, dl) pair in the block,
-    including pairs that never co-occur — a safe (if loose) bound.
-    """
-    return score_tf(np.asarray(max_tf), np.asarray(min_norm), avgdl, idf_val)

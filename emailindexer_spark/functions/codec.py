@@ -1,8 +1,10 @@
-"""Posting-list compression: docID delta + variable-byte, block-max skip.
+"""Posting-list compression: docID delta + variable-byte, in blocks.
 
 The reference's Lucene index stores postings as compressed blocks with
 skip data (SURVEY.md §4 "Posting compression", "Skip lists / block
-metadata"); we re-express that as an explicit, numpy-vectorized codec:
+metadata"); we re-express the blocks, without skip data (every search
+decodes a term's blocks exhaustively), as an explicit, numpy-vectorized
+codec:
 
 * doc IDs per (term, split) are sorted ascending and stored as
   first-delta-from-block-start + consecutive deltas, varbyte-encoded
@@ -14,10 +16,7 @@ metadata"); we re-express that as an explicit, numpy-vectorized codec:
   per-doc stats table (critical at 10^12 docs, where doc_stats cannot be
   broadcast),
 * every ``BLOCK_SIZE`` (128) docs form an independently-decodable block
-  carrying (first_doc, last_doc, n, max_tf, min_norm) — the block-max
-  metadata that drives WAND skipping; max-score upper bounds are derived
-  at query time from (max_tf, min_norm) so the index does not bake in
-  corpus statistics.
+  that stores its first doc id, the base of its deltas.
 
 All encode/decode paths are pure numpy (no per-element Python in the hot
 loop) and run inside Arrow-batched pandas UDFs.
@@ -97,10 +96,6 @@ class EncodedBlocks:
     """Column-parallel encoded blocks of one (term, split) posting list."""
 
     first_doc: np.ndarray  # int64 per block
-    last_doc: np.ndarray  # int64 per block
-    n: np.ndarray  # int32 per block
-    max_tf: np.ndarray  # int32 per block
-    min_norm: np.ndarray  # int32 per block (SmallFloat byte, 0..255)
     doc_bytes: list[bytes]
     tf_bytes: list[bytes]
     norm_bytes: list[bytes]
@@ -116,45 +111,33 @@ def encode_blocks(
     if doc_ids.size and (np.diff(doc_ids) <= 0).any():
         raise ValueError("doc_ids must be strictly increasing within a posting run")
     nb = max(1, -(-doc_ids.size // block_size)) if doc_ids.size else 0
-    first, last, n, mtf, mnorm = (
-        np.empty(nb, dtype=np.int64),
-        np.empty(nb, dtype=np.int64),
-        np.empty(nb, dtype=np.int32),
-        np.empty(nb, dtype=np.int32),
-        np.empty(nb, dtype=np.int32),
-    )
+    first = np.empty(nb, dtype=np.int64)
     dbs: list[bytes] = []
     tbs: list[bytes] = []
     nbs: list[bytes] = []
     for i in range(nb):
         sl = slice(i * block_size, min((i + 1) * block_size, doc_ids.size))
         d, t, m = doc_ids[sl], tfs[sl], norms[sl]
-        first[i], last[i], n[i] = d[0], d[-1], d.size
-        mtf[i] = int(t.max())
-        mnorm[i] = int(m.min())
+        first[i] = d[0]
         deltas = np.diff(d, prepend=d[0]).astype(np.uint64)  # first delta = 0
         dbs.append(varbyte_encode(deltas))
         tbs.append(varbyte_encode(t.astype(np.uint64)))
         nbs.append(m.astype(np.uint8).tobytes())
-    return EncodedBlocks(first, last, n, mtf, mnorm, dbs, tbs, nbs)
+    return EncodedBlocks(first, dbs, tbs, nbs)
 
 
 @dataclass
 class EncodedRuns:
     """Blocks of many consecutive posting runs, encoded together.
 
-    Per-block metadata arrays as in :class:`EncodedBlocks`; the payloads
-    are three contiguous buffers cut by byte offsets instead of lists of
+    ``first_doc`` as in :class:`EncodedBlocks`; the payloads are three
+    contiguous buffers cut by byte offsets instead of lists of
     per-block ``bytes`` (block i's doc deltas are
     ``doc_buf[doc_offs[i]:doc_offs[i + 1]]``, likewise tfs and norms).
     Run r owns blocks ``run_blocks[r]:run_blocks[r + 1]``; block i owns
     postings ``block_starts[i]:block_starts[i + 1]``."""
 
     first_doc: np.ndarray  # int64 per block
-    last_doc: np.ndarray  # int64 per block
-    n: np.ndarray  # int32 per block
-    max_tf: np.ndarray  # int32 per block
-    min_norm: np.ndarray  # int32 per block
     doc_buf: bytes
     doc_offs: np.ndarray  # int64, nb + 1
     tf_buf: bytes
@@ -175,9 +158,9 @@ def encode_runs_vec(
     ``run_starts[r]:run_starts[r + 1]``, the last run ending at the end;
     doc_ids strictly increasing within each run) into blocks, each run
     cut exactly as :func:`encode_blocks` cuts it alone: ONE varbyte pass
-    over every run's deltas (reset to 0 at each block start) and one
-    ``reduceat`` per metadata column — no per-run or per-block Python
-    loop.  Equality with per-run encode_blocks is pytest-gated."""
+    over every run's deltas (reset to 0 at each block start) — no
+    per-run or per-block Python loop.  Equality with per-run
+    encode_blocks is pytest-gated."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
     norms = np.asarray(norms, dtype=np.int64)
@@ -199,17 +182,12 @@ def encode_runs_vec(
     run_of_block = np.repeat(np.arange(rs.size), nbr)
     k = np.arange(nb, dtype=np.int64) - run_blocks[run_of_block]
     bstarts = rs[run_of_block] + k * block_size
-    bends = np.minimum(bstarts + block_size, (rs + rlen)[run_of_block])
     block_starts = np.append(bstarts, n)
     deltas[bstarts] = 0  # per-block first delta is 0 (first_doc is stored)
     dbuf, doffs = varbyte_encode_offsets(deltas.astype(np.uint64))
     tbuf, toffs = varbyte_encode_offsets(tfs.astype(np.uint64))
     return EncodedRuns(
         doc_ids[bstarts],
-        doc_ids[bends - 1],
-        (bends - bstarts).astype(np.int32),
-        np.maximum.reduceat(tfs, bstarts).astype(np.int32) if nb else np.empty(0, np.int32),
-        np.minimum.reduceat(norms, bstarts).astype(np.int32) if nb else np.empty(0, np.int32),
         dbuf,
         doffs[block_starts],
         tbuf,
@@ -217,28 +195,6 @@ def encode_runs_vec(
         norms.astype(np.uint8).tobytes(),
         run_blocks,
         block_starts,
-    )
-
-
-def encode_blocks_vec(
-    doc_ids: np.ndarray, tfs: np.ndarray, norms: np.ndarray, block_size: int = BLOCK_SIZE
-) -> EncodedBlocks:
-    """Bit-identical to :func:`encode_blocks`: :func:`encode_runs_vec`
-    over a single run, its buffers sliced into per-block ``bytes``."""
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    er = encode_runs_vec(
-        doc_ids, tfs, norms, np.zeros(min(doc_ids.size, 1), np.int64), block_size
-    )
-    cut = lambda buf, offs: [buf[a:b] for a, b in zip(offs[:-1], offs[1:])]
-    return EncodedBlocks(
-        er.first_doc,
-        er.last_doc,
-        er.n,
-        er.max_tf,
-        er.min_norm,
-        cut(er.doc_buf, er.doc_offs),
-        cut(er.tf_buf, er.tf_offs),
-        cut(er.norm_buf, er.block_starts),
     )
 
 

@@ -26,7 +26,7 @@ Replaces the reference's sequential paged scan → Lucene IndexWriter loop
                     wide (term, split) shuffle directly (no persist, no
                     token-stream round-trip through storage) →
                     mapInPandas encodes each sorted run into
-                    delta+varbyte blocks with block-max metadata → one
+                    independently decodable delta+varbyte blocks → one
                     cheap exchange of the ENCODED rows lays files out
                     by part = md5(term) % P (query-side pruning)
   stage term_dict   (term, part, df) table range-partitioned + sorted by
@@ -103,8 +103,7 @@ from emailindexer_spark.sources.checkpoint import Manifest
 
 POSTINGS_SCHEMA = (
     "term string, split_id int, part int, df_row long, first_doc long, last_doc long, "
-    "b_first array<long>, b_last array<long>, b_n array<int>, b_maxtf array<int>, "
-    "b_minnorm array<int>, b_docs array<binary>, b_tfs array<binary>, b_norms array<binary>, "
+    "b_first array<long>, b_docs array<binary>, b_tfs array<binary>, b_norms array<binary>, "
     "b_pos array<binary>"
 )
 #: POSTINGS_SCHEMA as Arrow types: the encoder's output, and the file
@@ -117,8 +116,7 @@ POSTINGS_ARROW_SCHEMA = pa.schema(
         ("df_row", pa.int64()),
         ("first_doc", pa.int64()),
         ("last_doc", pa.int64()),
-        *((c, pa.list_(pa.int64())) for c in ("b_first", "b_last")),
-        *((c, pa.list_(pa.int32())) for c in ("b_n", "b_maxtf", "b_minnorm")),
+        ("b_first", pa.list_(pa.int64())),
         *((c, pa.list_(pa.binary())) for c in ("b_docs", "b_tfs", "b_norms", "b_pos")),
     ]
 )
@@ -540,7 +538,7 @@ def _encode_chunk_table(
     if has_pos:
         pos_buf, pos_offs = pb, bounds[er.block_starts]
     else:
-        pos_buf, pos_offs = b"", np.zeros(er.n.size + 1, np.int64)
+        pos_buf, pos_offs = b"", np.zeros(er.first_doc.size + 1, np.int64)
     rb = er.run_blocks
     first_doc = docs_abs[post_rs]
     last_doc = docs_abs[post_rs + rlen - 1]
@@ -567,10 +565,6 @@ def _encode_chunk_table(
                 pa.array(first_doc[r0:r1], pa.int64()),
                 pa.array(last_doc[r0:r1], pa.int64()),
                 blocks(pa.array(er.first_doc[b0:b1], pa.int64())),
-                blocks(pa.array(er.last_doc[b0:b1], pa.int64())),
-                blocks(pa.array(er.n[b0:b1], pa.int32())),
-                blocks(pa.array(er.max_tf[b0:b1], pa.int32())),
-                blocks(pa.array(er.min_norm[b0:b1], pa.int32())),
                 blocks(_binary_cuts(er.doc_buf, er.doc_offs[b0 : b1 + 1])),
                 blocks(_binary_cuts(er.tf_buf, er.tf_offs[b0 : b1 + 1])),
                 blocks(_binary_cuts(er.norm_buf, er.block_starts[b0 : b1 + 1])),

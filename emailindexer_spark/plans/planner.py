@@ -21,14 +21,12 @@ phrases broadcast the rarest MUST term's doc ids and filter every wider
 term's block decode map-side; MUST_NOT terms decode doc ids only (no
 tf/norm IO, no scoring) into a broadcast-hinted anti join.
 
-Routing: flat term disjunctions in turns mode (incl. multi-field, via
-per-key avgdl) go to block-max WAND (plans/wand.py — the reference's
-Lucene uses BMW exactly there, EmailIndexSearcher.java:107); everything
-else (conjunctions, phrases, prefixes/wildcards/fuzzy/ranges,
-conversation collapse) uses the exhaustive path, matching the
-reference's own exhaustive flagship search (n=Integer.MAX_VALUE,
-EmailIndexSearcher.java:57).  ``search_many`` batches flat queries onto
-ONE shared postings scan with a vectorized per-query fan-out kernel.
+Routing: a search the driver-local tier serves scores on the driver;
+every other search takes one exhaustive plan (score every matching
+doc, then top-k), matching the reference's own exhaustive flagship
+search (n=Integer.MAX_VALUE, EmailIndexSearcher.java:57).
+``search_many`` batches flat queries onto ONE shared postings scan
+with a vectorized per-query fan-out kernel.
 """
 
 from __future__ import annotations
@@ -50,7 +48,6 @@ from emailindexer_spark.functions.codec import (
     varbyte_decode,
 )
 from emailindexer_spark.functions.smallfloat import encode_lengths
-from emailindexer_spark.plans import wand as wand_mod
 from emailindexer_spark.plans.builder import avgdl_from_stats, term_part_py
 from emailindexer_spark.plans.parser import (
     MAX_FUZZY_EXPANSIONS,
@@ -1224,7 +1221,6 @@ class SearchEngine:
     #: Arrow transfer keeps unrelated payloads (esp. b_pos, ~40% of a
     #: positioned index's bytes) out of parquet IO and out of Python
     SCORE_COLS = ("term", "b_first", "b_docs", "b_tfs", "b_norms")
-    WAND_COLS = SCORE_COLS + ("b_last", "b_maxtf", "b_minnorm")
     POS_COLS = ("term", "b_first", "b_docs", "b_tfs", "b_norms", "b_pos")
     #: docs-only reads (constant-score, MUST_NOT): no tf/norm/pos IO
     DOCS_COLS = ("b_first", "b_docs")
@@ -2089,8 +2085,7 @@ class SearchEngine:
     _local_decode_postings = staticmethod(_decode_frame_postings)
 
     #: docs-only local reads: per-block counts come off the doc
-    #: stream's own varbyte continuation bits (_decode_frame_docs), so
-    #: not even b_n is fetched
+    #: stream's own varbyte continuation bits (_decode_frame_docs)
     LOCAL_DOCS_COLS = ("b_first", "b_docs")
 
     @staticmethod
@@ -2439,6 +2434,12 @@ class SearchEngine:
         if got is None:
             return None
         docs, scores = got
+        # a compaction after this open rewrites later appends' postings
+        # into untagged files, which _at_open cannot skip: drop their
+        # docs, which the open-time conv_offsets would mislabel
+        keep = docs < self.n_rows
+        if not keep.all():
+            docs, scores = docs[keep], scores[keep]
         if k is None and docs.size > self.LOCAL_MAX_K:
             return None
         return self._local_finish(docs, scores, k, mode)
@@ -2552,53 +2553,19 @@ class SearchEngine:
         ``toPandas``, ``count``, ``columns`` and ``schema`` answer on the
         driver with no JVM call, and any other DataFrame use builds the
         JVM relation first.  Every other query returns a plain
-        distributed DataFrame."""
+        distributed DataFrame.  ``use_wand`` is accepted and ignored:
+        every query takes the same exact plan."""
         ast = self._resolve_node(parse(query, simple=self.simple))
-        # a bare leaf on a multi-field index resolves to a nested
-        # SHOULD-of-per-field-Terms Bool; flatten pure-SHOULD unit-boost
-        # nesting so flat disjunctions stay WAND-eligible (score = sum
-        # over matched per-field keys either way)
-        flat = _flatten_shoulds(ast)
-        if use_wand is None:
-            # WAND covers flat term disjunctions — the one spot the
-            # reference's Lucene uses BMW; per-key avgdl (multi-field)
-            # is threaded into the kernel
-            use_wand = (
-                mode == "turns" and k is not None and wand_mod.is_wand_eligible(flat)
-            )
-        if use_wand and not wand_mod.is_wand_eligible(flat):
-            raise ValueError(
-                "use_wand=True supports flat pure-OR term queries only"
-            )
         if not with_text:
             # driver-local fast path for bounded queries (exact same
-            # kernels and combine semantics as the distributed plan;
-            # WAND and the exhaustive path are both exact, so the local
-            # result equals either)
-            lr = self._local_search(ast, flat, k, mode)
+            # kernels and combine semantics as the distributed plan);
+            # a bare leaf on a multi-field index resolves to a nested
+            # SHOULD-of-per-field-Terms Bool, flattened so it stays a
+            # flat disjunction (score = sum over matched keys either way)
+            lr = self._local_search(ast, _flatten_shoulds(ast), k, mode)
             if lr is not None:
                 return LocalResult(lr, self.RESULT_SCHEMA, self.spark)
-        if use_wand:
-            keys = query_terms(flat)
-            idf_map, avgdl_map = self._maps_for(keys)
-            boosts = {c.text: c.boost for _, c in flat.clauses if c.text in idf_map}
-            rows = self._rows_for_terms(set(boosts), self.WAND_COLS) if boosts else None
-            scores = (
-                wand_mod.wand_topk(
-                    self.spark,
-                    rows,
-                    idf_map,
-                    boosts,
-                    self.avgdl,
-                    k,
-                    self.n_rows,
-                    avgdl_map=avgdl_map,
-                )
-                if rows is not None
-                else self._empty_scores()
-            )
-        else:
-            scores = self._score_resolved(ast)
+        scores = self._score_resolved(ast)
         nparts = self._serve_parts(
             sum(self.term_dfs(query_terms(ast)).values())
         )
@@ -2624,8 +2591,8 @@ class SearchEngine:
         amortized across the batch instead of re-scanned per query (the
         batch-serving shape at 100 TB).  Non-flat queries (phrase,
         prefix, fuzzy, nested booleans) fall back to per-query plans
-        unioned into the same result.  ``use_wand=True`` forces the
-        per-query WAND path instead (identical results — both exact).
+        unioned into the same result.  ``use_wand`` is accepted and
+        ignored, as in :meth:`search`.
 
         A batch whose members the driver-local tier serves in full (and
         an empty batch) returns one :class:`LocalResult`, which answers
@@ -2648,13 +2615,10 @@ class SearchEngine:
         # result — no Spark work for a batch of bounded queries
         local_pdfs: list[pd.DataFrame] = []
         batch_tcache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        cand: list[tuple[str, Node, Node, int | None, str]] = []
-        for qid in list(resolved):
-            ast, k, mode = resolved[qid]
-            flat_q = _flatten_shoulds(ast)
-            if use_wand is True and not wand_mod.is_wand_eligible(flat_q):
-                continue  # per-query path raises the contract error
-            cand.append((qid, ast, flat_q, k, mode))
+        cand = [
+            (qid, ast, _flatten_shoulds(ast), k, mode)
+            for qid, (ast, k, mode) in resolved.items()
+        ]
         if len(cand) > 1 and self._driver_vocab() is not None:
             # pre-decode terms referenced by >1 member ONCE, single-
             # threaded, so the parallel pass below hits a warm cache
@@ -2698,7 +2662,7 @@ class SearchEngine:
         nonflat: list[tuple[str, int | None, str]] = []
         for qid, (ast, k, mode) in resolved.items():
             flat = _flatten_shoulds(ast)
-            if use_wand is not True and isinstance(flat, Bool) and self._is_flat_terms(flat):
+            if isinstance(flat, Bool) and self._is_flat_terms(flat):
                 shared[qid] = (flat, k, mode)
             else:
                 nonflat.append((qid, k, mode))
@@ -2724,9 +2688,7 @@ class SearchEngine:
 
             def _plan(item):
                 qid, k, mode = item
-                return qid, self.search(
-                    queries[qid][0], k=k, mode=mode, use_wand=use_wand
-                )
+                return qid, self.search(queries[qid][0], k=k, mode=mode)
 
             ex = ThreadPoolExecutor(max_workers=min(4, len(nonflat)))
             futures = [ex.submit(_plan, it) for it in nonflat]

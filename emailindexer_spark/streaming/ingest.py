@@ -36,7 +36,7 @@ Each ``ingest_*`` manifest stage records which ``path`` ran and its
 Because the query engine already handles multi-row posting lists whose
 rows cover disjoint doc ranges (that is what skew splits are), appended
 rows integrate with zero changes to the read path: per-term df sums over
-rows, block decode is per-row, WAND shards see the union.
+rows, block decode is per-row.
 
 Corpus statistics (N, total_tokens → avgdl) are updated in the manifest
 on every commit, so scores reflect the full corpus after each batch —

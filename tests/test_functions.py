@@ -155,9 +155,8 @@ class TestBlocks:
         got_d, got_t, got_n = [], [], []
         for i in range(len(eb.doc_bytes)):
             d, t, n = decode_block(int(eb.first_doc[i]), eb.doc_bytes[i], eb.tf_bytes[i], eb.norm_bytes[i])
-            assert eb.first_doc[i] == d[0] and eb.last_doc[i] == d[-1]
-            assert eb.max_tf[i] == t.max() and eb.min_norm[i] == n.min()
-            assert eb.n[i] == d.size <= 128
+            assert eb.first_doc[i] == d[0]
+            assert d.size == (128 if i < len(eb.doc_bytes) - 1 else docs.size - 128 * i)
             got_d.append(d), got_t.append(t), got_n.append(n)
         assert (np.concatenate(got_d) == docs).all()
         assert (np.concatenate(got_t) == tfs).all()
@@ -407,8 +406,7 @@ class TestLevenshteinBatch:
 
 class TestFastTokenizerCodes:
     """tokenize_series_codes / token_counts lock-step with the regex
-    tokenizer, and encode_blocks_vec bit-equality with encode_blocks —
-    the r6 build-path internals."""
+    tokenizer — the r6 build-path internals."""
 
     def _check(self, texts, simple):
         from emailindexer_spark.functions.tokenizer import (
@@ -454,29 +452,6 @@ class TestFastTokenizerCodes:
     def test_fuzz_lockstep(self, texts, simple):
         self._check(texts, simple)
 
-    @settings(max_examples=40, deadline=None)
-    @given(
-        st.lists(st.integers(0, 1 << 40), min_size=1, max_size=400, unique=True),
-        st.integers(1, 9),
-    )
-    def test_encode_blocks_vec_equal(self, docs, tf_mod):
-        from emailindexer_spark.functions.codec import encode_blocks, encode_blocks_vec
-
-        d = np.sort(np.asarray(docs, dtype=np.int64))
-        tfs = (d % tf_mod + 1).astype(np.int64)
-        norms = (d % 256).astype(np.int64)
-        for bs in (3, 128):
-            a = encode_blocks(d, tfs, norms, block_size=bs)
-            b = encode_blocks_vec(d, tfs, norms, block_size=bs)
-            assert (a.first_doc == b.first_doc).all()
-            assert (a.last_doc == b.last_doc).all()
-            assert (a.n == b.n).all()
-            assert (a.max_tf == b.max_tf).all()
-            assert (a.min_norm == b.min_norm).all()
-            assert a.doc_bytes == b.doc_bytes
-            assert a.tf_bytes == b.tf_bytes
-            assert a.norm_bytes == b.norm_bytes
-
 
 class TestRunEncoder:
     """functions/codec.encode_runs_vec (every run of a reduce partition
@@ -489,10 +464,6 @@ class TestRunEncoder:
         eb = encode_blocks(d, tfs, norms, block_size=bs)
         return (
             eb.first_doc.tolist(),
-            eb.last_doc.tolist(),
-            eb.n.tolist(),
-            eb.max_tf.tolist(),
-            eb.min_norm.tolist(),
             eb.doc_bytes,
             eb.tf_bytes,
             eb.norm_bytes,
@@ -527,10 +498,6 @@ class TestRunEncoder:
                 assert bo[0] == a and bo[-1] == b
                 got = (
                     er.first_doc[blk].tolist(),
-                    er.last_doc[blk].tolist(),
-                    er.n[blk].tolist(),
-                    er.max_tf[blk].tolist(),
-                    er.min_norm[blk].tolist(),
                     [er.doc_buf[x:y] for x, y in zip(er.doc_offs[blk.start:blk.stop], er.doc_offs[blk.start + 1:blk.stop + 1])],
                     [er.tf_buf[x:y] for x, y in zip(er.tf_offs[blk.start:blk.stop], er.tf_offs[blk.start + 1:blk.stop + 1])],
                     [er.norm_buf[x:y] for x, y in zip(bo[:-1], bo[1:])],
@@ -606,8 +573,7 @@ class TestRunEncoder:
             tfs = np.array([post[x][0] for x in docs])
             norms = np.array([post[x][1] for x in docs])
             ref = self._ref_blocks(docs, tfs, norms, bs)
-            assert (r["b_first"], r["b_last"], r["b_n"], r["b_maxtf"], r["b_minnorm"]) == ref[:5]
-            assert (r["b_docs"], r["b_tfs"], r["b_norms"]) == ref[5:]
+            assert (r["b_first"], r["b_docs"], r["b_tfs"], r["b_norms"]) == ref
             assert r["part"] == term_part_py(term, 8)
             assert (r["df_row"], r["first_doc"], r["last_doc"]) == (docs.size, docs[0], docs[-1])
             want_pos = [
@@ -637,7 +603,6 @@ class TestFrameDecode:
         st.integers(1, 9),
     )
     def test_frame_decode_matches_per_block(self, doc_lists, tf_mod):
-        from emailindexer_spark.functions.codec import decode_block, encode_blocks_vec
         from emailindexer_spark.plans.planner import (
             _decode_frame_docs,
             _decode_frame_postings,
@@ -648,7 +613,7 @@ class TestFrameDecode:
             d = np.sort(np.asarray(docs, dtype=np.int64))
             tfs = (d % tf_mod + 1).astype(np.int64)
             norms = (d % 256).astype(np.int64)
-            eb = encode_blocks_vec(d, tfs, norms, block_size=3)
+            eb = encode_blocks(d, tfs, norms, block_size=3)
             rows.append(
                 {
                     "term": f"t{j}",

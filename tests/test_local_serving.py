@@ -40,8 +40,9 @@ SHAPES = [
     ("{rare}", "turns", None),
     ("{heavy}", "turns", None),
     ("{rare} {mid} {heavy}", "turns", None),
-    ("{rare} {mid} {heavy}", "turns", True),  # explicit WAND
+    ("{rare} {mid} {heavy}", "turns", True),  # use_wand is accepted and ignored
     ("{mid} AND {heavy}", "turns", None),
+    ("{mid} AND {heavy}", "turns", True),  # ... on a non-flat-OR query too
     ("+{rare} {heavy}", "turns", None),
     ("{heavy} -{mid}", "turns", None),
     ("zzznope {rare}", "turns", None),
@@ -434,12 +435,11 @@ def test_local_finish_conversations_collapse_fuzz():
 
 
 def _both_modes(eng):
-    """Every SHAPES template in turns and in conversations mode (explicit
-    WAND only in turns mode, the one it supports)."""
+    """Every SHAPES template in turns and in conversations mode."""
     subs = _subs(eng)
     for tmpl, _mode, wand in SHAPES:
         for mode in ("turns", "conversations"):
-            yield tmpl.format(**subs), mode, wand if mode == "turns" else None
+            yield tmpl.format(**subs), mode, wand
 
 
 def _typed(rows):

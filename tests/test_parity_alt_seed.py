@@ -26,7 +26,7 @@ def test_alt_seed_parity(spark):
             list(pdf[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
         )
         qs = reference_queries(pdf)
-        # a representative slice incl. WAND-eligible, boolean, phrase, collapse
+        # a representative slice incl. flat OR, boolean, phrase, collapse
         keep = {"q_rare", "q_or3", "q_and", "q_not", "q_phrase", "q_conv", "q_prefix"}
         ran = 0
         for q in qs:

@@ -611,3 +611,121 @@ def test_engine_answers_as_of_its_open(spark, index_dir, corpus_pdf):
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.slow
+def test_engine_answers_as_of_its_open_across_a_compaction(spark, index_dir, corpus_pdf):
+    """Compaction rewrites every postings file under untagged names, so an
+    engine opened before an append and first searched after the
+    compaction that merged it reads the appended postings: it still
+    returns no doc past its open's ``n_rows`` and answers as before."""
+    from emailindexer_spark.streaming.compact import compact_index
+
+    root = tempfile.mkdtemp(prefix="ix_asof_compact_")
+    try:
+        d = os.path.join(root, "ix")
+        shutil.copytree(index_dir, d)
+        n0 = len(corpus_pdf)
+        modes = ("turns", "conversations")
+        before = [
+            [tuple(r) for r in SearchEngine(spark, d).search("juja", k=300, mode=m).collect()]
+            for m in modes
+        ]
+        old = SearchEngine(spark, d)  # opened, not yet searched
+        batch = corpus_pdf.head(200).assign(conv_id=lambda x: "zz_" + x.conv_id)
+        incremental_append(spark, d, spark.createDataFrame(batch))
+        compact_index(spark, d)
+        fresh = SearchEngine(spark, d).search("juja", k=300).collect()
+        assert any(r.doc_id >= n0 for r in fresh)  # the batch does hold the term
+        got = [[tuple(r) for r in old.search("juja", k=300, mode=m).collect()] for m in modes]
+        assert all(r[1] < n0 for rows in got for r in rows)
+        assert got == before
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _add_pre_wand_removal_columns(path):
+    """Rewrite one postings file in the layout of an index built before
+    the block-max columns were dropped: ``b_last``, ``b_n``, ``b_maxtf``
+    and ``b_minnorm`` after ``b_first``, with their per-block values, in
+    the Arrow schema and in the Spark schema of the footer."""
+    import json
+
+    import pyarrow as pa
+    from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
+
+    t = papq.read_table(path)
+    cols = {"b_last": [], "b_n": [], "b_maxtf": [], "b_minnorm": []}
+    for r in t.select(["b_first", "b_docs", "b_tfs", "b_norms"]).to_pylist():
+        blocks = [decode_block(*b) for b in zip(r["b_first"], r["b_docs"], r["b_tfs"], r["b_norms"])]
+        cols["b_last"].append([int(d[-1]) for d, _, _ in blocks])
+        cols["b_n"].append([int(d.size) for d, _, _ in blocks])
+        cols["b_maxtf"].append([int(tf.max()) for _, tf, _ in blocks])
+        cols["b_minnorm"].append([int(nm.min()) for _, _, nm in blocks])
+    at = t.schema.get_field_index("b_first") + 1
+    for i, (name, vals) in enumerate(cols.items()):
+        typ = pa.list_(pa.int64() if name == "b_last" else pa.int32())
+        t = t.add_column(at + i, name, pa.array(vals, typ))
+    meta = dict(t.schema.metadata or {})
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    if key in meta:
+        fields = StructType.fromJson(json.loads(meta[key])).fields
+        j = [f.name for f in fields].index("b_first") + 1
+        fields[j:j] = [
+            StructField(n, ArrayType(LongType() if n == "b_last" else IntegerType()))
+            for n in cols
+        ]
+        meta[key] = StructType(fields).json().encode()
+    papq.write_table(t.replace_schema_metadata(meta), path)
+    # Hadoop's local filesystem would check the rewrite against the
+    # writer's checksum sidecar
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+@pytest.mark.slow
+def test_index_with_pre_wand_removal_postings_file(spark, index_dir, corpus_pdf):
+    """An index built before the block-max columns were dropped and
+    appended to after: one postings file still carries ``b_last``,
+    ``b_n``, ``b_maxtf`` and ``b_minnorm``.  Local and distributed
+    searches answer as on the untouched index, and an append and a
+    compaction succeed on it with the same answers."""
+    from emailindexer_spark.streaming.compact import compact_index
+
+    root = tempfile.mkdtemp(prefix="ix_old_layout_")
+    try:
+        ref, old = os.path.join(root, "ref"), os.path.join(root, "old")
+        shutil.copytree(index_dir, ref)
+        shutil.copytree(index_dir, old)
+        # the file whose footer gives the engine's Spark read schema
+        first = min(_postings_files(old))
+        _add_pre_wand_removal_columns(first)
+        terms = papq.read_table(first, columns=["term"]).column("term").to_pylist()
+        t1, t2 = terms[0], terms[len(terms) // 2]
+        queries = [t1, f"{t1} {t2} juja", f"{t2} -juja", f"{t1[:2]}*", '"qojema ralocu"']
+
+        def answers(d):
+            local, dist = SearchEngine(spark, d), SearchEngine(spark, d)
+            dist._local_search = lambda *a, **k: None  # force distributed plans
+            return [
+                [tuple(r) for r in eng.search(q, k=20, mode=m).collect()]
+                for eng in (local, dist)
+                for q in queries
+                for m in ("turns", "conversations")
+            ]
+
+        assert "b_maxtf" in SearchEngine(spark, old).postings.columns
+        want = answers(ref)
+        assert all(want[:2]) and answers(old) == want
+        batch = corpus_pdf.head(200).assign(conv_id=lambda x: "zz_" + x.conv_id)
+        for d in (ref, old):
+            incremental_append(spark, d, spark.createDataFrame(batch))
+        want = answers(ref)
+        assert answers(old) == want
+        for d in (ref, old):
+            compact_index(spark, d)
+        assert answers(old) == answers(ref) == want
+        assert all("b_maxtf" not in papq.read_schema(f).names for f in _postings_files(old))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

@@ -39,6 +39,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -48,7 +49,7 @@ from emailindexer_spark.functions.codec import (
     varbyte_decode,
 )
 from emailindexer_spark.functions.smallfloat import encode_lengths
-from emailindexer_spark.plans.builder import avgdl_from_stats, term_part_py
+from emailindexer_spark.plans.builder import _binary_values, avgdl_from_stats, term_part_py
 from emailindexer_spark.plans.parser import (
     MAX_FUZZY_EXPANSIONS,
     MUST,
@@ -91,43 +92,107 @@ def _segmented_delta_docs(buf: bytes, firsts: np.ndarray, nb: np.ndarray) -> np.
     return cs - np.repeat(offs, nb) + np.repeat(firsts, nb)
 
 
-def _decode_frame_postings(sub: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized decode of posting rows (any mix of blocks) → (docs,
-    tfs, norms): ONE varbyte pass over all blocks — concatenated
+def _decode_postings(
+    firsts: np.ndarray,
+    docs: tuple[np.ndarray, np.ndarray],
+    tfs: tuple[np.ndarray, np.ndarray],
+    norms: tuple[np.ndarray, np.ndarray],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The posting decode kernel over any mix of blocks → (docs, tfs,
+    norms).  ``docs``/``tfs``/``norms`` are each column's blocks as
+    (concatenated bytes as uint8, per-block byte lengths), ``firsts``
+    the blocks' ``b_first``: ONE varbyte pass per stream — concatenated
     varbyte streams are self-delimiting — instead of a Python loop per
     block.  Per-block posting counts come off the norm payload (exactly
     1 byte per posting)."""
-    doc_bufs = [b for row in sub["b_docs"] for b in row]
-    if not doc_bufs:
+    if not firsts.size:
         z = np.empty(0, np.int64)
         return z, z.copy(), z.copy()
-    norm_bufs = [b for row in sub["b_norms"] for b in row]
-    tf_bufs = [b for row in sub["b_tfs"] for b in row]
-    firsts = np.concatenate([np.asarray(x, dtype=np.int64) for x in sub["b_first"]])
-    nb = np.fromiter((len(x) for x in norm_bufs), np.int64, count=len(norm_bufs))
-    docs = _segmented_delta_docs(b"".join(doc_bufs), firsts, nb)
-    tfs = varbyte_decode(b"".join(tf_bufs)).view(np.int64)
-    norms = np.frombuffer(b"".join(norm_bufs), dtype=np.uint8).astype(np.int64)
-    return docs, tfs, norms
+    d = _segmented_delta_docs(docs[0], firsts, norms[1])
+    return d, varbyte_decode(tfs[0]).view(np.int64), norms[0].astype(np.int64)
+
+
+def _decode_docs(firsts: np.ndarray, docs: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
+    """Docs-only decode kernel (NOT exclusion / constant score): per-block
+    value counts are read off the doc stream's own varbyte continuation
+    bits, so only (b_first, b_docs) is ever fetched from parquet.
+    Returns doc ids in posting order (not deduplicated)."""
+    buf, blens = docs
+    if not firsts.size:
+        return np.empty(0, np.int64)
+    if not bool((blens > 0).all()):
+        raise ValueError("empty b_docs block: every block must be non-empty")
+    n_at = np.cumsum((buf & 0x80) == 0)
+    nb = np.diff(np.concatenate(([0], n_at[np.cumsum(blens) - 1])))
+    return _segmented_delta_docs(buf, firsts, nb)
+
+
+def _frame_blocks(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """(concatenated block bytes, per-block lengths) of a pandas column of
+    per-row lists of bytes."""
+    bufs = [b for row in col for b in row]
+    lens = np.fromiter(map(len, bufs), np.int64, count=len(bufs))
+    return np.frombuffer(b"".join(bufs), dtype=np.uint8), lens
+
+
+def _frame_firsts(col: pd.Series) -> np.ndarray:
+    if not len(col):
+        return np.empty(0, np.int64)
+    return np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
+
+
+def _decode_frame_postings(sub: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`_decode_postings` over pandas posting rows (the executor
+    kernels and compaction)."""
+    return _decode_postings(
+        _frame_firsts(sub["b_first"]),
+        _frame_blocks(sub["b_docs"]),
+        _frame_blocks(sub["b_tfs"]),
+        _frame_blocks(sub["b_norms"]),
+    )
 
 
 def _decode_frame_docs(sub: pd.DataFrame) -> np.ndarray:
-    """Docs-only vectorized decode (NOT exclusion / constant score):
-    per-block value counts are read off the doc stream's own varbyte
-    continuation bits, so only (b_first, b_docs) is ever fetched from
-    parquet.  Returns doc ids in posting order (not deduplicated)."""
-    doc_bufs = [b for row in sub["b_docs"] for b in row]
-    if not doc_bufs:
+    """:func:`_decode_docs` over pandas posting rows."""
+    return _decode_docs(_frame_firsts(sub["b_first"]), _frame_blocks(sub["b_docs"]))
+
+
+def _arrow_blocks(col) -> tuple[np.ndarray, np.ndarray]:
+    """(concatenated block bytes, per-block lengths) of an Arrow
+    ``list<binary>`` column, read straight from its buffers: per chunk
+    one flatten (which honours a zero-copy slice's offsets) and the
+    builder's :func:`_binary_values` view of the values.  One chunk's
+    bytes are a read-only view, not a copy."""
+    got = [_binary_values(vals) for c in col.chunks if len(vals := c.flatten())]
+    if not got:
+        return np.empty(0, np.uint8), np.empty(0, np.int64)
+    if len(got) == 1:
+        return got[0]
+    return np.concatenate([b for b, _ in got]), np.concatenate([n for _, n in got])
+
+
+def _arrow_firsts(col) -> np.ndarray:
+    """The flattened ``b_first`` values of an Arrow ``list<int64>`` column."""
+    vals = [c.flatten().to_numpy() for c in col.chunks]
+    if not vals:
         return np.empty(0, np.int64)
-    firsts = np.concatenate([np.asarray(x, dtype=np.int64) for x in sub["b_first"]])
-    blens = np.fromiter((len(x) for x in doc_bufs), np.int64, count=len(doc_bufs))
-    if not bool((blens > 0).all()):
-        raise ValueError("empty b_docs block: every block must be non-empty")
-    buf = b"".join(doc_bufs)
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    n_at = np.cumsum((raw & 0x80) == 0)
-    nb = np.diff(np.concatenate(([0], n_at[np.cumsum(blens) - 1])))
-    return _segmented_delta_docs(buf, firsts, nb)
+    return (vals[0] if len(vals) == 1 else np.concatenate(vals)).astype(np.int64, copy=False)
+
+
+def _decode_arrow_postings(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`_decode_postings` over Arrow posting rows (the driver-local
+    tier), with no pandas conversion."""
+    return _decode_postings(
+        _arrow_firsts(rows.column("b_first")),
+        _arrow_blocks(rows.column("b_docs")),
+        _arrow_blocks(rows.column("b_tfs")),
+        _arrow_blocks(rows.column("b_norms")),
+    )
+
+
+def _decode_arrow_docs(rows) -> np.ndarray:
+    """:func:`_decode_docs` over Arrow posting rows."""
+    return _decode_docs(_arrow_firsts(rows.column("b_first")), _arrow_blocks(rows.column("b_docs")))
 
 
 def _sorted_member_mask(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
@@ -839,11 +904,21 @@ def _flatten_shoulds(ast: Node) -> Node:
     return Bool(boost=ast.boost, clauses=out)
 
 
-def footer_schema(table_dir: str):
-    """The data schema ``spark.read.parquet(table_dir)`` infers, derived
-    the way Spark derives it but from ONE footer read on the driver,
-    with no schema-inference job: the first data file in path order
-    (``.``/``_`` names skipped), and the Spark schema its writer stored
+def table_files(table_dir: str) -> list[str]:
+    """The data files a Spark listing of ``table_dir`` reads (``.``/``_``
+    names skipped, files and directories alike), in path order."""
+    files = []
+    for root, dirs, names in os.walk(table_dir):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+        files += [os.path.join(root, f) for f in names if not f.startswith((".", "_"))]
+    return sorted(files)
+
+
+def footer_schema(files: list[str]):
+    """The data schema ``spark.read.parquet`` infers over ``files`` (a
+    :func:`table_files` listing), derived the way Spark derives it but
+    from ONE footer read on the driver, with no schema-inference job:
+    the first file in path order, and the Spark schema its writer stored
     in the footer, else its Parquet schema converted (naive timestamps
     as NTZ).  Given this as the read schema, Spark makes every field
     nullable and appends the ``key=value`` directory partition columns
@@ -855,10 +930,6 @@ def footer_schema(table_dir: str):
     from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import StructType
 
-    files = []
-    for root, dirs, names in os.walk(table_dir):
-        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
-        files += [os.path.join(root, f) for f in names if not f.startswith((".", "_"))]
     if not files:
         return None
     first = min(files)
@@ -886,23 +957,38 @@ def _load_sorted_postings(path: str) -> tuple[np.ndarray, object]:
     return terms, t
 
 
-def _term_slices(files: list[tuple[np.ndarray, object]], terms: list[str]) -> list:
+def _term_slices(
+    files: list[tuple[np.ndarray, object]], terms: list[str], by_term: bool = False
+) -> list[tuple[str | None, object]]:
     """The rows of ``terms`` (sorted) in each term-sorted file, in file
-    order, as zero-copy Arrow slices: query terms adjacent in a file
-    (a prefix expansion's, say) share one slice."""
+    order, as zero-copy Arrow slices: ``(term, slice)`` per term and file
+    when ``by_term``, else ``(None, slice)`` with query terms adjacent in
+    a file (a prefix expansion's, say) sharing one slice."""
     q = np.array(terms, dtype=object)
     out = []
     for tcol, table in files:
         lo = np.searchsorted(tcol, q, "left")
         hi = np.searchsorted(tcol, q, "right")
-        hit = hi > lo
-        if not hit.any():
+        hit = np.flatnonzero(hi > lo)
+        if not hit.size:
+            continue
+        if by_term:
+            out += [(terms[i], table.slice(int(lo[i]), int(hi[i] - lo[i]))) for i in hit]
             continue
         lo, hi = lo[hit], hi[hit]
         cut = np.flatnonzero(lo[1:] != hi[:-1]) + 1
         for a, z in zip(lo[np.r_[0, cut]], hi[np.r_[cut - 1, len(hi) - 1]]):
-            out.append(table.slice(int(a), int(z - a)))
+            out.append((None, table.slice(int(a), int(z - a))))
     return out
+
+
+#: Arrow types of the postings columns the driver-local tier reads (an
+#: empty selection's table)
+_POSTINGS_TYPES = {
+    "term": pa.string(),
+    "b_first": pa.list_(pa.int64()),
+    **{c: pa.list_(pa.binary()) for c in ("b_docs", "b_tfs", "b_norms", "b_pos")},
+}
 
 
 class SearchEngine:
@@ -1015,10 +1101,16 @@ class SearchEngine:
         ]
 
     def _read_table(self, name: str) -> DataFrame:
+        """Table ``name`` as of the open: the files :meth:`_at_open`
+        keeps, read as an explicit list under ``basePath`` so the
+        ``part=`` directories still give their partition column."""
         path = os.path.join(self.index_dir, name)
-        schema = footer_schema(path)
+        files = self._at_open(table_files(path))
+        schema = footer_schema(files)
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        return reader.parquet(path)
+        if not files:
+            return reader.parquet(path)
+        return reader.option("basePath", path).parquet(*files)
 
     def _load_conv_offsets(self) -> None:
         """Load the optional conv_offsets fast-path artifact: the build's
@@ -1191,8 +1283,9 @@ class SearchEngine:
         return np.arange(i0, i1)
 
     # the Spark-side tables, read on first use with explicit footer
-    # schemas (no Spark job): the driver-local tier never touches them,
-    # so opening the engine makes no JVM call for them
+    # schemas (no Spark job) from the files of the open: the driver-
+    # local tier never touches them, so opening the engine makes no JVM
+    # call for them
 
     @cached_property
     def postings(self) -> DataFrame:
@@ -1987,13 +2080,13 @@ class SearchEngine:
     #: "give me everything" query (k=None) with more candidates
     LOCAL_MAX_K = 10_000
 
-    def _local_posting_rows(
-        self, terms: set[str], cols: tuple[str, ...]
-    ) -> pd.DataFrame:
-        """Driver-side equivalent of :meth:`_rows_for_terms`: the posting
-        rows of ``terms`` with columns ``cols`` (``term`` last), in the
-        order a scan of their ``part=`` files returns them: parts
-        ascending, files by name, rows in file order.
+    def _local_slices(
+        self, terms: set[str], want: list[str], by_term: bool
+    ) -> list[tuple[str | None, object]]:
+        """The :func:`_term_slices` of ``terms`` over every touched part,
+        columns ``want`` (``term`` among them), in the order a scan of
+        their ``part=`` files returns them: parts ascending, files by
+        name, rows in file order.
 
         While the index's whole postings volume (Σdf over the driver
         vocabulary) fits LOCAL_MAX_POSTINGS, a touched part stays
@@ -2007,22 +2100,38 @@ class SearchEngine:
         part's file list is taken on its first touch and kept, so the
         local path sees one fixed index state, like the Spark
         DataFrame's frozen file listing."""
-        import pyarrow as pa
-
         by_part: dict[int, list[str]] = {}
         for t in sorted(terms):
             by_part.setdefault(term_part_py(t, self.num_parts), []).append(t)
-        want = [c for c in cols if c != "term"] + ["term"]
         resident = self._resident_ok()
         pieces = []
         for part in sorted(by_part):
-            if resident:
-                pieces += _term_slices(self._resident_part(part), by_part[part])
-            else:
-                pieces += self._scan_part(part, by_part[part], want)
+            files = (
+                self._resident_part(part) if resident else self._scan_part(part, by_part[part], want)
+            )
+            pieces += _term_slices(files, by_part[part], by_term)
+        return [(t, p.select(want)) for t, p in pieces]
+
+    def _local_posting_rows(self, terms: set[str], cols: tuple[str, ...]):
+        """Driver-side equivalent of :meth:`_rows_for_terms`: the posting
+        rows of ``terms`` with columns ``cols`` (``term`` last) as ONE
+        Arrow table, the concatenated zero-copy slices of the part files
+        (see :meth:`_local_slices`); no pandas frame is made."""
+        want = [c for c in cols if c != "term"] + ["term"]
+        pieces = [p for _, p in self._local_slices(terms, want, False)]
         if not pieces:
-            return pd.DataFrame(columns=want)
-        return pa.concat_tables([p.select(want) for p in pieces]).to_pandas()
+            return pa.table({c: pa.array([], _POSTINGS_TYPES[c]) for c in want})
+        return pieces[0] if len(pieces) == 1 else pa.concat_tables(pieces)
+
+    def _local_term_rows(self, terms: set[str], cols: tuple[str, ...]) -> dict:
+        """{term: its posting rows as an Arrow table, columns ``cols``
+        (``term`` among them)} for the ``terms`` with postings: each
+        term's slices in file order, so consumers take a term's rows
+        without a mask over the whole selection."""
+        by: dict[str, list] = {}
+        for t, p in self._local_slices(terms, list(cols), True):
+            by.setdefault(t, []).append(p)
+        return {t: v[0] if len(v) == 1 else pa.concat_tables(v) for t, v in by.items()}
 
     def _resident_ok(self) -> bool:
         """Whether postings parts may stay resident (see
@@ -2059,7 +2168,8 @@ class SearchEngine:
         return files
 
     def _scan_part(self, part: int, terms: list[str], want: list[str]) -> list:
-        """The term-filtered pyarrow scan of one part's files."""
+        """The term-filtered pyarrow scan of one part's files, as one
+        (term column, table) pair like a resident file's."""
         files = self._part_files(part)
         if not files:
             return []
@@ -2068,7 +2178,13 @@ class SearchEngine:
         t = _ds.dataset(files, format="parquet").to_table(
             columns=want, filter=_ds.field("term").isin(terms)
         )
-        return [t] if t.num_rows else []
+        if not t.num_rows:
+            return []
+        # files are term-sorted one by one: a stable sort by term makes
+        # the scan one term-sorted table, each term's rows in file order
+        tcol = t.column("term").to_numpy()
+        order = np.argsort(tcol, kind="stable")
+        return [(tcol[order], t.take(order))]
 
     def _local_budget_ok(self, terms: set[str]) -> bool:
         dfs = self.term_dfs(terms)
@@ -2079,20 +2195,16 @@ class SearchEngine:
         """Boolean mask: which ``values`` occur in ``sorted_arr``."""
         return _sorted_member_mask(sorted_arr, values)
 
-    #: vectorized decode of one term's posting rows → (docs, tfs,
-    #: norms) — the same kernel the executor path uses (module-level
-    #: ``_decode_frame_postings``): ONE varbyte pass over all blocks.
-    _local_decode_postings = staticmethod(_decode_frame_postings)
-
     #: docs-only local reads: per-block counts come off the doc
-    #: stream's own varbyte continuation bits (_decode_frame_docs)
+    #: stream's own varbyte continuation bits (_decode_docs)
     LOCAL_DOCS_COLS = ("b_first", "b_docs")
 
     @staticmethod
-    def _local_decode_docs(sub: pd.DataFrame) -> np.ndarray:
+    def _local_decode_docs(rows) -> np.ndarray:
         """Vectorized docs-only decode (membership sets): sorted unique
-        doc ids over every block of ``sub`` — shared executor kernel."""
-        return np.unique(_decode_frame_docs(sub))
+        doc ids over every block of Arrow ``rows`` — the executor
+        kernel's core."""
+        return np.unique(_decode_arrow_docs(rows))
 
     def _local_term_streams(
         self,
@@ -2111,15 +2223,13 @@ class SearchEngine:
         missing = {t for t in terms if t not in tcache}
         if not missing:
             return
-        rows = self._local_posting_rows(missing, self.SCORE_COLS)
-        terms_col = rows["term"].to_numpy() if len(rows) else np.empty(0, object)
+        rows = self._local_term_rows({t for t in missing if t in idf_map}, self.SCORE_COLS)
         for t in missing:
             iv = idf_map.get(t)
-            if iv is None:
+            if iv is None or t not in rows:
                 tcache[t] = (np.empty(0, np.int64), np.empty(0, np.float64))
                 continue
-            sub = rows[terms_col == t] if len(rows) else rows
-            docs, tfs, norms = self._local_decode_postings(sub)
+            docs, tfs, norms = _decode_arrow_postings(rows[t])
             adl = avgdl_map.get(t, self.avgdl) if avgdl_map else self.avgdl
             tcache[t] = (docs, bm25.score_tf(tfs, norms, adl, iv))
 
@@ -2199,8 +2309,7 @@ class SearchEngine:
                 # as the distributed merge kernel
                 if df_sum > self.LOCAL_MAX_POSTINGS:
                     return None
-                rows = self._local_posting_rows(terms, self.POS_COLS)
-                tcols = rows["term"].to_numpy() if len(rows) else np.empty(0, object)
+                rows = self._local_term_rows(terms, self.POS_COLS)
                 # pass 1: docs/tfs/norms only (cheap) → candidate doc
                 # set = intersection of every term's doc set (Lucene's
                 # lead-with-the-rarest conjunction, applied to all
@@ -2208,8 +2317,10 @@ class SearchEngine:
                 raw = {}
                 cand = None
                 for t in terms:
-                    sub = rows[tcols == t] if len(rows) else rows
-                    docs, tfs, norms = self._local_decode_postings(sub)
+                    sub = rows.get(t)
+                    if sub is None:
+                        return empty
+                    docs, tfs, norms = _decode_arrow_postings(sub)
                     if docs.size == 0:
                         return empty
                     raw[t] = (sub, docs, tfs, norms)
@@ -2224,8 +2335,7 @@ class SearchEngine:
                     sub, docs, tfs, norms = raw[t]
                     sel = self._sorted_member(cand, docs)
                     docs, tfs, norms = docs[sel], tfs[sel], norms[sel]
-                    pos_cat = b"".join(b for row in sub["b_pos"] for b in row)
-                    pb = np.frombuffer(pos_cat, dtype=np.uint8)
+                    pb, _lens = _arrow_blocks(sub.column("b_pos"))
                     vends = np.nonzero((pb & 0x80) == 0)[0] + 1
                     all_tfs = raw[t][2]
                     dend = vends[np.cumsum(all_tfs) - 1]
@@ -2290,7 +2400,7 @@ class SearchEngine:
             if df_sum > self.LOCAL_MAX_PHRASE_POSTINGS:
                 return None
             rows = self._local_posting_rows(terms, self.POS_COLS)
-            stream = list(_decode_positions_stream(node.terms)(iter([rows])))
+            stream = list(_decode_positions_stream(node.terms)(iter([rows.to_pandas()])))
             if not stream:
                 return empty
             scored = list(
@@ -2400,12 +2510,13 @@ class SearchEngine:
         k: int | None,
         mode: str,
         tcache: dict[str, tuple[np.ndarray, np.ndarray]] | None = None,
-    ) -> pd.DataFrame | None:
-        """Attempt the whole query driver-side; None = take the
-        distributed plan.  Covers exactly the shapes whose distributed
-        results it provably mirrors (same kernels, same combine
-        semantics): flat boolean-of-terms, and single Phrase / Prefix /
-        Wildcard / TermRange / Fuzzy leaves."""
+    ) -> dict[str, np.ndarray] | None:
+        """Attempt the whole query driver-side: the result columns (see
+        :meth:`_local_finish`), or None = take the distributed plan.
+        Covers exactly the shapes whose distributed results it provably
+        mirrors (same kernels, same combine semantics): flat
+        boolean-of-terms, and single Phrase / Prefix / Wildcard /
+        TermRange / Fuzzy leaves."""
         if (
             (k is not None and k > self.LOCAL_MAX_K)
             or self._off_bc is None
@@ -2446,11 +2557,14 @@ class SearchEngine:
 
     def _local_finish(
         self, docs: np.ndarray, scores: np.ndarray, k: int | None, mode: str
-    ) -> pd.DataFrame:
+    ) -> dict[str, np.ndarray]:
         """Driver-local mirror of :meth:`_finish`: (score desc, doc_id
         asc) ordering, optional best-per-conv collapse (max-struct
         winner = score desc then doc asc), top-k, rank, conv/turn
-        attachment via the conv_offsets searchsorted.
+        attachment via the conv_offsets searchsorted.  Returns the
+        RESULT_COLS as numpy columns of the RESULT_SCHEMA dtypes (rank
+        and turn_idx int32, doc_id int64, conv_id object, score
+        float64), which :class:`LocalResult` holds as they are.
 
         Turns mode prunes to the exact top-k SUPERSET first (k-th score
         threshold via np.partition, keeping every tie at the boundary),
@@ -2510,17 +2624,13 @@ class SearchEngine:
             order = np.lexsort((docs, -scores))
             docs, scores = docs[order][:k], scores[order][:k]
             oi = np.searchsorted(offs, docs, side="right") - 1
-        return pd.DataFrame(
-            {
-                "rank": np.arange(1, docs.size + 1, dtype=np.int32),
-                "doc_id": docs,
-                "conv_id": conv_ids[oi] if docs.size else np.empty(0, object),
-                "turn_idx": (docs - offs[oi]).astype(np.int32)
-                if docs.size
-                else np.empty(0, np.int32),
-                "score": scores,
-            }
-        )
+        return {
+            "rank": np.arange(1, docs.size + 1, dtype=np.int32),
+            "doc_id": docs,
+            "conv_id": conv_ids[oi] if docs.size else np.empty(0, object),
+            "turn_idx": (docs - offs[oi]).astype(np.int32) if docs.size else np.empty(0, np.int32),
+            "score": scores,
+        }
 
     RESULT_SCHEMA = (
         "rank int, doc_id long, conv_id string, turn_idx int, score double"
@@ -2613,7 +2723,6 @@ class SearchEngine:
         # driver-local members first (same eligibility and results as
         # the per-query fast path): their rows fold into ONE local
         # result — no Spark work for a batch of bounded queries
-        local_pdfs: list[pd.DataFrame] = []
         batch_tcache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         cand = [
             (qid, ast, _flatten_shoulds(ast), k, mode)
@@ -2653,11 +2762,9 @@ class SearchEngine:
                 local_results = list(lex.map(_local_one, cand))
         else:
             local_results = [_local_one(it) for it in cand]
-        for qid, lr in local_results:
-            if lr is not None:
-                lr.insert(0, "query_id", qid)
-                local_pdfs.append(lr)
-                resolved.pop(qid)
+        served = [(qid, lr) for qid, lr in local_results if lr is not None]
+        for qid, _lr in served:
+            resolved.pop(qid)
         shared: dict[str, tuple[Bool, int | None, str]] = {}
         nonflat: list[tuple[str, int | None, str]] = []
         for qid, (ast, k, mode) in resolved.items():
@@ -2667,13 +2774,23 @@ class SearchEngine:
             else:
                 nonflat.append((qid, k, mode))
         local = (
-            LocalResult(pd.concat(local_pdfs, ignore_index=True), self.BATCH_SCHEMA, self.spark)
-            if local_pdfs
+            LocalResult(
+                {
+                    "query_id": np.repeat(
+                        np.array([qid for qid, _ in served], dtype=object),
+                        [lr["rank"].size for _, lr in served],
+                    ),
+                    **{c: np.concatenate([lr[c] for _, lr in served]) for c in RESULT_COLS},
+                },
+                self.BATCH_SCHEMA,
+                self.spark,
+            )
+            if served
             else LocalResult.empty(self.BATCH_SCHEMA, self.spark)
         )
         if not resolved:
             return local  # every member served locally, or an empty batch
-        parts = [local] if local_pdfs else []
+        parts = [local] if served else []
         futures = []
         ex = None
         if nonflat:

@@ -226,27 +226,154 @@ def test_search_many_mixed_local_and_distributed(engines):
 
 
 def test_local_decoders_match_block_kernels(engines):
-    """_local_decode_postings / _local_decode_docs vs decode_block over
-    every posting row of a real index part."""
+    """The Arrow decoders of the local tier vs decode_block over every
+    posting row of a real index part."""
     local, _ = engines
     from emailindexer_spark.functions.codec import decode_block
+    from emailindexer_spark.plans.planner import _decode_arrow_postings
 
     vocab, dfs, _parts = local._driver_vocab()
     heavy = vocab[int(np.argmax(dfs))]
     rows = local._local_posting_rows({heavy}, local.SCORE_COLS)
-    docs, tfs, norms = local._local_decode_postings(rows)
+    docs, tfs, norms = _decode_arrow_postings(rows)
     exp_d, exp_t, exp_n = [], [], []
-    for r in rows.itertuples(index=False):
-        for i in range(len(r.b_docs)):
-            d, t, n = decode_block(int(r.b_first[i]), r.b_docs[i], r.b_tfs[i], r.b_norms[i])
+    for r in rows.to_pylist():
+        for blk in zip(r["b_first"], r["b_docs"], r["b_tfs"], r["b_norms"]):
+            d, t, n = decode_block(*blk)
             exp_d.append(d)
             exp_t.append(t)
             exp_n.append(n)
+    assert len(exp_d) > 1
     assert (docs == np.concatenate(exp_d)).all()
     assert (tfs == np.concatenate(exp_t)).all()
     assert (norms == np.concatenate(exp_n)).all()
     drows = local._local_posting_rows({heavy}, local.LOCAL_DOCS_COLS)
     assert (local._local_decode_docs(drows) == np.unique(np.concatenate(exp_d))).all()
+
+
+def _largest_postings_file(index_dir):
+    import glob
+    import os
+
+    from emailindexer_spark.plans.planner import _load_sorted_postings
+
+    files = glob.glob(os.path.join(index_dir, "postings", "part=*", "*.parquet"))
+    return _load_sorted_postings(max(files, key=os.path.getsize))[1]
+
+
+def _assert_arrow_reader_matches_frames(rows):
+    """The Arrow block reader and the pandas adapter decode ``rows``
+    (an Arrow table) to the same arrays, b_pos bytes included."""
+    import emailindexer_spark.plans.planner as P
+
+    pdf = rows.to_pandas()
+    for got, want in zip(P._decode_arrow_postings(rows), P._decode_frame_postings(pdf)):
+        assert got.dtype == want.dtype == np.int64 and (got == want).all()
+    got, want = P._decode_arrow_docs(rows), P._decode_frame_docs(pdf)
+    assert got.dtype == want.dtype and (got == want).all()
+    for col in ("b_docs", "b_tfs", "b_norms", "b_pos"):
+        (gb, gl), (wb, wl) = P._arrow_blocks(rows.column(col)), P._frame_blocks(pdf[col])
+        assert gb.tobytes() == wb.tobytes() and (gl == wl).all(), col
+    assert (P._arrow_firsts(rows.column("b_first")) == P._frame_firsts(pdf["b_first"])).all()
+
+
+def test_arrow_block_reader_matches_pandas_adapter(engines, index_dir):
+    """On real postings rows: a zero-copy slice from the middle of a file
+    (its list and binary offsets do not start at 0), a multi-chunk table
+    and empty selections."""
+    import pyarrow as pa
+
+    import emailindexer_spark.plans.planner as P
+
+    local, _ = engines
+    t = _largest_postings_file(index_dir)
+    n = t.num_rows
+    assert n > 10
+    mid = t.slice(n // 3, n // 3)
+    chunk = mid.column("b_docs").chunks[0]
+    assert chunk.offset > 0 and chunk.flatten().offset > 0
+    _assert_arrow_reader_matches_frames(mid)
+    multi = pa.concat_tables([t.slice(1, 3), t.slice(n - 4, 4), t.slice(n // 2, 0)])
+    assert multi.column("b_docs").num_chunks == 3
+    _assert_arrow_reader_matches_frames(multi)
+    _assert_arrow_reader_matches_frames(t)
+    _assert_arrow_reader_matches_frames(t.slice(n // 2, 0))
+    empty = local._local_posting_rows({"zzznope"}, local.POS_COLS)
+    assert empty.num_rows == 0 and empty.column_names[-1] == "term"
+    assert all(a.size == 0 for a in P._decode_arrow_postings(empty))
+    assert P._decode_arrow_docs(empty).size == 0 and local._local_decode_docs(empty).size == 0
+
+
+def test_arrow_decoders_reject_a_block_with_no_postings(index_dir):
+    """A block with no postings would shift every later doc id of the
+    selection; the Arrow decoders raise, as the pandas adapters do."""
+    import pyarrow as pa
+
+    import emailindexer_spark.plans.planner as P
+
+    t = _largest_postings_file(index_dir)
+    rows = t.slice(t.num_rows // 2, 2).to_pylist()
+    r = rows[0]
+    for col, empty in (("b_first", r["b_first"][0]), ("b_docs", b""), ("b_tfs", b""), ("b_norms", b"")):
+        r[col] = r[col][:1] + [empty] + r[col][1:]
+    r["b_pos"] = r["b_pos"][:1] + [b""] + r["b_pos"][1:]
+    bad = pa.Table.from_pylist(rows, schema=t.schema)
+    for decode in (P._decode_arrow_postings, P._decode_arrow_docs):
+        with pytest.raises(ValueError, match="non-empty"):
+            decode(bad)
+        with pytest.raises(ValueError, match="non-empty"):
+            decode(bad.slice(0, 1))
+
+
+def test_local_tier_makes_no_pandas_frame(spark, monkeypatch, engines):
+    """Every locally served SHAPES entry but the sloppy phrase (whose
+    merge kernel is shared with the executors) runs from the resident
+    postings to the result rows with no pandas conversion: with
+    ``pyarrow.pandas_compat.table_to_dataframe`` (what ``Table.to_pandas``
+    calls) patched to raise, each search and an all-local search_many
+    still answer, equal to the distributed tier, and collect / count /
+    take build no pandas frame.  ``toPandas`` still equals the JVM
+    relation's frame, dtypes included."""
+    import pandas as pd
+    import pyarrow.pandas_compat
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from emailindexer_spark.plans.results import LocalResult
+
+    local, dist = engines
+    subs = _subs(local)
+    cases = [
+        (tmpl.format(**subs), mode)
+        for tmpl, mode, _wand in SHAPES
+        if '"~' not in tmpl  # the sloppy phrase
+        for mode in ("turns", "conversations")
+    ]
+    want = [_rows(dist.search(q, k=12, mode=mode)) for q, mode in cases]
+    batch = {f"q{i}": (q, 12, mode) for i, (q, mode) in enumerate(cases)}
+    want_many = _batch_rows(dist.search_many(batch))
+    for q, mode in cases:  # the first touch of each part reads its files
+        local.search(q, k=12, mode=mode).collect()
+
+    def boom(*a, **k):
+        raise AssertionError("pandas frame made on the local tier")
+
+    results = []
+    with monkeypatch.context() as m:
+        m.setattr(pyarrow.pandas_compat, "table_to_dataframe", boom)
+        with pytest.raises(AssertionError, match="pandas frame"):
+            local._local_posting_rows({subs["mid"]}, local.SCORE_COLS).to_pandas()
+        for (q, mode), rows in zip(cases, want):
+            res = local.search(q, k=12, mode=mode)
+            assert isinstance(res, LocalResult), (q, mode)
+            assert _rows(res) == rows, (q, mode)
+            assert res.count() == len(rows) and len(res.take(2)) == min(2, len(rows))
+            assert "_pdf" not in res.__dict__ and "_jdf" not in res.__dict__, (q, mode)
+            results.append(res)
+        many = local.search_many(batch)
+        assert isinstance(many, LocalResult) and _batch_rows(many) == want_many
+        assert "_pdf" not in many.__dict__
+    for res in results + [many]:
+        pd.testing.assert_frame_equal(res.toPandas(), DataFrame(res._jdf, spark).toPandas())
 
 
 def test_resident_parts_serve_without_reading_files(spark, monkeypatch, engines, index_dir):
@@ -291,8 +418,6 @@ def test_concurrent_first_touches_load_each_part_once(spark, monkeypatch, index_
     import threading
     from collections import Counter
 
-    import pandas as pd
-
     import emailindexer_spark.plans.planner as P
 
     ref = SearchEngine(spark, index_dir)
@@ -329,7 +454,7 @@ def test_concurrent_first_touches_load_each_part_once(spark, monkeypatch, index_
     assert not errors and not any(t.is_alive() for t in threads)
     assert loads and set(loads.values()) == {1}
     for i in range(16):
-        pd.testing.assert_frame_equal(got[i], want[i % 7])
+        assert got[i].equals(want[i % 7])
 
 
 def test_unsorted_postings_file_raises(spark, tmp_path, index_dir):

@@ -580,7 +580,9 @@ def test_engine_answers_as_of_its_open(spark, index_dir, corpus_pdf):
     """An engine opened before an append and first searched after it
     answers for the corpus it opened: the appended vocabulary and
     postings files stay out of it, so it finds none of the new docs and
-    gives the answers it would have given before the append.  A fresh
+    gives the answers it would have given before the append.  That
+    holds on the distributed plans too (``with_text=True``, and ``k``
+    above LOCAL_MAX_K), which read the Spark-side tables.  A fresh
     engine finds every appended doc under its own conversation."""
     # the corpus's own terms: the batch re-indexes its first turns' text
     queries = ["juja", "radu OR sopugowi", "qojema AND tenuboho", '"qojema ralocu"', "qal*", "gonopo -kaqi"]
@@ -596,8 +598,17 @@ def test_engine_answers_as_of_its_open(spark, index_dir, corpus_pdf):
                 for mode in ("turns", "conversations")
             ]
 
+        def distributed(eng):
+            return [
+                [tuple(r) for r in eng.search(q, k=k, mode=mode, with_text=text).collect()]
+                for q in queries[:4]
+                for mode in ("turns", "conversations")
+                for k, text in ((20, True), (SearchEngine.LOCAL_MAX_K + 1, False))
+            ]
+
         before = answers(SearchEngine(spark, d))
-        assert all(before)
+        before_dist = distributed(SearchEngine(spark, d))
+        assert all(before) and all(before_dist)
         old = SearchEngine(spark, d)  # opened, not yet searched
         batch = corpus_pdf.head(200).assign(
             conv_id=lambda x: "zz_" + x.conv_id, text=lambda x: x.text + " zzsentinel"
@@ -605,6 +616,7 @@ def test_engine_answers_as_of_its_open(spark, index_dir, corpus_pdf):
         incremental_append(spark, d, spark.createDataFrame(batch))
         assert old.search("zzsentinel", k=300).collect() == []
         assert answers(old) == before
+        assert distributed(old) == before_dist
         hits = SearchEngine(spark, d).search("zzsentinel", k=300).collect()
         assert sorted((r.conv_id, r.turn_idx) for r in hits) == sorted(
             zip(batch.conv_id, batch.turn_idx)

@@ -10,17 +10,19 @@ multi-turn conversation/agent transcripts::
 
 Pipeline (SURVEY.md §2.10 / §3):
 
-  tokenize (vectorized Arrow/pandas UDF, StandardAnalyzer-parity for the
-  validated ASCII classes) → docID assignment (dense rank over the stable
-  (conv_id, turn_idx) ordering, two-phase at scale) → per-partition sorted
+  one staging kernel per conversation-range shard (in-process on the
+  driver for small inputs, one Spark task per shard otherwise):
+  docID assignment (dense rank over the stable (conv_id, turn_idx)
+  ordering, each shard from its base) → vectorized tokenize
+  (StandardAnalyzer-parity for the validated ASCII classes) → term-sorted
   posting lists with docID delta + varbyte compression in independently
-  decodable 128-doc blocks → salted repartition-by-term merge with explicit
-  skew splitting for heavy terms → broadcast doc-length statistics →
+  decodable 128-doc blocks, heavy terms cut into doc-range splits, files
+  laid out by md5(term) part → broadcast doc-length statistics →
   top-k BM25 (k1=1.2, b=0.75, Lucene-9 lossy norm semantics) by an
   exhaustive vectorized pass → conversation collapse (reference: root-id
   dedup, EmailIndexSearcher.java:58-71).
 """
 
-__version__ = "0.3.3"
+__version__ = "0.4.0"
 
 from emailindexer_spark.config import get_spark  # noqa: F401

@@ -117,29 +117,3 @@ def encode_lengths(dl: np.ndarray) -> np.ndarray:
 def decode_lengths(norm: np.ndarray) -> np.ndarray:
     """Vectorized byte4ToInt via the table."""
     return LENGTH_TABLE[np.asarray(norm, dtype=np.int64)]
-
-
-def norm_byte_expr(dl_col):
-    """Spark Column: intToByte4 of an int doc-length column, JVM-side.
-
-    Mirrors :func:`int_to_byte4` with pure column arithmetic so the build
-    can derive norms in the same projection that counts tokens:
-
-    * bit_length(x) via the length of the base-2 string (``conv`` — exact,
-      unlike floor(log2) at power-of-two boundaries),
-    * ``x >> s`` as ``floor(x / 2^s)`` (division by a power of two is
-      exact in float64 for x < 2^53),
-    * ``(v & 7) | ((s+1) << 3)`` as ``v % 8 + (s+1)*8`` (fields disjoint).
-    """
-    from pyspark.sql import functions as F
-
-    x = (dl_col - F.lit(NUM_FREE_VALUES)).cast("long")
-    nbits = F.length(F.conv(x.cast("string"), 10, 2))
-    s = F.greatest(nbits - F.lit(4), F.lit(0)).cast("int")
-    shifted = F.floor(x / F.pow(F.lit(2.0), s.cast("double"))).cast("long")
-    tiny = (shifted % 8 + (s + 1) * 8).cast("int")
-    return (
-        F.when(dl_col < F.lit(NUM_FREE_VALUES + 8), dl_col)  # free + subnormal: exact
-        .otherwise(F.lit(NUM_FREE_VALUES) + tiny)
-        .cast("int")
-    )

@@ -22,7 +22,8 @@ letters, digits, apostrophes, dots — FIXTURES.md §1), which reduce to:
 
 Two implementations, kept in lock-step by tests:
 ``tokenize`` (pure Python, used by the oracle and the query parser) and
-``tokenize_series`` (vectorized pandas, used inside the Spark build UDFs).
+``tokenize_series`` / ``tokenize_series_codes`` (vectorized, used by the
+build's staging kernel).
 
 Simple mode (``simple=True``) is plain ``[a-z0-9]+`` runs — the variant
 the DuckDB oracle SQL can reproduce (RE2 has no lookbehind); on plain
@@ -47,43 +48,6 @@ _STANDARD_RE = re.compile(
     r")*"
 )
 _SIMPLE_RE = re.compile(r"[a-z0-9]+")
-
-#: simple-mode pattern as a string for engines that share it (DuckDB RE2,
-#: Spark regexp_extract_all) — keep in sync with _SIMPLE_RE.
-SIMPLE_PATTERN = "[a-z0-9]+"
-
-#: standard-mode pattern as a string. Java regex (Spark JVM-side) supports
-#: the same lookbehind/lookahead syntax as Python `re`, so this string is
-#: shared verbatim — keep in sync with _STANDARD_RE.
-STANDARD_PATTERN = (
-    r"[a-z0-9]+(?:"
-    r"(?<=[a-z])'(?=[a-z])[a-z0-9]+"
-    r"|(?<=[a-z])\.(?=[a-z])[a-z0-9]+"
-    r"|(?<=[0-9])\.(?=[0-9])[a-z0-9]+"
-    r")*"
-)
-
-
-def dl_expr(text_col, simple: bool = False):
-    """Spark Column: exact token COUNT of a text column, JVM-side.
-
-    Identical to ``len(tokenize(text, simple))`` — same regex executed by
-    java.util.regex instead of Python ``re`` (lookarounds behave the
-    same), with the maxTokenLength-255 split contributing
-    ceil(len(token)/255) per over-long token.  Lets the build compute
-    per-doc lengths (and SmallFloat norms) inside a plain column
-    projection: no Python worker, no per-token rows, no shuffle.
-    """
-    from pyspark.sql import functions as F
-
-    pattern = SIMPLE_PATTERN if simple else STANDARD_PATTERN
-    toks = F.regexp_extract_all(F.lower(F.coalesce(text_col, F.lit(""))), F.lit(pattern), F.lit(0))
-    return F.aggregate(
-        toks,
-        F.lit(0),
-        lambda acc, t: acc + F.ceil(F.length(t) / F.lit(MAX_TOKEN_LEN)).cast("int"),
-    )
-
 
 def _split_long(tokens: list[str]) -> list[str]:
     if all(len(t) <= MAX_TOKEN_LEN for t in tokens):
@@ -124,10 +88,9 @@ _FAST_MAX_TOKEN = 32
 
 def token_counts(texts: pd.Series, simple: bool = False) -> np.ndarray:
     """Exact per-row token COUNTS (``len(tokenize(text))``) without
-    materializing tokens: the ASCII fast path stops after the run scan.
-    Drop-in replacement for the JVM ``dl_expr`` column (measured ~40
-    core-seconds of java.util.regex per 600k-doc build) — identical
-    values by the same fuzz lock-step as tokenize_series_codes."""
+    materializing tokens: the ASCII fast path stops after the run scan
+    — identical values by the same fuzz lock-step as
+    tokenize_series_codes."""
     nlens, _codes, _uniq = tokenize_series_codes(texts, simple=simple, count_only=True)
     return nlens
 

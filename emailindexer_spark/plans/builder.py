@@ -1,75 +1,55 @@
-"""Distributed inverted-index build (SURVEY.md §2.10, §3.3).
+"""Inverted-index build (SURVEY.md §2.10, §3.3).
 
 Replaces the reference's sequential paged scan → Lucene IndexWriter loop
-(EmailIndexGenerator.java:45-101) with a Spark-first pipeline:
+(EmailIndexGenerator.java:45-101) with ONE staging kernel,
+``_stage_on_driver``: transcript rows (a pyarrow Table) → docIDs from
+their stable (conv_id, turn_idx) order → per-doc lengths and SmallFloat
+norms → the vectorized tokenizer → term-major postings cut into
+(term, split) chunk rows (``_pack_chunk_rows``) → independently
+decodable delta+varbyte blocks (``_encode_chunk_table``) → the index
+tables, written with pyarrow:
 
-  stage doc_index   sanitize (BodyReplyRemover parity, optional) →
-                    docID assignment (two-phase, operators/docid.py —
-                    verified-dense inputs take the broadcast-offsets
-                    fast path: NO shuffle or sort of the wide per-turn
-                    rows) → per-doc length + SmallFloat norm as PURE
-                    COLUMN EXPRESSIONS in the same projection (Java
-                    regex token count — functions/tokenizer.dl_expr —
-                    and functions/smallfloat.norm_byte_expr: no Python
-                    worker, no per-token rows) → stored-fields table
-  stage doc_stats   skinny projection of doc_index (doc_id, conv_id,
-                    turn_idx, dl, norm), map-side (source partitions are
-                    already doc_id-sorted), written CONCURRENTLY with
-                    the postings stage; global N/avgdl ride the
-                    doc_index write via observe()
-  stage postings    heavy-term detection from a DETERMINISTIC hash-of-
-                    doc_id-sampled tokenize (exact full pass below the
-                    sampling cutoff; hash, not modulo, so doc_id-
-                    periodic terms cannot dodge the sample) → explicit
-                    skew splitting: df > threshold terms are cut into
-                    doc-range splits → ONE tokenize pass feeding the
-                    wide (term, split) shuffle directly (no persist, no
-                    token-stream round-trip through storage) →
-                    mapInPandas encodes each sorted run into
-                    independently decodable delta+varbyte blocks → one
-                    cheap exchange of the ENCODED rows lays files out
-                    by part = md5(term) % P (query-side pruning)
-  stage term_dict   (term, part, df) table range-partitioned + sorted by
-                    term — Lucene's sorted term dictionary: prefix
-                    queries expand here (vocab-scale scan with row-group
-                    min/max pruning) instead of scanning postings
-  stage build_metrics  per-part lineage: postings rows written, payload
-                    bytes, skew splits (FIXTURES.md §5)
+  doc_index      stored fields plus dl/norm per field, one row per turn
+  doc_stats      skinny (doc_id, conv_id, turn_idx, dl, norm) projection
+  postings       one row per (term, split), one (term, split_id)-sorted
+                 file per part = md5(term) % P (query-side pruning)
+  term_dict      (term, part, df) sorted by term (prefix expansion)
+  conv_offsets   (conv_id, conv_offset, n_turns) of a dense build
+  build_metrics  per-part lineage (FIXTURES.md §5)
 
-Every stage commits a snapshot in the manifest (sources/checkpoint.py);
-``build(resume=True)`` skips committed stages, reproducing byte-identical
-postings after a mid-build kill.  (A driver build, below, commits all of
-its stages in one manifest write.)
+Input size decides only WHERE the kernel runs:
 
-Small builds skip the pipeline: a fresh build of a bare local parquet
-input of at most ``DRIVER_MAX_TURNS`` rows and ``DRIVER_MAX_INPUT_BYTES``
-bytes reads its files with pyarrow (``read_bare_parquet``, the table
-Spark's Arrow collect would return; the collect where it cannot map
-them) and stages them on the driver with the append's kernel
-(``_stage_on_driver``), which writes the same tables, stages and stats
-(test-gated).  Spark's fixed per-job costs dominate an input that
-small; the index's first write is then an ordinary commit — one
-manifest write — like every small append after it.
+* a fresh build of a bare local parquet input of at most
+  ``DRIVER_MAX_TURNS`` rows and ``DRIVER_MAX_INPUT_BYTES`` bytes runs it
+  once, in-process on the driver, reading the files with pyarrow
+  (``read_bare_parquet``: the table Spark's Arrow collect would return;
+  the collect where it cannot map them);
+* any other input is cut into SHARDS of whole conversations, contiguous
+  in (conv_id, turn_idx) order and within both caps (one Spark job
+  plans them), and each shard runs the kernel at its base docID in one
+  Spark task (a second job), writing its own files — Lucene's
+  per-thread segment writers — which the same job merges into one
+  postings file per part; the driver then merges the shards' term
+  dictionaries and metrics.
 
-Scale notes (the 100 TB story):
-* the token stream is materialized exactly once, map-side, flowing
-  straight into the ONE wide per-token shuffle (term, split); per-doc
-  stats never touch per-token rows (they are column expressions over the
-  text), so no second token-stream shuffle, persist, or storage bounce,
-* heavy-term detection samples a fixed-size deterministic doc subset
-  (xxhash64(doc_id) % mod == 0 — partition-invariant, exact when the
-  corpus is small, immune to doc_id-periodic term placement); a
-  binomial-tail mis-estimate only changes the physical split fan-out of
-  a term near the threshold, never query results,
-* skew: without splitting, a 40%-presence stopword's posting run lands in
-  one task; with df-proportional splits each task gets ≤ split_target
-  postings regardless of term skew,
-* no driver-side loops over data; driver only handles P-sized summaries.
+Heavy terms (df > heavy_df_threshold within a shard) are cut into
+doc-range splits of about split_target postings; each shard's split ids
+start past every earlier shard's, so (term, split_id) is unique and a
+term's rows in split order cover ascending, disjoint doc ranges.
+Appends (streaming/ingest.py) stage with the same kernel, and compaction
+(streaming/compact.py) re-cuts every term from its exact df.
+
+Either route commits the manifest in ONE write (``Manifest.one_write``):
+a crash commits nothing.  A shard marks itself done once its files are
+written, so ``build(resume=True)`` after a crash stages only the
+unmarked shards of the same plan.
 """
 
 from __future__ import annotations
 
-import math
+import glob
+import hashlib
+import json
 import os
 import shutil
 import time
@@ -79,6 +59,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -89,25 +70,16 @@ from emailindexer_spark.functions.codec import (
     varbyte_encode_offsets,
 )
 from emailindexer_spark.functions.sanitize import remove_quoted_replies
-from emailindexer_spark.functions.smallfloat import encode_lengths, norm_byte_expr
+from emailindexer_spark.functions.smallfloat import encode_lengths
 from emailindexer_spark.functions.tokenizer import (
     token_counts,
     tokenize_series_codes,
 )
-from emailindexer_spark.operators.docid import (
-    assign_doc_ids_with_total,
-    conv_offsets,
-    validate_transcripts,
-)
+from emailindexer_spark.operators.docid import conv_offsets, validate_transcripts
 from emailindexer_spark.sources.checkpoint import Manifest
 
-POSTINGS_SCHEMA = (
-    "term string, split_id int, part int, df_row long, first_doc long, last_doc long, "
-    "b_first array<long>, b_docs array<binary>, b_tfs array<binary>, b_norms array<binary>, "
-    "b_pos array<binary>"
-)
-#: POSTINGS_SCHEMA as Arrow types: the encoder's output, and the file
-#: schema of a postings part (without ``part``)
+#: the encoder's output; a postings file holds these columns but
+#: ``part``, which its directory names
 POSTINGS_ARROW_SCHEMA = pa.schema(
     [
         ("term", pa.string()),
@@ -121,16 +93,6 @@ POSTINGS_ARROW_SCHEMA = pa.schema(
     ]
 )
 
-#: SPARK_GRAFT_BUILD_TRACE=1 prints per-phase wall times — the
-#: scaling-diagnosis knob: run the same build at two parallelism levels
-#: and diff the phases to find non-scaling constants
-_TRACE = os.environ.get("SPARK_GRAFT_BUILD_TRACE") == "1"
-
-
-def _tr(label: str, t0: float) -> None:
-    if _TRACE:
-        print(f"TRACE {label} {time.time() - t0:.2f}", flush=True)
-
 
 def write_conv_offsets(
     dest: str, conv_ids: np.ndarray, offsets: np.ndarray, n_turns: np.ndarray
@@ -138,9 +100,6 @@ def write_conv_offsets(
     """Write one conv_offsets piece (conv_id, conv_offset, n_turns) with
     pyarrow.  tmp + atomic rename: a crash mid-write must never leave a
     truncated parquet at the published name."""
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
     tmp = dest + ".tmp"
     papq.write_table(
         pa.table(
@@ -169,14 +128,9 @@ def bare_parquet(df: DataFrame) -> BareParquet | None:
     — no Spark job, ~ms.  None unless the analyzed plan is a plain
     ``LogicalRelation`` (any filter, union or projection on top would
     make the files and counts wrong) and every file is local with a
-    readable parquet footer.  A build reads it at entry to choose the
-    driver path (IndexBuilder.build) and to start the heavy-term sample
-    before docid assignment finishes; callers must fall back to the
-    exact post-docid count when this returns None.  read_bare_parquet
-    reads the rows."""
+    readable parquet footer.  Builds and appends read it to choose the
+    driver route; read_bare_parquet reads the rows."""
     from urllib.parse import unquote, urlparse
-
-    import pyarrow.parquet as papq
 
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -210,9 +164,6 @@ def read_bare_parquet(df: DataFrame, bp: BareParquet) -> pa.Table | None:
     cannot map — a column the files lack (a hive partition column), a
     type the cast refuses, files Spark would split — and the caller
     collects."""
-    import pyarrow.parquet as papq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     # the scan's row order: files by size, largest first (stable), each
     # whole unless it exceeds the smallest split size Spark may choose
     sizes = [os.path.getsize(f) for f in bp.files]
@@ -223,11 +174,7 @@ def read_bare_parquet(df: DataFrame, bp: BareParquet) -> pa.Table | None:
     ):
         return None
     try:
-        schema = to_arrow_schema(
-            df.schema,
-            error_on_duplicated_field_names_in_struct=True,
-            prefers_large_types=jconf.arrowUseLargeVarTypes(),
-        )
+        schema = _arrow_schema(df)
         # a column the files lack raises, as does a lossy cast
         return pa.concat_tables(
             papq.read_table(f, columns=schema.names).cast(schema) for f in files
@@ -236,79 +183,19 @@ def read_bare_parquet(df: DataFrame, bp: BareParquet) -> pa.Table | None:
         return None
 
 
-def ensure_parallelism(df: DataFrame, target: int) -> DataFrame:
-    """Floor a DataFrame's partition count.
+def _arrow_schema(df: DataFrame) -> pa.Schema:
+    """The Arrow schema of ``df.toArrow()``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    The tokenize stage is map-side of whatever partitioning the scan
-    produced; a small-but-dense parquet input (text compresses ~10x)
-    otherwise serializes the most expensive stage of the build.  At real
-    cluster scale inputs arrive in thousands of splits and this is a
-    no-op."""
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def term_part_expr(term_col, num_parts: int):
-    """part = int(md5(term)[:8], 16) % P — driver-computable (python
-    hashlib gives the same value), so query planning prunes partitions
-    without a Spark job."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(term_col), 1, 8), 16, 10).cast("long"),
-        F.lit(num_parts),
-    ).cast("int")
+    return to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
 
 
 def term_part_py(term: str, num_parts: int) -> int:
-    import hashlib
-
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:8], 16) % num_parts
-
-
-#: map-side pre-aggregated posting chunks: ONE row per (term, split,
-#: map-batch) instead of one row per (doc, term).  docs ride as
-#: delta+varbyte (first absolute), tfs as varbyte, norms raw, positions
-#: as the tokenizer's segmented varbyte — the wide shuffle carries
-#: ~100× fewer rows and ~5 bytes/posting instead of a 40+-byte Spark row
-#: (guide §2.3 "aggregate before you shuffle" / §8 "move heavy bytes
-#: once"), and the reduce-side JVM sort orders chunk rows, not postings.
-CHUNK_SCHEMA = "term string, split_id int, docs binary, tfs binary, norms binary, pos binary"
-
-
-def _tokenize_term_df_counts(simple: bool, fields: tuple[str, ...] = ("text",)):
-    """mapInPandas for the heavy-term sample: batches → (term, df)
-    partial counts (df = docs containing the term in this batch) —
-    uniques-sized output instead of per-(doc, term) rows.  Rows are
-    identified POSITIONALLY within the batch (batches partition the
-    sample disjointly, so per-batch distinct-(term, row) counts sum to
-    the sample df exactly) — the sample therefore needs no doc_id
-    column and can run concurrently with docid assignment."""
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            frames = []
-            for fi, f in enumerate(fields):
-                prefix = "" if fi == 0 else f + ":"
-                nlens, codes, uniques = tokenize_series_codes(pdf[f], simple=simple)
-                if nlens.sum() == 0:
-                    continue
-                flat_docs = np.repeat(np.arange(len(pdf), dtype=np.int64), nlens)
-                order = np.lexsort((flat_docs, codes))
-                cv, dv = codes[order], flat_docs[order]
-                gmask = np.concatenate(
-                    ([True], (cv[1:] != cv[:-1]) | (dv[1:] != dv[:-1]))
-                )
-                cnt = np.bincount(cv[gmask], minlength=len(uniques))
-                terms_out = (
-                    (prefix + pd.Series(uniques)).to_numpy() if prefix else uniques
-                )
-                frames.append(
-                    pd.DataFrame({"term": terms_out, "df": cnt.astype(np.int64)})
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-
-    return gen
 
 
 def _pos_doc_bounds(pos_buf: bytes, tfs: np.ndarray) -> np.ndarray:
@@ -327,37 +214,36 @@ def _pack_chunk_rows(
     norms: np.ndarray,
     pos_buf: bytes,
     pos_bounds: np.ndarray | None,
-    heavy: dict,
+    heavy_rule: tuple[int, int] | None,
+    base: int,
     n_rows: int,
-    heavy_rule: tuple[int, int] | None = None,
 ) -> pd.DataFrame:
-    """Term-major postings → CHUNK_SCHEMA rows, one per (term, split).
+    """Term-major postings → chunk rows (term, split_id, docs, tfs,
+    norms, pos), one per (term, split).
 
     ``terms[i]`` owns postings ``tstarts[i]:tstarts[i + 1]``, docs
-    strictly ascending within each term.  A term in ``heavy`` ({term:
-    n_splits}) is cut at doc-range edges, split_id = doc_id //
-    ceil(n_rows / n_splits); any other term is one split-0 row.
-    ``heavy_rule`` = (heavy_df_threshold, split_target) replaces
-    ``heavy`` with the exact-df map when the postings hold the whole
-    corpus: a term of df > threshold gets ceil(df / split_target)
-    splits, the map the build's sample gives at sample mod 1.
-    ``pos_bounds[j]`` is the first byte of posting j's positions in
-    ``pos_buf`` (length n + 1), or None without positions.
+    strictly ascending within each term and inside ``[base, base +
+    n_rows)``.  With ``heavy_rule`` = (heavy_df_threshold,
+    split_target), a term of df > threshold is cut into n_splits =
+    ceil(df / split_target) doc-range splits, split_id = (doc_id -
+    base) // ceil(n_rows / n_splits): the exact-df map, as the
+    postings hold every doc of that range.  Every other term (every
+    term without ``heavy_rule``) is one split-0 row.  ``pos_bounds[j]``
+    is the first byte of posting j's positions in ``pos_buf`` (length
+    n + 1), or None without positions.
 
     ONE varbyte pass each for docs (delta-coded, absolute at every row
     start) and tfs, then per-row memoryview slices: no Python loop over
     postings."""
     n = docs.size
     tlens = np.diff(tstarts)
+    sids = np.zeros(n, dtype=np.int64)
     if heavy_rule is not None:
         ns = np.where(tlens > heavy_rule[0], -(-tlens // heavy_rule[1]), 0)
-    else:
-        ns = np.fromiter((heavy.get(t, 0) for t in terms), np.int64, count=len(terms))
-    is_heavy = np.repeat(ns > 0, tlens)
-    sids = np.zeros(n, dtype=np.int64)
-    if is_heavy.any():
-        span = np.repeat(-(-n_rows // np.maximum(ns, 1)), tlens)
-        sids[is_heavy] = docs[is_heavy] // span[is_heavy]
+        is_heavy = np.repeat(ns > 0, tlens)
+        if is_heavy.any():
+            span = np.repeat(-(-n_rows // np.maximum(ns, 1)), tlens)
+            sids[is_heavy] = (docs[is_heavy] - base) // span[is_heavy]
     row_start = np.zeros(n, dtype=bool)
     row_start[tstarts[:-1]] = True
     row_start[1:] |= sids[1:] != sids[:-1]
@@ -389,36 +275,32 @@ def _pack_chunk_rows(
 
 
 def _tokenize_to_chunk_rows(
+    doc_ids: np.ndarray,
+    texts: dict[str, pd.Series],
     simple: bool,
     positions: bool,
-    fields: tuple[str, ...],
-    heavy_bc,
-    n_rows: int,
-    heavy_rule: tuple[int, int] | None = None,
-):
-    """mapInPandas: (doc_id, <fields...>) batches → packed CHUNK_SCHEMA
-    rows, one per (term, split) per batch.
+    heavy_rule: tuple[int, int] | None,
+    base: int,
+) -> list[pd.DataFrame]:
+    """Chunk rows (_pack_chunk_rows) of the docs ``doc_ids`` — every doc
+    of ``[base, base + len(doc_ids))`` — one frame per field with
+    tokens; ``texts`` maps each field to its column, fields[0] first.
 
-    One lexsort puts the batch's tokens in term-major (then doc, then
+    One lexsort puts a field's tokens in term-major (then doc, then
     position) order; per-(doc, term) tf, norm and segmented-delta
     positions come off it vectorized, and _pack_chunk_rows cuts the
-    rows.  ``heavy_bc`` is a broadcast {term_key: n_splits} from the
-    sample pass, or None (every term one split-0 row per batch);
-    ``heavy_rule`` is _pack_chunk_rows' exact-df rule, for a single
-    batch holding the whole corpus.
-    Non-default fields emit FIELD-PREFIXED term keys (``field:term``)
-    with that field's own norm — one shared term space carrying
-    per-field statistics (Lucene's per-field terms dicts flattened)."""
-
-    def one_field(pdf: pd.DataFrame, col: str, prefix: str, heavy: dict) -> pd.DataFrame | None:
-        nlens, codes, uniques = tokenize_series_codes(pdf[col], simple=simple)
+    rows.  Non-default fields emit FIELD-PREFIXED term keys
+    (``field:term``) with that field's own norm — one shared term space
+    carrying per-field statistics (Lucene's per-field terms dicts
+    flattened)."""
+    frames = []
+    for fi, (field, col) in enumerate(texts.items()):
+        nlens, codes, uniques = tokenize_series_codes(col, simple=simple)
         if nlens.sum() == 0:
-            return None
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+            continue
         flat_docs = np.repeat(doc_ids, nlens)
-        if prefix:
-            uniques = (prefix + pd.Series(uniques)).to_numpy()
-        dl_map = pd.Series(nlens, index=doc_ids)
+        if fi:
+            uniques = (field + ":" + pd.Series(uniques)).to_numpy()
         starts = np.concatenate(([0], np.cumsum(nlens[:-1])))
         flat_pos = np.arange(int(nlens.sum()), dtype=np.int64) - np.repeat(starts, nlens)
         order = np.lexsort((flat_pos, flat_docs, codes))
@@ -436,33 +318,21 @@ def _tokenize_to_chunk_rows(
             pos_bounds = pos_offs[gstarts_ext]
         tb = np.nonzero(gcodes[1:] != gcodes[:-1])[0] + 1
         tstarts = np.concatenate(([0], tb, [gstarts.size]))
-        return _pack_chunk_rows(
-            uniques[gcodes[tstarts[:-1]]],
-            tstarts,
-            gdocs,
-            np.diff(gstarts_ext),
-            encode_lengths(dl_map.reindex(gdocs).to_numpy(dtype=np.int64)),
-            pos_buf,
-            pos_bounds,
-            heavy,
-            n_rows,
-            heavy_rule,
+        frames.append(
+            _pack_chunk_rows(
+                uniques[gcodes[tstarts[:-1]]],
+                tstarts,
+                gdocs,
+                np.diff(gstarts_ext),
+                encode_lengths(nlens[gdocs - base].astype(np.int64)),
+                pos_buf,
+                pos_bounds,
+                heavy_rule,
+                base,
+                doc_ids.size,
+            )
         )
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        heavy = heavy_bc.value if heavy_bc is not None else {}
-        for pdf in it:
-            frames = []
-            for fi, f in enumerate(fields):
-                got = one_field(pdf, f, "" if fi == 0 else f + ":", heavy)
-                if got is not None:
-                    frames.append(got)
-            if len(frames) == 1:
-                yield frames[0]
-            elif frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return gen
+    return frames
 
 
 def _binary_cuts(buf, offs: np.ndarray) -> pa.Array:
@@ -487,9 +357,9 @@ def _binary_values(col) -> tuple[np.ndarray, np.ndarray]:
 def _encode_chunk_table(
     chunks: pa.Table, block_size: int, num_parts: int, max_rows: int = 2048
 ) -> Iterator[pa.RecordBatch]:
-    """CHUNK_SCHEMA rows clustered by (term, split_id) → POSTINGS_SCHEMA
-    record batches of up to ``max_rows`` runs, one row per (term,
-    split_id) run, in input order.
+    """Chunk rows (_pack_chunk_rows) clustered by (term, split_id) →
+    POSTINGS_ARROW_SCHEMA record batches of up to ``max_rows`` runs, one
+    row per (term, split_id) run, in input order.
 
     Every pass covers the whole input: one varbyte decode per payload
     column (concatenated varbyte streams are self-delimiting), one
@@ -574,89 +444,35 @@ def _encode_chunk_table(
         )
 
 
-def _encode_chunk_runs(block_size: int, num_parts: int):
-    """mapInArrow over CHUNK_SCHEMA rows clustered by (term, split_id)
-    → POSTINGS_SCHEMA rows, one per (term, split_id) run: the whole
-    reduce partition goes through _encode_chunk_table at once (a run's
-    chunk rows may span input batches).  Partition volume is bounded by
-    the (term, split_id) shuffle width."""
-
-    def enc(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        batches = [b for b in it if b.num_rows]
-        if batches:
-            yield from _encode_chunk_table(
-                pa.Table.from_batches(batches), block_size, num_parts
-            )
-
-    return enc
-
-
-def write_postings(chunks: DataFrame, dest: str, block_size: int, num_parts: int) -> None:
-    """The one posting writer — build, append and compaction all end
-    here: CHUNK_SCHEMA rows → (term, split_id) shuffle → encoded runs
-    (_encode_chunk_runs) → one cheap exchange of the ENCODED rows lays
-    files out by part = md5(term) % P, each file (term, split_id)-
-    sorted."""
-    width = max(num_parts, 2 * chunks.sparkSession.sparkContext.defaultParallelism)
-    (
-        chunks.repartition(width, "term", "split_id")
-        .sortWithinPartitions("term", "split_id")
-        .mapInArrow(_encode_chunk_runs(block_size, num_parts), POSTINGS_SCHEMA)
-        .repartition(num_parts, "part")
-        # LEAD with the partition column: the dynamic-partition writer
-        # requires rows ordered by "part" and otherwise inserts its own
-        # (unstable) sort, which silently destroys the term order inside
-        # each file — with it satisfied, rows really are (term, split)-
-        # sorted on disk and row-group min/max pruning on `term` works
-        .sortWithinPartitions("part", "term", "split_id")
-        .write.mode("overwrite")
-        .partitionBy("part")
-        .parquet(dest)
-    )
-
-
 #: the tables of an index directory
 INDEX_TABLES = ("doc_index", "doc_stats", "postings", "term_dict", "conv_offsets", "build_metrics")
 
 #: builds and appends of at most this many turns are staged on the
-#: driver (_stage_on_driver).  Measured on local[4] against a 10k-turn
-#: index (append seconds, driver / Spark path): 500 turns 0.26-0.36 /
-#: 4.2-5.9, 5k 0.6-0.7 / 4.0-4.1, 20k 1.6-1.7 / 5.2-6.0, 50k 4.0-4.3 /
-#: 6.6-8.5, 100k 9.7 / 18.5.  The Spark path's ~4 s of jobs only pay
-#: off once executors outnumber those cores, so the cap is set by what
-#: the driver holds instead: staging 20k turns peaks at ~210 MB of
-#: driver memory (50k: ~520 MB), and the time stays under half the
-#: Spark path's.
+#: driver (_stage_on_driver), larger ones in shards of at most this
+#: many.  Measured on local[4] against a 10k-turn index (append
+#: seconds, driver kernel / the former Spark pipeline): 500 turns
+#: 0.26-0.36 / 4.2-5.9, 5k 0.6-0.7 / 4.0-4.1, 20k 1.6-1.7 / 5.2-6.0,
+#: 50k 4.0-4.3 / 6.6-8.5, 100k 9.7 / 18.5; staging 20k turns peaks at
+#: ~210 MB (50k: ~520 MB).
 DRIVER_MAX_TURNS = 20_000
 
-#: ...and a build only if its input's footers count at most this many
-#: uncompressed column bytes: the driver build's memory follows the
-#: text, not the turn count.  Measured on local[2] (Python peak RSS over
-#: the build, fixture corpora): 10k turns of 4.9 MB 163 MB, 20k turns
-#: of 9.9 MB 303 MB, and 2k and 4k turns of ten-fold bodies (9.4 and
-#: 18.7 MB) 317 and 612 MB — ~32 bytes held per input byte.  The cap
-#: admits 20k turns of the fixture's bodies, and longer bodies only in
-#: fewer turns, so the driver holds at most ~400 MB.  An append applies
-#: it to its collected batch's Arrow bytes (streaming/ingest.py).
+#: ...and of at most this many input bytes: the kernel holds ~32 bytes
+#: per input byte (local[2] peak RSS: 20k fixture turns of 9.9 MB 303
+#: MB, 4k turns of ten-fold bodies, 18.7 MB, 612 MB), so ~400 MB at
+#: most.  A driver build counts its footers' uncompressed column bytes,
+#: an append its collected Arrow bytes, a shard its ``text`` bytes.
 DRIVER_MAX_INPUT_BYTES = 12 << 20
 
 
-def _stat_cols(fields: tuple[str, ...]) -> list[tuple[str, str]]:
-    """(dl column, norm column) per field: fields[0] owns ``dl``/``norm``."""
-    return [
-        ("dl", "norm") if fi == 0 else (f"dl_{f}", f"norm_{f}")
-        for fi, f in enumerate(fields)
-    ]
-
-
 class Staged(NamedTuple):
-    """What _stage_on_driver hands its commit."""
+    """What a staging (one kernel call, or every shard of a sharded
+    one) hands its commit."""
 
     n_rows: int
     totals: dict  # {field: (docs with a token, tokens)}
     offsets: dict  # operators/docid.conv_offsets of the rows
-    term_parts: pd.DataFrame  # the postings per (term, part): see _per_part_metrics
-    seconds: dict  # {table: seconds spent staging it}
+    term_parts: pd.DataFrame  # the postings per (term, part): see _commit_build_metrics
+    seconds: dict  # {table: seconds spent staging it, summed over shards}
 
 
 def _stage_on_driver(
@@ -670,26 +486,28 @@ def _stage_on_driver(
     block_size,
     num_parts,
     heavy_rule: tuple[int, int] | None = None,
+    name: str = "part-00000.parquet",
 ) -> Staged:
-    """Stage collected transcript rows (a pyarrow Table, Spark's own
-    Arrow types) with no Spark job: the build's tokenizer and posting
-    encoder called in-process, the doc_index, doc_stats, postings and
-    term_dict tables written with pyarrow under ``staging`` in the
-    layout the Spark pipeline writes.
+    """THE staging kernel: transcript rows (a pyarrow Table, Spark's own
+    Arrow types) → the doc_index, doc_stats and postings tables, written
+    with pyarrow under ``staging`` as files called ``name``, with no
+    Spark job.  The postings' per-(term, part) aggregates come back in
+    ``term_parts``, from which the caller writes term_dict.
 
-    An append stages a batch at ``base`` = the corpus size, every term
-    one row of ``split_id``.  A build stages the whole corpus at base 0
-    and split 0, with ``heavy_rule`` (_pack_chunk_rows) cutting its
-    heavy terms into doc-range splits."""
-    import pyarrow.parquet as papq
-
+    DocIDs are ``base`` + rank in the stable (conv_id, turn_idx) order,
+    and ``split_id`` is added to every posting row's split.  A driver
+    build stages its whole input at base 0 and split 0, a build shard
+    its conversation range at the shard's base (IndexBuilder.build),
+    both with ``heavy_rule`` (_pack_chunk_rows) cutting heavy terms into
+    doc-range splits of the rows staged; an append stages a batch at
+    base = the corpus size, every term one row of ``split_id``."""
     t0 = time.perf_counter()
     seconds = {}
 
     def write(table: str, t, sub: str = "") -> None:
         d = os.path.join(staging, table, sub)
         os.makedirs(d, exist_ok=True)
-        papq.write_table(t, os.path.join(d, "part-00000.parquet"))
+        papq.write_table(t, os.path.join(d, name))
 
     def lap(table: str) -> None:
         nonlocal t0
@@ -697,8 +515,6 @@ def _stage_on_driver(
         seconds[table] = round(t1 - t0, 3)
         t0 = t1
 
-    # docIDs: base + rank in the stable (conv_id, turn_idx) order —
-    # what the Spark path's offsets + turn rank give
     rows = rows.take(
         pc.sort_indices(
             rows,
@@ -707,8 +523,8 @@ def _stage_on_driver(
         )
     )
     n = rows.num_rows
-    # the Spark path's per-conversation (count, density) aggregation;
-    # a null turn_idx (as -1) makes its conversation sparse there too
+    # per-conversation (count, density); a null turn_idx (as -1) makes
+    # its conversation sparse
     g = pd.DataFrame(
         {
             "conv_id": rows.column("conv_id").to_numpy(zero_copy_only=False),
@@ -723,7 +539,8 @@ def _stage_on_driver(
     doc_id = base + np.arange(n, dtype=np.int64)
     texts = {f: rows.column(f).to_pandas() for f in fields}
     stats, totals = [], {}
-    for f, (dcol, ncol) in zip(fields, _stat_cols(fields)):
+    for fi, f in enumerate(fields):  # fields[0] owns dl/norm
+        dcol, ncol = ("dl", "norm") if fi == 0 else (f"dl_{f}", f"norm_{f}")
         dl = token_counts(texts[f], simple=simple)
         totals[f] = (int((dl > 0).sum()), int(dl.sum()))
         stats += [(dcol, dl.astype(np.int32)), (ncol, encode_lengths(dl).astype(np.int32))]
@@ -738,11 +555,7 @@ def _stage_on_driver(
     write("doc_stats", table("conv_id", "turn_idx"))
     lap("doc_stats")
 
-    chunk_frames = list(
-        _tokenize_to_chunk_rows(simple, positions, fields, None, base + n, heavy_rule)(
-            iter([pd.DataFrame({"doc_id": doc_id, **texts})])
-        )
-    )
+    chunk_frames = _tokenize_to_chunk_rows(doc_id, texts, simple, positions, heavy_rule, base)
     if chunk_frames:
         chunks = pd.concat(chunk_frames, ignore_index=True)
         chunks["split_id"] = (chunks["split_id"] + split_id).astype(np.int32)
@@ -759,14 +572,14 @@ def _stage_on_driver(
     else:
         post = POSTINGS_ARROW_SCHEMA.empty_table()
     # postings: one (term, split_id)-sorted file per part=K/, the part
-    # in the directory name only — the layout Spark's partitionBy writes
+    # in the directory name only — Spark's partitionBy layout
     part = post.column("part").to_numpy()
     body = post.drop_columns(["part"])
     for k in np.unique(part):
         write("postings", body.take(np.flatnonzero(part == k)), f"part={k}")
     lap("postings")
-    # the Spark build's per-(term, part) aggregation, payload bytes
-    # being the bytes of a row's b_docs, b_tfs and b_norms blocks
+    # per (term, part): df, posting rows, payload bytes (a row's b_docs,
+    # b_tfs and b_norms blocks) and skew splits (rows of split_id > 0)
     payload = np.zeros(post.num_rows, np.int64)
     for c in ("b_docs", "b_tfs", "b_norms"):
         col = post.column(c).combine_chunks()
@@ -792,35 +605,266 @@ def _stage_on_driver(
         )
         .reset_index()
     )
-    # term_dict: an append's delta sums with the earlier rows at read time
-    if len(term_parts):
-        _write_term_dict(os.path.join(staging, "term_dict"), term_parts)
     lap("term_dict")
     return Staged(n, totals, oo, term_parts, seconds)
 
 
-def _commit_conv_offsets(man: Manifest, oo: dict, path: str) -> None:
-    """Write and commit the conv_offsets artifact of a DENSE build: the
-    (conv_id, conv_offset, n_turns) table the query engine
-    broadcast-searchsorteds to map doc_id → (conv_id, turn_idx) WITHOUT
-    a doc_stats join, from operators/docid.conv_offsets arrays already
-    on the driver — written via pyarrow, zero Spark jobs.  Appends of
-    new conversations extend it with one piece per batch
-    (streaming/ingest.py); other appends drop it.  Non-dense builds and
-    builds past the docid fast path skip it; the engine falls back to
-    the doc_stats join."""
+class Shard(NamedTuple):
+    """The conversations from ``first_conv`` up to the next shard's:
+    ``rows`` turns staged at docID ``base``, split ids from ``split_id``."""
+
+    first_conv: str
+    base: int
+    rows: int
+    split_id: int
+
+
+def _conv_sizes(df: DataFrame) -> pd.DataFrame:
+    """(conv_id, n_turns, nbytes) per conversation of ``df``, nbytes
+    being its ``text`` bytes: ONE Spark job with no shuffle — each task
+    sums its own rows per conversation (mapInArrow), and the driver
+    adds up those partial counts."""
+
+    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        if batches := list(batches):
+            t = pa.Table.from_batches(batches)
+            g = t.group_by("conv_id").aggregate([("nbytes", "count"), ("nbytes", "sum")])
+            cols = [g["conv_id"], g["nbytes_count"], g["nbytes_sum"]]
+            yield from pa.table(cols, names=["conv_id", "n_turns", "nbytes"]).to_batches()
+
+    nbytes = F.coalesce(F.octet_length("text"), F.lit(0)).cast("long")
+    t = (
+        df.select("conv_id", nbytes.alias("nbytes"))
+        .mapInArrow(partial, "conv_id string, n_turns long, nbytes long")
+        .toArrow()
+        .group_by("conv_id")
+        .aggregate([("n_turns", "sum"), ("nbytes", "sum")])
+    )
+    return t.select(["conv_id", "n_turns_sum", "nbytes_sum"]).rename_columns(
+        ["conv_id", "n_turns", "nbytes"]
+    ).to_pandas()
+
+
+def _shard_starts(rows: np.ndarray, nbytes: np.ndarray, parallelism: int) -> np.ndarray:
+    """The index of each shard's first conversation (``rows``/``nbytes``
+    per conversation, in conv_id order): cuts at conversation edges
+    that balance rows, into at least ``parallelism`` shards and as many
+    more as keep every shard within DRIVER_MAX_TURNS rows and
+    DRIVER_MAX_INPUT_BYTES bytes — a cap below 1 bounds nothing, and a
+    single larger conversation stays whole — and never into more shards
+    than conversations."""
+    n = rows.size
+    if not n:
+        return np.zeros(0, np.int64)
+    caps = [
+        (np.concatenate(([0], np.cumsum(x))), cap)
+        for x, cap in ((rows, DRIVER_MAX_TURNS), (nbytes, DRIVER_MAX_INPUT_BYTES))
+        if cap > 0
+    ]
+    cr = np.cumsum(rows)
+    k = max([parallelism] + [-(-int(cum[-1]) // cap) for cum, cap in caps])
+    while True:
+        k = min(k, n)
+        # cut at the conversation edge nearest each row quantile
+        q = cr[-1] * np.arange(1, k) / k
+        i = np.searchsorted(cr, q, side="right")
+        i += cr[i] - q < q - (cr - rows)[i]
+        starts = np.unique(np.concatenate(([0], i[i < n])))
+        edges = np.append(starts, n)
+        over = (np.diff(edges) > 1) & np.any([np.diff(cum[edges]) > cap for cum, cap in caps], axis=0)
+        if not over.any() or k == n:
+            return starts
+        k += int(over.sum())
+
+
+def _plan_shards(
+    sizes: pd.DataFrame, parallelism: int, base: int, split_id: int, split_target: int | None
+) -> tuple[dict, list[Shard]]:
+    """The conv_offsets (operators/docid.conv_offsets, ``dense`` unset)
+    and the shards of _conv_sizes' conversations.  A shard's split ids
+    start past every split id an earlier shard can use: ceil(rows /
+    split_target) per shard with heavy splits, one without."""
+    sizes = sizes.sort_values("conv_id", kind="stable", ignore_index=True)
+    oo = conv_offsets(sizes.assign(_sparse=0))  # raises on a null conv_id
+    starts = _shard_starts(oo["n_turns"], sizes["nbytes"].to_numpy(np.int64), parallelism)
+    srows = np.diff(np.append(oo["offsets"][starts], oo["total"]))
+    width = -(-srows // split_target) if split_target else np.ones_like(srows)
+    sids = split_id + np.concatenate(([0], np.cumsum(width)[:-1])).astype(np.int64)
+    return oo, [
+        Shard(str(oo["conv_ids"][a]), base + int(oo["offsets"][a]), int(r), int(s))
+        for a, r, s in zip(starts, srows, sids)
+    ]
+
+
+def _shard_marks(marks: str, shards: list[Shard]) -> dict[int, dict] | None:
+    """{shard: its done marker} for the shards of this plan marked done
+    under ``marks``; None when a marker there belongs to another plan."""
+    done = {}
+    for fn in os.listdir(marks) if os.path.isdir(marks) else ():
+        if fn.endswith(".json"):
+            s = int(fn[: -len(".json")])
+            with open(os.path.join(marks, fn)) as f:
+                m = json.load(f)
+            if s >= len(shards) or Shard(*m["shard"]) != shards[s]:
+                return None
+            done[s] = m
+    return done
+
+
+def _route_rows(first: np.ndarray, todo: set[int]):
+    """mapInArrow: transcript batches → (shard, Arrow IPC stream of the
+    batch's rows in that shard) for the shards in ``todo``; ``first``
+    holds each shard's first conv_id."""
+
+    def route(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            sid = np.searchsorted(first, b.column("conv_id").to_numpy(zero_copy_only=False), "right") - 1
+            for s in np.unique(sid):
+                if s in todo:
+                    sink = pa.BufferOutputStream()
+                    with pa.ipc.new_stream(sink, b.schema) as w:
+                        w.write_batch(b.filter(pa.array(sid == s)))
+                    yield pa.RecordBatch.from_pydict(
+                        {"shard": [int(s)], "rows": [sink.getvalue().to_pybytes()]},
+                        schema=pa.schema([("shard", pa.int32()), ("rows", pa.binary())]),
+                    )
+
+    return route
+
+
+def _stage_shard(shards: list[Shard], staging: str, marks: str, sanitize: bool, kernel: dict):
+    """RDD mapPartitionsWithIndex: stage partition s's routed rows (shard
+    s) with the kernel into ``part-{s:05d}.parquet`` files (name order
+    is doc order), then mark the shard done: term_parts, then a JSON
+    marker, written last."""
+
+    def run(s: int, pieces) -> Iterator:
+        tables = [pa.ipc.open_stream(pa.py_buffer(blob)).read_all() for _s, blob in pieces]
+        if not tables:
+            return iter(())
+        rows = pa.concat_tables(tables)
+        if sanitize:
+            rows = _sanitized(rows)
+        sh, name = shards[s], f"part-{s:05d}.parquet"
+        st = _stage_on_driver(rows, staging, sh.base, sh.split_id, name=name, **kernel)
+        if st.n_rows != sh.rows:
+            raise RuntimeError(f"shard {s} staged {st.n_rows} rows, planned {sh.rows}")
+        dest = os.path.join(marks, f"{s:05d}")
+        papq.write_table(pa.Table.from_pandas(st.term_parts, preserve_index=False), dest + ".parquet")
+        with open(dest + ".tmp", "w") as f:
+            mark = {"shard": list(sh), "totals": st.totals, "seconds": st.seconds}
+            json.dump({**mark, "dense": bool(st.offsets["dense"])}, f)
+        os.replace(dest + ".tmp", dest + ".json")
+        return iter(())
+
+    return run
+
+
+def _merge_part(staging: str):
+    """RDD mapPartitionsWithIndex: partition k merges postings part k's
+    shard files into ONE (term, split_id)-sorted file under
+    ``postings.merged/`` — a file per shard made searches 1.2-5x slower
+    at 600k turns (scale-trend, local[4])."""
+
+    def run(k: int, _rows) -> Iterator:
+        files = sorted(glob.glob(os.path.join(staging, "postings", f"part={k}", "*.parquet")))
+        if files:
+            t = pa.concat_tables(papq.read_table(f) for f in files)
+            d = os.path.join(staging, "postings.merged", f"part={k}")
+            os.makedirs(d, exist_ok=True)
+            order = pc.sort_indices(t, [("term", "ascending"), ("split_id", "ascending")])
+            papq.write_table(t.take(order), os.path.join(d, "part-00000.parquet"))
+        return iter(())
+
+    return run
+
+
+def _stage_sharded(
+    df: DataFrame,
+    staging: str,
+    marks: str,
+    base: int,
+    split_id: int,
+    sanitize: bool,
+    kernel: dict,
+) -> Staged:
+    """Stage ``df`` shard by shard: plan the shards from
+    per-conversation counts (one job), then route each unmarked shard's
+    rows, as Arrow IPC blobs, to one task that runs _stage_on_driver,
+    and merge each postings part's shard files (one job: RDD
+    partitioners whose partition is the shard, then the part; AQE
+    would split each DataFrame shuffle into two jobs).  ``kernel``
+    holds the kernel's other arguments; shard s writes
+    ``part-{s:05d}.parquet`` files under ``staging`` and its done
+    marker under ``marks``, where an earlier call's markers of the same
+    plan spare their shards.  The markers are dropped once read, before
+    the merged postings replace the shards'.  Returns the merged
+    Staged: conv_offsets from the plan, dense when every shard is."""
     t0 = time.perf_counter()
-    cdir = man.stage_path("conv_offsets")
-    os.makedirs(cdir, exist_ok=True)
-    write_conv_offsets(
-        os.path.join(cdir, "part-00000.parquet"), oo["conv_ids"], oo["offsets"], oo["n_turns"]
+    heavy_rule = kernel.get("heavy_rule")
+    oo, shards = _plan_shards(
+        _conv_sizes(df),
+        df.sparkSession.sparkContext.defaultParallelism,
+        base,
+        split_id,
+        heavy_rule[1] if heavy_rule else None,
     )
-    man.commit_stage(
-        "conv_offsets",
-        n_convs=len(oo["conv_ids"]),
-        seconds=round(time.perf_counter() - t0, 3),
-        path=path,
+    plan_s = time.perf_counter() - t0
+    if not shards:  # no rows: the kernel writes the empty tables
+        return _stage_on_driver(_arrow_schema(df).empty_table(), staging, base, split_id, **kernel)
+    done = _shard_marks(marks, shards)
+    if done is None:  # another plan's shards: start over
+        for t in INDEX_TABLES:
+            shutil.rmtree(os.path.join(staging, t), ignore_errors=True)
+        shutil.rmtree(marks)
+        done = {}
+    todo = set(range(len(shards))) - set(done)
+    merged = os.path.join(staging, "postings.merged")
+    shutil.rmtree(merged, ignore_errors=True)
+    os.makedirs(marks, exist_ok=True)
+    first = np.array([sh.first_conv for sh in shards], dtype=object)
+    parts = df.sparkSession.sparkContext.parallelize([(k, 0) for k in range(kernel["num_parts"])], 1)
+    (
+        df.mapInArrow(_route_rows(first, todo), "shard int, rows binary")
+        .rdd.partitionBy(len(shards), lambda s: s)
+        .mapPartitionsWithIndex(_stage_shard(shards, staging, marks, sanitize, kernel))
+        .union(parts)  # every part merges once every shard is staged
+        .partitionBy(kernel["num_parts"], lambda k: k)
+        .mapPartitionsWithIndex(_merge_part(staging))
+        .collect()
     )
+    done = _shard_marks(marks, shards)
+    if len(done) != len(shards):
+        raise RuntimeError(f"{len(shards) - len(done)} of {len(shards)} shards were not staged")
+    marked = [done[s] for s in range(len(shards))]
+    oo["dense"] = all(m["dense"] for m in marked)
+    term_parts = (
+        pd.concat(
+            [
+                papq.read_table(os.path.join(marks, f"{s:05d}.parquet")).to_pandas()
+                for s in range(len(shards))
+            ],
+            ignore_index=True,
+        )
+        .groupby(["term", "part"], sort=False)
+        .sum()
+        .reset_index()
+    )
+    seconds = {t: round(sum(m["seconds"][t] for m in marked), 3) for t in marked[0]["seconds"]}
+    seconds["doc_index"] = round(seconds["doc_index"] + plan_s, 3)
+    shutil.rmtree(marks)
+    shutil.rmtree(os.path.join(staging, "postings"), ignore_errors=True)
+    if os.path.isdir(merged):
+        os.rename(merged, os.path.join(staging, "postings"))
+    totals = {f: tuple(sum(m["totals"][f][i] for m in marked) for i in (0, 1)) for f in kernel["fields"]}
+    return Staged(oo["total"], totals, oo, term_parts, seconds)
+
+
+def _sanitized(rows: pa.Table) -> pa.Table:
+    """``rows`` with quoted replies stripped from ``text``."""
+    i = rows.schema.get_field_index("text")
+    clean = remove_quoted_replies(rows.column(i).to_pandas())
+    return rows.set_column(i, rows.schema.field(i), pa.array(clean, rows.schema.field(i).type))
 
 
 def _write_term_dict(tdir: str, term_parts: pd.DataFrame) -> None:
@@ -828,8 +872,6 @@ def _write_term_dict(tdir: str, term_parts: pd.DataFrame) -> None:
     postings aggregates as one pyarrow file, sorted by term with small
     row groups: min/max stats prune prefix and range scans like a
     range-partitioned layout."""
-    import pyarrow.parquet as papq
-
     td = pa.table(
         {
             "term": pa.array(term_parts["term"], pa.string()),
@@ -855,14 +897,24 @@ BUILD_METRIC_COLS = (
 
 
 def _commit_build_metrics(
-    man: Manifest, per_part: pd.DataFrame, t0: float, path: str
+    man: Manifest, term_parts: pd.DataFrame, t0: float, path: str
 ) -> None:
     """Write the per-part lineage table (one row per part: ``part`` and
-    BUILD_METRIC_COLS) with pyarrow, set the manifest totals the
+    BUILD_METRIC_COLS) of the postings' per-(term, part) aggregates
+    (Staged.term_parts) with pyarrow, set the manifest totals the
     benchmark and tests read, and commit the stage."""
-    import pyarrow.parquet as papq
-
-    per_part = per_part.sort_values("part")
+    per_part = (
+        term_parts.groupby("part")
+        .agg(
+            posting_rows=("posting_rows", "sum"),
+            postings_written=("df", "sum"),
+            bytes_compressed=("payload_bytes", "sum"),
+            skew_splits=("skew_splits", "sum"),
+            n_terms=("term", "size"),
+        )
+        .reset_index()
+        .sort_values("part")
+    )
     mdir = man.stage_path("build_metrics")
     shutil.rmtree(mdir, ignore_errors=True)
     os.makedirs(mdir, exist_ok=True)
@@ -882,23 +934,6 @@ def _commit_build_metrics(
     man.commit_stage("build_metrics", seconds=round(time.time() - t0, 2), path=path)
 
 
-def _per_part_metrics(term_parts: pd.DataFrame) -> pd.DataFrame:
-    """BUILD_METRIC_COLS per part of the postings' per-(term, part)
-    aggregates (columns term, part, df, posting_rows, payload_bytes,
-    skew_splits; one row per (term, part))."""
-    return (
-        term_parts.groupby("part")
-        .agg(
-            posting_rows=("posting_rows", "sum"),
-            postings_written=("df", "sum"),
-            bytes_compressed=("payload_bytes", "sum"),
-            skew_splits=("skew_splits", "sum"),
-            n_terms=("term", "size"),
-        )
-        .reset_index()
-    )
-
-
 class IndexBuilder:
     """Build (or resume) an index directory from a transcripts DataFrame."""
 
@@ -913,8 +948,6 @@ class IndexBuilder:
         simple_tokens: bool = False,
         sanitize: bool = False,
         validate: bool = False,
-        docid_method: str = "two_phase",
-        heavy_sample_docs: int = 50_000,
         positions: bool = True,
         fields: tuple[str, ...] = ("text",),
     ):
@@ -927,17 +960,11 @@ class IndexBuilder:
         self.simple_tokens = simple_tokens
         self.sanitize = sanitize
         self.validate = validate
-        self.docid_method = docid_method
-        self.heavy_sample_docs = heavy_sample_docs
-        # term positions in postings (Lucene DOCS_AND_FREQS_AND_POSITIONS,
-        # EmailIndexGenerator.java:85-88): default on for parity; phrase
-        # queries intersect indexed positions instead of re-tokenizing text
+        # term positions (Lucene DOCS_AND_FREQS_AND_POSITIONS,
+        # EmailIndexGenerator.java:85-88): phrases intersect them
         self.positions = positions
-        # indexed fields, fields[0] = default (owns the bare-term key
-        # space).  The reference indexes subject+body with independent
-        # per-field stats summed at query time (EmailIndexSearcher.java:
-        # 49-53, EmailIndexGenerator.java:90-91); here any input column
-        # can be a field, e.g. ("text", "role").
+        # indexed fields, fields[0] the default (bare-term keys); per-field
+        # stats as in EmailIndexSearcher.java:49-53, any input column
         self.fields = tuple(fields)
 
     def _params(self) -> dict:
@@ -952,33 +979,37 @@ class IndexBuilder:
             "fields": list(self.fields),
         }
 
-    def _sample_mod(self, n_rows: int) -> int:
-        """The heavy-term sample keeps docs whose input-key hash is 0
-        mod this (1: every doc, the exact df)."""
-        return min(max(1, n_rows // self.heavy_sample_docs), 4096)
+    def _kernel(self) -> dict:
+        """_stage_on_driver's arguments past (rows, staging, base, split_id)."""
+        return dict(
+            fields=self.fields,
+            simple=self.simple_tokens,
+            positions=self.positions,
+            block_size=self.block_size,
+            num_parts=self.num_parts,
+            heavy_rule=(self.heavy_df_threshold, self.split_target),
+        )
 
     def build(self, transcripts: DataFrame, resume: bool = False) -> Manifest:
-        """Build the index from ``transcripts``; ``resume=True`` skips
-        the stages the manifest records as committed.
+        """Build the index from ``transcripts`` (module docstring): a
+        fresh build of a bare local parquet input within both caps
+        (counted from its footers) on the driver, reading its files with
+        pyarrow (read_bare_parquet; the Arrow collect where that cannot
+        map them, e.g. hive partition columns); any other in shards
+        (_stage_sharded).  One manifest write commits either; every
+        stage records which ``path`` ran ("driver" or "spark") and its
+        ``seconds``, a driver build's doc_index stage also which
+        ``read`` ("files" or "collect").
 
-        A fresh build whose input is a bare local parquet relation of at
-        most DRIVER_MAX_TURNS rows and DRIVER_MAX_INPUT_BYTES uncompressed
-        bytes (counted from the footers, no Spark job), whose heavy-term
-        sample would be exact, is staged on the driver: its files read
-        with pyarrow (read_bare_parquet; an Arrow collect where that
-        cannot map them, e.g. hive partition columns), then the append's
-        staging kernel (_stage_on_driver) at base 0 and split 0 with the
-        exact-df heavy map, every table written with pyarrow, and every
-        stage and stat committed in ONE manifest write
-        (Manifest.one_write: a crash commits nothing, and a resume
-        rebuilds on Spark).  Any other input — larger, filtered or
-        remote — and every resume take the Spark pipeline below, which
-        commits stage by stage so a resume can skip the finished ones.
-        Both paths write the same tables, stages and stats; every stage
-        records which ``path`` ran and its ``seconds``, and a driver
-        build's doc_index stage which ``read`` ("files" or "collect")."""
+        ``resume=True`` keeps the shards an interrupted sharded build
+        marked done, when the input plans the same shards, and stages
+        the rest; with no marked shards it is a fresh build, and on a
+        complete index it does nothing."""
         man = Manifest.load_or_create(self.out_dir, self._params())
-        if not resume:
+        marks = os.path.join(man.stage_path("_staging"), "build")
+        if resume and all(man.is_complete(t) for t in ("doc_index", "postings", "build_metrics")):
+            return man
+        if not (resume and os.path.isdir(marks)):
             # a fresh build over an existing index restarts the ledger
             # and leaves none of the old tables (nor an append's or a
             # compaction's leftovers) behind
@@ -986,501 +1017,31 @@ class IndexBuilder:
                 man.stages.clear()
                 man.stats.clear()
                 man._flush()
-            for t in (*INDEX_TABLES, "postings.tmp", "postings.bak", "_staging"):
+            for t in (*INDEX_TABLES, "postings.tmp", "postings.bak", "postings.merged", "_staging"):
                 shutil.rmtree(man.stage_path(t), ignore_errors=True)
-        bp = bare_parquet(transcripts)
-        n_meta = bp.rows if bp is not None else None
-        if (
-            not resume
-            and bp is not None
-            and 0 < n_meta <= DRIVER_MAX_TURNS
-            and bp.nbytes <= DRIVER_MAX_INPUT_BYTES
-            and self._sample_mod(n_meta) == 1
-        ):
-            with man.one_write():
-                return self._build_on_driver(man, transcripts, bp)
-
-        # SCAN parallelism floors scale with the session's cores only
-        # (the wide (term, split) shuffle in write_postings also floors
-        # at num_parts for skew headroom): a num_parts floor here would
-        # force a full-corpus exchange even when the input's natural
-        # splits already feed every core (pure overhead, and its map
-        # side is as serial as the input)
-        scan_target = 2 * self.spark.sparkContext.defaultParallelism
-
-        import threading
-
-        # ---------------------------------------------------- doc_index
-        # Fresh builds OVERLAP the doc_index write with the postings
-        # pipeline (guide §2.6): both derive from the same docid-assigned
-        # plan, the write runs in a driver thread while the main thread
-        # tokenizes/shuffles/encodes — postings is the long pole and the
-        # stored-fields write (plus doc_stats) hides under it entirely.
-        # Resume paths (doc_index already committed) keep the serial
-        # shape and read the committed parquet.
-        ix_err: list[BaseException] = []
-        ix_thread: threading.Thread | None = None
-        pins: list = []
-        n_total: int | None = None
-        src_plan: DataFrame | None = None  # (doc_id, fields…) pre-write plan
-        sample_plan: DataFrame | None = None  # (conv_id, turn_idx, fields…)
-
-        # heavy-term sample, launched at BUILD ENTRY when the input is a
-        # bare parquet relation (exact n_rows from the footers — no
-        # job): the sample keys on xxhash64(conv_id, turn_idx) — the
-        # STABLE input key, deterministic and partition-invariant like
-        # the old doc_id hash but independent of docid assignment — so
-        # its scan+tokenize+collect overlaps the docid round-trip and
-        # the stored-fields write instead of serializing after them
-        # (guide §2.6).  Estimates only steer physical split fan-out;
-        # the filter/mod are identical on every path (fresh, fallback,
-        # resume), preserving byte-identical rebuilds.
-        heavy_res: dict = {}
-        heavy_thread: threading.Thread | None = None
-        if not man.is_complete("doc_index") and not man.is_complete("postings"):
-            if n_meta is not None and n_meta > 0:
-                early_mod = self._sample_mod(n_meta)
-                s_src = transcripts
-                if self.sanitize:
-                    s_src = s_src.withColumn(
-                        "text",
-                        F.pandas_udf(remove_quoted_replies, "string")(F.col("text")),
-                    )
-                if early_mod > 1:
-                    s_src = s_src.where(
-                        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(early_mod)) == 0
-                    )
-                s_src = s_src.select(*self.fields)
-                _counts_fn = _tokenize_term_df_counts(self.simple_tokens, self.fields)
-
-                def _heavy_body() -> None:
-                    try:
-                        heavy_res["rows"] = (
-                            s_src.mapInPandas(_counts_fn, "term string, df long")
-                            .groupBy("term")
-                            .agg(F.sum("df").alias("dfs"))
-                            .where(
-                                F.col("dfs") * early_mod > self.heavy_df_threshold
-                            )
-                            .collect()
-                        )
-                        heavy_res["mod"] = early_mod
-                    except BaseException as e:  # re-raised on the main thread
-                        heavy_res["err"] = e
-
-                heavy_thread = threading.Thread(target=_heavy_body, daemon=True)
-                heavy_thread.start()
-
-        if not man.is_complete("doc_index"):
-            t0 = time.time()
-            df = transcripts
-            if self.validate:
-                validate_transcripts(df)
-            offsets_out: dict = {}
-            t1 = time.time()
-            # docid runs on the RAW input: its conversation aggregation
-            # then prunes columns at the scan instead of paying the
-            # round-robin exchange (and its local sort) of the full rows
-            df, n_total = assign_doc_ids_with_total(
-                df,
-                method=self.docid_method,
-                checkpoint_offsets=False,
-                pinned=pins,
-                offsets_out=offsets_out,
+            bp = bare_parquet(transcripts)
+            if (
+                bp is not None
+                and 0 < bp.rows <= DRIVER_MAX_TURNS
+                and bp.nbytes <= DRIVER_MAX_INPUT_BYTES
+            ):
+                with man.one_write():
+                    return self._build_on_driver(man, transcripts, bp)
+        if self.validate:
+            validate_transcripts(transcripts)  # one Spark job
+        with man.one_write():
+            st = _stage_sharded(
+                transcripts, self.out_dir, marks, 0, 0, self.sanitize, self._kernel()
             )
-            _tr("docid_offsets", t1)
-            if self.sanitize:
-                clean = F.pandas_udf(remove_quoted_replies, "string")
-                df = df.withColumn("text", clean(F.col("text")))
-            # tokenize/sample read the PRE-exchange plan: the chunk
-            # pipeline re-spreads at its own (term, split) shuffle, so a
-            # round-robin exchange in front would only sort-and-move the
-            # full text a second time (sortBeforeRepartition pays a
-            # local sort of every row).  The stored-fields WRITE keeps
-            # the exchange — its parallelism is the write itself.
-            src_plan = df.select("doc_id", *self.fields)
-            sample_plan = df.select("conv_id", "turn_idx", *self.fields)
-            df_pre = df
-
-            def _write_doc_index() -> None:
-                # ALL of the write-plan construction lives here so a
-                # fresh build's main thread reaches the postings
-                # pipeline immediately (df.rdd partition probing and
-                # py4j plan chatter cost ~1 s of serial driver time)
-                t1w = time.time()
-                # floor the write parallelism (a plain round-robin
-                # exchange): the dense docid fast path broadcast-joins
-                # conversation offsets map-side, so everything
-                # downstream runs at this width.  At cluster scale
-                # inputs arrive in thousands of splits — no-op.
-                dfw = ensure_parallelism(df_pre, scan_target)
-                extra_cols: list[str] = []
-                # exact token counts from the vectorized Python
-                # tokenizer (same values as the JVM dl_expr regex —
-                # lock-step-tested — at ~1/5 the CPU: java.util.regex
-                # with lookarounds costs ~40 core-seconds per 600k docs,
-                # which dominates the single-thread scaling leg)
-                _simple = self.simple_tokens
-                dl_udf = F.pandas_udf(
-                    lambda s: pd.Series(token_counts(s, simple=_simple)), "int"
-                )
-                for fi, fld in enumerate(self.fields):
-                    dcol = "dl" if fi == 0 else f"dl_{fld}"
-                    ncol = "norm" if fi == 0 else f"norm_{fld}"
-                    dfw = dfw.withColumn(dcol, dl_udf(F.col(fld)))
-                    dfw = dfw.withColumn(ncol, norm_byte_expr(F.col(dcol)))
-                    if fi:
-                        extra_cols += [dcol, ncol]
-                # doc_ids correlate with conv order, so sorting within
-                # partitions still yields tight per-row-group doc_id
-                # min/max stats for lookup pruning.  Corpus scalars
-                # (Lucene docCount/avgdl over docs with ≥1 token, §2.9)
-                # ride the SAME action via observe() — no separate
-                # aggregation job.
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                obs_aggs = [F.count(F.lit(1)).alias("rows")]
-                for fi, fld in enumerate(self.fields):
-                    dcol = "dl" if fi == 0 else f"dl_{fld}"
-                    obs_aggs.append(
-                        F.count(F.when(F.col(dcol) > 0, 1)).alias(f"n_{fld}")
-                    )
-                    obs_aggs.append(F.sum(dcol).alias(f"total_{fld}"))
-                (
-                    dfw.select(
-                        "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                        "text", "dl", "norm", *extra_cols,
-                    )
-                    .observe(obs, *obs_aggs)
-                    .sortWithinPartitions("doc_id")
-                    .write.mode("overwrite")
-                    .parquet(man.stage_path("doc_index"))
-                )
-                _tr("doc_index_write", t1w)
-                m = obs.get
-                f0 = self.fields[0]
-                man.set_stats(
-                    n_docs=int(m[f"n_{f0}"] or 0),
-                    total_tokens=int(m[f"total_{f0}"] or 0),
-                    n_rows=int(m["rows"]),
-                    max_doc_id=int(m["rows"]) - 1,
-                    field_stats={
-                        fld: {
-                            "n_docs": int(m[f"n_{fld}"] or 0),
-                            "total_tokens": int(m[f"total_{fld}"] or 0),
-                        }
-                        for fld in self.fields
-                    },
-                )
-                man.commit_stage(
-                    "doc_index", seconds=round(time.time() - t0, 2), path="spark"
-                )
-                # docid fast path only: the offsets are on the driver
-                if offsets_out.get("dense"):
-                    _commit_conv_offsets(man, offsets_out, "spark")
-
-        # doc_stats: skinny projection of the COMMITTED doc_index (no
-        # text column touched) — keeps the A6 norms-table contract at
-        # ~1% of the doc_index bytes; map-side write (partitions are
-        # already doc_id-sorted).  It always runs after the doc_index
-        # write — in the same background thread on fresh builds, in a
-        # doc_stats-only thread (overlapped with postings) on resumes.
-        stats_err: list[BaseException] = []
-        stats_thread = None
-
-        def _write_doc_stats() -> None:
-            try:
-                t0s = time.time()
-                stat_cols = ["doc_id", "conv_id", "turn_idx", "dl", "norm"] + [
-                    c
-                    for fld in self.fields[1:]
-                    for c in (f"dl_{fld}", f"norm_{fld}")
-                ]
-                (
-                    self.spark.read.parquet(man.stage_path("doc_index"))
-                    .select(*stat_cols)
-                    .sortWithinPartitions("doc_id")
-                    .write.mode("overwrite")
-                    .parquet(man.stage_path("doc_stats"))
-                )
-                man.commit_stage(
-                    "doc_stats", seconds=round(time.time() - t0s, 2), path="spark"
-                )
-            except BaseException as e:  # re-raised on the main thread
-                stats_err.append(e)
-
-        if src_plan is not None and not man.is_complete("postings") and n_total is not None:
-            # fresh build: doc_index (+ doc_stats) in the background,
-            # postings pipeline on this thread
-            def _ix_body() -> None:
-                try:
-                    _write_doc_index()
-                    if not man.is_complete("doc_stats"):
-                        _write_doc_stats()
-                        if stats_err:
-                            raise stats_err.pop()
-                except BaseException as e:
-                    ix_err.append(e)
-
-            ix_thread = threading.Thread(target=_ix_body, daemon=True)
-            ix_thread.start()
-        elif src_plan is not None:
-            _write_doc_index()
-            src_plan = None  # postings complete; nothing to overlap
-            if not man.is_complete("doc_stats"):
-                _write_doc_stats()
-                if stats_err:
-                    raise stats_err[0]
-        elif not man.is_complete("doc_stats"):
-            if not man.is_complete("postings") and "n_rows" in man.stats:
-                stats_thread = threading.Thread(target=_write_doc_stats, daemon=True)
-                stats_thread.start()
-            else:
-                _write_doc_stats()
-                if stats_err:
-                    raise stats_err[0]
-        if ix_thread is None and "n_docs" not in man.stats:
-            # resume fallback (manifest predates the observe()-based
-            # stats): one aggregation over the skinny doc_stats table —
-            # guaranteed on disk here (the threaded overlap requires
-            # n_rows, so this path always took the synchronous write)
-            agg = self.spark.read.parquet(man.stage_path("doc_stats")).agg(
-                F.count("*").alias("rows"),
-                F.count(F.when(F.col("dl") > 0, 1)).alias("n"),
-                F.sum("dl").alias("total"),
-            ).collect()[0]
-            man.set_stats(
-                n_docs=int(agg["n"] or 0),
-                total_tokens=int(agg["total"] or 0),
-                n_rows=int(agg["rows"]),
-                max_doc_id=int(agg["rows"]) - 1,
-            )
-
-        # ---------------------------------------------------- postings
-        try:
-            if not man.is_complete("postings"):
-                t0 = time.time()
-                n_rows = (
-                    int(n_total) if ix_thread is not None else int(man.stats["n_rows"])
-                )
-                # heavy-term detection over a deterministic sample,
-                # keyed on xxhash64(conv_id, turn_idx) — the stable
-                # input key (mod == 1 → exact full pass): a HASH, not a
-                # raw modulo, so term occurrence periodic in input
-                # order cannot dodge the sample; deterministic and
-                # partition-invariant; independent of docid assignment
-                # so the build-entry thread above could overlap it.
-                sample_mod = self._sample_mod(n_rows)
-                if src_plan is not None:
-                    src = src_plan  # pre-write plan: overlaps the write
-                else:
-                    src = ensure_parallelism(
-                        self.spark.read.parquet(man.stage_path("doc_index")).select(
-                            "doc_id", *self.fields
-                        ),
-                        scan_target,
-                    )
-                t1 = time.time()
-                hrows = None
-                if heavy_thread is not None:
-                    heavy_thread.join()
-                    heavy_thread = None
-                    if "err" in heavy_res:
-                        raise heavy_res["err"]
-                    if heavy_res.get("mod") == sample_mod:
-                        hrows = heavy_res["rows"]
-                    # a mod mismatch means the footer count disagreed
-                    # with the exact post-docid count (it cannot for a
-                    # bare relation, but correctness beats trust):
-                    # recompute below with the authoritative mod
-                if hrows is None:
-                    # per-batch (term, df) partial counts → one small
-                    # agg → driver rows: bounded by total_postings /
-                    # heavy_df_threshold regardless of corpus size
-                    s2 = (
-                        sample_plan
-                        if sample_plan is not None
-                        else self.spark.read.parquet(
-                            man.stage_path("doc_index")
-                        ).select("conv_id", "turn_idx", *self.fields)
-                    )
-                    if sample_mod > 1:
-                        s2 = s2.where(
-                            F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(sample_mod))
-                            == 0
-                        )
-                    hrows = (
-                        s2.select(*self.fields)
-                        .mapInPandas(
-                            _tokenize_term_df_counts(self.simple_tokens, self.fields),
-                            "term string, df long",
-                        )
-                        .groupBy("term")
-                        .agg(F.sum("df").alias("dfs"))
-                        .where(F.col("dfs") * sample_mod > self.heavy_df_threshold)
-                        .collect()
-                    )
-                heavy_map = {
-                    r["term"]: int(
-                        -(-(int(r["dfs"]) * sample_mod) // self.split_target)
-                    )
-                    for r in hrows
-                }
-                heavy_bc = (
-                    self.spark.sparkContext.broadcast(heavy_map) if heavy_map else None
-                )
-                _tr("heavy_plan", t1)
-                # ONE full tokenize pass, pre-aggregated MAP-SIDE into
-                # packed per-(term, split, batch) chunk rows (CHUNK_SCHEMA
-                # docstring): the wide shuffle carries ~batch-vocabulary
-                # rows with ~5 B/posting varbyte payloads instead of one
-                # 40+-byte row per (doc, term), and the reduce-side sort
-                # orders chunk rows, not postings.  The SECOND exchange
-                # moves only the ENCODED payload (~1% of the token
-                # stream) to lay files out one-part-per-task.
-                chunks = src.mapInPandas(
-                    _tokenize_to_chunk_rows(
-                        self.simple_tokens,
-                        self.positions,
-                        self.fields,
-                        heavy_bc,
-                        n_rows,
-                    ),
-                    CHUNK_SCHEMA,
-                )
-                t1 = time.time()
-                write_postings(
-                    chunks, man.stage_path("postings"), self.block_size, self.num_parts
-                )
-                _tr("postings_write", t1)
-                man.commit_stage(
-                    "postings", seconds=round(time.time() - t0, 2), path="spark"
-                )
-        finally:
-            # barrier for the overlapped doc_index/doc_stats/sample work
-            if heavy_thread is not None:
-                heavy_thread.join()
-            if ix_thread is not None:
-                ix_thread.join()
-            if stats_thread is not None:
-                stats_thread.join()
-            for p in pins:
-                p.unpersist(blocking=False)
-        if ix_err:
-            raise ix_err[0]
-        if stats_err:
-            raise stats_err[0]
-
-        # --------------------------------------- term_dict + build_metrics
-        # ONE pass over the postings feeds both: a per-(term, part)
-        # pre-aggregation (persisted — vocabulary-sized, tiny) becomes the
-        # sorted term dictionary directly and rolls up into the per-part
-        # lineage metrics.
-        if not (man.is_complete("term_dict") and man.is_complete("build_metrics")):
-            p = self.spark.read.parquet(man.stage_path("postings"))
-            payload_bytes = (
-                F.aggregate(
-                    F.transform(
-                        F.col("b_docs"), lambda x: F.octet_length(x)
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x,
-                )
-                + F.aggregate(
-                    F.transform(F.col("b_tfs"), lambda x: F.octet_length(x)),
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x,
-                )
-                + F.aggregate(
-                    F.transform(F.col("b_norms"), lambda x: F.octet_length(x)),
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x,
-                )
-            )
-            aug_plan = (
-                p.withColumn("payload_bytes", payload_bytes)
-                .groupBy("term", "part")
-                .agg(
-                    F.sum("df_row").alias("df"),
-                    F.count("*").alias("posting_rows"),
-                    F.sum("payload_bytes").alias("payload_bytes"),
-                    F.sum(F.when(F.col("split_id") > 0, 1).otherwise(0)).alias("skew_splits"),
-                )
-            )
-            # bounded-vocabulary fast path: ONE collect (capped — the
-            # limit guarantees a bounded driver transfer at any corpus
-            # scale) feeds BOTH artifacts driver-side, replacing the
-            # persist + distributed-write + second-collect shape (three
-            # serial jobs → one).  The cap mirrors the query engine's
-            # VOCAB_DRIVER_MAX_ROWS: indexes it cannot driver-load fall
-            # back to the distributed path below.
-            _VOCAB_CAP = 5_000_000
-            vrows = aug_plan.limit(_VOCAB_CAP + 1).collect()
-            if len(vrows) <= _VOCAB_CAP:
-                aug = pd.DataFrame(vrows, columns=aug_plan.columns)
-                if not man.is_complete("term_dict"):
-                    t0 = time.time()
-                    _write_term_dict(man.stage_path("term_dict"), aug)
-                    man.commit_stage(
-                        "term_dict", seconds=round(time.time() - t0, 2), path="spark"
-                    )
-                if not man.is_complete("build_metrics"):
-                    t0 = time.time()
-                    _commit_build_metrics(man, _per_part_metrics(aug), t0, "spark")
-                return man
-            aug = aug_plan.persist()
-            # Lucene's sorted term dictionary: (term, part, df) range-
-            # partitioned and sorted by term, so prefix expansion scans
-            # the vocabulary (row-group pruned), never the postings
-            if not man.is_complete("term_dict"):
-                t0 = time.time()
-                (
-                    aug.select("term", "part", "df")
-                    .repartitionByRange(max(1, self.num_parts // 4), "term")
-                    .sortWithinPartitions("term")
-                    .write.mode("overwrite")
-                    .parquet(man.stage_path("term_dict"))
-                )
-                man.commit_stage(
-                    "term_dict", seconds=round(time.time() - t0, 2), path="spark"
-                )
-            if not man.is_complete("build_metrics"):
-                t0 = time.time()
-                # the per-part rollup is P-sized (bounded by num_parts
-                # regardless of corpus scale) — collect it and write the
-                # lineage parquet driver-side: ONE job where the previous
-                # shape spent three (write, re-read, total-aggregate),
-                # and the manifest totals fall out of the same P rows
-                rows = (
-                    aug.groupBy("part")
-                    .agg(
-                        F.sum("posting_rows").alias("posting_rows"),
-                        F.sum("df").alias("postings_written"),
-                        F.sum("payload_bytes").alias("bytes_compressed"),
-                        F.sum("skew_splits").alias("skew_splits"),
-                        F.count("*").alias("n_terms"),  # aug is unique per (term, part)
-                    )
-                    .collect()
-                )
-                _commit_build_metrics(
-                    man,
-                    pd.DataFrame(rows, columns=["part", *BUILD_METRIC_COLS]),
-                    t0,
-                    "spark",
-                )
-            aug.unpersist(blocking=False)
+            self._commit(man, st, "spark")
+        shutil.rmtree(man.stage_path("_staging"), ignore_errors=True)
         return man
 
     def _build_on_driver(
         self, man: Manifest, transcripts: DataFrame, bp: BareParquet
     ) -> Manifest:
-        """The fresh build of a small bare-parquet input (see build): its
-        files read with pyarrow (an Arrow collect when read_bare_parquet
-        cannot map them), _stage_on_driver straight into the index
-        directory, then the conv_offsets and build_metrics tables and
-        the manifest commits of the Spark pipeline, which build() holds
-        back into one manifest write."""
+        """The fresh build of a small bare-parquet input (see build): the
+        staging kernel straight into the index directory."""
         if self.validate:
             validate_transcripts(transcripts)  # one Spark job
         t0 = time.perf_counter()
@@ -1488,25 +1049,19 @@ class IndexBuilder:
         if rows is None:
             rows, read = transcripts.toArrow(), "collect"
         if self.sanitize:
-            i = rows.schema.get_field_index("text")
-            clean = remove_quoted_replies(rows.column(i).to_pandas())
-            rows = rows.set_column(
-                i, rows.schema.field(i), pa.array(clean, rows.schema.field(i).type)
-            )
+            rows = _sanitized(rows)
         read_s = time.perf_counter() - t0
-        st = _stage_on_driver(
-            rows,
-            self.out_dir,
-            0,
-            0,
-            self.fields,
-            self.simple_tokens,
-            self.positions,
-            self.block_size,
-            self.num_parts,
-            heavy_rule=(self.heavy_df_threshold, self.split_target),
-        )
+        st = _stage_on_driver(rows, self.out_dir, 0, 0, **self._kernel())
         del rows
+        st.seconds["doc_index"] = round(st.seconds["doc_index"] + read_s, 3)
+        self._commit(man, st, "driver", read=read)
+        return man
+
+    def _commit(self, man: Manifest, st: Staged, path: str, **doc_index_info) -> None:
+        """Record a staged build in the manifest: corpus stats, every
+        stage, and the tables the driver writes from the staging's
+        summaries — term_dict, conv_offsets (dense builds) and
+        build_metrics."""
         f0 = self.fields[0]
         man.set_stats(
             n_docs=st.totals[f0][0],
@@ -1519,24 +1074,23 @@ class IndexBuilder:
             },
         )
         man.commit_stage(
-            "doc_index",
-            seconds=round(st.seconds["doc_index"] + read_s, 3),
-            path="driver",
-            read=read,
+            "doc_index", seconds=st.seconds["doc_index"], path=path, **doc_index_info
         )
-        if st.offsets["dense"]:
-            _commit_conv_offsets(man, st.offsets, "driver")
+        if st.offsets["dense"]:  # conv_offsets: doc_id → conversation, no join
+            t0, oo, cdir = time.perf_counter(), st.offsets, man.stage_path("conv_offsets")
+            os.makedirs(cdir, exist_ok=True)
+            dest = os.path.join(cdir, "part-00000.parquet")
+            write_conv_offsets(dest, oo["conv_ids"], oo["offsets"], oo["n_turns"])
+            seconds = round(time.perf_counter() - t0, 3)
+            man.commit_stage("conv_offsets", n_convs=len(oo["conv_ids"]), seconds=seconds, path=path)
+        if len(st.term_parts):
+            _write_term_dict(man.stage_path("term_dict"), st.term_parts)
         for t in ("doc_stats", "postings", "term_dict"):
-            man.commit_stage(t, seconds=st.seconds[t], path="driver")
+            man.commit_stage(t, seconds=st.seconds[t], path=path)
         t0 = time.time()
-        _commit_build_metrics(man, _per_part_metrics(st.term_parts), t0, "driver")
-        return man
+        _commit_build_metrics(man, st.term_parts, t0, path)
 
 
 def avgdl_from_stats(stats: dict) -> float:
     n = stats.get("n_docs", 0)
     return (stats["total_tokens"] / n) if n else 0.0
-
-
-def n_shards_for(n_rows: int, target_per_shard: int = 262_144) -> int:
-    return max(1, math.ceil(n_rows / target_per_shard))

@@ -2721,47 +2721,17 @@ class SearchEngine:
             all_terms |= query_terms(ast)
         self.term_dfs(all_terms)
         # driver-local members first (same eligibility and results as
-        # the per-query fast path): their rows fold into ONE local
-        # result — no Spark work for a batch of bounded queries
+        # the per-query fast path), one after another: their rows fold
+        # into ONE local result — no Spark work for a batch of bounded
+        # queries — and the shared term cache decodes each term once.
+        # (On small indexes a 4-thread pool measured slower per query
+        # than sequential singles: the members' numpy work is too small
+        # to overlap under the GIL.)
         batch_tcache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        cand = [
-            (qid, ast, _flatten_shoulds(ast), k, mode)
+        local_results = [
+            (qid, self._local_search(ast, _flatten_shoulds(ast), k, mode, tcache=batch_tcache))
             for qid, (ast, k, mode) in resolved.items()
         ]
-        if len(cand) > 1 and self._driver_vocab() is not None:
-            # pre-decode terms referenced by >1 member ONCE, single-
-            # threaded, so the parallel pass below hits a warm cache
-            # instead of racing to decode the same heavy streams
-            from collections import Counter
-
-            tc: Counter[str] = Counter()
-            for _qid, _ast, flat_q, _k, _mode in cand:
-                if isinstance(flat_q, Bool) and self._is_flat_terms(flat_q):
-                    for occ, c in flat_q.clauses:
-                        if occ != MUST_NOT:
-                            tc[c.text] += 1
-            sharedt = {t for t, n in tc.items() if n > 1}
-            if sharedt:
-                imap, amap = self._maps_for(sharedt)
-                sharedt = {t for t in sharedt if t in imap}
-                if sharedt and self._local_budget_ok(sharedt):
-                    self._local_term_streams(sharedt, imap, amap, batch_tcache)
-
-        def _local_one(item):
-            qid, ast, flat_q, k, mode = item
-            return qid, self._local_search(ast, flat_q, k, mode, tcache=batch_tcache)
-
-        if len(cand) > 1:
-            # members are independent; pyarrow part reads release the
-            # GIL and the big numpy passes mostly do too — 4 driver
-            # threads roughly halve the batch wall (the distributed
-            # batch path overlaps planning the same way)
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(4, len(cand))) as lex:
-                local_results = list(lex.map(_local_one, cand))
-        else:
-            local_results = [_local_one(it) for it in cand]
         served = [(qid, lr) for qid, lr in local_results if lr is not None]
         for qid, _lr in served:
             resolved.pop(qid)

@@ -3,14 +3,14 @@
 The reference is batch-only — its index rebuild is a full delete+rewrite
 (EmailIndexGenerator.java:45-50).  Our engine adds an append path: new
 transcript turns get docIDs continuing from the current max (exactly
-Lucene's insertion-order docID semantics), and their postings are
-written by the build's own kernels — the chunk tokenizer
-(plans/builder._tokenize_to_chunk_rows, no heavy-term splits) and the
-posting encoder (plans/builder._encode_chunk_table) — as NEW posting
-rows with a fresh ``split_id`` per ingest batch, in the same format and
-(term, split_id)-sorted file layout a build writes.
+Lucene's insertion-order docID semantics), and the build's staging
+kernel (plans/builder._stage_on_driver, no heavy-term splits) writes
+their tables: NEW posting rows with a fresh ``split_id`` per ingest
+batch, in the same format and (term, split_id)-sorted file layout a
+build writes.
 
-Two paths stage a batch, and write the same bytes (test-gated):
+Input size decides only where that kernel runs (test-gated to write
+the same index):
 
 * a batch of at most ``plans/builder.DRIVER_MAX_TURNS`` turns and
   ``DRIVER_MAX_INPUT_BYTES`` of Arrow — every micro-batch of a live
@@ -23,11 +23,11 @@ Two paths stage a batch, and write the same bytes (test-gated):
   Spark job); any other batch with ONE bounded Arrow collect.  No Spark
   job runs past that read; the append costs milliseconds of numpy
   instead of a dozen jobs' scheduling (a small append is a cheap log
-  commit, as in Delta Lake; heavy rewrites are compaction's job).  The
-  same kernel stages a small build, the index's first commit, at base
-  0 (IndexBuilder.build);
-* a larger batch takes the build's Spark pipeline (docid assignment,
-  mapInPandas tokenizer, plans/builder.write_postings).
+  commit, as in Delta Lake; heavy rewrites are compaction's job);
+* a larger batch is staged as a large build is, in shards of whole
+  conversations, one Spark task each (plans/builder._stage_sharded):
+  shard s at base = the corpus size plus the rows of the shards before
+  it, its postings at split_id = the batch's + s.
 
 Each ``ingest_*`` manifest stage records which ``path`` ran and its
 ``seconds``; a driver-staged one also which ``read`` ("files" or
@@ -48,8 +48,7 @@ dense batch of NEW conversations lands as contiguous doc ranges at ids
 ≥ the current corpus size, so the batch adds one piece
 ``(conv_id, conv_offset, n_turns)`` that rides the same staged, hidden,
 manifest-committed publish as every other table.  A batch that
-continues an already-indexed conversation, is not dense, or has too
-many conversations for the driver-side offsets path breaks the
+continues an already-indexed conversation or is not dense breaks the
 one-range-per-conversation layout instead: its commit drops the
 artifact and the engine falls back to the doc_stats join.
 
@@ -83,77 +82,19 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from emailindexer_spark.functions.smallfloat import norm_byte_expr
-from emailindexer_spark.functions.tokenizer import dl_expr
-from emailindexer_spark.operators.docid import assign_doc_ids_with_total
 from emailindexer_spark.plans import builder
 from emailindexer_spark.plans.builder import (
-    CHUNK_SCHEMA,
     INDEX_TABLES,
     _stage_on_driver,
-    _stat_cols,
-    _tokenize_to_chunk_rows,
+    _stage_sharded,
+    _write_term_dict,
     write_conv_offsets,
-    write_postings,
 )
 from emailindexer_spark.sources.checkpoint import Manifest
 
 #: the tables an append writes
 _TABLES = tuple(t for t in INDEX_TABLES if t != "build_metrics")
-
-def _stage_with_spark(
-    spark, batch, staging, base, split_id, fields, simple, positions, block_size, num_parts
-):
-    """Stage a batch with the build's Spark pipeline: docid assignment,
-    dl/norm column expressions, the map-side chunk tokenizer and the one
-    posting writer.  Returns (rows, {field: (n_docs, tokens)}, conv
-    offsets), as _stage_on_driver's Staged does."""
-    oo: dict = {}
-    with_ids, _total = assign_doc_ids_with_total(
-        batch, method="two_phase", offsets_out=oo
-    )
-    with_ids = with_ids.withColumn("doc_id", F.col("doc_id") + F.lit(base))
-    stat_cols = []
-    for fld, (dcol, ncol) in zip(fields, _stat_cols(fields)):
-        with_ids = with_ids.withColumn(dcol, dl_expr(F.col(fld), simple))
-        with_ids = with_ids.withColumn(ncol, norm_byte_expr(F.col(dcol)))
-        stat_cols += [dcol, ncol]
-    with_ids = with_ids.persist()
-    try:
-        with_ids.select(
-            "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "text", *stat_cols
-        ).write.parquet(os.path.join(staging, "doc_index"))
-        with_ids.select("doc_id", "conv_id", "turn_idx", *stat_cols).write.parquet(
-            os.path.join(staging, "doc_stats")
-        )
-        # the build's tokenizer and posting writer, no heavy map
-        chunks = with_ids.select("doc_id", *fields).mapInPandas(
-            _tokenize_to_chunk_rows(simple, positions, fields, None, 0),
-            CHUNK_SCHEMA,
-        ).withColumn("split_id", F.lit(split_id))
-        write_postings(chunks, os.path.join(staging, "postings"), block_size, num_parts)
-        # term_dict delta: df per (term, part) sums over rows at read
-        # time (a batch with no tokens has no postings files to read)
-        if glob.glob(os.path.join(staging, "postings", "part=*", "*.parquet")):
-            (
-                spark.read.parquet(os.path.join(staging, "postings"))
-                .groupBy("term", "part")
-                .agg(F.sum("df_row").alias("df"))
-                .write.parquet(os.path.join(staging, "term_dict"))
-            )
-        aggs = [F.count("*").alias("rows")]
-        for fld, (dcol, _ncol) in zip(fields, _stat_cols(fields)):
-            aggs.append(F.count(F.when(F.col(dcol) > 0, 1)).alias(f"n_{fld}"))
-            aggs.append(F.sum(dcol).alias(f"total_{fld}"))
-        agg = with_ids.agg(*aggs).collect()[0]
-    finally:
-        with_ids.unpersist(blocking=False)
-    totals = {
-        f: (int(agg[f"n_{f}"] or 0), int(agg[f"total_{f}"] or 0)) for f in fields
-    }
-    return int(agg["rows"]), totals, oo
 
 
 def _offsets_overlap(co_dir: str, conv_ids) -> bool:
@@ -255,7 +196,7 @@ def incremental_append(
     no-op replay.  A batch of at most builder.DRIVER_MAX_TURNS turns,
     whose Arrow table holds at most builder.DRIVER_MAX_INPUT_BYTES (long
     bodies in few turns do not), is staged on the driver; a larger one
-    by the build's Spark pipeline.  The driver gets the rows of a bare
+    in shards, as a large build is.  The driver gets the rows of a bare
     local parquet batch whose footers count at most the cap from its
     files (builder.read_bare_parquet, no Spark job), and those of any
     other batch from one bounded Arrow collect; a bare batch over the
@@ -301,13 +242,13 @@ def incremental_append(
     staging = os.path.join(index_dir, "_staging", tag)
     shutil.rmtree(staging, ignore_errors=True)
 
-    # every batch becomes one fresh split per term: doc ranges are
-    # disjoint from all prior rows by construction (ids ≥ base)
-    stage = dict(
-        staging=staging,
-        base=base,
-        split_id=batch_seq * 1_000_000,
-        fields=tuple(man.params.get("fields", ["text"])),
+    # every batch (every shard of one) becomes one fresh split per
+    # term: doc ranges are disjoint from all prior rows by construction
+    # (ids ≥ base)
+    split_id = batch_seq * 1_000_000
+    fields = tuple(man.params.get("fields", ["text"]))
+    kernel = dict(
+        fields=fields,
         simple=bool(man.params.get("simple_tokens", False)),
         positions=bool(man.params.get("positions", False)),
         block_size=int(man.params.get("block_size", 128)),
@@ -324,18 +265,22 @@ def incremental_append(
         rows, read = batch.limit(cap + 1).toArrow(), "collect"
     if rows is not None and rows.num_rows <= cap and rows.nbytes <= builder.DRIVER_MAX_INPUT_BYTES:
         path = "driver"
-        st = _stage_on_driver(rows, **stage)
-        n_batch, totals, oo = st.n_rows, st.totals, st.offsets
+        st = _stage_on_driver(rows, staging, base, split_id, **kernel)
     else:
         path, read = "spark", None
         del rows
-        n_batch, totals, oo = _stage_with_spark(spark, batch, **stage)
-    fields = stage["fields"]
+        marks = os.path.join(staging, "_shards")  # removed with staging
+        st = _stage_sharded(batch, staging, marks, base, split_id, False, kernel)
+    n_batch, totals, oo = st.n_rows, st.totals, st.offsets
+    # term_dict delta: df per (term, part) sums with the earlier rows at
+    # read time
+    if len(st.term_parts):
+        _write_term_dict(os.path.join(staging, "term_dict"), st.term_parts)
 
     # conv_offsets: appended turns land at the END of the doc_id space,
     # so a dense batch of NEW conversations keeps every conversation one
     # contiguous doc range — extend the artifact with the batch's piece
-    # (offsets from the driver-side prefix sum of either path).
+    # (offsets from the driver-side prefix sum of either route).
     # Anything else drops it in this append's commit; compaction never
     # moves doc_ids, so it keeps whichever state it finds.
     co_dir = man.stage_path("conv_offsets")

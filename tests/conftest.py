@@ -120,3 +120,63 @@ def index_state(spark):
         return out
 
     return state
+
+
+@pytest.fixture(scope="session")
+def index_digest(spark):
+    """``index_digest(d)``: what the index under ``d`` holds, its layout
+    aside — per term, the decoded (doc, tf, norm, positions) stream in
+    doc order; the other tables' sorted rows; the Spark-read schema of
+    every table; the manifest's stats but the layout ones
+    (``bytes_compressed``, ``skew_splits``) and its stage names.  The
+    same rows staged by any route, in one shard or many, digest alike;
+    how postings split into rows and files, and build_metrics, may
+    differ."""
+    import numpy as np
+    import pyarrow.parquet as papq
+
+    from emailindexer_spark.functions.codec import decode_block, decode_positions
+    from emailindexer_spark.plans.builder import INDEX_TABLES
+    from emailindexer_spark.sources.checkpoint import Manifest
+
+    cols = ["term", "b_first", "b_docs", "b_tfs", "b_norms", "b_pos"]
+
+    def postings(d):
+        out = {}
+        for f in glob.glob(os.path.join(d, "postings", "part=*", "*.parquet")):
+            for r in papq.read_table(f, columns=cols).to_pylist():
+                stream = out.setdefault(r["term"], [])
+                for first, bd, bt, bn, bp in zip(*(r[c] for c in cols[1:])):
+                    docs, tfs, norms = decode_block(first, bd, bt, bn)
+                    pos = (
+                        np.split(decode_positions(bp, tfs), np.cumsum(tfs)[:-1])
+                        if bp
+                        else [np.empty(0, np.int64)] * docs.size
+                    )
+                    stream += zip(
+                        docs.tolist(), tfs.tolist(), norms.tolist(), (tuple(p.tolist()) for p in pos)
+                    )
+        return {t: sorted(s) for t, s in out.items()}
+
+    def digest(d):
+        out = {"postings": postings(d)}
+        for t in ("doc_index", "doc_stats", "term_dict"):
+            out[t] = sorted(tuple(r) for r in spark.read.parquet(os.path.join(d, t)).collect())
+        out["conv_offsets"] = sorted(
+            tuple(r.values())
+            for f in glob.glob(os.path.join(d, "conv_offsets", "*.parquet"))
+            for r in papq.read_table(f).to_pylist()
+        )
+        out["schemas"] = {
+            t: spark.read.parquet(os.path.join(d, t)).schema
+            for t in INDEX_TABLES
+            if os.path.isdir(os.path.join(d, t))
+        }
+        man = Manifest.load_or_create(d)
+        out["stats"] = {
+            k: v for k, v in man.stats.items() if k not in ("bytes_compressed", "skew_splits")
+        }
+        out["stages"] = sorted(man.stages)
+        return out
+
+    return digest

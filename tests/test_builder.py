@@ -19,24 +19,46 @@ def test_stats_match_oracle(index_dir, oracle_ix):
     assert man.stats["total_tokens"] / man.stats["n_docs"] == pytest.approx(oracle_ix.avgdl)
 
 
-def test_heavy_terms_are_split(spark, index_dir):
-    p = spark.read.parquet(os.path.join(index_dir, "postings"))
-    splits = p.where(F.col("split_id") > 0)
-    assert splits.count() > 1  # FIXTURES.md §6.5: >1 skew split
-    # splits of one term cover disjoint, ordered doc ranges
-    rows = (
-        p.where(F.col("split_id") >= 0)
-        .groupBy("term")
-        .agg(F.count("*").alias("n"), F.collect_list(F.struct("split_id", "first_doc", "last_doc")).alias("s"))
-        .where(F.col("n") > 1)
-        .limit(5)
-        .collect()
+def _shard_of(d, docs):
+    """The shard (doc_index file) of each of ``docs``, from the files'
+    first doc ids."""
+    import numpy as np
+    import pyarrow.parquet as papq
+
+    firsts = [
+        papq.read_table(f, columns=["doc_id"]).column(0)[0].as_py()
+        for f in sorted(glob.glob(os.path.join(d, "doc_index", "*.parquet")))
+    ]
+    return np.searchsorted(firsts, np.asarray(docs), side="right") - 1
+
+
+def _postings_layout(d):
+    """(file, term, split_id, first_doc, last_doc) of every postings row."""
+    import pandas as pd
+    import pyarrow.parquet as papq
+
+    cols = ["term", "split_id", "first_doc", "last_doc"]
+    return pd.concat(
+        [
+            papq.read_table(f, columns=cols).to_pandas().assign(file=os.path.relpath(f, d))
+            for f in glob.glob(os.path.join(d, "postings", "part=*", "*.parquet"))
+        ],
+        ignore_index=True,
     )
-    assert rows
-    for r in rows:
-        parts = sorted(r["s"], key=lambda x: x["split_id"])
-        for a, b in zip(parts, parts[1:]):
-            assert a["last_doc"] < b["first_doc"]
+
+
+def test_heavy_terms_are_split(spark, index_dir):
+    p = _postings_layout(index_dir)
+    assert (p.split_id > 0).sum() > 1  # FIXTURES.md §6.5: >1 skew split
+    # every term's rows, in split order, cover ascending disjoint doc
+    # ranges: (term, split_id) is unique across files, and a row ends
+    # before the term's next row starts
+    assert not p.duplicated(["term", "split_id"]).any()
+    p = p.sort_values(["term", "split_id"], ignore_index=True)
+    same = p.term.to_numpy()[1:] == p.term.to_numpy()[:-1]
+    assert same.any()
+    assert (p.last_doc.to_numpy()[:-1][same] < p.first_doc.to_numpy()[1:][same]).all()
+    assert (p.first_doc <= p.last_doc).all()
 
 
 def test_build_metrics_lineage(spark, index_dir):
@@ -66,21 +88,45 @@ def _postings_payloads(spark, d):
 
 
 @pytest.mark.slow
-def test_kill_and_resume_byte_identical(spark, corpus_sdf, index_dir):
+def test_kill_and_resume_byte_identical(spark, monkeypatch, corpus_sdf, index_dir):
+    import emailindexer_spark.plans.builder as B
+
     d = tempfile.mkdtemp(prefix="ix_resume_")
     try:
         b = IndexBuilder(spark, d, num_parts=8, heavy_df_threshold=500, split_target=400)
-        # phase 1: run the full build, then simulate a crash AFTER doc_stats
-        # by deleting the postings + metrics stages and their ledger entries
-        b.build(corpus_sdf)
-        man = Manifest.load_or_create(d)
-        for st in ("postings", "build_metrics"):
-            shutil.rmtree(os.path.join(d, st))
-            man.stages.pop(st)
-        man._flush()
-        # phase 2: resume must NOT rebuild doc_index/doc_stats, and must
+        # phase 1: a sharded build that crashes before its commit, after
+        # half of its shards were staged: the other half lose their
+        # done markers and files
+        marks_read = B._shard_marks
+
+        def crash_on_second_read(*a):  # the first read precedes the staging
+            crash_on_second_read.calls += 1
+            return 1 / 0 if crash_on_second_read.calls == 2 else marks_read(*a)
+
+        crash_on_second_read.calls = 0
+        with monkeypatch.context() as m:
+            m.setattr(B, "_shard_marks", crash_on_second_read)
+            with pytest.raises(ZeroDivisionError):
+                b.build(corpus_sdf)
+        assert Manifest.load_or_create(d).stages == {}
+        marks = os.path.join(d, "_staging", "build")
+        shards = sorted(f[:-5] for f in os.listdir(marks) if f.endswith(".json"))
+        assert len(shards) > 2
+
+        def files(s, tables=("doc_index", "doc_stats", os.path.join("postings", "part=*"))):
+            return [f for t in tables for f in glob.glob(os.path.join(d, t, f"part-{s}.parquet"))]
+
+        for s in shards[1::2]:
+            for f in glob.glob(os.path.join(marks, s + ".*")) + files(s):
+                os.remove(f)
+        # (the postings part files are merged into one per part at the end)
+        kept = {f: os.stat(f).st_mtime_ns for s in shards[::2] for f in files(s, ("doc_index", "doc_stats"))}
+        assert kept
+        # phase 2: resume must NOT restage the marked shards, and must
         # reproduce byte-identical postings payloads
-        b.build(corpus_sdf, resume=True)
+        man = b.build(corpus_sdf, resume=True)
+        assert {f: os.stat(f).st_mtime_ns for f in kept} == kept
+        assert not os.path.exists(marks) and man.is_complete("build_metrics")
         assert _postings_payloads(spark, d) == _postings_payloads(spark, index_dir)
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -104,8 +150,8 @@ def test_param_mismatch_rejected(spark, corpus_sdf, index_dir):
 
 
 def test_doc_index_carries_exact_dl_and_norm(spark, index_dir, corpus_pdf):
-    # dl/norm are JVM column expressions (Java regex + arithmetic
-    # SmallFloat); they must equal the Python tokenizer + codec exactly
+    # dl/norm come from the kernel's vectorized token counter and
+    # SmallFloat encoder; they must equal the scalar tokenizer + codec
     from emailindexer_spark.functions.smallfloat import int_to_byte4
     from emailindexer_spark.functions.tokenizer import tokenize
 
@@ -220,8 +266,8 @@ def test_load_transcripts_jsonl_and_csv(spark, tmp_path):
 @pytest.fixture(params=["driver", "spark"])
 def build_path(request, monkeypatch):
     """Run the test's builds on one path: the driver path takes every
-    bare-parquet input the tests use; a negative cap forces the Spark
-    pipeline."""
+    bare-parquet input the tests use; a negative cap forces the sharded
+    route ("spark")."""
     import emailindexer_spark.plans.builder as B
 
     if request.param == "spark":
@@ -265,13 +311,14 @@ def _build_on(spark, monkeypatch, path, d, src, **params):
     ids=["heavy_splits", "no_positions", "two_fields", "sanitize", "sparse_turns"],
 )
 def test_driver_and_spark_builds_write_identical_tables(
-    spark, monkeypatch, tmp_path, index_state, corpus_pdf, params, sparse
+    spark, monkeypatch, tmp_path, index_digest, corpus_pdf, params, sparse
 ):
-    """A small bare-parquet build staged on the driver (one Arrow
-    collect, the append's kernel with the exact-df heavy map, pyarrow
-    writes) and the Spark pipeline write the same index: postings bytes,
-    rows, schemas, term_dict, build_metrics, conv_offsets and manifest
-    stats — and still do after a driver append on top of each."""
+    """A small bare-parquet build staged on the driver (one kernel call
+    at base 0) and a sharded build (one kernel call per shard, in Spark
+    tasks) write the same index: every term's decoded postings and
+    positions, rows, schemas, term_dict, conv_offsets and manifest
+    stats (index_digest: how postings split into rows and files may
+    differ) — and still do after a driver append on top of each."""
     from emailindexer_spark.streaming.ingest import incremental_append
 
     convs = corpus_pdf.conv_id.unique()
@@ -287,11 +334,12 @@ def test_driver_and_spark_builds_write_identical_tables(
         d = str(tmp_path / path)
         man = _build_on(spark, monkeypatch, path, d, src, **params)
         assert man.is_complete("conv_offsets") == (not sparse)
-        states[path] = [index_state(d)]
+        assert len(os.listdir(os.path.join(d, "doc_index"))) == (1 if path == "driver" else 8)
+        states[path] = [index_digest(d)]
         incremental_append(spark, d, spark.createDataFrame(batch))
-        states[path].append(index_state(d))
+        states[path].append(index_digest(d))
     a, b = states["driver"], states["spark"]
-    assert a[0]["postings"] and any(sid > 0 for _t, sid in a[0]["postings"])
+    assert a[0]["postings"] and bool(a[0]["conv_offsets"]) != sparse
     for when, sa, sb in zip(("build", "append"), a, b):
         assert sa.keys() == sb.keys()
         for k in sa:
@@ -302,8 +350,8 @@ def test_driver_and_spark_builds_write_identical_tables(
 def test_small_build_path_and_jobs(spark, spark_jobs, monkeypatch, tmp_path, corpus_pdf):
     """A bare-parquet build within the caps runs one Spark job, the
     read's schema inference: its files are read with pyarrow.  A
-    filtered input and an input over either cap take the Spark
-    pipeline."""
+    filtered input and an input over either cap are staged in
+    shards."""
     import emailindexer_spark.plans.builder as B
 
     src = _parquet(tmp_path, corpus_pdf)
@@ -446,8 +494,9 @@ def test_hive_partitioned_input_builds_with_collect(
 @pytest.mark.slow
 def test_driver_build_commits_in_one_write(spark, monkeypatch, tmp_path, index_state, corpus_pdf):
     """A driver build writes its manifest once after creating it, and a
-    crash before that write commits no stage; resume then rebuilds on
-    Spark the postings a fresh build writes."""
+    crash before that write commits no stage and marks no shard; resume
+    is then a fresh driver build, and writes the postings a fresh build
+    writes."""
     import emailindexer_spark.plans.builder as B
 
     src = _parquet(tmp_path, corpus_pdf.head(1500))
@@ -476,5 +525,106 @@ def test_driver_build_commits_in_one_write(spark, monkeypatch, tmp_path, index_s
     man = Manifest.load_or_create(d)
     assert man.stages == {} and man.stats == {}
     man = b.build(spark.read.parquet(src), resume=True)
-    assert {st["path"] for st in man.stages.values()} == {"spark"}
+    assert {st["path"] for st in man.stages.values()} == {"driver"}
     assert index_state(d)["postings"] == index_state(str(tmp_path / "ref"))["postings"]
+
+
+# ---------------------------------------------------------------------------
+# sharded builds
+
+
+def test_sharded_build_layout(spark, index_dir, corpus_pdf):
+    """A sharded build (the shared fixture: a createDataFrame input, 8
+    shards): shard s's doc_index file is part-{s:05d}.parquet, holding
+    one contiguous doc range, the ranges tiling [0, n_rows) in name
+    order; every conversation lies in exactly one shard; each postings
+    part is one file whose every row lies in one shard's range; build
+    split ids stay below an append's 1_000_000; and conv_offsets tiles
+    [0, n_rows)."""
+    import pyarrow.parquet as papq
+
+    man = Manifest.load_or_create(index_dir)
+    n = man.stats["n_rows"]
+    files = sorted(glob.glob(os.path.join(index_dir, "doc_index", "*.parquet")))
+    assert len(files) == 8 and n == len(corpus_pdf)
+    edge, seen = 0, set()
+    for s, f in enumerate(files):
+        assert os.path.basename(f) == f"part-{s:05d}.parquet"
+        t = papq.read_table(f, columns=["doc_id", "conv_id"]).to_pandas()
+        assert t.doc_id.tolist() == list(range(edge, edge + len(t)))
+        edge += len(t)
+        convs = set(t.conv_id)
+        assert not convs & seen
+        seen |= convs
+    assert edge == n and seen == set(corpus_pdf.conv_id)
+    p = _postings_layout(index_dir)
+    assert p.split_id.max() < 1_000_000
+    assert p.file.str.endswith(os.path.join("", "part-00000.parquet")).all()
+    assert p.file.nunique() == len(glob.glob(os.path.join(index_dir, "postings", "part=*")))
+    shard = _shard_of(index_dir, p.first_doc)
+    assert set(shard) == set(range(8)) and (shard == _shard_of(index_dir, p.last_doc)).all()
+    assert man.is_complete("conv_offsets")
+    co = papq.read_table(glob.glob(os.path.join(index_dir, "conv_offsets", "*.parquet"))[0]).to_pandas()
+    assert co.conv_offset.tolist() == [0, *(co.conv_offset + co.n_turns).tolist()[:-1]]
+    assert int(co.conv_offset.iloc[-1] + co.n_turns.iloc[-1]) == n
+
+
+@pytest.mark.slow
+def test_compacting_a_sharded_build_gives_the_driver_build(
+    spark, monkeypatch, tmp_path, index_state, corpus_pdf
+):
+    """Heavy terms split within shards keep (term, split_id) unique and
+    split order doc order; compaction re-cuts every term from its exact
+    df at base 0, so a compacted sharded build holds the postings a
+    driver build of the same rows writes, row for row: every column and
+    ``part``."""
+    import emailindexer_spark.plans.builder as B
+    from emailindexer_spark.streaming.compact import compact_index
+
+    src = _parquet(tmp_path, corpus_pdf)
+    one, many = str(tmp_path / "one"), str(tmp_path / "many")
+    for d in (one, many):
+        with monkeypatch.context() as m:
+            if d == many:
+                m.setattr(B, "DRIVER_MAX_TURNS", -1)
+            IndexBuilder(spark, d, num_parts=8, heavy_df_threshold=100, split_target=40).build(
+                spark.read.parquet(src)
+            )
+    p = _postings_layout(many)
+    p["shard"] = _shard_of(many, p.first_doc)
+    assert p.duplicated(["shard", "term"]).any(), "heavy terms must split within a shard"
+    assert not p.duplicated(["term", "split_id"]).any()
+    p = p.sort_values(["term", "split_id"], ignore_index=True)
+    same = p.term.to_numpy()[1:] == p.term.to_numpy()[:-1]
+    assert (p.last_doc.to_numpy()[:-1][same] < p.first_doc.to_numpy()[1:][same]).all()
+    want = index_state(one)["postings"]
+    assert want != index_state(many)["postings"]
+    compact_index(spark, many)
+    assert index_state(many)["postings"] == want
+    assert any(sid > 0 for _t, sid in want)
+
+
+def test_index_digest_sees_one_changed_tf(spark, tmp_path, index_digest, corpus_pdf):
+    """A planted defect — one posting's tf off by one — changes the
+    digest, in that term's stream only."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from emailindexer_spark.functions.codec import decode_block, varbyte_encode
+
+    d, bad = str(tmp_path / "ix"), str(tmp_path / "bad")
+    IndexBuilder(spark, d, num_parts=4).build(
+        spark.read.parquet(_parquet(tmp_path, corpus_pdf.head(600)))
+    )
+    shutil.copytree(d, bad)
+    f = sorted(glob.glob(os.path.join(bad, "postings", "part=*", "*.parquet")))[0]
+    rows = papq.read_table(f).to_pylist()
+    r = rows[0]
+    _docs, tfs, _norms = decode_block(r["b_first"][0], r["b_docs"][0], r["b_tfs"][0], r["b_norms"][0])
+    tfs[0] += 1
+    r["b_tfs"][0] = varbyte_encode(tfs.astype("uint64"))
+    papq.write_table(pa.Table.from_pylist(rows, schema=papq.read_schema(f)), f)
+    a, b = index_digest(d), index_digest(bad)
+    assert a != b
+    diff = [t for t in a["postings"] if a["postings"][t] != b["postings"][t]]
+    assert diff == [r["term"]]

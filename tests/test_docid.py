@@ -1,59 +1,73 @@
-"""docID assignment: two-phase == window, invariant to partition count
+"""docID assignment: the staging kernel's doc ids are the dense rank over
+(conv_id, turn_idx), in one shard or many, for any input partitioning
 (FIXTURES.md §6.2)."""
 
-import pytest
-from pyspark.sql import functions as F
+import os
 
-from emailindexer_spark.operators.docid import assign_doc_ids, validate_transcripts
+import pandas as pd
+import pytest
+
+from emailindexer_spark.operators.docid import validate_transcripts
+from emailindexer_spark.plans.builder import IndexBuilder
 
 
 @pytest.fixture(scope="module")
-def small(spark, corpus_sdf):
-    return corpus_sdf.limit(1200).cache()
+def small(corpus_pdf):
+    return corpus_pdf.head(1200)
 
 
-def _ids(df):
+def _ids(spark, d):
     return {
         (r["conv_id"], r["turn_idx"]): r["doc_id"]
-        for r in df.select("conv_id", "turn_idx", "doc_id").collect()
+        for r in spark.read.parquet(os.path.join(d, "doc_index"))
+        .select("conv_id", "turn_idx", "doc_id")
+        .collect()
     }
 
 
-def test_two_phase_equals_window(spark, small):
-    a = _ids(assign_doc_ids(small, method="window"))
-    b = _ids(assign_doc_ids(small, method="two_phase"))
-    assert a == b
+def _rank(pdf):
+    keys = sorted(pdf[["conv_id", "turn_idx"]].itertuples(index=False, name=None))
+    return {k: i for i, k in enumerate(keys)}
+
+
+def _build(spark, d, sdf):
+    """A sharded build (a createDataFrame input is never bare parquet)."""
+    IndexBuilder(spark, str(d), num_parts=4).build(sdf)
+    return len(os.listdir(os.path.join(d, "doc_index")))
+
+
+def test_sharded_ids_equal_the_rank(spark, tmp_path, small):
+    assert _build(spark, tmp_path / "ix", spark.createDataFrame(small)) > 1
+    assert _ids(spark, tmp_path / "ix") == _rank(small)
 
 
 @pytest.mark.parametrize("nparts", [2, 8, 32])
-def test_invariant_to_partitioning(spark, small, nparts):
-    base = _ids(assign_doc_ids(small, method="window"))
-    shuffled = small.repartition(nparts)
-    got = _ids(assign_doc_ids(shuffled, method="two_phase", num_partitions=nparts))
-    assert got == base
+def test_invariant_to_partitioning(spark, tmp_path, small, nparts):
+    _build(spark, tmp_path / "ix", spark.createDataFrame(small.sample(frac=1, random_state=nparts)).repartition(nparts))
+    assert _ids(spark, tmp_path / "ix") == _rank(small)
 
 
-def test_dense_zero_based(spark, small):
-    df = assign_doc_ids(small, method="two_phase")
-    n = df.count()
-    agg = df.agg(
-        F.min("doc_id").alias("mn"),
-        F.max("doc_id").alias("mx"),
-        F.countDistinct("doc_id").alias("d"),
-    ).collect()[0]
-    assert agg["mn"] == 0 and agg["mx"] == n - 1 and agg["d"] == n
+def test_dense_zero_based(spark, tmp_path, small):
+    _build(spark, tmp_path / "ix", spark.createDataFrame(small))
+    assert sorted(_ids(spark, tmp_path / "ix").values()) == list(range(len(small)))
 
 
-def test_partial_conversations_no_collisions(spark):
+def test_partial_conversations_no_collisions(spark, tmp_path, small):
     # a streaming batch may hold only turns 5..9 of a conversation;
     # doc_ids must stay dense and unique (rank within conv, not turn_idx)
-    rows = [("c1", i, "x") for i in range(5, 10)] + [("c2", i, "y") for i in range(3)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    d = assign_doc_ids(df, method="two_phase")
-    ids = sorted(r["doc_id"] for r in d.collect())
-    assert ids == list(range(8))
-    got = {(r["conv_id"], r["turn_idx"]): r["doc_id"] for r in d.collect()}
+    # and the sparse conversation drops conv_offsets
+    from emailindexer_spark.sources.checkpoint import Manifest
+
+    proto = small.iloc[0]
+    pdf = pd.DataFrame(
+        [proto.to_dict() | {"conv_id": "c1", "turn_idx": i} for i in range(5, 10)]
+        + [proto.to_dict() | {"conv_id": "c2", "turn_idx": i} for i in range(3)]
+    )
+    _build(spark, tmp_path / "ix", spark.createDataFrame(pdf))
+    got = _ids(spark, tmp_path / "ix")
+    assert sorted(got.values()) == list(range(8))
     assert got[("c1", 5)] == 0 and got[("c1", 9)] == 4 and got[("c2", 0)] == 5
+    assert not Manifest.load_or_create(str(tmp_path / "ix")).is_complete("conv_offsets")
 
 
 def test_validate_rejects_sparse_turns(spark):
@@ -68,21 +82,15 @@ def test_validate_rejects_sparse_turns(spark):
     validate_transcripts(ok)
 
 
-def test_big_path_matches_small_path(spark, small):
-    # force the at-scale machinery (range-partitioned per-partition
-    # sums + co-partitioned shuffle join + window) by capping the
-    # driver-collect threshold below the conv count, and prove it
-    # assigns the exact same ids as the small-table driver path
-    from emailindexer_spark.operators.docid import assign_doc_ids_with_total
+def test_many_shards_match_one_shard(spark, monkeypatch, tmp_path, small):
+    # one shard per ~100 turns (the cap bounds a shard) against the
+    # driver build's single kernel call over the same rows
+    import emailindexer_spark.plans.builder as B
 
-    base = _ids(assign_doc_ids(small, method="window"))
-    big, total_b = assign_doc_ids_with_total(
-        small.repartition(7), max_broadcast_convs=2
-    )
-    assert _ids(big) == base and total_b == small.count()
-    # partial conversations through the big path too (rank, not turn_idx)
-    rows = [("c1", i, "x") for i in range(5, 10)] + [("c2", i, "y") for i in range(3)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    got, _t = assign_doc_ids_with_total(df, max_broadcast_convs=1)
-    ids = {(r["conv_id"], r["turn_idx"]): r["doc_id"] for r in got.collect()}
-    assert ids[("c1", 5)] == 0 and ids[("c1", 9)] == 4 and ids[("c2", 0)] == 5
+    src = str(tmp_path / "t.parquet")
+    small.to_parquet(src, index=False)
+    IndexBuilder(spark, str(tmp_path / "one"), num_parts=4).build(spark.read.parquet(src))
+    assert len(os.listdir(tmp_path / "one" / "doc_index")) == 1
+    monkeypatch.setattr(B, "DRIVER_MAX_TURNS", 100)
+    assert _build(spark, tmp_path / "many", spark.read.parquet(src)) >= len(small) // 100
+    assert _ids(spark, tmp_path / "many") == _ids(spark, tmp_path / "one") == _rank(small)

@@ -33,7 +33,8 @@ def corpus3(corpus_pdf):
 @pytest.fixture(params=["driver", "spark"])
 def append_path(request, monkeypatch):
     """Run the test's appends on one path: the driver path takes every
-    batch the tests use; a negative cap forces the Spark pipeline."""
+    batch the tests use; a negative cap forces the sharded route
+    ("spark")."""
     import emailindexer_spark.plans.builder as B
 
     if request.param == "spark":
@@ -427,12 +428,13 @@ def test_compact_merges_ingested_splits(spark, corpus3):
     ids=["positions", "no_positions", "two_fields"],
 )
 def test_driver_and_spark_appends_write_identical_tables(
-    spark, monkeypatch, index_state, corpus3, params, steps
+    spark, monkeypatch, index_digest, corpus3, params, steps
 ):
-    """The driver path (a collected batch tokenized, encoded and written
-    with pyarrow) and the Spark pipeline stage the same index: identical
-    postings bytes, rows, schemas, term_dict, conv_offsets and manifest
-    stats after every append."""
+    """The driver path (a collected batch staged by one kernel call) and
+    the sharded route (one kernel call per shard, in Spark tasks) stage
+    the same index: every term's decoded postings and positions, rows,
+    schemas, term_dict, conv_offsets and manifest stats (index_digest)
+    after every append, onto a sharded base."""
     import emailindexer_spark.plans.builder as B
     from emailindexer_spark.sources.checkpoint import Manifest
 
@@ -452,7 +454,7 @@ def test_driver_and_spark_appends_write_identical_tables(
         assert any(
             papq.read_table(f, columns=["split_id"]).column(0).to_numpy().any()
             for f in _postings_files(d0)
-        ), "the base must carry heavy-term splits"
+        ), "the base must carry terms of several rows"
         dirs = {p: os.path.join(root, p) for p in ("driver", "spark")}
         for d in dirs.values():
             shutil.copytree(d0, d)
@@ -465,7 +467,7 @@ def test_driver_and_spark_appends_write_identical_tables(
                     m.setattr(B, "DRIVER_MAX_TURNS", cap)
                     incremental_append(spark, d, spark.createDataFrame(batches[step], schema))
                 assert Manifest.load_or_create(d).stages[f"ingest_{i:06d}"]["path"] == p
-                states[p] = index_state(d)
+                states[p] = index_digest(d)
             a, b = states["driver"], states["spark"]
             assert a.keys() == b.keys()
             for k in a:
@@ -511,7 +513,7 @@ def test_append_of_long_bodies_takes_the_spark_path(spark, monkeypatch, index_di
     """An append's driver path is bounded by the collected batch's bytes
     as well as its turns: a few turns whose bodies exceed
     DRIVER_MAX_INPUT_BYTES (read through plans/builder at call time)
-    take the Spark pipeline, and stay searchable."""
+    are staged in shards, and stay searchable."""
     import emailindexer_spark.plans.builder as B
     from emailindexer_spark.sources.checkpoint import Manifest
 
@@ -741,3 +743,63 @@ def test_index_with_pre_wand_removal_postings_file(spark, index_dir, corpus_pdf)
         assert all("b_maxtf" not in papq.read_schema(f).names for f in _postings_files(old))
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.slow
+def test_over_cap_appends_onto_a_sharded_base(spark, spark_jobs, monkeypatch, tmp_path, corpus3):
+    """A sharded build runs at most 2 Spark jobs; appends over the cap
+    are staged in shards at base n_rows, split ids from their batch's
+    (at most 2 jobs for a bare parquet batch), and match the oracle on
+    the sharded base — before and after a compaction run as one Spark
+    task per part (at most 1 job)."""
+    import emailindexer_spark.plans.builder as B
+    from emailindexer_spark.sources.checkpoint import Manifest
+    from emailindexer_spark.streaming.compact import compact_index
+
+    base, b1, b2 = corpus3
+    d = str(tmp_path / "ix")
+    sdf = spark.createDataFrame(base)
+    jobs = spark_jobs(
+        lambda: IndexBuilder(spark, d, num_parts=8, heavy_df_threshold=500, split_target=400).build(sdf)
+    )
+    assert len(jobs) <= 2, jobs
+    assert Manifest.load_or_create(d).stages["postings"]["path"] == "spark"
+    monkeypatch.setattr(B, "DRIVER_MAX_TURNS", 100)
+    for i, b in enumerate((b1, b2), start=1):
+        pq = str(tmp_path / f"b{i}.parquet")
+        b.to_parquet(pq, index=False)
+        batch = spark.read.parquet(pq)
+        jobs = spark_jobs(lambda: incremental_append(spark, d, batch))
+        assert len(jobs) <= 2, jobs
+        assert Manifest.load_or_create(d).stages[f"ingest_{i:06d}"]["path"] == "spark"
+        assert len(glob.glob(os.path.join(d, "doc_index", f"ing{i:06d}-part-*.parquet"))) > 1
+        sids = np.concatenate(
+            [
+                papq.read_table(f, columns=["split_id"]).column(0).to_numpy()
+                for f in glob.glob(os.path.join(d, "postings", "part=*", f"ing{i:06d}-*.parquet"))
+            ]
+        )
+        assert (sids // 1_000_000 == i).all() and len(set(sids)) > 1
+    assert Manifest.load_or_create(d).is_complete("conv_offsets")
+    rows = []
+    for chunk in (base, b1, b2):
+        rows += sorted(chunk[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
+    ix = build_oracle_index(rows, sort=False)
+
+    def check():
+        eng = SearchEngine(spark, d)
+        assert eng.n_rows == len(rows)
+        for q, mode in [("qojema fuhepi", "turns"), ("fuhepi", "conversations"), ('"noza guka"', "turns")]:
+            exp = osearch(ix, q, k=10, mode=mode)
+            got = [(r["doc_id"], r["score"]) for r in eng.search(q, k=10, mode=mode).collect()]
+            assert exp and [x[0] for x in got] == [x[0] for x in exp], (q, mode)
+            for (_, a), (_, b) in zip(got, exp):
+                assert abs(a - b) <= 1e-6 * max(1.0, abs(b))
+
+    check()
+    monkeypatch.setattr(SearchEngine, "LOCAL_MAX_POSTINGS", 0)  # compaction's task route
+    jobs = spark_jobs(lambda: compact_index(spark, d))
+    assert len(jobs) <= 1, jobs
+    assert Manifest.load_or_create(d).stages["compact_0001"]["path"] == "spark"
+    _assert_postings_term_sorted(d, "compact")
+    check()

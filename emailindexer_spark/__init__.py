@@ -17,12 +17,13 @@ Pipeline (SURVEY.md §2.10 / §3):
   (StandardAnalyzer-parity for the validated ASCII classes) → term-sorted
   posting lists with docID delta + varbyte compression in independently
   decodable 128-doc blocks, heavy terms cut into doc-range splits, files
-  laid out by md5(term) part → broadcast doc-length statistics →
+  laid out by md5(term) part, every table a zstd Parquet file →
+  broadcast doc-length statistics →
   top-k BM25 (k1=1.2, b=0.75, Lucene-9 lossy norm semantics) by an
   exhaustive vectorized pass → conversation collapse (reference: root-id
   dedup, EmailIndexSearcher.java:58-71).
 """
 
-__version__ = "0.4.0"
+__version__ = "0.4.1"
 
 from emailindexer_spark.config import get_spark  # noqa: F401

@@ -7,7 +7,8 @@ their stable (conv_id, turn_idx) order → per-doc lengths and SmallFloat
 norms → the vectorized tokenizer → term-major postings cut into
 (term, split) chunk rows (``_pack_chunk_rows``) → independently
 decodable delta+varbyte blocks (``_encode_chunk_table``) → the index
-tables, written with pyarrow:
+tables, written with pyarrow as zstd Parquet (``write_index_table``,
+the one writer of every index and staging file):
 
   doc_index      stored fields plus dl/norm per field, one row per turn
   doc_stats      skinny (doc_id, conv_id, turn_idx, dl, norm) projection
@@ -94,6 +95,15 @@ POSTINGS_ARROW_SCHEMA = pa.schema(
 )
 
 
+def write_index_table(t: pa.Table, path: str, row_group_size: int | None = None) -> None:
+    """Write ``t`` as the Parquet file ``path`` with zstd at pyarrow's
+    default level, the codec Iceberg writes by default.  Every Parquet
+    file of an index or its staging is written here; readers take the
+    codec from each column chunk, so files of any codec mix in one
+    index."""
+    papq.write_table(t, path, compression="zstd", row_group_size=row_group_size)
+
+
 def write_conv_offsets(
     dest: str, conv_ids: np.ndarray, offsets: np.ndarray, n_turns: np.ndarray
 ) -> None:
@@ -101,7 +111,7 @@ def write_conv_offsets(
     pyarrow.  tmp + atomic rename: a crash mid-write must never leave a
     truncated parquet at the published name."""
     tmp = dest + ".tmp"
-    papq.write_table(
+    write_index_table(
         pa.table(
             {
                 "conv_id": pa.array(list(conv_ids), type=pa.string()),
@@ -507,7 +517,7 @@ def _stage_on_driver(
     def write(table: str, t, sub: str = "") -> None:
         d = os.path.join(staging, table, sub)
         os.makedirs(d, exist_ok=True)
-        papq.write_table(t, os.path.join(d, name))
+        write_index_table(t, os.path.join(d, name))
 
     def lap(table: str) -> None:
         nonlocal t0
@@ -750,7 +760,7 @@ def _stage_shard(shards: list[Shard], staging: str, marks: str, sanitize: bool, 
         if st.n_rows != sh.rows:
             raise RuntimeError(f"shard {s} staged {st.n_rows} rows, planned {sh.rows}")
         dest = os.path.join(marks, f"{s:05d}")
-        papq.write_table(pa.Table.from_pandas(st.term_parts, preserve_index=False), dest + ".parquet")
+        write_index_table(pa.Table.from_pandas(st.term_parts, preserve_index=False), dest + ".parquet")
         with open(dest + ".tmp", "w") as f:
             mark = {"shard": list(sh), "totals": st.totals, "seconds": st.seconds}
             json.dump({**mark, "dense": bool(st.offsets["dense"])}, f)
@@ -773,7 +783,7 @@ def _merge_part(staging: str):
             d = os.path.join(staging, "postings.merged", f"part={k}")
             os.makedirs(d, exist_ok=True)
             order = pc.sort_indices(t, [("term", "ascending"), ("split_id", "ascending")])
-            papq.write_table(t.take(order), os.path.join(d, "part-00000.parquet"))
+            write_index_table(t.take(order), os.path.join(d, "part-00000.parquet"))
         return iter(())
 
     return run
@@ -881,7 +891,7 @@ def _write_term_dict(tdir: str, term_parts: pd.DataFrame) -> None:
     )
     os.makedirs(tdir, exist_ok=True)
     dest = os.path.join(tdir, "part-00000.parquet")
-    papq.write_table(td.sort_by("term"), dest + ".tmp", row_group_size=32768)
+    write_index_table(td.sort_by("term"), dest + ".tmp", row_group_size=32768)
     os.replace(dest + ".tmp", dest)
 
 
@@ -902,7 +912,9 @@ def _commit_build_metrics(
     """Write the per-part lineage table (one row per part: ``part`` and
     BUILD_METRIC_COLS) of the postings' per-(term, part) aggregates
     (Staged.term_parts) with pyarrow, set the manifest totals the
-    benchmark and tests read, and commit the stage."""
+    benchmark and tests read, and commit the stage.  ``bytes_compressed``
+    counts the varbyte payload bytes before Parquet compression, so it
+    does not move with the file codec."""
     per_part = (
         term_parts.groupby("part")
         .agg(
@@ -926,7 +938,7 @@ def _commit_build_metrics(
         }
     )
     dest = os.path.join(mdir, "part-00000.parquet")
-    papq.write_table(tbl, dest + ".tmp")
+    write_index_table(tbl, dest + ".tmp")
     os.replace(dest + ".tmp", dest)
     man.set_stats(
         **{c: int(per_part[c].sum()) for c in ("postings_written", "bytes_compressed", "skew_splits")}

@@ -2079,6 +2079,13 @@ class SearchEngine:
     #: result-row cap: k above it stays distributed, and so does a
     #: "give me everything" query (k=None) with more candidates
     LOCAL_MAX_K = 10_000
+    #: Σdf of a search_many batch's exact terms above which its local
+    #: members run on a 4-thread pool.  Measured (4 vCPU, medians of
+    #: 7-15): one after another was faster at Σdf 40k-100k (10k turns,
+    #: 10-32 queries: 16-67 ms against 25-89 ms pooled), the pool from
+    #: 242k up (60k and 600k turns, 2-64 queries: 1.15-2.6x faster)
+    #: except once at 318k (88 against 95 ms)
+    LOCAL_POOL_MIN_POSTINGS = 200_000
 
     def _local_slices(
         self, terms: set[str], want: list[str], by_term: bool
@@ -2719,19 +2726,28 @@ class SearchEngine:
             ast = self._resolve_node(parse(q, simple=self.simple))
             resolved[qid] = (ast, k, mode)
             all_terms |= query_terms(ast)
-        self.term_dfs(all_terms)
+        batch_df = sum(self.term_dfs(all_terms).values())
         # driver-local members first (same eligibility and results as
-        # the per-query fast path), one after another: their rows fold
-        # into ONE local result — no Spark work for a batch of bounded
-        # queries — and the shared term cache decodes each term once.
-        # (On small indexes a 4-thread pool measured slower per query
-        # than sequential singles: the members' numpy work is too small
-        # to overlap under the GIL.)
+        # the per-query fast path): their rows fold into ONE local
+        # result — no Spark work for a batch of bounded queries — and
+        # the shared term cache decodes each term once.  A batch whose
+        # terms hold more than LOCAL_POOL_MIN_POSTINGS postings runs
+        # them on 4 threads, whose decode and scoring passes overlap in
+        # numpy; a smaller one runs them one after another, because its
+        # members' numpy work is too small to overlap under the GIL.
         batch_tcache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        local_results = [
-            (qid, self._local_search(ast, _flatten_shoulds(ast), k, mode, tcache=batch_tcache))
-            for qid, (ast, k, mode) in resolved.items()
-        ]
+
+        def _local_one(item):
+            qid, (ast, k, mode) = item
+            return qid, self._local_search(ast, _flatten_shoulds(ast), k, mode, tcache=batch_tcache)
+
+        if len(resolved) > 1 and batch_df > self.LOCAL_POOL_MIN_POSTINGS:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=min(4, len(resolved))) as lex:
+                local_results = list(lex.map(_local_one, resolved.items()))
+        else:
+            local_results = [_local_one(item) for item in resolved.items()]
         served = [(qid, lr) for qid, lr in local_results if lr is not None]
         for qid, _lr in served:
             resolved.pop(qid)

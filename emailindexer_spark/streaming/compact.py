@@ -54,6 +54,7 @@ from emailindexer_spark.plans.builder import (
     _encode_chunk_table,
     _pack_chunk_rows,
     _pos_doc_bounds,
+    write_index_table,
 )
 from emailindexer_spark.plans.planner import SearchEngine, _decode_arrow_postings
 from emailindexer_spark.sources.checkpoint import Manifest
@@ -101,7 +102,7 @@ def _compact_part(live: str, tmp: str, part: str, params: dict, n_rows: int) -> 
         )
     ).drop_columns(["part"])
     os.makedirs(os.path.join(tmp, part))
-    papq.write_table(post, os.path.join(tmp, part, "part-00000.parquet"))
+    write_index_table(post, os.path.join(tmp, part, "part-00000.parquet"))
     return post.num_rows
 
 

@@ -628,3 +628,93 @@ def test_index_digest_sees_one_changed_tf(spark, tmp_path, index_digest, corpus_
     assert a != b
     diff = [t for t in a["postings"] if a["postings"][t] != b["postings"][t]]
     assert diff == [r["term"]]
+
+
+def _assert_every_chunk_zstd(d, when):
+    """Every column chunk of every parquet file under ``d`` is zstd,
+    read from the footers; term_dict keeps its 32768-row row groups."""
+    import pyarrow.parquet as papq
+
+    files = glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+    assert files, when
+    other = set()
+    for f in files:
+        md = papq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                codec = md.row_group(g).column(c).compression
+                if codec != "ZSTD":
+                    other.add((os.path.relpath(f, d), codec))
+    assert not other, (when, sorted(other)[:5])
+    for f in glob.glob(os.path.join(d, "term_dict", "*.parquet")):
+        md = papq.ParquetFile(f).metadata
+        sizes = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+        assert all(n == 32768 for n in sizes[:-1]) and sizes[-1] <= 32768, (when, f, sizes)
+
+
+@pytest.mark.slow
+def test_every_write_path_writes_zstd(spark, monkeypatch, tmp_path, corpus_pdf):
+    """Driver and sharded builds, driver and over-cap appends, and
+    compaction on the driver loop and on the task route all write their
+    parquet files with zstd, the shard files and term_parts markers a
+    sharded stage job leaves for the driver included.  The driver
+    build's input carries a turn of 40k distinct words, so its
+    term_dict spans two row groups."""
+    import pandas as pd
+    import pyarrow.parquet as papq
+
+    import emailindexer_spark.plans.builder as B
+    from emailindexer_spark.plans.planner import SearchEngine
+    from emailindexer_spark.streaming.compact import compact_index
+    from emailindexer_spark.streaming.ingest import incremental_append
+
+    convs = corpus_pdf["conv_id"].unique()
+    base = corpus_pdf[corpus_pdf.conv_id.isin(set(convs[: len(convs) // 2]))]
+    b1 = corpus_pdf[corpus_pdf.conv_id.isin(set(convs[len(convs) // 2 : 3 * len(convs) // 4]))]
+    b2 = corpus_pdf[corpus_pdf.conv_id.isin(set(convs[3 * len(convs) // 4 :]))]
+    wide = base.iloc[[0]].assign(conv_id="zz-wide", text=" ".join(f"zq{i:05d}" for i in range(40_000)))
+    src = str(tmp_path / "base.parquet")
+    pd.concat([base, wide]).to_parquet(src, index=False)
+
+    marks_read, staged = B._shard_marks, []
+
+    def check_staged(marks, shards):
+        # after a sharded stage job: its shard files and term_parts
+        # markers, before the driver merges and removes them
+        done = marks_read(marks, shards)
+        if done and len(done) == len(shards):
+            staged.append(glob.glob(os.path.join(marks, "*.parquet")))
+            _assert_every_chunk_zstd(marks.split("_staging")[0], "staged shards")
+        return done
+
+    kw = dict(num_parts=4, heavy_df_threshold=300, split_target=150)
+    driver_ix, sharded_ix = str(tmp_path / "driver"), str(tmp_path / "sharded")
+    IndexBuilder(spark, driver_ix, **kw).build(spark.read.parquet(src))
+    assert Manifest.load_or_create(driver_ix).stages["postings"]["path"] == "driver"
+    assert papq.ParquetFile(glob.glob(f"{driver_ix}/term_dict/*.parquet")[0]).metadata.num_row_groups > 1
+    _assert_every_chunk_zstd(driver_ix, "driver build")
+    with monkeypatch.context() as m:
+        m.setattr(B, "DRIVER_MAX_TURNS", -1)
+        m.setattr(B, "_shard_marks", check_staged)
+        IndexBuilder(spark, sharded_ix, **kw).build(spark.createDataFrame(base))
+    assert Manifest.load_or_create(sharded_ix).stages["postings"]["path"] == "spark"
+    _assert_every_chunk_zstd(sharded_ix, "sharded build")
+
+    incremental_append(spark, sharded_ix, spark.createDataFrame(b1))
+    assert Manifest.load_or_create(sharded_ix).stages["ingest_000001"]["path"] == "driver"
+    _assert_every_chunk_zstd(sharded_ix, "driver append")
+    compact_index(spark, sharded_ix)
+    assert Manifest.load_or_create(sharded_ix).stages["compact_0001"]["path"] == "driver"
+    _assert_every_chunk_zstd(sharded_ix, "driver-loop compaction")
+
+    with monkeypatch.context() as m:
+        m.setattr(B, "DRIVER_MAX_TURNS", -1)
+        m.setattr(B, "_shard_marks", check_staged)
+        incremental_append(spark, sharded_ix, spark.createDataFrame(b2))
+    assert len(staged) == 2 and all(staged), staged
+    assert Manifest.load_or_create(sharded_ix).stages["ingest_000002"]["path"] == "spark"
+    _assert_every_chunk_zstd(sharded_ix, "over-cap append")
+    monkeypatch.setattr(SearchEngine, "LOCAL_MAX_POSTINGS", 0)
+    compact_index(spark, sharded_ix)
+    assert Manifest.load_or_create(sharded_ix).stages["compact_0002"]["path"] == "spark"
+    _assert_every_chunk_zstd(sharded_ix, "task-route compaction")

@@ -697,3 +697,90 @@ def test_all_local_search_many_is_one_local_result(spark_jobs, engines):
     assert empty.columns == ["query_id", *RESULT_COLS]
     assert empty.unionByName(res).collect() == rows
 
+
+
+def _codecs(d, table="*"):
+    """The set of column-chunk codecs of the parquet files of ``table``
+    under index ``d``, read from the footers."""
+    import glob
+    import os
+
+    import pyarrow.parquet as papq
+
+    out = set()
+    for f in glob.glob(os.path.join(d, table, "**", "*.parquet"), recursive=True):
+        md = papq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            out |= {md.row_group(g).column(c).compression for c in range(md.num_columns)}
+    return out
+
+
+@pytest.mark.slow
+def test_snappy_index_serves_appends_and_compacts(spark, tmp_path, engines, index_dir, corpus_pdf):
+    """An index whose every file is Snappy (what releases before 0.4.1
+    wrote) gives the untouched index's answers to the shape set on both
+    tiers, over the residency cap too; an append onto it adds zstd
+    files and matches the oracle; compact_index rewrites every postings
+    file as zstd and keeps the answers."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as papq
+
+    from emailindexer_spark.oracle import build_oracle_index, search as osearch
+    from emailindexer_spark.streaming.compact import compact_index
+    from emailindexer_spark.streaming.ingest import incremental_append
+
+    local, _dist = engines
+    d = str(tmp_path / "ix")
+    shutil.copytree(index_dir, d)
+    for f in glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True):
+        pf = papq.ParquetFile(f)
+        rg = pf.metadata.row_group(0).num_rows if pf.metadata.num_row_groups else None
+        papq.write_table(pf.read(), f, compression="snappy", row_group_size=rg)
+    assert _codecs(d) == {"SNAPPY"}
+
+    def answers(eng):
+        subs = _subs(local)
+        return [_rows(eng.search(tmpl.format(**subs), k=12, mode=mode)) for tmpl, mode, _w in SHAPES]
+
+    def tiers():
+        snap = SearchEngine(spark, d)
+        over = SearchEngine(spark, d)
+        over.LOCAL_MAX_POSTINGS = int(snap._driver_vocab()[1].sum()) - 1
+        dist = SearchEngine(spark, d)
+        dist._local_search = lambda *a, **k: None
+        return snap, over, dist
+
+    want = answers(local)
+    for eng in tiers():
+        assert answers(eng) == want
+
+    batch = corpus_pdf.head(400).assign(conv_id=lambda x: "zz-" + x.conv_id)
+    incremental_append(spark, d, spark.createDataFrame(batch))
+    assert _codecs(d) == {"SNAPPY", "ZSTD"}
+    rows = []
+    for chunk in (corpus_pdf, batch):
+        rows += sorted(chunk[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
+    oracle = build_oracle_index(rows, sort=False)
+    rare, mid, heavy = _terms(local)
+    checks = [(f"{rare} {mid} {heavy}", "turns"), (heavy, "conversations"), (f'"{heavy} {mid}"', "turns")]
+
+    def check_oracle(eng):
+        for q, mode in checks:
+            exp = osearch(oracle, q, k=10, mode=mode)
+            got = [(r["doc_id"], r["score"]) for r in eng.search(q, k=10, mode=mode).collect()]
+            assert exp and [x[0] for x in got] == [x[0] for x in exp], (q, mode)
+            for (_, a), (_, b) in zip(got, exp):
+                assert abs(a - b) <= 1e-6 * max(1.0, abs(b))
+
+    snap, over, dist = tiers()
+    check_oracle(snap)
+    appended = answers(snap)
+    assert answers(over) == answers(dist) == appended
+    compact_index(spark, d)
+    assert _codecs(d, "postings") == {"ZSTD"}
+    snap, over, dist = tiers()
+    check_oracle(snap)
+    assert answers(snap) == answers(over) == answers(dist) == appended

@@ -51,6 +51,38 @@ def test_search_many_shared_scan_mixed(spark, index_dir):
     assert by_q.get("negonly") is None  # pure-negative matches nothing
 
 
+def test_pooled_local_members_match_sequential(spark, index_dir):
+    """A batch whose terms hold more than LOCAL_POOL_MIN_POSTINGS
+    postings runs its local members on a thread pool; a smaller one on
+    the calling thread.  Both give the same rows."""
+    import threading
+
+    batch = {
+        "or": ("qojema fuhepi noza", 5, "turns"),
+        "and": ("qojema AND fuhepi", 5, "turns"),
+        "not": ("qojema -fuhepi", 5, "turns"),
+        "conv": ("qojema fuhepi", 4, "conversations"),
+        "phrase": ('"noza guka"', 5, "turns"),
+        "prefix": ("qo*", 5, "turns"),
+    }
+    rows, threads = {}, {}
+    for name, cap in (("sequential", 10**12), ("pool", 0)):
+        eng = SearchEngine(spark, index_dir)
+        eng.LOCAL_POOL_MIN_POSTINGS = cap
+        local_search, seen = eng._local_search, set()
+
+        def spy(*a, _f=local_search, _seen=seen, **k):
+            _seen.add(threading.get_ident())
+            return _f(*a, **k)
+
+        eng._local_search = spy
+        rows[name] = sorted(tuple(r) for r in eng.search_many(batch).collect())
+        threads[name] = seen
+    assert rows["pool"] == rows["sequential"] and rows["pool"]
+    assert threads["sequential"] == {threading.get_ident()}
+    assert threading.get_ident() not in threads["pool"]
+
+
 def test_kernel_chunking_invariant(spark, index_dir, monkeypatch):
     # the batch kernel bounds executor memory by processing doc-aligned
     # chunks; forcing tiny chunks must not change any query's results.

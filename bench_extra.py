@@ -6,10 +6,10 @@ can be measured without editing it (guide §1.4).
 Modes (first CLI arg):
 
 * ``dist-queries`` — the nine bench queries FORCED through the
-  distributed plans (``LOCAL_MAX_POSTINGS = 0``) against the bench's
-  cached sf index: isolates the executor decode kernels from the
-  driver-local serving tier.  Used to A/B the vectorized
-  ``_decode_frame_postings`` executor lift against the per-block loop.
+  distributed tier (``LOCAL_MAX_POSTINGS = 0``: the query evaluator per
+  doc-range shard) against the bench's cached sf index, timed warm,
+  with the Spark jobs each runs.  Every answer is checked against the
+  driver-local tier's; the run exits non-zero when one differs.
 * ``scale-trend N_TURNS`` — SCALE.md §3b trend leg: build (or reuse)
   the synthetic corpus + index at ``N_TURNS`` and time the same nine
   queries + batched suite with the same warm-then-time methodology as
@@ -51,18 +51,37 @@ def dist_queries() -> None:
         extra_conf=SERVING_CONF,
     )
     spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    local = SearchEngine(spark, ix_dir)
     eng = SearchEngine(spark, ix_dir)
-    eng.LOCAL_MAX_POSTINGS = 0  # force every query onto the distributed plan
+    eng.LOCAL_MAX_POSTINGS = 0  # force every query onto the distributed tier
+
+    def rows(df):
+        return [(r.rank, r.doc_id, r.conv_id, r.turn_idx, round(r.score, 9)) for r in df.collect()]
+
     qsec: dict[str, float] = {}
+    qjobs: dict[str, int] = {}
+    differ: list[str] = []
     for name, q, k, mode, wand in B.BENCH_QUERIES:
         for pat, sub in subs.items():
             q = q.replace(pat, sub)
-        eng.search(q, k=k, mode=mode, use_wand=wand).collect()  # warm
+        got = rows(eng.search(q, k=k, mode=mode, use_wand=wand))  # warm
+        if got != rows(local.search(q, k=k, mode=mode, use_wand=wand)):
+            differ.append(name)
+        sc.setJobGroup(name, name)
         t0 = time.time()
         eng.search(q, k=k, mode=mode, use_wand=wand).collect()
         qsec[name] = round(time.time() - t0, 3)
-    print(json.dumps({"mode": "dist-queries", "sf": sf, "queries": qsec}))
+        qjobs[name] = len(sc.statusTracker().getJobIdsForGroup(name))
+    sc.setJobGroup(None, None)
+    print(
+        json.dumps(
+            {"mode": "dist-queries", "sf": sf, "queries": qsec, "query_jobs": qjobs, "differ": differ}
+        )
+    )
     spark.stop()
+    if differ:
+        raise SystemExit(f"distributed answers differ from the local tier's: {differ}")
 
 
 def scale_trend(n_turns: int) -> None:

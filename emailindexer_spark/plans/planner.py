@@ -1,41 +1,45 @@
-"""Query planning + execution: parse → logical AST → DataFrame program.
+"""Query planning + execution: parse → logical AST → one numpy evaluator.
 
 Reference lifecycle (SURVEY.md §3.1): MultiFieldQueryParser → rewrite →
 per-segment BM25 scorers → top-k collector → root-id dedup.  Ours:
-driver-side parse (plans/parser.py) → postings selection with partition
-pruning (part = md5(term) % P is computed in Python, so only matching
-``part=`` directories are read; the term predicate additionally prunes
-parquet row-groups via min/max on the sorted ``term`` column) →
-vectorized decode+score (Arrow batches, numpy BM25) → boolean
-combination in DataFrame ops → conversation collapse (max-struct hash
-agg, best row per conv_id) → global top-k (TakeOrderedAndProject).
+driver-side parse (plans/parser.py) → rewrite (field routing, and each
+prefix / wildcard / range / fuzzy leaf expanded on the driver to an
+explicit term list, from the driver vocabulary or one ``term_dict``
+job) → :class:`QueryEvaluator`, the ONE scorer of every query shape:
+(ast, term → Arrow posting rows, idf/avgdl maps, doc range) → (sorted
+docs, scores) → top-k with optional conversation collapse.
 
 Scoring needs NO join against per-doc stats: norms ride inside the
 postings payload (functions/codec.py), so a term's score stream is a
-pure map over its posting rows.  The only joins are candidate-sized:
-conv_id attachment for collapse mode and text attachment for phrase
-verification / display.
+pure map over its posting rows, decoded straight from Arrow buffers.
 
-Selectivity leads (Lucene's driver-iterator order): conjunctions and
-phrases broadcast the rarest MUST term's doc ids and filter every wider
-term's block decode map-side; MUST_NOT terms decode doc ids only (no
-tf/norm IO, no scoring) into a broadcast-hinted anti join.
+The evaluator runs in one of two places:
 
-Routing: a search the driver-local tier serves scores on the driver;
-every other search takes one exhaustive plan (score every matching
-doc, then top-k), matching the reference's own exhaustive flagship
-search (n=Integer.MAX_VALUE, EmailIndexSearcher.java:57).
-``search_many`` batches flat queries onto ONE shared postings scan
-with a vectorized per-query fan-out kernel.
+* the driver-local tier: a query within ``LOCAL_MAX_POSTINGS``,
+  ``LOCAL_MAX_EXPANSION`` and ``LOCAL_MAX_K`` is evaluated on the
+  driver over the whole doc range, from postings parts kept resident
+  (scanned per query above the residency cap), and finished into a
+  :class:`LocalResult` with no Spark job;
+* the distributed tier: every other search runs the same function in
+  ONE ``spark.range(n, numPartitions=n).mapInArrow`` stage, one task
+  per doc-range shard.  Each task reads its terms' rows with pyarrow
+  from the part files the engine took, decodes only the blocks that
+  overlap its range, and the (doc_id, score) stream goes through
+  :meth:`SearchEngine._finish` (top-k, conversation collapse, text).
+
+Shards partition the doc space and idf/avgdl come from the driver, so
+both tiers rank alike, exhaustively, as the reference's own flagship
+search does (n=Integer.MAX_VALUE, EmailIndexSearcher.java:57).
 """
 
 from __future__ import annotations
 
 import os
 import threading
-from functools import cached_property, reduce
+from dataclasses import dataclass
+from functools import cached_property, partial, reduce
 from types import SimpleNamespace
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -49,6 +53,7 @@ from emailindexer_spark.functions.codec import (
     varbyte_decode,
 )
 from emailindexer_spark.functions.smallfloat import encode_lengths
+from emailindexer_spark.functions.tokenizer import tokenize_series
 from emailindexer_spark.plans.builder import _binary_values, avgdl_from_stats, term_part_py
 from emailindexer_spark.plans.parser import (
     MAX_FUZZY_EXPANSIONS,
@@ -70,7 +75,6 @@ from emailindexer_spark.plans.results import LocalResult
 from emailindexer_spark.sources.checkpoint import Manifest
 
 SCORE_SCHEMA = "doc_id long, score double"
-TERM_SCORE_SCHEMA = "term string, doc_id long, score double"
 RESULT_COLS = ["rank", "doc_id", "conv_id", "turn_idx", "score"]
 
 
@@ -112,49 +116,24 @@ def _decode_postings(
     return d, varbyte_decode(tfs[0]).view(np.int64), norms[0].astype(np.int64)
 
 
-def _decode_docs(firsts: np.ndarray, docs: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
-    """Docs-only decode kernel (NOT exclusion / constant score): per-block
-    value counts are read off the doc stream's own varbyte continuation
-    bits, so only (b_first, b_docs) is ever fetched from parquet.
-    Returns doc ids in posting order (not deduplicated)."""
-    buf, blens = docs
-    if not firsts.size:
-        return np.empty(0, np.int64)
+def _doc_counts(buf: np.ndarray, blens: np.ndarray) -> np.ndarray:
+    """Postings per block of a doc stream (bytes as uint8, per-block
+    byte lengths), read off its varbyte continuation bits: a value ends
+    at each byte whose high bit is clear."""
     if not bool((blens > 0).all()):
         raise ValueError("empty b_docs block: every block must be non-empty")
     n_at = np.cumsum((buf & 0x80) == 0)
-    nb = np.diff(np.concatenate(([0], n_at[np.cumsum(blens) - 1])))
-    return _segmented_delta_docs(buf, firsts, nb)
+    return np.diff(np.concatenate(([0], n_at[np.cumsum(blens) - 1])))
 
 
-def _frame_blocks(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """(concatenated block bytes, per-block lengths) of a pandas column of
-    per-row lists of bytes."""
-    bufs = [b for row in col for b in row]
-    lens = np.fromiter(map(len, bufs), np.int64, count=len(bufs))
-    return np.frombuffer(b"".join(bufs), dtype=np.uint8), lens
-
-
-def _frame_firsts(col: pd.Series) -> np.ndarray:
-    if not len(col):
+def _decode_docs(firsts: np.ndarray, docs: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
+    """Docs-only decode kernel (constant score, exclusion): per-block
+    value counts come off :func:`_doc_counts`, so only (b_first, b_docs)
+    is ever fetched.  Returns doc ids in posting order (not
+    deduplicated)."""
+    if not firsts.size:
         return np.empty(0, np.int64)
-    return np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
-
-
-def _decode_frame_postings(sub: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """:func:`_decode_postings` over pandas posting rows (the executor
-    kernels and compaction)."""
-    return _decode_postings(
-        _frame_firsts(sub["b_first"]),
-        _frame_blocks(sub["b_docs"]),
-        _frame_blocks(sub["b_tfs"]),
-        _frame_blocks(sub["b_norms"]),
-    )
-
-
-def _decode_frame_docs(sub: pd.DataFrame) -> np.ndarray:
-    """:func:`_decode_docs` over pandas posting rows."""
-    return _decode_docs(_frame_firsts(sub["b_first"]), _frame_blocks(sub["b_docs"]))
+    return _segmented_delta_docs(docs[0], firsts, _doc_counts(*docs))
 
 
 def _arrow_blocks(col) -> tuple[np.ndarray, np.ndarray]:
@@ -179,9 +158,17 @@ def _arrow_firsts(col) -> np.ndarray:
     return (vals[0] if len(vals) == 1 else np.concatenate(vals)).astype(np.int64, copy=False)
 
 
+def _arrow_list_lens(col) -> np.ndarray:
+    """Per-row list lengths of an Arrow list column (blocks per row)."""
+    lens = [np.diff(c.offsets.to_numpy()) for c in col.chunks]
+    if not lens:
+        return np.empty(0, np.int64)
+    return (lens[0] if len(lens) == 1 else np.concatenate(lens)).astype(np.int64)
+
+
 def _decode_arrow_postings(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """:func:`_decode_postings` over Arrow posting rows (the driver-local
-    tier), with no pandas conversion."""
+    """:func:`_decode_postings` over Arrow posting rows, with no pandas
+    conversion."""
     return _decode_postings(
         _arrow_firsts(rows.column("b_first")),
         _arrow_blocks(rows.column("b_docs")),
@@ -197,472 +184,28 @@ def _decode_arrow_docs(rows) -> np.ndarray:
 
 def _sorted_member_mask(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
     """Boolean mask: which ``values`` occur in ``sorted_arr``."""
+    if not sorted_arr.size:
+        return np.zeros(values.size, dtype=bool)
     p = np.searchsorted(sorted_arr, values)
     return (p < sorted_arr.size) & (
         sorted_arr[np.minimum(p, sorted_arr.size - 1)] == values
     )
 
 
-def _decode_score_rows(
-    idf_map: dict[str, float],
-    avgdl: float,
-    avgdl_map: dict[str, float] | None = None,
-    cand_docs=None,
-):
-    """mapInPandas over posting rows → (term, doc_id, score).
-
-    ``avgdl_map`` overrides the default-field avgdl per KEY for
-    field-prefixed keys (per-field BM25 statistics).  ``cand_docs``
-    (broadcast of a sorted doc-id array — the rarest MUST term's
-    postings) filters every term's stream MAP-SIDE: docs outside the
-    set can never satisfy the conjunction, so their shuffle bytes are
-    skipped entirely.  Each Arrow batch decodes per TERM in one
-    vectorized pass over all its blocks (the executor lift of the
-    driver-local kernel), not per block in Python."""
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cand = cand_docs.value if cand_docs is not None else None
-        for pdf in it:
-            terms, docs, scores = [], [], []
-            for term, sub in pdf.groupby("term", sort=False):
-                iv = idf_map.get(term)
-                if iv is None:
-                    continue
-                adl = avgdl_map.get(term, avgdl) if avgdl_map else avgdl
-                d, t, n = _decode_frame_postings(sub)
-                if cand is not None:
-                    keep = _sorted_member_mask(cand, d)
-                    if not keep.any():
-                        continue
-                    d, t, n = d[keep], t[keep], n[keep]
-                s = bm25.score_tf(t, n, adl, iv)
-                docs.append(d)
-                scores.append(s)
-                terms.append(np.full(d.size, term, dtype=object))
-            if not docs:
-                continue
-            yield pd.DataFrame(
-                {
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(docs),
-                    "score": np.concatenate(scores),
-                }
-            )
-
-    return gen
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The indices ``starts[i] .. starts[i] + lens[i] - 1``, concatenated."""
+    return np.repeat(starts - (np.cumsum(lens) - lens), lens) + np.arange(
+        int(lens.sum()), dtype=np.int64
+    )
 
 
-def _decode_docs_only():
-    """mapInPandas over posting rows → doc_ids (constant-score / NOT
-    exclusion).  Decodes ONLY the docID delta stream — tf/norm payloads
-    are neither read from parquet (see DOCS_COLS) nor decoded — in one
-    vectorized pass per Arrow batch."""
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            docs = _decode_frame_docs(pdf)
-            if docs.size:
-                yield pd.DataFrame({"doc_id": np.unique(docs)})
-
-    return gen
-
-
-BATCH_ROW_SCHEMA = (
-    "query_id string, doc_id long, score double, conv_id string, turn_idx int, "
-    "conv boolean, k int"
-)
-
-
-#: cap on the dense (rows × n_queries) temporaries inside the batch
-#: kernel: partitions are processed in doc-group-aligned chunks of at
-#: most ~this many matrix cells, so executor memory is bounded by the
-#: chunk, not by (partition rows × batch size)
-KERNEL_MAX_CELLS = 8_000_000
-
-#: floor on rows per kernel chunk — below this the reduceat bookkeeping
-#: costs more than the dense temporaries save.  A module constant (not a
-#: literal in the kernel) so tests can shrink it and actually exercise
-#: the multi-chunk path.
-KERNEL_MIN_ROWS = 4096
-
-
-def _shared_batch_kernel(
-    clause_rows: list[tuple[str, str, float, bool, bool]],
-    cfg_rows: list[tuple[str, int, bool, int, float]],
-    off_bc=None,
-):
-    """Vectorized multi-query scoring over ONE doc_id-clustered pass of
-    the shared (term, doc_id, score) stream.
-
-    The per-query fan-out lives in term-indexed matrices (boost /
-    scoring-membership / must / not, each vocab×Q), applied chunk by
-    chunk: per-doc per-query aggregates are ``np.add.reduceat`` over
-    the doc-sorted rows.  Chunks are cut at doc-group boundaries and
-    bounded to KERNEL_MAX_CELLS dense cells, so a large batch over a
-    heavy-term partition cannot OOM an executor; per-chunk prunes
-    (top-k / best-per-conv) are supersets of the global winners, and
-    the finalize stage reprunes exactly.  Each query's boolean filters
-    (all musts, no nots, ≥1 scoring hit) run here too, so the only
-    remaining exchange carries k·P-ish rows per query.
-
-    ``off_bc`` (broadcast of the conv_offsets arrays) attaches
-    (conv_id, turn_idx) by searchsorted on the dense doc_id space —
-    when None the input rows must already carry those columns (the
-    doc_stats-join fallback for non-dense indexes)."""
-    qids = [r[0] for r in cfg_rows]
-    nq = len(qids)
-    ks = [int(r[1]) for r in cfg_rows]
-    conv_mode = [bool(r[2]) for r in cfg_rows]
-    n_musts = [int(r[3]) for r in cfg_rows]
-    qboosts = [float(r[4]) for r in cfg_rows]
-    qidx = {q: i for i, q in enumerate(qids)}
-    per_term: dict[str, list[tuple[int, float, bool, bool]]] = {}
-    for qid, term, boost, is_must, is_not in clause_rows:
-        per_term.setdefault(term, []).append((qidx[qid], boost, is_must, is_not))
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        batches = list(it)
-        if not batches:
-            return
-        pdf = pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]
-        if not len(pdf):
-            return
-        # doc groups must be contiguous: a doc's term rows can span
-        # Arrow batches within the partition
-        pdf = pdf.sort_values("doc_id", kind="stable")
-        codes, uniq = pd.factorize(pdf["term"].to_numpy())
-        B = np.zeros((len(uniq), nq))
-        S = np.zeros((len(uniq), nq), dtype=np.int32)  # scoring membership
-        M = np.zeros((len(uniq), nq), dtype=np.int32)  # must membership
-        N = np.zeros((len(uniq), nq), dtype=np.int32)  # not membership
-        for i, t in enumerate(uniq):
-            for qi, b, is_must, is_not in per_term.get(t, ()):
-                if is_not:
-                    N[i, qi] = 1
-                else:
-                    B[i, qi] += b
-                    S[i, qi] = 1
-                    if is_must:
-                        M[i, qi] = 1
-        docs = pdf["doc_id"].to_numpy(np.int64)
-        starts = np.concatenate(([0], np.nonzero(docs[1:] != docs[:-1])[0] + 1))
-        tok_scores = pdf["score"].to_numpy(np.float64)
-        if off_bc is not None:
-            conv_ids_arr, offs_arr = off_bc.value
-            conv_all = turn_all = None
-        else:
-            conv_all = pdf["conv_id"].to_numpy()
-            turn_all = pdf["turn_idx"].to_numpy(np.int32)
-        max_rows = max(KERNEL_MIN_ROWS, KERNEL_MAX_CELLS // max(1, nq))
-        n_groups = starts.size
-        total = docs.size
-        g0 = 0
-        while g0 < n_groups:
-            outs = []
-            g1 = int(np.searchsorted(starts, int(starts[g0]) + max_rows, side="left"))
-            if g1 <= g0:
-                g1 = g0 + 1  # one doc group larger than the chunk bound
-            lo = int(starts[g0])
-            hi = int(starts[g1]) if g1 < n_groups else total
-            cstarts = starts[g0:g1] - lo
-            ccodes = codes[lo:hi]
-            score_d = np.add.reduceat(
-                tok_scores[lo:hi, None] * B[ccodes], cstarts, axis=0
-            )
-            hits_d = np.add.reduceat(S[ccodes], cstarts, axis=0)
-            must_d = np.add.reduceat(M[ccodes], cstarts, axis=0)
-            not_d = np.add.reduceat(N[ccodes], cstarts, axis=0)
-            gdoc = docs[starts[g0:g1]]
-            if off_bc is not None:
-                oi = np.searchsorted(offs_arr, gdoc, side="right") - 1
-                gconv = conv_ids_arr[oi]
-                gturn = (gdoc - offs_arr[oi]).astype(np.int32)
-            else:
-                gconv = conv_all[starts[g0:g1]]
-                gturn = turn_all[starts[g0:g1]]
-            for qi, qid in enumerate(qids):
-                ok = (
-                    (not_d[:, qi] == 0)
-                    & (hits_d[:, qi] > 0)
-                    & (must_d[:, qi] == n_musts[qi])
-                )
-                if not ok.any():
-                    continue
-                sc = score_d[ok, qi] * qboosts[qi]
-                d, cv, ti = gdoc[ok], gconv[ok], gturn[ok]
-                order = np.lexsort((d, -sc))  # score desc, doc asc
-                if conv_mode[qi]:
-                    # best-per-conv, then TOP-K CONVS per chunk: a conv in
-                    # the global top-k has fewer than k convs whose global
-                    # max beats its best row's score s; any conv ranked
-                    # above it in THIS chunk has chunk-max > s, hence
-                    # global-max > s — so at most k-1 convs can outrank it
-                    # here and truncation never drops a global winner.
-                    # Without this a heavy-term conversations query emits
-                    # every conv winner per chunk (~#convs rows) into the
-                    # single finalize task that owns the query_id.
-                    cv_sorted = pd.Series(cv[order])
-                    keep = order[~cv_sorted.duplicated().to_numpy()][: ks[qi]]
-                else:
-                    keep = order[: ks[qi]]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "doc_id": d[keep],
-                            "score": sc[keep],
-                            "conv_id": cv[keep],
-                            "turn_idx": ti[keep],
-                            "conv": conv_mode[qi],
-                            "k": np.int32(ks[qi]),
-                        }
-                    )
-                )
-            g0 = g1
-            # yield per chunk: the pruned chunk output streams straight
-            # into Arrow instead of accumulating across chunks (also the
-            # observable chunk boundary tests count)
-            if outs:
-                yield pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
-
-    return gen
-
-
-def _finalize_batch():
-    """One pandas pass per query_id-clustered partition: conversation
-    collapse (best row per conv), exact top-k with the Lucene tie-break
-    (score desc, doc_id asc), and rank assignment.  Partition batches
-    are concatenated first — a query's rows may span Arrow batches."""
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        batches = list(it)
-        if not batches:
-            return
-        pdf = pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]
-        outs = []
-        for _qid, g in pdf.groupby("query_id", sort=False):
-            k = int(g["k"].iat[0])
-            g = g.sort_values(["score", "doc_id"], ascending=[False, True], kind="stable")
-            if bool(g["conv"].iat[0]):
-                g = g.loc[~g["conv_id"].duplicated()]
-            g = g.head(k).copy()
-            g["rank"] = np.arange(1, len(g) + 1, dtype=np.int32)
-            outs.append(g[["query_id", "rank", "doc_id", "conv_id", "turn_idx", "score"]])
-        if outs:
-            yield pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
-
-    return gen
-
-
-def _decode_docs_only_keyed():
-    """Like :func:`_decode_docs_only`, keeping the term key per doc —
-    the shared-scan batch path joins these rows against the clause
-    table like any scored row (score 0)."""
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            terms, docs = [], []
-            for term, sub in pdf.groupby("term", sort=False):
-                d = _decode_frame_docs(sub)
-                if d.size:
-                    docs.append(d)
-                    terms.append(np.full(d.size, term, dtype=object))
-            if docs:
-                yield pd.DataFrame(
-                    {"term": np.concatenate(terms), "doc_id": np.concatenate(docs)}
-                )
-
-    return gen
-
-
-def _phrase_score_fn(
-    terms: tuple[str, ...],
-    idf_sum: float,
-    avgdl: float,
-    simple: bool,
-    slop: int = 0,
-    order_tolerant: bool = False,
-):
-    """mapInPandas over candidate (doc_id, text) → (doc_id, score).
-
-    Position-less-index fallback.  slop=0: exact Lucene PhraseQuery
-    adjacency; slop>0: the same exact-order greedy-chain semantics as
-    the positions path (see _phrase_match_positions); order_tolerant:
-    the unordered minimal-window semantics of the same flag there.
-    idf = sum of constituent term idfs; doc norm re-derived from the
-    text (identical to the indexed norm byte by construction).
-    """
-
-    from emailindexer_spark.functions.tokenizer import tokenize_series
-
-    m = len(terms)
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            toks = tokenize_series(pdf["text"], simple=simple)
-            n = toks.str.len().to_numpy(dtype=np.int64)
-            if n.sum() == 0:
-                continue
-            rows = np.repeat(np.arange(len(pdf), dtype=np.int64), n)
-            starts = np.concatenate(([0], np.cumsum(n[:-1])))
-            pos = np.arange(int(n.sum()), dtype=np.int64) - np.repeat(starts, n)
-            flat = pd.DataFrame(
-                {"row": rows, "pos": pos, "term": np.concatenate([t for t in toks.to_numpy() if len(t)])}
-            )
-            if slop == 0:
-                # adjacency via successive (row, pos) merges — vectorized
-                cur = flat.loc[flat["term"] == terms[0], ["row", "pos"]]
-                for i in range(1, m):
-                    nxt = flat.loc[flat["term"] == terms[i], ["row", "pos"]].copy()
-                    nxt["pos"] -= i
-                    cur = cur.merge(nxt, on=["row", "pos"])
-                    if cur.empty:
-                        break
-            elif order_tolerant:
-                frames = []
-                for i, t in enumerate(terms):
-                    fi = flat.loc[flat["term"] == t, ["row", "pos"]].copy()
-                    fi["slot"] = np.int64(i)
-                    frames.append(fi)
-                ev = pd.concat(frames, ignore_index=True)
-                nslots = ev.groupby("row")["slot"].nunique()
-                ev = ev[ev["row"].map(nslots).eq(m)]
-                if ev.empty:
-                    continue
-                ev = ev.sort_values(["row", "pos"], kind="stable")
-                rr = ev["row"].to_numpy(np.int64)
-                pp = ev["pos"].to_numpy(np.int64)
-                ss = ev["slot"].to_numpy(np.int64)
-                bnd = np.concatenate(
-                    ([0], np.nonzero(rr[1:] != rr[:-1])[0] + 1, [rr.size])
-                )
-                od, of = [], []
-                for s_, e_ in zip(bnd[:-1], bnd[1:]):
-                    fq = _count_unordered_windows(pp[s_:e_], ss[s_:e_], m, slop)
-                    if fq:
-                        od.append(int(rr[s_]))
-                        of.append(fq)
-                if not od:
-                    continue
-                ridx = np.asarray(od, dtype=np.int64)
-                f = np.asarray(of, dtype=np.float64)
-                dl = bm25.LENGTH_TABLE[encode_lengths(n[ridx])].astype(np.float64)
-                sc = idf_sum * f / (f + bm25.K1 * (1 - bm25.B + bm25.B * dl / avgdl))
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"].to_numpy()[ridx], "score": sc}
-                )
-                continue
-            else:
-                cur = flat.loc[flat["term"] == terms[0], ["row", "pos"]].rename(
-                    columns={"pos": "e"}
-                )
-                cur["p0"] = cur["e"]
-                for i in range(1, m):
-                    if cur.empty:
-                        break
-                    nxt = flat.loc[flat["term"] == terms[i], ["row", "pos"]].sort_values(
-                        "pos", kind="stable"
-                    )
-                    cur = pd.merge_asof(
-                        cur.sort_values("e", kind="stable"),
-                        nxt,
-                        left_on="e",
-                        right_on="pos",
-                        by="row",
-                        direction="forward",
-                        allow_exact_matches=False,
-                    )
-                    cur = cur.loc[
-                        cur["pos"].notna() & (cur["pos"] <= cur["p0"] + i + slop)
-                    ]
-                    cur = cur.drop(columns=["e"]).rename(columns={"pos": "e"})
-                    cur = cur.assign(e=cur["e"].astype(np.int64))
-            if cur.empty:
-                continue
-            freq = cur.groupby("row").size()
-            ridx = freq.index.to_numpy()
-            f = freq.to_numpy(dtype=np.float64)
-            dl = bm25.LENGTH_TABLE[encode_lengths(n[ridx])].astype(np.float64)
-            sc = idf_sum * f / (f + bm25.K1 * (1 - bm25.B + bm25.B * dl / avgdl))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy()[ridx], "score": sc}
-            )
-
-    return gen
-
-
-POS_STREAM_SCHEMA = "doc_id long, slot int, tf int, pos binary, norm int"
-
-
-def _decode_positions_stream(phrase_terms: tuple[str, ...], cand_docs=None):
-    """mapInPandas over posting rows (with b_pos) → ONE compact row per
-    (doc, slot): (doc_id, slot, tf, pos_bytes, norm).
-
-    The per-doc position payload stays VARBYTE-ENCODED through the
-    shuffle (a block's b_pos is split at doc boundaries by scanning the
-    continuation bits — no decode map-side), so shuffle volume is
-    df-rows with compressed payloads, not exploded positions.  Norm
-    rides on slot-0 rows only.  Repeated phrase terms ("x x") emit the
-    same postings under each of their slots — Lucene PhraseWeight
-    semantics fall out.
-
-    ``cand_docs`` (a broadcast of the RAREST term's sorted doc ids)
-    filters every term's stream MAP-SIDE before the shuffle — Lucene's
-    lead-with-the-rarest-term iteration: a doc missing any phrase term
-    can never match, so the heavy terms' payloads for non-candidates
-    never leave the scan task."""
-    slot_map: dict[str, list[int]] = {}
-    for i, t in enumerate(phrase_terms):
-        slot_map.setdefault(t, []).append(i)
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cand = cand_docs.value if cand_docs is not None else None
-        for pdf in it:
-            docs_out, slot_out, tf_out, pos_out, norm_out = [], [], [], [], []
-            for term, sub in pdf.groupby("term", sort=False):
-                slots = slot_map.get(term)
-                if not slots:
-                    continue
-                # one frame pass over every block of this term's rows;
-                # the concatenated pos stream is split at doc boundaries
-                # by ONE continuation-bit scan (value ends), indexed by
-                # the per-doc tf cumsum — no decode of the positions
-                d, t, n = _decode_frame_postings(sub)
-                raw = b"".join(b for row in sub["b_pos"] for b in row)
-                rb = np.frombuffer(raw, dtype=np.uint8)
-                ends = np.nonzero((rb & 0x80) == 0)[0] + 1  # byte end per value
-                byte_ends = ends[np.cumsum(t) - 1]  # byte end per doc
-                byte_starts = np.concatenate(([0], byte_ends[:-1]))
-                if cand is not None:
-                    # sorted-array membership: keep candidate docs only
-                    keep = _sorted_member_mask(cand, d)
-                    if not keep.any():
-                        continue
-                    sel = np.nonzero(keep)[0]
-                    bufs = [raw[byte_starts[x]:byte_ends[x]] for x in sel]
-                    d, t, n = d[sel], t[sel], n[sel]
-                else:
-                    bufs = [raw[a:z] for a, z in zip(byte_starts, byte_ends)]
-                for s in slots:
-                    docs_out.append(d)
-                    slot_out.append(np.full(d.size, s, dtype=np.int32))
-                    tf_out.append(t)
-                    pos_out.extend(bufs)
-                    norm_out.append(
-                        n if s == 0 else np.zeros(d.size, dtype=np.int64)
-                    )
-            if docs_out:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(docs_out),
-                        "slot": np.concatenate(slot_out),
-                        "tf": np.concatenate(tf_out).astype("int32"),
-                        "pos": pos_out,
-                        "norm": np.concatenate(norm_out),
-                    }
-                )
-
-    return gen
+def _kept_blocks(col, keep: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`_arrow_blocks` of ``col`` restricted to the blocks ``keep``
+    marks (all of them for None)."""
+    buf, lens = _arrow_blocks(col)
+    if keep is None:
+        return buf, lens
+    return buf[_ranges((np.cumsum(lens) - lens)[keep], lens[keep])], lens[keep]
 
 
 def _count_unordered_windows(pos: np.ndarray, slot: np.ndarray, m: int, slop: int) -> int:
@@ -694,139 +237,6 @@ def _count_unordered_windows(pos: np.ndarray, slot: np.ndarray, m: int, slop: in
             covered -= 1
             lo += 1
     return out
-
-
-def _phrase_match_positions(
-    m: int, idf_sum: float, avgdl: float, slop: int = 0, order_tolerant: bool = False
-):
-    """mapInPandas over doc_id-partitioned (doc, slot, tf, pos_bytes)
-    rows → scores.
-
-    Per slot, the partition's payloads are decoded in ONE vectorized
-    varbyte pass (concatenated buffers + per-doc tf counts).
-
-    * ``slop == 0`` — exact Lucene PhraseQuery adjacency: m-1 vectorized
-      merges on (doc_id, pos - slot); phrase tf = matches per doc.
-    * ``slop > 0`` — exact-order sloppy phrase (documented semantics,
-      plans/parser.py Phrase.slop): greedily chain each start position
-      p_0 to the SMALLEST next-slot position > current (a per-doc
-      ``merge_asof`` forward search — greedy-minimal completion is
-      sufficient: taking the smallest feasible p_i keeps every later
-      choice open), pruning when p_i > p_0 + i + slop; freq = surviving
-      start positions per doc.
-    * ``slop > 0, order_tolerant=True`` — opt-in unordered semantics
-      (SearchEngine(slop_order_tolerant=True)): terms may appear in ANY
-      order; freq = minimal covering windows with slack ≤ slop
-      (:func:`_count_unordered_windows`), parity-tested against the
-      pure-Python oracle's independent implementation.  Not the gated
-      default because no SQL oracle can verify it (SURVEY §2.9).
-
-    Score is the standard BM25 partial with the SUMMED constituent idf
-    (Lucene PhraseWeight).  The whole partition is concatenated first: a
-    doc's rows may span Arrow batches."""
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        batches = list(it)
-        if not batches:
-            return
-        pdf = pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]
-
-        def slot_frame(i: int, shift: bool) -> pd.DataFrame:
-            sub = pdf.loc[pdf["slot"] == i]
-            if sub.empty:
-                return pd.DataFrame(
-                    {
-                        "doc_id": np.array([], dtype=np.int64),
-                        "pos": np.array([], dtype=np.int64),
-                    }
-                )
-            tfs = sub["tf"].to_numpy(np.int64)
-            pos = decode_positions(b"".join(sub["pos"]), tfs)
-            out = pd.DataFrame(
-                {
-                    "doc_id": np.repeat(sub["doc_id"].to_numpy(np.int64), tfs),
-                    "pos": pos - i if shift else pos,
-                }
-            )
-            if i == 0:
-                out["norm"] = np.repeat(sub["norm"].to_numpy(np.int64), tfs)
-            return out
-
-        if slop == 0:
-            cur = slot_frame(0, shift=True)
-            for i in range(1, m):
-                if cur.empty:
-                    return
-                cur = cur.merge(slot_frame(i, shift=True), on=["doc_id", "pos"])
-            if cur.empty:
-                return
-            g = cur.groupby("doc_id").agg(freq=("pos", "size"), norm=("norm", "first"))
-        elif order_tolerant:
-            frames = []
-            norms = None
-            for i in range(m):
-                fi = slot_frame(i, shift=False)
-                if fi.empty:
-                    return  # a missing slot term matches nothing
-                if i == 0:
-                    norms = fi[["doc_id", "norm"]].drop_duplicates("doc_id")
-                    fi = fi.drop(columns=["norm"])
-                fi["slot"] = np.int64(i)
-                frames.append(fi)
-            ev = pd.concat(frames, ignore_index=True)
-            # candidate docs must hold ALL slots — prune before the sweep
-            nslots = ev.groupby("doc_id")["slot"].nunique()
-            ev = ev[ev["doc_id"].map(nslots).eq(m)]
-            if ev.empty:
-                return
-            ev = ev.sort_values(["doc_id", "pos"], kind="stable")
-            docs = ev["doc_id"].to_numpy(np.int64)
-            pos = ev["pos"].to_numpy(np.int64)
-            slots = ev["slot"].to_numpy(np.int64)
-            bounds = np.concatenate(
-                ([0], np.nonzero(docs[1:] != docs[:-1])[0] + 1, [docs.size])
-            )
-            out_docs, out_freq = [], []
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                fq = _count_unordered_windows(pos[s:e], slots[s:e], m, slop)
-                if fq:
-                    out_docs.append(int(docs[s]))
-                    out_freq.append(fq)
-            if not out_docs:
-                return
-            g = pd.DataFrame({"doc_id": out_docs, "freq": out_freq}).merge(
-                norms, on="doc_id"
-            ).set_index("doc_id")
-        else:
-            cur = slot_frame(0, shift=False).rename(columns={"pos": "e"})
-            cur["p0"] = cur["e"]
-            for i in range(1, m):
-                if cur.empty:
-                    return
-                nxt = slot_frame(i, shift=False).sort_values("pos", kind="stable")
-                cur = pd.merge_asof(
-                    cur.sort_values("e", kind="stable"),
-                    nxt,
-                    left_on="e",
-                    right_on="pos",
-                    by="doc_id",
-                    direction="forward",
-                    allow_exact_matches=False,
-                )
-                cur = cur.loc[cur["pos"].notna() & (cur["pos"] <= cur["p0"] + i + slop)]
-                cur = cur.drop(columns=["e"]).rename(columns={"pos": "e"})
-                # a missed asof match makes the column float64 — restore
-                # int64 so the next merge_asof keys are dtype-compatible
-                cur = cur.assign(e=cur["e"].astype(np.int64))
-            if cur.empty:
-                return
-            g = cur.groupby("doc_id").agg(freq=("p0", "size"), norm=("norm", "first"))
-        f = g["freq"].to_numpy(np.float64)
-        dl = bm25.LENGTH_TABLE[g["norm"].to_numpy(np.int64)].astype(np.float64)
-        sc = idf_sum * f / (f + bm25.K1 * (1 - bm25.B + bm25.B * dl / avgdl))
-        yield pd.DataFrame({"doc_id": g.index.to_numpy(), "score": sc})
-
-    return gen
 
 
 def _codes_matrix(strs, lens: np.ndarray) -> np.ndarray:
@@ -885,8 +295,9 @@ def _levenshtein_batch(cands, text: str, transpositions: bool = False) -> np.nda
 
 def _flatten_shoulds(ast: Node) -> Node:
     """Inline unit-boost pure-SHOULD child Bools into their parent (one
-    level — field resolution creates at most one).  Score-preserving:
-    BooleanQuery sums SHOULD clause scores either way."""
+    level; :meth:`SearchEngine._rewrite` applies it bottom-up).
+    Score-preserving: BooleanQuery sums SHOULD clause scores either
+    way."""
     if not isinstance(ast, Bool):
         return ast
     out: list[tuple[str, Node]] = []
@@ -958,37 +369,576 @@ def _load_sorted_postings(path: str) -> tuple[np.ndarray, object]:
 
 
 def _term_slices(
-    files: list[tuple[np.ndarray, object]], terms: list[str], by_term: bool = False
-) -> list[tuple[str | None, object]]:
+    files: list[tuple[np.ndarray, object]], terms: list[str]
+) -> list[tuple[str, object]]:
     """The rows of ``terms`` (sorted) in each term-sorted file, in file
-    order, as zero-copy Arrow slices: ``(term, slice)`` per term and file
-    when ``by_term``, else ``(None, slice)`` with query terms adjacent in
-    a file (a prefix expansion's, say) sharing one slice."""
+    order, as zero-copy Arrow slices: ``(term, slice)`` per term and
+    file."""
     q = np.array(terms, dtype=object)
     out = []
     for tcol, table in files:
         lo = np.searchsorted(tcol, q, "left")
         hi = np.searchsorted(tcol, q, "right")
-        hit = np.flatnonzero(hi > lo)
-        if not hit.size:
-            continue
-        if by_term:
-            out += [(terms[i], table.slice(int(lo[i]), int(hi[i] - lo[i]))) for i in hit]
-            continue
-        lo, hi = lo[hit], hi[hit]
-        cut = np.flatnonzero(lo[1:] != hi[:-1]) + 1
-        for a, z in zip(lo[np.r_[0, cut]], hi[np.r_[cut - 1, len(hi) - 1]]):
-            out.append((None, table.slice(int(a), int(z - a))))
+        out += [
+            (terms[i], table.slice(int(lo[i]), int(hi[i] - lo[i])))
+            for i in np.flatnonzero(hi > lo)
+        ]
     return out
 
 
-#: Arrow types of the postings columns the driver-local tier reads (an
-#: empty selection's table)
-_POSTINGS_TYPES = {
-    "term": pa.string(),
-    "b_first": pa.list_(pa.int64()),
-    **{c: pa.list_(pa.binary()) for c in ("b_docs", "b_tfs", "b_norms", "b_pos")},
-}
+# ---------------------------------------------------------------- the evaluator
+
+
+@dataclass
+class _Terms(Node):
+    """A multi-term leaf rewritten on the driver to the vocabulary keys
+    it matches (sorted).  Without ``weights`` it scores constant
+    (prefix, wildcard, range): a doc matching any key scores ``boost``.
+    With them it is fuzzy's blended rewrite: key i scores BM25 at the
+    blended ``idf`` times ``weights[i]``, summed per doc, times
+    ``boost``."""
+
+    keys: tuple[str, ...] = ()
+    weights: tuple[float, ...] | None = None
+    idf: float = 0.0
+
+
+def _is_flat_terms(node: Bool) -> bool:
+    return bool(node.clauses) and all(isinstance(c, Term) for _, c in node.clauses)
+
+
+def _leaves(node: Node) -> Iterator[Node]:
+    if isinstance(node, Bool):
+        for _, c in node.clauses:
+            yield from _leaves(c)
+    else:
+        yield node
+
+
+def _term_levels(node: Node, positions: bool, out: dict[str, int] | None = None) -> dict[str, int]:
+    """{key: decode level} of every key ``node`` reads: 0 doc ids only
+    (constant-score keys, MUST_NOT terms of a flat Bool, phrase terms
+    without positions), 1 with tf and norm, 2 with positions too."""
+    out = {} if out is None else out
+
+    def need(t: str, level: int) -> None:
+        out[t] = max(out.get(t, 0), level)
+
+    if isinstance(node, Bool):
+        is_flat = _is_flat_terms(node)
+        for o, c in node.clauses:
+            if is_flat:
+                need(c.text, 0 if o == MUST_NOT else 1)
+            else:
+                _term_levels(c, positions, out)
+    elif isinstance(node, Term):
+        need(node.text, 1)
+    elif isinstance(node, Phrase):
+        for t in node.terms:
+            need(t, 2 if positions else 0)
+    elif isinstance(node, _Terms):
+        for t in node.keys:
+            need(t, 0 if node.weights is None else 1)
+    return out
+
+
+class _Postings(NamedTuple):
+    """Decoded postings of one key (or of a constant-score key set) in a
+    doc range: ``tfs`` and ``norms`` from level 1 on, and at level 2
+    ``pos`` = (the kept blocks' position bytes, each posting's byte start
+    and end in them)."""
+
+    level: int
+    docs: np.ndarray
+    tfs: np.ndarray
+    norms: np.ndarray
+    pos: tuple[np.ndarray, np.ndarray, np.ndarray] | None
+
+    def positions(self, sel: np.ndarray) -> np.ndarray:
+        """The positions of postings ``sel`` (ascending), concatenated."""
+        buf, start, end = self.pos
+        return decode_positions(
+            buf[_ranges(start[sel], end[sel] - start[sel])].tobytes(), self.tfs[sel]
+        )
+
+
+def _no_postings(level: int) -> _Postings:
+    z = np.empty(0, np.int64)
+    return _Postings(level, z, z, z, (np.empty(0, np.uint8), z, z) if level == 2 else None)
+
+
+def _no_hits() -> tuple[np.ndarray, np.ndarray]:
+    return np.empty(0, np.int64), np.empty(0, np.float64)
+
+
+def _decode_rows(rows, level: int, lo: int, hi: int, one_term: bool = True) -> _Postings:
+    """Decode Arrow posting ``rows`` at ``level``, keeping the docs in
+    [lo, hi): rows whose [first_doc, last_doc] misses the range are
+    skipped, and of the others only the blocks that overlap it are
+    decoded.  With ``one_term`` the rows are one term's, and its docs
+    come out ascending (rows taken in first_doc order); otherwise (a
+    constant-score key set) in row order.
+
+    Shards choose rows by their doc ranges, so a wrong range would drop
+    hits without a sound: a decoded doc outside its row's
+    [first_doc, last_doc], or not above the previous doc of its row, and
+    with ``one_term`` two rows whose ranges overlap, raise ValueError
+    naming the term and the row."""
+    fd = rows.column("first_doc").to_numpy()
+    ld = rows.column("last_doc").to_numpy()
+    if rows.num_rows != 1:
+        meets = (fd < hi) & (ld >= lo)
+        if not meets.all():
+            rows, fd, ld = rows.filter(pa.array(meets)), fd[meets], ld[meets]
+    elif fd[0] >= hi or ld[0] < lo:
+        return _no_postings(level)
+    n = rows.num_rows
+    if not n:
+        return _no_postings(level)
+    firsts = _arrow_firsts(rows.column("b_first"))
+    clipped = lo > int(fd.min()) or hi <= int(ld.max())
+    keep = brow = None
+    if n > 1 or clipped:
+        nblk = _arrow_list_lens(rows.column("b_first")) if n > 1 else np.array([firsts.size])
+        brow = np.repeat(np.arange(n), nblk)
+    if clipped:
+        # block j holds docs [firsts[j], firsts[j + 1]) within its row
+        nxt = np.append(firsts[1:], 0)
+        nxt[np.cumsum(nblk) - 1] = np.iinfo(np.int64).max
+        keep = (firsts < hi) & (nxt > lo)
+        if keep.all():
+            keep = None
+        else:
+            firsts, brow = firsts[keep], brow[keep]
+    dblocks = _kept_blocks(rows.column("b_docs"), keep)
+    if level == 0:
+        nb = _doc_counts(*dblocks) if firsts.size else np.empty(0, np.int64)
+        docs = _segmented_delta_docs(dblocks[0], firsts, nb) if firsts.size else nb
+        tfs = norms = np.empty(0, np.int64)
+    else:
+        nblocks = _kept_blocks(rows.column("b_norms"), keep)
+        docs, tfs, norms = _decode_postings(
+            firsts, dblocks, _kept_blocks(rows.column("b_tfs"), keep), nblocks
+        )
+        nb = nblocks[1]
+    order = None
+    if brow is None:  # one row, whole
+        out = docs.size and (docs[0] < fd[0] or docs[-1] > ld[0])
+        bad = {0} if out or bool((docs[1:] <= docs[:-1]).any()) else set()
+    else:
+        cnt = np.bincount(brow, weights=nb, minlength=n).astype(np.int64)
+        start = np.cumsum(cnt) - cnt
+        has = np.flatnonzero(cnt > 0)
+        down = docs[1:] <= docs[:-1]
+        cut = start[has]
+        down[cut[cut > 0] - 1] = False  # each row ascends on its own
+        out = (docs[cut] < fd[has]) | (docs[cut + cnt[has] - 1] > ld[has])
+        bad = set(has[out].tolist())
+        if down.any():
+            bad.add(int(np.searchsorted(start, int(np.argmax(down)) + 1, "right")) - 1)
+        if one_term and n > 1:
+            order = np.argsort(fd, kind="stable")
+            bad.update(order[1:][ld[order[:-1]] >= fd[order[1:]]].tolist())
+            if bool((order[1:] > order[:-1]).all()):
+                order = None
+    if bad:
+        r = min(bad)
+        raise ValueError(
+            f"postings row of term {rows.column('term')[r].as_py()!r} (split_id "
+            f"{rows.column('split_id')[r].as_py()}) holds docs outside its range "
+            f"[{fd[r]}, {ld[r]}] or out of order"
+        )
+    pos = None
+    if level == 2:
+        pbuf, _ = _kept_blocks(rows.column("b_pos"), keep)
+        pend = (np.flatnonzero((pbuf & 0x80) == 0) + 1)[np.cumsum(tfs) - 1]
+        pos = (pbuf, np.concatenate(([0], pend[:-1])), pend)
+    sel = None
+    if order is not None:  # the rows' postings in first_doc order
+        sel = _ranges(start[order], cnt[order])
+    if clipped:
+        inr = (docs >= lo) & (docs < hi)
+        if not inr.all():
+            sel = np.flatnonzero(inr) if sel is None else sel[inr[sel]]
+    if sel is not None:
+        docs = docs[sel]
+        if level:
+            tfs, norms = tfs[sel], norms[sel]
+        if level == 2:
+            pos = (pos[0], pos[1][sel], pos[2][sel])
+    return _Postings(level, docs, tfs, norms, pos)
+
+
+def _phrase_freqs(
+    slots: list[tuple[np.ndarray, np.ndarray]], slop: int, unordered: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """Phrase matches per candidate doc.  ``slots[i]`` holds term i's
+    occurrences as (candidate rank, position) arrays, rank-major and
+    ascending.  Returns (ranks with a match, ascending; their freq).
+
+    * Exact order (the default; plans/parser.py Phrase.slop): from each
+      start position p0 of term 0, chain to the SMALLEST position of
+      term i past the previous one, pruning at p0 + i + slop; freq =
+      starts that complete.  One forward searchsorted per term over
+      (rank << shift | pos) keys; slop 0 is exact Lucene adjacency.
+    * ``unordered`` (SearchEngine(slop_order_tolerant=True)): freq =
+      minimal windows covering every term with slack <= slop
+      (:func:`_count_unordered_windows`), per candidate."""
+    m = len(slots)
+    if any(not p.size for _, p in slots):
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    if unordered:
+        r = np.concatenate([r for r, _ in slots])
+        p = np.concatenate([p for _, p in slots])
+        s = np.repeat(np.arange(m), [r.size for r, _ in slots])
+        o = np.lexsort((s, p, r))
+        r, p, s = r[o], p[o], s[o]
+        bounds = np.concatenate(([0], np.flatnonzero(r[1:] != r[:-1]) + 1, [r.size]))
+        got = [
+            (int(r[a]), f)
+            for a, z in zip(bounds[:-1], bounds[1:])
+            if (f := _count_unordered_windows(p[a:z], s[a:z], m, slop))
+        ]
+        return np.array([g[0] for g in got], np.int64), np.array([g[1] for g in got], np.int64)
+    shift = int(max(int(p.max()) for _, p in slots) + m + slop + 1).bit_length()
+    if int(max(int(r[-1]) for r, _ in slots) + 1).bit_length() + shift > 62:
+        raise ValueError("phrase position keys overflow int64")
+    keys = [(r << shift) | p for r, p in slots]
+    start = e = keys[0]
+    for i in range(1, m):
+        k = keys[i]
+        j = np.searchsorted(k, e, side="right")
+        nxt = k[np.minimum(j, k.size - 1)]
+        ok = (j < k.size) & (nxt <= start + i + slop)
+        start, e = start[ok], nxt[ok]
+        if not start.size:
+            return np.empty(0, np.int64), np.empty(0, np.int64)
+    return np.unique(start >> shift, return_counts=True)
+
+
+def _doc_texts(files: list[str], docs: np.ndarray) -> np.ndarray:
+    """The ``text`` of ``docs`` (sorted, distinct) from the doc_index
+    ``files``, in doc order: a pyarrow scan whose doc_id filter prunes
+    row groups by their min/max."""
+    import pyarrow.dataset as ds
+
+    t = ds.dataset(files, format="parquet").to_table(
+        columns=["doc_id", "text"], filter=ds.field("doc_id").isin(pa.array(docs))
+    )
+    got = t.column("doc_id").to_numpy()
+    if got.size != docs.size:
+        raise ValueError(f"doc_index holds {got.size} rows for {docs.size} candidate docs")
+    return t.column("text").to_numpy(zero_copy_only=False)[np.argsort(got, kind="stable")]
+
+
+class QueryEvaluator:
+    """The one BM25 evaluator of every query shape, on both tiers:
+    (ast, term → Arrow posting rows, idf/avgdl maps, doc range) →
+    (sorted docs, scores).
+
+    ``rows`` maps a key to its posting rows (a key without rows has no
+    postings in the range), ``levels`` a key to the decode level the ast
+    needs (:func:`_term_levels`); a Term or Phrase key missing from
+    ``idf_map`` has no postings and matches nothing.  Only docs in
+    [lo, hi) are scored.  Bools follow BooleanQuery: MUST clauses
+    intersect, SHOULD clauses add, MUST_NOT clauses subtract, and the
+    boost multiplies; a flat Bool of terms takes one pass over every
+    term's postings.  ``doc_text`` (sorted docs → their text) serves
+    phrases on an index without positions, re-tokenized with
+    ``simple``.  ``cache`` keeps each key's decode for further calls
+    over the same range (the members of a search_many batch)."""
+
+    def __init__(
+        self,
+        rows: dict[str, object],
+        levels: dict[str, int],
+        idf_map: dict[str, float],
+        avgdl_map: dict[str, float],
+        lo: int,
+        hi: int,
+        positions: bool,
+        order_tolerant: bool = False,
+        doc_text=None,
+        simple: bool = False,
+        cache: dict[str, _Postings] | None = None,
+    ):
+        self.rows, self.levels = rows, levels
+        self.idf, self.avgdl = idf_map, avgdl_map
+        self.lo, self.hi = lo, hi
+        self.positions, self.order_tolerant = positions, order_tolerant
+        self.doc_text, self.simple = doc_text, simple
+        self.cache = {} if cache is None else cache
+
+    def __call__(self, ast: Node) -> tuple[np.ndarray, np.ndarray]:
+        if isinstance(ast, Bool):
+            return self._bool(ast)
+        if isinstance(ast, Term):
+            if ast.text not in self.idf:
+                return _no_hits()
+            p = self._postings(ast.text)
+            return p.docs, self._bm25(ast.text, p) * ast.boost
+        if isinstance(ast, Phrase):
+            return self._phrase(ast)
+        if isinstance(ast, _Terms):
+            return self._terms(ast)
+        raise TypeError(type(ast))
+
+    def _postings(self, t: str) -> _Postings:
+        level = self.levels.get(t, 0)
+        got = self.cache.get(t)
+        if got is None or got.level < level:
+            rows = self.rows.get(t)
+            got = (
+                _no_postings(level)
+                if rows is None
+                else _decode_rows(rows, level, self.lo, self.hi)
+            )
+            self.cache[t] = got
+        return got
+
+    def _bm25(self, t: str, p: _Postings) -> np.ndarray:
+        return bm25.score_tf(p.tfs, p.norms, self.avgdl[t], self.idf[t])
+
+    def _bool(self, node: Bool) -> tuple[np.ndarray, np.ndarray]:
+        if _is_flat_terms(node):
+            return self._flat(node)
+        if len(node.clauses) == 1 and node.clauses[0][0] == SHOULD and node.boost == 1.0:
+            return self(node.clauses[0][1])
+        musts, shoulds, nots = [], [], []
+        for occur, child in node.clauses:
+            docs, scores = self(child)
+            if occur == MUST:
+                if not docs.size:
+                    return _no_hits()  # an unmatched MUST matches nothing
+                musts.append((docs, scores))
+            elif occur == SHOULD:
+                shoulds.append((docs, scores))
+            else:
+                nots.append(docs)
+        if musts:
+            docs, total = musts[0]
+            for d, s in musts[1:]:
+                hit = _sorted_member_mask(d, docs)
+                docs = docs[hit]
+                total = total[hit] + s[np.searchsorted(d, docs)]
+            extra = np.zeros(docs.size)
+            for d, s in shoulds:
+                hit = _sorted_member_mask(d, docs)
+                extra[hit] += s[np.searchsorted(d, docs[hit])]
+            total = total + extra
+        elif shoulds:
+            docs, inv = np.unique(np.concatenate([d for d, _ in shoulds]), return_inverse=True)
+            total = np.zeros(docs.size)
+            np.add.at(total, inv, np.concatenate([s for _, s in shoulds]))
+        else:
+            return _no_hits()
+        for d in nots:
+            keep = ~_sorted_member_mask(d, docs)
+            docs, total = docs[keep], total[keep]
+        if node.boost != 1.0:
+            total = total * node.boost
+        return docs, total
+
+    def _flat(self, node: Bool) -> tuple[np.ndarray, np.ndarray]:
+        """A Bool of terms in one pass: every scoring term's postings
+        concatenated (terms sorted, each scaled by its summed clause
+        boosts) and summed per doc; MUST terms counted per doc, MUST_NOT
+        terms decoded to doc ids only."""
+        boosts: dict[str, float] = {}
+        musts, nots = set(), set()
+        for occur, c in node.clauses:
+            if occur == MUST:
+                if c.text not in self.idf:
+                    return _no_hits()
+                musts.add(c.text)
+            elif occur == MUST_NOT:
+                nots.add(c.text)
+            if occur != MUST_NOT and c.text in self.idf:
+                boosts[c.text] = boosts.get(c.text, 0.0) + c.boost
+        if not boosts:
+            return _no_hits()
+        terms = sorted(boosts)
+        ps = [self._postings(t) for t in terms]
+        uniq, inv = np.unique(np.concatenate([p.docs for p in ps]), return_inverse=True)
+        total = np.zeros(uniq.size, np.float64)
+        np.add.at(
+            total, inv, np.concatenate([self._bm25(t, p) * boosts[t] for t, p in zip(terms, ps)])
+        )
+        keep = np.ones(uniq.size, dtype=bool)
+        if musts:
+            nmust = np.zeros(uniq.size, np.int64)
+            for t in musts:
+                nmust[np.searchsorted(uniq, self._postings(t).docs)] += 1
+            keep &= nmust == len(musts)
+        excl = [self._postings(t).docs for t in nots if t in self.idf]
+        if excl:
+            keep &= ~_sorted_member_mask(np.unique(np.concatenate(excl)), uniq)
+        if node.boost != 1.0:
+            total = total * node.boost
+        return uniq[keep], total[keep]
+
+    def _terms(self, node: _Terms) -> tuple[np.ndarray, np.ndarray]:
+        keys = [t for t in node.keys if t in self.rows or t in self.cache]
+        if not keys:
+            return _no_hits()
+        if node.weights is None:
+            # constant score: the key set's rows decode together
+            tables = [self.rows[t] for t in keys if t in self.rows]
+            got = [self.cache[t].docs for t in keys if t not in self.rows]
+            if tables:
+                rows = tables[0] if len(tables) == 1 else pa.concat_tables(tables)
+                got.append(_decode_rows(rows, 0, self.lo, self.hi, one_term=False).docs)
+            docs = np.unique(np.concatenate(got))
+            return docs, np.full(docs.size, 1.0 * node.boost)
+        weight = dict(zip(node.keys, node.weights))
+        ps = [self._postings(t) for t in keys]
+        uniq, inv = np.unique(np.concatenate([p.docs for p in ps]), return_inverse=True)
+        total = np.zeros(uniq.size, np.float64)
+        np.add.at(
+            total,
+            inv,
+            np.concatenate(
+                [
+                    bm25.score_tf(p.tfs, p.norms, self.avgdl[t], node.idf) * weight[t]
+                    for t, p in zip(keys, ps)
+                ]
+            ),
+        )
+        if node.boost != 1.0:
+            total = total * node.boost
+        return uniq, total
+
+    def _phrase(self, node: Phrase) -> tuple[np.ndarray, np.ndarray]:
+        """Candidates hold every term; their occurrences come from the
+        position payloads, or (an index without positions) from their
+        re-tokenized ``doc_index`` text.  Score: BM25 of the phrase freq
+        with the SUMMED idf of the terms by position (Lucene
+        PhraseWeight: "x x" counts x twice)."""
+        if any(t not in self.idf for t in node.terms):
+            return _no_hits()
+        ps = {t: self._postings(t) for t in dict.fromkeys(node.terms)}
+        cand = None
+        for p in ps.values():
+            cand = p.docs if cand is None else cand[_sorted_member_mask(p.docs, cand)]
+            if not cand.size:
+                return _no_hits()
+        if self.positions:
+            slots = {}
+            for t, p in ps.items():
+                sel = np.flatnonzero(_sorted_member_mask(cand, p.docs))
+                slots[t] = (np.repeat(np.arange(cand.size), p.tfs[sel]), p.positions(sel))
+            p0 = ps[node.terms[0]]
+            norms = p0.norms[_sorted_member_mask(cand, p0.docs)]
+        else:
+            toks = tokenize_series(pd.Series(self.doc_text(cand), dtype=object), simple=self.simple)
+            n = toks.str.len().to_numpy(np.int64)
+            flat = np.array([w for ws in toks for w in ws], dtype=object)
+            rank = np.repeat(np.arange(cand.size), n)
+            pos = np.arange(flat.size, dtype=np.int64) - np.repeat(np.cumsum(n) - n, n)
+            slots = {t: (rank[flat == t], pos[flat == t]) for t in ps}
+            norms = encode_lengths(n)
+        rank, freq = _phrase_freqs(
+            [slots[t] for t in node.terms], node.slop, self.order_tolerant and node.slop > 0
+        )
+        idf_sum = sum(self.idf[t] for t in node.terms)
+        scores = bm25.score_tf(freq, norms[rank], self.avgdl[node.terms[0]], idf_sum)
+        return cand[rank], scores * node.boost
+
+
+def _scan_files(
+    files: list[str], terms: list[str], cols, lo: int | None = None, hi: int | None = None
+) -> list[tuple[np.ndarray, object]]:
+    """A term-filtered pyarrow scan of postings ``files`` (row groups
+    pruned by the sorted term column's min/max), restricted when ``lo``
+    is given to rows whose [first_doc, last_doc] meets [lo, hi), as ONE
+    (term column, table) pair like a resident file's; [] when no row
+    matches.  Files are term-sorted one by one: a stable sort by term
+    makes the scan term-sorted, each term's rows in file order."""
+    if not files:
+        return []
+    import pyarrow.dataset as ds
+
+    flt = ds.field("term").isin(terms)
+    if lo is not None:
+        flt = flt & (ds.field("first_doc") < hi) & (ds.field("last_doc") >= lo)
+    t = ds.dataset(files, format="parquet").to_table(columns=list(cols), filter=flt)
+    if not t.num_rows:
+        return []
+    tcol = t.column("term").to_numpy()
+    order = np.argsort(tcol, kind="stable")
+    return [(tcol[order], t.take(order))]
+
+
+def _rows_by_term(pieces: list[tuple[str, object]]) -> dict[str, object]:
+    """{term: its rows} from :func:`_term_slices` pieces, each term's
+    slices concatenated in piece order."""
+    by: dict[str, list] = {}
+    for t, p in pieces:
+        by.setdefault(t, []).append(p)
+    return {t: v[0] if len(v) == 1 else pa.concat_tables(v) for t, v in by.items()}
+
+
+def _conv_winners(
+    docs: np.ndarray, scores: np.ndarray, offs: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Best hit per conversation — max score, then smallest doc — as
+    (docs, scores, conversation index), in doc order; ``offs`` holds the
+    conversations' first docs (sorted, from 0).  Conversations are
+    CONTIGUOUS doc ranges, so grouping is one searchsorted of the offset
+    array and a repeat, and the winner a reduceat group max with a
+    first-equal-per-group pick: no sort of the candidates."""
+    if not bool((docs[1:] > docs[:-1]).all()):
+        o0 = np.argsort(docs, kind="stable")
+        docs, scores = docs[o0], scores[o0]
+    b = np.searchsorted(docs, offs)
+    if b[0] != 0:
+        raise ValueError("candidate doc id below the first conversation")
+    counts = np.diff(np.append(b, docs.size))
+    gids = np.repeat(np.arange(offs.size, dtype=np.int64), counts)
+    starts = b[counts > 0]
+    gmax = np.maximum.reduceat(scores, starts)
+    seg = np.diff(np.append(starts, docs.size))
+    pos = np.flatnonzero(scores == np.repeat(gmax, seg))
+    g = gids[pos]
+    first = np.concatenate(([True], g[1:] != g[:-1]))
+    return docs[pos[first]], scores[pos[first]], g[first]
+
+
+def _shard_scorer(plan: SimpleNamespace):
+    """mapInArrow over ``spark.range(plan.n, numPartitions=plan.n)``:
+    shard i scores the docs [plan.bounds[i], plan.bounds[i + 1]) with
+    :class:`QueryEvaluator`, over its terms' rows read with pyarrow from
+    ``plan.files`` (per part; terms and the doc range prune row groups
+    and rows), and emits (doc_id, score).  With ``plan.offs`` (the
+    conversations' first docs; the bounds then fall on conversation
+    edges) it keeps each conversation's best hit, and with ``plan.k``
+    its top k by (score desc, doc_id asc): the global winners lie
+    within the shards'."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        doc_text = partial(_doc_texts, plan.doc_files) if plan.doc_files else None
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                lo, hi = int(plan.bounds[i]), int(plan.bounds[i + 1])
+                pieces = []
+                for part, terms in plan.terms.items():
+                    files = _scan_files(plan.files[part], terms, plan.cols, lo, hi)
+                    pieces += _term_slices(files, terms)
+                docs, scores = QueryEvaluator(
+                    _rows_by_term(pieces), plan.levels, plan.idf, plan.avgdl, lo, hi,
+                    plan.positions, plan.order_tolerant, doc_text, plan.simple,
+                )(plan.ast)
+                if plan.offs is not None and docs.size:
+                    docs, scores, _ = _conv_winners(docs, scores, plan.offs)
+                if plan.k is not None and docs.size > plan.k:
+                    top = np.lexsort((docs, -scores))[: plan.k]
+                    docs, scores = docs[top], scores[top]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(docs, pa.int64()), pa.array(scores, pa.float64())],
+                    names=["doc_id", "score"],
+                )
+
+    return run
 
 
 class SearchEngine:
@@ -1070,7 +1020,6 @@ class SearchEngine:
         self._vocab: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
         self._vocab_tried = False
         self._vocab_lock = threading.Lock()
-        self._lead_bc_cache: dict[str, object] = {}
         self._vocab_lens: np.ndarray | None = None
         self._vocab_colon: np.ndarray | None = None
         # driver-local postings: each part's file list, taken on its
@@ -1084,8 +1033,9 @@ class SearchEngine:
         # new conversations): (conv_id array, sorted conv_offset array)
         # maps doc_id → (conv_id, turn_idx) with a searchsorted — no
         # doc_stats join per query.  ``_off_bc.value`` is read on the
-        # driver; the distributed plans broadcast it on first use
-        # (_off_broadcast), so an open makes no JVM call
+        # driver and shipped to shard tasks; the distributed tier's
+        # finish broadcasts it on first use (_off_broadcast), so an open
+        # makes no JVM call
         self._off_bc = None
         self._off_spark = None
         self._load_conv_offsets()
@@ -1175,7 +1125,7 @@ class SearchEngine:
         """(sorted terms, df, part) arrays, or None when the vocabulary
         exceeds VOCAB_DRIVER_MAX_ROWS (Spark-job fallbacks engage).
 
-        Lock-guarded double-checked load: search_many plans queries in
+        Lock-guarded double-checked load: search_many evaluates queries in
         driver threads, and publishing ``_vocab_tried`` before ``_vocab``
         would let a concurrent first call observe (tried=True, vocab=None)
         and silently take the Spark-job fallback."""
@@ -1308,23 +1258,30 @@ class SearchEngine:
     def doc_index(self) -> DataFrame:
         return self._read_table("doc_index")
 
+
+    @cached_property
+    def _doc_files(self) -> list[str]:
+        """doc_index's files as of the open, for phrases on an index
+        without positions (read with pyarrow, on either tier)."""
+        return self._at_open(table_files(os.path.join(self.index_dir, "doc_index")))
+
     # ------------------------------------------------------------ postings access
 
-    #: columns each read path actually decodes — projecting BEFORE the
-    #: Arrow transfer keeps unrelated payloads (esp. b_pos, ~40% of a
-    #: positioned index's bytes) out of parquet IO and out of Python
-    SCORE_COLS = ("term", "b_first", "b_docs", "b_tfs", "b_norms")
-    POS_COLS = ("term", "b_first", "b_docs", "b_tfs", "b_norms", "b_pos")
-    #: docs-only reads (constant-score, MUST_NOT): no tf/norm/pos IO
-    DOCS_COLS = ("b_first", "b_docs")
+    #: the postings columns read per decode level (:func:`_term_levels`):
+    #: doc ids only, with tf and norm, with positions too (b_pos, ~40%
+    #: of a positioned index's bytes, is read only by phrases)
+    DOCS_COLS = ("term", "split_id", "first_doc", "last_doc", "b_first", "b_docs")
+    SCORE_COLS = DOCS_COLS + ("b_tfs", "b_norms")
+    POS_COLS = SCORE_COLS + ("b_pos",)
 
-    def _rows_for_terms(self, terms: set[str], cols: tuple[str, ...] | None = None) -> DataFrame:
-        """Partition-pruned + term-predicate-pushed posting selection."""
-        parts = sorted({term_part_py(t, self.num_parts) for t in terms})
-        out = self.postings.where(
-            F.col("part").isin(parts) & F.col("term").isin(sorted(terms))
-        )
-        return out.select(*cols) if cols else out
+    def _vocab_source(self) -> DataFrame:
+        """(term, df) rows of the vocabulary for the Spark-job fallbacks
+        above VOCAB_DRIVER_MAX_ROWS: term_dict, or on an index without one
+        the postings' per-row df (sum df per term either way: ingest
+        batches add rows)."""
+        if self.term_dict is not None:
+            return self.term_dict.select("term", "df")
+        return self.postings.select("term", F.col("df_row").alias("df"))
 
     def term_dfs(self, terms: set[str]) -> dict[str, int]:
         """Global doc frequency per term (sum over skew splits/batches).
@@ -1333,58 +1290,29 @@ class SearchEngine:
         (or ``search_many`` pre-warming the cache with the union of all
         its queries' terms) pays ONE driver round-trip total.
         """
-        missing = {t for t in terms if t not in self._df_cache}
+        missing = sorted(t for t in terms if t not in self._df_cache)
         if missing:
             vocab = self._driver_vocab()
             if vocab is not None:
                 vt, vdf, _ = vocab
-                for t in missing:
-                    i = int(np.searchsorted(vt, t))
-                    self._df_cache[t] = (
-                        int(vdf[i]) if i < vt.size and vt[i] == t else None
-                    )
-                return {
-                    t: v for t in terms if (v := self._df_cache.get(t)) is not None
-                }
-            if self.term_dict is not None:
-                src = self.term_dict.where(F.col("term").isin(sorted(missing)))
-            else:  # pre-term_dict index layout
-                src = self._rows_for_terms(missing, ("term", "df_row")).withColumnRenamed(
-                    "df_row", "df"
+                at = np.searchsorted(vt, np.array(missing, dtype=object))
+                for t, i in zip(missing, at.tolist()):
+                    self._df_cache[t] = int(vdf[i]) if i < vt.size and vt[i] == t else None
+            else:
+                rows = (
+                    self._vocab_source()
+                    .where(F.col("term").isin(missing))
+                    .groupBy("term")
+                    .agg(F.sum("df").alias("df"))
+                    .collect()
                 )
-            rows = src.groupBy("term").agg(F.sum("df").alias("df")).collect()
-            found = {r["term"]: int(r["df"]) for r in rows}
-            for t in missing:
-                self._df_cache[t] = found.get(t)
+                found = {r["term"]: int(r["df"]) for r in rows}
+                for t in missing:
+                    self._df_cache[t] = found.get(t)
         return {t: v for t in terms if (v := self._df_cache.get(t)) is not None}
 
     def _empty_scores(self) -> DataFrame:
         return self.spark.createDataFrame([], SCORE_SCHEMA)
-
-    #: target scored rows per reduce partition on the serving path
-    SERVE_ROWS_PER_PART = 50_000
-
-    def _serve_parts(self, est_rows: int) -> int:
-        """Shuffle width for a query's candidate-sized exchanges, from
-        the DRIVER-KNOWN df statistics: a 10-hit rare-term query gets 4
-        reduce partitions (latency: one task wave), a 10^9-df term at
-        cluster scale gets the session's full shuffle width.  The
-        session conf stays untouched — width rides each exchange via an
-        explicit hash repartition, which Catalyst recognizes as
-        satisfying the downstream aggregation's clustering."""
-        cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        return max(4, min(cap, -(-est_rows // self.SERVE_ROWS_PER_PART)))
-
-    def _docs_for_terms(self, terms: set[str]) -> DataFrame:
-        """doc_ids matching ANY of ``terms`` — no tf/norm decode, no
-        scoring.  The MUST_NOT path: an excluded (typically heavy) term
-        needs membership only, so skip ~2/3 of its payload IO and all
-        the BM25 math."""
-        self.term_dfs(terms)  # warm the df cache for the spread decision
-        rows = self._spread_posting_rows(
-            self._rows_for_terms(terms, self.DOCS_COLS), terms
-        )
-        return rows.mapInPandas(_decode_docs_only(), "doc_id long")
 
     # ------------------------------------------------------------ field routing
 
@@ -1467,112 +1395,116 @@ class SearchEngine:
             avgdl_map[k] = adl_f
         return idf_map, avgdl_map
 
-    # ------------------------------------------------------------ leaf scoring
 
-    def _spread_posting_rows(self, rows: DataFrame, terms: set[str]) -> DataFrame:
-        """Parallelize heavy-term decode: one md5-part's file(s) hold a
-        heavy term's skew-split rows in few scan tasks, so the Python
-        decode would serialize.  When the DRIVER-KNOWN summed df says
-        the decode is the bottleneck, round-robin the ENCODED rows (a
-        compressed-payload shuffle ~1% of the decoded volume) so each
-        ≤split_target row decodes in its own task.  Cheap no-op for
-        rare terms."""
-        est = sum(self._df_cache.get(t) or 0 for t in terms)
-        if est > 2 * self.SERVE_ROWS_PER_PART:
-            cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            rows = rows.repartition(min(cap, est // self.SERVE_ROWS_PER_PART))
-        return rows
+    # ------------------------------------------------------------ rewrite
 
-    def _scored_terms_df(
-        self,
-        terms: set[str],
-        idf_map: dict[str, float],
-        avgdl_map: dict[str, float] | None = None,
-        cand_docs=None,
-    ) -> DataFrame:
-        rows = self._spread_posting_rows(
-            self._rows_for_terms(terms, self.SCORE_COLS), terms
-        )
-        return rows.mapInPandas(
-            _decode_score_rows(idf_map, self.avgdl, avgdl_map, cand_docs),
-            TERM_SCORE_SCHEMA,
-        )
-
-    #: rarest-term-lead thresholds: broadcast the rarest MUST/phrase
-    #: term's doc ids when it is ≥4× rarer than the widest co-term and
-    #: its df ≤ 500k (≤ 4 MB broadcast)
-    LEAD_MAX_DF = 500_000
-    LEAD_RATIO = 4
-
-    #: term-keyed cache of lead-docs broadcasts (Lucene caches filter
-    #: bitsets the same way): each entry is ≤ LEAD_MAX_DF int64 ids
-    #: (≤ 4 MB); bounded FIFO so a long-lived engine can't grow without
-    #: limit.  Index immutability per engine instance makes entries
-    #: permanently valid (appends/compactions are opened as new engines).
-    LEAD_CACHE_MAX = 32
-
-    def _lead_docs_bc(self, must_terms: set[str], all_terms: set[str]):
-        """Broadcast of the rarest must-term's sorted doc ids, or None
-        when the skew does not justify the extra (partition-pruned,
-        docs-only) pass."""
-        dfs = self.term_dfs(all_terms)
-        if not must_terms or any(t not in dfs for t in must_terms):
-            return None
-        min_t = min(must_terms, key=lambda t: dfs[t])
-        widest = max(dfs.values())
-        if dfs[min_t] > self.LEAD_MAX_DF or dfs[min_t] * self.LEAD_RATIO > widest:
-            return None
-        bc = self._lead_bc_cache.get(min_t)
-        if bc is None:
-            ids = self._docs_for_terms({min_t}).toPandas()["doc_id"].to_numpy(np.int64)
-            bc = self.spark.sparkContext.broadcast(np.sort(ids))
-            with self._vocab_lock:  # planner threads share the cache
-                if len(self._lead_bc_cache) >= self.LEAD_CACHE_MAX:
-                    old = next(iter(self._lead_bc_cache))
-                    self._lead_bc_cache.pop(old).unpersist(blocking=False)
-                self._lead_bc_cache[min_t] = bc
-        return bc
-
-    def _constant_score_docs(
-        self,
-        pred,
-        field: str,
-        boost: float,
-        parts: list[int] | None = None,
-        est_rows: int | None = None,
-    ) -> DataFrame | None:
-        """Multi-term constant-score rewrite (Prefix/TermRange/Wildcard):
-        prune postings PARTITIONS to the expansion's md5-part list, then
-        push the term predicate into the scan.  ``parts`` comes from the
-        driver-side vocabulary when loaded (zero Spark jobs — an empty
-        list means the expansion matched nothing); otherwise one
-        vocab-scale term_dict job computes it (row-group pruned by the
-        sorted `term` min/max)."""
+    def _band(
+        self, lo: str | None, hi: str | None, lo_incl: bool, hi_incl: bool, field: str
+    ) -> np.ndarray:
+        """The vocabulary keys in a key range (None = open end), sorted,
+        scoped to ``field``: a default-field band drops the other fields'
+        ``field:term`` keys.  A slice of the driver vocabulary, else one
+        vocab-scale Spark job over term_dict (row groups pruned by the
+        sorted term column), whose dfs warm the df cache."""
+        if self._driver_vocab() is not None:
+            i0, i1 = self._vocab_slice(lo, hi, lo_incl, hi_incl)
+            return self._vocab[0][self._default_scope_sel(i0, i1, field)]
+        t = F.col("term")
+        pred = F.lit(True)
+        if lo is not None:
+            pred = pred & ((t >= lo) if lo_incl else (t > lo))
+        if hi is not None:
+            pred = pred & ((t <= hi) if hi_incl else (t < hi))
         if field == self.fields[0]:
-            # bare keys only: a default-field expansion must not match
-            # another field's `field:term` keys
-            pred = pred & ~F.col("term").contains(":")
-        if parts is None and self.term_dict is not None:
-            parts = [
-                r["part"]
-                for r in self.term_dict.where(pred).select("part").distinct().collect()
-            ]
-        if parts is not None:
-            if not parts:
-                return None
-            prows = self.postings.where(F.col("part").isin(sorted(parts)) & pred)
-        else:  # pre-term_dict index layout: full postings scan
-            prows = self.postings.where(pred)
-        docs = prows.select(*self.DOCS_COLS).mapInPandas(
-            _decode_docs_only(), "doc_id long"
-        )
-        if est_rows is not None:
-            # driver-known expansion df sizes the dedup exchange; the
-            # explicit hash partitioning satisfies distinct()'s
-            # clustering, so this is the ONE shuffle, at the right width
-            docs = docs.repartition(self._serve_parts(est_rows), "doc_id")
-        docs = docs.distinct()
-        return docs.withColumn("score", F.lit(1.0 * boost))
+            pred = pred & ~t.contains(":")
+        rows = self._vocab_source().where(pred).groupBy("term").agg(F.sum("df").alias("df")).collect()
+        for r in rows:
+            self._df_cache[r["term"]] = int(r["df"])
+        return np.array(sorted(r["term"] for r in rows), dtype=object)
+
+    def _expand(self, node: Prefix | Wildcard | TermRange, field: str) -> list[str]:
+        """The ``field`` keys a constant-score leaf matches, as Lucene's
+        multi-term rewrite walks its terms dict.  The parser rejects
+        leading wildcards, so a wildcard's band is its literal prefix's;
+        a range's open end in a non-default field stops at the field
+        prefix's true successor (see _prefix_successor)."""
+        pref = "" if field == self.fields[0] else field + ":"
+        if isinstance(node, Prefix):
+            key = pref + node.prefix
+            return list(self._band(key, self._prefix_successor(key), True, False, field))
+        if isinstance(node, Wildcard):
+            import re
+
+            base = pref + re.split(r"[?*]", node.pattern)[0]
+            band = self._band(base, self._prefix_successor(base), True, False, field)
+            rx = "".join(
+                ".*" if c == "*" else "." if c == "?" else re.escape(c) for c in node.pattern
+            )
+            pat = re.compile("^" + re.escape(pref) + rx + "$")
+            return [t for t in band if pat.match(t)]
+        lo = pref + node.lo if node.lo is not None else (pref or None)
+        if node.hi is not None:
+            hi, hi_incl = pref + node.hi, node.hi_incl
+        elif pref:
+            hi, hi_incl = self._prefix_successor(pref), False
+        else:
+            hi, hi_incl = None, True
+        lo_incl = node.lo_incl if node.lo is not None else True
+        return list(self._band(lo, hi, lo_incl, hi_incl, field))
+
+    def _rewrite(self, node: Node) -> Node:
+        """``node`` (field-resolved) with every multi-term leaf rewritten
+        on the driver to the explicit :class:`_Terms` it matches, and
+        unit-boost pure-SHOULD Bools inlined into SHOULD parents
+        (:func:`_flatten_shoulds`: a bare term on a multi-field index
+        stays a flat Bool of terms).  Fuzzy
+        is Lucene's default TopTermsBlendedFreqScoringRewrite: every
+        selected expansion scores as a BM25 TermQuery whose df is BLENDED
+        to the selected terms' max df, weighted by the FuzzyTermsEnum
+        similarity boost, SHOULD-summed per doc."""
+        if isinstance(node, Bool):
+            clauses = [(o, self._rewrite(c)) for o, c in node.clauses]
+            return _flatten_shoulds(Bool(boost=node.boost, clauses=clauses))
+        f = getattr(node, "field", None) or self.fields[0]
+        if isinstance(node, Fuzzy):
+            exp = self._fuzzy_expand(node.text, f, node.max_edits)
+            dfs = self.term_dfs({kk for kk, _ in exp})
+            exp = sorted((kk, ed) for kk, ed in exp if kk in dfs)
+            if not exp:
+                return _Terms(boost=node.boost)
+            pref_len = 0 if f == self.fields[0] else len(f) + 1
+            return _Terms(
+                boost=node.boost,
+                keys=tuple(kk for kk, _ in exp),
+                weights=tuple(self._fuzzy_boost(kk[pref_len:], node.text, ed) for kk, ed in exp),
+                idf=float(bm25.idf(max(dfs[kk] for kk, _ in exp), self.field_stats[f][0])),
+            )
+        if isinstance(node, (Prefix, Wildcard, TermRange)):
+            return _Terms(boost=node.boost, keys=tuple(self._expand(node, f)))
+        if isinstance(node, Phrase) and not self.positions and f != self.fields[0]:
+            raise NotImplementedError("non-default-field phrases need a positions-enabled index")
+        return node
+
+    def _prepare(
+        self, ast: Node
+    ) -> tuple[Node, dict[str, float], dict[str, float], dict[str, int], int]:
+        """``ast`` (field-resolved) rewritten by :meth:`_rewrite`, the idf
+        and avgdl maps of its scored keys, the decode level of each key
+        it reads that the index holds, and its widest constant-score
+        expansion."""
+        ast = self._rewrite(ast)
+        const, scored, widest = set(), set(), 0
+        for leaf in _leaves(ast):
+            if isinstance(leaf, _Terms):
+                if leaf.weights is None:
+                    const.update(leaf.keys)
+                    widest = max(widest, len(leaf.keys))
+                else:
+                    scored.update(leaf.keys)
+        idf_map, avgdl_map = self._maps_for(query_terms(ast) | scored)
+        levels = _term_levels(ast, self.positions)
+        levels = {t: v for t, v in levels.items() if t in idf_map or t in const}
+        return ast, idf_map, avgdl_map, levels, widest
 
     @staticmethod
     def _fuzzy_boost(bare: str, text: str, ed: int) -> float:
@@ -1624,9 +1556,7 @@ class SearchEngine:
                 ),
             )
             return [(terms[i], eds[i]) for i in ranked[:max_expansions]]
-        src = self.term_dict
-        if src is None:  # pre-term_dict index layout: derive vocab from postings
-            src = self.postings.groupBy("term").agg(F.sum("df_row").alias("df"))
+        src = self._vocab_source()
         bare = (
             F.col("term").substr(F.lit(len(pref) + 1), F.length("term"))
             if pref
@@ -1675,407 +1605,27 @@ class SearchEngine:
         )
         return [(t, e) for t, e, _df in scored[:max_expansions]]
 
-    def _leaf_df(
-        self,
-        node: Node,
-        idf_map: dict[str, float],
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame | None:
-        if isinstance(node, Term):
-            if node.text not in idf_map:
-                return None
-            df = self._scored_terms_df({node.text}, idf_map, avgdl_map).drop("term")
-            return df.withColumn("score", F.col("score") * F.lit(node.boost))
-        if isinstance(node, Prefix):
-            f = node.field or self.fields[0]
-            key = self._key(f, node.prefix)
-            pred = F.col("term").startswith(key)
-            parts = est = None
-            if self._driver_vocab() is not None:
-                # zero-job expansion: binary-search the driver vocab for
-                # the prefix range, emit its md5-part list
-                i0, i1 = self._vocab_prefix_slice(key)
-                sel = self._default_scope_sel(i0, i1, f)
-                parts = self._expand_sel_to_parts(sel)
-                est = int(self._vocab[1][sel].sum())
-            return self._constant_score_docs(pred, f, node.boost, parts=parts, est_rows=est)
-        if isinstance(node, Fuzzy):
-            # Lucene's default TopTermsBlendedFreqScoringRewrite: every
-            # selected expansion scores as a BM25 TermQuery whose df is
-            # BLENDED to the selected terms' max df, weighted by the
-            # FuzzyTermsEnum similarity boost, SHOULD-summed per doc
-            f = node.field or self.fields[0]
-            pref_len = 0 if f == self.fields[0] else len(f) + 1
-            exp = self._fuzzy_expand(node.text, f, node.max_edits)
-            dfs = self.term_dfs({kk for kk, _ in exp})
-            exp = [(kk, ed) for kk, ed in exp if kk in dfs]
-            if not exp:
-                return None
-            n_f, adl_f = self.field_stats[f]
-            idf_b = float(bm25.idf(max(dfs[kk] for kk, _ in exp), n_f))
-            fboosts = {
-                kk: self._fuzzy_boost(kk[pref_len:], node.text, ed) for kk, ed in exp
-            }
-            keys = set(fboosts)
-            scored = self._scored_terms_df(
-                keys, {kk: idf_b for kk in keys}, {kk: adl_f for kk in keys}
-            )
-            boost_expr = F.create_map(
-                *[x for t, b in fboosts.items() for x in (F.lit(t), F.lit(b))]
-            )
-            nparts = self._serve_parts(sum(dfs.values()))
-            g = (
-                scored.repartition(nparts, "doc_id")
-                .groupBy("doc_id")
-                .agg(
-                    F.sum(
-                        F.col("score") * F.element_at(boost_expr, F.col("term"))
-                    ).alias("score")
-                )
-            )
-            if node.boost != 1.0:
-                g = g.withColumn("score", F.col("score") * F.lit(node.boost))
-            return g
-        if isinstance(node, Wildcard):
-            # WildcardQuery: regex over the sorted term dictionary
-            # (Lucene walks its terms dict with an automaton in the same
-            # place); a literal prefix, when present, restores row-group
-            # min/max pruning on the term-sorted dictionary
-            import re as _re
-
-            f = node.field or self.fields[0]
-            rx = "".join(
-                ".*" if c == "*" else "." if c == "?" else _re.escape(c)
-                for c in node.pattern
-            )
-            pref = "" if f == self.fields[0] else f + ":"
-            pred = F.col("term").rlike("^" + _re.escape(pref) + rx + "$")
-            lit = _re.split(r"[?*]", node.pattern)[0]
-            if lit:
-                pred = F.col("term").startswith(pref + lit) & pred
-            parts = est = None
-            if self._driver_vocab() is not None:
-                # zero-job expansion: regex over the literal-prefix band
-                # of the driver vocab (parser rejects leading wildcards,
-                # so the band is always a proper prefix slice)
-                terms = self._vocab[0]
-                base = pref + lit
-                i0, i1 = self._vocab_prefix_slice(base)
-                sel = self._default_scope_sel(i0, i1, f)
-                pat = _re.compile("^" + _re.escape(pref) + rx + "$")
-                sel = sel[[bool(pat.match(terms[i])) for i in sel]] if sel.size else sel
-                parts = self._expand_sel_to_parts(sel)
-                est = int(self._vocab[1][sel].sum())
-            return self._constant_score_docs(pred, f, node.boost, parts=parts, est_rows=est)
-        if isinstance(node, TermRange):
-            # Lucene TermRangeQuery: constant-score rewrite over the
-            # dictionary range, same machinery as Prefix
-            f = node.field or self.fields[0]
-            pref = "" if f == self.fields[0] else f + ":"
-            pred = F.lit(True)
-            if node.lo is not None:
-                lo = pref + node.lo
-                pred = pred & (
-                    (F.col("term") >= lo) if node.lo_incl else (F.col("term") > lo)
-                )
-            if node.hi is not None:
-                hi = pref + node.hi
-                pred = pred & (
-                    (F.col("term") <= hi) if node.hi_incl else (F.col("term") < hi)
-                )
-            if pref:
-                pred = pred & F.col("term").startswith(pref)
-            parts = est = None
-            if self._driver_vocab() is not None:
-                lo_key = pref + node.lo if node.lo is not None else (pref or None)
-                if node.hi is not None:
-                    hi_key, hi_incl = pref + node.hi, node.hi_incl
-                elif pref:
-                    # open-ended range scoped to a field: every key with
-                    # the field prefix (true-successor exclusive bound —
-                    # never under-includes, see _prefix_successor)
-                    hi_key, hi_incl = self._prefix_successor(pref), False
-                else:
-                    hi_key, hi_incl = None, True
-                i0, i1 = self._vocab_slice(
-                    lo_key,
-                    hi_key,
-                    node.lo_incl if node.lo is not None else True,
-                    hi_incl,
-                )
-                sel = self._default_scope_sel(i0, i1, f)
-                parts = self._expand_sel_to_parts(sel)
-                est = int(self._vocab[1][sel].sum())
-            return self._constant_score_docs(pred, f, node.boost, parts=parts, est_rows=est)
-        if isinstance(node, Phrase):
-            terms = set(node.terms)
-            if any(t not in idf_map for t in terms):
-                return None
-            f = node.field or self.fields[0]
-            field_avgdl = self.field_stats[f][1]
-            # Lucene PhraseWeight sums idf over term POSITIONS — a phrase
-            # "x x" counts x's idf twice (duplicates not deduped)
-            idf_sum = sum(idf_map[t] for t in node.terms)
-            if self.positions:
-                # positions path (index is DOCS_AND_FREQS_AND_POSITIONS):
-                # decode the phrase terms' position payloads, ONE shuffle
-                # by doc_id, vectorized adjacency merge — cost scales with
-                # the terms' postings volume, never with corpus text size.
-                # Lead with the rarest term (Lucene's conjunction order):
-                # when one term is much rarer, its doc set is broadcast
-                # and the heavier terms' payloads are filtered MAP-SIDE,
-                # so non-candidate positions never enter the shuffle.
-                cand_bc = self._lead_docs_bc(terms, terms)
-                stream = self._spread_posting_rows(
-                    self._rows_for_terms(terms, self.POS_COLS), terms
-                ).mapInPandas(
-                    _decode_positions_stream(node.terms, cand_bc), POS_STREAM_SCHEMA
-                )
-                nparts = self._serve_parts(sum(self.term_dfs(terms).values()))
-                scored = stream.repartition(nparts, "doc_id").mapInPandas(
-                    _phrase_match_positions(
-                        len(node.terms),
-                        idf_sum,
-                        field_avgdl,
-                        node.slop,
-                        order_tolerant=self.slop_order_tolerant and node.slop > 0,
-                    ),
-                    SCORE_SCHEMA,
-                )
-                return scored.withColumn("score", F.col("score") * F.lit(node.boost))
-            # fallback for position-less indexes: candidate docs contain
-            # ALL phrase terms; re-tokenize their text to verify adjacency
-            if f != self.fields[0]:
-                raise NotImplementedError(
-                    "non-default-field phrases need a positions-enabled index"
-                )
-            cand = (
-                self._scored_terms_df(terms, idf_map, avgdl_map)
-                .groupBy("doc_id")
-                .agg(F.countDistinct("term").alias("nt"))
-                .where(F.col("nt") == len(terms))
-                .select("doc_id")
-            )
-            cand_text = cand.join(self.doc_index.select("doc_id", "text"), "doc_id")
-            scored = cand_text.mapInPandas(
-                _phrase_score_fn(
-                    node.terms,
-                    idf_sum,
-                    self.avgdl,
-                    self.simple,
-                    node.slop,
-                    order_tolerant=self.slop_order_tolerant and node.slop > 0,
-                ),
-                SCORE_SCHEMA,
-            )
-            return scored.withColumn("score", F.col("score") * F.lit(node.boost))
-        raise TypeError(type(node))
-
-    # ------------------------------------------------------------ boolean combine
-
-    def _score_node(
-        self,
-        node: Node,
-        idf_map: dict[str, float],
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame | None:
-        if not isinstance(node, Bool):
-            return self._leaf_df(node, idf_map, avgdl_map)
-        if self._is_flat_terms(node):
-            return self._score_flat_terms(node, idf_map, avgdl_map)
-        musts, shoulds, nots = [], [], []
-        for occur, child in node.clauses:
-            if occur == MUST_NOT:
-                d = self._not_docs(child, idf_map, avgdl_map)
-                if d is not None:
-                    nots.append(d)
-                continue
-            d = self._score_node(child, idf_map, avgdl_map)
-            if occur == MUST:
-                if d is None:
-                    return None  # unmatched MUST → nothing matches
-                musts.append(d)
-            elif d is not None:
-                shoulds.append(d)
-        should_sum = None
-        if shoulds:
-            should_sum = (
-                reduce(lambda a, b: a.unionByName(b), shoulds)
-                .groupBy("doc_id")
-                .agg(F.sum("score").alias("score"))
-            )
-        if musts:
-            base = musts[0]
-            for i, m in enumerate(musts[1:], start=1):
-                m = m.withColumnRenamed("score", f"_s{i}")
-                base = base.join(m, "doc_id")
-                base = base.withColumn("score", F.col("score") + F.col(f"_s{i}")).drop(f"_s{i}")
-            if should_sum is not None:
-                s = should_sum.withColumnRenamed("score", "_ss")
-                base = base.join(s, "doc_id", "left").withColumn(
-                    "score", F.col("score") + F.coalesce(F.col("_ss"), F.lit(0.0))
-                ).drop("_ss")
-        elif should_sum is not None:
-            base = should_sum
-        else:
-            return None
-        for nd in nots:
-            base = base.join(nd, "doc_id", "left_anti")
-        if node.boost != 1.0:
-            base = base.withColumn("score", F.col("score") * F.lit(node.boost))
-        return base
-
-    def _not_docs(
-        self,
-        node: Node,
-        idf_map: dict[str, float],
-        avgdl_map: dict[str, float] | None,
-    ) -> DataFrame | None:
-        """Membership-only evaluation of a MUST_NOT clause: Term leaves
-        (including the Bool-of-per-field-Terms a bare leaf resolves to on
-        a multi-field index) take the docs-only decode path; anything
-        else falls back to scoring and projects doc_id."""
-        texts: set[str] | None = None
-        if isinstance(node, Term):
-            texts = {node.text}
-        elif (
-            isinstance(node, Bool)
-            and node.clauses
-            and all(o == SHOULD and isinstance(c, Term) for o, c in node.clauses)
-        ):
-            texts = {c.text for _, c in node.clauses}
-        if texts is not None:
-            texts = {t for t in texts if t in idf_map}
-            return self._not_docs_maybe_bc(texts) if texts else None
-        d = self._score_node(node, idf_map, avgdl_map)
-        return d.select("doc_id") if d is not None else None
-
-    def _not_docs_maybe_bc(self, terms: set[str]) -> DataFrame:
-        """Docs-only stream for MUST_NOT terms, broadcast-hinted when
-        the summed df is known small (the exclusion side of a left-anti
-        join builds a hash set; a Python-UDF-produced stream has no
-        stats, so Catalyst would otherwise pick a shuffle join)."""
-        nd = self._docs_for_terms(terms)
-        dfs = self.term_dfs(terms)
-        if sum(dfs.values()) <= 2_000_000:
-            nd = F.broadcast(nd)
-        return nd
-
-    @staticmethod
-    def _is_flat_terms(node: Bool) -> bool:
-        return all(isinstance(c, Term) for _, c in node.clauses) and node.clauses
-
-    def _score_flat_terms(
-        self,
-        node: Bool,
-        idf_map: dict[str, float],
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame | None:
-        """One-aggregation path for flat boolean-of-terms queries: a single
-        postings scan + ONE shuffle, no per-leaf DataFrames."""
-        boosts = {}
-        musts, nots, scoring = [], [], []
-        for occur, c in node.clauses:
-            if occur == MUST:
-                if c.text not in idf_map:
-                    return None
-                musts.append(c.text)
-            elif occur == MUST_NOT:
-                nots.append(c.text)
-            if occur != MUST_NOT and c.text in idf_map:
-                scoring.append(c.text)
-                boosts[c.text] = boosts.get(c.text, 0.0) + c.boost
-        if not scoring:
-            return None
-        # MUST_NOT terms never enter the scored stream: they need doc
-        # membership only, via the docs-only decode (no tf/norm IO, no
-        # BM25 math on what is typically a heavy exclusion term).
-        # Conjunctions lead with the rarest MUST term (Lucene's driver
-        # iterator): its doc set filters every other term's decode
-        # map-side, so the wide terms' non-candidate rows never score
-        # or shuffle.
-        lead = self._lead_docs_bc(
-            {t for t in musts if t in idf_map}, {t for t in scoring if t in idf_map}
-        )
-        scored = self._scored_terms_df(set(scoring), idf_map, avgdl_map, lead)
-        not_terms = {t for t in nots if t in idf_map}
-        if not_terms:
-            # MUST_NOT membership rides the SAME aggregation as score-0
-            # rows (docs-only decode — no tf/norm IO) and a `nnot == 0`
-            # filter, exactly like the batch kernel's N matrix: no
-            # separately-materialized exclusion set, no broadcast job,
-            # no anti-join stage.  At 10^9-df exclusions the not rows
-            # co-partition with the candidates in the one doc_id
-            # exchange — the same volume a shuffle anti join would move.
-            ndocs = (
-                self._spread_posting_rows(
-                    self._rows_for_terms(not_terms, ("term",) + self.DOCS_COLS),
-                    not_terms,
-                )
-                .mapInPandas(_decode_docs_only_keyed(), "term string, doc_id long")
-                .withColumn("score", F.lit(0.0))
-            )
-            scored = scored.unionByName(ndocs)
-        nparts = self._serve_parts(
-            sum(self.term_dfs(set(scoring) | not_terms).values())
-        )
-        scored = scored.repartition(nparts, "doc_id")
-        boost_expr = F.create_map(
-            *[x for t, b in boosts.items() for x in (F.lit(t), F.lit(b))]
-        )
-        aggs = [
-            F.sum(F.col("score") * F.element_at(boost_expr, F.col("term"))).alias(
-                "score"
-            )
-        ]
-        if musts:
-            aggs.append(
-                F.countDistinct(
-                    F.when(F.col("term").isin(musts), F.col("term"))
-                ).alias("_nmust")
-            )
-        if not_terms:
-            aggs.append(
-                F.sum(
-                    F.when(F.col("term").isin(sorted(not_terms)), 1).otherwise(0)
-                ).alias("_nnot")
-            )
-        g = scored.groupBy("doc_id").agg(*aggs)
-        if musts:
-            g = g.where(F.col("_nmust") == len(set(musts))).drop("_nmust")
-        if not_terms:
-            # score NULL = the doc matched only excluded terms
-            g = g.where(
-                (F.col("_nnot") == 0) & F.col("score").isNotNull()
-            ).drop("_nnot")
-        if node.boost != 1.0:
-            g = g.withColumn("score", F.col("score") * F.lit(node.boost))
-        return g
 
     # ------------------------------------------------------------ local serving
 
-    #: posting-volume budget for the driver-local fast path: queries
-    #: whose pruned, expanded term set decodes at most this many
-    #: postings run on the driver (the same numpy kernels the executors
-    #: run) instead of paying cluster scheduling for milliseconds of
-    #: work — the Lucene-searcher analogue of Q2's zero-job term
-    #: lookups.  Above the budget (or when any required artifact is
-    #: missing) the distributed plan runs unchanged; 5M postings ≈ 120
-    #: MB of transient decode arrays, the same order as the driver vocab
-    #: cap.  It also caps residency (_local_posting_rows): touched parts
-    #: stay in memory only while the WHOLE index holds at most this many
-    #: postings, because resident parts cost ~6.5 bytes per posting of
-    #: Arrow with positions (423k postings = 2.7 MB for a 10k-turn
-    #: corpus), so the cap holds the driver to ~32 MB — less than one
-    #: query's decode arrays at the budget.
+    #: posting-volume budget for the driver-local tier: a query whose
+    #: terms and expansions hold at most this many postings is evaluated
+    #: on the driver (the same evaluator the shard tasks run) instead of
+    #: paying cluster scheduling for milliseconds of work — the
+    #: Lucene-searcher analogue of Q2's zero-job term lookups.  Above
+    #: the budget (or when any required artifact is missing) the
+    #: distributed tier runs; 5M postings ≈ 120 MB of transient decode
+    #: arrays, the same order as the driver vocab cap.  It also caps
+    #: residency (_local_slices): touched parts stay in memory only
+    #: while the WHOLE index holds at most this many postings, because
+    #: resident parts cost ~6.5 bytes per posting of Arrow with
+    #: positions (423k postings = 2.7 MB for a 10k-turn corpus), so the
+    #: cap holds the driver to ~32 MB — less than one query's decode
+    #: arrays at the budget.
     LOCAL_MAX_POSTINGS = 5_000_000
-    #: expansion-width cap for local multi-term rewrites (prefix/range/
-    #: wildcard/fuzzy): wider expansions keep the distributed scan
+    #: expansion-width cap for local constant-score rewrites (prefix/
+    #: range/wildcard): wider expansions take the distributed tier
     LOCAL_MAX_EXPANSION = 4096
-    #: tighter budget for local PHRASES: their cost is the position
-    #: merge (O(sum tf), single-threaded here), measured net-slower than
-    #: the distributed plan above a few hundred thousand postings
-    LOCAL_MAX_PHRASE_POSTINGS = 200_000
     #: result-row cap: k above it stays distributed, and so does a
     #: "give me everything" query (k=None) with more candidates
     LOCAL_MAX_K = 10_000
@@ -2087,13 +1637,11 @@ class SearchEngine:
     #: except once at 318k (88 against 95 ms)
     LOCAL_POOL_MIN_POSTINGS = 200_000
 
-    def _local_slices(
-        self, terms: set[str], want: list[str], by_term: bool
-    ) -> list[tuple[str | None, object]]:
-        """The :func:`_term_slices` of ``terms`` over every touched part,
-        columns ``want`` (``term`` among them), in the order a scan of
-        their ``part=`` files returns them: parts ascending, files by
-        name, rows in file order.
+    def _local_term_rows(self, terms: set[str], cols: tuple[str, ...]) -> dict:
+        """{term: its posting rows as an Arrow table, columns ``cols``}
+        for the ``terms`` with postings, each term's rows in the order a
+        scan of its ``part=`` files returns them (files by name, rows in
+        file order), as zero-copy slices.
 
         While the index's whole postings volume (Σdf over the driver
         vocabulary) fits LOCAL_MAX_POSTINGS, a touched part stays
@@ -2104,9 +1652,8 @@ class SearchEngine:
         filtered parquet scan).  Above the cap each query runs that
         term-filtered pyarrow scan of the part's files (row groups
         pruned by the sorted term column's min/max).  Either way each
-        part's file list is taken on its first touch and kept, so the
-        local path sees one fixed index state, like the Spark
-        DataFrame's frozen file listing."""
+        part's file list is taken on its first touch and kept, so both
+        tiers see one fixed index state."""
         by_part: dict[int, list[str]] = {}
         for t in sorted(terms):
             by_part.setdefault(term_part_py(t, self.num_parts), []).append(t)
@@ -2114,31 +1661,12 @@ class SearchEngine:
         pieces = []
         for part in sorted(by_part):
             files = (
-                self._resident_part(part) if resident else self._scan_part(part, by_part[part], want)
+                self._resident_part(part)
+                if resident
+                else _scan_files(self._part_files(part), by_part[part], cols)
             )
-            pieces += _term_slices(files, by_part[part], by_term)
-        return [(t, p.select(want)) for t, p in pieces]
-
-    def _local_posting_rows(self, terms: set[str], cols: tuple[str, ...]):
-        """Driver-side equivalent of :meth:`_rows_for_terms`: the posting
-        rows of ``terms`` with columns ``cols`` (``term`` last) as ONE
-        Arrow table, the concatenated zero-copy slices of the part files
-        (see :meth:`_local_slices`); no pandas frame is made."""
-        want = [c for c in cols if c != "term"] + ["term"]
-        pieces = [p for _, p in self._local_slices(terms, want, False)]
-        if not pieces:
-            return pa.table({c: pa.array([], _POSTINGS_TYPES[c]) for c in want})
-        return pieces[0] if len(pieces) == 1 else pa.concat_tables(pieces)
-
-    def _local_term_rows(self, terms: set[str], cols: tuple[str, ...]) -> dict:
-        """{term: its posting rows as an Arrow table, columns ``cols``
-        (``term`` among them)} for the ``terms`` with postings: each
-        term's slices in file order, so consumers take a term's rows
-        without a mask over the whole selection."""
-        by: dict[str, list] = {}
-        for t, p in self._local_slices(terms, list(cols), True):
-            by.setdefault(t, []).append(p)
-        return {t: v[0] if len(v) == 1 else pa.concat_tables(v) for t, v in by.items()}
+            pieces += [(t, p.select(list(cols))) for t, p in _term_slices(files, by_part[part])]
+        return _rows_by_term(pieces)
 
     def _resident_ok(self) -> bool:
         """Whether postings parts may stay resident (see
@@ -2152,6 +1680,8 @@ class SearchEngine:
         return self._postings_total <= self.LOCAL_MAX_POSTINGS
 
     def _part_files(self, part: int) -> list[str]:
+        """Postings part ``part``'s files as of the open, taken on its
+        first touch by either tier."""
         files = self._local_files.get(part)
         if files is None:
             import glob
@@ -2164,7 +1694,7 @@ class SearchEngine:
     def _resident_part(self, part: int) -> list[tuple[np.ndarray, object]]:
         """(term column, whole Arrow table) per file of ``part``, read
         on its first touch.  Double-checked under a lock, like
-        _driver_vocab: search_many plans queries in driver threads."""
+        _driver_vocab: search_many evaluates queries in driver threads."""
         files = self._resident.get(part)
         if files is None:
             with self._resident_lock:
@@ -2174,390 +1704,46 @@ class SearchEngine:
                     self._resident[part] = files
         return files
 
-    def _scan_part(self, part: int, terms: list[str], want: list[str]) -> list:
-        """The term-filtered pyarrow scan of one part's files, as one
-        (term column, table) pair like a resident file's."""
-        files = self._part_files(part)
-        if not files:
-            return []
-        import pyarrow.dataset as _ds
-
-        t = _ds.dataset(files, format="parquet").to_table(
-            columns=want, filter=_ds.field("term").isin(terms)
-        )
-        if not t.num_rows:
-            return []
-        # files are term-sorted one by one: a stable sort by term makes
-        # the scan one term-sorted table, each term's rows in file order
-        tcol = t.column("term").to_numpy()
-        order = np.argsort(tcol, kind="stable")
-        return [(tcol[order], t.take(order))]
-
-    def _local_budget_ok(self, terms: set[str]) -> bool:
-        dfs = self.term_dfs(terms)
-        return sum(dfs.values()) <= self.LOCAL_MAX_POSTINGS
-
-    @staticmethod
-    def _sorted_member(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
-        """Boolean mask: which ``values`` occur in ``sorted_arr``."""
-        return _sorted_member_mask(sorted_arr, values)
-
-    #: docs-only local reads: per-block counts come off the doc
-    #: stream's own varbyte continuation bits (_decode_docs)
-    LOCAL_DOCS_COLS = ("b_first", "b_docs")
-
-    @staticmethod
-    def _local_decode_docs(rows) -> np.ndarray:
-        """Vectorized docs-only decode (membership sets): sorted unique
-        doc ids over every block of Arrow ``rows`` — the executor
-        kernel's core."""
-        return np.unique(_decode_arrow_docs(rows))
-
-    def _local_term_streams(
-        self,
-        terms: set[str],
-        idf_map: dict[str, float],
-        avgdl_map: dict[str, float],
-        tcache: dict[str, tuple[np.ndarray, np.ndarray]],
-    ) -> None:
-        """Decode (docs, raw bm25 score) per term into ``tcache`` for
-        every term not already there — the per-CALL sharing that lets a
-        search_many batch decode each term once (the local analogue of
-        the distributed shared-scan; nothing outlives the call).
-        Scores are bit-identical to the executor kernel's: same
-        score_tf expression over the same (tf, norm) values with the
-        same float64 idf/avgdl scalars."""
-        missing = {t for t in terms if t not in tcache}
-        if not missing:
-            return
-        rows = self._local_term_rows({t for t in missing if t in idf_map}, self.SCORE_COLS)
-        for t in missing:
-            iv = idf_map.get(t)
-            if iv is None or t not in rows:
-                tcache[t] = (np.empty(0, np.int64), np.empty(0, np.float64))
-                continue
-            docs, tfs, norms = _decode_arrow_postings(rows[t])
-            adl = avgdl_map.get(t, self.avgdl) if avgdl_map else self.avgdl
-            tcache[t] = (docs, bm25.score_tf(tfs, norms, adl, iv))
-
-    def _local_flat_scores(
-        self,
-        node: Bool,
-        idf_map: dict[str, float],
-        avgdl_map: dict[str, float],
-        tcache: dict[str, tuple[np.ndarray, np.ndarray]],
-    ) -> tuple[np.ndarray, np.ndarray] | None:
-        """Driver-local mirror of :meth:`_score_flat_terms` — same
-        decode kernel, same per-doc sum/must/not semantics; returns
-        (doc_ids, scores) or None when ineligible."""
-        boosts: dict[str, float] = {}
-        musts, nots, scoring = [], [], []
-        for occur, c in node.clauses:
-            if occur == MUST:
-                if c.text not in idf_map:
-                    return np.empty(0, np.int64), np.empty(0, np.float64)
-                musts.append(c.text)
-            elif occur == MUST_NOT:
-                nots.append(c.text)
-            if occur != MUST_NOT and c.text in idf_map:
-                scoring.append(c.text)
-                boosts[c.text] = boosts.get(c.text, 0.0) + c.boost
-        if not scoring:
-            return np.empty(0, np.int64), np.empty(0, np.float64)
-        sset = sorted(set(scoring))
-        self._local_term_streams(set(sset), idf_map, avgdl_map, tcache)
-        docs = np.concatenate([tcache[t][0] for t in sset])
-        tscore = np.concatenate([tcache[t][1] * boosts[t] for t in sset])
-        uniq, inv = np.unique(docs, return_inverse=True)
-        total = np.zeros(uniq.size, np.float64)
-        np.add.at(total, inv, tscore)
-        keep = np.ones(uniq.size, dtype=bool)
-        if musts:
-            nmust = np.zeros(uniq.size, np.int64)
-            for mt in set(musts):
-                md = tcache[mt][0]
-                nmust[np.searchsorted(uniq, md)] += 1  # md ⊆ uniq (mt scores)
-            keep &= nmust == len(set(musts))
-        if nots:
-            not_terms = {t for t in nots if t in idf_map}
-            if not_terms:
-                nrows = self._local_posting_rows(not_terms, self.LOCAL_DOCS_COLS)
-                excl = self._local_decode_docs(nrows)
-                if excl.size:
-                    pos = np.searchsorted(excl, uniq)
-                    hit = (pos < excl.size) & (
-                        excl[np.minimum(pos, excl.size - 1)] == uniq
-                    )
-                    keep &= ~hit
-        if node.boost != 1.0:
-            total = total * node.boost
-        return uniq[keep], total[keep]
-
-    def _local_leaf_scores(
-        self, node: Node, idf_map, avgdl_map
-    ) -> tuple[np.ndarray, np.ndarray] | None:
-        """Driver-local scoring for a single non-Bool leaf; None when
-        the shape/budget is not locally eligible."""
-        empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-        if isinstance(node, Phrase):
-            if not self.positions:
-                return None
-            terms = set(node.terms)
-            if any(t not in idf_map for t in terms):
-                return empty
-            fld = node.field or self.fields[0]
-            idf_sum = sum(idf_map[t] for t in node.terms)
-            df_sum = sum(self.term_dfs(terms).values())
-            if node.slop == 0:
-                # vectorized exact-adjacency intersection: per slot i,
-                # sorted (doc << 32 | pos - i + m) keys; surviving keys
-                # after m-1 sorted-membership passes are the phrase
-                # start positions — same match set and score expression
-                # as the distributed merge kernel
-                if df_sum > self.LOCAL_MAX_POSTINGS:
-                    return None
-                rows = self._local_term_rows(terms, self.POS_COLS)
-                # pass 1: docs/tfs/norms only (cheap) → candidate doc
-                # set = intersection of every term's doc set (Lucene's
-                # lead-with-the-rarest conjunction, applied to all
-                # terms at once)
-                raw = {}
-                cand = None
-                for t in terms:
-                    sub = rows.get(t)
-                    if sub is None:
-                        return empty
-                    docs, tfs, norms = _decode_arrow_postings(sub)
-                    if docs.size == 0:
-                        return empty
-                    raw[t] = (sub, docs, tfs, norms)
-                    ds = np.sort(docs)
-                    cand = ds if cand is None else cand[self._sorted_member(ds, cand)]
-                    if cand.size == 0:
-                        return empty
-                # pass 2: decode POSITIONS for candidate docs only —
-                # non-candidate segments never leave their byte buffer
-                streams = {}
-                for t in terms:
-                    sub, docs, tfs, norms = raw[t]
-                    sel = self._sorted_member(cand, docs)
-                    docs, tfs, norms = docs[sel], tfs[sel], norms[sel]
-                    pb, _lens = _arrow_blocks(sub.column("b_pos"))
-                    vends = np.nonzero((pb & 0x80) == 0)[0] + 1
-                    all_tfs = raw[t][2]
-                    dend = vends[np.cumsum(all_tfs) - 1]
-                    dstart = np.concatenate(([0], dend[:-1]))
-                    s_, e_ = dstart[sel], dend[sel]
-                    lens = e_ - s_
-                    tot = int(lens.sum())
-                    gather = np.repeat(s_ - (np.cumsum(lens) - lens), lens) + np.arange(
-                        tot, dtype=np.int64
-                    )
-                    pos = decode_positions(pb[gather].tobytes(), tfs)
-                    if docs.size > 1 and (np.diff(docs) < 0).any():
-                        # row order inside part files is layout-
-                        # dependent (splits/appends) — doc-sort the
-                        # stream, carrying each doc's position segment
-                        o = np.argsort(docs, kind="stable")
-                        sstart = np.cumsum(tfs) - tfs
-                        so = tfs[o]
-                        tot = int(so.sum())
-                        g2 = np.repeat(
-                            sstart[o] - (np.cumsum(so) - so), so
-                        ) + np.arange(tot, dtype=np.int64)
-                        docs, tfs, norms, pos = docs[o], so, norms[o], pos[g2]
-                    streams[t] = (docs, tfs, norms, pos)
-                m = len(node.terms)
-                # rank-compress doc ids so (rank << 40 | pos) always
-                # fits int64 regardless of the corpus's doc-id range
-                union_docs = np.unique(
-                    np.concatenate([streams[t][0] for t in terms])
-                )
-                SHIFT = np.int64(1) << np.int64(40)
-                if any(
-                    streams[t][3].size and int(streams[t][3].max()) + m >= int(SHIFT)
-                    for t in terms
-                ):
-                    return None  # pathological positions — distributed path
-                keys = None
-                for i, t in enumerate(node.terms):
-                    docs, tfs, _n, pos = streams[t]
-                    ranks = np.searchsorted(union_docs, docs).astype(np.int64)
-                    ki = np.repeat(ranks, tfs) * SHIFT + (pos - i + m)
-                    if keys is None:
-                        keys = ki  # ascending: ranks asc, pos asc per doc
-                    else:
-                        p = np.searchsorted(ki, keys)
-                        hit = (p < ki.size) & (ki[np.minimum(p, ki.size - 1)] == keys)
-                        keys = keys[hit]
-                    if keys.size == 0:
-                        return empty
-                docs_hit = union_docs[keys // SHIFT]
-                uniqd, freq = np.unique(docs_hit, return_counts=True)
-                d0, _t0, n0, _p0 = streams[node.terms[0]]
-                dl = bm25.LENGTH_TABLE[n0[np.searchsorted(d0, uniqd)]].astype(
-                    np.float64
-                )
-                f = freq.astype(np.float64)
-                adl = self.field_stats[fld][1]
-                sc = idf_sum * f / (f + bm25.K1 * (1 - bm25.B + bm25.B * dl / adl))
-                return uniqd, sc * node.boost
-            # sloppy variants keep the (slower) merge kernels — bounded
-            # tighter because the sweep is single-threaded here
-            if df_sum > self.LOCAL_MAX_PHRASE_POSTINGS:
-                return None
-            rows = self._local_posting_rows(terms, self.POS_COLS)
-            stream = list(_decode_positions_stream(node.terms)(iter([rows.to_pandas()])))
-            if not stream:
-                return empty
-            scored = list(
-                _phrase_match_positions(
-                    len(node.terms),
-                    idf_sum,
-                    self.field_stats[fld][1],
-                    node.slop,
-                    order_tolerant=self.slop_order_tolerant and node.slop > 0,
-                )(iter(stream))
-            )
-            if not scored:
-                return empty
-            sp = scored[0] if len(scored) == 1 else pd.concat(scored, ignore_index=True)
-            return (
-                sp["doc_id"].to_numpy(np.int64),
-                sp["score"].to_numpy(np.float64) * node.boost,
-            )
-        if isinstance(node, (Prefix, Wildcard, TermRange, Fuzzy)):
-            f = getattr(node, "field", None) or self.fields[0]
-            if isinstance(node, Fuzzy):
-                exp = self._fuzzy_expand(node.text, f, node.max_edits)
-                dfs = self.term_dfs({kk for kk, _ in exp})
-                exp = [(kk, ed) for kk, ed in exp if kk in dfs]
-                if not exp:
-                    return empty
-                if sum(dfs.values()) > self.LOCAL_MAX_POSTINGS:
-                    return None
-                n_f, adl_f = self.field_stats[f]
-                idf_b = float(bm25.idf(max(dfs[kk] for kk, _ in exp), n_f))
-                pref_len = 0 if f == self.fields[0] else len(f) + 1
-                fboosts = {
-                    kk: self._fuzzy_boost(kk[pref_len:], node.text, ed)
-                    for kk, ed in exp
-                }
-                keys = set(fboosts)
-                fcache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-                self._local_term_streams(
-                    keys,
-                    {kk: idf_b for kk in keys},
-                    {kk: adl_f for kk in keys},
-                    fcache,
-                )
-                kk_sorted = sorted(keys)
-                docs = np.concatenate([fcache[kk][0] for kk in kk_sorted])
-                sc = np.concatenate(
-                    [fcache[kk][1] * fboosts[kk] for kk in kk_sorted]
-                )
-                if not docs.size:
-                    return empty
-                uniq, inv = np.unique(docs, return_inverse=True)
-                total = np.zeros(uniq.size, np.float64)
-                np.add.at(total, inv, sc)
-                if node.boost != 1.0:
-                    total = total * node.boost
-                return uniq, total
-            # constant-score expansions resolve to an exact vocab slice
-            terms_v = self._vocab[0]
-            if isinstance(node, Prefix):
-                key = self._key(f, node.prefix)
-                i0, i1 = self._vocab_prefix_slice(key)
-                sel = self._default_scope_sel(i0, i1, f)
-            elif isinstance(node, TermRange):
-                pref = "" if f == self.fields[0] else f + ":"
-                lo_key = pref + node.lo if node.lo is not None else (pref or None)
-                if node.hi is not None:
-                    hi_key, hi_incl = pref + node.hi, node.hi_incl
-                elif pref:
-                    hi_key, hi_incl = self._prefix_successor(pref), False
-                else:
-                    hi_key, hi_incl = None, True
-                i0, i1 = self._vocab_slice(
-                    lo_key, hi_key, node.lo_incl if node.lo is not None else True, hi_incl
-                )
-                sel = self._default_scope_sel(i0, i1, f)
-            else:  # Wildcard
-                import re as _re
-
-                rx = "".join(
-                    ".*" if c == "*" else "." if c == "?" else _re.escape(c)
-                    for c in node.pattern
-                )
-                pref = "" if f == self.fields[0] else f + ":"
-                lit = _re.split(r"[?*]", node.pattern)[0]
-                i0, i1 = self._vocab_prefix_slice(pref + lit)
-                sel = self._default_scope_sel(i0, i1, f)
-                pat = _re.compile("^" + _re.escape(pref) + rx + "$")
-                sel = sel[[bool(pat.match(terms_v[i])) for i in sel]] if sel.size else sel
-            if sel.size == 0:
-                return empty
-            if sel.size > self.LOCAL_MAX_EXPANSION:
-                return None
-            if int(self._vocab[1][sel].sum()) > self.LOCAL_MAX_POSTINGS:
-                return None
-            terms = {terms_v[i] for i in sel}
-            rows = self._local_posting_rows(terms, self.LOCAL_DOCS_COLS)
-            docs = self._local_decode_docs(rows)
-            if not docs.size:
-                return empty
-            return docs, np.full(docs.size, 1.0 * node.boost)
-        return None
-
     def _local_search(
         self,
         ast: Node,
-        flat: Node,
         k: int | None,
         mode: str,
-        tcache: dict[str, tuple[np.ndarray, np.ndarray]] | None = None,
+        cache: dict[str, _Postings] | None = None,
     ) -> dict[str, np.ndarray] | None:
-        """Attempt the whole query driver-side: the result columns (see
-        :meth:`_local_finish`), or None = take the distributed plan.
-        Covers exactly the shapes whose distributed results it provably
-        mirrors (same kernels, same combine semantics): flat
-        boolean-of-terms, and single Phrase / Prefix / Wildcard /
-        TermRange / Fuzzy leaves."""
+        """Evaluate the whole query on the driver: the result columns
+        (see :meth:`_local_finish`), or None = take the distributed
+        tier — ``k`` above LOCAL_MAX_K, no conv_offsets or driver
+        vocabulary, more than LOCAL_MAX_POSTINGS postings in its terms
+        and expansions, a constant-score expansion wider than
+        LOCAL_MAX_EXPANSION, or k=None with more than LOCAL_MAX_K hits.
+        ``cache`` shares decodes across a search_many batch.  The doc
+        range stops at the open's ``n_rows``: a compaction after the
+        open rewrites later appends' postings into files the open
+        cannot tell apart, and the open-time conv_offsets would
+        mislabel their docs."""
         if (
             (k is not None and k > self.LOCAL_MAX_K)
             or self._off_bc is None
             or self._driver_vocab() is None
         ):
             return None
-        keys = query_terms(ast)
-        idf_map, avgdl_map = self._maps_for(keys)
-        if tcache is None:
-            tcache = {}
-        if isinstance(flat, Bool) and self._is_flat_terms(flat):
-            if not self._local_budget_ok({t for t in keys if t in idf_map}):
-                return None
-            got = self._local_flat_scores(flat, idf_map, avgdl_map, tcache)
-        elif not isinstance(flat, Bool):
-            got = self._local_leaf_scores(flat, idf_map, avgdl_map)
-        elif (
-            isinstance(flat, Bool)
-            and len(flat.clauses) == 1
-            and flat.clauses[0][0] == SHOULD
-            and flat.boost == 1.0
+        ast, idf_map, avgdl_map, levels, widest = self._prepare(ast)
+        if (
+            widest > self.LOCAL_MAX_EXPANSION
+            or sum(self.term_dfs(set(levels)).values()) > self.LOCAL_MAX_POSTINGS
         ):
-            got = self._local_leaf_scores(flat.clauses[0][1], idf_map, avgdl_map)
-        else:
             return None
-        if got is None:
-            return None
-        docs, scores = got
-        # a compaction after this open rewrites later appends' postings
-        # into untagged files, which _at_open cannot skip: drop their
-        # docs, which the open-time conv_offsets would mislabel
-        keep = docs < self.n_rows
-        if not keep.all():
-            docs, scores = docs[keep], scores[keep]
+        cache = {} if cache is None else cache
+        need = {t for t, v in levels.items() if t not in cache or cache[t].level < v}
+        cols = (self.DOCS_COLS, self.SCORE_COLS, self.POS_COLS)[max(levels.values(), default=0)]
+        docs, scores = QueryEvaluator(
+            self._local_term_rows(need, cols) if need else {},
+            levels, idf_map, avgdl_map, 0, self.n_rows, self.positions,
+            self.slop_order_tolerant,
+            None if self.positions else partial(_doc_texts, self._doc_files),
+            self.simple, cache,
+        )(ast)
         if k is None and docs.size > self.LOCAL_MAX_K:
             return None
         return self._local_finish(docs, scores, k, mode)
@@ -2608,23 +1794,7 @@ class SearchEngine:
                 m = scores >= kth  # superset: all boundary ties kept
                 docs, scores = docs[m], scores[m]
         if mode == "conversations" and docs.size:
-            if not bool((docs[1:] > docs[:-1]).all()):
-                o0 = np.argsort(docs, kind="stable")
-                docs, scores = docs[o0], scores[o0]
-            b = np.searchsorted(docs, offs)
-            if b[0] != 0:
-                raise ValueError("candidate doc id below the first conversation")
-            counts = np.diff(np.append(b, docs.size))
-            gids = np.repeat(np.arange(offs.size, dtype=np.int64), counts)
-            starts = b[counts > 0]
-            gmax = np.maximum.reduceat(scores, starts)
-            seg = np.diff(np.append(starts, docs.size))
-            cand = scores == np.repeat(gmax, seg)
-            pos = np.flatnonzero(cand)
-            g = gids[pos]
-            first = np.concatenate(([True], g[1:] != g[:-1]))
-            wpos = pos[first]
-            wdocs, wscores, wgid = docs[wpos], scores[wpos], g[first]
+            wdocs, wscores, wgid = _conv_winners(docs, scores, offs)
             order = np.lexsort((wdocs, -wscores))[:k]
             docs, scores, oi = wdocs[order], wscores[order], wgid[order]
         else:
@@ -2643,16 +1813,77 @@ class SearchEngine:
         "rank int, doc_id long, conv_id string, turn_idx int, score double"
     )
 
-    # ------------------------------------------------------------ public API
 
-    def _score_resolved(self, ast: Node) -> DataFrame:
-        idf_map, avgdl_map = self._maps_for(query_terms(ast))
-        out = self._score_node(ast, idf_map, avgdl_map)
-        return out if out is not None else self._empty_scores()
+    # ------------------------------------------------------------ distributed tier
+
+    def _shard_count(self) -> int:
+        """Doc-range shards of a distributed search: the session's default
+        parallelism, the floor of a sharded build's shard count."""
+        return self.spark.sparkContext.defaultParallelism
+
+    def _shard_plan(
+        self, ast: Node, k: int | None = None, collapse: bool = False
+    ) -> SimpleNamespace | None:
+        """What every shard task of :func:`_shard_scorer` needs, built on
+        the driver (None when the query reads no key the index holds):
+        the rewritten ast with its idf/avgdl maps and key levels, the
+        shards' doc bounds over the open's ``n_rows`` docs, the keys and
+        file list of each postings part they live in (taken as of the
+        open), the columns their levels read, and doc_index's files on
+        an index without positions.  With conv_offsets, each bound moves
+        up to the next conversation's first doc, so a conversation lies
+        in one shard, as in a sharded build's row-balanced shards (and
+        ``collapse`` has each shard keep its conversations' best hits)."""
+        ast, idf_map, avgdl_map, levels, _ = self._prepare(ast)
+        if not levels:
+            return None
+        terms: dict[int, list[str]] = {}
+        for t in sorted(levels):
+            terms.setdefault(term_part_py(t, self.num_parts), []).append(t)
+        n = self._shard_count()
+        bounds = np.arange(n + 1) * self.n_rows // n
+        offs = None if self._off_bc is None else self._off_bc.value[1]
+        if offs is not None:
+            bounds = np.append(offs, self.n_rows)[np.searchsorted(offs, bounds)]
+        return SimpleNamespace(
+            ast=ast, idf=idf_map, avgdl=avgdl_map, levels=levels, k=k,
+            n=n, bounds=bounds, offs=offs if collapse else None, terms=terms,
+            files={p: self._part_files(p) for p in terms},
+            cols=(self.DOCS_COLS, self.SCORE_COLS, self.POS_COLS)[max(levels.values())],
+            positions=self.positions, order_tolerant=self.slop_order_tolerant,
+            simple=self.simple, doc_files=None if self.positions else self._doc_files,
+        )
+
+    def _shard_scores(
+        self, ast: Node, k: int | None = None, collapse: bool = False
+    ) -> DataFrame:
+        """(doc_id, score) of every doc matching the field-resolved
+        ``ast`` — each shard's top ``k`` only, when given, of its
+        conversations' best hits with ``collapse`` — from ONE mapInArrow
+        stage with no exchange: one task per doc-range shard (see
+        :func:`_shard_scorer`)."""
+        plan = self._shard_plan(ast, k, collapse)
+        if plan is None:
+            return self._empty_scores()
+        return self.spark.range(plan.n, numPartitions=plan.n).mapInArrow(
+            _shard_scorer(plan), SCORE_SCHEMA
+        )
+
+    def _distributed(self, ast: Node, k: int | None, mode: str, with_text: bool) -> DataFrame:
+        """The distributed tier: the shards' (doc_id, score) through
+        :meth:`_finish`.  With conv_offsets the shards collapse
+        conversations themselves (each lies in one shard), so both modes
+        finish as a top-k; without, _finish's hash aggregation does."""
+        collapse = mode == "conversations" and self._off_bc is not None
+        top = k if mode != "conversations" or collapse else None
+        scores = self._shard_scores(ast, top, collapse)
+        return self._finish(scores, k, "turns" if collapse else mode, with_text)
+
+    # ------------------------------------------------------------ public API
 
     def score(self, query: str) -> DataFrame:
         """(doc_id, score) for every matching doc — exhaustive semantics."""
-        return self._score_resolved(self._resolve_node(parse(query, simple=self.simple)))
+        return self._shard_scores(self._resolve_node(parse(query, simple=self.simple)))
 
     def search(
         self,
@@ -2665,28 +1896,21 @@ class SearchEngine:
         """Top-k search. Returns (rank, doc_id, conv_id, turn_idx, score).
 
         When the driver-local tier serves the query (no ``with_text``,
-        ``k`` up to ``LOCAL_MAX_K``, a supported shape within the local
-        budgets), the result is a :class:`LocalResult`: its ``collect``,
-        ``toPandas``, ``count``, ``columns`` and ``schema`` answer on the
-        driver with no JVM call, and any other DataFrame use builds the
-        JVM relation first.  Every other query returns a plain
-        distributed DataFrame.  ``use_wand`` is accepted and ignored:
-        every query takes the same exact plan."""
+        ``k`` up to ``LOCAL_MAX_K``, within the local budgets; every
+        query shape), the result is a :class:`LocalResult`: its
+        ``collect``, ``toPandas``, ``count``, ``columns`` and ``schema``
+        answer on the driver with no JVM call, and any other DataFrame
+        use builds the JVM relation first.  Every other query returns a
+        plain DataFrame over the distributed tier: the same evaluator
+        per doc-range shard in one mapInArrow stage, then
+        :meth:`_finish`.  ``use_wand`` is accepted and ignored: every
+        query takes the same exact plan."""
         ast = self._resolve_node(parse(query, simple=self.simple))
         if not with_text:
-            # driver-local fast path for bounded queries (exact same
-            # kernels and combine semantics as the distributed plan);
-            # a bare leaf on a multi-field index resolves to a nested
-            # SHOULD-of-per-field-Terms Bool, flattened so it stays a
-            # flat disjunction (score = sum over matched keys either way)
-            lr = self._local_search(ast, _flatten_shoulds(ast), k, mode)
+            lr = self._local_search(ast, k, mode)
             if lr is not None:
                 return LocalResult(lr, self.RESULT_SCHEMA, self.spark)
-        scores = self._score_resolved(ast)
-        nparts = self._serve_parts(
-            sum(self.term_dfs(query_terms(ast)).values())
-        )
-        return self._finish(scores, k, mode, with_text, nparts=nparts)
+        return self._distributed(ast, k, mode, with_text)
 
     BATCH_SCHEMA = (
         "query_id string, rank int, doc_id long, conv_id string, turn_idx int, score double"
@@ -2695,31 +1919,20 @@ class SearchEngine:
     def search_many(
         self, queries: dict[str, tuple[str, int, str]], use_wand: bool | None = None
     ) -> DataFrame:
-        """Run a batch of queries in ONE Spark job.
+        """Run a batch of queries: query_id -> (query_string, k, mode).
+        Returns one DataFrame (query_id, rank, doc_id, conv_id, turn_idx,
+        score).
 
-        queries: query_id -> (query_string, k, mode).  Returns a single
-        DataFrame (query_id, rank, doc_id, conv_id, turn_idx, score).
-
-        Flat boolean-of-terms queries (after multi-field flattening) run
-        through a SHARED-SCAN plan: the union of every flat query's
-        terms is read and decoded ONCE, a broadcast clause table fans
-        the scored stream out per query, and one aggregation + one
-        ranking window finish all of them — postings IO and decode are
-        amortized across the batch instead of re-scanned per query (the
-        batch-serving shape at 100 TB).  Non-flat queries (phrase,
-        prefix, fuzzy, nested booleans) fall back to per-query plans
-        unioned into the same result.  ``use_wand`` is accepted and
-        ignored, as in :meth:`search`.
-
-        A batch whose members the driver-local tier serves in full (and
-        an empty batch) returns one :class:`LocalResult`, which answers
-        ``collect``/``toPandas``/``count``/``columns``/``schema`` with no
-        JVM call; a mixed batch unions the local rows (materialized as a
-        JVM relation) with the distributed plans.
-        """
+        The members the driver-local tier serves share one decode cache,
+        so each term is decoded once per batch, and fold into ONE
+        :class:`LocalResult`, which answers ``collect``/``toPandas``/
+        ``count``/``columns``/``schema`` with no JVM call; a batch they
+        fill (and an empty batch) returns it as is.  Each other member
+        runs its own distributed search plan, unioned with the local
+        rows (materialized as a JVM relation).  ``use_wand`` is accepted
+        and ignored, as in :meth:`search`."""
         # ONE df-stat lookup for the whole batch: pre-warm the term cache
-        # with the union of every query's terms, so every plan below
-        # fires zero additional driver round-trips for stats
+        # with the union of every query's terms
         resolved: dict[str, tuple[Node, int | None, str]] = {}
         all_terms: set[str] = set()
         for qid, (q, k, mode) in queries.items():
@@ -2727,19 +1940,16 @@ class SearchEngine:
             resolved[qid] = (ast, k, mode)
             all_terms |= query_terms(ast)
         batch_df = sum(self.term_dfs(all_terms).values())
-        # driver-local members first (same eligibility and results as
-        # the per-query fast path): their rows fold into ONE local
-        # result — no Spark work for a batch of bounded queries — and
-        # the shared term cache decodes each term once.  A batch whose
-        # terms hold more than LOCAL_POOL_MIN_POSTINGS postings runs
-        # them on 4 threads, whose decode and scoring passes overlap in
-        # numpy; a smaller one runs them one after another, because its
-        # members' numpy work is too small to overlap under the GIL.
-        batch_tcache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+        # a batch whose terms hold more than LOCAL_POOL_MIN_POSTINGS
+        # postings runs its local members on 4 threads, whose decode and
+        # scoring passes overlap in numpy; a smaller one runs them one
+        # after another, because its members' numpy work is too small to
+        # overlap under the GIL
+        cache: dict[str, _Postings] = {}
 
         def _local_one(item):
             qid, (ast, k, mode) = item
-            return qid, self._local_search(ast, _flatten_shoulds(ast), k, mode, tcache=batch_tcache)
+            return qid, self._local_search(ast, k, mode, cache)
 
         if len(resolved) > 1 and batch_df > self.LOCAL_POOL_MIN_POSTINGS:
             from concurrent.futures import ThreadPoolExecutor
@@ -2749,16 +1959,6 @@ class SearchEngine:
         else:
             local_results = [_local_one(item) for item in resolved.items()]
         served = [(qid, lr) for qid, lr in local_results if lr is not None]
-        for qid, _lr in served:
-            resolved.pop(qid)
-        shared: dict[str, tuple[Bool, int | None, str]] = {}
-        nonflat: list[tuple[str, int | None, str]] = []
-        for qid, (ast, k, mode) in resolved.items():
-            flat = _flatten_shoulds(ast)
-            if isinstance(flat, Bool) and self._is_flat_terms(flat):
-                shared[qid] = (flat, k, mode)
-            else:
-                nonflat.append((qid, k, mode))
         local = (
             LocalResult(
                 {
@@ -2774,123 +1974,15 @@ class SearchEngine:
             if served
             else LocalResult.empty(self.BATCH_SCHEMA, self.spark)
         )
-        if not resolved:
+        rest = [(qid, lr) for qid, lr in local_results if lr is None]
+        if not rest:
             return local  # every member served locally, or an empty batch
         parts = [local] if served else []
-        futures = []
-        ex = None
-        if nonflat:
-            # non-flat members (phrase/prefix/fuzzy/nested) fall back to
-            # per-query plans; BUILD them in parallel driver threads —
-            # plan construction is driver-bound (py4j round-trips plus
-            # the occasional lead-docs/broadcast job), so a batch with
-            # several such members otherwise serializes that latency.
-            # All stats are prewarmed above, so threads share read-only
-            # caches; the plans still execute in the ONE union action.
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _plan(item):
-                qid, k, mode = item
-                return qid, self.search(queries[qid][0], k=k, mode=mode)
-
-            ex = ThreadPoolExecutor(max_workers=min(4, len(nonflat)))
-            futures = [ex.submit(_plan, it) for it in nonflat]
-        try:
-            if shared:
-                # build the shared plan WHILE the non-flat threads work —
-                # both are driver-bound, so overlapping them hides the
-                # shorter latency entirely
-                parts.append(self._search_many_shared(shared))
-            for fut in futures:
-                qid, df = fut.result()
-                parts.append(df.withColumn("query_id", F.lit(qid)))
-        finally:
-            if ex is not None:
-                ex.shutdown(wait=False)
+        for qid, _ in rest:
+            ast, k, mode = resolved[qid]
+            parts.append(self._distributed(ast, k, mode, False).withColumn("query_id", F.lit(qid)))
         out = reduce(lambda a, b: a.unionByName(b), parts)
         return out.select("query_id", *RESULT_COLS)
-
-    def _search_many_shared(
-        self, flat: dict[str, tuple[Bool, int | None, str]]
-    ) -> DataFrame:
-        """One postings scan + one decode for a batch of flat queries.
-
-        Clause table rows: (query_id, term, boost, is_must, is_not);
-        terms used ONLY under MUST_NOT across the whole batch take the
-        docs-only decode (no tf/norm IO) and ride in as score-0 rows."""
-        clause_rows: list[tuple[str, str, float, bool, bool]] = []
-        cfg_rows: list[tuple[str, int, bool, int, float]] = []
-        scoring_any: set[str] = set()
-        referenced: set[str] = set()
-        for qid, (node, k, mode) in flat.items():
-            boosts: dict[str, float] = {}
-            musts: set[str] = set()
-            nots: set[str] = set()
-            for occur, c in node.clauses:
-                referenced.add(c.text)
-                if occur == MUST_NOT:
-                    nots.add(c.text)
-                else:
-                    boosts[c.text] = boosts.get(c.text, 0.0) + c.boost
-                    if occur == MUST:
-                        musts.add(c.text)
-            scoring_any |= set(boosts)
-            for t, b in boosts.items():
-                clause_rows.append((qid, t, float(b), t in musts, False))
-            for t in nots:
-                clause_rows.append((qid, t, 0.0, False, True))
-            cfg_rows.append(
-                (
-                    qid,
-                    int(k) if k is not None else (1 << 31) - 1,
-                    mode == "conversations",
-                    len(musts),
-                    float(node.boost),
-                )
-            )
-        idf_map, avgdl_map = self._maps_for(referenced)
-        score_terms = {t for t in scoring_any if t in idf_map}
-        not_only = {t for t in referenced - scoring_any if t in idf_map}
-        if not score_terms:
-            return LocalResult.empty(self.BATCH_SCHEMA, self.spark)
-        scored = self._scored_terms_df(score_terms, idf_map, avgdl_map)
-        if not_only:
-            scored = scored.unionByName(
-                self._rows_for_terms(not_only, ("term",) + self.DOCS_COLS)
-                .mapInPandas(_decode_docs_only_keyed(), "term string, doc_id long")
-                .withColumn("score", F.lit(0.0))
-            )
-        # ONE doc_id exchange of the (term, doc, score) stream — the
-        # per-query fan-out (which would multiply the stream by the
-        # number of queries referencing each term — measured 557k -> 2.8M
-        # rows on the bench suite) happens INSIDE the vectorized kernel
-        # as term-indexed boost/must/not matrix lookups + per-doc
-        # reduceat, never as materialized rows; each partition also
-        # prunes to per-query top-k / best-per-conv before anything
-        # shuffles again.
-        enriched = scored.repartition(
-            self._serve_parts(sum(self.term_dfs(referenced).values())), "doc_id"
-        )
-        off_bc = self._off_broadcast()
-        if off_bc is None:
-            # non-dense index: conv/turn come from the doc_stats join;
-            # dense indexes attach them INSIDE the kernel via the
-            # broadcast conv_offsets searchsorted (no join, no scan)
-            enriched = enriched.join(
-                self.doc_stats.select("doc_id", "conv_id", "turn_idx"), "doc_id"
-            )
-        pruned = enriched.mapInPandas(
-            _shared_batch_kernel(clause_rows, cfg_rows, off_bc), BATCH_ROW_SCHEMA
-        )
-        return (
-            pruned.repartition(min(len(flat), 32), "query_id")
-            .mapInPandas(
-                _finalize_batch(),
-                "query_id string, rank int, doc_id long, conv_id string, "
-                "turn_idx int, score double",
-            )
-            .select("query_id", *RESULT_COLS)
-        )
 
     ATTACHED_SCHEMA = "doc_id long, score double, conv_id string, turn_idx int"
 
@@ -2925,7 +2017,6 @@ class SearchEngine:
         k: int | None,
         mode: str,
         with_text: bool,
-        nparts: int | None = None,
     ) -> DataFrame:
         if mode != "conversations" and k is not None:
             # turns mode: the top-k winners are fully determined by
@@ -2940,11 +2031,6 @@ class SearchEngine:
             if with_text:
                 out = out.join(self.doc_index.select("doc_id", "text"), "doc_id", "left")
             return out
-        if nparts is not None:
-            # candidate-sized stream: collapse the upstream reduce
-            # partitioning to the df-derived serving width before the
-            # Python attach pass (coalesce — no extra shuffle)
-            scores = scores.coalesce(nparts)
         enriched = self._attach_stats(scores)
         if mode == "conversations":
             # best-per-conv as a hash aggregation, NOT a window: structs
@@ -2960,8 +2046,6 @@ class SearchEngine:
                     F.col("turn_idx"),
                 )
             ).alias("_b")
-            if nparts is not None:
-                enriched = enriched.repartition(nparts, "conv_id")
             enriched = (
                 enriched.groupBy("conv_id")
                 .agg(best)
@@ -2972,11 +2056,10 @@ class SearchEngine:
                     F.col("_b.score").alias("score"),
                 )
             )
-        ordered = enriched.orderBy(F.desc("score"), F.asc("doc_id"))
         if k is not None:
-            ordered = ordered.limit(k)
+            enriched = enriched.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         wr = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        out = ordered.withColumn("rank", F.row_number().over(wr)).select(*RESULT_COLS)
+        out = enriched.withColumn("rank", F.row_number().over(wr)).select(*RESULT_COLS)
         if with_text:
             out = out.join(self.doc_index.select("doc_id", "text"), "doc_id", "left")
         return out

@@ -39,6 +39,37 @@ def spark_jobs(spark):
 
 
 @pytest.fixture(scope="session")
+def assert_shards_agree():
+    """``assert_shards_agree(local, dist, queries)``: ``dist``, an engine
+    forced onto the distributed tier, run on 1, 3 and the default number
+    of doc-range shards, gives the rows the local tier gives for every
+    query in both modes, with k=None (every hit)."""
+    from emailindexer_spark.plans.results import LocalResult
+
+    def rows(df):
+        return [(r.rank, r.doc_id, r.conv_id, r.turn_idx, round(r.score, 9)) for r in df.collect()]
+
+    def check(local, dist, queries):
+        want = {}
+        for q in queries:
+            for mode in ("turns", "conversations"):
+                res = local.search(q, k=None, mode=mode)
+                assert isinstance(res, LocalResult), (q, mode)
+                want[q, mode] = rows(res)
+        assert any(want.values())
+        for n in (1, 3, None):
+            if n is not None:
+                dist._shard_count = lambda n=n: n
+            try:
+                for (q, mode), w in want.items():
+                    assert rows(dist.search(q, k=None, mode=mode)) == w, (n, q, mode)
+            finally:
+                dist.__dict__.pop("_shard_count", None)
+
+    return check
+
+
+@pytest.fixture(scope="session")
 def corpus_pdf():
     return make_transcripts(3000, seed=42)
 

@@ -179,64 +179,98 @@ def test_term_dict_matches_postings(spark, index_dir):
     assert got == exp
 
 
-def test_prefix_plan_prunes_postings_partitions(spark, index_dir):
+def _shard_reads(monkeypatch, eng, node):
+    """Run every shard task of a distributed search of ``node`` in this
+    process: (its hits as a doc -> score map, the (files, terms, columns)
+    of each postings scan the tasks made, the expansion's keys)."""
+    import pyarrow as pa
+
+    import emailindexer_spark.plans.planner as P
+
+    plan = eng._shard_plan(eng._resolve_node(node))
+    scans, real = [], P._scan_files
+
+    def spy(files, terms, cols, lo=None, hi=None):
+        scans.append((list(files), list(terms), tuple(cols)))
+        return real(files, terms, cols, lo, hi)
+
+    monkeypatch.setattr(P, "_scan_files", spy)
+    ids = pa.record_batch([pa.array(range(plan.n), pa.int64())], names=["id"])
+    hits = {}
+    for b in P._shard_scorer(plan)(iter([ids])):
+        hits.update(zip(b.column("doc_id").to_pylist(), b.column("score").to_pylist()))
+    return hits, scans, plan.ast.keys
+
+
+def _part_of(path):
+    return int(path.split("part=")[1].split(os.sep)[0])
+
+
+def _full_scan_docs(index_dir, match):
+    """Doc ids of every postings row whose term ``match`` accepts, over
+    every postings file (no partition pruning)."""
+    import numpy as np
+    import pyarrow.parquet as papq
+
+    from emailindexer_spark.plans.planner import _decode_arrow_docs
+
+    docs = []
+    for f in glob.glob(os.path.join(index_dir, "postings", "part=*", "*.parquet")):
+        t = papq.read_table(f, columns=["term", "b_first", "b_docs"])
+        keep = [bool(match(x)) for x in t.column("term").to_pylist()]
+        docs.append(_decode_arrow_docs(t.filter(keep)))
+    return set(np.concatenate(docs).tolist())
+
+
+def test_prefix_plan_prunes_postings_partitions(spark, monkeypatch, index_dir):
+    """A distributed prefix search's shard tasks open only the ``part=``
+    directories of the expansion's terms, read doc ids only, and find
+    the docs a decode of every postings file finds."""
+    from emailindexer_spark.plans.builder import term_part_py
     from emailindexer_spark.plans.parser import Prefix
     from emailindexer_spark.plans.planner import SearchEngine
 
     eng = SearchEngine(spark, index_dir)
     assert eng.term_dict is not None
-    node = Prefix(prefix="t")
-    df = eng._leaf_df(node, {})
-    plan = df._jdf.queryExecution().toString()
-    # the postings scan must carry a partition filter (part IN ...), i.e.
-    # only term_dict-matched part= directories are read for a prefix
-    assert "PartitionFilters" in plan
-    import re as _re
-
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln and "part#" in ln]
-    assert pf and _re.search(r"part#\d+L? IN \(", pf[0]), pf
-    # and the result equals the dictionary-less full-scan path
-    from emailindexer_spark.plans.planner import _decode_docs_only
-
-    full = eng.postings.where(F.col("term").startswith("t"))
-    exp = {
-        r["doc_id"]
-        for r in full.mapInPandas(_decode_docs_only(), "doc_id long").distinct().collect()
-    }
-    got = {r["doc_id"] for r in df.select("doc_id").collect()}
-    assert got == exp and got
+    hits, scans, keys = _shard_reads(monkeypatch, eng, Prefix(prefix="t"))
+    parts = {term_part_py(t, eng.num_parts) for t in keys}
+    opened = {_part_of(f) for files, _, _ in scans for f in files}
+    assert keys and opened == parts
+    assert all("b_tfs" not in cols and "b_pos" not in cols for _, _, cols in scans)
+    exp = _full_scan_docs(index_dir, lambda t: t.startswith("t"))
+    assert set(hits) == exp and exp
+    assert set(hits.values()) == {1.0}
+    got = {r["doc_id"] for r in eng._shard_scores(eng._resolve_node(Prefix(prefix="t"))).collect()}
+    assert got == exp
 
 
-def test_fuzzy_and_wildcard_plans_prune_partitions(spark, index_dir):
+def test_fuzzy_and_wildcard_plans_prune_partitions(spark, monkeypatch, index_dir):
+    """Fuzzy and wildcard expansions resolve to concrete terms, so their
+    shard tasks open only those terms' ``part=`` directories; fuzzy's
+    blended BM25 reads tf/norm payloads but never positions."""
+    import re
+
+    from emailindexer_spark.plans.builder import term_part_py
     from emailindexer_spark.plans.parser import Fuzzy, Wildcard
     from emailindexer_spark.plans.planner import SearchEngine
 
     eng = SearchEngine(spark, index_dir)
     base = eng.term_dict.orderBy("term").first()["term"]
-
-    # fuzzy: expansion resolves concrete terms, so the postings scan must
-    # carry a part IN (...) partition filter like any term lookup
-    df = eng._leaf_df(Fuzzy(text=base, max_edits=1), {})
-    assert df is not None
-    plan = df._jdf.queryExecution().toString()
-    import re as _re
-
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln and "part#" in ln]
-    # a single-expansion fuzzy collapses IN (...) to an equality filter
-    assert pf and _re.search(r"part#\d+L? (IN \(|= )", pf[0]), plan
-    # blended-freq scoring reads tf/norm payloads — but never positions
-    rs = [ln for ln in plan.splitlines() if "ReadSchema" in ln and "b_docs" in ln]
-    assert rs and "b_tfs" in rs[0] and "b_norms" in rs[0] and "b_pos" not in rs[0], rs
-    assert df.count() > 0
-
-    # wildcard with a literal prefix: term_dict-driven partition pruning
-    w = Wildcard(pattern=base[:1] + "?" + base[2:] if len(base) > 2 else base + "*")
-    dfw = eng._leaf_df(w, {})
-    assert dfw is not None
-    planw = dfw._jdf.queryExecution().toString()
-    pfw = [ln for ln in planw.splitlines() if "PartitionFilters" in ln and "part#" in ln]
-    assert pfw and _re.search(r"part#\d+L? (IN \(|= )", pfw[0]), planw
-    assert dfw.count() > 0
+    pattern = base[:1] + "?" + base[2:] if len(base) > 2 else base + "*"
+    for node, tf_cols in ((Fuzzy(text=base, max_edits=1), True), (Wildcard(pattern=pattern), False)):
+        hits, scans, keys = _shard_reads(monkeypatch, eng, node)
+        parts = {term_part_py(t, eng.num_parts) for t in keys}
+        opened = {_part_of(f) for files, _, _ in scans for f in files}
+        assert keys and hits and opened == parts, node
+        for _, terms, cols in scans:
+            assert set(terms) <= set(keys) and "b_pos" not in cols, node
+            assert ("b_tfs" in cols and "b_norms" in cols) == tf_cols, node
+        monkeypatch.undo()
+    rx = re.compile(
+        "^" + "".join(".*" if c == "*" else "." if c == "?" else re.escape(c) for c in pattern) + "$"
+    )
+    exp = _full_scan_docs(index_dir, lambda t: ":" not in t and rx.match(t))
+    assert set(hits) == exp
 
 
 def test_load_transcripts_jsonl_and_csv(spark, tmp_path):

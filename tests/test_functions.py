@@ -588,10 +588,23 @@ class TestRunEncoder:
 
 
 class TestFrameDecode:
-    """The executor-lifted frame decoders (planner._decode_frame_*)
-    must equal the per-block reference decode for ANY mix of terms,
-    rows and block sizes (multi-row terms, single-byte and multi-byte
-    varbyte deltas, segment-boundary leak correction)."""
+    """The Arrow posting decoders (planner._decode_arrow_*) must equal
+    the per-block reference decode_block for ANY mix of terms, rows and
+    block sizes (multi-row terms, single-byte and multi-byte varbyte
+    deltas, segment-boundary leak correction)."""
+
+    @staticmethod
+    def _table(rows):
+        import pyarrow as pa
+
+        blocks = pa.list_(pa.binary())
+        return pa.table(
+            {
+                "term": pa.array([r["term"] for r in rows], pa.string()),
+                "b_first": pa.array([r["b_first"] for r in rows], pa.list_(pa.int64())),
+                **{c: pa.array([r[c] for r in rows], blocks) for c in ("b_docs", "b_tfs", "b_norms")},
+            }
+        )
 
     @settings(max_examples=40, deadline=None)
     @given(
@@ -604,8 +617,8 @@ class TestFrameDecode:
     )
     def test_frame_decode_matches_per_block(self, doc_lists, tf_mod):
         from emailindexer_spark.plans.planner import (
-            _decode_frame_docs,
-            _decode_frame_postings,
+            _decode_arrow_docs,
+            _decode_arrow_postings,
         )
 
         rows = []
@@ -617,47 +630,47 @@ class TestFrameDecode:
             rows.append(
                 {
                     "term": f"t{j}",
-                    "b_first": list(eb.first_doc),
+                    "b_first": [int(x) for x in eb.first_doc],
                     "b_docs": eb.doc_bytes,
                     "b_tfs": eb.tf_bytes,
                     "b_norms": eb.norm_bytes,
                 }
             )
-        pdf = pd.DataFrame(rows)
+        table = self._table(rows)
 
         ref_d, ref_t, ref_n = [], [], []
-        for r in pdf.itertuples(index=False):
-            for i in range(len(r.b_docs)):
+        for r in rows:
+            for i in range(len(r["b_docs"])):
                 d, t, n = decode_block(
-                    int(r.b_first[i]), r.b_docs[i], r.b_tfs[i], r.b_norms[i]
+                    r["b_first"][i], r["b_docs"][i], r["b_tfs"][i], r["b_norms"][i]
                 )
                 ref_d.append(d), ref_t.append(t), ref_n.append(n)
         ref_d = np.concatenate(ref_d)
 
-        got_d, got_t, got_n = _decode_frame_postings(pdf)
+        got_d, got_t, got_n = _decode_arrow_postings(table)
         assert (got_d == ref_d).all()
         assert (got_t == np.concatenate(ref_t)).all()
         assert (got_n == np.concatenate(ref_n)).all()
         # docs-only variant: segments recovered from continuation bits
-        assert (_decode_frame_docs(pdf[["term", "b_first", "b_docs"]]) == ref_d).all()
+        assert (_decode_arrow_docs(table.select(["term", "b_first", "b_docs"])) == ref_d).all()
 
     def test_frame_decode_empty(self):
         from emailindexer_spark.plans.planner import (
-            _decode_frame_docs,
-            _decode_frame_postings,
+            _decode_arrow_docs,
+            _decode_arrow_postings,
         )
 
-        pdf = pd.DataFrame({"term": [], "b_first": [], "b_docs": [], "b_tfs": [], "b_norms": []})
-        d, t, n = _decode_frame_postings(pdf)
+        table = self._table([])
+        d, t, n = _decode_arrow_postings(table)
         assert d.size == t.size == n.size == 0
-        assert _decode_frame_docs(pdf).size == 0
+        assert _decode_arrow_docs(table).size == 0
 
     def test_frame_decode_rejects_empty_blocks(self):
-        """An empty block would shift every later doc id of the frame;
+        """An empty block would shift every later doc id of the rows;
         the decoders raise instead."""
         from emailindexer_spark.functions.codec import varbyte_encode
         from emailindexer_spark.plans.planner import (
-            _decode_frame_docs,
+            _decode_arrow_docs,
             _segmented_delta_docs,
         )
 
@@ -665,6 +678,68 @@ class TestFrameDecode:
         firsts = np.array([5, 9, 20])
         with pytest.raises(ValueError, match="non-empty"):
             _segmented_delta_docs(buf, firsts, np.array([2, 0, 2]))
-        pdf = pd.DataFrame({"term": ["t"], "b_first": [[5, 20]], "b_docs": [[buf, b""]]})
+        row = {"term": "t", "b_first": [5, 20], "b_docs": [buf, b""], "b_tfs": [b"", b""], "b_norms": [b"", b""]}
         with pytest.raises(ValueError, match="non-empty"):
-            _decode_frame_docs(pdf)
+            _decode_arrow_docs(self._table([row]))
+
+    def test_row_decode_keeps_a_doc_range_and_checks_rows(self):
+        """planner._decode_rows against the per-row reference on random
+        rows of one term, given in any order: the postings inside a doc
+        range [lo, hi), ascending, with their tf, norm and positions; a
+        row whose range overlaps another's, or whose last_doc is cut
+        below its last doc, raises naming the row."""
+        import pyarrow as pa
+
+        from emailindexer_spark.functions.codec import encode_positions
+        from emailindexer_spark.plans.planner import _decode_rows
+
+        rng = np.random.default_rng(0)
+        schema = pa.schema(
+            [("term", pa.string()), ("split_id", pa.int32()), ("first_doc", pa.int64()), ("last_doc", pa.int64()),
+             ("b_first", pa.list_(pa.int64()))]
+            + [(c, pa.list_(pa.binary())) for c in ("b_docs", "b_tfs", "b_norms", "b_pos")]
+        )
+
+        def row(sid, docs):
+            tfs = rng.integers(1, 4, docs.size)
+            norms = rng.integers(0, 200, docs.size)
+            pos = [np.sort(rng.choice(50, t, replace=False)) for t in tfs]
+            eb = encode_blocks(docs, tfs, norms, block_size=4)
+            b_pos = [
+                encode_positions(np.concatenate(pos[i:i + 4]), tfs[i:i + 4]) for i in range(0, docs.size, 4)
+            ]
+            r = {
+                "term": "t", "split_id": sid, "first_doc": int(docs[0]), "last_doc": int(docs[-1]),
+                "b_first": [int(x) for x in eb.first_doc], "b_docs": eb.doc_bytes, "b_tfs": eb.tf_bytes,
+                "b_norms": eb.norm_bytes, "b_pos": b_pos,
+            }
+            return r, (docs, tfs, norms, pos)
+
+        for trial in range(150):
+            docs = np.sort(rng.choice(1000, int(rng.integers(1, 60)), replace=False))
+            k = min(docs.size - 1, int(rng.integers(0, 4)))
+            cuts = np.sort(rng.choice(np.arange(1, docs.size), k, replace=False)) if k else []
+            rows, refs = zip(*(row(i, d) for i, d in enumerate(np.split(docs, cuts))))
+            table = pa.Table.from_pylist([rows[i] for i in rng.permutation(len(rows))], schema=schema)
+            lo = int(rng.integers(0, 500))
+            hi = int(rng.integers(lo + 1, 1001))
+            d, t, n = (np.concatenate([r[i] for r in refs]) for i in range(3))
+            pos = [p for r in refs for p in r[3]]
+            keep = np.flatnonzero((d >= lo) & (d < hi))
+            got = _decode_rows(table, 2, lo, hi)
+            assert (got.docs == d[keep]).all() and (got.tfs == t[keep]).all(), trial
+            assert (got.norms == n[keep]).all(), trial
+            if keep.size:
+                want = np.concatenate([pos[i] for i in keep])
+                assert (got.positions(np.arange(keep.size)) == want).all(), trial
+            assert (_decode_rows(table, 0, lo, hi).docs == d[keep]).all(), trial
+            if len(rows) > 1:
+                bad = [dict(r) for r in rows]
+                bad[1]["first_doc"] = bad[0]["last_doc"]
+                with pytest.raises(ValueError, match=r"term 't' \(split_id [01]\)"):
+                    _decode_rows(pa.Table.from_pylist(bad, schema=schema), 1, 0, 1000)
+            if rows[0]["first_doc"] < rows[0]["last_doc"]:
+                bad = [dict(r) for r in rows]
+                bad[0]["last_doc"] -= 1
+                with pytest.raises(ValueError, match=r"term 't' \(split_id 0\)"):
+                    _decode_rows(pa.Table.from_pylist(bad, schema=schema), 1, 0, 1000)

@@ -190,3 +190,14 @@ def test_multifield_randomized_parity(mf_engine, mf_oracle, corpus_pdf):
         checked += 1
         nonempty += bool(got)
     assert checked == 25 and nonempty >= 10
+
+
+@pytest.mark.slow
+def test_multifield_shards_agree(spark, mf_index, mf_engine, assert_shards_agree):
+    """On a multi-field index the distributed tier on 1, 3 and the
+    default number of shards gives the local tier's rows, nested Bools
+    and sloppy phrases included."""
+    dist = SearchEngine(spark, mf_index)
+    dist._local_search = lambda *a, **k: None
+    extra = ["+(qojema OR role:user) -noza", '"noza guka"~2', '"guka noza"~2']
+    assert_shards_agree(mf_engine, dist, MF_QUERIES + extra)

@@ -24,8 +24,8 @@ def test_search_many_matches_single(spark, index_dir):
 
 
 def test_search_many_shared_scan_mixed(spark, index_dir):
-    # flat queries (shared scan: AND/NOT/boost/musts) mixed with
-    # non-flat fallbacks (phrase/prefix/fuzzy) in one batch
+    # every shape (AND/NOT/boost/musts, phrase/prefix/fuzzy) in one
+    # batch, on the local tier and with every member distributed
     eng = SearchEngine(spark, index_dir)
     batch = {
         "and": ("qojema AND fuhepi", 5, "turns"),
@@ -38,17 +38,19 @@ def test_search_many_shared_scan_mixed(spark, index_dir):
         "fuzzy": ("qojema~1", 5, "turns"),
         "negonly": ("-qojema", 5, "turns"),
     }
-    got = eng.search_many(batch).collect()
-    by_q: dict[str, list] = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], round(r["score"], 9)))
-    for qid, (q, k, mode) in batch.items():
-        single = [
-            (r["rank"], r["doc_id"], round(r["score"], 9))
-            for r in eng.search(q, k=k, mode=mode, use_wand=False).collect()
-        ]
-        assert sorted(by_q.get(qid, [])) == sorted(single), qid
-    assert by_q.get("negonly") is None  # pure-negative matches nothing
+    dist = SearchEngine(spark, index_dir)
+    dist._local_search = lambda *a, **k: None  # every member distributed
+    for e in (eng, dist):
+        by_q: dict[str, list] = {}
+        for r in e.search_many(batch).collect():
+            by_q.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], round(r["score"], 9)))
+        for qid, (q, k, mode) in batch.items():
+            single = [
+                (r["rank"], r["doc_id"], round(r["score"], 9))
+                for r in eng.search(q, k=k, mode=mode, use_wand=False).collect()
+            ]
+            assert sorted(by_q.get(qid, [])) == sorted(single), qid
+        assert by_q.get("negonly") is None  # pure-negative matches nothing
 
 
 def test_pooled_local_members_match_sequential(spark, index_dir):
@@ -81,93 +83,6 @@ def test_pooled_local_members_match_sequential(spark, index_dir):
     assert rows["pool"] == rows["sequential"] and rows["pool"]
     assert threads["sequential"] == {threading.get_ident()}
     assert threading.get_ident() not in threads["pool"]
-
-
-def test_kernel_chunking_invariant(spark, index_dir, monkeypatch):
-    # the batch kernel bounds executor memory by processing doc-aligned
-    # chunks; forcing tiny chunks must not change any query's results.
-    # BOTH constants must shrink: KERNEL_MIN_ROWS floors max_rows at
-    # 4096, so patching KERNEL_MAX_CELLS alone leaves the kernel
-    # single-chunk on any fixture-sized partition (r4 ADVICE).
-    import emailindexer_spark.plans.planner as P
-
-    eng = SearchEngine(spark, index_dir)
-    batch = {
-        "a": ("qojema fuhepi", 5, "turns"),
-        "b": ("+qojema fuhepi", 5, "turns"),
-        "c": ("qojema -fuhepi", 4, "conversations"),
-    }
-    base = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in eng.search_many(batch, use_wand=False).collect()
-    )
-    monkeypatch.setattr(P, "KERNEL_MAX_CELLS", 16)
-    monkeypatch.setattr(P, "KERNEL_MIN_ROWS", 8)  # a few docs per chunk
-    tiny = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in eng.search_many(batch, use_wand=False).collect()
-    )
-    assert tiny == base and base
-
-
-def test_kernel_chunking_runs_multiple_chunks(monkeypatch):
-    # direct generator-level A/B: with max_rows forced to ~5 rows a
-    # 120-row stream MUST take the multi-chunk path (per-chunk prune +
-    # cross-chunk conversation dedup + finalize reprune), and its
-    # finalized results must equal the single-chunk run's
-    import numpy as np
-    import pandas as pd
-
-    import emailindexer_spark.plans.planner as P
-
-    rng = np.random.default_rng(7)
-    n_docs, terms = 40, ["alpha", "beta", "gamma"]
-    rows = []
-    for d in range(n_docs):
-        for t in terms:
-            if rng.random() < 0.8:
-                rows.append(
-                    {
-                        "doc_id": d,
-                        "term": t,
-                        "score": float(rng.random()),
-                        "conv_id": f"c{d // 4}",
-                        "turn_idx": d % 4,
-                    }
-                )
-    pdf = pd.DataFrame(rows)
-    clause_rows = [
-        ("q1", "alpha", 1.0, False, False),
-        ("q1", "beta", 2.0, False, False),
-        ("q2", "alpha", 1.0, True, False),
-        ("q2", "gamma", 1.0, False, True),  # NOT gamma
-        ("q3", "beta", 1.0, False, False),
-    ]
-    cfg_rows = [
-        ("q1", 5, False, 0, 1.0),
-        ("q2", 5, False, 1, 1.0),
-        ("q3", 3, True, 0, 1.0),  # conversations mode → cross-chunk dedup
-    ]
-
-    def run():
-        gen = P._shared_batch_kernel(clause_rows, cfg_rows)
-        parts = list(gen(iter([pdf])))
-        kern = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
-        fin = list(P._finalize_batch()(iter([kern]))) if len(kern) else []
-        out = pd.concat(fin, ignore_index=True)
-        return sorted(
-            (r.query_id, r.rank, r.doc_id, round(r.score, 9))
-            for r in out.itertuples()
-        ), len(parts)
-
-    base, n_chunks_base = run()
-    monkeypatch.setattr(P, "KERNEL_MAX_CELLS", 16)
-    monkeypatch.setattr(P, "KERNEL_MIN_ROWS", 4)
-    tiny, n_chunks_tiny = run()
-    # max_rows = max(4, 16 // 3) = 5 → the ~96-row stream must cut many
-    # chunks (the kernel yields one frame per non-empty chunk)
-    assert n_chunks_base == 1 and n_chunks_tiny > 5
-    assert tiny == base and base
 
 
 def test_corrupt_conv_offsets_falls_back(spark, index_dir, tmp_path):

@@ -15,6 +15,15 @@ Modes (first CLI arg):
   queries + batched suite with the same warm-then-time methodology as
   bench.py.  Reuses bench.py's corpus/build helpers so a trend row is
   directly comparable to the frozen artifact's query block.
+* ``local-decode [SEED]`` — the driver-local tier on perfbench's
+  ingest-search index (``perfbench/workloads.py::_corpus_and_batches``:
+  ~10k base turns built on the driver, then two appends of ~500), built
+  under ``.cache/`` on first use.  Prints, per postings part, the
+  first-touch read and decode ms (``_load_sorted_postings`` per file,
+  then ``_decode_table`` over them) and the bytes the decoded part keeps
+  resident against the Arrow bytes it was read from; then the local ms
+  of each perfbench query shape on the warm engine (median over passes
+  of ten draws per shape), with no perfbench run.
 """
 
 from __future__ import annotations
@@ -146,11 +155,98 @@ def scale_trend(n_turns: int) -> None:
     spark.stop()
 
 
+def local_decode(seed: int) -> None:
+    sys.path.insert(0, REPO)
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import numpy as np
+    import pyarrow as pa
+    from queries import SHAPES, QueryGen
+    from workloads import NUM_PARTS, _corpus_and_batches
+
+    import emailindexer_spark.plans.planner as P
+    from emailindexer_spark import get_spark
+    from emailindexer_spark.plans.builder import IndexBuilder
+    from emailindexer_spark.streaming.ingest import incremental_append
+
+    nproc = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="bench-extra-local-decode", master=f"local[{nproc}]")
+    spark.sparkContext.setLogLevel("ERROR")
+    ix = os.path.join(REPO, ".cache", f"local_decode_ix_{seed}")
+    if not os.path.isdir(ix):
+        corpus, batches = _corpus_and_batches(seed)
+        os.makedirs(ix + "_input", exist_ok=True)
+        for i, pdf in enumerate([corpus, *batches]):
+            pq = os.path.join(ix + "_input", f"{i}.parquet")
+            pdf.to_parquet(pq, index=False, row_group_size=max(1000, len(pdf) // (2 * nproc)))
+            if i == 0:
+                IndexBuilder(spark, ix, num_parts=NUM_PARTS).build(spark.read.parquet(pq))
+            else:
+                incremental_append(spark, ix, spark.read.parquet(pq))
+
+    eng = P.SearchEngine(spark, ix)
+    level = 2 if eng.positions else 1
+    parts = []
+    for part in range(eng.num_parts):
+        t0 = time.perf_counter()
+        tables = [P._load_sorted_postings(f, P._LEVEL_COLS[level]) for f in eng._part_files(part)]
+        t1 = time.perf_counter()
+        dec = P._decode_table(pa.concat_tables(tables), level, 0, eng.n_rows)
+        t2 = time.perf_counter()
+        arrays = [*dec[1:-1], *(dec.pos or ())]  # every field but level, pos unpacked
+        strs = sum(sys.getsizeof(x) for x in dec.term)  # the term objects
+        parts.append(
+            {
+                "part": part,
+                "files": len(tables),
+                "rows": int(dec.term.size),
+                "postings": int(dec.docs.size),
+                "read_ms": round(1e3 * (t1 - t0), 2),
+                "decode_ms": round(1e3 * (t2 - t1), 2),
+                "arrow_bytes": sum(t.nbytes for t in tables),
+                "resident_bytes": sum(a.nbytes for a in arrays) + strs,
+            }
+        )
+        eng._resident_part(part)  # the engine's own first touch
+    qgen = QueryGen(ix, np.random.default_rng([seed, 1]))
+    draws = {shape: [qgen.make(shape) for _ in range(10)] for shape in SHAPES}
+    for reqs in draws.values():  # warm
+        for _s, q, k, mode in reqs:
+            eng.search(q, k=k, mode=mode).collect()
+    times: dict[str, list[float]] = {shape: [] for shape in SHAPES}
+    for _ in range(15):
+        for shape, reqs in draws.items():
+            for _s, q, k, mode in reqs:
+                t0 = time.perf_counter()
+                eng.search(q, k=k, mode=mode).collect()
+                times[shape].append(time.perf_counter() - t0)
+    postings = sum(p["postings"] for p in parts)
+    resident = sum(p["resident_bytes"] for p in parts)
+    print(
+        json.dumps(
+            {
+                "mode": "local-decode",
+                "seed": seed,
+                "n_rows": eng.n_rows,
+                "parts": parts,
+                "first_touch_ms": round(sum(p["read_ms"] + p["decode_ms"] for p in parts), 1),
+                "resident_bytes": resident,
+                "arrow_bytes": sum(p["arrow_bytes"] for p in parts),
+                "resident_bytes_per_posting": round(resident / max(postings, 1), 2),
+                "search_ms_p50": {s: round(1e3 * float(np.median(v)), 3) for s, v in times.items()},
+                "search_ms_p50_all": round(1e3 * float(np.median(sum(times.values(), []))), 3),
+            }
+        )
+    )
+    spark.stop()
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "dist-queries"
     if mode == "dist-queries":
         dist_queries()
     elif mode == "scale-trend":
         scale_trend(int(sys.argv[2]))
+    elif mode == "local-decode":
+        local_decode(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
     else:
         raise SystemExit(f"unknown mode {mode!r}")

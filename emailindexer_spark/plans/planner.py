@@ -6,19 +6,23 @@ driver-side parse (plans/parser.py) → rewrite (field routing, and each
 prefix / wildcard / range / fuzzy leaf expanded on the driver to an
 explicit term list, from the driver vocabulary or one ``term_dict``
 job) → :class:`QueryEvaluator`, the ONE scorer of every query shape:
-(ast, term → Arrow posting rows, idf/avgdl maps, doc range) → (sorted
-docs, scores) → top-k with optional conversation collapse.
+(ast, term → decoded postings, idf/avgdl maps) → (sorted docs, scores)
+→ top-k with optional conversation collapse.
 
 Scoring needs NO join against per-doc stats: norms ride inside the
 postings payload (functions/codec.py), so a term's score stream is a
-pure map over its posting rows, decoded straight from Arrow buffers.
+pure map over its postings.  One kernel, :func:`_decode_table`, decodes
+postings rows from Arrow buffers for both tiers, a whole table at a
+time.
 
 The evaluator runs in one of two places:
 
 * the driver-local tier: a query within ``LOCAL_MAX_POSTINGS``,
   ``LOCAL_MAX_EXPANSION`` and ``LOCAL_MAX_K`` is evaluated on the
   driver over the whole doc range, from postings parts kept resident
-  (scanned per query above the residency cap), and finished into a
+  and decoded whole on their first touch, so a query's postings are
+  numpy slices (scanned and decoded per query above the residency
+  cap), and finished into a
   :class:`LocalResult` with no Spark job;
 * the distributed tier: every other search runs the same function in
   ONE ``spark.range(n, numPartitions=n).mapInArrow`` stage, one task
@@ -54,7 +58,12 @@ from emailindexer_spark.functions.codec import (
 )
 from emailindexer_spark.functions.smallfloat import encode_lengths
 from emailindexer_spark.functions.tokenizer import tokenize_series
-from emailindexer_spark.plans.builder import _binary_values, avgdl_from_stats, term_part_py
+from emailindexer_spark.plans.builder import (
+    POSTINGS_ARROW_SCHEMA,
+    _binary_values,
+    avgdl_from_stats,
+    term_part_py,
+)
 from emailindexer_spark.plans.parser import (
     MAX_FUZZY_EXPANSIONS,
     MUST,
@@ -96,26 +105,6 @@ def _segmented_delta_docs(buf: bytes, firsts: np.ndarray, nb: np.ndarray) -> np.
     return cs - np.repeat(offs, nb) + np.repeat(firsts, nb)
 
 
-def _decode_postings(
-    firsts: np.ndarray,
-    docs: tuple[np.ndarray, np.ndarray],
-    tfs: tuple[np.ndarray, np.ndarray],
-    norms: tuple[np.ndarray, np.ndarray],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The posting decode kernel over any mix of blocks → (docs, tfs,
-    norms).  ``docs``/``tfs``/``norms`` are each column's blocks as
-    (concatenated bytes as uint8, per-block byte lengths), ``firsts``
-    the blocks' ``b_first``: ONE varbyte pass per stream — concatenated
-    varbyte streams are self-delimiting — instead of a Python loop per
-    block.  Per-block posting counts come off the norm payload (exactly
-    1 byte per posting)."""
-    if not firsts.size:
-        z = np.empty(0, np.int64)
-        return z, z.copy(), z.copy()
-    d = _segmented_delta_docs(docs[0], firsts, norms[1])
-    return d, varbyte_decode(tfs[0]).view(np.int64), norms[0].astype(np.int64)
-
-
 def _doc_counts(buf: np.ndarray, blens: np.ndarray) -> np.ndarray:
     """Postings per block of a doc stream (bytes as uint8, per-block
     byte lengths), read off its varbyte continuation bits: a value ends
@@ -124,16 +113,6 @@ def _doc_counts(buf: np.ndarray, blens: np.ndarray) -> np.ndarray:
         raise ValueError("empty b_docs block: every block must be non-empty")
     n_at = np.cumsum((buf & 0x80) == 0)
     return np.diff(np.concatenate(([0], n_at[np.cumsum(blens) - 1])))
-
-
-def _decode_docs(firsts: np.ndarray, docs: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
-    """Docs-only decode kernel (constant score, exclusion): per-block
-    value counts come off :func:`_doc_counts`, so only (b_first, b_docs)
-    is ever fetched.  Returns doc ids in posting order (not
-    deduplicated)."""
-    if not firsts.size:
-        return np.empty(0, np.int64)
-    return _segmented_delta_docs(docs[0], firsts, _doc_counts(*docs))
 
 
 def _arrow_blocks(col) -> tuple[np.ndarray, np.ndarray]:
@@ -148,38 +127,6 @@ def _arrow_blocks(col) -> tuple[np.ndarray, np.ndarray]:
     if len(got) == 1:
         return got[0]
     return np.concatenate([b for b, _ in got]), np.concatenate([n for _, n in got])
-
-
-def _arrow_firsts(col) -> np.ndarray:
-    """The flattened ``b_first`` values of an Arrow ``list<int64>`` column."""
-    vals = [c.flatten().to_numpy() for c in col.chunks]
-    if not vals:
-        return np.empty(0, np.int64)
-    return (vals[0] if len(vals) == 1 else np.concatenate(vals)).astype(np.int64, copy=False)
-
-
-def _arrow_list_lens(col) -> np.ndarray:
-    """Per-row list lengths of an Arrow list column (blocks per row)."""
-    lens = [np.diff(c.offsets.to_numpy()) for c in col.chunks]
-    if not lens:
-        return np.empty(0, np.int64)
-    return (lens[0] if len(lens) == 1 else np.concatenate(lens)).astype(np.int64)
-
-
-def _decode_arrow_postings(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """:func:`_decode_postings` over Arrow posting rows, with no pandas
-    conversion."""
-    return _decode_postings(
-        _arrow_firsts(rows.column("b_first")),
-        _arrow_blocks(rows.column("b_docs")),
-        _arrow_blocks(rows.column("b_tfs")),
-        _arrow_blocks(rows.column("b_norms")),
-    )
-
-
-def _decode_arrow_docs(rows) -> np.ndarray:
-    """:func:`_decode_docs` over Arrow posting rows."""
-    return _decode_docs(_arrow_firsts(rows.column("b_first")), _arrow_blocks(rows.column("b_docs")))
 
 
 def _sorted_member_mask(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
@@ -354,36 +301,19 @@ def footer_schema(files: list[str]):
         return None
 
 
-def _load_sorted_postings(path: str) -> tuple[np.ndarray, object]:
-    """One postings file, whole: (its term column as an object array,
-    its Arrow table).  Raises ValueError unless the file is term-sorted,
-    as every writer leaves it: slicing an unsorted file by searchsorted
-    would drop postings without a sound."""
+def _load_sorted_postings(path: str, cols) -> pa.Table:
+    """Columns ``cols`` of one postings file, whole.  Raises ValueError
+    unless the file is term-sorted, as every writer leaves it: one that
+    is not did not come from the index's writer, so none of its rows
+    can be trusted."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as papq
 
-    t = papq.read_table(path).replace_schema_metadata(None)
-    terms = t.column("term").to_numpy()
-    if not (terms[1:] >= terms[:-1]).all():
+    t = papq.read_table(path, columns=list(cols)).replace_schema_metadata(None)
+    terms = t.column("term")
+    if len(terms) > 1 and not pc.all(pc.less_equal(terms[:-1], terms[1:])).as_py():
         raise ValueError(f"postings file {path} is not sorted by term")
-    return terms, t
-
-
-def _term_slices(
-    files: list[tuple[np.ndarray, object]], terms: list[str]
-) -> list[tuple[str, object]]:
-    """The rows of ``terms`` (sorted) in each term-sorted file, in file
-    order, as zero-copy Arrow slices: ``(term, slice)`` per term and
-    file."""
-    q = np.array(terms, dtype=object)
-    out = []
-    for tcol, table in files:
-        lo = np.searchsorted(tcol, q, "left")
-        hi = np.searchsorted(tcol, q, "right")
-        out += [
-            (terms[i], table.slice(int(lo[i]), int(hi[i] - lo[i])))
-            for i in np.flatnonzero(hi > lo)
-        ]
-    return out
+    return t
 
 
 # ---------------------------------------------------------------- the evaluator
@@ -443,10 +373,9 @@ def _term_levels(node: Node, positions: bool, out: dict[str, int] | None = None)
 
 
 class _Postings(NamedTuple):
-    """Decoded postings of one key (or of a constant-score key set) in a
-    doc range: ``tfs`` and ``norms`` from level 1 on, and at level 2
-    ``pos`` = (the kept blocks' position bytes, each posting's byte start
-    and end in them)."""
+    """Decoded postings of one key in a doc range, ascending: ``tfs`` and
+    ``norms`` from level 1 on, and at level 2 ``pos`` = (position bytes,
+    each posting's byte start and end in them)."""
 
     level: int
     docs: np.ndarray
@@ -471,102 +400,125 @@ def _no_hits() -> tuple[np.ndarray, np.ndarray]:
     return np.empty(0, np.int64), np.empty(0, np.float64)
 
 
-def _decode_rows(rows, level: int, lo: int, hi: int, one_term: bool = True) -> _Postings:
-    """Decode Arrow posting ``rows`` at ``level``, keeping the docs in
-    [lo, hi): rows whose [first_doc, last_doc] misses the range are
-    skipped, and of the others only the blocks that overlap it are
-    decoded.  With ``one_term`` the rows are one term's, and its docs
-    come out ascending (rows taken in first_doc order); otherwise (a
-    constant-score key set) in row order.
+#: the postings columns read per decode level (:func:`_term_levels`):
+#: doc ids only, with tf and norm, with positions too (b_pos, ~40% of a
+#: positioned index's bytes, is read only by phrases)
+_DOCS_COLS = ("term", "split_id", "first_doc", "last_doc", "b_first", "b_docs")
+_SCORE_COLS = _DOCS_COLS + ("b_tfs", "b_norms")
+_LEVEL_COLS = (_DOCS_COLS, _SCORE_COLS, _SCORE_COLS + ("b_pos",))
+
+
+class _Decoded(NamedTuple):
+    """A postings table decoded whole by :func:`_decode_table`: rows in
+    (term, first_doc) order, row r's postings at ``off[r]:off[r + 1]`` of
+    the flat ``docs``/``tfs``/``norms``, so each term's postings are one
+    ascending run; at level 2 ``pos`` = (the position bytes, each
+    posting's byte start, the end appended)."""
+
+    level: int
+    term: np.ndarray
+    first_doc: np.ndarray
+    last_doc: np.ndarray
+    off: np.ndarray
+    docs: np.ndarray
+    tfs: np.ndarray
+    norms: np.ndarray
+    pos: tuple[np.ndarray, np.ndarray] | None
+
+    def postings(self, terms, lo: int, hi: int) -> dict[str, _Postings]:
+        """{term: its postings in [lo, hi), as numpy slices} of the
+        ``terms`` with postings here."""
+        q = np.array(sorted(terms), dtype=object)
+        a = np.searchsorted(self.term, q, "left").tolist()
+        b = np.searchsorted(self.term, q, "right").tolist()
+        out = {}
+        for t, r0, r1 in zip(q.tolist(), a, b):
+            s, e = int(self.off[r0]), int(self.off[r1])
+            if s == e:
+                continue
+            if lo > self.first_doc[r0] or hi <= self.last_doc[r1 - 1]:
+                d = self.docs[s:e]
+                s, e = s + int(np.searchsorted(d, lo)), s + int(np.searchsorted(d, hi))
+                if s == e:
+                    continue
+            pos = self.pos and (self.pos[0], self.pos[1][s:e], self.pos[1][s + 1 : e + 1])
+            out[t] = _Postings(self.level, self.docs[s:e], self.tfs[s:e], self.norms[s:e], pos)
+        return out
+
+
+def _decode_table(table: pa.Table, level: int, lo: int, hi: int) -> _Decoded:
+    """Decode a postings ``table`` (any row order, columns
+    ``_LEVEL_COLS[level]``) whole at ``level``, keeping the docs of
+    [lo, hi): rows whose [first_doc, last_doc] misses the range keep no
+    postings, and of the others only the blocks that overlap it are
+    decoded, in ONE varbyte pass per column.
 
     Shards choose rows by their doc ranges, so a wrong range would drop
     hits without a sound: a decoded doc outside its row's
     [first_doc, last_doc], or not above the previous doc of its row, and
-    with ``one_term`` two rows whose ranges overlap, raise ValueError
-    naming the term and the row."""
-    fd = rows.column("first_doc").to_numpy()
-    ld = rows.column("last_doc").to_numpy()
-    if rows.num_rows != 1:
-        meets = (fd < hi) & (ld >= lo)
-        if not meets.all():
-            rows, fd, ld = rows.filter(pa.array(meets)), fd[meets], ld[meets]
-    elif fd[0] >= hi or ld[0] < lo:
-        return _no_postings(level)
-    n = rows.num_rows
-    if not n:
-        return _no_postings(level)
-    firsts = _arrow_firsts(rows.column("b_first"))
-    clipped = lo > int(fd.min()) or hi <= int(ld.max())
-    keep = brow = None
-    if n > 1 or clipped:
-        nblk = _arrow_list_lens(rows.column("b_first")) if n > 1 else np.array([firsts.size])
-        brow = np.repeat(np.arange(n), nblk)
-    if clipped:
-        # block j holds docs [firsts[j], firsts[j + 1]) within its row
-        nxt = np.append(firsts[1:], 0)
-        nxt[np.cumsum(nblk) - 1] = np.iinfo(np.int64).max
-        keep = (firsts < hi) & (nxt > lo)
-        if keep.all():
-            keep = None
-        else:
-            firsts, brow = firsts[keep], brow[keep]
-    dblocks = _kept_blocks(rows.column("b_docs"), keep)
+    two rows of one term whose ranges overlap, raise ValueError naming
+    the term and the row."""
+    import pyarrow.compute as pc
+
+    order = pc.sort_indices(table, [("term", "ascending"), ("first_doc", "ascending")]).to_numpy()
+    if (order[1:] < order[:-1]).any():
+        table = table.take(order)
+    table = table.combine_chunks()
+    n = table.num_rows
+    term = table.column("term").to_numpy()
+    fd = table.column("first_doc").to_numpy()
+    ld = table.column("last_doc").to_numpy()
+    bf = table.column("b_first").chunk(0) if n else pa.array([], pa.list_(pa.int64()))
+    nblk = np.diff(bf.offsets.to_numpy())
+    firsts = bf.flatten().to_numpy().astype(np.int64, copy=False)
+    brow = np.repeat(np.arange(n), nblk)
+    # block j holds docs [firsts[j], firsts[j + 1]) within its row
+    nxt = np.append(firsts[1:], 0)
+    nxt[np.cumsum(nblk) - 1] = np.iinfo(np.int64).max
+    meets = (fd < hi) & (ld >= lo)
+    keep = (firsts < hi) & (nxt > lo) & meets[brow]
+    if keep.all():
+        keep = None
+    else:
+        firsts, brow = firsts[keep], brow[keep]
+    dblocks = _kept_blocks(table.column("b_docs"), keep)
     if level == 0:
         nb = _doc_counts(*dblocks) if firsts.size else np.empty(0, np.int64)
         docs = _segmented_delta_docs(dblocks[0], firsts, nb) if firsts.size else nb
         tfs = norms = np.empty(0, np.int64)
-    else:
-        nblocks = _kept_blocks(rows.column("b_norms"), keep)
-        docs, tfs, norms = _decode_postings(
-            firsts, dblocks, _kept_blocks(rows.column("b_tfs"), keep), nblocks
-        )
-        nb = nblocks[1]
-    order = None
-    if brow is None:  # one row, whole
-        out = docs.size and (docs[0] < fd[0] or docs[-1] > ld[0])
-        bad = {0} if out or bool((docs[1:] <= docs[:-1]).any()) else set()
-    else:
-        cnt = np.bincount(brow, weights=nb, minlength=n).astype(np.int64)
-        start = np.cumsum(cnt) - cnt
-        has = np.flatnonzero(cnt > 0)
-        down = docs[1:] <= docs[:-1]
-        cut = start[has]
-        down[cut[cut > 0] - 1] = False  # each row ascends on its own
-        out = (docs[cut] < fd[has]) | (docs[cut + cnt[has] - 1] > ld[has])
-        bad = set(has[out].tolist())
-        if down.any():
-            bad.add(int(np.searchsorted(start, int(np.argmax(down)) + 1, "right")) - 1)
-        if one_term and n > 1:
-            order = np.argsort(fd, kind="stable")
-            bad.update(order[1:][ld[order[:-1]] >= fd[order[1:]]].tolist())
-            if bool((order[1:] > order[:-1]).all()):
-                order = None
+    else:  # tfs as int32 and norms as their bytes: 13 bytes a posting, not 24
+        norms, nb = _kept_blocks(table.column("b_norms"), keep)
+        docs = np.empty(0, np.int64)
+        if firsts.size:
+            docs = _segmented_delta_docs(dblocks[0], firsts, nb)
+        tfs = varbyte_decode(_kept_blocks(table.column("b_tfs"), keep)[0]).astype(np.int32)
+        norms = np.array(norms)
+    cnt = np.bincount(brow, weights=nb, minlength=n).astype(np.int64)
+    off = np.concatenate(([0], np.cumsum(cnt)))
+    has = np.flatnonzero(cnt > 0)
+    cut = off[has]
+    down = docs[1:] <= docs[:-1]
+    down[cut[cut > 0] - 1] = False  # each row ascends on its own
+    bad = has[(docs[cut] < fd[has]) | (docs[off[has + 1] - 1] > ld[has])].tolist()
+    if down.any():
+        bad.append(int(np.searchsorted(off, int(np.argmax(down)) + 1, "right")) - 1)
+    m = np.flatnonzero(meets)  # consecutive rows of one term must not overlap
+    bad += m[1:][(term[m[:-1]] == term[m[1:]]) & (ld[m[:-1]] >= fd[m[1:]])].tolist()
     if bad:
         r = min(bad)
         raise ValueError(
-            f"postings row of term {rows.column('term')[r].as_py()!r} (split_id "
-            f"{rows.column('split_id')[r].as_py()}) holds docs outside its range "
+            f"postings row of term {term[r]!r} (split_id "
+            f"{table.column('split_id')[r].as_py()}) holds docs outside its range "
             f"[{fd[r]}, {ld[r]}] or out of order"
         )
     pos = None
     if level == 2:
-        pbuf, _ = _kept_blocks(rows.column("b_pos"), keep)
+        pbuf = np.array(_kept_blocks(table.column("b_pos"), keep)[0])
         pend = (np.flatnonzero((pbuf & 0x80) == 0) + 1)[np.cumsum(tfs) - 1]
-        pos = (pbuf, np.concatenate(([0], pend[:-1])), pend)
-    sel = None
-    if order is not None:  # the rows' postings in first_doc order
-        sel = _ranges(start[order], cnt[order])
-    if clipped:
-        inr = (docs >= lo) & (docs < hi)
-        if not inr.all():
-            sel = np.flatnonzero(inr) if sel is None else sel[inr[sel]]
-    if sel is not None:
-        docs = docs[sel]
-        if level:
-            tfs, norms = tfs[sel], norms[sel]
-        if level == 2:
-            pos = (pos[0], pos[1][sel], pos[2][sel])
-    return _Postings(level, docs, tfs, norms, pos)
+        pos = (pbuf, np.concatenate(([0], pend)))
+    for a in (docs, tfs, norms, *(pos or ())):
+        a.flags.writeable = False  # postings() hands out views of them
+    return _Decoded(level, term, fd, ld, off, docs, tfs, norms, pos)
 
 
 def _phrase_freqs(
@@ -633,41 +585,34 @@ def _doc_texts(files: list[str], docs: np.ndarray) -> np.ndarray:
 
 class QueryEvaluator:
     """The one BM25 evaluator of every query shape, on both tiers:
-    (ast, term → Arrow posting rows, idf/avgdl maps, doc range) →
-    (sorted docs, scores).
+    (ast, term → decoded postings, idf/avgdl maps) → (sorted docs,
+    scores).
 
-    ``rows`` maps a key to its posting rows (a key without rows has no
-    postings in the range), ``levels`` a key to the decode level the ast
-    needs (:func:`_term_levels`); a Term or Phrase key missing from
-    ``idf_map`` has no postings and matches nothing.  Only docs in
-    [lo, hi) are scored.  Bools follow BooleanQuery: MUST clauses
-    intersect, SHOULD clauses add, MUST_NOT clauses subtract, and the
-    boost multiplies; a flat Bool of terms takes one pass over every
-    term's postings.  ``doc_text`` (sorted docs → their text) serves
-    phrases on an index without positions, re-tokenized with
-    ``simple``.  ``cache`` keeps each key's decode for further calls
-    over the same range (the members of a search_many batch)."""
+    ``post`` maps a key to its :class:`_Postings` in the doc range
+    scored (a key without them has no postings there), ``levels`` a key
+    to the decode level the ast needs (:func:`_term_levels`); a Term or
+    Phrase key missing from ``idf_map`` has no postings and matches
+    nothing.  Bools follow BooleanQuery: MUST clauses intersect, SHOULD
+    clauses add, MUST_NOT clauses subtract, and the boost multiplies; a
+    flat Bool of terms takes one pass over every term's postings.
+    ``doc_text`` (sorted docs → their text) serves phrases on an index
+    without positions, re-tokenized with ``simple``."""
 
     def __init__(
         self,
-        rows: dict[str, object],
+        post: dict[str, _Postings],
         levels: dict[str, int],
         idf_map: dict[str, float],
         avgdl_map: dict[str, float],
-        lo: int,
-        hi: int,
         positions: bool,
         order_tolerant: bool = False,
         doc_text=None,
         simple: bool = False,
-        cache: dict[str, _Postings] | None = None,
     ):
-        self.rows, self.levels = rows, levels
+        self.post, self.levels = post, levels
         self.idf, self.avgdl = idf_map, avgdl_map
-        self.lo, self.hi = lo, hi
         self.positions, self.order_tolerant = positions, order_tolerant
         self.doc_text, self.simple = doc_text, simple
-        self.cache = {} if cache is None else cache
 
     def __call__(self, ast: Node) -> tuple[np.ndarray, np.ndarray]:
         if isinstance(ast, Bool):
@@ -684,17 +629,8 @@ class QueryEvaluator:
         raise TypeError(type(ast))
 
     def _postings(self, t: str) -> _Postings:
-        level = self.levels.get(t, 0)
-        got = self.cache.get(t)
-        if got is None or got.level < level:
-            rows = self.rows.get(t)
-            got = (
-                _no_postings(level)
-                if rows is None
-                else _decode_rows(rows, level, self.lo, self.hi)
-            )
-            self.cache[t] = got
-        return got
+        got = self.post.get(t)
+        return _no_postings(self.levels.get(t, 0)) if got is None else got
 
     def _bm25(self, t: str, p: _Postings) -> np.ndarray:
         return bm25.score_tf(p.tfs, p.norms, self.avgdl[t], self.idf[t])
@@ -778,17 +714,11 @@ class QueryEvaluator:
         return uniq[keep], total[keep]
 
     def _terms(self, node: _Terms) -> tuple[np.ndarray, np.ndarray]:
-        keys = [t for t in node.keys if t in self.rows or t in self.cache]
+        keys = [t for t in node.keys if t in self.post]
         if not keys:
             return _no_hits()
-        if node.weights is None:
-            # constant score: the key set's rows decode together
-            tables = [self.rows[t] for t in keys if t in self.rows]
-            got = [self.cache[t].docs for t in keys if t not in self.rows]
-            if tables:
-                rows = tables[0] if len(tables) == 1 else pa.concat_tables(tables)
-                got.append(_decode_rows(rows, 0, self.lo, self.hi, one_term=False).docs)
-            docs = np.unique(np.concatenate(got))
+        if node.weights is None:  # constant score
+            docs = np.unique(np.concatenate([self.post[t].docs for t in keys]))
             return docs, np.full(docs.size, 1.0 * node.boost)
         weight = dict(zip(node.keys, node.weights))
         ps = [self._postings(t) for t in keys]
@@ -847,35 +777,29 @@ class QueryEvaluator:
 
 def _scan_files(
     files: list[str], terms: list[str], cols, lo: int | None = None, hi: int | None = None
-) -> list[tuple[np.ndarray, object]]:
+) -> pa.Table | None:
     """A term-filtered pyarrow scan of postings ``files`` (row groups
     pruned by the sorted term column's min/max), restricted when ``lo``
-    is given to rows whose [first_doc, last_doc] meets [lo, hi), as ONE
-    (term column, table) pair like a resident file's; [] when no row
-    matches.  Files are term-sorted one by one: a stable sort by term
-    makes the scan term-sorted, each term's rows in file order."""
+    is given to rows whose [first_doc, last_doc] meets [lo, hi); None
+    when no row matches."""
     if not files:
-        return []
+        return None
     import pyarrow.dataset as ds
 
     flt = ds.field("term").isin(terms)
     if lo is not None:
         flt = flt & (ds.field("first_doc") < hi) & (ds.field("last_doc") >= lo)
     t = ds.dataset(files, format="parquet").to_table(columns=list(cols), filter=flt)
-    if not t.num_rows:
-        return []
-    tcol = t.column("term").to_numpy()
-    order = np.argsort(tcol, kind="stable")
-    return [(tcol[order], t.take(order))]
+    return t if t.num_rows else None
 
 
-def _rows_by_term(pieces: list[tuple[str, object]]) -> dict[str, object]:
-    """{term: its rows} from :func:`_term_slices` pieces, each term's
-    slices concatenated in piece order."""
-    by: dict[str, list] = {}
-    for t, p in pieces:
-        by.setdefault(t, []).append(p)
-    return {t: v[0] if len(v) == 1 else pa.concat_tables(v) for t, v in by.items()}
+def _scan_postings(
+    files: list[str], terms: list[str], level: int, lo: int, hi: int
+) -> dict[str, _Postings]:
+    """{term: _Postings} of ``terms`` in [lo, hi) from a
+    :func:`_scan_files` of ``files``, decoded by :func:`_decode_table`."""
+    t = _scan_files(files, terms, _LEVEL_COLS[level], lo, hi)
+    return {} if t is None else _decode_table(t, level, lo, hi).postings(terms, lo, hi)
 
 
 def _conv_winners(
@@ -909,7 +833,8 @@ def _shard_scorer(plan: SimpleNamespace):
     shard i scores the docs [plan.bounds[i], plan.bounds[i + 1]) with
     :class:`QueryEvaluator`, over its terms' rows read with pyarrow from
     ``plan.files`` (per part; terms and the doc range prune row groups
-    and rows), and emits (doc_id, score).  With ``plan.offs`` (the
+    and rows) and decoded by :func:`_decode_table`, and emits (doc_id,
+    score).  With ``plan.offs`` (the
     conversations' first docs; the bounds then fall on conversation
     edges) it keeps each conversation's best hit, and with ``plan.k``
     its top k by (score desc, doc_id asc): the global winners lie
@@ -920,13 +845,12 @@ def _shard_scorer(plan: SimpleNamespace):
         for b in batches:
             for i in b.column(0).to_pylist():
                 lo, hi = int(plan.bounds[i]), int(plan.bounds[i + 1])
-                pieces = []
+                post = {}
                 for part, terms in plan.terms.items():
-                    files = _scan_files(plan.files[part], terms, plan.cols, lo, hi)
-                    pieces += _term_slices(files, terms)
+                    post.update(_scan_postings(plan.files[part], terms, plan.level, lo, hi))
                 docs, scores = QueryEvaluator(
-                    _rows_by_term(pieces), plan.levels, plan.idf, plan.avgdl, lo, hi,
-                    plan.positions, plan.order_tolerant, doc_text, plan.simple,
+                    post, plan.levels, plan.idf, plan.avgdl, plan.positions,
+                    plan.order_tolerant, doc_text, plan.simple,
                 )(plan.ast)
                 if plan.offs is not None and docs.size:
                     docs, scores, _ = _conv_winners(docs, scores, plan.offs)
@@ -1026,7 +950,7 @@ class SearchEngine:
         # first touch, and the parts held in memory (_resident_part),
         # loaded under their own lock for search_many's planner threads
         self._local_files: dict[int, list[str]] = {}
-        self._resident: dict[int, list[tuple[np.ndarray, object]]] = {}
+        self._resident: dict[int, _Decoded] = {}
         self._resident_lock = threading.Lock()
         self._postings_total: int | None = None
         # conv_offsets artifact (dense-docid builds and their appends of
@@ -1266,13 +1190,6 @@ class SearchEngine:
         return self._at_open(table_files(os.path.join(self.index_dir, "doc_index")))
 
     # ------------------------------------------------------------ postings access
-
-    #: the postings columns read per decode level (:func:`_term_levels`):
-    #: doc ids only, with tf and norm, with positions too (b_pos, ~40%
-    #: of a positioned index's bytes, is read only by phrases)
-    DOCS_COLS = ("term", "split_id", "first_doc", "last_doc", "b_first", "b_docs")
-    SCORE_COLS = DOCS_COLS + ("b_tfs", "b_norms")
-    POS_COLS = SCORE_COLS + ("b_pos",)
 
     def _vocab_source(self) -> DataFrame:
         """(term, df) rows of the vocabulary for the Spark-job fallbacks
@@ -1616,12 +1533,16 @@ class SearchEngine:
     #: the budget (or when any required artifact is missing) the
     #: distributed tier runs; 5M postings ≈ 120 MB of transient decode
     #: arrays, the same order as the driver vocab cap.  It also caps
-    #: residency (_local_slices): touched parts stay in memory only
-    #: while the WHOLE index holds at most this many postings, because
-    #: resident parts cost ~6.5 bytes per posting of Arrow with
-    #: positions (423k postings = 2.7 MB for a 10k-turn corpus), so the
-    #: cap holds the driver to ~32 MB — less than one query's decode
-    #: arrays at the budget.
+    #: residency (_resident_part): touched parts stay in memory, decoded,
+    #: only while the WHOLE index holds at most this many postings.  A
+    #: decoded part costs ~25 bytes per posting with positions (int64
+    #: doc, int32 tf, norm byte, int64 position offset, ~1.7 position
+    #: bytes; perfbench's 11k-turn index after two appends: 468k
+    #: postings = 11.6 MB, against 3.1 MB of the Arrow it was read
+    #: from).  Measured just under the cap (110k turns, 4.67M postings,
+    #: 8 parts, 4 vCPU): 109 MB of decoded arrays (23 bytes a posting),
+    #: driver RSS +153 MB, 0.5 s to touch every part; so ~115 MB of
+    #: arrays at the cap — about one query's decode arrays at the budget.
     LOCAL_MAX_POSTINGS = 5_000_000
     #: expansion-width cap for local constant-score rewrites (prefix/
     #: range/wildcard): wider expansions take the distributed tier
@@ -1637,36 +1558,35 @@ class SearchEngine:
     #: except once at 318k (88 against 95 ms)
     LOCAL_POOL_MIN_POSTINGS = 200_000
 
-    def _local_term_rows(self, terms: set[str], cols: tuple[str, ...]) -> dict:
-        """{term: its posting rows as an Arrow table, columns ``cols``}
-        for the ``terms`` with postings, each term's rows in the order a
-        scan of its ``part=`` files returns them (files by name, rows in
-        file order), as zero-copy slices.
+    def _local_term_rows(self, terms: set[str], level: int) -> dict[str, _Postings]:
+        """{term: its postings over the open's docs, at ``level`` or
+        above} for the ``terms`` with postings.
 
         While the index's whole postings volume (Σdf over the driver
         vocabulary) fits LOCAL_MAX_POSTINGS, a touched part stays
-        resident for the life of the engine: its files are read once,
-        whole, and each query slices every file's (term, split_id)-
-        sorted rows by a searchsorted on its term column (one term of a
-        10k-turn index, 4 vCPU: 0.12-0.17 ms, against 1.4-1.5 ms for a
-        filtered parquet scan).  Above the cap each query runs that
-        term-filtered pyarrow scan of the part's files (row groups
-        pruned by the sorted term column's min/max).  Either way each
+        resident, decoded (:meth:`_resident_part`: ~23-25 bytes a
+        posting, ~115 MB at the cap), and a query's postings are numpy
+        slices of it: a searchsorted on its term column per part, and per term one
+        slice (two searchsorted more when it holds docs past the open's
+        ``n_rows``).  On perfbench's ingest-search index (4 vCPU) a
+        rare-term search takes ~0.2 ms, against ~0.75 ms when each search
+        decoded its terms' Arrow rows.  Above the cap
+        each query runs a term-filtered pyarrow scan of the part's files
+        (row groups pruned by the sorted term column's min/max) and
+        decodes the rows it finds with the same kernel.  Either way each
         part's file list is taken on its first touch and kept, so both
         tiers see one fixed index state."""
         by_part: dict[int, list[str]] = {}
         for t in sorted(terms):
             by_part.setdefault(term_part_py(t, self.num_parts), []).append(t)
         resident = self._resident_ok()
-        pieces = []
-        for part in sorted(by_part):
-            files = (
-                self._resident_part(part)
-                if resident
-                else _scan_files(self._part_files(part), by_part[part], cols)
-            )
-            pieces += [(t, p.select(list(cols))) for t, p in _term_slices(files, by_part[part])]
-        return _rows_by_term(pieces)
+        out: dict[str, _Postings] = {}
+        for part, ts in sorted(by_part.items()):
+            if resident:
+                out.update(self._resident_part(part).postings(ts, 0, self.n_rows))
+            else:
+                out.update(_scan_postings(self._part_files(part), ts, level, 0, self.n_rows))
+        return out
 
     def _resident_ok(self) -> bool:
         """Whether postings parts may stay resident (see
@@ -1691,18 +1611,28 @@ class SearchEngine:
             self._local_files[part] = files
         return files
 
-    def _resident_part(self, part: int) -> list[tuple[np.ndarray, object]]:
-        """(term column, whole Arrow table) per file of ``part``, read
-        on its first touch.  Double-checked under a lock, like
-        _driver_vocab: search_many evaluates queries in driver threads."""
-        files = self._resident.get(part)
-        if files is None:
+    def _resident_part(self, part: int) -> _Decoded:
+        """Postings part ``part`` decoded whole (:func:`_decode_table`) at
+        the index's top level over the open's docs, on its first touch:
+        its files read with pyarrow, checked term-sorted, and dropped
+        once decoded, so only the decoded arrays stay: ~23-25 bytes a
+        posting, ~115 MB at LOCAL_MAX_POSTINGS (109 MB measured at
+        4.67M postings).  A part of 40k-85k postings (perfbench's
+        ingest-search index, 4 vCPU) takes 4-6 ms to read and 5-10 ms
+        to decode.  Double-checked under a lock, like _driver_vocab:
+        search_many evaluates queries in driver threads."""
+        got = self._resident.get(part)
+        if got is None:
             with self._resident_lock:
-                files = self._resident.get(part)
-                if files is None:
-                    files = [_load_sorted_postings(f) for f in self._part_files(part)]
-                    self._resident[part] = files
-        return files
+                got = self._resident.get(part)
+                if got is None:
+                    level = 2 if self.positions else 1
+                    cols = list(_LEVEL_COLS[level])
+                    tables = [_load_sorted_postings(f, cols) for f in self._part_files(part)]
+                    empty = POSTINGS_ARROW_SCHEMA.empty_table().select(cols)
+                    got = _decode_table(pa.concat_tables(tables or [empty]), level, 0, self.n_rows)
+                    self._resident[part] = got
+        return got
 
     def _local_search(
         self,
@@ -1717,7 +1647,7 @@ class SearchEngine:
         vocabulary, more than LOCAL_MAX_POSTINGS postings in its terms
         and expansions, a constant-score expansion wider than
         LOCAL_MAX_EXPANSION, or k=None with more than LOCAL_MAX_K hits.
-        ``cache`` shares decodes across a search_many batch.  The doc
+        ``cache`` shares postings across a search_many batch.  The doc
         range stops at the open's ``n_rows``: a compaction after the
         open rewrites later appends' postings into files the open
         cannot tell apart, and the open-time conv_offsets would
@@ -1734,15 +1664,21 @@ class SearchEngine:
             or sum(self.term_dfs(set(levels)).values()) > self.LOCAL_MAX_POSTINGS
         ):
             return None
+        # the query's own map: pooled batch members share ``cache``, and
+        # above the residency cap one may fetch a term at a lower level
         cache = {} if cache is None else cache
-        need = {t for t, v in levels.items() if t not in cache or cache[t].level < v}
-        cols = (self.DOCS_COLS, self.SCORE_COLS, self.POS_COLS)[max(levels.values(), default=0)]
+        post = {t: p for t, v in levels.items() if (p := cache.get(t)) is not None and p.level >= v}
+        need = set(levels) - set(post)
+        if need:
+            level = max(levels[t] for t in need)
+            got = self._local_term_rows(need, level)
+            for t in need:
+                post[t] = got[t] if t in got else _no_postings(level)
+                if t not in cache or cache[t].level < post[t].level:
+                    cache[t] = post[t]
         docs, scores = QueryEvaluator(
-            self._local_term_rows(need, cols) if need else {},
-            levels, idf_map, avgdl_map, 0, self.n_rows, self.positions,
-            self.slop_order_tolerant,
-            None if self.positions else partial(_doc_texts, self._doc_files),
-            self.simple, cache,
+            post, levels, idf_map, avgdl_map, self.positions, self.slop_order_tolerant,
+            None if self.positions else partial(_doc_texts, self._doc_files), self.simple,
         )(ast)
         if k is None and docs.size > self.LOCAL_MAX_K:
             return None
@@ -1829,7 +1765,7 @@ class SearchEngine:
         the rewritten ast with its idf/avgdl maps and key levels, the
         shards' doc bounds over the open's ``n_rows`` docs, the keys and
         file list of each postings part they live in (taken as of the
-        open), the columns their levels read, and doc_index's files on
+        open), the decode level their keys need, and doc_index's files on
         an index without positions.  With conv_offsets, each bound moves
         up to the next conversation's first doc, so a conversation lies
         in one shard, as in a sharded build's row-balanced shards (and
@@ -1848,8 +1784,7 @@ class SearchEngine:
         return SimpleNamespace(
             ast=ast, idf=idf_map, avgdl=avgdl_map, levels=levels, k=k,
             n=n, bounds=bounds, offs=offs if collapse else None, terms=terms,
-            files={p: self._part_files(p) for p in terms},
-            cols=(self.DOCS_COLS, self.SCORE_COLS, self.POS_COLS)[max(levels.values())],
+            files={p: self._part_files(p) for p in terms}, level=max(levels.values()),
             positions=self.positions, order_tolerant=self.slop_order_tolerant,
             simple=self.simple, doc_files=None if self.positions else self._doc_files,
         )
@@ -1923,9 +1858,9 @@ class SearchEngine:
         Returns one DataFrame (query_id, rank, doc_id, conv_id, turn_idx,
         score).
 
-        The members the driver-local tier serves share one decode cache,
-        so each term is decoded once per batch, and fold into ONE
-        :class:`LocalResult`, which answers ``collect``/``toPandas``/
+        The members the driver-local tier serves share one postings
+        cache, so each term's postings are taken once per batch, and fold
+        into ONE :class:`LocalResult`, which answers ``collect``/``toPandas``/
         ``count``/``columns``/``schema`` with no JVM call; a batch they
         fill (and an empty batch) returns it as is.  Each other member
         runs its own distributed search plan, unioned with the local

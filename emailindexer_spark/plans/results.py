@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import Row, SparkSession
 from pyspark.sql.classic.dataframe import DataFrame
 from pyspark.sql.pandas.types import _to_corrected_pandas_type
-from pyspark.sql.types import _create_row, _parse_datatype_json_string
+from pyspark.sql.types import StructType, _create_row, _parse_datatype_json_string
 
 
 @lru_cache(maxsize=8)
@@ -60,10 +60,10 @@ class LocalResult(DataFrame):
     def __init__(self, cols: dict[str, np.ndarray], ddl: str, spark: SparkSession):
         """``cols``: the rows as one equal-length array per column of
         ``ddl``; arrays of another dtype than the relation's are cast."""
-        schema_json = _schema_json(spark, ddl)
+        self._schema_json = _schema_json(spark, ddl)
         self._cols = {
             name: a if (a := np.asarray(cols[name])).dtype == dt else a.astype(dt)
-            for name, dt in _column_dtypes(schema_json)
+            for name, dt in _column_dtypes(self._schema_json)
         }
         self._n = len(next(iter(self._cols.values())))
         self._ddl = ddl
@@ -72,13 +72,17 @@ class LocalResult(DataFrame):
         self._sc = spark.sparkContext
         self.is_cached = False
         self._support_repr_html = False
-        # DataFrame.schema is a cached_property: pre-fill it
-        self.__dict__["schema"] = _parse_datatype_json_string(schema_json)
 
     @classmethod
     def empty(cls, ddl: str, spark: SparkSession) -> LocalResult:
         dtypes = _column_dtypes(_schema_json(spark, ddl))
         return cls({name: np.empty(0, dt) for name, dt in dtypes}, ddl, spark)
+
+    @cached_property
+    def schema(self) -> StructType:
+        """This result's own StructType, parsed on first use from the
+        cached JSON (DataFrame.schema would ask the JVM)."""
+        return _parse_datatype_json_string(self._schema_json)
 
     @cached_property
     def _pdf(self) -> pd.DataFrame:

@@ -12,9 +12,9 @@ rewrite into the format the build writes, through the build's own
 kernels, one postings part at a time (a term's rows all live in its
 part, so a part holds every term's whole posting list):
 
-* the part's rows are decoded (the query engine's vectorized
-  ``_decode_arrow_postings``) straight back into the build's chunk rows
-  by the build's packer (``_pack_chunk_rows``) with the exact-df heavy
+* the part's rows are decoded (the query engine's whole-table kernel
+  ``_decode_table``, with its row checks) straight back into the
+  build's chunk rows by the build's packer (``_pack_chunk_rows``) with the exact-df heavy
   map from base 0 — the postings hold every doc of the corpus, so a
   term of df > heavy_df_threshold is re-cut into ceil(df /
   split_target) doc-range splits, as a driver build of the same rows
@@ -49,14 +49,8 @@ import time
 import numpy as np
 from pyspark.sql import SparkSession
 
-from emailindexer_spark.plans.builder import (
-    _binary_values,
-    _encode_chunk_table,
-    _pack_chunk_rows,
-    _pos_doc_bounds,
-    write_index_table,
-)
-from emailindexer_spark.plans.planner import SearchEngine, _decode_arrow_postings
+from emailindexer_spark.plans.builder import _encode_chunk_table, _pack_chunk_rows, write_index_table
+from emailindexer_spark.plans.planner import _LEVEL_COLS, SearchEngine, _decode_table
 from emailindexer_spark.sources.checkpoint import Manifest
 
 
@@ -64,32 +58,28 @@ def _compact_part(live: str, tmp: str, part: str, params: dict, n_rows: int) -> 
     """Merge the visible files of postings directory ``live/part`` into
     one file under ``tmp/part``; returns the rows written."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as papq
 
     files = sorted(glob.glob(os.path.join(live, part, "*.parquet")))
     if not files:
         return 0
-    cols = ["term", "first_doc", "df_row", "b_first", "b_docs", "b_tfs", "b_norms", "b_pos"]
+    level = 2 if params["positions"] else 1
     rows = pa.concat_tables(
-        papq.read_table(f, columns=cols).replace_schema_metadata(None) for f in files
+        papq.read_table(f, columns=list(_LEVEL_COLS[level])).replace_schema_metadata(None)
+        for f in files
     )
-    # a term's rows cover disjoint doc ranges: ordered by (term,
-    # first_doc), one decode comes out term-major with docs ascending
-    rows = rows.take(pc.sort_indices(rows, [("term", "ascending"), ("first_doc", "ascending")]))
-    docs, tfs, norms = _decode_arrow_postings(rows)
-    terms = rows.column("term").to_numpy()
-    row_starts = np.concatenate(([0], np.cumsum(rows.column("df_row").to_numpy())))
-    term_rows = np.concatenate(([0], np.flatnonzero(terms[1:] != terms[:-1]) + 1, [len(terms)]))
-    pos_buf = _binary_values(rows.column("b_pos").combine_chunks().flatten())[0].tobytes()
+    # one decode, rows in (term, first_doc) order: term-major, each
+    # term's docs ascending
+    dec = _decode_table(rows, level, 0, n_rows)
+    term_rows = np.concatenate(([0], np.flatnonzero(dec.term[1:] != dec.term[:-1]) + 1, [dec.term.size]))
     chunks = _pack_chunk_rows(
-        terms[term_rows[:-1]],
-        row_starts[term_rows],
-        docs,
-        tfs,
-        norms,
-        pos_buf,
-        _pos_doc_bounds(pos_buf, tfs) if pos_buf else None,
+        dec.term[term_rows[:-1]],
+        dec.off[term_rows],
+        dec.docs,
+        dec.tfs,
+        dec.norms,
+        dec.pos[0].tobytes() if dec.pos else b"",
+        dec.pos[1] if dec.pos else None,
         (params["heavy_df_threshold"], params["split_target"]),
         0,
         n_rows,
@@ -145,6 +135,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> Manifest:
             ("block_size", 128),
             ("heavy_df_threshold", 100_000),
             ("split_target", 50_000),
+            ("positions", 0),
         )
     }
     n_rows = int(man.stats["n_rows"])

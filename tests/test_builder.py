@@ -212,13 +212,13 @@ def _full_scan_docs(index_dir, match):
     import numpy as np
     import pyarrow.parquet as papq
 
-    from emailindexer_spark.plans.planner import _decode_arrow_docs
+    from emailindexer_spark.plans.planner import _LEVEL_COLS, _decode_table
 
     docs = []
     for f in glob.glob(os.path.join(index_dir, "postings", "part=*", "*.parquet")):
-        t = papq.read_table(f, columns=["term", "b_first", "b_docs"])
+        t = papq.read_table(f, columns=list(_LEVEL_COLS[0]))
         keep = [bool(match(x)) for x in t.column("term").to_pylist()]
-        docs.append(_decode_arrow_docs(t.filter(keep)))
+        docs.append(_decode_table(t.filter(keep), 0, 0, 1 << 62).docs)
     return set(np.concatenate(docs).tolist())
 
 

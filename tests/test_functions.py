@@ -588,10 +588,10 @@ class TestRunEncoder:
 
 
 class TestFrameDecode:
-    """The Arrow posting decoders (planner._decode_arrow_*) must equal
+    """The whole-table posting decoder planner._decode_table must equal
     the per-block reference decode_block for ANY mix of terms, rows and
-    block sizes (multi-row terms, single-byte and multi-byte varbyte
-    deltas, segment-boundary leak correction)."""
+    block sizes (multi-row terms, single-byte and multi-byte varbyte deltas,
+    segment-boundary leak correction)."""
 
     @staticmethod
     def _table(rows):
@@ -601,6 +601,9 @@ class TestFrameDecode:
         return pa.table(
             {
                 "term": pa.array([r["term"] for r in rows], pa.string()),
+                "split_id": pa.array([0] * len(rows), pa.int32()),
+                "first_doc": pa.array([r["b_first"][0] if r["b_first"] else 0 for r in rows], pa.int64()),
+                "last_doc": pa.array([r.get("last_doc", 1 << 62) for r in rows], pa.int64()),
                 "b_first": pa.array([r["b_first"] for r in rows], pa.list_(pa.int64())),
                 **{c: pa.array([r[c] for r in rows], blocks) for c in ("b_docs", "b_tfs", "b_norms")},
             }
@@ -616,10 +619,7 @@ class TestFrameDecode:
         st.integers(1, 9),
     )
     def test_frame_decode_matches_per_block(self, doc_lists, tf_mod):
-        from emailindexer_spark.plans.planner import (
-            _decode_arrow_docs,
-            _decode_arrow_postings,
-        )
+        from emailindexer_spark.plans.planner import _decode_table
 
         rows = []
         for j, docs in enumerate(doc_lists):
@@ -630,6 +630,7 @@ class TestFrameDecode:
             rows.append(
                 {
                     "term": f"t{j}",
+                    "last_doc": int(d[-1]),
                     "b_first": [int(x) for x in eb.first_doc],
                     "b_docs": eb.doc_bytes,
                     "b_tfs": eb.tf_bytes,
@@ -647,51 +648,52 @@ class TestFrameDecode:
                 ref_d.append(d), ref_t.append(t), ref_n.append(n)
         ref_d = np.concatenate(ref_d)
 
-        got_d, got_t, got_n = _decode_arrow_postings(table)
-        assert (got_d == ref_d).all()
-        assert (got_t == np.concatenate(ref_t)).all()
-        assert (got_n == np.concatenate(ref_n)).all()
-        # docs-only variant: segments recovered from continuation bits
-        assert (_decode_arrow_docs(table.select(["term", "b_first", "b_docs"])) == ref_d).all()
+        # rows given in order and in reverse, at levels 1 and 0 (docs
+        # only: segments recovered from continuation bits)
+        terms = [r["term"] for r in rows]
+        for level, order in ((1, 1), (0, 1), (1, -1), (0, -1)):
+            dec = _decode_table(table.take(np.arange(len(rows))[::order]), level, 0, 1 << 62)
+            got = dec.postings(terms, 0, 1 << 62)
+            assert (np.concatenate([got[t].docs for t in sorted(terms)]) == ref_d).all()
+            if level:
+                assert (np.concatenate([got[t].tfs for t in sorted(terms)]) == np.concatenate(ref_t)).all()
+                assert (np.concatenate([got[t].norms for t in sorted(terms)]) == np.concatenate(ref_n)).all()
 
     def test_frame_decode_empty(self):
-        from emailindexer_spark.plans.planner import (
-            _decode_arrow_docs,
-            _decode_arrow_postings,
-        )
+        from emailindexer_spark.plans.planner import _decode_table
 
         table = self._table([])
-        d, t, n = _decode_arrow_postings(table)
-        assert d.size == t.size == n.size == 0
-        assert _decode_arrow_docs(table).size == 0
+        for level in (0, 1):
+            dec = _decode_table(table, level, 0, 100)
+            assert dec.docs.size == dec.tfs.size == dec.norms.size == 0
+            assert dec.postings(["t"], 0, 100) == {}
 
     def test_frame_decode_rejects_empty_blocks(self):
         """An empty block would shift every later doc id of the rows;
         the decoders raise instead."""
         from emailindexer_spark.functions.codec import varbyte_encode
-        from emailindexer_spark.plans.planner import (
-            _decode_arrow_docs,
-            _segmented_delta_docs,
-        )
+        from emailindexer_spark.plans.planner import _decode_table, _segmented_delta_docs
 
         buf = varbyte_encode(np.array([0, 2, 0, 1], dtype=np.uint64))
         firsts = np.array([5, 9, 20])
         with pytest.raises(ValueError, match="non-empty"):
             _segmented_delta_docs(buf, firsts, np.array([2, 0, 2]))
         row = {"term": "t", "b_first": [5, 20], "b_docs": [buf, b""], "b_tfs": [b"", b""], "b_norms": [b"", b""]}
-        with pytest.raises(ValueError, match="non-empty"):
-            _decode_arrow_docs(self._table([row]))
+        for level in (0, 1):
+            with pytest.raises(ValueError, match="non-empty"):
+                _decode_table(self._table([row]), level, 0, 100)
 
     def test_row_decode_keeps_a_doc_range_and_checks_rows(self):
-        """planner._decode_rows against the per-row reference on random
-        rows of one term, given in any order: the postings inside a doc
-        range [lo, hi), ascending, with their tf, norm and positions; a
-        row whose range overlaps another's, or whose last_doc is cut
-        below its last doc, raises naming the row."""
+        """planner._decode_table and _Decoded.postings against the
+        per-row reference on random rows of two terms, given in any
+        order: each term's postings inside a doc range [lo, hi),
+        ascending, with their tf, norm and positions; a row whose range
+        overlaps another's of its term, or whose last_doc is cut below
+        its last doc, raises naming the row."""
         import pyarrow as pa
 
         from emailindexer_spark.functions.codec import encode_positions
-        from emailindexer_spark.plans.planner import _decode_rows
+        from emailindexer_spark.plans.planner import _decode_table
 
         rng = np.random.default_rng(0)
         schema = pa.schema(
@@ -700,7 +702,7 @@ class TestFrameDecode:
             + [(c, pa.list_(pa.binary())) for c in ("b_docs", "b_tfs", "b_norms", "b_pos")]
         )
 
-        def row(sid, docs):
+        def row(term, sid, docs):
             tfs = rng.integers(1, 4, docs.size)
             norms = rng.integers(0, 200, docs.size)
             pos = [np.sort(rng.choice(50, t, replace=False)) for t in tfs]
@@ -709,37 +711,50 @@ class TestFrameDecode:
                 encode_positions(np.concatenate(pos[i:i + 4]), tfs[i:i + 4]) for i in range(0, docs.size, 4)
             ]
             r = {
-                "term": "t", "split_id": sid, "first_doc": int(docs[0]), "last_doc": int(docs[-1]),
+                "term": term, "split_id": sid, "first_doc": int(docs[0]), "last_doc": int(docs[-1]),
                 "b_first": [int(x) for x in eb.first_doc], "b_docs": eb.doc_bytes, "b_tfs": eb.tf_bytes,
                 "b_norms": eb.norm_bytes, "b_pos": b_pos,
             }
             return r, (docs, tfs, norms, pos)
 
-        for trial in range(150):
+        def split_rows(term):
             docs = np.sort(rng.choice(1000, int(rng.integers(1, 60)), replace=False))
             k = min(docs.size - 1, int(rng.integers(0, 4)))
             cuts = np.sort(rng.choice(np.arange(1, docs.size), k, replace=False)) if k else []
-            rows, refs = zip(*(row(i, d) for i, d in enumerate(np.split(docs, cuts))))
+            return zip(*(row(term, i, d) for i, d in enumerate(np.split(docs, cuts))))
+
+        def decode(rows, level, lo, hi):
             table = pa.Table.from_pylist([rows[i] for i in rng.permutation(len(rows))], schema=schema)
+            return _decode_table(table, level, lo, hi).postings(["s", "t", "u"], lo, hi)
+
+        for trial in range(150):
+            rows, refs = split_rows("t")
+            other, other_refs = split_rows("s")
             lo = int(rng.integers(0, 500))
             hi = int(rng.integers(lo + 1, 1001))
-            d, t, n = (np.concatenate([r[i] for r in refs]) for i in range(3))
-            pos = [p for r in refs for p in r[3]]
-            keep = np.flatnonzero((d >= lo) & (d < hi))
-            got = _decode_rows(table, 2, lo, hi)
-            assert (got.docs == d[keep]).all() and (got.tfs == t[keep]).all(), trial
-            assert (got.norms == n[keep]).all(), trial
-            if keep.size:
+            got = decode(rows + other, 2, lo, hi)
+            docs_only = decode(rows + other, 0, lo, hi)
+            assert "u" not in got
+            for term, rr in (("t", refs), ("s", other_refs)):
+                d, t, n = (np.concatenate([r[i] for r in rr]) for i in range(3))
+                pos = [p for r in rr for p in r[3]]
+                keep = np.flatnonzero((d >= lo) & (d < hi))
+                if not keep.size:
+                    assert term not in got and term not in docs_only, trial
+                    continue
+                p = got[term]
+                assert (p.docs == d[keep]).all() and (p.tfs == t[keep]).all(), trial
+                assert (p.norms == n[keep]).all(), trial
                 want = np.concatenate([pos[i] for i in keep])
-                assert (got.positions(np.arange(keep.size)) == want).all(), trial
-            assert (_decode_rows(table, 0, lo, hi).docs == d[keep]).all(), trial
+                assert (p.positions(np.arange(keep.size)) == want).all(), trial
+                assert (docs_only[term].docs == d[keep]).all(), trial
             if len(rows) > 1:
                 bad = [dict(r) for r in rows]
                 bad[1]["first_doc"] = bad[0]["last_doc"]
                 with pytest.raises(ValueError, match=r"term 't' \(split_id [01]\)"):
-                    _decode_rows(pa.Table.from_pylist(bad, schema=schema), 1, 0, 1000)
+                    decode(bad + list(other), 1, 0, 1000)
             if rows[0]["first_doc"] < rows[0]["last_doc"]:
                 bad = [dict(r) for r in rows]
                 bad[0]["last_doc"] -= 1
                 with pytest.raises(ValueError, match=r"term 't' \(split_id 0\)"):
-                    _decode_rows(pa.Table.from_pylist(bad, schema=schema), 1, 0, 1000)
+                    decode(bad + list(other), 1, 0, 1000)

@@ -190,7 +190,7 @@ def test_local_tier_survives_append_and_compaction(spark, corpus_pdf, assert_sha
     (conv_id, turn_idx) come from the doc_stats join here, not from the
     artifact — on an index with two appends (several files per part)
     and again after compaction.  The local tier is checked twice: from
-    resident parts, and over the residency cap (LOCAL_MAX_POSTINGS just
+    resident parts decoded whole, and over the residency cap (LOCAL_MAX_POSTINGS just
     below the index's postings, above every query's), where each query
     scans the part files.  After the compaction, the distributed tier
     on 1, 3 and the default number of shards equals the local tier."""
@@ -349,75 +349,104 @@ def test_search_many_mixed_local_and_distributed(engines):
     _assert_batches_agree(*engines)
 
 
-def test_local_decoders_match_block_kernels(engines):
-    """The Arrow decoders of the local tier vs decode_block over every
-    posting row of a real index part."""
-    local, _ = engines
-    from emailindexer_spark.functions.codec import decode_block
-    from emailindexer_spark.plans.planner import _decode_arrow_docs, _decode_arrow_postings
+def _block_reference(rows):
+    """{term: (docs, tfs, norms, positions per posting)} of Arrow posting
+    ``rows`` by decode_block and decode_positions, block by block, each
+    term's rows taken in first_doc order."""
+    from emailindexer_spark.functions.codec import decode_block, decode_positions
 
+    by_term = {}
+    for r in sorted(rows.to_pylist(), key=lambda r: (r["term"], r["first_doc"])):
+        ref = by_term.setdefault(r["term"], ([], [], [], []))
+        for blk in zip(r["b_first"], r["b_docs"], r["b_tfs"], r["b_norms"], r["b_pos"]):
+            d, t, n = decode_block(*blk[:4])
+            ref[0].extend(d), ref[1].extend(t), ref[2].extend(n)
+            ref[3].extend(np.split(decode_positions(blk[4], t), np.cumsum(t)[:-1]))
+    return by_term
+
+
+def _assert_postings_equal(got, ref):
+    """{term: _Postings} against :func:`_block_reference` output."""
+    assert got.keys() == ref.keys()
+    for t, (d, tf, nm, pos) in ref.items():
+        p = got[t]
+        assert p.docs.dtype == np.int64 and p.docs.tolist() == d, t
+        if p.level:
+            assert p.tfs.tolist() == tf and p.norms.tolist() == nm, t
+        if p.level == 2:
+            assert [x.tolist() for x in np.split(p.positions(np.arange(p.docs.size)), np.cumsum(tf)[:-1])] == [
+                x.tolist() for x in pos
+            ], t
+
+
+def _part_rows(index_dir, terms):
+    """Every postings row of ``terms``, read with pyarrow from every
+    postings file."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    files = glob.glob(os.path.join(index_dir, "postings", "part=*", "*.parquet"))
+    return ds.dataset(files, format="parquet").to_table(filter=ds.field("term").isin(list(terms)))
+
+
+def test_local_decoders_match_block_kernels(engines, index_dir):
+    """The postings the local tier serves — resident decoded slices and,
+    over the residency cap, the per-query scan — vs decode_block over
+    every posting row of the terms in a real index, at every level."""
+    local, _ = engines
     vocab, dfs, _parts = local._driver_vocab()
-    heavy = vocab[int(np.argmax(dfs))]
-    rows = local._local_term_rows({heavy}, local.SCORE_COLS)[heavy]
-    docs, tfs, norms = _decode_arrow_postings(rows)
-    exp_d, exp_t, exp_n = [], [], []
-    for r in rows.to_pylist():
-        for blk in zip(r["b_first"], r["b_docs"], r["b_tfs"], r["b_norms"]):
-            d, t, n = decode_block(*blk)
-            exp_d.append(d)
-            exp_t.append(t)
-            exp_n.append(n)
-    assert len(exp_d) > 1
-    assert (docs == np.concatenate(exp_d)).all()
-    assert (tfs == np.concatenate(exp_t)).all()
-    assert (norms == np.concatenate(exp_n)).all()
-    drows = local._local_term_rows({heavy}, local.DOCS_COLS)[heavy]
-    assert (_decode_arrow_docs(drows) == np.concatenate(exp_d)).all()
+    terms = {vocab[int(np.argmax(dfs))], vocab[int(np.argmin(dfs))], vocab[int(np.argsort(dfs)[len(dfs) // 2])]}
+    ref = _block_reference(_part_rows(index_dir, terms))
+    assert len(ref) == 3
+    over = SearchEngine(local.spark, index_dir)
+    over.LOCAL_MAX_POSTINGS = 0
+    for level in (0, 1, 2):
+        got = local._local_term_rows(terms, level)
+        assert all(p.level == 2 for p in got.values())
+        _assert_postings_equal(got, ref)
+        scanned = over._local_term_rows(terms, level)
+        assert all(p.level == level for p in scanned.values()) and not over._resident
+        _assert_postings_equal(scanned, ref)
+    assert _part_rows(index_dir, {vocab[int(np.argmax(dfs))]}).num_rows > 1  # a multi-row term
 
 
 def _largest_postings_file(index_dir):
     import glob
     import os
 
-    from emailindexer_spark.plans.planner import _load_sorted_postings
+    from emailindexer_spark.plans.planner import _LEVEL_COLS, _load_sorted_postings
 
     files = glob.glob(os.path.join(index_dir, "postings", "part=*", "*.parquet"))
-    return _load_sorted_postings(max(files, key=os.path.getsize))[1]
+    return _load_sorted_postings(max(files, key=os.path.getsize), _LEVEL_COLS[2])
 
 
 def _assert_arrow_reader_matches_blocks(rows):
-    """The Arrow block reader decodes ``rows`` (an Arrow table) to what
-    decode_block gives block by block, and reads each block column's
-    bytes (b_pos included) and lengths as the rows' Python values."""
-    from emailindexer_spark.functions.codec import decode_block
-
+    """The Arrow block reader reads each block column of ``rows`` (an
+    Arrow table) — bytes, b_pos included, and lengths — as the rows'
+    Python values, and the whole-table kernel gives every term's
+    postings at every level as decode_block does block by block."""
     import emailindexer_spark.plans.planner as P
 
     py = rows.to_pydict()
-    blocks = [
-        decode_block(*blk)
-        for r in range(rows.num_rows)
-        for blk in zip(*(py[c][r] for c in ("b_first", "b_docs", "b_tfs", "b_norms")))
-    ]
-    want = [
-        np.concatenate([b[i] for b in blocks]) if blocks else np.empty(0, np.int64) for i in range(3)
-    ]
-    for got, w in zip(P._decode_arrow_postings(rows), want):
-        assert got.dtype == np.int64 and (got == w).all()
-    got = P._decode_arrow_docs(rows)
-    assert got.dtype == np.int64 and (got == want[0]).all()
     for col in ("b_docs", "b_tfs", "b_norms", "b_pos"):
         vals = [b for row in py[col] for b in row]
         gb, gl = P._arrow_blocks(rows.column(col))
         assert gb.tobytes() == b"".join(vals) and gl.tolist() == [len(b) for b in vals], col
-    assert P._arrow_firsts(rows.column("b_first")).tolist() == [x for row in py["b_first"] for x in row]
+    ref = _block_reference(rows)
+    for level in (0, 1, 2):
+        dec = P._decode_table(rows, level, 0, 1 << 62)
+        _assert_postings_equal(dec.postings(set(py["term"]), 0, 1 << 62), ref)
 
 
 def test_arrow_block_reader_matches_pandas_adapter(engines, index_dir):
-    """The Arrow block reader against decode_block and the rows' Python
-    values, on real postings rows: a zero-copy slice from the middle of
-    a file (its list and binary offsets do not start at 0), a
-    multi-chunk table and empty selections."""
+    """The Arrow block reader and the whole-table kernel against
+    decode_block and the rows' Python values, on real postings rows: a
+    zero-copy slice from the middle of a file (its list and binary
+    offsets do not start at 0), a multi-chunk table and empty
+    selections."""
     import pyarrow as pa
 
     import emailindexer_spark.plans.planner as P
@@ -430,21 +459,20 @@ def test_arrow_block_reader_matches_pandas_adapter(engines, index_dir):
     chunk = mid.column("b_docs").chunks[0]
     assert chunk.offset > 0 and chunk.flatten().offset > 0
     _assert_arrow_reader_matches_blocks(mid)
-    multi = pa.concat_tables([t.slice(1, 3), t.slice(n - 4, 4), t.slice(n // 2, 0)])
+    multi = pa.concat_tables([t.slice(n - 4, 4), t.slice(1, 3), t.slice(n // 2, 0)])
     assert multi.column("b_docs").num_chunks == 3
     _assert_arrow_reader_matches_blocks(multi)
     _assert_arrow_reader_matches_blocks(t)
     empty = t.slice(n // 2, 0)
     _assert_arrow_reader_matches_blocks(empty)
-    assert local._local_term_rows({"zzznope"}, local.POS_COLS) == {}
-    assert all(a.size == 0 for a in P._decode_arrow_postings(empty))
-    assert P._decode_arrow_docs(empty).size == 0
-    assert P._decode_rows(empty, 2, 0, local.n_rows).docs.size == 0
+    assert local._local_term_rows({"zzznope"}, 2) == {}
+    assert P._decode_table(empty, 2, 0, local.n_rows).docs.size == 0
 
 
 def test_arrow_decoders_reject_a_block_with_no_postings(index_dir):
     """A block with no postings would shift every later doc id of the
-    selection; the Arrow decoders raise, as the pandas adapters do."""
+    selection; the Arrow decoders and the whole-table kernel raise, as
+    the pandas adapters do."""
     import pyarrow as pa
 
     import emailindexer_spark.plans.planner as P
@@ -456,7 +484,7 @@ def test_arrow_decoders_reject_a_block_with_no_postings(index_dir):
         r[col] = r[col][:1] + [empty] + r[col][1:]
     r["b_pos"] = r["b_pos"][:1] + [b""] + r["b_pos"][1:]
     bad = pa.Table.from_pylist(rows, schema=t.schema)
-    for decode in (P._decode_arrow_postings, P._decode_arrow_docs):
+    for decode in [lambda x, lv=lv: P._decode_table(x, lv, 0, 1 << 62) for lv in (0, 1, 2)]:
         with pytest.raises(ValueError, match="non-empty"):
             decode(bad)
         with pytest.raises(ValueError, match="non-empty"):
@@ -472,6 +500,7 @@ def test_local_tier_makes_no_pandas_frame(spark, monkeypatch, engines):
     take build no pandas frame.  ``toPandas`` still equals the JVM
     relation's frame, dtypes included."""
     import pandas as pd
+    import pyarrow as pa
     import pyarrow.pandas_compat
     from pyspark.sql.classic.dataframe import DataFrame
 
@@ -497,7 +526,7 @@ def test_local_tier_makes_no_pandas_frame(spark, monkeypatch, engines):
     with monkeypatch.context() as m:
         m.setattr(pyarrow.pandas_compat, "table_to_dataframe", boom)
         with pytest.raises(AssertionError, match="pandas frame"):
-            local._local_term_rows({subs["mid"]}, local.SCORE_COLS)[subs["mid"]].to_pandas()
+            pa.table({"a": [1]}).to_pandas()
         for (q, mode), rows in zip(cases, want):
             res = local.search(q, k=12, mode=mode)
             assert isinstance(res, LocalResult), (q, mode)
@@ -559,13 +588,13 @@ def test_concurrent_first_touches_load_each_part_once(spark, monkeypatch, index_
     ref = SearchEngine(spark, index_dir)
     vocab, _dfs, _parts = ref._driver_vocab()
     term_sets = [set(vocab[i::7][:40]) for i in range(7)]
-    want = [ref._local_term_rows(ts, ref.SCORE_COLS) for ts in term_sets]
+    want = [ref._local_term_rows(ts, 1) for ts in term_sets]
     loads = Counter()
     load = P._load_sorted_postings
 
-    def counted(path):
+    def counted(path, cols):
         loads[path] += 1
-        return load(path)
+        return load(path, cols)
 
     monkeypatch.setattr(P, "_load_sorted_postings", counted)
     eng = SearchEngine(spark, index_dir)
@@ -573,7 +602,7 @@ def test_concurrent_first_touches_load_each_part_once(spark, monkeypatch, index_
 
     def work(i):
         try:
-            got[i] = eng._local_term_rows(term_sets[i % 7], eng.SCORE_COLS)
+            got[i] = eng._local_term_rows(term_sets[i % 7], 1)
         except Exception as e:  # reported by the assertion below
             errors.append(e)
 
@@ -591,7 +620,9 @@ def test_concurrent_first_touches_load_each_part_once(spark, monkeypatch, index_
     assert loads and set(loads.values()) == {1}
     for i in range(16):
         w = want[i % 7]
-        assert got[i].keys() == w.keys() and all(got[i][t].equals(w[t]) for t in w)
+        assert got[i].keys() == w.keys()
+        for t in w:
+            assert all(np.array_equal(a, b) for a, b in zip(got[i][t][1:4], w[t][1:4])), t
 
 
 def test_unsorted_postings_file_raises(spark, tmp_path, index_dir):

@@ -56,7 +56,10 @@ def test_search_many_shared_scan_mixed(spark, index_dir):
 def test_pooled_local_members_match_sequential(spark, index_dir):
     """A batch whose terms hold more than LOCAL_POOL_MIN_POSTINGS
     postings runs its local members on a thread pool; a smaller one on
-    the calling thread.  Both give the same rows."""
+    the calling thread.  Both give the same rows, also over the
+    residency cap, where members fetch a shared term at different
+    levels ("or" scores fuhepi, "not" only excludes it, "phrase" needs
+    noza's positions)."""
     import threading
 
     batch = {
@@ -67,10 +70,15 @@ def test_pooled_local_members_match_sequential(spark, index_dir):
         "phrase": ('"noza guka"', 5, "turns"),
         "prefix": ("qo*", 5, "turns"),
     }
+    total = int(SearchEngine(spark, index_dir)._driver_vocab()[1].sum())
     rows, threads = {}, {}
-    for name, cap in (("sequential", 10**12), ("pool", 0)):
+    for name, cap, resident in (
+        ("sequential", 10**12, True), ("pool", 0, True), ("pool_scan", 0, False)
+    ):
         eng = SearchEngine(spark, index_dir)
         eng.LOCAL_POOL_MIN_POSTINGS = cap
+        if not resident:
+            eng.LOCAL_MAX_POSTINGS = total - 1
         local_search, seen = eng._local_search, set()
 
         def spy(*a, _f=local_search, _seen=seen, **k):
@@ -80,9 +88,37 @@ def test_pooled_local_members_match_sequential(spark, index_dir):
         eng._local_search = spy
         rows[name] = sorted(tuple(r) for r in eng.search_many(batch).collect())
         threads[name] = seen
-    assert rows["pool"] == rows["sequential"] and rows["pool"]
+        assert bool(eng._resident) == resident
+    assert rows["pool"] == rows["sequential"] == rows["pool_scan"] and rows["pool"]
     assert threads["sequential"] == {threading.get_ident()}
-    assert threading.get_ident() not in threads["pool"]
+    assert threading.get_ident() not in threads["pool"] | threads["pool_scan"]
+
+
+def test_local_search_reads_its_own_postings_not_the_shared_cache(spark, index_dir):
+    """search_many members share one postings cache across driver
+    threads; another member may replace an entry with a lower level
+    while a query evaluates.  Each query scores from the postings it
+    took itself: with every cache write replaced at once by empty
+    docs-only postings, the answers still equal plain searches."""
+    from emailindexer_spark.plans.parser import parse
+    from emailindexer_spark.plans.planner import _no_postings
+
+    class Clobbered(dict):
+        def __setitem__(self, key, value):
+            super().__setitem__(key, _no_postings(0))
+
+        def update(self, other=(), **kw):
+            for key in dict(other, **kw):
+                self[key] = None
+
+    eng = SearchEngine(spark, index_dir)
+    eng.LOCAL_MAX_POSTINGS = int(eng._driver_vocab()[1].sum()) - 1  # fetch at each level asked
+    for q in ("qojema fuhepi noza", "qojema -fuhepi", '"noza guka"', "qojema AND fuhepi"):
+        cache = Clobbered()
+        got = eng._local_search(parse(q), 5, "turns", cache)
+        want = eng._local_search(parse(q), 5, "turns")
+        assert got is not None and cache, q
+        assert {c: v.tolist() for c, v in got.items()} == {c: v.tolist() for c, v in want.items()}, q
 
 
 def test_corrupt_conv_offsets_falls_back(spark, index_dir, tmp_path):

@@ -632,7 +632,9 @@ def test_engine_answers_as_of_its_open_across_a_compaction(spark, index_dir, cor
     """Compaction rewrites every postings file under untagged names, so an
     engine opened before an append and first searched after the
     compaction that merged it reads the appended postings: it still
-    returns no doc past its open's ``n_rows`` and answers as before."""
+    returns no doc past its open's ``n_rows`` and answers as before,
+    from resident decoded parts (its slices clipped at ``n_rows``) and
+    over the residency cap (each query's scan clipped alike)."""
     from emailindexer_spark.streaming.compact import compact_index
 
     root = tempfile.mkdtemp(prefix="ix_asof_compact_")
@@ -640,20 +642,25 @@ def test_engine_answers_as_of_its_open_across_a_compaction(spark, index_dir, cor
         d = os.path.join(root, "ix")
         shutil.copytree(index_dir, d)
         n0 = len(corpus_pdf)
-        modes = ("turns", "conversations")
-        before = [
-            [tuple(r) for r in SearchEngine(spark, d).search("juja", k=300, mode=m).collect()]
-            for m in modes
-        ]
+        cases = [(q, m) for q in ("juja", '"juja ralocu"', "juj*", "juja~1") for m in ("turns", "conversations")]
+
+        def answers(eng):
+            return [[tuple(r) for r in eng.search(q, k=300, mode=m).collect()] for q, m in cases]
+
+        before = answers(SearchEngine(spark, d))
         old = SearchEngine(spark, d)  # opened, not yet searched
+        old_over = SearchEngine(spark, d)
+        old_over.LOCAL_MAX_POSTINGS = int(SearchEngine(spark, d)._driver_vocab()[1].sum()) - 1
         batch = corpus_pdf.head(200).assign(conv_id=lambda x: "zz_" + x.conv_id)
         incremental_append(spark, d, spark.createDataFrame(batch))
         compact_index(spark, d)
         fresh = SearchEngine(spark, d).search("juja", k=300).collect()
         assert any(r.doc_id >= n0 for r in fresh)  # the batch does hold the term
-        got = [[tuple(r) for r in old.search("juja", k=300, mode=m).collect()] for m in modes]
-        assert all(r[1] < n0 for rows in got for r in rows)
-        assert got == before
+        for eng in (old, old_over):
+            got = answers(eng)
+            assert all(r[1] < n0 for rows in got for r in rows)
+            assert got == before
+        assert old._resident and not old_over._resident
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

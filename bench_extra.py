@@ -23,7 +23,18 @@ Modes (first CLI arg):
   then ``_decode_table`` over them) and the bytes the decoded part keeps
   resident against the Arrow bytes it was read from; then the local ms
   of each perfbench query shape on the warm engine (median over passes
-  of ten draws per shape), with no perfbench run.
+  of ten draws per shape), with no perfbench run.  The decode includes
+  the norm gather from doc_index's norm columns, read once first
+  (``norms_read_ms``, ``norms_bytes``).
+* ``footprint [SEED]`` — perfbench's index on disk, without a perfbench
+  run: the base corpus and its append batches from
+  ``_corpus_and_batches(SEED)``, written and indexed as perfbench writes
+  them (sentinel terms included), in a temporary directory.  Prints the
+  bytes per table and, per column, its codecs and compressed /
+  uncompressed bytes (summed over files and row groups, read from the
+  footers), then one JSON line with ``index_bytes_per_input_byte``
+  after the first append (search-local's figure) and after the second
+  (ingest-search's).
 """
 
 from __future__ import annotations
@@ -185,12 +196,15 @@ def local_decode(seed: int) -> None:
 
     eng = P.SearchEngine(spark, ix)
     level = 2 if eng.positions else 1
+    t0 = time.perf_counter()
+    norms = eng._doc_norms()
+    norms_read_ms = round(1e3 * (time.perf_counter() - t0), 2)
     parts = []
     for part in range(eng.num_parts):
         t0 = time.perf_counter()
         tables = [P._load_sorted_postings(f, P._LEVEL_COLS[level]) for f in eng._part_files(part)]
         t1 = time.perf_counter()
-        dec = P._decode_table(pa.concat_tables(tables), level, 0, eng.n_rows)
+        dec = P._decode_table(pa.concat_tables(tables), level, 0, eng.n_rows, norms)
         t2 = time.perf_counter()
         arrays = [*dec[1:-1], *(dec.pos or ())]  # every field but level, pos unpacked
         strs = sum(sys.getsizeof(x) for x in dec.term)  # the term objects
@@ -228,6 +242,8 @@ def local_decode(seed: int) -> None:
                 "seed": seed,
                 "n_rows": eng.n_rows,
                 "parts": parts,
+                "norms_read_ms": norms_read_ms,
+                "norms_bytes": sum(a.nbytes for a in norms.cols),
                 "first_touch_ms": round(sum(p["read_ms"] + p["decode_ms"] for p in parts), 1),
                 "resident_bytes": resident,
                 "arrow_bytes": sum(p["arrow_bytes"] for p in parts),
@@ -240,6 +256,77 @@ def local_decode(seed: int) -> None:
     spark.stop()
 
 
+def footprint(seed: int) -> None:
+    sys.path.insert(0, REPO)
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import collections
+    import glob
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as papq
+    from workloads import NUM_PARTS, SENTINEL_EVERY, _corpus_and_batches, _dir_bytes
+
+    from emailindexer_spark import get_spark
+    from emailindexer_spark.plans.builder import IndexBuilder
+    from emailindexer_spark.streaming.ingest import incremental_append
+
+    nproc = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="bench-extra-footprint", master=f"local[{nproc}]")
+    spark.sparkContext.setLogLevel("ERROR")
+    work = tempfile.mkdtemp(prefix="footprint_")
+    try:
+        corpus, batches = _corpus_and_batches(seed)
+        ix = os.path.join(work, "index")
+        pq = os.path.join(work, "corpus.parquet")
+        corpus.to_parquet(pq, index=False, row_group_size=max(1000, len(corpus) // (2 * nproc)))
+        input_bytes = os.path.getsize(pq)
+        IndexBuilder(spark, ix, num_parts=NUM_PARTS).build(spark.read.parquet(pq))
+        ratios = {}
+        for r, batch in enumerate(batches, start=1):
+            batch = batch.copy()  # as perfbench's Run.append writes it
+            idx = batch.index[::SENTINEL_EVERY]
+            batch.loc[idx, "text"] = batch.loc[idx, "text"] + f" xsentinel{r}"
+            path = os.path.join(work, f"batch-{r}.parquet")
+            batch.to_parquet(path, index=False)
+            input_bytes += os.path.getsize(path)
+            incremental_append(spark, ix, spark.read.parquet(path))
+            ratios[f"after_append_{r}"] = round(_dir_bytes(ix) / input_bytes, 4)
+
+        tables = collections.Counter()
+        cols = collections.defaultdict(lambda: [set(), 0, 0])
+        for f in glob.glob(os.path.join(ix, "**", "*.parquet"), recursive=True):
+            t = os.path.relpath(f, ix).split(os.sep)[0]
+            tables[t] += os.path.getsize(f)
+            md = papq.ParquetFile(f).metadata
+            for g in range(md.num_row_groups):
+                for c in range(md.num_columns):
+                    cc = md.row_group(g).column(c)
+                    e = cols[t, cc.path_in_schema]
+                    e[0].add(cc.compression)
+                    e[1] += cc.total_compressed_size
+                    e[2] += cc.total_uncompressed_size
+        for t, n in sorted(tables.items()):
+            print(f"{t:<14}{n:>12,}")
+        print(f"{'total':<14}{sum(tables.values()):>12,}")
+        for (t, c), (codec, comp, unc) in sorted(cols.items()):
+            print(f"{t + '.' + c:<34}{'/'.join(sorted(codec)):<12}{comp:>12,}{unc:>14,}{comp / max(unc, 1):>7.2f}")
+        print(
+            json.dumps(
+                {
+                    "mode": "footprint",
+                    "seed": seed,
+                    "index_bytes": _dir_bytes(ix),
+                    "input_bytes": input_bytes,
+                    "index_bytes_per_input_byte": ratios,
+                }
+            )
+        )
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "dist-queries"
     if mode == "dist-queries":
@@ -248,5 +335,7 @@ if __name__ == "__main__":
         scale_trend(int(sys.argv[2]))
     elif mode == "local-decode":
         local_decode(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
+    elif mode == "footprint":
+        footprint(int(sys.argv[2]) if len(sys.argv) > 2 else 41)
     else:
         raise SystemExit(f"unknown mode {mode!r}")

@@ -10,16 +10,17 @@ codec:
   first-delta-from-block-start + consecutive deltas, varbyte-encoded
   (7 payload bits per byte, MSB = continuation),
 * term frequencies are varbyte-encoded,
-* per-doc norm bytes (Lucene-style SmallFloat-encoded doc lengths,
-  ``smallfloat.int_to_byte4``) ride along raw — this inlines the "norms"
-  file into the postings so query-time scoring needs NO join against a
-  per-doc stats table (critical at 10^12 docs, where doc_stats cannot be
-  broadcast),
 * every ``BLOCK_SIZE`` (128) docs form an independently-decodable block
   that stores its first doc id, the base of its deltas.
 
+Norms are not stored here: like Lucene's norms, they are one
+SmallFloat byte per document and field (``smallfloat.int_to_byte4`` of
+its length), kept once in ``doc_index``'s ``norm`` / ``norm_{field}``
+columns, and the query side gathers them by doc id when it decodes a
+postings table (plans/planner.py ``_decode_table``).
+
 All encode/decode paths are pure numpy (no per-element Python in the hot
-loop) and run inside Arrow-batched pandas UDFs.
+loop) and run alike on the driver and in Spark tasks.
 """
 
 from __future__ import annotations
@@ -63,29 +64,31 @@ def varbyte_decode(buf: bytes) -> np.ndarray:
     """Vectorized varbyte decode → uint64 array.
 
     Single-byte-only buffers (no continuation bits — the common case
-    for small deltas) decode as one cast.  Mixed buffers OR each byte
-    position in with a fancy-indexed scatter per position-within-value
-    (indices are unique per pass, and there are at most 10 passes), which
-    replaces the old ``np.add.at`` single pass — ufunc.at is an order of
-    magnitude slower than a plain unique-index scatter."""
+    for small deltas) decode as one cast.  Otherwise the work is per
+    value: each value's start comes from the end bits (a value ends at
+    each byte whose high bit is clear), its first byte is one gather,
+    and the j-th extra byte one more gather over only the values that
+    have one, so every byte is read once."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
-    is_end = (b & 0x80) == 0
+    is_end = b < 0x80
     if bool(is_end.all()):
         return b.astype(np.uint64)
-    value_id = np.zeros(b.size, dtype=np.int64)
-    value_id[1:] = np.cumsum(is_end)[:-1]
-    n_values = int(is_end.sum())
-    # position j of byte i = i - start_of_value(value_id[i])
-    value_starts = np.zeros(n_values, dtype=np.int64)
-    value_starts[1:] = np.nonzero(is_end)[0][:-1] + 1
-    pos = np.arange(b.size, dtype=np.int64) - value_starts[value_id]
-    payload = (b & np.uint8(0x7F)).astype(np.uint64)
-    out = np.zeros(n_values, dtype=np.uint64)
-    for j in range(int(pos.max()) + 1):
-        m = pos == j
-        out[value_id[m]] |= payload[m] << np.uint64(7 * j)
+    if not is_end[-1]:
+        raise ValueError("varbyte buffer ends inside a value")
+    ends = np.flatnonzero(is_end)
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    out = (b[starts] & np.uint8(0x7F)).astype(np.uint64)
+    more = ends - starts  # extra bytes per value
+    idx = np.flatnonzero(more)
+    j = 1
+    while idx.size:
+        out[idx] |= (b[starts[idx] + j] & np.uint8(0x7F)).astype(np.uint64) << np.uint64(7 * j)
+        j += 1
+        idx = idx[more[idx] >= j]
     return out
 
 
@@ -98,42 +101,38 @@ class EncodedBlocks:
     first_doc: np.ndarray  # int64 per block
     doc_bytes: list[bytes]
     tf_bytes: list[bytes]
-    norm_bytes: list[bytes]
 
 
 def encode_blocks(
-    doc_ids: np.ndarray, tfs: np.ndarray, norms: np.ndarray, block_size: int = BLOCK_SIZE
+    doc_ids: np.ndarray, tfs: np.ndarray, block_size: int = BLOCK_SIZE
 ) -> EncodedBlocks:
     """Encode one sorted posting run into independent blocks."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
-    norms = np.asarray(norms, dtype=np.int64)
     if doc_ids.size and (np.diff(doc_ids) <= 0).any():
         raise ValueError("doc_ids must be strictly increasing within a posting run")
     nb = max(1, -(-doc_ids.size // block_size)) if doc_ids.size else 0
     first = np.empty(nb, dtype=np.int64)
     dbs: list[bytes] = []
     tbs: list[bytes] = []
-    nbs: list[bytes] = []
     for i in range(nb):
         sl = slice(i * block_size, min((i + 1) * block_size, doc_ids.size))
-        d, t, m = doc_ids[sl], tfs[sl], norms[sl]
+        d, t = doc_ids[sl], tfs[sl]
         first[i] = d[0]
         deltas = np.diff(d, prepend=d[0]).astype(np.uint64)  # first delta = 0
         dbs.append(varbyte_encode(deltas))
         tbs.append(varbyte_encode(t.astype(np.uint64)))
-        nbs.append(m.astype(np.uint8).tobytes())
-    return EncodedBlocks(first, dbs, tbs, nbs)
+    return EncodedBlocks(first, dbs, tbs)
 
 
 @dataclass
 class EncodedRuns:
     """Blocks of many consecutive posting runs, encoded together.
 
-    ``first_doc`` as in :class:`EncodedBlocks`; the payloads are three
+    ``first_doc`` as in :class:`EncodedBlocks`; the payloads are two
     contiguous buffers cut by byte offsets instead of lists of
     per-block ``bytes`` (block i's doc deltas are
-    ``doc_buf[doc_offs[i]:doc_offs[i + 1]]``, likewise tfs and norms).
+    ``doc_buf[doc_offs[i]:doc_offs[i + 1]]``, likewise tfs).
     Run r owns blocks ``run_blocks[r]:run_blocks[r + 1]``; block i owns
     postings ``block_starts[i]:block_starts[i + 1]``."""
 
@@ -142,7 +141,6 @@ class EncodedRuns:
     doc_offs: np.ndarray  # int64, nb + 1
     tf_buf: bytes
     tf_offs: np.ndarray  # int64, nb + 1
-    norm_buf: bytes  # one byte per posting: offsets are block_starts
     run_blocks: np.ndarray  # int64, R + 1
     block_starts: np.ndarray  # int64, nb + 1
 
@@ -150,7 +148,6 @@ class EncodedRuns:
 def encode_runs_vec(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
-    norms: np.ndarray,
     run_starts: np.ndarray,
     block_size: int = BLOCK_SIZE,
 ) -> EncodedRuns:
@@ -163,7 +160,6 @@ def encode_runs_vec(
     encode_blocks is pytest-gated."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
-    norms = np.asarray(norms, dtype=np.int64)
     rs = np.asarray(run_starts, dtype=np.int64)
     n = doc_ids.size
     rlen = np.diff(np.append(rs, n))
@@ -192,21 +188,19 @@ def encode_runs_vec(
         doffs[block_starts],
         tbuf,
         toffs[block_starts],
-        norms.astype(np.uint8).tobytes(),
         run_blocks,
         block_starts,
     )
 
 
 def decode_block(
-    first_doc: int, doc_bytes: bytes, tf_bytes: bytes, norm_bytes: bytes
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode one block → (doc_ids int64, tfs int64, norms int64)."""
+    first_doc: int, doc_bytes: bytes, tf_bytes: bytes
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode one block → (doc_ids int64, tfs int64)."""
     deltas = varbyte_decode(doc_bytes).astype(np.int64)
     docs = np.cumsum(deltas) + first_doc  # deltas[0] == 0
     tfs = varbyte_decode(tf_bytes).astype(np.int64)
-    norms = np.frombuffer(norm_bytes, dtype=np.uint8).astype(np.int64)
-    return docs, tfs, norms
+    return docs, tfs
 
 
 def varbyte_encode_offsets(values: np.ndarray) -> tuple[bytes, np.ndarray]:

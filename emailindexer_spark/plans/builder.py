@@ -10,10 +10,12 @@ decodable delta+varbyte blocks (``_encode_chunk_table``) → the index
 tables, written with pyarrow as zstd Parquet (``write_index_table``,
 the one writer of every index and staging file):
 
-  doc_index      stored fields plus dl/norm per field, one row per turn
+  doc_index      stored fields plus dl/norm per field, one row per turn:
+                 the one copy of the norms, which queries gather by doc
   doc_stats      skinny (doc_id, conv_id, turn_idx, dl, norm) projection
-  postings       one row per (term, split), one (term, split_id)-sorted
-                 file per part = md5(term) % P (query-side pruning)
+  postings       one row per (term, split) of doc and tf blocks, one
+                 (term, split_id)-sorted file per part = md5(term) % P
+                 (query-side pruning)
   term_dict      (term, part, df) sorted by term (prefix expansion)
   conv_offsets   (conv_id, conv_offset, n_turns) of a dense build
   build_metrics  per-part lineage (FIXTURES.md §5)
@@ -90,7 +92,7 @@ POSTINGS_ARROW_SCHEMA = pa.schema(
         ("first_doc", pa.int64()),
         ("last_doc", pa.int64()),
         ("b_first", pa.list_(pa.int64())),
-        *((c, pa.list_(pa.binary())) for c in ("b_docs", "b_tfs", "b_norms", "b_pos")),
+        *((c, pa.list_(pa.binary())) for c in ("b_docs", "b_tfs", "b_pos")),
     ]
 )
 
@@ -221,7 +223,6 @@ def _pack_chunk_rows(
     tstarts: np.ndarray,
     docs: np.ndarray,
     tfs: np.ndarray,
-    norms: np.ndarray,
     pos_buf: bytes,
     pos_bounds: np.ndarray | None,
     heavy_rule: tuple[int, int] | None,
@@ -229,7 +230,7 @@ def _pack_chunk_rows(
     n_rows: int,
 ) -> pd.DataFrame:
     """Term-major postings → chunk rows (term, split_id, docs, tfs,
-    norms, pos), one per (term, split).
+    pos), one per (term, split).
 
     ``terms[i]`` owns postings ``tstarts[i]:tstarts[i + 1]``, docs
     strictly ascending within each term and inside ``[base, base +
@@ -265,7 +266,6 @@ def _pack_chunk_rows(
     dd[bs] = docs[bs]
     docs_buf, docs_offs = varbyte_encode_offsets(dd.astype(np.uint64))
     tfs_buf, tfs_offs = varbyte_encode_offsets(tfs.astype(np.uint64))
-    norms_buf = norms.astype(np.uint8).tobytes()
     mv_d, mv_t = memoryview(docs_buf), memoryview(tfs_buf)
     if pos_bounds is None:
         pos_col = [b""] * bs.size
@@ -278,7 +278,6 @@ def _pack_chunk_rows(
             "split_id": sids[bs].astype(np.int32),
             "docs": [bytes(mv_d[docs_offs[a]:docs_offs[b]]) for a, b in zip(bs, be)],
             "tfs": [bytes(mv_t[tfs_offs[a]:tfs_offs[b]]) for a, b in zip(bs, be)],
-            "norms": [norms_buf[a:b] for a, b in zip(bs, be)],
             "pos": pos_col,
         }
     )
@@ -297,12 +296,12 @@ def _tokenize_to_chunk_rows(
     tokens; ``texts`` maps each field to its column, fields[0] first.
 
     One lexsort puts a field's tokens in term-major (then doc, then
-    position) order; per-(doc, term) tf, norm and segmented-delta
-    positions come off it vectorized, and _pack_chunk_rows cuts the
-    rows.  Non-default fields emit FIELD-PREFIXED term keys
-    (``field:term``) with that field's own norm — one shared term space
-    carrying per-field statistics (Lucene's per-field terms dicts
-    flattened)."""
+    position) order; per-(doc, term) tf and segmented-delta positions
+    come off it vectorized, and _pack_chunk_rows cuts the rows.
+    Non-default fields emit FIELD-PREFIXED term keys (``field:term``),
+    which score with that field's own norm column of doc_index — one
+    shared term space carrying per-field statistics (Lucene's per-field
+    terms dicts flattened)."""
     frames = []
     for fi, (field, col) in enumerate(texts.items()):
         nlens, codes, uniques = tokenize_series_codes(col, simple=simple)
@@ -334,7 +333,6 @@ def _tokenize_to_chunk_rows(
                 tstarts,
                 gdocs,
                 np.diff(gstarts_ext),
-                encode_lengths(nlens[gdocs - base].astype(np.int64)),
                 pos_buf,
                 pos_bounds,
                 heavy_rule,
@@ -372,7 +370,8 @@ def _encode_chunk_table(
     row per (term, split_id) run, in input order.
 
     Every pass covers the whole input: one varbyte decode per payload
-    column (concatenated varbyte streams are self-delimiting), one
+    column (concatenated varbyte streams are self-delimiting, so a
+    row's postings are counted off its doc bytes' end bits), one
     lexsort putting each run's postings in doc order (skipped when the
     chunks already arrive that way), one functions/codec.encode_runs_vec
     call for all blocks of all runs (tests/test_functions.py gates it
@@ -383,10 +382,9 @@ def _encode_chunk_table(
         return
     terms = chunks.column("term").to_numpy(zero_copy_only=False)
     splits = chunks.column("split_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    norms_all, ndocs = _binary_values(chunks.column("norms"))
-    norms_all = norms_all.astype(np.int64)
-    row_starts = np.concatenate(([0], np.cumsum(ndocs)))
-    docs_raw, _ = _binary_values(chunks.column("docs"))
+    docs_raw, dlens = _binary_values(chunks.column("docs"))
+    row_starts = np.concatenate(([0], np.cumsum(docs_raw < 0x80)))[np.cumsum(np.append(0, dlens))]
+    ndocs = np.diff(row_starts)
     docs_all = varbyte_decode(docs_raw).view(np.int64)
     # undo the per-row delta coding: cumsum, then subtract the prefix
     # that leaked across row boundaries (segment-cumsum trick)
@@ -408,13 +406,13 @@ def _encode_chunk_table(
     run_start[post_rs] = True
     if not ((np.diff(docs_abs) > 0) | run_start[1:]).all():
         order = np.lexsort((docs_abs, np.cumsum(run_start)))
-        docs_abs, tfs_all, norms_all = docs_abs[order], tfs_all[order], norms_all[order]
+        docs_abs, tfs_all = docs_abs[order], tfs_all[order]
         if has_pos:
             s_ = bounds[:-1][order]
             lens = bounds[1:][order] - s_
             bounds = np.concatenate(([0], np.cumsum(lens)))
             pb = pb[np.repeat(s_ - bounds[:-1], lens) + np.arange(int(bounds[-1]), dtype=np.int64)]
-    er = encode_runs_vec(docs_abs, tfs_all, norms_all, post_rs, block_size)
+    er = encode_runs_vec(docs_abs, tfs_all, post_rs, block_size)
     if has_pos:
         pos_buf, pos_offs = pb, bounds[er.block_starts]
     else:
@@ -447,7 +445,6 @@ def _encode_chunk_table(
                 blocks(pa.array(er.first_doc[b0:b1], pa.int64())),
                 blocks(_binary_cuts(er.doc_buf, er.doc_offs[b0 : b1 + 1])),
                 blocks(_binary_cuts(er.tf_buf, er.tf_offs[b0 : b1 + 1])),
-                blocks(_binary_cuts(er.norm_buf, er.block_starts[b0 : b1 + 1])),
                 blocks(_binary_cuts(pos_buf, pos_offs[b0 : b1 + 1])),
             ],
             schema=POSTINGS_ARROW_SCHEMA,
@@ -588,10 +585,10 @@ def _stage_on_driver(
     for k in np.unique(part):
         write("postings", body.take(np.flatnonzero(part == k)), f"part={k}")
     lap("postings")
-    # per (term, part): df, posting rows, payload bytes (a row's b_docs,
-    # b_tfs and b_norms blocks) and skew splits (rows of split_id > 0)
+    # per (term, part): df, posting rows, payload bytes (a row's b_docs
+    # and b_tfs blocks) and skew splits (rows of split_id > 0)
     payload = np.zeros(post.num_rows, np.int64)
-    for c in ("b_docs", "b_tfs", "b_norms"):
+    for c in ("b_docs", "b_tfs"):
         col = post.column(c).combine_chunks()
         cs = np.concatenate(([0], np.cumsum(pc.binary_length(col.values).to_numpy())))
         offs = col.offsets.to_numpy()

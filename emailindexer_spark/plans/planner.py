@@ -9,11 +9,14 @@ job) → :class:`QueryEvaluator`, the ONE scorer of every query shape:
 (ast, term → decoded postings, idf/avgdl maps) → (sorted docs, scores)
 → top-k with optional conversation collapse.
 
-Scoring needs NO join against per-doc stats: norms ride inside the
-postings payload (functions/codec.py), so a term's score stream is a
-pure map over its postings.  One kernel, :func:`_decode_table`, decodes
-postings rows from Arrow buffers for both tiers, a whole table at a
-time.
+Norms are per document, as in Lucene: one byte per doc and field in
+``doc_index``'s ``norm`` / ``norm_{field}`` columns, never copied into
+the postings.  One kernel, :func:`_decode_table`, decodes postings rows
+from Arrow buffers for both tiers, a whole table at a time, and fills
+each posting's norm with one gather per field from the norms of its doc
+range (:class:`_DocNorms`, read once per engine on the driver and once
+per shard task), so a term's score stream is a pure map over its
+decoded postings.
 
 The evaluator runs in one of two places:
 
@@ -199,7 +202,9 @@ def _codes_matrix(strs, lens: np.ndarray) -> np.ndarray:
     return M
 
 
-def _levenshtein_batch(cands, text: str, transpositions: bool = False) -> np.ndarray:
+def _levenshtein_batch(
+    cands, text: str, transpositions: bool = False, lens: np.ndarray | None = None
+) -> np.ndarray:
     """Edit distance from ``text`` to each candidate, vectorized across
     candidates (DP rows are (N, L+1) arrays; the insertion recurrence's
     sequential dependency along j is resolved by the classic
@@ -209,11 +214,15 @@ def _levenshtein_batch(cands, text: str, transpositions: bool = False) -> np.nda
     ``transpositions=True`` adds the adjacent-transposition edit
     (optimal string alignment / restricted Damerau-Levenshtein — the
     same primitive Lucene's FuzzyQuery automaton applies with its
-    default ``transpositions=true``)."""
+    default ``transpositions=true``).  ``lens``, the candidates' lengths
+    in code points, is computed when not given."""
     n = len(cands)
     if n == 0:
         return np.zeros(0, dtype=np.int32)
-    lens = np.fromiter((len(t) for t in cands), dtype=np.int64, count=n)
+    if lens is None:
+        lens = np.fromiter((len(t) for t in cands), dtype=np.int64, count=n)
+    else:
+        lens = np.asarray(lens, dtype=np.int64)
     M = _codes_matrix(cands, lens)
     L = M.shape[1]
     tc = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
@@ -401,11 +410,68 @@ def _no_hits() -> tuple[np.ndarray, np.ndarray]:
 
 
 #: the postings columns read per decode level (:func:`_term_levels`):
-#: doc ids only, with tf and norm, with positions too (b_pos, ~40% of a
-#: positioned index's bytes, is read only by phrases)
+#: doc ids only, with tf (norms come from doc_index), with positions too
+#: (b_pos, ~40% of a positioned index's bytes, is read only by phrases).
+#: Postings written before 0.5.0 also hold a per-posting ``b_norms``
+#: copy, which no reader selects.
 _DOCS_COLS = ("term", "split_id", "first_doc", "last_doc", "b_first", "b_docs")
-_SCORE_COLS = _DOCS_COLS + ("b_tfs", "b_norms")
+_SCORE_COLS = _DOCS_COLS + ("b_tfs",)
 _LEVEL_COLS = (_DOCS_COLS, _SCORE_COLS, _SCORE_COLS + ("b_pos",))
+
+
+class _DocNorms(NamedTuple):
+    """The norm bytes of docs [lo, lo + len) per field: ``cols[i]`` is
+    doc_index's ``norm`` column for ``fields[0]`` (bare keys) and
+    ``norm_{fields[i]}`` for the other fields (``field:term`` keys)."""
+
+    lo: int
+    fields: tuple[str, ...]
+    cols: tuple[np.ndarray, ...]
+
+    def gather(self, term_col, docs: np.ndarray, counts: np.ndarray) -> np.ndarray:
+        """The norm byte of each posting ``docs`` of a decoded table whose
+        row r (term ``term_col[r]``) holds ``counts[r]`` of them: one
+        gather per field.  A doc outside the range (a kept block's edge
+        past [lo, hi)) takes the nearest edge's byte; ``_Decoded.postings``
+        never hands it out."""
+        if len(self.cols) == 1:
+            return np.take(self.cols[0], docs - self.lo, mode="clip")
+        import pyarrow.compute as pc
+
+        row_field = np.zeros(len(term_col), np.int8)
+        for i, f in enumerate(self.fields[1:], 1):
+            row_field[pc.starts_with(term_col, f + ":").to_numpy(zero_copy_only=False)] = i
+        field = np.repeat(row_field, counts)
+        out = np.empty(docs.size, np.uint8)
+        for i, c in enumerate(self.cols):
+            sel = field == i
+            out[sel] = np.take(c, docs[sel] - self.lo, mode="clip")
+        return out
+
+
+def _read_doc_norms(files: list[str], fields: tuple[str, ...], lo: int, hi: int) -> _DocNorms:
+    """The :class:`_DocNorms` of docs [lo, hi) from the doc_index
+    ``files``: ``doc_id`` and the norm columns only (no ``text``), row
+    groups pruned by their doc_id min/max.  Raises ValueError unless
+    the files hold each doc of the range once."""
+    import pyarrow.dataset as ds
+
+    cols = ["norm", *(f"norm_{f}" for f in fields[1:])]
+    t = ds.dataset(files, format="parquet").to_table(
+        columns=["doc_id", *cols], filter=(ds.field("doc_id") >= lo) & (ds.field("doc_id") < hi)
+    )
+    at = t.column("doc_id").to_numpy() - lo
+    seen = np.zeros(hi - lo, bool)
+    seen[at] = True
+    if at.size != hi - lo or not seen.all():
+        raise ValueError(f"doc_index holds {at.size} rows for the {hi - lo} docs [{lo}, {hi})")
+    out = []
+    for c in cols:
+        a = np.empty(hi - lo, np.uint8)
+        a[at] = t.column(c).to_numpy()
+        a.flags.writeable = False
+        out.append(a)
+    return _DocNorms(lo, tuple(fields), tuple(out))
 
 
 class _Decoded(NamedTuple):
@@ -446,12 +512,17 @@ class _Decoded(NamedTuple):
         return out
 
 
-def _decode_table(table: pa.Table, level: int, lo: int, hi: int) -> _Decoded:
+def _decode_table(
+    table: pa.Table, level: int, lo: int, hi: int, doc_norms: _DocNorms | None = None
+) -> _Decoded:
     """Decode a postings ``table`` (any row order, columns
     ``_LEVEL_COLS[level]``) whole at ``level``, keeping the docs of
     [lo, hi): rows whose [first_doc, last_doc] misses the range keep no
     postings, and of the others only the blocks that overlap it are
-    decoded, in ONE varbyte pass per column.
+    decoded, in ONE varbyte pass per column.  From level 1 on each
+    posting's norm is gathered from ``doc_norms`` (those of [lo, hi));
+    without them (compaction, which rewrites docs, tfs and positions
+    only) the norms stay empty.
 
     Shards choose rows by their doc ranges, so a wrong range would drop
     hits without a sound: a decoded doc outside its row's
@@ -482,17 +553,13 @@ def _decode_table(table: pa.Table, level: int, lo: int, hi: int) -> _Decoded:
     else:
         firsts, brow = firsts[keep], brow[keep]
     dblocks = _kept_blocks(table.column("b_docs"), keep)
-    if level == 0:
-        nb = _doc_counts(*dblocks) if firsts.size else np.empty(0, np.int64)
-        docs = _segmented_delta_docs(dblocks[0], firsts, nb) if firsts.size else nb
-        tfs = norms = np.empty(0, np.int64)
-    else:  # tfs as int32 and norms as their bytes: 13 bytes a posting, not 24
-        norms, nb = _kept_blocks(table.column("b_norms"), keep)
-        docs = np.empty(0, np.int64)
-        if firsts.size:
-            docs = _segmented_delta_docs(dblocks[0], firsts, nb)
+    nb = _doc_counts(*dblocks) if firsts.size else np.empty(0, np.int64)
+    docs = _segmented_delta_docs(dblocks[0], firsts, nb) if firsts.size else nb
+    tfs = np.empty(0, np.int32)
+    if level:  # tfs as int32 and norms as bytes: 13 bytes a posting, not 24
         tfs = varbyte_decode(_kept_blocks(table.column("b_tfs"), keep)[0]).astype(np.int32)
-        norms = np.array(norms)
+        if tfs.size != docs.size:
+            raise ValueError(f"postings table holds {tfs.size} tfs for {docs.size} docs")
     cnt = np.bincount(brow, weights=nb, minlength=n).astype(np.int64)
     off = np.concatenate(([0], np.cumsum(cnt)))
     has = np.flatnonzero(cnt > 0)
@@ -511,6 +578,9 @@ def _decode_table(table: pa.Table, level: int, lo: int, hi: int) -> _Decoded:
             f"{table.column('split_id')[r].as_py()}) holds docs outside its range "
             f"[{fd[r]}, {ld[r]}] or out of order"
         )
+    norms = np.empty(0, np.uint8)
+    if level and doc_norms is not None:
+        norms = doc_norms.gather(table.column("term"), docs, cnt)
     pos = None
     if level == 2:
         pbuf = np.array(_kept_blocks(table.column("b_pos"), keep)[0])
@@ -794,12 +864,14 @@ def _scan_files(
 
 
 def _scan_postings(
-    files: list[str], terms: list[str], level: int, lo: int, hi: int
+    files: list[str], terms: list[str], level: int, lo: int, hi: int, doc_norms: _DocNorms | None
 ) -> dict[str, _Postings]:
     """{term: _Postings} of ``terms`` in [lo, hi) from a
     :func:`_scan_files` of ``files``, decoded by :func:`_decode_table`."""
     t = _scan_files(files, terms, _LEVEL_COLS[level], lo, hi)
-    return {} if t is None else _decode_table(t, level, lo, hi).postings(terms, lo, hi)
+    if t is None:
+        return {}
+    return _decode_table(t, level, lo, hi, doc_norms).postings(terms, lo, hi)
 
 
 def _conv_winners(
@@ -833,21 +905,26 @@ def _shard_scorer(plan: SimpleNamespace):
     shard i scores the docs [plan.bounds[i], plan.bounds[i + 1]) with
     :class:`QueryEvaluator`, over its terms' rows read with pyarrow from
     ``plan.files`` (per part; terms and the doc range prune row groups
-    and rows) and decoded by :func:`_decode_table`, and emits (doc_id,
-    score).  With ``plan.offs`` (the
+    and rows) and decoded by :func:`_decode_table` with the norms of its
+    range (:func:`_read_doc_norms` of ``plan.doc_files``, when
+    ``plan.level`` needs them), and emits (doc_id, score).  With
+    ``plan.offs`` (the
     conversations' first docs; the bounds then fall on conversation
     edges) it keeps each conversation's best hit, and with ``plan.k``
     its top k by (score desc, doc_id asc): the global winners lie
     within the shards'."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        doc_text = partial(_doc_texts, plan.doc_files) if plan.doc_files else None
+        doc_text = None if plan.positions else partial(_doc_texts, plan.doc_files)
         for b in batches:
             for i in b.column(0).to_pylist():
                 lo, hi = int(plan.bounds[i]), int(plan.bounds[i + 1])
+                norms = None
+                if plan.level and hi > lo:
+                    norms = _read_doc_norms(plan.doc_files, plan.fields, lo, hi)
                 post = {}
                 for part, terms in plan.terms.items():
-                    post.update(_scan_postings(plan.files[part], terms, plan.level, lo, hi))
+                    post.update(_scan_postings(plan.files[part], terms, plan.level, lo, hi, norms))
                 docs, scores = QueryEvaluator(
                     post, plan.levels, plan.idf, plan.avgdl, plan.positions,
                     plan.order_tolerant, doc_text, plan.simple,
@@ -952,6 +1029,7 @@ class SearchEngine:
         self._local_files: dict[int, list[str]] = {}
         self._resident: dict[int, _Decoded] = {}
         self._resident_lock = threading.Lock()
+        self._norms: _DocNorms | None = None
         self._postings_total: int | None = None
         # conv_offsets artifact (dense-docid builds and their appends of
         # new conversations): (conv_id array, sorted conv_offset array)
@@ -1185,9 +1263,24 @@ class SearchEngine:
 
     @cached_property
     def _doc_files(self) -> list[str]:
-        """doc_index's files as of the open, for phrases on an index
-        without positions (read with pyarrow, on either tier)."""
+        """doc_index's files as of the open, read with pyarrow on either
+        tier: for the norms, and for phrases on an index without
+        positions."""
         return self._at_open(table_files(os.path.join(self.index_dir, "doc_index")))
+
+    def _doc_norms(self) -> _DocNorms:
+        """The norms of the open's docs [0, n_rows), read on the first
+        local decode that scores (:func:`_read_doc_norms`) and kept: one
+        byte per doc and field.  Double-checked under a lock, like
+        _driver_vocab (whose lock it shares)."""
+        got = self._norms
+        if got is None:
+            with self._vocab_lock:
+                got = self._norms
+                if got is None:
+                    got = _read_doc_norms(self._doc_files, self.fields, 0, self.n_rows)
+                    self._norms = got
+        return got
 
     # ------------------------------------------------------------ postings access
 
@@ -1459,7 +1552,7 @@ class SearchEngine:
                 return []
             bare = [terms[i][len(pref):] for i in band] if pref else list(terms[band])
             d = _levenshtein_batch(
-                bare, text, transpositions=self.fuzzy_transpositions
+                bare, text, self.fuzzy_transpositions, lens[band] - len(pref)
             )
             keep = d <= max_edits
             hit = band[keep]
@@ -1585,7 +1678,8 @@ class SearchEngine:
             if resident:
                 out.update(self._resident_part(part).postings(ts, 0, self.n_rows))
             else:
-                out.update(_scan_postings(self._part_files(part), ts, level, 0, self.n_rows))
+                norms = self._doc_norms() if level else None
+                out.update(_scan_postings(self._part_files(part), ts, level, 0, self.n_rows, norms))
         return out
 
     def _resident_ok(self) -> bool:
@@ -1630,7 +1724,9 @@ class SearchEngine:
                     cols = list(_LEVEL_COLS[level])
                     tables = [_load_sorted_postings(f, cols) for f in self._part_files(part)]
                     empty = POSTINGS_ARROW_SCHEMA.empty_table().select(cols)
-                    got = _decode_table(pa.concat_tables(tables or [empty]), level, 0, self.n_rows)
+                    got = _decode_table(
+                        pa.concat_tables(tables or [empty]), level, 0, self.n_rows, self._doc_norms()
+                    )
                     self._resident[part] = got
         return got
 
@@ -1765,8 +1861,9 @@ class SearchEngine:
         the rewritten ast with its idf/avgdl maps and key levels, the
         shards' doc bounds over the open's ``n_rows`` docs, the keys and
         file list of each postings part they live in (taken as of the
-        open), the decode level their keys need, and doc_index's files on
-        an index without positions.  With conv_offsets, each bound moves
+        open), the decode level their keys need, and doc_index's files
+        (norms, and text on an index without positions) with the fields
+        whose norm columns they hold.  With conv_offsets, each bound moves
         up to the next conversation's first doc, so a conversation lies
         in one shard, as in a sharded build's row-balanced shards (and
         ``collapse`` has each shard keep its conversations' best hits)."""
@@ -1786,7 +1883,7 @@ class SearchEngine:
             n=n, bounds=bounds, offs=offs if collapse else None, terms=terms,
             files={p: self._part_files(p) for p in terms}, level=max(levels.values()),
             positions=self.positions, order_tolerant=self.slop_order_tolerant,
-            simple=self.simple, doc_files=None if self.positions else self._doc_files,
+            simple=self.simple, doc_files=self._doc_files, fields=self.fields,
         )
 
     def _shard_scores(

@@ -12,10 +12,12 @@ rewrite into the format the build writes, through the build's own
 kernels, one postings part at a time (a term's rows all live in its
 part, so a part holds every term's whole posting list):
 
-* the part's rows are decoded (the query engine's whole-table kernel
-  ``_decode_table``, with its row checks) straight back into the
-  build's chunk rows by the build's packer (``_pack_chunk_rows``) with the exact-df heavy
-  map from base 0 — the postings hold every doc of the corpus, so a
+* the part's doc ids, tfs and positions are decoded (the query
+  engine's whole-table kernel ``_decode_table``, with its row checks;
+  norms live in doc_index, which compaction leaves as it is, and a
+  postings file from before 0.5.0 loses its ``b_norms`` copy here)
+  straight back into the build's chunk rows by the build's packer
+  (``_pack_chunk_rows``) with the exact-df heavy map from base 0 — the postings hold every doc of the corpus, so a
   term of df > heavy_df_threshold is re-cut into ceil(df /
   split_target) doc-range splits, as a driver build of the same rows
   cuts it; the per-doc POSITION payloads are never decoded, only
@@ -77,7 +79,6 @@ def _compact_part(live: str, tmp: str, part: str, params: dict, n_rows: int) -> 
         dec.off[term_rows],
         dec.docs,
         dec.tfs,
-        dec.norms,
         dec.pos[0].tobytes() if dec.pos else b"",
         dec.pos[1] if dec.pos else None,
         (params["heavy_df_threshold"], params["split_target"]),

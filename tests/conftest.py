@@ -102,15 +102,48 @@ def oracle_ix(corpus_pdf):
 
 
 @pytest.fixture(scope="session")
-def index_state(spark):
+def doc_norm_lookup():
+    """``doc_norm_lookup(d)`` → ``norm(key, docs)``: the norm byte of
+    each of ``docs`` in ``key``'s field, from the doc_index of index
+    ``d``, the one copy of the norms since postings stopped carrying
+    them (0.5.0): a bare key reads the default field's ``norm`` column,
+    a ``field:term`` key that field's ``norm_{field}``."""
+    import numpy as np
+    import pyarrow.dataset as ds
+
+    from emailindexer_spark.sources.checkpoint import Manifest
+
+    def lookup(d):
+        fields = Manifest.load_or_create(d).params.get("fields", ["text"])
+        names = ["norm", *(f"norm_{f}" for f in fields[1:])]
+        t = ds.dataset(os.path.join(d, "doc_index"), format="parquet").to_table(columns=["doc_id", *names])
+        ids = t.column("doc_id").to_numpy()
+        cols = {}
+        for f, name in zip(fields, names):
+            cols[f] = np.full(int(ids.max()) + 1 if ids.size else 0, -1, np.int64)
+            cols[f][ids] = t.column(name).to_numpy()
+
+        def norm(key, docs):
+            field = key.split(":", 1)[0] if ":" in key else fields[0]
+            return cols.get(field, cols[fields[0]])[np.asarray(docs, np.int64)]
+
+        return norm
+
+    return lookup
+
+
+@pytest.fixture(scope="session")
+def index_state(spark, doc_norm_lookup):
     """``index_state(d)``: everything a build or an append writes under
     index directory ``d``, file names and layout aside: postings rows
-    per (term, split_id) byte for byte (plus ``part``), the other
-    tables' rows (build_metrics without its snapshot_id), the Spark-read
-    schema of every table, and the manifest's stats and stages (timings
-    and routes aside: ``path``, ``read``)."""
+    per (term, split_id) byte for byte (plus ``part``, and the norm of
+    each of the row's postings taken from doc_index), the other tables'
+    rows (build_metrics without its snapshot_id), the Spark-read schema
+    of every table, and the manifest's stats and stages (timings and
+    routes aside: ``path``, ``read``)."""
     import pyarrow.parquet as papq
 
+    from emailindexer_spark.functions.codec import decode_block
     from emailindexer_spark.plans.builder import INDEX_TABLES
     from emailindexer_spark.sources.checkpoint import Manifest
 
@@ -118,10 +151,13 @@ def index_state(spark):
         return sorted(tuple(r) for r in spark.read.parquet(os.path.join(d, t)).collect())
 
     def state(d):
+        norm = doc_norm_lookup(d)
         post = {}
         for f in glob.glob(os.path.join(d, "postings", "part=*", "*.parquet")):
             for r in papq.read_table(f).to_pylist():
                 r["part"] = f.split("part=")[1].split(os.sep)[0]
+                docs = [x for blk in zip(r["b_first"], r["b_docs"], r["b_tfs"]) for x in decode_block(*blk)[0]]
+                r["norms"] = norm(r["term"], docs).tolist()
                 post[(r["term"], r["split_id"])] = repr(sorted(r.items()))
         out = {"postings": post}
         for t in ("doc_index", "doc_stats", "term_dict"):
@@ -154,10 +190,11 @@ def index_state(spark):
 
 
 @pytest.fixture(scope="session")
-def index_digest(spark):
+def index_digest(spark, doc_norm_lookup):
     """``index_digest(d)``: what the index under ``d`` holds, its layout
     aside — per term, the decoded (doc, tf, norm, positions) stream in
-    doc order; the other tables' sorted rows; the Spark-read schema of
+    doc order, each norm taken from doc_index in the term's field; the
+    other tables' sorted rows; the Spark-read schema of
     every table; the manifest's stats but the layout ones
     (``bytes_compressed``, ``skew_splits``) and its stage names.  The
     same rows staged by any route, in one shard or many, digest alike;
@@ -170,15 +207,17 @@ def index_digest(spark):
     from emailindexer_spark.plans.builder import INDEX_TABLES
     from emailindexer_spark.sources.checkpoint import Manifest
 
-    cols = ["term", "b_first", "b_docs", "b_tfs", "b_norms", "b_pos"]
+    cols = ["term", "b_first", "b_docs", "b_tfs", "b_pos"]
 
     def postings(d):
+        norm = doc_norm_lookup(d)
         out = {}
         for f in glob.glob(os.path.join(d, "postings", "part=*", "*.parquet")):
             for r in papq.read_table(f, columns=cols).to_pylist():
                 stream = out.setdefault(r["term"], [])
-                for first, bd, bt, bn, bp in zip(*(r[c] for c in cols[1:])):
-                    docs, tfs, norms = decode_block(first, bd, bt, bn)
+                for first, bd, bt, bp in zip(*(r[c] for c in cols[1:])):
+                    docs, tfs = decode_block(first, bd, bt)
+                    norms = norm(r["term"], docs)
                     pos = (
                         np.split(decode_positions(bp, tfs), np.cumsum(tfs)[:-1])
                         if bp

@@ -78,11 +78,11 @@ def test_partition_pruning_layout(spark, index_dir):
 def _postings_payloads(spark, d):
     rows = (
         spark.read.parquet(os.path.join(d, "postings"))
-        .select("term", "split_id", "b_docs", "b_tfs", "b_norms")
+        .select("term", "split_id", "b_docs", "b_tfs")
         .collect()
     )
     return sorted(
-        (r["term"], r["split_id"], tuple(map(bytes, r["b_docs"])), tuple(map(bytes, r["b_tfs"])), tuple(map(bytes, r["b_norms"])))
+        (r["term"], r["split_id"], tuple(map(bytes, r["b_docs"])), tuple(map(bytes, r["b_tfs"])))
         for r in rows
     )
 
@@ -247,7 +247,8 @@ def test_prefix_plan_prunes_postings_partitions(spark, monkeypatch, index_dir):
 def test_fuzzy_and_wildcard_plans_prune_partitions(spark, monkeypatch, index_dir):
     """Fuzzy and wildcard expansions resolve to concrete terms, so their
     shard tasks open only those terms' ``part=`` directories; fuzzy's
-    blended BM25 reads tf/norm payloads but never positions."""
+    blended BM25 reads tf payloads (norms come from doc_index) but never
+    positions."""
     import re
 
     from emailindexer_spark.plans.builder import term_part_py
@@ -264,7 +265,7 @@ def test_fuzzy_and_wildcard_plans_prune_partitions(spark, monkeypatch, index_dir
         assert keys and hits and opened == parts, node
         for _, terms, cols in scans:
             assert set(terms) <= set(keys) and "b_pos" not in cols, node
-            assert ("b_tfs" in cols and "b_norms" in cols) == tf_cols, node
+            assert ("b_tfs" in cols) == tf_cols and "b_norms" not in cols, node
         monkeypatch.undo()
     rx = re.compile(
         "^" + "".join(".*" if c == "*" else "." if c == "?" else re.escape(c) for c in pattern) + "$"
@@ -654,7 +655,7 @@ def test_index_digest_sees_one_changed_tf(spark, tmp_path, index_digest, corpus_
     f = sorted(glob.glob(os.path.join(bad, "postings", "part=*", "*.parquet")))[0]
     rows = papq.read_table(f).to_pylist()
     r = rows[0]
-    _docs, tfs, _norms = decode_block(r["b_first"][0], r["b_docs"][0], r["b_tfs"][0], r["b_norms"][0])
+    _docs, tfs = decode_block(r["b_first"][0], r["b_docs"][0], r["b_tfs"][0])
     tfs[0] += 1
     r["b_tfs"][0] = varbyte_encode(tfs.astype("uint64"))
     papq.write_table(pa.Table.from_pylist(rows, schema=papq.read_schema(f)), f)
@@ -664,15 +665,23 @@ def test_index_digest_sees_one_changed_tf(spark, tmp_path, index_digest, corpus_
     assert diff == [r["term"]]
 
 
-def _assert_every_chunk_zstd(d, when):
+def _assert_written_layout(d, when):
     """Every column chunk of every parquet file under ``d`` is zstd,
-    read from the footers; term_dict keeps its 32768-row row groups."""
+    read from the footers; term_dict keeps its 32768-row row groups;
+    every postings file holds the encoder's columns (no per-posting
+    ``b_norms``: norms live in doc_index only)."""
     import pyarrow.parquet as papq
+
+    from emailindexer_spark.plans.builder import POSTINGS_ARROW_SCHEMA
 
     files = glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
     assert files, when
     other = set()
+    post_cols = [c for c in POSTINGS_ARROW_SCHEMA.names if c != "part"]
+    assert "b_norms" not in post_cols
     for f in files:
+        if f"{os.sep}postings{os.sep}" in f:
+            assert papq.read_schema(f).names == post_cols, (when, os.path.relpath(f, d))
         md = papq.ParquetFile(f).metadata
         for g in range(md.num_row_groups):
             for c in range(md.num_columns):
@@ -691,7 +700,8 @@ def test_every_write_path_writes_zstd(spark, monkeypatch, tmp_path, corpus_pdf):
     """Driver and sharded builds, driver and over-cap appends, and
     compaction on the driver loop and on the task route all write their
     parquet files with zstd, the shard files and term_parts markers a
-    sharded stage job leaves for the driver included.  The driver
+    sharded stage job leaves for the driver included, and postings
+    without a ``b_norms`` column.  The driver
     build's input carries a turn of 40k distinct words, so its
     term_dict spans two row groups."""
     import pandas as pd
@@ -718,7 +728,7 @@ def test_every_write_path_writes_zstd(spark, monkeypatch, tmp_path, corpus_pdf):
         done = marks_read(marks, shards)
         if done and len(done) == len(shards):
             staged.append(glob.glob(os.path.join(marks, "*.parquet")))
-            _assert_every_chunk_zstd(marks.split("_staging")[0], "staged shards")
+            _assert_written_layout(marks.split("_staging")[0], "staged shards")
         return done
 
     kw = dict(num_parts=4, heavy_df_threshold=300, split_target=150)
@@ -726,20 +736,20 @@ def test_every_write_path_writes_zstd(spark, monkeypatch, tmp_path, corpus_pdf):
     IndexBuilder(spark, driver_ix, **kw).build(spark.read.parquet(src))
     assert Manifest.load_or_create(driver_ix).stages["postings"]["path"] == "driver"
     assert papq.ParquetFile(glob.glob(f"{driver_ix}/term_dict/*.parquet")[0]).metadata.num_row_groups > 1
-    _assert_every_chunk_zstd(driver_ix, "driver build")
+    _assert_written_layout(driver_ix, "driver build")
     with monkeypatch.context() as m:
         m.setattr(B, "DRIVER_MAX_TURNS", -1)
         m.setattr(B, "_shard_marks", check_staged)
         IndexBuilder(spark, sharded_ix, **kw).build(spark.createDataFrame(base))
     assert Manifest.load_or_create(sharded_ix).stages["postings"]["path"] == "spark"
-    _assert_every_chunk_zstd(sharded_ix, "sharded build")
+    _assert_written_layout(sharded_ix, "sharded build")
 
     incremental_append(spark, sharded_ix, spark.createDataFrame(b1))
     assert Manifest.load_or_create(sharded_ix).stages["ingest_000001"]["path"] == "driver"
-    _assert_every_chunk_zstd(sharded_ix, "driver append")
+    _assert_written_layout(sharded_ix, "driver append")
     compact_index(spark, sharded_ix)
     assert Manifest.load_or_create(sharded_ix).stages["compact_0001"]["path"] == "driver"
-    _assert_every_chunk_zstd(sharded_ix, "driver-loop compaction")
+    _assert_written_layout(sharded_ix, "driver-loop compaction")
 
     with monkeypatch.context() as m:
         m.setattr(B, "DRIVER_MAX_TURNS", -1)
@@ -747,8 +757,8 @@ def test_every_write_path_writes_zstd(spark, monkeypatch, tmp_path, corpus_pdf):
         incremental_append(spark, sharded_ix, spark.createDataFrame(b2))
     assert len(staged) == 2 and all(staged), staged
     assert Manifest.load_or_create(sharded_ix).stages["ingest_000002"]["path"] == "spark"
-    _assert_every_chunk_zstd(sharded_ix, "over-cap append")
+    _assert_written_layout(sharded_ix, "over-cap append")
     monkeypatch.setattr(SearchEngine, "LOCAL_MAX_POSTINGS", 0)
     compact_index(spark, sharded_ix)
     assert Manifest.load_or_create(sharded_ix).stages["compact_0002"]["path"] == "spark"
-    _assert_every_chunk_zstd(sharded_ix, "task-route compaction")
+    _assert_written_layout(sharded_ix, "task-route compaction")

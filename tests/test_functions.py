@@ -144,27 +144,80 @@ class TestVarbyte:
     def test_compression_small_deltas_one_byte(self):
         assert len(varbyte_encode(np.arange(100, dtype=np.uint64) % 128)) == 100
 
+    @staticmethod
+    def _decode_by_byte_position(buf: bytes) -> np.ndarray:
+        """The byte-position decode varbyte_decode replaced: a value id
+        per byte from a cumsum, then one pass over the whole buffer per
+        position within a value."""
+        b = np.frombuffer(buf, dtype=np.uint8)
+        if b.size == 0:
+            return np.empty(0, dtype=np.uint64)
+        is_end = (b & 0x80) == 0
+        if bool(is_end.all()):
+            return b.astype(np.uint64)
+        value_id = np.zeros(b.size, dtype=np.int64)
+        value_id[1:] = np.cumsum(is_end)[:-1]
+        n_values = int(is_end.sum())
+        value_starts = np.zeros(n_values, dtype=np.int64)
+        value_starts[1:] = np.nonzero(is_end)[0][:-1] + 1
+        pos = np.arange(b.size, dtype=np.int64) - value_starts[value_id]
+        payload = (b & np.uint8(0x7F)).astype(np.uint64)
+        out = np.zeros(n_values, dtype=np.uint64)
+        for j in range(int(pos.max()) + 1):
+            m = pos == j
+            out[value_id[m]] |= payload[m] << np.uint64(7 * j)
+        return out
+
+    def test_decode_matches_byte_position_decode(self):
+        """varbyte_decode (per value: starts from the end bits, one gather
+        per extra byte) equals the byte-position decode on random
+        buffers of 1- to 10-byte values, on single-byte-only buffers
+        (the cast fast path) and on an empty one."""
+        rng = np.random.default_rng(11)
+        for trial in range(60):
+            n = int(rng.integers(1, 400))
+            nbytes = rng.integers(1, 11, size=n)  # a value's byte count
+            lo = np.where(nbytes == 1, 0, np.uint64(1) << (7 * (nbytes - 1)).astype(np.uint64))
+            hi = np.where(nbytes == 10, np.uint64(2**64 - 1), (np.uint64(1) << (7 * nbytes).astype(np.uint64)) - 1)
+            vals = np.array(
+                [rng.integers(int(a), int(z), dtype=np.uint64, endpoint=True) for a, z in zip(lo, hi)],
+                dtype=np.uint64,
+            )
+            buf = varbyte_encode(vals)
+            assert len(buf) == int(nbytes.sum()), trial
+            got = varbyte_decode(buf)
+            assert got.dtype == np.uint64
+            assert (got == self._decode_by_byte_position(buf)).all(), trial
+            assert (got == vals).all(), trial
+        single = varbyte_encode(rng.integers(0, 128, size=500).astype(np.uint64))
+        assert len(single) == 500
+        assert (varbyte_decode(single) == self._decode_by_byte_position(single)).all()
+        assert varbyte_decode(b"").tolist() == self._decode_by_byte_position(b"").tolist() == []
+
+    def test_decode_rejects_a_cut_value(self):
+        buf = varbyte_encode(np.array([5, 300], dtype=np.uint64))
+        with pytest.raises(ValueError, match="ends inside a value"):
+            varbyte_decode(buf[:-1])
+
 
 class TestBlocks:
     def test_roundtrip_and_blockmax(self):
         rng = np.random.default_rng(7)
         docs = np.unique(rng.integers(0, 10**9, size=1000, dtype=np.int64))
         tfs = rng.integers(1, 99, size=docs.size).astype(np.int64)
-        norms = rng.integers(1, 255, size=docs.size).astype(np.int64)
-        eb = encode_blocks(docs, tfs, norms, block_size=128)
-        got_d, got_t, got_n = [], [], []
+        eb = encode_blocks(docs, tfs, block_size=128)
+        got_d, got_t = [], []
         for i in range(len(eb.doc_bytes)):
-            d, t, n = decode_block(int(eb.first_doc[i]), eb.doc_bytes[i], eb.tf_bytes[i], eb.norm_bytes[i])
+            d, t = decode_block(int(eb.first_doc[i]), eb.doc_bytes[i], eb.tf_bytes[i])
             assert eb.first_doc[i] == d[0]
             assert d.size == (128 if i < len(eb.doc_bytes) - 1 else docs.size - 128 * i)
-            got_d.append(d), got_t.append(t), got_n.append(n)
+            got_d.append(d), got_t.append(t)
         assert (np.concatenate(got_d) == docs).all()
         assert (np.concatenate(got_t) == tfs).all()
-        assert (np.concatenate(got_n) == norms).all()
 
     def test_rejects_unsorted(self):
         with pytest.raises(ValueError):
-            encode_blocks(np.array([3, 2]), np.array([1, 1]), np.array([1, 1]))
+            encode_blocks(np.array([3, 2]), np.array([1, 1]))
 
 
 class TestTokenizer:
@@ -395,6 +448,9 @@ class TestLevenshteinBatch:
                 exp = np.array([self._ref(text, c, tr) for c in cands])
                 bad = np.nonzero(got != exp)[0]
                 assert bad.size == 0, (text, tr, [(cands[i], got[i], exp[i]) for i in bad[:3]])
+                # the lengths the caller already holds (the vocabulary's)
+                lens = np.array([len(c) for c in cands], np.int32)
+                assert (_levenshtein_batch(cands, text, tr, lens) == got).all()
 
     def test_transposition_credit(self):
         from emailindexer_spark.plans.planner import _levenshtein_batch
@@ -460,13 +516,12 @@ class TestRunEncoder:
     per-block reference encode_blocks / encode_positions."""
 
     @staticmethod
-    def _ref_blocks(d, tfs, norms, bs):
-        eb = encode_blocks(d, tfs, norms, block_size=bs)
+    def _ref_blocks(d, tfs, bs):
+        eb = encode_blocks(d, tfs, block_size=bs)
         return (
             eb.first_doc.tolist(),
             eb.doc_bytes,
             eb.tf_bytes,
-            eb.norm_bytes,
         )
 
     @settings(max_examples=40, deadline=None)
@@ -488,10 +543,9 @@ class TestRunEncoder:
         runs = [np.sort(np.asarray(r, dtype=np.int64)) for r in runs]
         d = np.concatenate(runs)
         tfs = (d % tf_mod + 1).astype(np.int64)
-        norms = (d % 256).astype(np.int64)
         starts = np.cumsum([0] + [r.size for r in runs[:-1]])
         for bs in (4, 128):
-            er = encode_runs_vec(d, tfs, norms, starts, block_size=bs)
+            er = encode_runs_vec(d, tfs, starts, block_size=bs)
             for r, (a, b) in enumerate(zip(starts, np.append(starts[1:], d.size))):
                 blk = slice(er.run_blocks[r], er.run_blocks[r + 1])
                 bo = er.block_starts[blk.start : blk.stop + 1]
@@ -500,20 +554,19 @@ class TestRunEncoder:
                     er.first_doc[blk].tolist(),
                     [er.doc_buf[x:y] for x, y in zip(er.doc_offs[blk.start:blk.stop], er.doc_offs[blk.start + 1:blk.stop + 1])],
                     [er.tf_buf[x:y] for x, y in zip(er.tf_offs[blk.start:blk.stop], er.tf_offs[blk.start + 1:blk.stop + 1])],
-                    [er.norm_buf[x:y] for x, y in zip(bo[:-1], bo[1:])],
                 )
-                assert got == self._ref_blocks(d[a:b], tfs[a:b], norms[a:b], bs)
+                assert got == self._ref_blocks(d[a:b], tfs[a:b], bs)
 
     def test_encode_runs_vec_rejects_bad_runs(self):
         from emailindexer_spark.functions.codec import encode_runs_vec
 
         one = np.ones(3, np.int64)
         with pytest.raises(ValueError, match="strictly increasing"):
-            encode_runs_vec(np.array([1, 5, 5]), one, one, np.array([0]))
+            encode_runs_vec(np.array([1, 5, 5]), one, np.array([0]))
         with pytest.raises(ValueError, match="non-empty"):
-            encode_runs_vec(np.array([1, 5, 6]), one, one, np.array([0, 3]))
+            encode_runs_vec(np.array([1, 5, 6]), one, np.array([0, 3]))
         # a run boundary may step back in doc order
-        er = encode_runs_vec(np.array([4, 9, 2]), one, one, np.array([0, 2]), block_size=1)
+        er = encode_runs_vec(np.array([4, 9, 2]), one, np.array([0, 2]), block_size=1)
         assert er.first_doc.tolist() == [4, 9, 2] and er.run_blocks.tolist() == [0, 2, 3]
 
     @pytest.mark.parametrize("positions", [True, False])
@@ -533,14 +586,14 @@ class TestRunEncoder:
         )
 
         bs, rng = 4, np.random.default_rng(5)
-        runs = {}  # (term, split) -> {doc: (tf, norm, positions)}
+        runs = {}  # (term, split) -> {doc: (tf, positions)}
         for j, n in enumerate([1, bs, bs + 1, 3 * bs + 2, 1, 9]):
             docs = np.sort(rng.choice(10_000, size=n, replace=False))
             post = {}
             for doc in docs:
                 tf = int(rng.integers(1, 4))
                 pos = np.sort(rng.choice(300, size=tf, replace=False))
-                post[int(doc)] = (tf, int(rng.integers(0, 256)), pos)
+                post[int(doc)] = (tf, pos)
             runs[(f"t{j // 2}", j % 2)] = post
 
         def chunk(term, split, docs, post):
@@ -550,8 +603,7 @@ class TestRunEncoder:
                 "split_id": split,
                 "docs": varbyte_encode(np.diff(docs, prepend=0).astype(np.uint64)),
                 "tfs": varbyte_encode(tf.astype(np.uint64)),
-                "norms": bytes(post[x][1] for x in docs),
-                "pos": b"".join(encode_positions(post[x][2], [post[x][0]]) for x in docs)
+                "pos": b"".join(encode_positions(post[x][1], [post[x][0]]) for x in docs)
                 if positions
                 else b"",
             }
@@ -571,14 +623,14 @@ class TestRunEncoder:
         for r, ((term, split), post) in zip(got, runs.items()):
             docs = np.array(sorted(post))
             tfs = np.array([post[x][0] for x in docs])
-            norms = np.array([post[x][1] for x in docs])
-            ref = self._ref_blocks(docs, tfs, norms, bs)
-            assert (r["b_first"], r["b_docs"], r["b_tfs"], r["b_norms"]) == ref
+            ref = self._ref_blocks(docs, tfs, bs)
+            assert (r["b_first"], r["b_docs"], r["b_tfs"]) == ref
+            assert "b_norms" not in r
             assert r["part"] == term_part_py(term, 8)
             assert (r["df_row"], r["first_doc"], r["last_doc"]) == (docs.size, docs[0], docs[-1])
             want_pos = [
                 encode_positions(
-                    np.concatenate([post[x][2] for x in docs[i : i + bs]]), tfs[i : i + bs]
+                    np.concatenate([post[x][1] for x in docs[i : i + bs]]), tfs[i : i + bs]
                 )
                 if positions
                 else b""
@@ -591,7 +643,8 @@ class TestFrameDecode:
     """The whole-table posting decoder planner._decode_table must equal
     the per-block reference decode_block for ANY mix of terms, rows and
     block sizes (multi-row terms, single-byte and multi-byte varbyte deltas,
-    segment-boundary leak correction)."""
+    segment-boundary leak correction), and give each posting the norm of
+    its doc in its key's field."""
 
     @staticmethod
     def _table(rows):
@@ -605,7 +658,7 @@ class TestFrameDecode:
                 "first_doc": pa.array([r["b_first"][0] if r["b_first"] else 0 for r in rows], pa.int64()),
                 "last_doc": pa.array([r.get("last_doc", 1 << 62) for r in rows], pa.int64()),
                 "b_first": pa.array([r["b_first"] for r in rows], pa.list_(pa.int64())),
-                **{c: pa.array([r[c] for r in rows], blocks) for c in ("b_docs", "b_tfs", "b_norms")},
+                **{c: pa.array([r[c] for r in rows], blocks) for c in ("b_docs", "b_tfs")},
             }
         )
 
@@ -625,8 +678,7 @@ class TestFrameDecode:
         for j, docs in enumerate(doc_lists):
             d = np.sort(np.asarray(docs, dtype=np.int64))
             tfs = (d % tf_mod + 1).astype(np.int64)
-            norms = (d % 256).astype(np.int64)
-            eb = encode_blocks(d, tfs, norms, block_size=3)
+            eb = encode_blocks(d, tfs, block_size=3)
             rows.append(
                 {
                     "term": f"t{j}",
@@ -634,18 +686,15 @@ class TestFrameDecode:
                     "b_first": [int(x) for x in eb.first_doc],
                     "b_docs": eb.doc_bytes,
                     "b_tfs": eb.tf_bytes,
-                    "b_norms": eb.norm_bytes,
                 }
             )
         table = self._table(rows)
 
-        ref_d, ref_t, ref_n = [], [], []
+        ref_d, ref_t = [], []
         for r in rows:
             for i in range(len(r["b_docs"])):
-                d, t, n = decode_block(
-                    r["b_first"][i], r["b_docs"][i], r["b_tfs"][i], r["b_norms"][i]
-                )
-                ref_d.append(d), ref_t.append(t), ref_n.append(n)
+                d, t = decode_block(r["b_first"][i], r["b_docs"][i], r["b_tfs"][i])
+                ref_d.append(d), ref_t.append(t)
         ref_d = np.concatenate(ref_d)
 
         # rows given in order and in reverse, at levels 1 and 0 (docs
@@ -657,7 +706,6 @@ class TestFrameDecode:
             assert (np.concatenate([got[t].docs for t in sorted(terms)]) == ref_d).all()
             if level:
                 assert (np.concatenate([got[t].tfs for t in sorted(terms)]) == np.concatenate(ref_t)).all()
-                assert (np.concatenate([got[t].norms for t in sorted(terms)]) == np.concatenate(ref_n)).all()
 
     def test_frame_decode_empty(self):
         from emailindexer_spark.plans.planner import _decode_table
@@ -678,10 +726,58 @@ class TestFrameDecode:
         firsts = np.array([5, 9, 20])
         with pytest.raises(ValueError, match="non-empty"):
             _segmented_delta_docs(buf, firsts, np.array([2, 0, 2]))
-        row = {"term": "t", "b_first": [5, 20], "b_docs": [buf, b""], "b_tfs": [b"", b""], "b_norms": [b"", b""]}
+        row = {"term": "t", "b_first": [5, 20], "b_docs": [buf, b""], "b_tfs": [b"", b""]}
         for level in (0, 1):
             with pytest.raises(ValueError, match="non-empty"):
                 _decode_table(self._table([row]), level, 0, 100)
+
+    def test_norms_come_from_each_keys_field(self, tmp_path):
+        """Each posting takes its doc's norm byte from its key's field:
+        bare keys from doc_index's ``norm``, ``role:…`` keys from
+        ``norm_role``, and a key whose prefix is no field from ``norm``.
+        _read_doc_norms reads a doc range from doc_index files whose rows
+        are out of doc order, and raises when the files miss a doc."""
+        import pyarrow as pa
+        import pyarrow.parquet as papq
+
+        from emailindexer_spark.plans.planner import _decode_table, _read_doc_norms
+
+        n, rng = 40, np.random.default_rng(3)
+        norm, norm_role = rng.integers(0, 256, n), rng.integers(0, 256, n)
+        for i, ids in enumerate(np.array_split(rng.permutation(n), 2)):
+            papq.write_table(
+                pa.table(
+                    {
+                        "doc_id": ids.astype(np.int64),
+                        "text": ["x"] * ids.size,
+                        "norm": norm[ids].astype(np.int32),
+                        "norm_role": norm_role[ids].astype(np.int32),
+                    }
+                ),
+                tmp_path / f"part-{i}.parquet",
+            )
+        files = sorted(str(f) for f in tmp_path.iterdir())
+        keys = {"a": np.arange(0, n, 3), "role:a": np.arange(1, n, 2), "x:y": np.arange(5, 30)}
+        rows = []
+        for key, d in keys.items():
+            eb = encode_blocks(d, d % 3 + 1, block_size=4)
+            rows.append(
+                {
+                    "term": key, "last_doc": int(d[-1]), "b_first": [int(x) for x in eb.first_doc],
+                    "b_docs": eb.doc_bytes, "b_tfs": eb.tf_bytes,
+                }
+            )
+        table = self._table(rows)
+        for lo, hi in ((0, n), (7, 23)):
+            got = _decode_table(table, 1, lo, hi, _read_doc_norms(files, ("text", "role"), lo, hi))
+            got = got.postings(list(keys), lo, hi)
+            for key, d in keys.items():
+                d = d[(d >= lo) & (d < hi)]
+                col = norm_role if key.startswith("role:") else norm
+                assert got[key].docs.tolist() == d.tolist(), (key, lo)
+                assert got[key].norms.tolist() == col[d].tolist(), (key, lo)
+        with pytest.raises(ValueError, match="doc_index holds"):
+            _read_doc_norms(files[:1], ("text", "role"), 0, n)
 
     def test_row_decode_keeps_a_doc_range_and_checks_rows(self):
         """planner._decode_table and _Decoded.postings against the
@@ -693,27 +789,28 @@ class TestFrameDecode:
         import pyarrow as pa
 
         from emailindexer_spark.functions.codec import encode_positions
-        from emailindexer_spark.plans.planner import _decode_table
+        from emailindexer_spark.plans.planner import _decode_table, _DocNorms
 
         rng = np.random.default_rng(0)
         schema = pa.schema(
             [("term", pa.string()), ("split_id", pa.int32()), ("first_doc", pa.int64()), ("last_doc", pa.int64()),
              ("b_first", pa.list_(pa.int64()))]
-            + [(c, pa.list_(pa.binary())) for c in ("b_docs", "b_tfs", "b_norms", "b_pos")]
+            + [(c, pa.list_(pa.binary())) for c in ("b_docs", "b_tfs", "b_pos")]
         )
+        doc_norm = rng.integers(0, 256, 1000).astype(np.uint8)  # one byte per doc
 
         def row(term, sid, docs):
             tfs = rng.integers(1, 4, docs.size)
-            norms = rng.integers(0, 200, docs.size)
+            norms = doc_norm[docs]
             pos = [np.sort(rng.choice(50, t, replace=False)) for t in tfs]
-            eb = encode_blocks(docs, tfs, norms, block_size=4)
+            eb = encode_blocks(docs, tfs, block_size=4)
             b_pos = [
                 encode_positions(np.concatenate(pos[i:i + 4]), tfs[i:i + 4]) for i in range(0, docs.size, 4)
             ]
             r = {
                 "term": term, "split_id": sid, "first_doc": int(docs[0]), "last_doc": int(docs[-1]),
                 "b_first": [int(x) for x in eb.first_doc], "b_docs": eb.doc_bytes, "b_tfs": eb.tf_bytes,
-                "b_norms": eb.norm_bytes, "b_pos": b_pos,
+                "b_pos": b_pos,
             }
             return r, (docs, tfs, norms, pos)
 
@@ -725,7 +822,8 @@ class TestFrameDecode:
 
         def decode(rows, level, lo, hi):
             table = pa.Table.from_pylist([rows[i] for i in rng.permutation(len(rows))], schema=schema)
-            return _decode_table(table, level, lo, hi).postings(["s", "t", "u"], lo, hi)
+            norms = _DocNorms(lo, ("text",), (doc_norm[lo:hi],))
+            return _decode_table(table, level, lo, hi, norms).postings(["s", "t", "u"], lo, hi)
 
         for trial in range(150):
             rows, refs = split_rows("t")

@@ -349,19 +349,20 @@ def test_search_many_mixed_local_and_distributed(engines):
     _assert_batches_agree(*engines)
 
 
-def _block_reference(rows):
+def _block_reference(rows, norm):
     """{term: (docs, tfs, norms, positions per posting)} of Arrow posting
     ``rows`` by decode_block and decode_positions, block by block, each
-    term's rows taken in first_doc order."""
+    term's rows taken in first_doc order; a posting's norm is
+    ``norm(term, docs)`` (the ``doc_norm_lookup`` fixture's)."""
     from emailindexer_spark.functions.codec import decode_block, decode_positions
 
     by_term = {}
     for r in sorted(rows.to_pylist(), key=lambda r: (r["term"], r["first_doc"])):
         ref = by_term.setdefault(r["term"], ([], [], [], []))
-        for blk in zip(r["b_first"], r["b_docs"], r["b_tfs"], r["b_norms"], r["b_pos"]):
-            d, t, n = decode_block(*blk[:4])
-            ref[0].extend(d), ref[1].extend(t), ref[2].extend(n)
-            ref[3].extend(np.split(decode_positions(blk[4], t), np.cumsum(t)[:-1]))
+        for blk in zip(r["b_first"], r["b_docs"], r["b_tfs"], r["b_pos"]):
+            d, t = decode_block(*blk[:3])
+            ref[0].extend(d), ref[1].extend(t), ref[2].extend(norm(r["term"], d))
+            ref[3].extend(np.split(decode_positions(blk[3], t), np.cumsum(t)[:-1]))
     return by_term
 
 
@@ -392,14 +393,14 @@ def _part_rows(index_dir, terms):
     return ds.dataset(files, format="parquet").to_table(filter=ds.field("term").isin(list(terms)))
 
 
-def test_local_decoders_match_block_kernels(engines, index_dir):
+def test_local_decoders_match_block_kernels(engines, index_dir, doc_norm_lookup):
     """The postings the local tier serves — resident decoded slices and,
     over the residency cap, the per-query scan — vs decode_block over
     every posting row of the terms in a real index, at every level."""
     local, _ = engines
     vocab, dfs, _parts = local._driver_vocab()
     terms = {vocab[int(np.argmax(dfs))], vocab[int(np.argmin(dfs))], vocab[int(np.argsort(dfs)[len(dfs) // 2])]}
-    ref = _block_reference(_part_rows(index_dir, terms))
+    ref = _block_reference(_part_rows(index_dir, terms), doc_norm_lookup(index_dir))
     assert len(ref) == 3
     over = SearchEngine(local.spark, index_dir)
     over.LOCAL_MAX_POSTINGS = 0
@@ -423,25 +424,27 @@ def _largest_postings_file(index_dir):
     return _load_sorted_postings(max(files, key=os.path.getsize), _LEVEL_COLS[2])
 
 
-def _assert_arrow_reader_matches_blocks(rows):
+def _assert_arrow_reader_matches_blocks(rows, norm, doc_norms):
     """The Arrow block reader reads each block column of ``rows`` (an
     Arrow table) — bytes, b_pos included, and lengths — as the rows'
-    Python values, and the whole-table kernel gives every term's
-    postings at every level as decode_block does block by block."""
+    Python values, and the whole-table kernel, given the index's
+    ``doc_norms``, gives every term's postings at every level as
+    decode_block does block by block, each norm as ``norm`` gives it."""
     import emailindexer_spark.plans.planner as P
 
     py = rows.to_pydict()
-    for col in ("b_docs", "b_tfs", "b_norms", "b_pos"):
+    for col in ("b_docs", "b_tfs", "b_pos"):
         vals = [b for row in py[col] for b in row]
         gb, gl = P._arrow_blocks(rows.column(col))
         assert gb.tobytes() == b"".join(vals) and gl.tolist() == [len(b) for b in vals], col
-    ref = _block_reference(rows)
+    ref = _block_reference(rows, norm)
+    hi = doc_norms.lo + doc_norms.cols[0].size
     for level in (0, 1, 2):
-        dec = P._decode_table(rows, level, 0, 1 << 62)
-        _assert_postings_equal(dec.postings(set(py["term"]), 0, 1 << 62), ref)
+        dec = P._decode_table(rows, level, 0, hi, doc_norms)
+        _assert_postings_equal(dec.postings(set(py["term"]), 0, hi), ref)
 
 
-def test_arrow_block_reader_matches_pandas_adapter(engines, index_dir):
+def test_arrow_block_reader_matches_pandas_adapter(engines, index_dir, doc_norm_lookup):
     """The Arrow block reader and the whole-table kernel against
     decode_block and the rows' Python values, on real postings rows: a
     zero-copy slice from the middle of a file (its list and binary
@@ -458,13 +461,14 @@ def test_arrow_block_reader_matches_pandas_adapter(engines, index_dir):
     mid = t.slice(n // 3, n // 3)
     chunk = mid.column("b_docs").chunks[0]
     assert chunk.offset > 0 and chunk.flatten().offset > 0
-    _assert_arrow_reader_matches_blocks(mid)
+    norm, doc_norms = doc_norm_lookup(index_dir), local._doc_norms()
+    _assert_arrow_reader_matches_blocks(mid, norm, doc_norms)
     multi = pa.concat_tables([t.slice(n - 4, 4), t.slice(1, 3), t.slice(n // 2, 0)])
     assert multi.column("b_docs").num_chunks == 3
-    _assert_arrow_reader_matches_blocks(multi)
-    _assert_arrow_reader_matches_blocks(t)
+    _assert_arrow_reader_matches_blocks(multi, norm, doc_norms)
+    _assert_arrow_reader_matches_blocks(t, norm, doc_norms)
     empty = t.slice(n // 2, 0)
-    _assert_arrow_reader_matches_blocks(empty)
+    _assert_arrow_reader_matches_blocks(empty, norm, doc_norms)
     assert local._local_term_rows({"zzznope"}, 2) == {}
     assert P._decode_table(empty, 2, 0, local.n_rows).docs.size == 0
 
@@ -480,7 +484,7 @@ def test_arrow_decoders_reject_a_block_with_no_postings(index_dir):
     t = _largest_postings_file(index_dir)
     rows = t.slice(t.num_rows // 2, 2).to_pylist()
     r = rows[0]
-    for col, empty in (("b_first", r["b_first"][0]), ("b_docs", b""), ("b_tfs", b""), ("b_norms", b"")):
+    for col, empty in (("b_first", r["b_first"][0]), ("b_docs", b""), ("b_tfs", b"")):
         r[col] = r[col][:1] + [empty] + r[col][1:]
     r["b_pos"] = r["b_pos"][:1] + [b""] + r["b_pos"][1:]
     bad = pa.Table.from_pylist(rows, schema=t.schema)

@@ -201,3 +201,45 @@ def test_multifield_shards_agree(spark, mf_index, mf_engine, assert_shards_agree
     dist._local_search = lambda *a, **k: None
     extra = ["+(qojema OR role:user) -noza", '"noza guka"~2', '"guka noza"~2']
     assert_shards_agree(mf_engine, dist, MF_QUERIES + extra)
+
+
+def test_field_keys_score_with_their_fields_norms(spark, mf_index, mf_engine):
+    """A ``field:term`` key's postings carry doc_index's ``norm_{field}``
+    bytes and a bare key's its ``norm``: on the resident local tier, the
+    over-cap scan and a distributed shard's decode of a doc range.  The
+    two columns differ on the role key's docs (role holds one token a
+    doc), so a gather from the wrong field shows."""
+    import os
+
+    import numpy as np
+    import pyarrow.dataset as ds
+
+    import emailindexer_spark.plans.planner as P
+    from emailindexer_spark.plans.builder import term_part_py
+
+    t = ds.dataset(os.path.join(mf_index, "doc_index"), format="parquet").to_table(
+        columns=["doc_id", "norm", "norm_role"]
+    )
+    ids = t.column("doc_id").to_numpy()
+    norm, norm_role = np.zeros(ids.size, np.int64), np.zeros(ids.size, np.int64)
+    norm[ids], norm_role[ids] = t.column("norm").to_numpy(), t.column("norm_role").to_numpy()
+    keys = ["qojema", "role:assistant"]
+    over = SearchEngine(spark, mf_index)
+    over.LOCAL_MAX_POSTINGS = 0  # the per-query scan
+    lo, hi = mf_engine.n_rows // 3, 2 * mf_engine.n_rows // 3
+    shard_norms = P._read_doc_norms(mf_engine._doc_files, mf_engine.fields, lo, hi)
+    shard = {}
+    for k in keys:
+        files = mf_engine._part_files(term_part_py(k, mf_engine.num_parts))
+        shard.update(P._scan_postings(files, [k], 1, lo, hi, shard_norms))
+    for where, got in (
+        ("resident", mf_engine._local_term_rows(set(keys), 1)),
+        ("scan", over._local_term_rows(set(keys), 1)),
+        ("shard", shard),
+    ):
+        bare, role = got["qojema"], got["role:assistant"]
+        assert bare.docs.size and role.docs.size, where
+        assert bare.norms.tolist() == norm[bare.docs].tolist(), where
+        assert role.norms.tolist() == norm_role[role.docs].tolist(), where
+        assert (norm[role.docs] != norm_role[role.docs]).any(), where
+    assert not over._resident

@@ -58,17 +58,17 @@ def _assert_postings_term_sorted(d, when):
     assert _postings_files(d) and not unsorted, (when, unsorted)
 
 
-def _decoded_postings(d):
+def _decoded_postings(d, norm):
     """One (term, split_id, doc_id, tf, norm, positions) per posting,
-    decoded block by block with the reference codec functions."""
+    decoded block by block with the reference codec functions, each norm
+    ``norm(term, docs)`` (the ``doc_norm_lookup`` fixture's)."""
     out = []
-    cols = ["term", "split_id", "b_first", "b_docs", "b_tfs", "b_norms", "b_pos"]
+    cols = ["term", "split_id", "b_first", "b_docs", "b_tfs", "b_pos"]
     for f in _postings_files(d):
         for r in papq.read_table(f, columns=cols).to_pylist():
             for i in range(len(r["b_docs"])):
-                docs, tfs, norms = decode_block(
-                    r["b_first"][i], r["b_docs"][i], r["b_tfs"][i], r["b_norms"][i]
-                )
+                docs, tfs = decode_block(r["b_first"][i], r["b_docs"][i], r["b_tfs"][i])
+                norms = norm(r["term"], docs)
                 pos = np.split(decode_positions(r["b_pos"][i], tfs), np.cumsum(tfs)[:-1])
                 out += [
                     (r["term"], r["split_id"], int(doc), int(tf), int(nm), tuple(p.tolist()))
@@ -329,7 +329,7 @@ def test_stream_ingest_available_now(spark, corpus3):
 
 
 @pytest.mark.slow
-def test_compact_merges_ingested_splits(spark, corpus3):
+def test_compact_merges_ingested_splits(spark, corpus3, doc_norm_lookup):
     from pyspark.sql import functions as F
 
     from emailindexer_spark.streaming.compact import compact_index, _repair_partial
@@ -360,13 +360,13 @@ def test_compact_merges_ingested_splits(spark, corpus3):
         multi = p.groupBy("term").count().where("count > 1").count()
         assert multi > 0, "fixture must produce multi-row terms pre-compaction"
         dfs_before = {r["term"]: r["df"] for r in p.groupBy("term").agg(F.sum("df_row").alias("df")).collect()}
-        postings_before = _decoded_postings(d)
+        postings_before = _decoded_postings(d, doc_norm_lookup(d))
 
         man = compact_index(spark, d)
         assert man.stats["compactions"] == 1
         _assert_postings_term_sorted(d, "compact")
         # round trip: the same postings and positions, re-cut into splits
-        postings_after = _decoded_postings(d)
+        postings_after = _decoded_postings(d, doc_norm_lookup(d))
         assert any(x[5] for x in postings_after), "index must carry positions"
         assert sorted(x[:1] + x[2:] for x in postings_after) == sorted(
             x[:1] + x[2:] for x in postings_before
@@ -665,37 +665,26 @@ def test_engine_answers_as_of_its_open_across_a_compaction(spark, index_dir, cor
         shutil.rmtree(root, ignore_errors=True)
 
 
-def _add_pre_wand_removal_columns(path):
-    """Rewrite one postings file in the layout of an index built before
-    the block-max columns were dropped: ``b_last``, ``b_n``, ``b_maxtf``
-    and ``b_minnorm`` after ``b_first``, with their per-block values, in
-    the Arrow schema and in the Spark schema of the footer."""
+def _add_old_columns(path, after, cols):
+    """Rewrite postings file ``path`` with the list columns ``cols``
+    ({name: (Arrow value type, Spark element type, per-row values)})
+    inserted after column ``after``, in the Arrow schema and in the
+    Spark schema of the footer: the layout of an older index."""
     import json
 
     import pyarrow as pa
-    from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
+    from pyspark.sql.types import ArrayType, StructField, StructType
 
     t = papq.read_table(path)
-    cols = {"b_last": [], "b_n": [], "b_maxtf": [], "b_minnorm": []}
-    for r in t.select(["b_first", "b_docs", "b_tfs", "b_norms"]).to_pylist():
-        blocks = [decode_block(*b) for b in zip(r["b_first"], r["b_docs"], r["b_tfs"], r["b_norms"])]
-        cols["b_last"].append([int(d[-1]) for d, _, _ in blocks])
-        cols["b_n"].append([int(d.size) for d, _, _ in blocks])
-        cols["b_maxtf"].append([int(tf.max()) for _, tf, _ in blocks])
-        cols["b_minnorm"].append([int(nm.min()) for _, _, nm in blocks])
-    at = t.schema.get_field_index("b_first") + 1
-    for i, (name, vals) in enumerate(cols.items()):
-        typ = pa.list_(pa.int64() if name == "b_last" else pa.int32())
-        t = t.add_column(at + i, name, pa.array(vals, typ))
+    at = t.schema.get_field_index(after) + 1
+    for i, (name, (typ, _, vals)) in enumerate(cols.items()):
+        t = t.add_column(at + i, name, pa.array(vals, pa.list_(typ)))
     meta = dict(t.schema.metadata or {})
     key = b"org.apache.spark.sql.parquet.row.metadata"
     if key in meta:
         fields = StructType.fromJson(json.loads(meta[key])).fields
-        j = [f.name for f in fields].index("b_first") + 1
-        fields[j:j] = [
-            StructField(n, ArrayType(LongType() if n == "b_last" else IntegerType()))
-            for n in cols
-        ]
+        j = [f.name for f in fields].index(after) + 1
+        fields[j:j] = [StructField(n, ArrayType(el)) for n, (_, el, _) in cols.items()]
         meta[key] = StructType(fields).json().encode()
     papq.write_table(t.replace_schema_metadata(meta), path)
     # Hadoop's local filesystem would check the rewrite against the
@@ -705,11 +694,51 @@ def _add_pre_wand_removal_columns(path):
         os.remove(crc)
 
 
+def _file_blocks(path, norm):
+    """Per postings row of file ``path``, its blocks as (docs, tfs,
+    norms), each norm ``norm(term, docs)``."""
+    rows = papq.read_table(path, columns=["term", "b_first", "b_docs", "b_tfs"]).to_pylist()
+    return [
+        [(d, t, norm(r["term"], d)) for d, t in (decode_block(*b) for b in zip(r["b_first"], r["b_docs"], r["b_tfs"]))]
+        for r in rows
+    ]
+
+
+def _add_pre_0_5_norms(path, norm):
+    """Rewrite one postings file in the layout written before 0.5.0:
+    a ``b_norms`` column after ``b_tfs`` holding each block's norm
+    bytes, one per posting, taken from doc_index (``norm``)."""
+    import pyarrow as pa
+    from pyspark.sql.types import BinaryType
+
+    vals = [[nm.astype(np.uint8).tobytes() for _, _, nm in row] for row in _file_blocks(path, norm)]
+    _add_old_columns(path, "b_tfs", {"b_norms": (pa.binary(), BinaryType(), vals)})
+
+
+def _add_pre_wand_removal_columns(path, norm):
+    """Rewrite one postings file (already holding ``b_norms``: see
+    :func:`_add_pre_0_5_norms`) in the layout of an index built before
+    the block-max columns were dropped: ``b_last``, ``b_n``, ``b_maxtf``
+    and ``b_minnorm`` after ``b_first``, with their per-block values."""
+    import pyarrow as pa
+    from pyspark.sql.types import IntegerType, LongType
+
+    blocks = _file_blocks(path, norm)
+    cols = {
+        "b_last": (pa.int64(), LongType(), [[int(d[-1]) for d, _, _ in r] for r in blocks]),
+        "b_n": (pa.int32(), IntegerType(), [[int(d.size) for d, _, _ in r] for r in blocks]),
+        "b_maxtf": (pa.int32(), IntegerType(), [[int(tf.max()) for _, tf, _ in r] for r in blocks]),
+        "b_minnorm": (pa.int32(), IntegerType(), [[int(nm.min()) for _, _, nm in r] for r in blocks]),
+    }
+    _add_old_columns(path, "b_first", cols)
+
+
 @pytest.mark.slow
-def test_index_with_pre_wand_removal_postings_file(spark, index_dir, corpus_pdf):
+def test_index_with_pre_wand_removal_postings_file(spark, index_dir, corpus_pdf, doc_norm_lookup):
     """An index built before the block-max columns were dropped and
     appended to after: one postings file still carries ``b_last``,
-    ``b_n``, ``b_maxtf`` and ``b_minnorm``.  Local and distributed
+    ``b_n``, ``b_maxtf`` and ``b_minnorm`` (and ``b_norms``, which
+    postings held before 0.5.0).  Local and distributed
     searches answer as on the untouched index, and an append and a
     compaction succeed on it with the same answers."""
     from emailindexer_spark.streaming.compact import compact_index
@@ -721,7 +750,8 @@ def test_index_with_pre_wand_removal_postings_file(spark, index_dir, corpus_pdf)
         shutil.copytree(index_dir, old)
         # the file whose footer gives the engine's Spark read schema
         first = min(_postings_files(old))
-        _add_pre_wand_removal_columns(first)
+        _add_pre_0_5_norms(first, doc_norm_lookup(old))
+        _add_pre_wand_removal_columns(first, doc_norm_lookup(old))
         terms = papq.read_table(first, columns=["term"]).column("term").to_pylist()
         t1, t2 = terms[0], terms[len(terms) // 2]
         queries = [t1, f"{t1} {t2} juja", f"{t2} -juja", f"{t1[:2]}*", '"qojema ralocu"']
@@ -748,6 +778,63 @@ def test_index_with_pre_wand_removal_postings_file(spark, index_dir, corpus_pdf)
             compact_index(spark, d)
         assert answers(old) == answers(ref) == want
         assert all("b_maxtf" not in papq.read_schema(f).names for f in _postings_files(old))
+        assert all("b_norms" not in papq.read_schema(f).names for f in _postings_files(old))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.slow
+def test_index_with_pre_0_5_postings(spark, index_dir, corpus_pdf, doc_norm_lookup, index_digest):
+    """An index written before 0.5.0, whose every postings file carries
+    the per-posting ``b_norms`` copy (each byte its doc's norm in
+    doc_index), answers every query shape as the same index in the
+    current layout on the resident local tier, the over-cap scan and
+    the distributed tier; an append onto it writes postings without
+    ``b_norms``, compaction drops the column, and both answer as on
+    the current layout throughout."""
+    from emailindexer_spark.streaming.compact import compact_index
+
+    root = tempfile.mkdtemp(prefix="ix_pre_0_5_")
+    try:
+        ref, old = os.path.join(root, "ref"), os.path.join(root, "old")
+        shutil.copytree(index_dir, ref)
+        shutil.copytree(index_dir, old)
+        for f in _postings_files(old):
+            _add_pre_0_5_norms(f, doc_norm_lookup(old))
+        assert all("b_norms" in papq.read_schema(f).names for f in _postings_files(old))
+        eng = SearchEngine(spark, ref)
+        vocab, dfs, _ = eng._driver_vocab()
+        heavy, mid = vocab[int(np.argmax(dfs))], vocab[int(np.argsort(dfs)[len(dfs) // 2])]
+        queries = [
+            heavy, f"{heavy} {mid}", f"+{heavy} -{mid}", f"{mid[:2]}*", f"{mid}~1", '"qojema ralocu"',
+            '"qojema ralocu"~2', f"({heavy} OR {mid}) AND NOT zzz",
+        ]
+
+        def answers(d):
+            local, over, dist = (SearchEngine(spark, d) for _ in range(3))
+            over.LOCAL_MAX_POSTINGS = 0  # the per-query scan
+            dist._local_search = lambda *a, **k: None  # force distributed plans
+            return [
+                [(r[0], r[1], r[2], r[3], round(r[4], 9)) for r in eng.search(q, k=20, mode=m).collect()]
+                for eng in (local, over, dist)
+                for q in queries
+                for m in ("turns", "conversations")
+            ]
+
+        want = answers(ref)
+        assert all(want) and answers(old) == want
+        batch = corpus_pdf.head(300).assign(conv_id=lambda x: "zz_" + x.conv_id)
+        for d in (ref, old):
+            incremental_append(spark, d, spark.createDataFrame(batch))
+        appended = [f for f in _postings_files(old) if os.path.basename(f).startswith("ing")]
+        assert appended and all("b_norms" not in papq.read_schema(f).names for f in appended)
+        want = answers(ref)
+        assert answers(old) == want
+        for d in (ref, old):
+            compact_index(spark, d)
+        assert all("b_norms" not in papq.read_schema(f).names for f in _postings_files(old))
+        assert answers(old) == answers(ref) == want
+        assert index_digest(old) == index_digest(ref)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

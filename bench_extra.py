@@ -13,8 +13,10 @@ Modes (first CLI arg):
 * ``scale-trend N_TURNS`` — SCALE.md §3b trend leg: build (or reuse)
   the synthetic corpus + index at ``N_TURNS`` and time the same nine
   queries + batched suite with the same warm-then-time methodology as
-  bench.py.  Reuses bench.py's corpus/build helpers so a trend row is
-  directly comparable to the frozen artifact's query block.
+  bench.py; ``first_queries`` holds each query's warm-up run on the
+  fresh engine (the first runs the engine's first touches).  Reuses
+  bench.py's corpus/build helpers so a trend row is directly
+  comparable to the frozen artifact's query block.
 * ``local-decode [SEED]`` — the driver-local tier on perfbench's
   ingest-search index (``perfbench/workloads.py::_corpus_and_batches``:
   ~10k base turns built on the driver, then two appends of ~500), built
@@ -129,11 +131,14 @@ def scale_trend(n_turns: int) -> None:
     sc = spark.sparkContext
     eng = SearchEngine(spark, ix_dir)
     qsec: dict[str, float] = {}
+    qfirst: dict[str, float] = {}
     qjobs: dict[str, int] = {}
     for name, q, k, mode, wand in B.BENCH_QUERIES:
         for pat, sub in subs.items():
             q = q.replace(pat, sub)
+        t0 = time.time()
         eng.search(q, k=k, mode=mode, use_wand=wand).collect()  # warm
+        qfirst[name] = round(time.time() - t0, 3)
         sc.setJobGroup(name, name)
         t0 = time.time()
         eng.search(q, k=k, mode=mode, use_wand=wand).collect()
@@ -157,6 +162,7 @@ def scale_trend(n_turns: int) -> None:
                 "n_turns": n_turns,
                 "build_sec": build_sec,
                 "queries": qsec,
+                "first_queries": qfirst,
                 "query_jobs": qjobs,
                 "hits": n_hits,
                 "host_probe": B.host_probe(),

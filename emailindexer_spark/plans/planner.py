@@ -13,10 +13,10 @@ Norms are per document, as in Lucene: one byte per doc and field in
 ``doc_index``'s ``norm`` / ``norm_{field}`` columns, never copied into
 the postings.  One kernel, :func:`_decode_table`, decodes postings rows
 from Arrow buffers for both tiers, a whole table at a time, and fills
-each posting's norm with one gather per field from the norms of its doc
-range (:class:`_DocNorms`, read once per engine on the driver and once
-per shard task), so a term's score stream is a pure map over its
-decoded postings.
+each posting's norm with one gather per field from the norms of its
+docs (:class:`_DocNorms`: read whole once per engine for the resident
+tier, and for the docs a scan decoded elsewhere, shard tasks included),
+so a term's score stream is a pure map over its decoded postings.
 
 The evaluator runs in one of two places:
 
@@ -420,24 +420,30 @@ _LEVEL_COLS = (_DOCS_COLS, _SCORE_COLS, _SCORE_COLS + ("b_pos",))
 
 
 class _DocNorms(NamedTuple):
-    """The norm bytes of docs [lo, lo + len) per field: ``cols[i]`` is
-    doc_index's ``norm`` column for ``fields[0]`` (bare keys) and
-    ``norm_{fields[i]}`` for the other fields (``field:term`` keys)."""
+    """The norm bytes of some docs per field: ``cols[i]`` is doc_index's
+    ``norm`` column for ``fields[0]`` (bare keys) and ``norm_{fields[i]}``
+    for the other fields (``field:term`` keys); row j holds doc
+    ``lo + j``, or with ``ids`` (ascending) doc ``ids[j]``."""
 
     lo: int
     fields: tuple[str, ...]
     cols: tuple[np.ndarray, ...]
+    ids: np.ndarray | None = None
 
     def gather(self, term_col, docs: np.ndarray, counts: np.ndarray) -> np.ndarray:
         """The norm byte of each posting ``docs`` of a decoded table whose
         row r (term ``term_col[r]``) holds ``counts[r]`` of them: one
-        gather per field.  A doc outside the range (a kept block's edge
-        past [lo, hi)) takes the nearest edge's byte; ``_Decoded.postings``
-        never hands it out."""
+        gather per field.  A doc not held (a kept block's edge past the
+        docs read) takes a neighbour's byte; ``_Decoded.postings`` never
+        hands it out."""
+        if not self.cols[0].size:
+            return np.zeros(docs.size, np.uint8)
+        rows = docs - self.lo if self.ids is None else np.searchsorted(self.ids, docs)
         if len(self.cols) == 1:
-            return np.take(self.cols[0], docs - self.lo, mode="clip")
+            return np.take(self.cols[0], rows, mode="clip")
         import pyarrow.compute as pc
 
+        term_col = pa.array(term_col, pa.string())
         row_field = np.zeros(len(term_col), np.int8)
         for i, f in enumerate(self.fields[1:], 1):
             row_field[pc.starts_with(term_col, f + ":").to_numpy(zero_copy_only=False)] = i
@@ -445,33 +451,120 @@ class _DocNorms(NamedTuple):
         out = np.empty(docs.size, np.uint8)
         for i, c in enumerate(self.cols):
             sel = field == i
-            out[sel] = np.take(c, docs[sel] - self.lo, mode="clip")
+            out[sel] = np.take(c, rows[sel], mode="clip")
         return out
 
 
-def _read_doc_norms(files: list[str], fields: tuple[str, ...], lo: int, hi: int) -> _DocNorms:
-    """The :class:`_DocNorms` of docs [lo, hi) from the doc_index
-    ``files``: ``doc_id`` and the norm columns only (no ``text``), row
-    groups pruned by their doc_id min/max.  Raises ValueError unless
-    the files hold each doc of the range once."""
-    import pyarrow.dataset as ds
+def _doc_row_groups(files: list[str]) -> list[tuple[str, list[tuple[int, int | None, int | None]]]]:
+    """Each doc_index file with its row groups' (index, doc_id min, doc_id
+    max), from the footers (min and max None without statistics): what
+    :func:`_doc_rows` prunes by.  An engine reads them once and ships
+    them to its shard tasks in the plan."""
+    import pyarrow.parquet as papq
 
+    out = []
+    for f in files:
+        md = papq.read_metadata(f)
+        j = md.schema.names.index("doc_id")
+        groups = []
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(j).statistics
+            has = st is not None and st.has_min_max
+            groups.append((g, st.min if has else None, st.max if has else None))
+        out.append((f, groups))
+    return out
+
+
+def _doc_rows(
+    groups: list[tuple[str, list[tuple[int, int | None, int | None]]]],
+    cols: list[str],
+    lo: int,
+    hi: int,
+    docs: np.ndarray | None = None,
+) -> pa.Table | None:
+    """doc_index's ``cols`` (``doc_id`` first) of the docs in [lo, hi),
+    or with ``docs`` (ascending, distinct, inside [lo, hi)) of those
+    only; None when no row is read.  Of the files' row groups
+    (:func:`_doc_row_groups`) only those whose doc_id min/max can hold a
+    doc asked for are read, by one pyarrow scan (files in parallel), and
+    each batch is cut to the docs at once: the bytes kept follow the
+    docs asked for, not the files."""
+    import pyarrow.dataset as ds
+    import pyarrow.fs as pafs
+
+    fmt, local, frags = ds.ParquetFileFormat(), pafs.LocalFileSystem(), []
+    for f, gs in groups:
+        read = [
+            g
+            for g, a, b in gs
+            if a is None
+            or (
+                b >= lo
+                and a < hi
+                and (docs is None or (i := int(np.searchsorted(docs, a))) < docs.size and docs[i] <= b)
+            )
+        ]
+        if read:
+            frags.append(fmt.make_fragment(f, local, row_groups=read))
+    if not frags:
+        return None
+    out = []
+    for batch in ds.FileSystemDataset(frags, frags[0].physical_schema, fmt).to_batches(columns=cols):
+        ids = batch.column(0).to_numpy()
+        if not ids.size:
+            continue
+        if docs is None:
+            keep = (ids >= lo) & (ids < hi)
+        else:
+            a, b = int(ids.min()), int(ids.max())
+            want = docs[np.searchsorted(docs, a) : np.searchsorted(docs, b, "right")]
+            if b - a < 4 * ids.size:  # a bitmap of the batch's doc span
+                seen = np.zeros(b - a + 1, bool)
+                seen[want - a] = True
+                keep = seen[ids - a]
+            elif want.size:
+                keep = want[np.minimum(np.searchsorted(want, ids), want.size - 1)] == ids
+            else:
+                continue
+        out.append(batch if keep.all() else batch.filter(keep))
+    return pa.Table.from_batches(out, out[0].schema) if out else None
+
+
+def _read_doc_norms(
+    groups: list, fields: tuple[str, ...], lo: int, hi: int, docs: np.ndarray | None = None
+) -> _DocNorms:
+    """The :class:`_DocNorms` of the docs [lo, hi), or with ``docs`` (any
+    order, repeats allowed) of those of them inside [lo, hi) only, from
+    the doc_index files of ``groups`` (:func:`_doc_row_groups`):
+    ``doc_id`` and the norm columns (no ``text``) of the row groups that
+    can hold them (:func:`_doc_rows`).  ``docs`` that number at least
+    an eighth of their span are read as that whole span, gathered by
+    offset, sparser ones as distinct ids, gathered by searchsorted:
+    either way the arrays follow the count of ``docs``, not the range.
+    Raises ValueError unless the files hold each doc asked for once."""
     cols = ["norm", *(f"norm_{f}" for f in fields[1:])]
-    t = ds.dataset(files, format="parquet").to_table(
-        columns=["doc_id", *cols], filter=(ds.field("doc_id") >= lo) & (ds.field("doc_id") < hi)
-    )
-    at = t.column("doc_id").to_numpy() - lo
-    seen = np.zeros(hi - lo, bool)
+    if docs is not None:
+        docs = docs[(docs >= lo) & (docs < hi)]
+        if docs.size and int(docs.max()) - int(docs.min()) < 8 * docs.size:
+            lo, hi, docs = int(docs.min()), int(docs.max()) + 1, None
+        else:
+            docs = np.unique(docs)
+    n = hi - lo if docs is None else docs.size
+    t = _doc_rows(groups, ["doc_id", *cols], lo, hi, docs) if n else None
+    ids = np.empty(0, np.int64) if t is None else t.column("doc_id").to_numpy()
+    at = ids - lo if docs is None else np.searchsorted(docs, ids)
+    seen = np.zeros(n, bool)
     seen[at] = True
-    if at.size != hi - lo or not seen.all():
-        raise ValueError(f"doc_index holds {at.size} rows for the {hi - lo} docs [{lo}, {hi})")
+    if at.size != n or not seen.all():
+        raise ValueError(f"doc_index holds {at.size} rows for the {n} docs asked for in [{lo}, {hi})")
     out = []
     for c in cols:
-        a = np.empty(hi - lo, np.uint8)
-        a[at] = t.column(c).to_numpy()
+        a = np.empty(n, np.uint8)
+        if n:
+            a[at] = t.column(c).to_numpy()
         a.flags.writeable = False
         out.append(a)
-    return _DocNorms(lo, tuple(fields), tuple(out))
+    return _DocNorms(lo, tuple(fields), tuple(out), docs)
 
 
 class _Decoded(NamedTuple):
@@ -511,6 +604,12 @@ class _Decoded(NamedTuple):
             out[t] = _Postings(self.level, self.docs[s:e], self.tfs[s:e], self.norms[s:e], pos)
         return out
 
+    def with_norms(self, doc_norms: _DocNorms) -> _Decoded:
+        """This table with each posting's norm gathered from ``doc_norms``."""
+        norms = doc_norms.gather(self.term, self.docs, np.diff(self.off))
+        norms.flags.writeable = False
+        return self._replace(norms=norms)
+
 
 def _decode_table(
     table: pa.Table, level: int, lo: int, hi: int, doc_norms: _DocNorms | None = None
@@ -521,8 +620,9 @@ def _decode_table(
     postings, and of the others only the blocks that overlap it are
     decoded, in ONE varbyte pass per column.  From level 1 on each
     posting's norm is gathered from ``doc_norms`` (those of [lo, hi));
-    without them (compaction, which rewrites docs, tfs and positions
-    only) the norms stay empty.
+    without them the norms stay empty: compaction rewrites docs, tfs and
+    positions only, and a scan reads the norms of the docs it decoded
+    afterwards (:meth:`_Decoded.with_norms`).
 
     Shards choose rows by their doc ranges, so a wrong range would drop
     hits without a sound: a decoded doc outside its row's
@@ -579,8 +679,6 @@ def _decode_table(
             f"[{fd[r]}, {ld[r]}] or out of order"
         )
     norms = np.empty(0, np.uint8)
-    if level and doc_norms is not None:
-        norms = doc_norms.gather(table.column("term"), docs, cnt)
     pos = None
     if level == 2:
         pbuf = np.array(_kept_blocks(table.column("b_pos"), keep)[0])
@@ -588,7 +686,8 @@ def _decode_table(
         pos = (pbuf, np.concatenate(([0], pend)))
     for a in (docs, tfs, norms, *(pos or ())):
         a.flags.writeable = False  # postings() hands out views of them
-    return _Decoded(level, term, fd, ld, off, docs, tfs, norms, pos)
+    dec = _Decoded(level, term, fd, ld, off, docs, tfs, norms, pos)
+    return dec.with_norms(doc_norms) if level and doc_norms is not None else dec
 
 
 def _phrase_freqs(
@@ -638,18 +737,17 @@ def _phrase_freqs(
     return np.unique(start >> shift, return_counts=True)
 
 
-def _doc_texts(files: list[str], docs: np.ndarray) -> np.ndarray:
+def _doc_texts(groups: list, docs: np.ndarray) -> np.ndarray:
     """The ``text`` of ``docs`` (sorted, distinct) from the doc_index
-    ``files``, in doc order: a pyarrow scan whose doc_id filter prunes
-    row groups by their min/max."""
-    import pyarrow.dataset as ds
-
-    t = ds.dataset(files, format="parquet").to_table(
-        columns=["doc_id", "text"], filter=ds.field("doc_id").isin(pa.array(docs))
-    )
-    got = t.column("doc_id").to_numpy()
+    files of ``groups`` (:func:`_doc_row_groups`), in doc order: only
+    the row groups whose doc_id min/max can hold one are read
+    (:func:`_doc_rows`)."""
+    t = _doc_rows(groups, ["doc_id", "text"], int(docs[0]), int(docs[-1]) + 1, docs) if docs.size else None
+    got = np.empty(0, np.int64) if t is None else t.column("doc_id").to_numpy()
     if got.size != docs.size:
         raise ValueError(f"doc_index holds {got.size} rows for {docs.size} candidate docs")
+    if t is None:
+        return np.empty(0, object)
     return t.column("text").to_numpy(zero_copy_only=False)[np.argsort(got, kind="stable")]
 
 
@@ -864,14 +962,25 @@ def _scan_files(
 
 
 def _scan_postings(
-    files: list[str], terms: list[str], level: int, lo: int, hi: int, doc_norms: _DocNorms | None
+    parts: list[tuple[list[str], list[str]]], level: int, lo: int, hi: int, norms_of
 ) -> dict[str, _Postings]:
-    """{term: _Postings} of ``terms`` in [lo, hi) from a
-    :func:`_scan_files` of ``files``, decoded by :func:`_decode_table`."""
-    t = _scan_files(files, terms, _LEVEL_COLS[level], lo, hi)
-    if t is None:
-        return {}
-    return _decode_table(t, level, lo, hi, doc_norms).postings(terms, lo, hi)
+    """{term: _Postings in [lo, hi)} of each (postings files, terms) of
+    ``parts``: a :func:`_scan_files` and :func:`_decode_table` per part,
+    then, from level 1 on, ONE ``norms_of(docs)`` call for the docs
+    decoded (a :class:`_DocNorms` holding them), and none when no row
+    matched."""
+    decs = []
+    for files, terms in parts:
+        t = _scan_files(files, terms, _LEVEL_COLS[level], lo, hi)
+        if t is not None:
+            decs.append((_decode_table(t, level, lo, hi), terms))
+    if level and decs:
+        norms = norms_of(np.concatenate([d.docs for d, _ in decs]))
+        decs = [(d.with_norms(norms), terms) for d, terms in decs]
+    out = {}
+    for d, terms in decs:
+        out.update(d.postings(terms, lo, hi))
+    return out
 
 
 def _conv_winners(
@@ -905,26 +1014,24 @@ def _shard_scorer(plan: SimpleNamespace):
     shard i scores the docs [plan.bounds[i], plan.bounds[i + 1]) with
     :class:`QueryEvaluator`, over its terms' rows read with pyarrow from
     ``plan.files`` (per part; terms and the doc range prune row groups
-    and rows) and decoded by :func:`_decode_table` with the norms of its
-    range (:func:`_read_doc_norms` of ``plan.doc_files``, when
-    ``plan.level`` needs them), and emits (doc_id, score).  With
-    ``plan.offs`` (the
+    and rows) and decoded by :func:`_scan_postings`, with the norms of
+    the docs it decoded (:func:`_read_doc_norms` from
+    ``plan.doc_groups``: only the doc_index row groups that hold them,
+    none when nothing matched) when ``plan.level`` needs them, and emits
+    (doc_id, score).  With ``plan.offs`` (the
     conversations' first docs; the bounds then fall on conversation
     edges) it keeps each conversation's best hit, and with ``plan.k``
     its top k by (score desc, doc_id asc): the global winners lie
     within the shards'."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        doc_text = None if plan.positions else partial(_doc_texts, plan.doc_files)
+        doc_text = None if plan.positions else partial(_doc_texts, plan.doc_groups)
         for b in batches:
             for i in b.column(0).to_pylist():
                 lo, hi = int(plan.bounds[i]), int(plan.bounds[i + 1])
-                norms = None
-                if plan.level and hi > lo:
-                    norms = _read_doc_norms(plan.doc_files, plan.fields, lo, hi)
-                post = {}
-                for part, terms in plan.terms.items():
-                    post.update(_scan_postings(plan.files[part], terms, plan.level, lo, hi, norms))
+                parts = [(plan.files[part], terms) for part, terms in plan.terms.items()]
+                norms_of = partial(_read_doc_norms, plan.doc_groups, plan.fields, lo, hi)
+                post = _scan_postings(parts, plan.level, lo, hi, norms_of)
                 docs, scores = QueryEvaluator(
                     post, plan.levels, plan.idf, plan.avgdl, plan.positions,
                     plan.order_tolerant, doc_text, plan.simple,
@@ -1262,23 +1369,27 @@ class SearchEngine:
 
 
     @cached_property
-    def _doc_files(self) -> list[str]:
-        """doc_index's files as of the open, read with pyarrow on either
+    def _doc_groups(self) -> list:
+        """doc_index's files as of the open with their row groups' doc_id
+        ranges (:func:`_doc_row_groups`), read with pyarrow on either
         tier: for the norms, and for phrases on an index without
         positions."""
-        return self._at_open(table_files(os.path.join(self.index_dir, "doc_index")))
+        return _doc_row_groups(self._at_open(table_files(os.path.join(self.index_dir, "doc_index"))))
 
     def _doc_norms(self) -> _DocNorms:
         """The norms of the open's docs [0, n_rows), read on the first
         local decode that scores (:func:`_read_doc_norms`) and kept: one
-        byte per doc and field.  Double-checked under a lock, like
-        _driver_vocab (whose lock it shares)."""
+        byte per doc and field.  The resident tier reads them (its
+        postings cap bounds the docs with a token), and so does the
+        over-cap scan while n_rows <= LOCAL_MAX_NORM_DOCS; above that a
+        scan reads the norms of the docs it decoded.  Double-checked
+        under a lock, like _driver_vocab (whose lock it shares)."""
         got = self._norms
         if got is None:
             with self._vocab_lock:
                 got = self._norms
                 if got is None:
-                    got = _read_doc_norms(self._doc_files, self.fields, 0, self.n_rows)
+                    got = _read_doc_norms(self._doc_groups, self.fields, 0, self.n_rows)
                     self._norms = got
         return got
 
@@ -1637,6 +1748,13 @@ class SearchEngine:
     #: driver RSS +153 MB, 0.5 s to touch every part; so ~115 MB of
     #: arrays at the cap — about one query's decode arrays at the budget.
     LOCAL_MAX_POSTINGS = 5_000_000
+    #: docs up to which the driver keeps every doc's norms (one byte per
+    #: doc and field, ~5 MB a field at the cap) for over-cap local scans
+    #: too; above it each scan reads the norms of the docs it decoded.
+    #: At 600k turns (4 vCPU) a rare-term scan took ~24 ms reading its
+    #: 434 docs' norms from 43 doc_index files, against ~6 ms from the
+    #: kept bytes.
+    LOCAL_MAX_NORM_DOCS = 5_000_000
     #: expansion-width cap for local constant-score rewrites (prefix/
     #: range/wildcard): wider expansions take the distributed tier
     LOCAL_MAX_EXPANSION = 4096
@@ -1666,20 +1784,25 @@ class SearchEngine:
         decoded its terms' Arrow rows.  Above the cap
         each query runs a term-filtered pyarrow scan of the part's files
         (row groups pruned by the sorted term column's min/max) and
-        decodes the rows it finds with the same kernel.  Either way each
+        decodes the rows it finds with the same kernel
+        (:func:`_scan_postings`), with every doc's norms while the open
+        holds at most LOCAL_MAX_NORM_DOCS docs, else with those of the
+        docs decoded, read per query.  Either way each
         part's file list is taken on its first touch and kept, so both
         tiers see one fixed index state."""
         by_part: dict[int, list[str]] = {}
         for t in sorted(terms):
             by_part.setdefault(term_part_py(t, self.num_parts), []).append(t)
-        resident = self._resident_ok()
+        if not self._resident_ok():
+            parts = [(self._part_files(part), ts) for part, ts in sorted(by_part.items())]
+            if self.n_rows <= self.LOCAL_MAX_NORM_DOCS:
+                norms_of = lambda _docs: self._doc_norms()  # noqa: E731
+            else:
+                norms_of = partial(_read_doc_norms, self._doc_groups, self.fields, 0, self.n_rows)
+            return _scan_postings(parts, level, 0, self.n_rows, norms_of)
         out: dict[str, _Postings] = {}
         for part, ts in sorted(by_part.items()):
-            if resident:
-                out.update(self._resident_part(part).postings(ts, 0, self.n_rows))
-            else:
-                norms = self._doc_norms() if level else None
-                out.update(_scan_postings(self._part_files(part), ts, level, 0, self.n_rows, norms))
+            out.update(self._resident_part(part).postings(ts, 0, self.n_rows))
         return out
 
     def _resident_ok(self) -> bool:
@@ -1774,7 +1897,7 @@ class SearchEngine:
                     cache[t] = post[t]
         docs, scores = QueryEvaluator(
             post, levels, idf_map, avgdl_map, self.positions, self.slop_order_tolerant,
-            None if self.positions else partial(_doc_texts, self._doc_files), self.simple,
+            None if self.positions else partial(_doc_texts, self._doc_groups), self.simple,
         )(ast)
         if k is None and docs.size > self.LOCAL_MAX_K:
             return None
@@ -1862,8 +1985,8 @@ class SearchEngine:
         shards' doc bounds over the open's ``n_rows`` docs, the keys and
         file list of each postings part they live in (taken as of the
         open), the decode level their keys need, and doc_index's files
-        (norms, and text on an index without positions) with the fields
-        whose norm columns they hold.  With conv_offsets, each bound moves
+        with their row groups' doc_id ranges (norms, and text on an index
+        without positions) and the fields whose norm columns they hold.  With conv_offsets, each bound moves
         up to the next conversation's first doc, so a conversation lies
         in one shard, as in a sharded build's row-balanced shards (and
         ``collapse`` has each shard keep its conversations' best hits)."""
@@ -1883,7 +2006,7 @@ class SearchEngine:
             n=n, bounds=bounds, offs=offs if collapse else None, terms=terms,
             files={p: self._part_files(p) for p in terms}, level=max(levels.values()),
             positions=self.positions, order_tolerant=self.slop_order_tolerant,
-            simple=self.simple, doc_files=self._doc_files, fields=self.fields,
+            simple=self.simple, doc_groups=self._doc_groups, fields=self.fields,
         )
 
     def _shard_scores(

@@ -740,7 +740,7 @@ class TestFrameDecode:
         import pyarrow as pa
         import pyarrow.parquet as papq
 
-        from emailindexer_spark.plans.planner import _decode_table, _read_doc_norms
+        from emailindexer_spark.plans.planner import _decode_table, _doc_row_groups, _read_doc_norms
 
         n, rng = 40, np.random.default_rng(3)
         norm, norm_role = rng.integers(0, 256, n), rng.integers(0, 256, n)
@@ -769,7 +769,8 @@ class TestFrameDecode:
             )
         table = self._table(rows)
         for lo, hi in ((0, n), (7, 23)):
-            got = _decode_table(table, 1, lo, hi, _read_doc_norms(files, ("text", "role"), lo, hi))
+            norms = _read_doc_norms(_doc_row_groups(files), ("text", "role"), lo, hi)
+            got = _decode_table(table, 1, lo, hi, norms)
             got = got.postings(list(keys), lo, hi)
             for key, d in keys.items():
                 d = d[(d >= lo) & (d < hi)]
@@ -777,7 +778,76 @@ class TestFrameDecode:
                 assert got[key].docs.tolist() == d.tolist(), (key, lo)
                 assert got[key].norms.tolist() == col[d].tolist(), (key, lo)
         with pytest.raises(ValueError, match="doc_index holds"):
-            _read_doc_norms(files[:1], ("text", "role"), 0, n)
+            _read_doc_norms(_doc_row_groups(files[:1]), ("text", "role"), 0, n)
+
+    def test_scans_read_only_the_row_groups_of_their_docs(self, tmp_path, monkeypatch):
+        """A postings scan (the over-cap local tier and every shard task)
+        reads the norms of the docs it decoded, and _doc_texts the text of
+        its docs: only the doc_index row groups whose doc_id min/max can
+        hold one are read, and a scan that matches no row reads none."""
+        from functools import partial
+
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as papq
+
+        from emailindexer_spark.plans.planner import (
+            _doc_row_groups,
+            _doc_texts,
+            _read_doc_norms,
+            _scan_postings,
+        )
+
+        n, rng = 80, np.random.default_rng(5)
+        norm = rng.integers(0, 256, n)
+        dfiles = []
+        for i in range(2):  # two files of four 10-doc row groups each
+            ids = np.arange(40 * i, 40 * (i + 1))
+            dfiles.append(str(tmp_path / f"doc-{i}.parquet"))
+            papq.write_table(
+                pa.table({"doc_id": ids, "text": [f"t{d}" for d in ids], "norm": norm[ids].astype(np.int32)}),
+                dfiles[-1],
+                row_group_size=10,
+            )
+        d = np.array([3, 5, 61])
+        eb = encode_blocks(d, np.ones(d.size, np.int64), block_size=2)
+        pfile = str(tmp_path / "postings.parquet")
+        papq.write_table(
+            self._table(
+                [{"term": "a", "last_doc": 61, "b_first": [int(x) for x in eb.first_doc],
+                  "b_docs": eb.doc_bytes, "b_tfs": eb.tf_bytes}]
+            ),
+            pfile,
+        )
+        real, groups = ds.FileSystemDataset, []
+
+        def spy(frags, *a, **k):  # each read (file, row group) by its doc_id range
+            for fr in frags:
+                i = dfiles.index(fr.path)
+                groups.extend((40 * i + 10 * g.id, 40 * i + 10 * g.id + 9) for g in fr.row_groups)
+            return real(frags, *a, **k)
+
+        monkeypatch.setattr(ds, "FileSystemDataset", spy)
+        dgroups = _doc_row_groups(dfiles)
+        for (lo, hi), want, rgs in (
+            ((0, n), [3, 5, 61], [(0, 9), (60, 69)]),
+            ((0, 50), [3, 5], [(0, 9)]),
+            ((10, 60), [], []),
+        ):
+            groups.clear()
+            norms_of = partial(_read_doc_norms, dgroups, ("text",), lo, hi)
+            got = _scan_postings([([pfile], ["a"])], 1, lo, hi, norms_of)
+            docs = got["a"].docs.tolist() if want else []
+            assert docs == want and ("a" in got) == bool(want), (lo, hi)
+            if want:
+                assert got["a"].norms.tolist() == norm[want].tolist(), (lo, hi)
+            assert groups == rgs, (lo, hi)
+        groups.clear()
+        norms_of = partial(_read_doc_norms, dgroups, ("text",), 0, n)
+        assert _scan_postings([([pfile], ["b"])], 1, 0, n, norms_of) == {}
+        assert groups == []
+        assert _doc_texts(dgroups, np.array([5, 61])).tolist() == ["t5", "t61"]
+        assert groups == [(0, 9), (60, 69)]
 
     def test_row_decode_keeps_a_doc_range_and_checks_rows(self):
         """planner._decode_table and _Decoded.postings against the

@@ -206,10 +206,13 @@ def test_multifield_shards_agree(spark, mf_index, mf_engine, assert_shards_agree
 def test_field_keys_score_with_their_fields_norms(spark, mf_index, mf_engine):
     """A ``field:term`` key's postings carry doc_index's ``norm_{field}``
     bytes and a bare key's its ``norm``: on the resident local tier, the
-    over-cap scan and a distributed shard's decode of a doc range.  The
+    over-cap scan (with the engine's kept norms, and with a per-query
+    read of its docs' norms) and a distributed shard's decode of a doc
+    range.  The
     two columns differ on the role key's docs (role holds one token a
     doc), so a gather from the wrong field shows."""
     import os
+    from functools import partial
 
     import numpy as np
     import pyarrow.dataset as ds
@@ -225,16 +228,18 @@ def test_field_keys_score_with_their_fields_norms(spark, mf_index, mf_engine):
     norm[ids], norm_role[ids] = t.column("norm").to_numpy(), t.column("norm_role").to_numpy()
     keys = ["qojema", "role:assistant"]
     over = SearchEngine(spark, mf_index)
-    over.LOCAL_MAX_POSTINGS = 0  # the per-query scan
+    over.LOCAL_MAX_POSTINGS = 0  # the per-query scan, with the kept norms
+    sparse = SearchEngine(spark, mf_index)
+    sparse.LOCAL_MAX_POSTINGS = sparse.LOCAL_MAX_NORM_DOCS = 0  # reading its docs' norms
     lo, hi = mf_engine.n_rows // 3, 2 * mf_engine.n_rows // 3
-    shard_norms = P._read_doc_norms(mf_engine._doc_files, mf_engine.fields, lo, hi)
-    shard = {}
-    for k in keys:
-        files = mf_engine._part_files(term_part_py(k, mf_engine.num_parts))
-        shard.update(P._scan_postings(files, [k], 1, lo, hi, shard_norms))
+    parts = [(mf_engine._part_files(term_part_py(k, mf_engine.num_parts)), [k]) for k in keys]
+    shard = P._scan_postings(
+        parts, 1, lo, hi, partial(P._read_doc_norms, mf_engine._doc_groups, mf_engine.fields, lo, hi)
+    )
     for where, got in (
         ("resident", mf_engine._local_term_rows(set(keys), 1)),
         ("scan", over._local_term_rows(set(keys), 1)),
+        ("scan, docs' norms", sparse._local_term_rows(set(keys), 1)),
         ("shard", shard),
     ):
         bare, role = got["qojema"], got["role:assistant"]
@@ -242,4 +247,5 @@ def test_field_keys_score_with_their_fields_norms(spark, mf_index, mf_engine):
         assert bare.norms.tolist() == norm[bare.docs].tolist(), where
         assert role.norms.tolist() == norm_role[role.docs].tolist(), where
         assert (norm[role.docs] != norm_role[role.docs]).any(), where
-    assert not over._resident
+    assert not over._resident and not sparse._resident
+    assert over._norms is not None and sparse._norms is None

@@ -37,6 +37,14 @@ Modes (first CLI arg):
   footers), then one JSON line with ``index_bytes_per_input_byte``
   after the first append (search-local's figure) and after the second
   (ingest-search's).
+* ``continue-append [SEED]`` — perfbench's base index
+  (``_corpus_and_batches(SEED)``, built from parquet as perfbench builds
+  it) plus one append that continues 50 indexed conversations (three
+  new turns each, text from the first append batch), in a temporary
+  directory.  Prints, per perfbench query shape, the median ms of a
+  search and the Spark jobs it ran (five draws per shape, warm, three
+  passes), and the queries whose ranks differ from the oracle's over
+  the same rows.
 """
 
 from __future__ import annotations
@@ -333,6 +341,89 @@ def footprint(seed: int) -> None:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def continue_append(seed: int) -> None:
+    sys.path.insert(0, REPO)
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import shutil
+    import tempfile
+
+    import numpy as np
+    from queries import SHAPES, QueryGen
+    from workloads import NUM_PARTS, _corpus_and_batches
+
+    from emailindexer_spark import get_spark
+    from emailindexer_spark.oracle import build_oracle_index
+    from emailindexer_spark.oracle import search as oracle_search
+    from emailindexer_spark.plans.builder import IndexBuilder
+    from emailindexer_spark.plans.planner import SearchEngine
+    from emailindexer_spark.streaming.ingest import incremental_append
+
+    nproc = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="bench-extra-continue-append", master=f"local[{nproc}]")
+    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    work = tempfile.mkdtemp(prefix="continue_append_")
+    try:
+        corpus, batches = _corpus_and_batches(seed)
+        ix = os.path.join(work, "index")
+        pq = os.path.join(work, "corpus.parquet")
+        corpus.to_parquet(pq, index=False, row_group_size=max(1000, len(corpus) // (2 * nproc)))
+        IndexBuilder(spark, ix, num_parts=NUM_PARTS).build(spark.read.parquet(pq))
+        # 50 indexed conversations, three turns more each
+        n_turns = corpus.groupby("conv_id")["turn_idx"].max() + 1
+        convs = n_turns.index.to_numpy()[:: max(1, n_turns.size // 50)][:50]
+        batch = batches[0].head(3 * convs.size).copy()
+        batch["conv_id"] = np.repeat(convs, 3)
+        batch["turn_idx"] = (n_turns[convs].to_numpy().repeat(3) + np.tile(np.arange(3), convs.size)).astype(
+            batch["turn_idx"].dtype
+        )
+        bpq = os.path.join(work, "batch.parquet")
+        batch.to_parquet(bpq, index=False)
+        incremental_append(spark, ix, spark.read.parquet(bpq))
+        rows = []
+        for chunk in (corpus, batch):
+            rows += sorted(chunk[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
+        oix = build_oracle_index(rows, sort=False)
+
+        eng = SearchEngine(spark, ix)
+        qgen = QueryGen(ix, np.random.default_rng([seed, 1]))
+        draws = {shape: [qgen.make(shape) for _ in range(5)] for shape in SHAPES}
+        differ = []
+        for reqs in draws.values():  # warm, and checked against the oracle
+            for shape, q, k, mode in reqs:
+                got = [r.doc_id for r in eng.search(q, k=k, mode=mode).collect()]
+                if got != [d for d, _ in oracle_search(oix, q, k=k, mode=mode)]:
+                    differ.append((shape, q, mode))
+        times = {shape: [] for shape in SHAPES}
+        jobs = {shape: [] for shape in SHAPES}
+        for p in range(3):
+            for shape, reqs in draws.items():
+                for i, (_s, q, k, mode) in enumerate(reqs):
+                    group = f"{shape}-{p}-{i}"
+                    sc.setJobGroup(group, group)
+                    t0 = time.perf_counter()
+                    eng.search(q, k=k, mode=mode).collect()
+                    times[shape].append(time.perf_counter() - t0)
+                    jobs[shape].append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        sc.setJobGroup(None, None)
+        print(
+            json.dumps(
+                {
+                    "mode": "continue-append",
+                    "seed": seed,
+                    "n_rows": eng.n_rows,
+                    "continued_convs": int(convs.size),
+                    "search_ms_p50": {s: round(1e3 * float(np.median(v)), 3) for s, v in times.items()},
+                    "spark_jobs_per_search": {s: round(float(np.mean(v)), 2) for s, v in jobs.items()},
+                    "differ": differ,
+                }
+            )
+        )
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "dist-queries"
     if mode == "dist-queries":
@@ -343,5 +434,7 @@ if __name__ == "__main__":
         local_decode(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
     elif mode == "footprint":
         footprint(int(sys.argv[2]) if len(sys.argv) > 2 else 41)
+    elif mode == "continue-append":
+        continue_append(int(sys.argv[2]) if len(sys.argv) > 2 else 41)
     else:
         raise SystemExit(f"unknown mode {mode!r}")

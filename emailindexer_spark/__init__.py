@@ -24,6 +24,6 @@ Pipeline (SURVEY.md §2.10 / §3):
   dedup, EmailIndexSearcher.java:58-71).
 """
 
-__version__ = "0.5.0"
+__version__ = "0.7.0"
 
 from emailindexer_spark.config import get_spark  # noqa: F401

@@ -9,9 +9,9 @@ and must be invariant to partitioning (FIXTURES.md §6.2).
 
 The staging kernel (plans/builder._stage_on_driver) ranks its rows by a
 stable (conv_id, turn_idx) sort from a base docID; a sharded build
-takes each shard's base from ``conv_offsets`` over the per-conversation
-counts of the whole input, so the shards' ranks join into the global
-one.
+takes each shard's base from :func:`conv_offsets`, a prefix sum over the
+per-conversation counts of the whole input, so the shards' ranks join
+into the global one.
 """
 
 from __future__ import annotations
@@ -38,11 +38,10 @@ def validate_transcripts(df: DataFrame) -> None:
 
 
 def conv_offsets(conv_counts: pd.DataFrame) -> dict:
-    """Driver-side prefix sum over per-conversation ``(conv_id, n_turns,
-    _sparse)`` rows (``_sparse`` = 1 when the conversation's turn_idx
-    is not dense from 0) → ``conv_ids`` (sorted object array),
-    ``offsets`` / ``n_turns`` (int64: a conversation's doc ids start at
-    its offset), ``dense`` and ``total``."""
+    """Driver-side prefix sum over per-conversation ``(conv_id, n_turns)``
+    rows → ``conv_ids`` (sorted object array), ``offsets`` / ``n_turns``
+    (int64: a conversation's doc ids start at its offset) and
+    ``total``."""
     if conv_counts["conv_id"].isna().any():
         # a null conv_id has no place in the conversation order
         raise ValueError("null conv_id in transcripts: every row needs a conv_id")
@@ -54,6 +53,5 @@ def conv_offsets(conv_counts: pd.DataFrame) -> dict:
         "conv_ids": head["conv_id"].to_numpy(),
         "offsets": np.concatenate(([0], np.cumsum(n[:-1]))) if n.size else n,
         "n_turns": n,
-        "dense": not head["_sparse"].fillna(0).astype(np.int64).any(),
         "total": int(n.sum()),
     }

@@ -11,13 +11,14 @@ tables, written with pyarrow as zstd Parquet (``write_index_table``,
 the one writer of every index and staging file):
 
   doc_index      stored fields plus dl/norm per field, one row per turn:
-                 the one copy of the norms, which queries gather by doc
-  doc_stats      skinny (doc_id, conv_id, turn_idx, dl, norm) projection
+                 the one copy of the norms and of the doc → (conv_id,
+                 turn_idx) map, which queries gather by doc
+  doc_stats      skinny (doc_id, conv_id, turn_idx, dl, norm) projection,
+                 which no query reads
   postings       one row per (term, split) of doc and tf blocks, one
                  (term, split_id)-sorted file per part = md5(term) % P
                  (query-side pruning)
   term_dict      (term, part, df) sorted by term (prefix expansion)
-  conv_offsets   (conv_id, conv_offset, n_turns) of a dense build
   build_metrics  per-part lineage (FIXTURES.md §5)
 
 Input size decides only WHERE the kernel runs:
@@ -104,26 +105,6 @@ def write_index_table(t: pa.Table, path: str, row_group_size: int | None = None)
     codec from each column chunk, so files of any codec mix in one
     index."""
     papq.write_table(t, path, compression="zstd", row_group_size=row_group_size)
-
-
-def write_conv_offsets(
-    dest: str, conv_ids: np.ndarray, offsets: np.ndarray, n_turns: np.ndarray
-) -> None:
-    """Write one conv_offsets piece (conv_id, conv_offset, n_turns) with
-    pyarrow.  tmp + atomic rename: a crash mid-write must never leave a
-    truncated parquet at the published name."""
-    tmp = dest + ".tmp"
-    write_index_table(
-        pa.table(
-            {
-                "conv_id": pa.array(list(conv_ids), type=pa.string()),
-                "conv_offset": np.asarray(offsets, dtype=np.int64),
-                "n_turns": np.asarray(n_turns, dtype=np.int64),
-            }
-        ),
-        tmp,
-    )
-    os.replace(tmp, dest)
 
 
 class BareParquet(NamedTuple):
@@ -452,7 +433,7 @@ def _encode_chunk_table(
 
 
 #: the tables of an index directory
-INDEX_TABLES = ("doc_index", "doc_stats", "postings", "term_dict", "conv_offsets", "build_metrics")
+INDEX_TABLES = ("doc_index", "doc_stats", "postings", "term_dict", "build_metrics")
 
 #: builds and appends of at most this many turns are staged on the
 #: driver (_stage_on_driver), larger ones in shards of at most this
@@ -477,7 +458,6 @@ class Staged(NamedTuple):
 
     n_rows: int
     totals: dict  # {field: (docs with a token, tokens)}
-    offsets: dict  # operators/docid.conv_offsets of the rows
     term_parts: pd.DataFrame  # the postings per (term, part): see _commit_build_metrics
     seconds: dict  # {table: seconds spent staging it, summed over shards}
 
@@ -530,19 +510,9 @@ def _stage_on_driver(
         )
     )
     n = rows.num_rows
-    # per-conversation (count, density); a null turn_idx (as -1) makes
-    # its conversation sparse
-    g = pd.DataFrame(
-        {
-            "conv_id": rows.column("conv_id").to_numpy(zero_copy_only=False),
-            "t": pc.fill_null(rows.column("turn_idx"), -1).to_numpy(),
-        }
-    ).groupby("conv_id", sort=False, dropna=False)["t"]
-    n_turns = g.size()
-    sparse = (g.max() != n_turns - 1) | (g.min() != 0) | (g.nunique() != n_turns)
-    oo = conv_offsets(
-        pd.DataFrame({"n_turns": n_turns, "_sparse": sparse.astype(np.int64)}).reset_index()
-    )
+    if rows.column("conv_id").null_count:
+        # a null conv_id has no place in the conversation order
+        raise ValueError("null conv_id in transcripts: every row needs a conv_id")
     doc_id = base + np.arange(n, dtype=np.int64)
     texts = {f: rows.column(f).to_pandas() for f in fields}
     stats, totals = [], {}
@@ -613,7 +583,7 @@ def _stage_on_driver(
         .reset_index()
     )
     lap("term_dict")
-    return Staged(n, totals, oo, term_parts, seconds)
+    return Staged(n, totals, term_parts, seconds)
 
 
 class Shard(NamedTuple):
@@ -687,12 +657,12 @@ def _shard_starts(rows: np.ndarray, nbytes: np.ndarray, parallelism: int) -> np.
 def _plan_shards(
     sizes: pd.DataFrame, parallelism: int, base: int, split_id: int, split_target: int | None
 ) -> tuple[dict, list[Shard]]:
-    """The conv_offsets (operators/docid.conv_offsets, ``dense`` unset)
-    and the shards of _conv_sizes' conversations.  A shard's split ids
+    """The conversations' offsets (operators/docid.conv_offsets) and the
+    shards of _conv_sizes' conversations.  A shard's split ids
     start past every split id an earlier shard can use: ceil(rows /
     split_target) per shard with heavy splits, one without."""
     sizes = sizes.sort_values("conv_id", kind="stable", ignore_index=True)
-    oo = conv_offsets(sizes.assign(_sparse=0))  # raises on a null conv_id
+    oo = conv_offsets(sizes)  # raises on a null conv_id
     starts = _shard_starts(oo["n_turns"], sizes["nbytes"].to_numpy(np.int64), parallelism)
     srows = np.diff(np.append(oo["offsets"][starts], oo["total"]))
     width = -(-srows // split_target) if split_target else np.ones_like(srows)
@@ -759,8 +729,7 @@ def _stage_shard(shards: list[Shard], staging: str, marks: str, sanitize: bool, 
         dest = os.path.join(marks, f"{s:05d}")
         write_index_table(pa.Table.from_pandas(st.term_parts, preserve_index=False), dest + ".parquet")
         with open(dest + ".tmp", "w") as f:
-            mark = {"shard": list(sh), "totals": st.totals, "seconds": st.seconds}
-            json.dump({**mark, "dense": bool(st.offsets["dense"])}, f)
+            json.dump({"shard": list(sh), "totals": st.totals, "seconds": st.seconds}, f)
         os.replace(dest + ".tmp", dest + ".json")
         return iter(())
 
@@ -806,7 +775,7 @@ def _stage_sharded(
     marker under ``marks``, where an earlier call's markers of the same
     plan spare their shards.  The markers are dropped once read, before
     the merged postings replace the shards'.  Returns the merged
-    Staged: conv_offsets from the plan, dense when every shard is."""
+    Staged."""
     t0 = time.perf_counter()
     heavy_rule = kernel.get("heavy_rule")
     oo, shards = _plan_shards(
@@ -844,7 +813,6 @@ def _stage_sharded(
     if len(done) != len(shards):
         raise RuntimeError(f"{len(shards) - len(done)} of {len(shards)} shards were not staged")
     marked = [done[s] for s in range(len(shards))]
-    oo["dense"] = all(m["dense"] for m in marked)
     term_parts = (
         pd.concat(
             [
@@ -864,7 +832,7 @@ def _stage_sharded(
     if os.path.isdir(merged):
         os.rename(merged, os.path.join(staging, "postings"))
     totals = {f: tuple(sum(m["totals"][f][i] for m in marked) for i in (0, 1)) for f in kernel["fields"]}
-    return Staged(oo["total"], totals, oo, term_parts, seconds)
+    return Staged(oo["total"], totals, term_parts, seconds)
 
 
 def _sanitized(rows: pa.Table) -> pa.Table:
@@ -1069,8 +1037,7 @@ class IndexBuilder:
     def _commit(self, man: Manifest, st: Staged, path: str, **doc_index_info) -> None:
         """Record a staged build in the manifest: corpus stats, every
         stage, and the tables the driver writes from the staging's
-        summaries — term_dict, conv_offsets (dense builds) and
-        build_metrics."""
+        summaries — term_dict and build_metrics."""
         f0 = self.fields[0]
         man.set_stats(
             n_docs=st.totals[f0][0],
@@ -1085,13 +1052,6 @@ class IndexBuilder:
         man.commit_stage(
             "doc_index", seconds=st.seconds["doc_index"], path=path, **doc_index_info
         )
-        if st.offsets["dense"]:  # conv_offsets: doc_id → conversation, no join
-            t0, oo, cdir = time.perf_counter(), st.offsets, man.stage_path("conv_offsets")
-            os.makedirs(cdir, exist_ok=True)
-            dest = os.path.join(cdir, "part-00000.parquet")
-            write_conv_offsets(dest, oo["conv_ids"], oo["offsets"], oo["n_turns"])
-            seconds = round(time.perf_counter() - t0, 3)
-            man.commit_stage("conv_offsets", n_convs=len(oo["conv_ids"]), seconds=seconds, path=path)
         if len(st.term_parts):
             _write_term_dict(man.stage_path("term_dict"), st.term_parts)
         for t in ("doc_stats", "postings", "term_dict"):

@@ -16,7 +16,10 @@ from Arrow buffers for both tiers, a whole table at a time, and fills
 each posting's norm with one gather per field from the norms of its
 docs (:class:`_DocNorms`: read whole once per engine for the resident
 tier, and for the docs a scan decoded elsewhere, shard tasks included),
-so a term's score stream is a pure map over its decoded postings.
+so a term's score stream is a pure map over its decoded postings.  The
+same read gives each doc's conversation, as a code into the conv_id
+dictionary of the docs read, and its ``turn_idx``: ``doc_index`` is the
+one doc → conversation map, and conversation collapse groups by code.
 
 The evaluator runs in one of two places:
 
@@ -31,8 +34,10 @@ The evaluator runs in one of two places:
   ONE ``spark.range(n, numPartitions=n).mapInArrow`` stage, one task
   per doc-range shard.  Each task reads its terms' rows with pyarrow
   from the part files the engine took, decodes only the blocks that
-  overlap its range, and the (doc_id, score) stream goes through
-  :meth:`SearchEngine._finish` (top-k, conversation collapse, text).
+  overlap its range, keeps its top k (of its conversations' best hits
+  in conversations mode), and the (doc_id, score, conv_id, turn_idx)
+  stream goes through :meth:`SearchEngine._finish` (top-k,
+  conversation collapse, text).
 
 Shards partition the doc space and idf/avgdl come from the driver, so
 both tiers rank alike, exhaustively, as the reference's own flagship
@@ -86,7 +91,7 @@ from emailindexer_spark.plans.parser import (
 from emailindexer_spark.plans.results import LocalResult
 from emailindexer_spark.sources.checkpoint import Manifest
 
-SCORE_SCHEMA = "doc_id long, score double"
+HIT_SCHEMA = "doc_id long, score double, conv_id string, turn_idx int"
 RESULT_COLS = ["rank", "doc_id", "conv_id", "turn_idx", "score"]
 
 
@@ -420,15 +425,26 @@ _LEVEL_COLS = (_DOCS_COLS, _SCORE_COLS, _SCORE_COLS + ("b_pos",))
 
 
 class _DocNorms(NamedTuple):
-    """The norm bytes of some docs per field: ``cols[i]`` is doc_index's
-    ``norm`` column for ``fields[0]`` (bare keys) and ``norm_{fields[i]}``
-    for the other fields (``field:term`` keys); row j holds doc
-    ``lo + j``, or with ``ids`` (ascending) doc ``ids[j]``."""
+    """Per-doc columns of some docs: ``cols[i]`` is doc_index's ``norm``
+    column for ``fields[0]`` (bare keys) and ``norm_{fields[i]}`` for
+    the other fields (``field:term`` keys); ``code`` is each doc's
+    conversation as an index into ``convs`` (the conv_ids of the docs
+    read, numbered in order of each one's first doc) and ``turn`` its
+    turn_idx (int32, or objects with None where a turn_idx is null).
+    Row j holds doc ``lo + j``, or with ``ids`` (ascending) doc
+    ``ids[j]``."""
 
     lo: int
     fields: tuple[str, ...]
     cols: tuple[np.ndarray, ...]
     ids: np.ndarray | None = None
+    code: np.ndarray | None = None
+    convs: np.ndarray | None = None
+    turn: np.ndarray | None = None
+
+    def rows(self, docs: np.ndarray) -> np.ndarray:
+        """The row of each of ``docs``."""
+        return docs - self.lo if self.ids is None else np.searchsorted(self.ids, docs)
 
     def gather(self, term_col, docs: np.ndarray, counts: np.ndarray) -> np.ndarray:
         """The norm byte of each posting ``docs`` of a decoded table whose
@@ -438,7 +454,7 @@ class _DocNorms(NamedTuple):
         hands it out."""
         if not self.cols[0].size:
             return np.zeros(docs.size, np.uint8)
-        rows = docs - self.lo if self.ids is None else np.searchsorted(self.ids, docs)
+        rows = self.rows(docs)
         if len(self.cols) == 1:
             return np.take(self.cols[0], rows, mode="clip")
         import pyarrow.compute as pc
@@ -536,12 +552,15 @@ def _read_doc_norms(
     """The :class:`_DocNorms` of the docs [lo, hi), or with ``docs`` (any
     order, repeats allowed) of those of them inside [lo, hi) only, from
     the doc_index files of ``groups`` (:func:`_doc_row_groups`):
-    ``doc_id`` and the norm columns (no ``text``) of the row groups that
-    can hold them (:func:`_doc_rows`).  ``docs`` that number at least
-    an eighth of their span are read as that whole span, gathered by
-    offset, sparser ones as distinct ids, gathered by searchsorted:
+    ``doc_id``, the norm columns, ``conv_id`` and ``turn_idx`` (no
+    ``text``) of the row groups that can hold them (:func:`_doc_rows`),
+    conv_id dictionary-encoded in doc order.  ``docs`` that number at
+    least an eighth of their span are read as that whole span, gathered
+    by offset, sparser ones as distinct ids, gathered by searchsorted:
     either way the arrays follow the count of ``docs``, not the range.
     Raises ValueError unless the files hold each doc asked for once."""
+    import pyarrow.compute as pc
+
     cols = ["norm", *(f"norm_{f}" for f in fields[1:])]
     if docs is not None:
         docs = docs[(docs >= lo) & (docs < hi)]
@@ -550,7 +569,7 @@ def _read_doc_norms(
         else:
             docs = np.unique(docs)
     n = hi - lo if docs is None else docs.size
-    t = _doc_rows(groups, ["doc_id", *cols], lo, hi, docs) if n else None
+    t = _doc_rows(groups, ["doc_id", *cols, "conv_id", "turn_idx"], lo, hi, docs) if n else None
     ids = np.empty(0, np.int64) if t is None else t.column("doc_id").to_numpy()
     at = ids - lo if docs is None else np.searchsorted(docs, ids)
     seen = np.zeros(n, bool)
@@ -564,7 +583,18 @@ def _read_doc_norms(
             a[at] = t.column(c).to_numpy()
         a.flags.writeable = False
         out.append(a)
-    return _DocNorms(lo, tuple(fields), tuple(out), docs)
+    code, convs, turn = np.empty(0, np.int32), np.empty(0, object), np.empty(0, np.int32)
+    if n:
+        inv = np.empty(n, np.int64)
+        inv[at] = np.arange(n)  # doc order
+        enc = pc.dictionary_encode(t.column("conv_id").take(inv).combine_chunks())
+        code = enc.indices.to_numpy()
+        convs = enc.dictionary.to_numpy(zero_copy_only=False)
+        tcol = t.column("turn_idx").take(inv)
+        turn = np.array(tcol.to_pylist(), object) if tcol.null_count else tcol.to_numpy().astype(np.int32)
+    for a in (code, convs, turn):
+        a.flags.writeable = False
+    return _DocNorms(lo, tuple(fields), tuple(out), docs, code, convs, turn)
 
 
 class _Decoded(NamedTuple):
@@ -962,51 +992,90 @@ def _scan_files(
 
 
 def _scan_postings(
-    parts: list[tuple[list[str], list[str]]], level: int, lo: int, hi: int, norms_of
-) -> dict[str, _Postings]:
-    """{term: _Postings in [lo, hi)} of each (postings files, terms) of
-    ``parts``: a :func:`_scan_files` and :func:`_decode_table` per part,
-    then, from level 1 on, ONE ``norms_of(docs)`` call for the docs
-    decoded (a :class:`_DocNorms` holding them), and none when no row
-    matched."""
+    parts: list[tuple[list[str], list[str]]], level: int, lo: int, hi: int, docs_of
+) -> tuple[dict[str, _Postings], _DocNorms | None]:
+    """({term: _Postings in [lo, hi)}, the :class:`_DocNorms` of the docs
+    decoded) of each (postings files, terms) of ``parts``: a
+    :func:`_scan_files` and :func:`_decode_table` per part, then ONE
+    ``docs_of(docs)`` call for the docs decoded (a :class:`_DocNorms`
+    holding them, whose norms are gathered from level 1 on), and none
+    when no row matched."""
     decs = []
     for files, terms in parts:
         t = _scan_files(files, terms, _LEVEL_COLS[level], lo, hi)
         if t is not None:
             decs.append((_decode_table(t, level, lo, hi), terms))
-    if level and decs:
-        norms = norms_of(np.concatenate([d.docs for d, _ in decs]))
-        decs = [(d.with_norms(norms), terms) for d, terms in decs]
+    if not decs:
+        return {}, None
+    dn = docs_of(np.concatenate([d.docs for d, _ in decs]))
     out = {}
     for d, terms in decs:
-        out.update(d.postings(terms, lo, hi))
-    return out
+        out.update((d.with_norms(dn) if level else d).postings(terms, lo, hi))
+    return out, dn
 
 
 def _conv_winners(
-    docs: np.ndarray, scores: np.ndarray, offs: np.ndarray
+    docs: np.ndarray, scores: np.ndarray, codes: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Best hit per conversation — max score, then smallest doc — as
-    (docs, scores, conversation index), in doc order; ``offs`` holds the
-    conversations' first docs (sorted, from 0).  Conversations are
-    CONTIGUOUS doc ranges, so grouping is one searchsorted of the offset
-    array and a repeat, and the winner a reduceat group max with a
-    first-equal-per-group pick: no sort of the candidates."""
+    (docs, scores, codes) in doc order, of candidates with their
+    conversation ``codes`` (:class:`_DocNorms`: numbered in order of
+    each conversation's first doc).  A conversation is one doc range
+    unless an append continued it, so over doc-sorted candidates the
+    groups are the runs of equal codes: each run's winner is a reduceat
+    group max and a first-equal pick, with no sort of the candidates.
+    Only when a code may recur (the runs' codes do not rise) do the run
+    winners pay a lexsort, which keeps one per code."""
     if not bool((docs[1:] > docs[:-1]).all()):
-        o0 = np.argsort(docs, kind="stable")
-        docs, scores = docs[o0], scores[o0]
-    b = np.searchsorted(docs, offs)
-    if b[0] != 0:
-        raise ValueError("candidate doc id below the first conversation")
-    counts = np.diff(np.append(b, docs.size))
-    gids = np.repeat(np.arange(offs.size, dtype=np.int64), counts)
-    starts = b[counts > 0]
+        o = np.argsort(docs, kind="stable")
+        docs, scores, codes = docs[o], scores[o], codes[o]
+    if not docs.size:
+        return docs, scores, codes
+    starts = np.flatnonzero(np.concatenate(([True], codes[1:] != codes[:-1])))
     gmax = np.maximum.reduceat(scores, starts)
-    seg = np.diff(np.append(starts, docs.size))
-    pos = np.flatnonzero(scores == np.repeat(gmax, seg))
-    g = gids[pos]
-    first = np.concatenate(([True], g[1:] != g[:-1]))
-    return docs[pos[first]], scores[pos[first]], g[first]
+    pos = np.flatnonzero(scores == np.repeat(gmax, np.diff(np.append(starts, docs.size))))
+    g = np.searchsorted(starts, pos, "right")
+    w = pos[np.concatenate(([True], g[1:] != g[:-1]))]
+    wc = codes[w]
+    if not bool((wc[1:] > wc[:-1]).all()):
+        o = np.lexsort((docs[w], -scores[w], wc))
+        w = w[np.sort(o[np.concatenate(([True], wc[o][1:] != wc[o][:-1]))])]
+    return docs[w], scores[w], codes[w]
+
+
+def _hits(
+    docs: np.ndarray, scores: np.ndarray, k: int | None, collapse: bool, doc_cols
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(docs, scores, conv_ids, turn_idx) of the top ``k`` (all when
+    None) by (score desc, doc asc) of candidates ``docs``, of their
+    conversations' best hits with ``collapse`` (:func:`_conv_winners`);
+    ``doc_cols(docs)`` gives a :class:`_DocNorms` holding the docs it
+    is handed, whose conversation and turn each hit takes.
+
+    Without ``collapse`` the candidates are first pruned to the exact
+    top-k SUPERSET (k-th score threshold via np.partition, keeping
+    every tie at the boundary), so the sort and the lookups touch ~k
+    rows instead of every candidate: measured 0.08 s off a
+    555k-candidate query.  With it only the winners, one row per
+    conversation hit, pay the (score desc, doc asc) lexsort."""
+    if not collapse and k is not None and 0 < k < docs.size and docs.size > max(4 * k, 4096):
+        kth = np.partition(scores, docs.size - k)[docs.size - k]
+        if (scores == kth).all():
+            # constant-score: winners are just the k smallest docs
+            sel = np.argpartition(docs, k - 1)[:k]
+            docs, scores = docs[sel], scores[sel]
+        else:
+            m = scores >= kth  # superset: all boundary ties kept
+            docs, scores = docs[m], scores[m]
+    if not docs.size:
+        return docs, scores, np.empty(0, object), np.empty(0, np.int32)
+    dn = doc_cols(docs)
+    if collapse:
+        docs, scores, _ = _conv_winners(docs, scores, dn.code[dn.rows(docs)])
+    order = np.lexsort((docs, -scores))[:k]
+    docs, scores = docs[order], scores[order]
+    rows = dn.rows(docs)
+    return docs, scores, dn.convs[dn.code[rows]], dn.turn[rows]
 
 
 def _shard_scorer(plan: SimpleNamespace):
@@ -1014,15 +1083,13 @@ def _shard_scorer(plan: SimpleNamespace):
     shard i scores the docs [plan.bounds[i], plan.bounds[i + 1]) with
     :class:`QueryEvaluator`, over its terms' rows read with pyarrow from
     ``plan.files`` (per part; terms and the doc range prune row groups
-    and rows) and decoded by :func:`_scan_postings`, with the norms of
-    the docs it decoded (:func:`_read_doc_norms` from
-    ``plan.doc_groups``: only the doc_index row groups that hold them,
-    none when nothing matched) when ``plan.level`` needs them, and emits
-    (doc_id, score).  With ``plan.offs`` (the
-    conversations' first docs; the bounds then fall on conversation
-    edges) it keeps each conversation's best hit, and with ``plan.k``
-    its top k by (score desc, doc_id asc): the global winners lie
-    within the shards'."""
+    and rows) and decoded by :func:`_scan_postings`, with the norms,
+    conversations and turns of the docs it decoded
+    (:func:`_read_doc_norms` from ``plan.doc_groups``: only the
+    doc_index row groups that hold them, none when nothing matched),
+    and emits (doc_id, score, conv_id, turn_idx) of its top ``plan.k``
+    (:func:`_hits`; of its conversations' best hits with
+    ``plan.collapse``): the global winners lie within the shards'."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         doc_text = None if plan.positions else partial(_doc_texts, plan.doc_groups)
@@ -1030,20 +1097,21 @@ def _shard_scorer(plan: SimpleNamespace):
             for i in b.column(0).to_pylist():
                 lo, hi = int(plan.bounds[i]), int(plan.bounds[i + 1])
                 parts = [(plan.files[part], terms) for part, terms in plan.terms.items()]
-                norms_of = partial(_read_doc_norms, plan.doc_groups, plan.fields, lo, hi)
-                post = _scan_postings(parts, plan.level, lo, hi, norms_of)
+                docs_of = partial(_read_doc_norms, plan.doc_groups, plan.fields, lo, hi)
+                post, dn = _scan_postings(parts, plan.level, lo, hi, docs_of)
                 docs, scores = QueryEvaluator(
                     post, plan.levels, plan.idf, plan.avgdl, plan.positions,
                     plan.order_tolerant, doc_text, plan.simple,
                 )(plan.ast)
-                if plan.offs is not None and docs.size:
-                    docs, scores, _ = _conv_winners(docs, scores, plan.offs)
-                if plan.k is not None and docs.size > plan.k:
-                    top = np.lexsort((docs, -scores))[: plan.k]
-                    docs, scores = docs[top], scores[top]
+                docs, scores, convs, turns = _hits(docs, scores, plan.k, plan.collapse, lambda _d: dn)
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(docs, pa.int64()), pa.array(scores, pa.float64())],
-                    names=["doc_id", "score"],
+                    [
+                        pa.array(docs, pa.int64()),
+                        pa.array(scores, pa.float64()),
+                        pa.array(convs, pa.string()),
+                        pa.array(turns, pa.int32()),
+                    ],
+                    names=["doc_id", "score", "conv_id", "turn_idx"],
                 )
 
     return run
@@ -1138,16 +1206,6 @@ class SearchEngine:
         self._resident_lock = threading.Lock()
         self._norms: _DocNorms | None = None
         self._postings_total: int | None = None
-        # conv_offsets artifact (dense-docid builds and their appends of
-        # new conversations): (conv_id array, sorted conv_offset array)
-        # maps doc_id → (conv_id, turn_idx) with a searchsorted — no
-        # doc_stats join per query.  ``_off_bc.value`` is read on the
-        # driver and shipped to shard tasks; the distributed tier's
-        # finish broadcasts it on first use (_off_broadcast), so an open
-        # makes no JVM call
-        self._off_bc = None
-        self._off_spark = None
-        self._load_conv_offsets()
 
     def _at_open(self, files: list[str]) -> list[str]:
         """``files`` minus those of appends committed after the open
@@ -1170,65 +1228,6 @@ class SearchEngine:
         if not files:
             return reader.parquet(path)
         return reader.option("basePath", path).parquet(*files)
-
-    def _load_conv_offsets(self) -> None:
-        """Load the optional conv_offsets fast-path artifact: the build's
-        piece plus one piece per append of new conversations
-        (streaming/ingest.py), concatenated and ordered by conv_offset.
-
-        STRICTLY best-effort: the artifact only ever replaces the
-        doc_stats join, so any doubt — stage not committed in the
-        manifest, unreadable file (e.g. a crash left a truncated
-        parquet), a conv_id in two pieces, offsets that don't tile
-        [0, n_rows) contiguously — falls back to the join path instead
-        of failing the engine open."""
-        import glob
-
-        if not self.man.is_complete("conv_offsets"):
-            return
-        co_dir = os.path.join(self.index_dir, "conv_offsets")
-        files = self._at_open(glob.glob(os.path.join(co_dir, "*.parquet")))
-        if not files:
-            return
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as papq
-
-        try:
-            t = pa.concat_tables([papq.read_table(f) for f in files])
-            # piece order on disk is not doc order (``ing…`` names sort
-            # before the build's ``part-…``): order rows by offset
-            t = t.take(pc.sort_indices(t.column("conv_offset")))
-            offs = t.column("conv_offset").to_numpy().astype(np.int64)
-            n_turns = t.column("n_turns").to_numpy().astype(np.int64)
-            unique = pc.count_distinct(t.column("conv_id")).as_py() == t.num_rows
-        except Exception:
-            return  # unreadable/corrupt artifact → doc_stats join path
-        # stale-artifact guard: the offsets must tile [0, n_rows) with
-        # FULL contiguity and give each conversation ONE range (appends
-        # that break either drop the artifact, but reject any mismatch
-        # regardless — a wrong offset table would silently mislabel
-        # every hit)
-        if (
-            offs.size == 0
-            or not unique
-            or int(offs[0]) != 0
-            or int(offs[-1] + n_turns[-1]) != self.n_rows
-            or not bool((offs[1:] == offs[:-1] + n_turns[:-1]).all())
-        ):
-            return
-        conv_ids = np.asarray(t.column("conv_id").to_pylist(), dtype=object)
-        self._off_bc = SimpleNamespace(value=(conv_ids, offs))
-
-    def _off_broadcast(self):
-        """``_off_bc`` as a Spark broadcast, made once on the first
-        distributed use; None when the index has no usable offsets."""
-        if self._off_bc is None:
-            return None
-        with self._vocab_lock:
-            if self._off_spark is None:
-                self._off_spark = self.spark.sparkContext.broadcast(self._off_bc.value)
-        return self._off_spark
 
     def _driver_vocab(self) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
         """(sorted terms, df, part) arrays, or None when the vocabulary
@@ -1351,10 +1350,6 @@ class SearchEngine:
         return self._read_table("postings")
 
     @cached_property
-    def doc_stats(self) -> DataFrame:
-        return self._read_table("doc_stats")
-
-    @cached_property
     def term_dict(self) -> DataFrame | None:
         """The sorted term dictionary (term, part, df): prefix expansion
         and df lookups scan the vocabulary, never the postings payloads.
@@ -1377,13 +1372,15 @@ class SearchEngine:
         return _doc_row_groups(self._at_open(table_files(os.path.join(self.index_dir, "doc_index"))))
 
     def _doc_norms(self) -> _DocNorms:
-        """The norms of the open's docs [0, n_rows), read on the first
-        local decode that scores (:func:`_read_doc_norms`) and kept: one
-        byte per doc and field.  The resident tier reads them (its
-        postings cap bounds the docs with a token), and so does the
-        over-cap scan while n_rows <= LOCAL_MAX_NORM_DOCS; above that a
-        scan reads the norms of the docs it decoded.  Double-checked
-        under a lock, like _driver_vocab (whose lock it shares)."""
+        """The norms, conversation codes and turns of the open's docs
+        [0, n_rows), read on the first local decode (:func:`_read_doc_norms`)
+        and kept: ~9 bytes per doc plus one per field, and the conv_id
+        dictionary.  The resident tier reads them (its postings cap
+        bounds the docs with a token), and so does the over-cap scan
+        while n_rows <= LOCAL_MAX_NORM_DOCS; above that a scan reads
+        those of the docs it decoded (:meth:`_doc_cols`).
+        Double-checked under a lock, like _driver_vocab (whose lock it
+        shares)."""
         got = self._norms
         if got is None:
             with self._vocab_lock:
@@ -1392,6 +1389,14 @@ class SearchEngine:
                     got = _read_doc_norms(self._doc_groups, self.fields, 0, self.n_rows)
                     self._norms = got
         return got
+
+    def _doc_cols(self, docs: np.ndarray) -> _DocNorms:
+        """A :class:`_DocNorms` holding ``docs``: the kept
+        :meth:`_doc_norms` when read or while n_rows <=
+        LOCAL_MAX_NORM_DOCS, else those of ``docs`` only, read now."""
+        if self._norms is not None or self.n_rows <= self.LOCAL_MAX_NORM_DOCS:
+            return self._doc_norms()
+        return _read_doc_norms(self._doc_groups, self.fields, 0, self.n_rows, docs)
 
     # ------------------------------------------------------------ postings access
 
@@ -1431,9 +1436,6 @@ class SearchEngine:
                 for t in missing:
                     self._df_cache[t] = found.get(t)
         return {t: v for t in terms if (v := self._df_cache.get(t)) is not None}
-
-    def _empty_scores(self) -> DataFrame:
-        return self.spark.createDataFrame([], SCORE_SCHEMA)
 
     # ------------------------------------------------------------ field routing
 
@@ -1785,9 +1787,9 @@ class SearchEngine:
         each query runs a term-filtered pyarrow scan of the part's files
         (row groups pruned by the sorted term column's min/max) and
         decodes the rows it finds with the same kernel
-        (:func:`_scan_postings`), with every doc's norms while the open
-        holds at most LOCAL_MAX_NORM_DOCS docs, else with those of the
-        docs decoded, read per query.  Either way each
+        (:func:`_scan_postings`), with :meth:`_doc_cols`' norms: every
+        doc's while the open holds at most LOCAL_MAX_NORM_DOCS docs, else
+        those of the docs decoded, read per query.  Either way each
         part's file list is taken on its first touch and kept, so both
         tiers see one fixed index state."""
         by_part: dict[int, list[str]] = {}
@@ -1795,11 +1797,7 @@ class SearchEngine:
             by_part.setdefault(term_part_py(t, self.num_parts), []).append(t)
         if not self._resident_ok():
             parts = [(self._part_files(part), ts) for part, ts in sorted(by_part.items())]
-            if self.n_rows <= self.LOCAL_MAX_NORM_DOCS:
-                norms_of = lambda _docs: self._doc_norms()  # noqa: E731
-            else:
-                norms_of = partial(_read_doc_norms, self._doc_groups, self.fields, 0, self.n_rows)
-            return _scan_postings(parts, level, 0, self.n_rows, norms_of)
+            return _scan_postings(parts, level, 0, self.n_rows, self._doc_cols)[0]
         out: dict[str, _Postings] = {}
         for part, ts in sorted(by_part.items()):
             out.update(self._resident_part(part).postings(ts, 0, self.n_rows))
@@ -1862,20 +1860,16 @@ class SearchEngine:
     ) -> dict[str, np.ndarray] | None:
         """Evaluate the whole query on the driver: the result columns
         (see :meth:`_local_finish`), or None = take the distributed
-        tier — ``k`` above LOCAL_MAX_K, no conv_offsets or driver
-        vocabulary, more than LOCAL_MAX_POSTINGS postings in its terms
-        and expansions, a constant-score expansion wider than
-        LOCAL_MAX_EXPANSION, or k=None with more than LOCAL_MAX_K hits.
+        tier — ``k`` above LOCAL_MAX_K, no driver vocabulary, more than
+        LOCAL_MAX_POSTINGS postings in its terms and expansions, a
+        constant-score expansion wider than LOCAL_MAX_EXPANSION, k=None
+        with more than LOCAL_MAX_K hits, or a hit with a null turn_idx.
         ``cache`` shares postings across a search_many batch.  The doc
         range stops at the open's ``n_rows``: a compaction after the
-        open rewrites later appends' postings into files the open
-        cannot tell apart, and the open-time conv_offsets would
-        mislabel their docs."""
-        if (
-            (k is not None and k > self.LOCAL_MAX_K)
-            or self._off_bc is None
-            or self._driver_vocab() is None
-        ):
+        open rewrites later appends' postings into files the open cannot
+        tell apart, and the doc columns read as of the open do not hold
+        their docs."""
+        if (k is not None and k > self.LOCAL_MAX_K) or self._driver_vocab() is None:
             return None
         ast, idf_map, avgdl_map, levels, widest = self._prepare(ast)
         if (
@@ -1905,62 +1899,26 @@ class SearchEngine:
 
     def _local_finish(
         self, docs: np.ndarray, scores: np.ndarray, k: int | None, mode: str
-    ) -> dict[str, np.ndarray]:
-        """Driver-local mirror of :meth:`_finish`: (score desc, doc_id
-        asc) ordering, optional best-per-conv collapse (max-struct
-        winner = score desc then doc asc), top-k, rank, conv/turn
-        attachment via the conv_offsets searchsorted.  Returns the
-        RESULT_COLS as numpy columns of the RESULT_SCHEMA dtypes (rank
-        and turn_idx int32, doc_id int64, conv_id object, score
-        float64), which :class:`LocalResult` holds as they are.
-
-        Turns mode prunes to the exact top-k SUPERSET first (k-th score
-        threshold via np.partition, keeping every tie at the boundary),
-        so the full sort and the conv attachment touch ~k rows instead
-        of every candidate — measured 0.08 s off a 555k-candidate
-        query.  Conversation mode never sorts the full candidate set
-        either: conversations are CONTIGUOUS doc ranges and the
-        candidates arrive doc-sorted, so conv grouping is one
-        searchsorted of the (much smaller) offset array + repeat, the
-        per-conv winner (max score, tie → smallest doc) is a reduceat
-        group-max and a first-equal-per-group pick, and only the
-        winners — one row per conversation hit — pay the
-        (score desc, doc asc) lexsort.  Measured 0.19 → ~0.10 s on the
-        555k-candidate bench query; same winners by construction (the
-        old path's sort-then-first-per-conv picks exactly the max-score
-        / smallest-doc row per conv)."""
-        conv_ids, offs = self._off_bc.value
-        if offs.size == 0 or int(offs[0]) != 0:
-            # the conv grouping below labels group i with conv_ids[i];
-            # a first range not starting at doc 0 would misalign them
-            raise ValueError("conv_offsets must start at doc 0")
-        if (
-            mode != "conversations"
-            and k is not None
-            and 0 < k < docs.size
-            and docs.size > max(4 * k, 4096)
-        ):
-            kth = np.partition(scores, docs.size - k)[docs.size - k]
-            if (scores == kth).all():
-                # constant-score: winners are just the k smallest docs
-                sel = np.argpartition(docs, k - 1)[:k]
-                docs, scores = docs[sel], scores[sel]
-            else:
-                m = scores >= kth  # superset: all boundary ties kept
-                docs, scores = docs[m], scores[m]
-        if mode == "conversations" and docs.size:
-            wdocs, wscores, wgid = _conv_winners(docs, scores, offs)
-            order = np.lexsort((wdocs, -wscores))[:k]
-            docs, scores, oi = wdocs[order], wscores[order], wgid[order]
-        else:
-            order = np.lexsort((docs, -scores))
-            docs, scores = docs[order][:k], scores[order][:k]
-            oi = np.searchsorted(offs, docs, side="right") - 1
+    ) -> dict[str, np.ndarray] | None:
+        """Driver-local mirror of :meth:`_finish`: the top ``k`` by (score
+        desc, doc_id asc), of the conversations' best hits (max score,
+        then smallest doc) in conversations mode, with each hit's
+        conversation and turn from :meth:`_doc_cols` (:func:`_hits`),
+        ranked.  Returns the RESULT_COLS as numpy columns of the
+        RESULT_SCHEMA dtypes (rank and turn_idx int32, doc_id int64,
+        conv_id object, score float64), which :class:`LocalResult` holds
+        as they are; None (take the distributed tier) when a hit's
+        turn_idx is null, which no numpy int32 column can hold."""
+        docs, scores, convs, turns = _hits(docs, scores, k, mode == "conversations", self._doc_cols)
+        if turns.dtype == object:  # the index holds a null turn_idx
+            if any(t is None for t in turns):
+                return None
+            turns = turns.astype(np.int32)
         return {
             "rank": np.arange(1, docs.size + 1, dtype=np.int32),
             "doc_id": docs,
-            "conv_id": conv_ids[oi] if docs.size else np.empty(0, object),
-            "turn_idx": (docs - offs[oi]).astype(np.int32) if docs.size else np.empty(0, np.int32),
+            "conv_id": convs,
+            "turn_idx": turns,
             "score": scores,
         }
 
@@ -1982,14 +1940,13 @@ class SearchEngine:
         """What every shard task of :func:`_shard_scorer` needs, built on
         the driver (None when the query reads no key the index holds):
         the rewritten ast with its idf/avgdl maps and key levels, the
-        shards' doc bounds over the open's ``n_rows`` docs, the keys and
-        file list of each postings part they live in (taken as of the
-        open), the decode level their keys need, and doc_index's files
-        with their row groups' doc_id ranges (norms, and text on an index
-        without positions) and the fields whose norm columns they hold.  With conv_offsets, each bound moves
-        up to the next conversation's first doc, so a conversation lies
-        in one shard, as in a sharded build's row-balanced shards (and
-        ``collapse`` has each shard keep its conversations' best hits)."""
+        shards' even doc bounds over the open's ``n_rows`` docs, the keys
+        and file list of each postings part they live in (taken as of
+        the open), the decode level their keys need, doc_index's files
+        with their row groups' doc_id ranges (norms, conversations, and
+        text on an index without positions) and the fields whose norm
+        columns they hold, the top ``k`` each shard keeps and whether it
+        keeps its conversations' best hits (``collapse``)."""
         ast, idf_map, avgdl_map, levels, _ = self._prepare(ast)
         if not levels:
             return None
@@ -1997,13 +1954,9 @@ class SearchEngine:
         for t in sorted(levels):
             terms.setdefault(term_part_py(t, self.num_parts), []).append(t)
         n = self._shard_count()
-        bounds = np.arange(n + 1) * self.n_rows // n
-        offs = None if self._off_bc is None else self._off_bc.value[1]
-        if offs is not None:
-            bounds = np.append(offs, self.n_rows)[np.searchsorted(offs, bounds)]
         return SimpleNamespace(
-            ast=ast, idf=idf_map, avgdl=avgdl_map, levels=levels, k=k,
-            n=n, bounds=bounds, offs=offs if collapse else None, terms=terms,
+            ast=ast, idf=idf_map, avgdl=avgdl_map, levels=levels, k=k, collapse=collapse,
+            n=n, bounds=np.arange(n + 1) * self.n_rows // n, terms=terms,
             files={p: self._part_files(p) for p in terms}, level=max(levels.values()),
             positions=self.positions, order_tolerant=self.slop_order_tolerant,
             simple=self.simple, doc_groups=self._doc_groups, fields=self.fields,
@@ -2012,33 +1965,31 @@ class SearchEngine:
     def _shard_scores(
         self, ast: Node, k: int | None = None, collapse: bool = False
     ) -> DataFrame:
-        """(doc_id, score) of every doc matching the field-resolved
-        ``ast`` — each shard's top ``k`` only, when given, of its
-        conversations' best hits with ``collapse`` — from ONE mapInArrow
-        stage with no exchange: one task per doc-range shard (see
-        :func:`_shard_scorer`)."""
+        """(doc_id, score, conv_id, turn_idx) of every doc matching the
+        field-resolved ``ast`` — each shard's top ``k`` only, when given,
+        of its conversations' best hits with ``collapse`` — from ONE
+        mapInArrow stage with no exchange: one task per doc-range shard
+        (see :func:`_shard_scorer`)."""
         plan = self._shard_plan(ast, k, collapse)
         if plan is None:
-            return self._empty_scores()
+            return self.spark.createDataFrame([], HIT_SCHEMA)
         return self.spark.range(plan.n, numPartitions=plan.n).mapInArrow(
-            _shard_scorer(plan), SCORE_SCHEMA
+            _shard_scorer(plan), HIT_SCHEMA
         )
 
     def _distributed(self, ast: Node, k: int | None, mode: str, with_text: bool) -> DataFrame:
-        """The distributed tier: the shards' (doc_id, score) through
-        :meth:`_finish`.  With conv_offsets the shards collapse
-        conversations themselves (each lies in one shard), so both modes
-        finish as a top-k; without, _finish's hash aggregation does."""
-        collapse = mode == "conversations" and self._off_bc is not None
-        top = k if mode != "conversations" or collapse else None
-        scores = self._shard_scores(ast, top, collapse)
-        return self._finish(scores, k, "turns" if collapse else mode, with_text)
+        """The distributed tier: the shards' hits, each shard's top k (of
+        its conversations' best hits in conversations mode), through
+        :meth:`_finish`."""
+        return self._finish(self._shard_scores(ast, k, mode == "conversations"), k, mode, with_text)
 
     # ------------------------------------------------------------ public API
 
     def score(self, query: str) -> DataFrame:
         """(doc_id, score) for every matching doc — exhaustive semantics."""
-        return self._shard_scores(self._resolve_node(parse(query, simple=self.simple)))
+        return self._shard_scores(self._resolve_node(parse(query, simple=self.simple))).select(
+            "doc_id", "score"
+        )
 
     def search(
         self,
@@ -2139,60 +2090,26 @@ class SearchEngine:
         out = reduce(lambda a, b: a.unionByName(b), parts)
         return out.select("query_id", *RESULT_COLS)
 
-    ATTACHED_SCHEMA = "doc_id long, score double, conv_id string, turn_idx int"
-
-    def _attach_stats(self, scores: DataFrame) -> DataFrame:
-        """Attach (conv_id, turn_idx) to a (doc_id, score) stream.
-
-        Dense-docid indexes (conv_offsets artifact present) map doc_id →
-        conversation MAP-SIDE with a broadcast searchsorted: doc_id =
-        conv_offset + turn_idx by construction, so no doc_stats scan and
-        no join shuffle per query.  Other indexes join doc_stats."""
-        bc = self._off_broadcast()
-        if bc is None:
-            return scores.join(
-                self.doc_stats.select("doc_id", "conv_id", "turn_idx"), "doc_id"
-            )
-
-        def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            conv_ids, offs = bc.value
-            for pdf in it:
-                d = pdf["doc_id"].to_numpy(np.int64)
-                idx = np.searchsorted(offs, d, side="right") - 1
-                out = pdf[["doc_id", "score"]].copy()
-                out["conv_id"] = conv_ids[idx]
-                out["turn_idx"] = (d - offs[idx]).astype(np.int32)
-                yield out
-
-        return scores.mapInPandas(gen, self.ATTACHED_SCHEMA)
-
     def _finish(
         self,
-        scores: DataFrame,
+        hits: DataFrame,
         k: int | None,
         mode: str,
         with_text: bool,
     ) -> DataFrame:
-        if mode != "conversations" and k is not None:
-            # turns mode: the top-k winners are fully determined by
-            # (score, doc_id), so rank FIRST (TakeOrderedAndProject,
-            # all JVM) and attach conversation metadata to the k
-            # surviving rows only — one tiny Python task instead of a
-            # per-shuffle-partition wave over every candidate
-            topk = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            attached = self._attach_stats(topk)
-            wr = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-            out = attached.withColumn("rank", F.row_number().over(wr)).select(*RESULT_COLS)
-            if with_text:
-                out = out.join(self.doc_index.select("doc_id", "text"), "doc_id", "left")
-            return out
-        enriched = self._attach_stats(scores)
+        """The shards' (doc_id, score, conv_id, turn_idx) ``hits`` →
+        RESULT_COLS: in conversations mode each conversation's best hit
+        (its shards' winners meet here when it spans shards), the top
+        ``k`` by (score desc, doc_id asc), ranked, with ``text`` joined
+        from doc_index when asked."""
         if mode == "conversations":
             # best-per-conv as a hash aggregation, NOT a window: structs
             # compare lexicographically, so max(struct(score, -doc_id,
-            # …payload)) picks the (score desc, doc_id asc) winner with
-            # map-side partial combine — no per-conv sort of all
-            # candidates, no window exchange of losers
+            # …payload)) picks the (score desc, doc_id asc) winner.  It
+            # runs in the one partition the rank window needs anyway,
+            # over at most k winners a shard (every conversation hit
+            # with k=None, which the window gathers in any case), so a
+            # search shuffles once
             best = F.max(
                 F.struct(
                     F.col("score"),
@@ -2201,20 +2118,21 @@ class SearchEngine:
                     F.col("turn_idx"),
                 )
             ).alias("_b")
-            enriched = (
-                enriched.groupBy("conv_id")
+            hits = (
+                hits.repartition(1)
+                .groupBy("conv_id")
                 .agg(best)
                 .select(
                     F.col("_b.doc_id").alias("doc_id"),
+                    F.col("_b.score").alias("score"),
                     "conv_id",
                     F.col("_b.turn_idx").alias("turn_idx"),
-                    F.col("_b.score").alias("score"),
                 )
             )
         if k is not None:
-            enriched = enriched.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            hits = hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         wr = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        out = enriched.withColumn("rank", F.row_number().over(wr)).select(*RESULT_COLS)
+        out = hits.withColumn("rank", F.row_number().over(wr)).select(*RESULT_COLS)
         if with_text:
             out = out.join(self.doc_index.select("doc_id", "text"), "doc_id", "left")
         return out

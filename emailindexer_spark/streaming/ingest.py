@@ -42,15 +42,10 @@ Corpus statistics (N, total_tokens → avgdl) are updated in the manifest
 on every commit, so scores reflect the full corpus after each batch —
 the same behavior as a Lucene commit making new segments visible.
 
-The ``conv_offsets`` table (doc_id → conversation map that keeps the
-query engine's driver-local tier engaged) is extended the same way: a
-dense batch of NEW conversations lands as contiguous doc ranges at ids
-≥ the current corpus size, so the batch adds one piece
-``(conv_id, conv_offset, n_turns)`` that rides the same staged, hidden,
-manifest-committed publish as every other table.  A batch that
-continues an already-indexed conversation or is not dense breaks the
-one-range-per-conversation layout instead: its commit drops the
-artifact and the engine falls back to the doc_stats join.
+Each appended doc's ``doc_index`` row carries its conv_id and turn_idx,
+which is all the query engine needs to collapse conversations: a batch
+may continue an indexed conversation, reuse a conv_id or skip turns,
+and every search stays on the driver-local tier.
 
 Exactly-once semantics (Structured Streaming is at-least-once into
 ``foreachBatch``): every batch's files are (1) written into a private
@@ -76,7 +71,6 @@ the batch core, usable directly for micro-batch ETL.
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import time
@@ -89,29 +83,11 @@ from emailindexer_spark.plans.builder import (
     _stage_on_driver,
     _stage_sharded,
     _write_term_dict,
-    write_conv_offsets,
 )
 from emailindexer_spark.sources.checkpoint import Manifest
 
 #: the tables an append writes
 _TABLES = tuple(t for t in INDEX_TABLES if t != "build_metrics")
-
-
-def _offsets_overlap(co_dir: str, conv_ids) -> bool:
-    """True when any of ``conv_ids`` already has a range in the published
-    conv_offsets pieces (hidden uncommitted pieces are not globbed)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as papq
-
-    files = glob.glob(os.path.join(co_dir, "*.parquet"))
-    if not files or not len(conv_ids):
-        return False
-    have = pa.concat_tables(
-        papq.read_table(f, columns=["conv_id"]) for f in files
-    ).column(0)
-    batch_ids = pa.array(list(conv_ids), pa.string())
-    return bool(pc.any(pc.is_in(have, value_set=batch_ids)).as_py())
 
 
 def _tag_for(batch_seq: int, batch_id: int | None) -> str:
@@ -271,32 +247,11 @@ def incremental_append(
         del rows
         marks = os.path.join(staging, "_shards")  # removed with staging
         st = _stage_sharded(batch, staging, marks, base, split_id, False, kernel)
-    n_batch, totals, oo = st.n_rows, st.totals, st.offsets
+    n_batch, totals = st.n_rows, st.totals
     # term_dict delta: df per (term, part) sums with the earlier rows at
     # read time
     if len(st.term_parts):
         _write_term_dict(os.path.join(staging, "term_dict"), st.term_parts)
-
-    # conv_offsets: appended turns land at the END of the doc_id space,
-    # so a dense batch of NEW conversations keeps every conversation one
-    # contiguous doc range — extend the artifact with the batch's piece
-    # (offsets from the driver-side prefix sum of either route).
-    # Anything else drops it in this append's commit; compaction never
-    # moves doc_ids, so it keeps whichever state it finds.
-    co_dir = man.stage_path("conv_offsets")
-    extend = (
-        man.is_complete("conv_offsets")
-        and bool(oo.get("dense"))
-        and not _offsets_overlap(co_dir, oo["conv_ids"])
-    )
-    if extend and len(oo["conv_ids"]):
-        os.makedirs(os.path.join(staging, "conv_offsets"))
-        write_conv_offsets(
-            os.path.join(staging, "conv_offsets", "part-00000.parquet"),
-            oo["conv_ids"],
-            oo["offsets"] + base,
-            oo["n_turns"],
-        )
 
     # publish, MANIFEST-FIRST: (1) move staged files into the live
     # tables under hidden dot-prefixed names — readers cannot see them;
@@ -312,11 +267,6 @@ def incremental_append(
     if batch_id is not None:
         committed = (committed + [int(batch_id)])[-64:]  # bounded tail
         watermark = max(watermark, int(batch_id))
-    if extend:
-        co = man.stages["conv_offsets"]
-        co["n_convs"] = int(co.get("n_convs", 0)) + len(oo["conv_ids"])
-    else:
-        man.stages.pop("conv_offsets", None)
     f0 = fields[0]
     fstats = dict(man.stats.get("field_stats", {}))
     for fld in fields:
@@ -352,10 +302,6 @@ def incremental_append(
     )
     for t in _TABLES:
         _unhide_tagged(man.stage_path(t), tag)
-    if not extend:
-        # after the commit: a crash before it leaves the pre-append
-        # artifact valid for the pre-append corpus
-        shutil.rmtree(co_dir, ignore_errors=True)
     return man
 
 

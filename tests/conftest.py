@@ -168,11 +168,6 @@ def index_state(spark, doc_norm_lookup):
             .orderBy("part")
             .collect()
         ]
-        out["conv_offsets"] = sorted(
-            tuple(r.values())
-            for f in glob.glob(os.path.join(d, "conv_offsets", "*.parquet"))
-            for r in papq.read_table(f).to_pylist()
-        )
         out["schemas"] = {
             t: spark.read.parquet(os.path.join(d, t)).schema
             for t in INDEX_TABLES
@@ -232,11 +227,6 @@ def index_digest(spark, doc_norm_lookup):
         out = {"postings": postings(d)}
         for t in ("doc_index", "doc_stats", "term_dict"):
             out[t] = sorted(tuple(r) for r in spark.read.parquet(os.path.join(d, t)).collect())
-        out["conv_offsets"] = sorted(
-            tuple(r.values())
-            for f in glob.glob(os.path.join(d, "conv_offsets", "*.parquet"))
-            for r in papq.read_table(f).to_pylist()
-        )
         out["schemas"] = {
             t: spark.read.parquet(os.path.join(d, t)).schema
             for t in INDEX_TABLES

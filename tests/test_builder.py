@@ -351,7 +351,7 @@ def test_driver_and_spark_builds_write_identical_tables(
     """A small bare-parquet build staged on the driver (one kernel call
     at base 0) and a sharded build (one kernel call per shard, in Spark
     tasks) write the same index: every term's decoded postings and
-    positions, rows, schemas, term_dict, conv_offsets and manifest
+    positions, rows, schemas, term_dict and manifest
     stats (index_digest: how postings split into rows and files may
     differ) — and still do after a driver append on top of each."""
     from emailindexer_spark.streaming.ingest import incremental_append
@@ -367,14 +367,13 @@ def test_driver_and_spark_builds_write_identical_tables(
     states = {}
     for path in ("driver", "spark"):
         d = str(tmp_path / path)
-        man = _build_on(spark, monkeypatch, path, d, src, **params)
-        assert man.is_complete("conv_offsets") == (not sparse)
+        _build_on(spark, monkeypatch, path, d, src, **params)
         assert len(os.listdir(os.path.join(d, "doc_index"))) == (1 if path == "driver" else 8)
         states[path] = [index_digest(d)]
         incremental_append(spark, d, spark.createDataFrame(batch))
         states[path].append(index_digest(d))
     a, b = states["driver"], states["spark"]
-    assert a[0]["postings"] and bool(a[0]["conv_offsets"]) != sparse
+    assert a[0]["postings"]
     for when, sa, sb in zip(("build", "append"), a, b):
         assert sa.keys() == sb.keys()
         for k in sa:
@@ -574,8 +573,7 @@ def test_sharded_build_layout(spark, index_dir, corpus_pdf):
     one contiguous doc range, the ranges tiling [0, n_rows) in name
     order; every conversation lies in exactly one shard; each postings
     part is one file whose every row lies in one shard's range; build
-    split ids stay below an append's 1_000_000; and conv_offsets tiles
-    [0, n_rows)."""
+    split ids stay below an append's 1_000_000."""
     import pyarrow.parquet as papq
 
     man = Manifest.load_or_create(index_dir)
@@ -598,10 +596,6 @@ def test_sharded_build_layout(spark, index_dir, corpus_pdf):
     assert p.file.nunique() == len(glob.glob(os.path.join(index_dir, "postings", "part=*")))
     shard = _shard_of(index_dir, p.first_doc)
     assert set(shard) == set(range(8)) and (shard == _shard_of(index_dir, p.last_doc)).all()
-    assert man.is_complete("conv_offsets")
-    co = papq.read_table(glob.glob(os.path.join(index_dir, "conv_offsets", "*.parquet"))[0]).to_pandas()
-    assert co.conv_offset.tolist() == [0, *(co.conv_offset + co.n_turns).tolist()[:-1]]
-    assert int(co.conv_offset.iloc[-1] + co.n_turns.iloc[-1]) == n
 
 
 @pytest.mark.slow

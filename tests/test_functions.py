@@ -736,7 +736,9 @@ class TestFrameDecode:
         bare keys from doc_index's ``norm``, ``role:…`` keys from
         ``norm_role``, and a key whose prefix is no field from ``norm``.
         _read_doc_norms reads a doc range from doc_index files whose rows
-        are out of doc order, and raises when the files miss a doc."""
+        are out of doc order, with each doc's conversation as a code
+        numbered in doc order and its turn, and raises when the files
+        miss a doc."""
         import pyarrow as pa
         import pyarrow.parquet as papq
 
@@ -744,11 +746,15 @@ class TestFrameDecode:
 
         n, rng = 40, np.random.default_rng(3)
         norm, norm_role = rng.integers(0, 256, n), rng.integers(0, 256, n)
+        conv = np.array([f"c{x}" for x in rng.integers(0, 6, n)], dtype=object)
+        turn = rng.integers(0, 9, n).astype(np.int32)
         for i, ids in enumerate(np.array_split(rng.permutation(n), 2)):
             papq.write_table(
                 pa.table(
                     {
                         "doc_id": ids.astype(np.int64),
+                        "conv_id": conv[ids].tolist(),
+                        "turn_idx": turn[ids],
                         "text": ["x"] * ids.size,
                         "norm": norm[ids].astype(np.int32),
                         "norm_role": norm_role[ids].astype(np.int32),
@@ -770,6 +776,10 @@ class TestFrameDecode:
         table = self._table(rows)
         for lo, hi in ((0, n), (7, 23)):
             norms = _read_doc_norms(_doc_row_groups(files), ("text", "role"), lo, hi)
+            assert norms.convs[norms.code].tolist() == conv[lo:hi].tolist(), lo
+            assert norms.turn.tolist() == turn[lo:hi].tolist(), lo
+            first = [norms.code[conv[lo:hi] == c].min() for c in dict.fromkeys(conv[lo:hi])]
+            assert first == list(range(len(norms.convs))), lo  # codes in doc order
             got = _decode_table(table, 1, lo, hi, norms)
             got = got.postings(list(keys), lo, hi)
             for key, d in keys.items():
@@ -805,7 +815,15 @@ class TestFrameDecode:
             ids = np.arange(40 * i, 40 * (i + 1))
             dfiles.append(str(tmp_path / f"doc-{i}.parquet"))
             papq.write_table(
-                pa.table({"doc_id": ids, "text": [f"t{d}" for d in ids], "norm": norm[ids].astype(np.int32)}),
+                pa.table(
+                    {
+                        "doc_id": ids,
+                        "conv_id": [f"c{d // 4}" for d in ids],
+                        "turn_idx": (ids % 4).astype(np.int32),
+                        "text": [f"t{d}" for d in ids],
+                        "norm": norm[ids].astype(np.int32),
+                    }
+                ),
                 dfiles[-1],
                 row_group_size=10,
             )
@@ -836,15 +854,18 @@ class TestFrameDecode:
         ):
             groups.clear()
             norms_of = partial(_read_doc_norms, dgroups, ("text",), lo, hi)
-            got = _scan_postings([([pfile], ["a"])], 1, lo, hi, norms_of)
+            got, dn = _scan_postings([([pfile], ["a"])], 1, lo, hi, norms_of)
             docs = got["a"].docs.tolist() if want else []
             assert docs == want and ("a" in got) == bool(want), (lo, hi)
             if want:
                 assert got["a"].norms.tolist() == norm[want].tolist(), (lo, hi)
+                rows = dn.rows(np.array(want))
+                assert dn.convs[dn.code[rows]].tolist() == [f"c{d // 4}" for d in want], (lo, hi)
+                assert dn.turn[rows].tolist() == [d % 4 for d in want], (lo, hi)
             assert groups == rgs, (lo, hi)
         groups.clear()
         norms_of = partial(_read_doc_norms, dgroups, ("text",), 0, n)
-        assert _scan_postings([([pfile], ["b"])], 1, 0, n, norms_of) == {}
+        assert _scan_postings([([pfile], ["b"])], 1, 0, n, norms_of) == ({}, None)
         assert groups == []
         assert _doc_texts(dgroups, np.array([5, 61])).tolist() == ["t5", "t61"]
         assert groups == [(0, 9), (60, 69)]

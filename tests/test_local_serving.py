@@ -185,11 +185,9 @@ def test_zero_hit_search_runs_zero_jobs(spark_jobs, engines):
 
 @pytest.mark.slow
 def test_local_tier_survives_append_and_compaction(spark, corpus_pdf, assert_shards_agree):
-    """Appends of new conversations extend conv_offsets, so the local
-    tier stays engaged and equals the distributed tier — whose
-    (conv_id, turn_idx) come from the doc_stats join here, not from the
-    artifact — on an index with two appends (several files per part)
-    and again after compaction.  The local tier is checked twice: from
+    """After appends of new conversations the local tier stays engaged
+    and equals the distributed tier on an index with two appends
+    (several files per part) and again after compaction.  The local tier is checked twice: from
     resident parts decoded whole, and over the residency cap (LOCAL_MAX_POSTINGS just
     below the index's postings, above every query's), where each query
     scans the part files.  After the compaction, the distributed tier
@@ -217,12 +215,10 @@ def test_local_tier_survives_append_and_compaction(spark, corpus_pdf, assert_sha
         over.LOCAL_MAX_POSTINGS = int(local._driver_vocab()[1].sum()) - 1
         dist = SearchEngine(spark, d)
         dist._local_search = lambda *a, **k: None
-        dist._off_bc = None  # conv/turn from doc_stats, not the artifact
         return local, over, dist
 
     def check():
         local, over, dist = engines()
-        assert local._off_bc is not None
         _assert_tiers_agree(local, dist)
         _assert_tiers_agree(over, dist)
         assert local._resident and not over._resident
@@ -653,80 +649,124 @@ def test_unsorted_postings_file_raises(spark, tmp_path, index_dir):
 
 
 def test_open_and_local_search_make_no_broadcast(spark, monkeypatch, index_dir):
-    """The conv_offsets arrays reach Spark only when a distributed plan
-    needs them: with broadcast patched to raise, an engine opens and
-    serves local searches; once lifted, the same engine's distributed
-    plans (single and batched) broadcast them and agree."""
+    """Each hit's conversation comes from doc_index, read by the tier
+    that scores it, so no search ships a broadcast: with broadcast
+    patched to raise, an engine opens and serves local searches, single
+    and batched, and its distributed plans give the same rows."""
     sc = spark.sparkContext
 
     def boom(*a, **k):
         raise RuntimeError("broadcast")
 
-    with monkeypatch.context() as m:
-        m.setattr(sc, "broadcast", boom)
-        eng = SearchEngine(spark, index_dir)
-        assert eng._off_bc is not None
-        rare, mid, heavy = _terms(eng)
-        qs = {"a": (f"{rare} {mid} {heavy}", 8, "turns"), "b": (f"{mid} {heavy}", 8, "conversations")}
-        local = [_rows(eng.search(q, k=k, mode=mode)) for q, k, mode in qs.values()]
-        local_many = _batch_rows(eng.search_many(qs, use_wand=False))
+    monkeypatch.setattr(sc, "broadcast", boom)
+    eng = SearchEngine(spark, index_dir)
+    rare, mid, heavy = _terms(eng)
+    qs = {"a": (f"{rare} {mid} {heavy}", 8, "turns"), "b": (f"{mid} {heavy}", 8, "conversations")}
+    local = [_rows(eng.search(q, k=k, mode=mode)) for q, k, mode in qs.values()]
+    local_many = _batch_rows(eng.search_many(qs, use_wand=False))
     eng._local_search = lambda *a, **k: None
     assert [_rows(eng.search(q, k=k, mode=mode)) for q, k, mode in qs.values()] == local
     assert _batch_rows(eng.search_many(qs, use_wand=False)) == local_many
-    assert eng._off_spark is not None
 
 
-def test_local_finish_rejects_offsets_not_starting_at_doc_0():
-    """Conversation labels are positional in the offsets table: a first
-    range not starting at doc 0 would mislabel every hit, so it raises."""
-    from types import SimpleNamespace
+def _collapse_cases(rng, n_cases):
+    """Random conversation layouts and candidates: each case is (conv_id
+    per doc, turn per doc, doc-sorted candidate docs, scores with ties,
+    k), with conversations of 1-3 doc runs each (as continuing appends
+    leave them), single-conversation layouts and cases of no
+    candidates among them."""
+    import pandas as pd
 
-    conv_ids = np.array(["a", "b"], dtype=object)
-    eng = SimpleNamespace(_off_bc=SimpleNamespace(value=(conv_ids, np.array([1, 4]))))
-    for mode in ("turns", "conversations"):
-        with pytest.raises(ValueError, match="start at doc 0"):
-            SearchEngine._local_finish(eng, np.array([1, 5]), np.array([1.0, 2.0]), 10, mode)
+    for case in range(n_cases):
+        n_convs = 1 if case % 5 == 0 else int(rng.integers(2, 25))
+        runs = np.repeat(np.arange(n_convs), rng.integers(1, 4, n_convs))
+        rng.shuffle(runs)
+        label = np.repeat(runs, rng.integers(1, 12, runs.size))
+        conv = np.array([f"c{x:03d}" for x in label], dtype=object)
+        turn = pd.Series(label).groupby(label).cumcount().to_numpy(np.int32)
+        m = 0 if case % 7 == 3 else int(rng.integers(1, label.size + 1))
+        docs = np.sort(rng.choice(label.size, size=m, replace=False)).astype(np.int64)
+        scores = rng.integers(0, 4, size=m).astype(np.float64) / 2.0
+        k = None if case % 4 == 1 else int(rng.integers(1, 12))
+        yield conv, turn, docs, scores, k
+
+
+def _doc_cols_of(conv, turn, docs=None):
+    """The _DocNorms a doc read gives: of every doc, or of ``docs`` only,
+    conversations coded in doc order."""
+    import pandas as pd
+
+    from emailindexer_spark.plans.planner import _DocNorms
+
+    sel = np.arange(conv.size) if docs is None else docs
+    code, convs = pd.factorize(conv[sel])
+    return _DocNorms(
+        0, ("text",), (np.zeros(sel.size, np.uint8),), docs,
+        code.astype(np.int32), np.asarray(convs, dtype=object), turn[sel],
+    )
+
+
+def _brute_force(conv, turn, docs, scores, k, collapse):
+    """(doc, score, conv_id, turn) of the top k by (score desc, doc asc),
+    of the first row per conv_id with ``collapse``."""
+    out, seen = [], set()
+    for i in np.lexsort((docs, -scores)):
+        d = int(docs[i])
+        if collapse and conv[d] in seen:
+            continue
+        seen.add(conv[d])
+        out.append((d, float(scores[i]), conv[d], int(turn[d])))
+    return out[:k]
 
 
 def test_local_finish_conversations_collapse_fuzz():
-    """The grouped-reduceat conversation collapse in _local_finish must
-    pick exactly the winners of the reference algorithm (full
-    (score desc, doc asc) sort then first-per-conv) — including score
-    ties within AND across conversations."""
+    """_local_finish's collapse by conversation code picks exactly the
+    brute force's rows — a full (score desc, doc asc) sort, then the
+    first row per conv_id — on conversations split into several doc
+    runs, with score ties within and across conversations, a single
+    conversation, and no candidates; so does its turns mode."""
     from types import SimpleNamespace
 
-    import pandas as pd
-
-    from emailindexer_spark.plans.planner import SearchEngine
-
     rng = np.random.default_rng(17)
-    for trial in range(60):
-        n_rows = int(rng.integers(1, 400))
-        # conv layout: contiguous doc ranges tiling [0, n_rows)
-        n_convs = int(rng.integers(1, min(40, n_rows) + 1))
-        cuts = np.sort(rng.choice(np.arange(1, n_rows), size=n_convs - 1, replace=False)) if n_convs > 1 else np.empty(0, np.int64)
-        offs = np.concatenate(([0], cuts)).astype(np.int64)
-        conv_ids = np.array([f"c{i}" for i in range(n_convs)], dtype=object)
-        eng = SimpleNamespace(_off_bc=SimpleNamespace(value=(conv_ids, offs)))
-        # candidate subset with heavy score ties (quantized scores)
-        m = int(rng.integers(1, n_rows + 1))
-        docs = np.sort(rng.choice(n_rows, size=m, replace=False)).astype(np.int64)
-        scores = rng.integers(0, 4, size=m).astype(np.float64) / 2.0
-        k = int(rng.integers(1, 12))
+    for trial, (conv, turn, docs, scores, k) in enumerate(_collapse_cases(rng, 80)):
+        whole = _doc_cols_of(conv, turn)
+        for mode in ("conversations", "turns"):
+            for dn in (whole, _doc_cols_of(conv, turn, docs)):
+                eng = SimpleNamespace(_doc_cols=lambda _d, dn=dn: dn)
+                got = SearchEngine._local_finish(eng, docs.copy(), scores.copy(), k, mode)
+                want = _brute_force(conv, turn, docs, scores, k, mode == "conversations")
+                assert got["rank"].tolist() == list(range(1, len(want) + 1)), (trial, mode)
+                assert list(zip(
+                    got["doc_id"].tolist(), got["score"].tolist(), got["conv_id"].tolist(), got["turn_idx"].tolist()
+                )) == want, (trial, mode)
+                assert got["turn_idx"].dtype == np.int32 and got["conv_id"].dtype == object
 
-        got = SearchEngine._local_finish(eng, docs.copy(), scores.copy(), k, "conversations")
 
-        order = np.lexsort((docs, -scores))
-        ds, ss = docs[order], scores[order]
-        oi_all = np.searchsorted(offs, ds, side="right") - 1
-        first = ~pd.Series(oi_all).duplicated().to_numpy()
-        ds, ss = ds[first][:k], ss[first][:k]
-        oi = np.searchsorted(offs, ds, side="right") - 1
-        assert list(got["doc_id"]) == list(ds), trial
-        assert list(got["score"]) == list(ss), trial
-        assert list(got["conv_id"]) == list(conv_ids[oi]), trial
-        assert list(got["turn_idx"]) == list((ds - offs[oi]).astype(np.int32)), trial
+def test_shard_collapse_and_finish_match_brute_force(spark):
+    """A distributed conversations search: each doc-range shard keeps
+    its conversations' best hits and its top k (_hits, over its own
+    read's conversation codes), and _finish's hash aggregation merges
+    the winners of a conversation split across shards.  Against the
+    brute force on the random layouts of the local test."""
+    from types import SimpleNamespace
 
+    from emailindexer_spark.plans.planner import HIT_SCHEMA, _hits
+
+    rng = np.random.default_rng(29)
+    eng = SimpleNamespace()
+    for trial, (conv, turn, docs, scores, k) in enumerate(_collapse_cases(rng, 15)):
+        bounds = np.unique(np.concatenate(([0, conv.size], rng.integers(0, conv.size, 3))))
+        rows = []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            sel = (docs >= lo) & (docs < hi)
+            dn = _doc_cols_of(conv, turn, docs[sel])
+            d, sc, c, t = _hits(docs[sel], scores[sel], k, True, lambda _d, dn=dn: dn)
+            rows += zip(d.tolist(), sc.tolist(), c.tolist(), t.tolist())
+        hits = spark.createDataFrame(rows, HIT_SCHEMA)
+        got = SearchEngine._finish(eng, hits, k, "conversations", False).collect()
+        want = _brute_force(conv, turn, docs, scores, k, True)
+        assert [r.rank for r in got] == list(range(1, len(want) + 1)), trial
+        assert [(r.doc_id, r.score, r.conv_id, r.turn_idx) for r in got] == want, trial
 
 # ------------------------------------------------------------------ LocalResult
 

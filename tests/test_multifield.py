@@ -233,7 +233,7 @@ def test_field_keys_score_with_their_fields_norms(spark, mf_index, mf_engine):
     sparse.LOCAL_MAX_POSTINGS = sparse.LOCAL_MAX_NORM_DOCS = 0  # reading its docs' norms
     lo, hi = mf_engine.n_rows // 3, 2 * mf_engine.n_rows // 3
     parts = [(mf_engine._part_files(term_part_py(k, mf_engine.num_parts)), [k]) for k in keys]
-    shard = P._scan_postings(
+    shard, _ = P._scan_postings(
         parts, 1, lo, hi, partial(P._read_doc_norms, mf_engine._doc_groups, mf_engine.fields, lo, hi)
     )
     for where, got in (

@@ -121,31 +121,6 @@ def test_local_search_reads_its_own_postings_not_the_shared_cache(spark, index_d
         assert {c: v.tolist() for c, v in got.items()} == {c: v.tolist() for c, v in want.items()}, q
 
 
-def test_corrupt_conv_offsets_falls_back(spark, index_dir, tmp_path):
-    # a crash mid-write (or disk corruption) of the conv_offsets artifact
-    # must not fail SearchEngine open: the load is best-effort and the
-    # engine silently takes the doc_stats-join path with identical results
-    import os
-    import shutil
-
-    d = str(tmp_path / "ix_corrupt")
-    shutil.copytree(index_dir, d)
-    co = os.path.join(d, "conv_offsets", "part-00000.parquet")
-    with open(co, "rb") as f:
-        head = f.read(100)  # truncated parquet: valid magic, no footer
-    with open(co, "wb") as f:
-        f.write(head)
-    eng_ok = SearchEngine(spark, index_dir)
-    eng_bad = SearchEngine(spark, d)  # must not raise
-    assert eng_ok._off_bc is not None and eng_bad._off_bc is None
-    key = lambda rows: sorted(
-        (r["rank"], r["conv_id"], r["turn_idx"], round(r["score"], 9)) for r in rows
-    )
-    assert key(eng_bad.search("qojema", k=5).collect()) == key(
-        eng_ok.search("qojema", k=5).collect()
-    )
-
-
 def test_prefix_successor_bounds():
     # pruning may over-include but must NEVER under-include: the naive
     # 'prefix + U+10FFFF' inclusive bound drops terms whose suffix starts
@@ -168,34 +143,3 @@ def test_prefix_successor_bounds():
     # and the old bound really was lossy — documents why the fix exists
     i1_old = int(np.searchsorted(vocab, "sp" + "\U0010ffff", side="right"))
     assert "sp\U0010ffffq" not in set(vocab[i0:i1_old])
-
-
-def test_conv_offsets_fast_path_matches_join_fallback(spark, index_dir):
-    # dense-docid indexes attach (conv_id, turn_idx) via the broadcast
-    # conv_offsets searchsorted; disabling it (the non-dense / appended
-    # index fallback: doc_stats join) must give identical results on
-    # both the single-query and the batched path
-    eng_fast = SearchEngine(spark, index_dir)
-    assert eng_fast._off_bc is not None, "fixture index should be dense"
-    eng_join = SearchEngine(spark, index_dir)
-    eng_join._off_bc = None
-
-    def snap(eng):
-        rows = []
-        for q, k, mode in [
-            ("qojema", 5, "turns"),
-            ("qojema fuhepi", 4, "conversations"),
-        ]:
-            rows += [
-                (q, r["rank"], r["doc_id"], r["conv_id"], r["turn_idx"], round(r["score"], 9))
-                for r in eng.search(q, k=k, mode=mode, use_wand=False).collect()
-            ]
-        rows += sorted(
-            (r["query_id"], r["rank"], r["doc_id"], r["conv_id"], r["turn_idx"], round(r["score"], 9))
-            for r in eng.search_many(
-                {"x": ("qojema fuhepi", 5, "turns")}, use_wand=False
-            ).collect()
-        )
-        return rows
-
-    assert snap(eng_fast) == snap(eng_join) and snap(eng_fast)

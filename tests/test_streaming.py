@@ -14,6 +14,7 @@ import pytest
 from emailindexer_spark.functions.codec import decode_block, decode_positions
 from emailindexer_spark.oracle import build_oracle_index, search as osearch
 from emailindexer_spark.plans.builder import IndexBuilder
+from emailindexer_spark.plans.parser import parse
 from emailindexer_spark.plans.planner import SearchEngine
 from emailindexer_spark.sources.fixtures import make_transcripts
 from emailindexer_spark.streaming.ingest import incremental_append, stream_ingest
@@ -124,8 +125,7 @@ def test_manifest_first_append_visibility(spark, spark_jobs, corpus3, append_pat
     # manifest commit sees exactly the pre-append corpus (the files are
     # hidden); (2) a crash AFTER the commit but before the rename-
     # visible step is healed at the next engine open, which sees the
-    # fully-appended corpus.  The batch's conv_offsets piece rides the
-    # same windows, so the driver-local tier stays engaged in both.
+    # fully-appended corpus.  The driver-local tier stays engaged in both.
     import glob
 
     import emailindexer_spark.streaming.ingest as ING
@@ -165,12 +165,8 @@ def test_manifest_first_append_visibility(spark, spark_jobs, corpus3, append_pat
             f for f in os.listdir(os.path.join(d, "doc_index")) if f.startswith(".ing")
         ]
         assert hidden, "the crashed append must have staged hidden files"
-        assert any(
-            f.startswith(".ing") for f in os.listdir(os.path.join(d, "conv_offsets"))
-        ), "the crashed append must have staged a hidden conv_offsets piece"
         mid = SearchEngine(spark, d)
         assert mid.n_rows == len(base)
-        assert mid._off_bc is not None, "pre-append offsets must stay loaded"
         assert spark_jobs(lambda: snap(mid)) == [], "local tier must serve"
         assert snap(mid) == pre, "mid-append reader must see the pre-append corpus"
         # the writer's retry completes the append
@@ -178,7 +174,6 @@ def test_manifest_first_append_visibility(spark, spark_jobs, corpus3, append_pat
         assert Manifest.load_or_create(d).stages["ingest_000001"]["path"] == append_path
         eng_full = SearchEngine(spark, d)
         assert eng_full.n_rows == len(base) + len(b1)
-        assert eng_full._off_bc is not None
         full = snap(eng_full)
 
         # ---- window 2: committed-but-hidden (crash before publish) ----
@@ -188,18 +183,17 @@ def test_manifest_first_append_visibility(spark, spark_jobs, corpus3, append_pat
             incremental_append(spark, d, spark.createDataFrame(b2), batch_id=4)
         finally:
             ING._unhide_tagged = orig_unhide
-        for t in ("doc_index", "conv_offsets"):
-            assert any(
-                f.startswith(".ing") for f in os.listdir(os.path.join(d, t))
-            ), f"batch 4's {t} files must still be hidden"
+        assert any(
+            f.startswith(".ing") for f in os.listdir(os.path.join(d, "doc_index"))
+        ), "batch 4's doc_index files must still be hidden"
         healed = SearchEngine(spark, d)  # open-time repair publishes them
         assert healed.n_rows == len(base) + len(b1) + len(b2)
-        assert healed._off_bc is not None
         assert not any(
             f.startswith(".ing")
-            for t in ("doc_index", "doc_stats", "term_dict", "conv_offsets")
+            for t in ("doc_index", "doc_stats", "term_dict")
             for f in os.listdir(os.path.join(d, t))
         )
+        assert spark_jobs(lambda: snap(healed)) == [], "local tier must serve"
         assert len(snap(healed)) >= len(full)
         # every live parquet is readable and the corpus totals reconcile
         n = sum(
@@ -212,13 +206,15 @@ def test_manifest_first_append_visibility(spark, spark_jobs, corpus3, append_pat
 
 
 @pytest.mark.slow
-def test_appends_that_split_conversations_drop_offsets(spark, corpus3):
-    """conv_offsets needs one contiguous doc range per conversation.  A
-    batch of new conversations extends it; a batch that continues an
-    indexed conversation, reuses an indexed conv_id, or is not dense
-    drops it in its commit — and the doc_stats-join fallback still
-    matches the oracle."""
-    from emailindexer_spark.sources.checkpoint import Manifest
+def test_appends_that_split_conversations_keep_the_local_tier(spark, spark_jobs, corpus3):
+    """doc_index is the one doc → conversation map, so a batch that
+    continues an indexed conversation (its new turns land past every
+    doc, away from its first ones), skips turns, or reuses an indexed
+    conv_id keeps the local tier: each is served at 0 Spark jobs and
+    matches the oracle in both modes — ranks, conv_id, turn_idx and
+    scores.  The distributed tier matches again on shards whose bound
+    falls inside a conversation."""
+    import pyarrow.dataset as ds
 
     base, b1, b2 = corpus3
     c0 = b1.conv_id.iloc[0]
@@ -232,37 +228,79 @@ def test_appends_that_split_conversations_drop_offsets(spark, corpus3):
         # dense turns under a conv_id the index already holds
         "reused": first.head(3),
     }
-    root = tempfile.mkdtemp(prefix="ix_drop_")
+    queries = [
+        ("qojema fuhepi", "turns"), ("fuhepi", "conversations"), ("qojema", "conversations"),
+        ("qojema fuhepi noza", "conversations"),
+    ]
+    root = tempfile.mkdtemp(prefix="ix_split_")
     try:
         d0 = os.path.join(root, "grown")
         IndexBuilder(spark, d0, num_parts=8, heavy_df_threshold=500, split_target=400).build(
             spark.createDataFrame(base)
         )
         incremental_append(spark, d0, spark.createDataFrame(b1))
-        assert Manifest.load_or_create(d0).is_complete("conv_offsets")
-        assert SearchEngine(spark, d0)._off_bc is not None
         for name, batch in cases.items():
             d = os.path.join(root, name)
             shutil.copytree(d0, d)
             incremental_append(spark, d, spark.createDataFrame(batch))
-            assert not Manifest.load_or_create(d).is_complete("conv_offsets"), name
-            assert not os.path.exists(os.path.join(d, "conv_offsets")), name
-            eng = SearchEngine(spark, d)
-            assert eng._off_bc is None and eng.n_rows == len(base) + len(b1) + len(batch)
             rows = []
             for chunk in (base, b1, batch):
                 rows += sorted(
                     chunk[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None)
                 )
             ix = build_oracle_index(rows, sort=False)
-            for q, mode in [("qojema fuhepi", "turns"), ("fuhepi", "conversations"), ("qojema", "conversations")]:
-                exp = osearch(ix, q, k=10, mode=mode)
-                got = [(r["doc_id"], r["score"]) for r in eng.search(q, k=10, mode=mode).collect()]
-                assert [x[0] for x in got] == [x[0] for x in exp], (name, q, mode)
-                for (_, a), (_, b) in zip(got, exp):
-                    assert abs(a - b) <= 1e-6 * max(1.0, abs(b))
+            local, dist = SearchEngine(spark, d), SearchEngine(spark, d)
+            assert local.n_rows == len(rows)
+            dist.LOCAL_MAX_POSTINGS = 0
+            conv = ds.dataset(os.path.join(d, "doc_index")).to_table(columns=["doc_id", "conv_id"])
+            conv = conv.sort_by("doc_id").column("conv_id").to_numpy(zero_copy_only=False)
+            inside = [b for b in range(1, len(rows)) if conv[b] == conv[b - 1]]
+            n = next(n for n in range(2, 50) if any(i * len(rows) // n in inside for i in range(1, n)))
+            dist._shard_count = lambda n=n: n
+            hit = 0
+            for q, mode in queries:
+                exp = [(d, rows[d][0], rows[d][1], sc) for d, sc in osearch(ix, q, k=10, mode=mode)]
+                hit += bool(exp)
+                got = []
+                assert spark_jobs(lambda: got.append(local.search(q, k=10, mode=mode).collect())) == []
+                for tier, res in (("local", got[0]), ("distributed", dist.search(q, k=10, mode=mode).collect())):
+                    assert [r["rank"] for r in res] == list(range(1, len(exp) + 1)), (name, tier, q, mode)
+                    assert [(r["doc_id"], r["conv_id"], r["turn_idx"]) for r in res] == [
+                        x[:3] for x in exp
+                    ], (name, tier, q, mode)
+                    for r, x in zip(res, exp):
+                        assert abs(r["score"] - x[3]) <= 1e-6 * max(1.0, abs(x[3])), (name, tier, q)
+            assert hit >= 3, name
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_a_null_turn_idx_stays_null_on_both_tiers(spark, spark_jobs, index_dir):
+    """An append does not validate turn_idx, so a turn may be null: the
+    hits report it as null on the distributed tier, and the local tier,
+    whose int32 columns cannot hold it, hands such a search to it."""
+    d = tempfile.mkdtemp(prefix="ix_null_turn_")
+    try:
+        shutil.copytree(index_dir, d, dirs_exist_ok=True)
+        batch = pd.DataFrame(
+            {
+                "conv_id": ["zz_null"] * 3, "turn_idx": pd.array([None, 1, 2], dtype="Int32"),
+                "role": ["user"] * 3, "text": ["xnullturn a", "xnullturn xturnone", "other words"],
+                "tool": [None] * 3, "ts": pd.to_datetime(["2024-01-01"] * 3),
+            }
+        )
+        schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+        incremental_append(spark, d, spark.createDataFrame(batch, schema))
+        local, dist = SearchEngine(spark, d), SearchEngine(spark, d)
+        dist._local_search = lambda *a, **k: None
+        for mode in ("turns", "conversations"):
+            want = [r["turn_idx"] for r in dist.search("xnullturn", k=5, mode=mode).collect()]
+            assert want == ([None, 1] if mode == "turns" else [None]), mode
+            assert [r["turn_idx"] for r in local.search("xnullturn", k=5, mode=mode).collect()] == want
+        assert spark_jobs(lambda: local.search("xturnone", k=5).collect()) == []  # no null turn among its hits
+        assert local._local_search(local._resolve_node(parse("xnullturn")), 5, "turns") is None
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 @pytest.mark.slow
@@ -419,8 +457,8 @@ def test_compact_merges_ingested_splits(spark, corpus3, doc_norm_lookup):
 @pytest.mark.parametrize(
     "params,steps",
     [
-        # new conversations, then turns that continue indexed ones
-        # (drops conv_offsets), then an empty batch
+        # new conversations, then turns that continue indexed ones,
+        # then an empty batch
         ({}, ("new", "continues", "empty")),
         ({"positions": False}, ("new",)),
         ({"fields": ("text", "role")}, ("new", "continues")),
@@ -433,7 +471,7 @@ def test_driver_and_spark_appends_write_identical_tables(
     """The driver path (a collected batch staged by one kernel call) and
     the sharded route (one kernel call per shard, in Spark tasks) stage
     the same index: every term's decoded postings and positions, rows,
-    schemas, term_dict, conv_offsets and manifest stats (index_digest)
+    schemas, term_dict and manifest stats (index_digest)
     after every append, onto a sharded base."""
     import emailindexer_spark.plans.builder as B
     from emailindexer_spark.sources.checkpoint import Manifest
@@ -472,7 +510,6 @@ def test_driver_and_spark_appends_write_identical_tables(
             assert a.keys() == b.keys()
             for k in a:
                 assert a[k] == b[k], (step, k)
-            assert bool(a["conv_offsets"]) == (step != "continues" and "continues" not in steps[:i])
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -547,10 +584,9 @@ def test_engine_open_runs_no_job_and_reads_inferred_schemas(spark, spark_jobs, m
         assert spark_jobs(lambda: engs.append(SearchEngine(spark, d))) == [], when
         eng = engs[0]
         # the Spark-side tables are read on first use, not at open
-        assert not {"postings", "doc_stats", "term_dict", "doc_index"} & eng.__dict__.keys()
+        assert not {"postings", "term_dict", "doc_index"} & eng.__dict__.keys()
         for t, df in [
             ("postings", eng.postings),
-            ("doc_stats", eng.doc_stats),
             ("term_dict", eng.term_dict),
             ("doc_index", eng.doc_index),
         ]:
@@ -874,7 +910,6 @@ def test_over_cap_appends_onto_a_sharded_base(spark, spark_jobs, monkeypatch, tm
             ]
         )
         assert (sids // 1_000_000 == i).all() and len(set(sids)) > 1
-    assert Manifest.load_or_create(d).is_complete("conv_offsets")
     rows = []
     for chunk in (base, b1, b2):
         rows += sorted(chunk[["conv_id", "turn_idx", "text"]].itertuples(index=False, name=None))
